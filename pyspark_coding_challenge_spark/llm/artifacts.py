@@ -31,11 +31,13 @@ driver, production restarts) run from the artifact without any explicit
 params) is skipped with a ``warnings.warn`` and the builder builds
 normally: the knob is ambient config that may legitimately point at an
 artifact for a different sf_dir, but silence would mask a stale index.
-The ``*_from_env`` helpers are called INSIDE the owning module's cache
-lock (they mutate no cache themselves — the builder installs the handle),
-while the explicit ``load_*`` functions take that same lock around their
-unpersist/persist/install sequence (r6 advisory: the unlocked install
-could race a concurrent builder and leak a persisted handle).
+
+Session entries live in ``session_state``: the ``*_from_env`` helpers run
+inside the build of the entry they seed (they install nothing themselves,
+only record the seed path on the entry being built), and the explicit
+``load_*`` functions seed through ``session_state.install``, which
+releases the entry it replaces. No module here touches another module's
+cache or lock.
 """
 
 from __future__ import annotations
@@ -50,6 +52,8 @@ import warnings
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from pyspark_coding_challenge_spark import session_state
 
 PAIRS_NAME = "verified_pairs"
 SPANS_NAME = "shared_spans"
@@ -68,43 +72,34 @@ PQCODES_NAME = "pq_codes"
 
 ENV_ARTIFACT_DIR = "SPARK_GRAFT_ARTIFACT_DIR"
 
+# every session kind that reads, or derives from, artifact bytes: the
+# similarity quantizer family, the dedup pair family, the text artifacts
+# and the shard breaks derived from the spine. Dropped together when the
+# bytes under an artifact directory move (compaction).
+ARTIFACT_SESSION_KINDS = (
+    "ivf_centroids", "ivf_assignments", "pq_codebooks", "pq_codes",
+    "assign_fold_verdicts", "pq_fold_verdicts",
+    "verified_pairs", "banded_index", "cc_labels", "incr_old_state",
+    "incr_old_cc", "incr_old_digests", "incr_old_overfull",
+    "doc_signals", "token_spine", "shared_spans", "breaks",
+)
+
 _META_FILE = "_artifact_meta.json"
 
-# (applicationId, sf_dir, artifact_name) -> absolute artifact path the
-# session cache was seeded from. materialize_* consults this to avoid the
-# read-your-own-writes trap (review finding r6): after load_*, the cached
-# relation READS the artifact path, and writing mode("overwrite") to a path
-# being read raises (or worse, rewrites from stale state). A materialize
-# targeting the very path the cache was loaded from is a no-op — the bytes
-# are already there and meta-verified.
-_LOADED_FROM: dict[tuple[str, str, str], str] = {}
 
-
-def _loaded_from(spark: SparkSession, sf_dir: str, name: str) -> str | None:
-    return _LOADED_FROM.get((spark.sparkContext.applicationId, sf_dir, name))
-
-
-def _mark_loaded(spark: SparkSession, sf_dir: str, name: str, path: str) -> None:
-    _LOADED_FROM[(spark.sparkContext.applicationId, sf_dir, name)] = (
+def _seeded_from(spark: SparkSession, sf_dir: str, name: str,
+                 path: str) -> bool:
+    """True when this session's ``name`` entry for ``sf_dir`` was seeded
+    from ``path``. materialize_* consults this to avoid the
+    read-your-own-writes trap (r6): after load_*, the cached
+    relation READS the artifact path, and writing mode("overwrite") to a
+    path being read raises (or worse, rewrites from stale state). A
+    materialize targeting the very path the cache was loaded from is a
+    no-op — the bytes are already there and meta-verified. Clearing the
+    entry forgets the path (r7), so a materialize after a
+    clear rebuilds."""
+    return session_state.loaded_from(name, spark, sf_dir) == \
         os.path.abspath(path)
-    )
-
-
-def invalidate_loaded(spark: SparkSession | None = None,
-                      name: str | None = None) -> int:
-    """Forget which artifact paths seeded this session's caches (all
-    sessions / all artifact names unless narrowed). The owning modules'
-    ``clear_*_cache`` functions call this (r7 review finding): after a
-    cache clear nothing reads the artifact path anymore, so a subsequent
-    ``materialize_*`` must REBUILD rather than hit the read-your-own-writes
-    no-op and silently keep a stale artifact."""
-    app = spark.sparkContext.applicationId if spark is not None else None
-    dropped = 0
-    for key in list(_LOADED_FROM):
-        if (app is None or key[0] == app) and (name is None or key[2] == name):
-            del _LOADED_FROM[key]
-            dropped += 1
-    return dropped
 
 
 def _write_meta(path: str, sf_dir: str, params: dict,
@@ -681,10 +676,10 @@ def _from_env(spark: SparkSession, sf_dir: str, name: str, params: dict,
               persist: bool = True, spread_key: str | None = None) -> DataFrame | None:
     """Read ``$SPARK_GRAFT_ARTIFACT_DIR/<name>`` if present AND
     provenance-valid for (sf_dir, params); None otherwise (with a warning
-    when the artifact exists but mismatches). The caller — a ``*_for_dir``
-    builder holding its module's cache lock — installs the returned handle
-    into its own cache; this function only reads, persists, and records the
-    path for the materialize read-your-own-writes guard."""
+    when the artifact exists but mismatches). The caller — the build of a
+    ``*_for_dir`` session entry — installs the returned handle; this
+    function only reads, persists, and records the path on the entry being
+    built, for the materialize read-your-own-writes guard."""
     base = os.environ.get(ENV_ARTIFACT_DIR)
     if not base:
         return None
@@ -696,8 +691,7 @@ def _from_env(spark: SparkSession, sf_dir: str, name: str, params: dict,
         # the parquet read resolves its schema EAGERLY — a valid meta
         # sidecar over deleted/corrupt parquet (partial cleanup, rsync)
         # raises AnalysisException here, and an ambient seeding knob must
-        # degrade to a normal build, never crash the builder inside its
-        # cache lock (r7 review finding)
+        # degrade to a normal build, never crash the build (r7)
         df = _spread(spark.read.parquet(path), spread_key)
     except ValueError as exc:
         warnings.warn(f"ignoring {ENV_ARTIFACT_DIR} artifact: {exc}")
@@ -708,7 +702,7 @@ def _from_env(spark: SparkSession, sf_dir: str, name: str, params: dict,
         return None
     if persist:
         df = df.persist()
-    _mark_loaded(spark, sf_dir, name, path)
+    session_state.record_seed(name, spark, sf_dir, path)
     return df
 
 
@@ -779,14 +773,14 @@ def materialize_pairs(spark: SparkSession, sf_dir: str, artifact_dir: str,
     from pyspark_coding_challenge_spark.llm.dedup import verified_pairs_for_dir
 
     path = os.path.join(artifact_dir, PAIRS_NAME)
-    if _loaded_from(spark, sf_dir, PAIRS_NAME) == os.path.abspath(path):
+    if _seeded_from(spark, sf_dir, PAIRS_NAME, path):
         return path  # cache was seeded FROM this path — bytes already there
     df = verified_pairs_for_dir(spark, sf_dir)
     # the builder itself may JUST have seeded from $SPARK_GRAFT_ARTIFACT_DIR
     # == this very path (r7 review finding, execution-confirmed): re-check
     # AFTER it runs, or the overwrite below deletes the parquet it reads
     # and leaves the artifact dir empty
-    if _loaded_from(spark, sf_dir, PAIRS_NAME) == os.path.abspath(path):
+    if _seeded_from(spark, sf_dir, PAIRS_NAME, path):
         return path
     df.write.mode("overwrite").parquet(path)
     _write_meta(path, sf_dir, _pairs_params(),
@@ -810,10 +804,10 @@ def materialize_bands(spark: SparkSession, sf_dir: str, artifact_dir: str,
     from pyspark_coding_challenge_spark.llm.dedup import banded_index_for_dir
 
     path = os.path.join(artifact_dir, BANDS_NAME)
-    if _loaded_from(spark, sf_dir, BANDS_NAME) == os.path.abspath(path):
+    if _seeded_from(spark, sf_dir, BANDS_NAME, path):
         return path
     df = banded_index_for_dir(spark, sf_dir)
-    if _loaded_from(spark, sf_dir, BANDS_NAME) == os.path.abspath(path):
+    if _seeded_from(spark, sf_dir, BANDS_NAME, path):
         return path  # builder env-seeded from this path — see materialize_pairs
     df.select("doc_id", "band", "bucket").write.mode("overwrite").parquet(path)
     _write_meta(path, sf_dir, _bands_params(),
@@ -822,12 +816,23 @@ def materialize_bands(spark: SparkSession, sf_dir: str, artifact_dir: str,
     return path
 
 
+def _install_persisted(name: str, spark: SparkSession, sf_dir: str,
+                       df: DataFrame, path: str) -> None:
+    """Seed the ``name`` session entry with a persisted artifact read.
+    Persist AFTER the install: the install unpersists the entry it
+    replaces, which may be an earlier read of the same path sharing this
+    read's cached plan."""
+    session_state.install(name, spark, sf_dir, df, loaded_from=path)
+    df.persist()
+
+
 def load_bands(spark: SparkSession, sf_dir: str, artifact_dir: str,
                install: bool = True) -> DataFrame:
-    """Read a banded-index artifact and (by default) seed
-    ``dedup._BANDED_INDEX_CACHE`` with the re-ranked relation (the ranking
-    window is one shuffle of the thin rows — the artifact stores bucket
-    membership only, since ``_rn`` is derivable and cap-dependent)."""
+    """Read a banded-index artifact and (by default) seed the
+    ``banded_index`` session entry with the re-ranked relation (the
+    ranking window is one shuffle of the thin rows — the artifact stores
+    bucket membership only, since ``_rn`` is derivable and
+    cap-dependent)."""
     from pyspark_coding_challenge_spark.llm import dedup as D
 
     path = os.path.join(artifact_dir, BANDS_NAME)
@@ -835,42 +840,21 @@ def load_bands(spark: SparkSession, sf_dir: str, artifact_dir: str,
     df = _spread(spark.read.parquet(path), "doc_id")
     if not install:
         return df
-    # rerank_bands is an eager localCheckpoint shuffle job — build OUTSIDE
-    # the module lock (r9 advisor finding: holding it through the build
-    # blocks every unrelated cache hit for the job's duration), install
-    # with the locked assignment only
     ranked = D.rerank_bands(df)  # the one chunk-rank definition
-    key = (spark.sparkContext.applicationId, sf_dir)
-    with D._PAIRS_LOCK:
-        # prior entry (if any) was a localCheckpoint — dropping the handle
-        # releases it via the ContextCleaner
-        D._BANDED_INDEX_CACHE[key] = ranked
-        _mark_loaded(spark, sf_dir, BANDS_NAME, path)
+    session_state.install(BANDS_NAME, spark, sf_dir, ranked, loaded_from=path)
     return ranked
 
 
 def load_pairs(spark: SparkSession, sf_dir: str, artifact_dir: str,
                install: bool = True) -> DataFrame:
-    """Read a pair-graph artifact and (by default) seed
-    ``dedup._VERIFIED_PAIRS_CACHE`` so every pair-graph consumer in this
+    """Read a pair-graph artifact and (by default) seed the
+    ``verified_pairs`` session entry so every pair-graph consumer in this
     session reads the artifact instead of re-running the minhash chain."""
-    from pyspark_coding_challenge_spark.llm import dedup as D
-
     path = os.path.join(artifact_dir, PAIRS_NAME)
     _check_meta(path, sf_dir, _pairs_params())
     df = _spread(spark.read.parquet(path), "doc_a")
     if install:
-        key = (spark.sparkContext.applicationId, sf_dir)
-        # owning module's lock around the unpersist/persist/install (r6
-        # advisory: unlocked, this check-then-act races the builder's and
-        # leaks whichever persisted handle loses)
-        with D._PAIRS_LOCK:
-            old = D._VERIFIED_PAIRS_CACHE.get(key)
-            if old is not None:
-                old.unpersist()
-            df = df.persist()
-            D._VERIFIED_PAIRS_CACHE[key] = df
-            _mark_loaded(spark, sf_dir, PAIRS_NAME, path)
+        _install_persisted(PAIRS_NAME, spark, sf_dir, df, path)
     return df
 
 
@@ -890,10 +874,10 @@ def materialize_cc_labels(spark: SparkSession, sf_dir: str, artifact_dir: str,
     from pyspark_coding_challenge_spark.llm.dedup import cc_labels_for_dir
 
     path = os.path.join(artifact_dir, CC_NAME)
-    if _loaded_from(spark, sf_dir, CC_NAME) == os.path.abspath(path):
+    if _seeded_from(spark, sf_dir, CC_NAME, path):
         return path
     df = cc_labels_for_dir(spark, sf_dir)
-    if _loaded_from(spark, sf_dir, CC_NAME) == os.path.abspath(path):
+    if _seeded_from(spark, sf_dir, CC_NAME, path):
         return path  # builder env-seeded from this path — see materialize_pairs
     df.select("node", "label").write.mode("overwrite").parquet(path)
     _write_meta(path, sf_dir, _cc_params(),
@@ -904,23 +888,14 @@ def materialize_cc_labels(spark: SparkSession, sf_dir: str, artifact_dir: str,
 
 def load_cc_labels(spark: SparkSession, sf_dir: str, artifact_dir: str,
                    install: bool = True) -> DataFrame:
-    """Read a cc_labels artifact and (by default) seed
-    ``dedup._CC_LABELS_CACHE`` so every cluster consumer in this session
-    reads stored labels instead of re-running label propagation."""
-    from pyspark_coding_challenge_spark.llm import dedup as D
-
+    """Read a cc_labels artifact and (by default) seed the ``cc_labels``
+    session entry so every cluster consumer in this session reads stored
+    labels instead of re-running label propagation."""
     path = os.path.join(artifact_dir, CC_NAME)
     _check_meta(path, sf_dir, _cc_params())
     df = _spread(spark.read.parquet(path), "node")
     if install:
-        key = (spark.sparkContext.applicationId, sf_dir)
-        with D._PAIRS_LOCK:
-            old = D._CC_LABELS_CACHE.get(key)
-            if old is not None:
-                old.unpersist()
-            df = df.persist()
-            D._CC_LABELS_CACHE[key] = df
-            _mark_loaded(spark, sf_dir, CC_NAME, path)
+        _install_persisted(CC_NAME, spark, sf_dir, df, path)
     return df
 
 
@@ -1001,7 +976,7 @@ def materialize_spans(spark: SparkSession, sf_dir: str, artifact_dir: str,
     )
 
     path = os.path.join(artifact_dir, SPANS_NAME)
-    if _loaded_from(spark, sf_dir, SPANS_NAME) == os.path.abspath(path):
+    if _seeded_from(spark, sf_dir, SPANS_NAME, path):
         return path
     # a lineage-matching sibling span_pos artifact (just landed by
     # materialize_all) supplies the positions — deriving sharedness from
@@ -1016,7 +991,7 @@ def materialize_spans(spark: SparkSession, sf_dir: str, artifact_dir: str,
             rebalance_for_compute(read_table(spark, sf_dir, "documents"),
                                   "doc_id"))
     df = shared_spans_relation(pos)
-    if _loaded_from(spark, sf_dir, SPANS_NAME) == os.path.abspath(path):
+    if _seeded_from(spark, sf_dir, SPANS_NAME, path):
         return path  # builder env-seeded from this path — see materialize_pairs
     df.write.mode("overwrite").parquet(path)
     _write_meta(path, sf_dir, _spans_params(),
@@ -1062,21 +1037,12 @@ def materialize_span_stats(spark: SparkSession, sf_dir: str,
 
 def load_spans(spark: SparkSession, sf_dir: str, artifact_dir: str,
                install: bool = True) -> DataFrame:
-    from pyspark_coding_challenge_spark.llm import text as T
-
     path = os.path.join(artifact_dir, SPANS_NAME)
     _check_meta(path, sf_dir, _spans_params())
     # session contract is (doc_id, i); h is refresh-time state (r13)
     df = _spread(spark.read.parquet(path).select("doc_id", "i"), "doc_id")
     if install:
-        key = (spark.sparkContext.applicationId, sf_dir)
-        with T._TEXT_CACHE_LOCK:  # r6 advisory — see load_pairs
-            old = T._SHARED_SPANS_CACHE.get(key)
-            if old is not None:
-                old.unpersist()
-            df = df.persist()
-            T._SHARED_SPANS_CACHE[key] = df
-            _mark_loaded(spark, sf_dir, SPANS_NAME, path)
+        _install_persisted(SPANS_NAME, spark, sf_dir, df, path)
     return df
 
 
@@ -1102,10 +1068,10 @@ def materialize_ivf_centroids(spark: SparkSession, sf_dir: str,
     )
 
     path = os.path.join(artifact_dir, CENTROIDS_NAME)
-    if _loaded_from(spark, sf_dir, CENTROIDS_NAME) == os.path.abspath(path):
+    if _seeded_from(spark, sf_dir, CENTROIDS_NAME, path):
         return path
     df = S.ivf_centroids_for_dir(spark, sf_dir)
-    if _loaded_from(spark, sf_dir, CENTROIDS_NAME) == os.path.abspath(path):
+    if _seeded_from(spark, sf_dir, CENTROIDS_NAME, path):
         return path  # builder env-seeded from this path — see materialize_pairs
     df.write.mode("overwrite").parquet(path)
     e = rebalance_for_compute(read_table(spark, sf_dir, "embeddings"),
@@ -1171,7 +1137,7 @@ def materialize_ivf_assignments(spark: SparkSession, sf_dir: str,
     )
 
     path = os.path.join(artifact_dir, ASSIGN_NAME)
-    if _loaded_from(spark, sf_dir, ASSIGN_NAME) == os.path.abspath(path):
+    if _seeded_from(spark, sf_dir, ASSIGN_NAME, path):
         return path  # session cache was seeded FROM this path — see
         # materialize_pairs (rewriting part files under a live lazily-read
         # handle dies with FileNotFoundException at next execution)
@@ -1202,9 +1168,8 @@ def _assign_artifact_gate(path: str, cent_path: str, sf_dir: str,
     with an unchanged count keeps its stale list — the same load-time
     staleness exposure every artifact here accepts, resolved at refresh
     time by the lineage gate. On success the opened (and count-forced)
-    DataFrame is returned so callers do not re-open the parquet (r12
-    review finding: the gate-then-reread shape doubled every read under
-    the similarity cache lock). Raises nothing; callers warn-and-skip."""
+    DataFrame is returned so callers do not re-open the parquet (r12:
+    the gate-then-reread shape doubled every read of the env seed). Raises nothing; callers warn-and-skip."""
     try:
         _check_meta(path, sf_dir, _assign_params())
         _check_meta(cent_path, sf_dir, _centroid_params())
@@ -1240,8 +1205,6 @@ def load_ivf_assignments(spark: SparkSession, sf_dir: str, artifact_dir: str,
     quantizer artifact, or whose row count is not the current corpus's
     (a corrupt parquet under an intact meta also surfaces as ValueError —
     the per-artifact grace ``load_all`` expects)."""
-    from pyspark_coding_challenge_spark.llm import similarity as S
-
     path = os.path.join(artifact_dir, ASSIGN_NAME)
     cent_path = os.path.join(artifact_dir, CENTROIDS_NAME)
     why, fold, raw = _assign_artifact_gate(path, cent_path, sf_dir, spark)
@@ -1249,21 +1212,18 @@ def load_ivf_assignments(spark: SparkSession, sf_dir: str, artifact_dir: str,
         raise ValueError(why)
     df = _spread(raw, "vec_id")
     if install:
-        key = (spark.sparkContext.applicationId, sf_dir)
-        with S._SIM_CACHE_LOCK:
-            S._IVF_ASSIGN_CACHE[key] = (df, fold)
-            _mark_loaded(spark, sf_dir, ASSIGN_NAME, path)
+        session_state.install(ASSIGN_NAME, spark, sf_dir, (df, fold),
+                              loaded_from=path)
     return df
 
 
 def assignments_from_env(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, str] | None:
     """Env-seed the stored inverted index — the ``_from_env`` protocol
-    (warn-and-None, persist, ``_mark_loaded``) with the pairing checks it
-    cannot express, returning ``(df, centroid_fold)`` for the search
+    (warn-and-None, persist, record the seed path) with the pairing checks
+    it cannot express, returning ``(df, centroid_fold)`` for the search
     layer's use-time fold gate. Inlined rather than delegated to
     ``_from_env`` so the artifact parquet is opened ONCE (the gate's
-    count already forced it; a second open per seed ran under the
-    similarity cache lock — r12 review finding). The gate's reads are
+    count already forced it, r12). The gate's reads are
     bounded: two metas, an n_lists-row fold scan, two metadata counts."""
     base = os.environ.get(ENV_ARTIFACT_DIR)
     if not base:
@@ -1277,22 +1237,18 @@ def assignments_from_env(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, s
         warnings.warn(f"ignoring {ENV_ARTIFACT_DIR} artifact: {why}")
         return None
     df = _spread(raw, "vec_id").persist()
-    _mark_loaded(spark, sf_dir, ASSIGN_NAME, path)
+    session_state.record_seed(ASSIGN_NAME, spark, sf_dir, path)
     return df, fold
 
 
 def load_ivf_centroids(spark: SparkSession, sf_dir: str, artifact_dir: str,
                        install: bool = True) -> DataFrame:
-    from pyspark_coding_challenge_spark.llm import similarity as S
-
     path = os.path.join(artifact_dir, CENTROIDS_NAME)
     _check_meta(path, sf_dir, _centroid_params())
     df = spark.read.parquet(path)
     if install:
-        key = (spark.sparkContext.applicationId, sf_dir)
-        with S._SIM_CACHE_LOCK:  # r6 advisory — see load_pairs
-            S._IVF_CENTROID_CACHE[key] = df
-            _mark_loaded(spark, sf_dir, CENTROIDS_NAME, path)
+        session_state.install(CENTROIDS_NAME, spark, sf_dir, df,
+                              loaded_from=path)
     return df
 
 
@@ -1322,13 +1278,13 @@ def materialize_pq_codebooks(spark: SparkSession, sf_dir: str,
     )
 
     path = os.path.join(artifact_dir, PQCB_NAME)
-    if _loaded_from(spark, sf_dir, PQCB_NAME) == os.path.abspath(path):
+    if _seeded_from(spark, sf_dir, PQCB_NAME, path):
         return path
     cent_path = os.path.join(artifact_dir, CENTROIDS_NAME)
     _check_meta(cent_path, sf_dir, _centroid_params())
     cent = spark.read.parquet(cent_path)
     df = S.pq_codebooks_for_dir(spark, sf_dir, cent=cent)
-    if _loaded_from(spark, sf_dir, PQCB_NAME) == os.path.abspath(path):
+    if _seeded_from(spark, sf_dir, PQCB_NAME, path):
         return path  # builder env-seeded from this path — see materialize_pairs
     df.write.mode("overwrite").parquet(path)
     e = rebalance_for_compute(read_table(spark, sf_dir, "embeddings"),
@@ -1376,7 +1332,7 @@ def materialize_pq_codes(spark: SparkSession, sf_dir: str,
     )
 
     path = os.path.join(artifact_dir, PQCODES_NAME)
-    if _loaded_from(spark, sf_dir, PQCODES_NAME) == os.path.abspath(path):
+    if _seeded_from(spark, sf_dir, PQCODES_NAME, path):
         return path  # session cache was seeded FROM this path
     cb_path = os.path.join(artifact_dir, PQCB_NAME)
     _check_meta(cb_path, sf_dir, _pqcb_params())
@@ -1476,16 +1432,11 @@ def load_pq_codebooks(spark: SparkSession, sf_dir: str, artifact_dir: str,
                       install: bool = True) -> DataFrame:
     """Read stored PQ codebooks and (by default) seed the similarity
     session cache — ``load_ivf_centroids`` for the sub-quantizers."""
-    from pyspark_coding_challenge_spark.llm import similarity as S
-
     path = os.path.join(artifact_dir, PQCB_NAME)
     _check_meta(path, sf_dir, _pqcb_params())
     df = spark.read.parquet(path)
     if install:
-        key = (spark.sparkContext.applicationId, sf_dir)
-        with S._SIM_CACHE_LOCK:
-            S._PQ_CODEBOOK_CACHE[key] = df
-            _mark_loaded(spark, sf_dir, PQCB_NAME, path)
+        session_state.install(PQCB_NAME, spark, sf_dir, df, loaded_from=path)
     return df
 
 
@@ -1499,8 +1450,6 @@ def load_pq_codes(spark: SparkSession, sf_dir: str, artifact_dir: str,
     ``load_ivf_assignments`` for PQ. Refuses (ValueError) codes whose
     folds do not match the sibling codebook/centroid artifacts or whose
     row count is not m x the current corpus's."""
-    from pyspark_coding_challenge_spark.llm import similarity as S
-
     path = os.path.join(artifact_dir, PQCODES_NAME)
     cb_path = os.path.join(artifact_dir, PQCB_NAME)
     why, fold, raw, cohort = _pq_codes_artifact_gate(path, cb_path, sf_dir,
@@ -1509,10 +1458,8 @@ def load_pq_codes(spark: SparkSession, sf_dir: str, artifact_dir: str,
         raise ValueError(why)
     df = _spread(raw, "vec_id")
     if install:
-        key = (spark.sparkContext.applicationId, sf_dir)
-        with S._SIM_CACHE_LOCK:
-            S._PQ_CODES_CACHE[key] = (df, fold, cohort)
-            _mark_loaded(spark, sf_dir, PQCODES_NAME, path)
+        session_state.install(PQCODES_NAME, spark, sf_dir,
+                              (df, fold, cohort), loaded_from=path)
     return df
 
 
@@ -1570,7 +1517,7 @@ def pq_codes_from_env(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, str,
         warnings.warn(f"ignoring {ENV_ARTIFACT_DIR} artifact: {why}")
         return None
     df = _spread(raw, "vec_id").persist()
-    _mark_loaded(spark, sf_dir, PQCODES_NAME, path)
+    session_state.record_seed(PQCODES_NAME, spark, sf_dir, path)
     return df, fold, cohort
 
 
@@ -1587,10 +1534,10 @@ def materialize_spine(spark: SparkSession, sf_dir: str, artifact_dir: str,
     from pyspark_coding_challenge_spark.llm.text import shared_token_spine_for_dir
 
     path = os.path.join(artifact_dir, SPINE_NAME)
-    if _loaded_from(spark, sf_dir, SPINE_NAME) == os.path.abspath(path):
+    if _seeded_from(spark, sf_dir, SPINE_NAME, path):
         return path
     df = shared_token_spine_for_dir(spark, sf_dir)
-    if _loaded_from(spark, sf_dir, SPINE_NAME) == os.path.abspath(path):
+    if _seeded_from(spark, sf_dir, SPINE_NAME, path):
         return path  # builder env-seeded from this path — see materialize_pairs
     df.write.mode("overwrite").parquet(path)
     _write_meta(path, sf_dir, _spine_params(),
@@ -1601,20 +1548,11 @@ def materialize_spine(spark: SparkSession, sf_dir: str, artifact_dir: str,
 
 def load_spine(spark: SparkSession, sf_dir: str, artifact_dir: str,
                install: bool = True) -> DataFrame:
-    from pyspark_coding_challenge_spark.llm import text as T
-
     path = os.path.join(artifact_dir, SPINE_NAME)
     _check_meta(path, sf_dir, _spine_params())
     df = _spread(spark.read.parquet(path), "doc_id")
     if install:
-        key = (spark.sparkContext.applicationId, sf_dir)
-        with T._TEXT_CACHE_LOCK:  # r6 advisory — see load_pairs
-            old = T._TOKEN_SPINE_CACHE.get(key)
-            if old is not None:
-                old.unpersist()
-            df = df.persist()
-            T._TOKEN_SPINE_CACHE[key] = df
-            _mark_loaded(spark, sf_dir, SPINE_NAME, path)
+        _install_persisted(SPINE_NAME, spark, sf_dir, df, path)
     return df
 
 
@@ -1631,10 +1569,10 @@ def materialize_signals(spark: SparkSession, sf_dir: str,
     from pyspark_coding_challenge_spark.llm.text import shared_doc_signals_for_dir
 
     path = os.path.join(artifact_dir, SIGNALS_NAME)
-    if _loaded_from(spark, sf_dir, SIGNALS_NAME) == os.path.abspath(path):
+    if _seeded_from(spark, sf_dir, SIGNALS_NAME, path):
         return path
     df = shared_doc_signals_for_dir(spark, sf_dir)
-    if _loaded_from(spark, sf_dir, SIGNALS_NAME) == os.path.abspath(path):
+    if _seeded_from(spark, sf_dir, SIGNALS_NAME, path):
         return path  # builder env-seeded from this path — see materialize_pairs
     df.write.mode("overwrite").parquet(path)
     _write_meta(path, sf_dir, _signals_params(),
@@ -1645,20 +1583,11 @@ def materialize_signals(spark: SparkSession, sf_dir: str,
 
 def load_signals(spark: SparkSession, sf_dir: str, artifact_dir: str,
                  install: bool = True) -> DataFrame:
-    from pyspark_coding_challenge_spark.llm import text as T
-
     path = os.path.join(artifact_dir, SIGNALS_NAME)
     _check_meta(path, sf_dir, _signals_params())
     df = _spread(spark.read.parquet(path), "doc_id")
     if install:
-        key = (spark.sparkContext.applicationId, sf_dir)
-        with T._TEXT_CACHE_LOCK:  # r6 advisory — see load_pairs
-            old = T._DOC_SIGNALS_CACHE.get(key)
-            if old is not None:
-                old.unpersist()
-            df = df.persist()
-            T._DOC_SIGNALS_CACHE[key] = df
-            _mark_loaded(spark, sf_dir, SIGNALS_NAME, path)
+        _install_persisted(SIGNALS_NAME, spark, sf_dir, df, path)
     return df
 
 
@@ -2190,7 +2119,7 @@ def update_pairs_incremental(spark: SparkSession, old_sf_dir: str,
             f"cannot patch incrementally ({reason}); full rebuild from "
             f"{new_sf_dir}"
         )
-        # this session may hold pair/band caches (or _loaded_from records)
+        # this session may hold pair/band caches (or their seed paths)
         # reading the very paths the rebuild overwrites — for old_sf_dir
         # as much as new_sf_dir; drop them all BEFORE rebuilding or later
         # consumers read deleted/rewritten files (r8 review finding — the
@@ -2201,7 +2130,7 @@ def update_pairs_incremental(spark: SparkSession, old_sf_dir: str,
         # the sf_dir+params check for new_sf_dir (env seeding never sees
         # the lineage digest that just FAILED), the builder would seed
         # from the stale bytes and materialize_* would no-op on its
-        # _loaded_from guard — "full rebuild" would silently keep the
+        # _seeded_from guard — "full rebuild" would silently keep the
         # stale artifact (r8 review finding).
         _drop_stale_meta(pairs_path, bands_path, cc_path, dig_path)
         new_digest = ctx["new_digest"]
@@ -2240,7 +2169,7 @@ def update_pairs_incremental(spark: SparkSession, old_sf_dir: str,
     )
     # the patched frames READ the very paths being overwritten: pin the
     # bytes before mode("overwrite") deletes them (same trap class as the
-    # _loaded_from guard in materialize_*)
+    # _seeded_from guard in materialize_*)
     new_bands = new_bands.localCheckpoint()
     new_pairs = new_pairs.localCheckpoint()
     walls["pairs_bands_patch"] = round(time.perf_counter() - t0, 3)
@@ -2320,7 +2249,7 @@ def update_pairs_incremental(spark: SparkSession, old_sf_dir: str,
     walls[DIGESTS_NAME + "_write"] = round(time.perf_counter() - t0, 3)
     # any session cache seeded from these paths now reads rewritten bytes:
     # drop this session's pair/band/label caches wholesale (clear_pair_cache
-    # also invalidates the _loaded_from records for all four names)
+    # also forgets the paths they were seeded from)
     D.clear_pair_cache(spark)
     summary = {"mode": "incremental", "churn": churn, "cc_mode": cc_mode,
                "old_side": "doc_digests" if old_digests is not None
@@ -2589,18 +2518,14 @@ def update_text_incremental(spark: SparkSession, old_sf_dir: str,
         summary[SPANS_NAME] = derived_mode
         summary["walls"][SPANS_NAME] = round(time.perf_counter() - t0, 3)
 
-    # session caches seeded from these paths now read rewritten bytes
-    T.clear_doc_signals_cache(spark)
-    T.clear_token_spine_cache(spark)
-    T.clear_span_cache(spark)
-    # the quantile shard breaks derive FROM the spine (keyed by sf_dir):
-    # without this, post-refresh pack/batch plans shard new doc_ids
-    # against pre-churn quantiles — values stay correct (breaks are
-    # monotone) but added ids pile into the top shard, re-creating the
+    # session caches seeded from these paths now read rewritten bytes; the
+    # quantile shard breaks derive FROM the spine (keyed by sf_dir):
+    # without dropping them, post-refresh pack/batch plans shard new
+    # doc_ids against pre-churn quantiles — values stay correct (breaks
+    # are monotone) but added ids pile into the top shard, re-creating the
     # skew the quantile pass exists to prevent (r10 review finding)
-    from pyspark_coding_challenge_spark.operators import prefix as P
-
-    P.clear_breaks_cache(spark)
+    session_state.clear(spark, "doc_signals", "token_spine", "shared_spans",
+                        "breaks")
     return summary
 
 
@@ -2919,7 +2844,7 @@ def update_centroids_incremental(spark: SparkSession, old_sf_dir: str,
 
     # a session quantizer cached for either dir no longer reflects what
     # the artifact is about to say — drop them all; the next consumer
-    # re-seeds from the artifact (clear also invalidates _loaded_from)
+    # re-seeds from the artifact (clear also forgets the seed paths)
     S.clear_centroid_cache(spark)
     if reason is None:
         summary["mode"] = "carried"
@@ -2937,7 +2862,7 @@ def update_centroids_incremental(spark: SparkSession, old_sf_dir: str,
         # sf_dir+params check for new_sf_dir (an in-place snapshot
         # refresh, or a prior carry that re-pointed it), the builder
         # inside materialize would env-seed the stale bytes and no-op on
-        # its _loaded_from guard — "retrained" would silently keep the
+        # its _seeded_from guard — "retrained" would silently keep the
         # stale quantizer (the pairs updater's full-rebuild branch guards
         # the identical hole). No meta => no env seed.
         _drop_stale_meta(cent_path)
@@ -3525,18 +3450,7 @@ def compact_artifacts(spark: SparkSession, artifact_dir: str,
                                 "compacted": False}
     if touched_any:
         # the bytes under the compacted paths moved: any session relation
-        # or env-seed record reading them is stale (same rule as the
+        # (and its seed path) reading them is stale (same rule as the
         # refresh updaters)
-        from pyspark_coding_challenge_spark.llm import dedup as D
-        from pyspark_coding_challenge_spark.llm import similarity as S
-        from pyspark_coding_challenge_spark.llm import text as T
-        from pyspark_coding_challenge_spark.operators import prefix as P
-
-        S.clear_centroid_cache(spark)
-        D.clear_pair_cache(spark)
-        T.clear_doc_signals_cache(spark)
-        T.clear_token_spine_cache(spark)
-        T.clear_span_cache(spark)
-        P.clear_breaks_cache(spark)
-        invalidate_loaded(spark)
+        session_state.clear(spark, *ARTIFACT_SESSION_KINDS)
     return report

@@ -33,12 +33,12 @@ loops stay in whole-stage codegen.
 from __future__ import annotations
 
 import os
-import threading
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from pyspark_coding_challenge_spark import session_state
 from pyspark_coding_challenge_spark.sources.readers import read_table, rebalance_for_compute
 
 
@@ -597,12 +597,9 @@ def verified_pairs_for_dir(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``clear_pair_cache(spark)`` first or consumers keep reading the old
     graph. Entries live for the session; ``clear_pair_cache`` is the
     explicit release valve for long-lived drivers serving many dirs."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-
-    # Built OUTSIDE the lock via _cached_build (r9 advisor findings): the
-    # build is the whole multi-job shingle->minhash chain; a racing
-    # duplicate loses at setdefault and unpersists, and a build that
-    # straddles a clear_pair_cache is epoch-discarded and retried.
+    # A racing duplicate waits for the one in-flight build, and a build
+    # that straddles a clear_pair_cache is discarded and retried (see
+    # session_state).
     def _build() -> DataFrame:
         # a provenance-valid $SPARK_GRAFT_ARTIFACT_DIR artifact seeds the
         # cache with zero build-chain jobs (r6 verdict gap #2)
@@ -621,8 +618,7 @@ def verified_pairs_for_dir(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).persist()
         return built
 
-    return _cached_build(_VERIFIED_PAIRS_CACHE, key, _build,
-                         release=lambda df: df.unpersist())
+    return session_state.get_or_build("verified_pairs", spark, sf_dir, _build)
 
 
 def banded_index_for_dir(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -636,12 +632,6 @@ def banded_index_for_dir(spark: SparkSession, sf_dir: str) -> DataFrame:
     stores the thin (doc_id, band, bucket) rows; the ranking window is
     recomputed on load — one shuffle of the thin relation, vs re-running
     the whole shingle->minhash chain)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-
-    # build outside the lock, epoch-checked install (see _cached_build) —
-    # both build paths are eager jobs (rerank_bands localCheckpoints); a
-    # losing/discarded duplicate's checkpoint blocks are reclaimed by the
-    # ContextCleaner on handle drop, so no release hook is needed
     def _build() -> DataFrame:
         from pyspark_coding_challenge_spark.llm import artifacts
 
@@ -654,17 +644,13 @@ def banded_index_for_dir(spark: SparkSession, sf_dir: str) -> DataFrame:
             built = ranked_band_relation(docs)
         return built
 
-    return _cached_build(_BANDED_INDEX_CACHE, key, _build)
+    return session_state.get_or_build("banded_index", spark, sf_dir, _build)
 
 
-_VERIFIED_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-_BANDED_INDEX_CACHE: dict[tuple[str, str], DataFrame] = {}
-# (old_ranked, old_pairs) of the derived PRIOR snapshot — the incremental
-# sections' stand-in for the stored artifacts (see _incr_old_state) — and
-# the old CC labels derived from them. ONLY the prior-snapshot state is
-# session-cached: it models the stored artifacts a deployment's refresh
-# reads from disk. The PATCHED (post-refresh) pair graph and labels are
-# recomputed per invocation since r17 — the r16 caches of them
+# Besides the declared artifacts above, ONLY the derived PRIOR snapshot's
+# state is session-cached: it models the stored artifacts a deployment's
+# refresh reads from disk. The PATCHED (post-refresh) pair graph and labels
+# are recomputed per invocation since r17 — the r16 caches of them
 # (_INCR_PATCHED_CACHE / _INCR_NEW_CC_CACHE) served each incremental
 # section's own output from the bench's untimed warm-up, which the r16
 # verdict called result caching, not optimization ("What's wrong" #1:
@@ -672,151 +658,18 @@ _BANDED_INDEX_CACHE: dict[tuple[str, str], DataFrame] = {}
 # state' to 'serve the answer'"). The refresh IS the operation these
 # sections declare; its churn-proportional patch cost belongs in the
 # timed region.
-_INCR_OLD_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-_INCR_OLD_CC_CACHE: dict[tuple[str, str], DataFrame] = {}
-# two more pieces of the PRIOR snapshot's stored state (r17): its per-doc
-# digests (the doc_digests artifact a deployment diffs against — the old
-# corpus is never re-hashed per refresh) and its over-cap (band, bucket)
-# set (a one-row-per-mega-bucket statistic of the stored index; makes the
-# per-refresh repair probe a semi-join against a usually-empty pinned
-# relation instead of re-counting every touched bucket)
-_INCR_OLD_DIGESTS_CACHE: dict[tuple[str, str], DataFrame] = {}
-_INCR_OLD_OVERFULL_CACHE: dict[tuple[str, str], DataFrame] = {}
-_PAIRS_LOCK = threading.RLock()
-# Per-APPLICATION epochs, bumped by clear_pair_cache (see _cached_build).
-# Per-app, not module-wide (r10 review finding): every cache key is
-# (applicationId, sf_dir) and clear_pair_cache's granularity is the app,
-# so one session's refresh loop clearing its caches must not discard an
-# unrelated session's in-flight multi-job build.
-_PAIRS_EPOCHS: dict[str, int] = {}
-# (id(cache), *key) -> the app epoch each installed entry was built
-# against (r11 judge finding): a forced final-attempt install records its
-# STALE start epoch, so the next get() sees the mismatch, releases the
-# handle and rebuilds live — staleness is bounded by one handle return,
-# with no reliance on a future clear_pair_cache that nothing guarantees.
-_ENTRY_EPOCHS: dict[tuple, int] = {}
-
-
-def _cached_build(cache: dict, key, build, release=None):
-    """Locked get -> UNLOCKED build -> locked install with an epoch
-    re-check (r9 advisor finding): ``clear_pair_cache`` bumps the app's
-    epoch under the lock, so a build that started BEFORE a clear — and may
-    have env-seeded from the very artifact paths the clear's caller is
-    rewriting (``update_pairs_incremental`` clears right after its
-    overwrites) — is DISCARDED and retried against post-clear state
-    instead of setdefault-installing a handle to deleted/rewritten
-    parquet. The build itself stays outside the lock (it is multi-job
-    eager work; holding the module-wide lock through it would block every
-    unrelated cache hit — the r8/r9 pattern all these caches share).
-    Retries are bounded: the LAST attempt installs even if the epoch
-    moved again (r10 review finding — an uncached, unreleased return
-    would leak persisted storage forever and hand out an untracked
-    possibly-stale handle). Each install RECORDS the epoch it was built
-    against (r11 judge finding): a get() that finds an entry whose
-    recorded epoch is behind the app's current epoch treats it as stale —
-    releases it and rebuilds — so a forced install from a clear storm is
-    self-healing at the next lookup instead of depending on a future
-    ``clear_pair_cache`` that nothing guarantees."""
-    app = key[0]
-    ekey = (id(cache),) + tuple(key)
-    for attempt in range(3):
-        with _PAIRS_LOCK:
-            cached = cache.get(key)
-            epoch = _PAIRS_EPOCHS.setdefault(app, 0)
-            if cached is not None and _ENTRY_EPOCHS.get(ekey, epoch) != epoch:
-                # installed by a forced final attempt against a pre-clear
-                # epoch: stale by construction — drop and rebuild live
-                del cache[key]
-                _ENTRY_EPOCHS.pop(ekey, None)
-                stale = cached
-                cached = None
-            else:
-                stale = None
-        if stale is not None and release is not None:
-            release(stale)
-        if cached is not None:
-            return cached
-        built = build()
-        with _PAIRS_LOCK:
-            if _PAIRS_EPOCHS.get(app, 0) == epoch or attempt == 2:
-                winner = cache.setdefault(key, built)
-                if winner is built:
-                    # record the epoch this build READ at (start epoch):
-                    # for a clean install it equals the current epoch; for
-                    # a forced one it is behind, flagging the entry stale
-                    # for the next get()
-                    _ENTRY_EPOCHS[ekey] = epoch
-                elif release is not None:
-                    release(built)
-                return winner
-        # epoch moved mid-build: the data this build read may be stale
-        if release is not None:
-            release(built)
-    raise AssertionError("unreachable: final attempt always installs")
 
 
 def clear_pair_cache(spark: SparkSession | None = None) -> int:
-    """Unpersist and drop cached pair graphs — all of them, or only the
-    given session's. Returns how many entries were released. Use when an
-    sf_dir's data is rewritten mid-session (staleness) or to free storage
-    memory in a long-lived driver after dedup work finishes.
-
-    Holds the module lock and bumps the cache EPOCH (r9 advisor finding):
-    a builder whose unlocked build straddled this clear — and may have
-    env-seeded from artifact paths the clear's caller is rewriting — sees
-    the bump at install time and discards its build instead of caching a
-    handle to deleted/rewritten parquet (see ``_cached_build``)."""
-    from pyspark_coding_challenge_spark.llm import artifacts
-
-    released = 0
-    app = spark.sparkContext.applicationId if spark is not None else None
-    with _PAIRS_LOCK:
-        # bump the cleared app's epoch only (all known apps for a global
-        # clear): in-flight builds read their app's entry at start, so a
-        # concurrent build for an UNRELATED session keeps its epoch and
-        # installs normally (r10 review finding)
-        for a in ([app] if app is not None else list(_PAIRS_EPOCHS)):
-            _PAIRS_EPOCHS[a] = _PAIRS_EPOCHS.get(a, 0) + 1
-        for key in list(_VERIFIED_PAIRS_CACHE):
-            if app is None or key[0] == app:
-                try:
-                    _VERIFIED_PAIRS_CACHE[key].unpersist()
-                except Exception:
-                    pass  # session already stopped; the entry is dead anyway
-                del _VERIFIED_PAIRS_CACHE[key]
-                _ENTRY_EPOCHS.pop((id(_VERIFIED_PAIRS_CACHE),) + tuple(key),
-                                  None)
-                released += 1
-        for key in list(_BANDED_INDEX_CACHE):
-            if app is None or key[0] == app:
-                # localCheckpoint blocks are reclaimed by the ContextCleaner
-                # once the handle is dropped
-                del _BANDED_INDEX_CACHE[key]
-                _ENTRY_EPOCHS.pop((id(_BANDED_INDEX_CACHE),) + tuple(key),
-                                  None)
-                released += 1
-        for cache in (_INCR_OLD_CACHE, _INCR_OLD_CC_CACHE,
-                      _INCR_OLD_DIGESTS_CACHE, _INCR_OLD_OVERFULL_CACHE):
-            for key in list(cache):
-                if app is None or key[0] == app:
-                    del cache[key]  # localCheckpoints — handle drop frees
-                    _ENTRY_EPOCHS.pop((id(cache),) + tuple(key), None)
-                    released += 1
-        for key in list(_CC_LABELS_CACHE):
-            if app is None or key[0] == app:
-                try:
-                    _CC_LABELS_CACHE[key].unpersist()  # env-seeded: persisted
-                except Exception:
-                    pass  # session already stopped; the entry is dead anyway
-                del _CC_LABELS_CACHE[key]
-                _ENTRY_EPOCHS.pop((id(_CC_LABELS_CACHE),) + tuple(key), None)
-                released += 1
-    # a later materialize must rebuild, not no-op on the stale seed path
-    artifacts.invalidate_loaded(spark, artifacts.PAIRS_NAME)
-    artifacts.invalidate_loaded(spark, artifacts.BANDS_NAME)
-    artifacts.invalidate_loaded(spark, artifacts.CC_NAME)
-    artifacts.invalidate_loaded(spark, artifacts.DIGESTS_NAME)
-    return released
+    """Release the pair-graph, banded-index, CC-label and prior-snapshot
+    entries — all sessions', or only the given session's — and forget the
+    artifact paths they were seeded from. Returns how many entries were
+    released. Use when an sf_dir's data is rewritten mid-session or to
+    free storage memory in a long-lived session after dedup work."""
+    return session_state.clear(
+        spark, "verified_pairs", "banded_index", "cc_labels",
+        "incr_old_state", "incr_old_cc", "incr_old_digests",
+        "incr_old_overfull")
 
 
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -844,7 +697,7 @@ def incremental_dedup_update(
     old_pairs: DataFrame, old_bands: DataFrame,
     id_col: str = "doc_id", text_col: str = "text",
     max_bucket: int = LSH_MAX_BUCKET,
-    old_overfull: DataFrame | None = None,
+    old_overfull: tuple[DataFrame, int] | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Patch a banded index + verified pair graph with a corpus snapshot
     diff — the 100 TB deployment shape of near-dup maintenance: a daily
@@ -865,11 +718,14 @@ def incremental_dedup_update(
       (``verified_pairs_for_dir`` shape: all candidate pairs, unfiltered).
     * ``old_bands`` — the stored banded index over the OLD corpus
       ((doc_id, band, bucket); extra columns like ``_rn`` are ignored).
-    * ``old_overfull`` (optional, r17) — the OLD index's over-cap
-      (band, bucket) set, PRE-AGGREGATED by the caller from its stored
-      state (usually once per session: bucket sizes are a pure function
-      of the stored index, exactly the statistic a deployment keeps next
-      to the artifact). When supplied, the per-call repair probe is one
+    * ``old_overfull`` (optional, r17) — ``(relation, cap)``: the OLD
+      index's over-cap (band, bucket) set, PRE-AGGREGATED by the caller
+      from its stored state (usually once per session: bucket sizes are a
+      pure function of the stored index, exactly the statistic a
+      deployment keeps next to the artifact), and the cap it was computed
+      at, which must equal ``max_bucket`` (ValueError otherwise: a set
+      computed at another cap silently changes which mega-buckets get
+      repaired). When supplied, the per-call repair probe is one
       semi-join against this (usually empty, localCheckpointed) relation
       instead of re-counting every touched bucket's old membership —
       same decision, ~an order less probe work. ``None`` derives it from
@@ -917,6 +773,10 @@ def incremental_dedup_update(
     (AQE-skew-splittable, never all-pairs), and a verify kernel over fresh
     candidates only — the shingle explode, the dominant full-rebuild cost,
     runs over churn docs plus their candidate partners alone."""
+    if old_overfull is not None and old_overfull[1] != max_bucket:
+        raise ValueError(
+            f"old_overfull was computed at cap {old_overfull[1]}, but this "
+            f"patch uses max_bucket={max_bucket}")
     # Broadcast discipline (r9, measured in SCALE_PROBE_INCR_r9): every
     # STRICTLY churn-bounded relation below (gone/delta ids, the delta
     # bands, the touched-bucket set) is EXPLICITLY broadcast-hinted into
@@ -1025,7 +885,7 @@ def incremental_dedup_update(
         # index AND touched by churn — intersecting the caller's stored
         # over-cap set with the churn's touched set is the same predicate
         # with the corpus-sized count already paid once at state build
-        overfull = old_overfull.select("band", "bucket").join(
+        overfull = old_overfull[0].select("band", "bucket").join(
             F.broadcast(touched_buckets), on=["band", "bucket"],
             how="left_semi")
     else:
@@ -1105,16 +965,7 @@ def _incr_old_state(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFr
     relation; rebuilding them per invocation would time the artifact BUILD
     inside every refresh, which is exactly what the incremental path
     exists to avoid. Both are localCheckpoints (eager, pinned — each is
-    consumed by 2+ patch branches).
-
-    Built OUTSIDE the cache lock (all three _incr caches do this, r8
-    review finding): the build is multi-job eager work, and holding the
-    module-wide lock through it would block unrelated cache hits for its
-    whole duration; a racing duplicate build loses at setdefault and its
-    checkpoints are reclaimed by the ContextCleaner (epoch-checked install,
-    see ``_cached_build``)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-
+    consumed by 2+ patch branches)."""
     def _build() -> tuple[DataFrame, DataFrame]:
         old, _ = snapshot_versions(read_table(spark, sf_dir, "documents"))
         old_ranked = ranked_band_relation(old)
@@ -1123,7 +974,7 @@ def _incr_old_state(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFr
         ).localCheckpoint()
         return (old_ranked, old_pairs)
 
-    return _cached_build(_INCR_OLD_CACHE, key, _build)
+    return session_state.get_or_build("incr_old_state", spark, sf_dir, _build)
 
 
 def _incr_old_digests(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1133,26 +984,25 @@ def _incr_old_digests(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``snapshot_diff_from_digests``). Session-cached like the rest of the
     prior-snapshot state; values are identical to what ``snapshot_diff``
     would derive from the old docs (same md5 over null-coalesced text)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-
     def _build() -> DataFrame:
         old, _ = snapshot_versions(read_table(spark, sf_dir, "documents"))
         return old.select(
             "doc_id", F.md5(F.coalesce("text", F.lit(""))).alias("digest")
         ).localCheckpoint()
 
-    return _cached_build(_INCR_OLD_DIGESTS_CACHE, key, _build)
+    return session_state.get_or_build("incr_old_digests", spark, sf_dir,
+                                      _build)
 
 
-def _incr_old_overfull(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PRIOR snapshot index's over-cap (band, bucket) set — a pure
-    statistic of the stored banded index (computed with the same
-    ``LSH_MAX_BUCKET`` the patch uses), pinned once per session so each
-    refresh's mega-bucket repair probe intersects a tiny (usually empty)
-    relation instead of re-counting every touched bucket's membership."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-
-    def _build() -> DataFrame:
+def _incr_old_overfull(spark: SparkSession,
+                       sf_dir: str) -> tuple[DataFrame, int]:
+    """The PRIOR snapshot index's over-cap (band, bucket) set, paired with
+    the cap it was computed at (``LSH_MAX_BUCKET``, the one the patch
+    uses) — a pure statistic of the stored banded index, pinned once per
+    session so each refresh's mega-bucket repair probe intersects a tiny
+    (usually empty) relation instead of re-counting every touched bucket's
+    membership."""
+    def _build() -> tuple[DataFrame, int]:
         old_bands = _incr_old_state(spark, sf_dir)[0]
         return (
             old_bands.select("band", "bucket")
@@ -1160,10 +1010,12 @@ def _incr_old_overfull(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count("*").alias("_n_old"))
             .filter(F.col("_n_old") > LSH_MAX_BUCKET)
             .select("band", "bucket")
-            .localCheckpoint()
+            .localCheckpoint(),
+            LSH_MAX_BUCKET,
         )
 
-    return _cached_build(_INCR_OLD_OVERFULL_CACHE, key, _build)
+    return session_state.get_or_build("incr_old_overfull", spark, sf_dir,
+                                      _build)
 
 
 def _incr_patched_state(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame, DataFrame]:
@@ -1572,9 +1424,6 @@ def incremental_cc_update(old_cc: DataFrame, new_edges: DataFrame,
     return untouched.select("node", "label").unionByName(relabeled)
 
 
-_CC_LABELS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def cc_labels_for_dir(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-cached CC labels (node, label) over the thresholded verified
     pair graph — the relation every ``dedup_clusters`` section consumes and
@@ -1583,11 +1432,7 @@ def cc_labels_for_dir(spark: SparkSession, sf_dir: str) -> DataFrame:
     valid ``cc_labels`` artifact seeds this cache with ZERO label-
     propagation rounds, and the incremental refresh
     (``artifacts.update_pairs_incremental``) patches the stored labels
-    from the pair-graph patch's edge diff instead of re-running CC. Build
-    outside the lock, epoch-checked install — same pattern as
-    ``verified_pairs_for_dir`` (see ``_cached_build``)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-
+    from the pair-graph patch's edge diff instead of re-running CC."""
     def _build() -> DataFrame:
         from pyspark_coding_challenge_spark.llm import artifacts
 
@@ -1598,9 +1443,7 @@ def cc_labels_for_dir(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         return built
 
-    # release: no-op on a checkpointed loser; frees a persisted one
-    return _cached_build(_CC_LABELS_CACHE, key, _build,
-                         release=lambda df: df.unpersist())
+    return session_state.get_or_build("cc_labels", spark, sf_dir, _build)
 
 
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1725,14 +1568,9 @@ def dedup_clusters_sectioned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _incr_old_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The derived prior snapshot's CC labels — the stored cluster state an
-    incremental refresh patches; session-cached. Built OUTSIDE the lock
-    (see ``_incr_old_state``): CC is an iterative multi-job loop with a
-    per-round driver action, the worst possible work to hold a
-    module-wide lock through (r8 review finding; epoch-checked install,
-    see ``_cached_build``)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return _cached_build(
-        _INCR_OLD_CC_CACHE, key,
+    incremental refresh patches; session-cached."""
+    return session_state.get_or_build(
+        "incr_old_cc", spark, sf_dir,
         lambda: connected_components(
             _threshold_edges(_incr_old_state(spark, sf_dir)[1])
         ),

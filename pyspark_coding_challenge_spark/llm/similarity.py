@@ -25,7 +25,6 @@ from __future__ import annotations
 
 import itertools
 import math
-import threading
 import warnings
 
 import random
@@ -33,6 +32,7 @@ import random
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from pyspark_coding_challenge_spark import session_state
 from pyspark_coding_challenge_spark.sources.readers import read_table, rebalance_for_compute
 
 N_QUERIES = 5      # vec_id < 5 are the query vectors
@@ -485,15 +485,6 @@ def train_ivf_centroids(e: DataFrame, n_lists: int = N_LISTS,
     return final
 
 
-_IVF_CENTROID_CACHE: dict[tuple[str, str], DataFrame] = {}
-# stored inverted index (vec_id, lid) seeded from the ivf_assignments
-# artifact — NEVER built on miss (inline assignment costs the same as
-# building it, so a cache-miss build would just add a write); a session
-# holding one serves searches with zero assignment scans
-_IVF_ASSIGN_CACHE: dict[tuple[str, str], DataFrame] = {}
-_SIM_CACHE_LOCK = threading.Lock()
-
-
 def ivf_centroids_for_dir(spark: SparkSession, sf_dir: str,
                           e: DataFrame | None = None) -> DataFrame:
     """Session-cached trained IVF quantizer for ``sf_dir`` — the same
@@ -502,104 +493,37 @@ def ivf_centroids_for_dir(spark: SparkSession, sf_dir: str,
     n_lists rows. ``llm.artifacts.load_ivf_centroids`` seeds this cache
     from a parquet artifact so a NEW session can search without retraining.
     Staleness contract matches the pair cache (key = applicationId +
-    sf_dir; ``clear_centroid_cache`` is the release valve)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    # locked check-then-act (r6 review finding class): training is EAGER
-    # (localCheckpoint), so the lock also stops two threads from training
-    # the same quantizer twice
-    with _SIM_CACHE_LOCK:
-        return _centroids_locked(spark, sf_dir, e, key)
-
-
-def _centroids_locked(spark, sf_dir, e, key):
-    cached = _IVF_CENTROID_CACHE.get(key)
-    if cached is None and e is None:
+    sf_dir; ``clear_centroid_cache`` is the release valve). One training
+    runs per key at a time: a concurrent caller waits for it."""
+    def _build() -> DataFrame:
+        if e is not None:
+            return train_ivf_centroids(e)
         from pyspark_coding_challenge_spark.llm import artifacts
 
-        cached = artifacts.centroids_from_env(spark, sf_dir)
-        if cached is not None:
-            _IVF_CENTROID_CACHE[key] = cached
-    if cached is None:
-        if e is None:
-            e = rebalance_for_compute(
-                read_table(spark, sf_dir, "embeddings"), "vec_id"
-            ).select(
-                "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-            ).localCheckpoint()
-        cached = train_ivf_centroids(e)
-        _IVF_CENTROID_CACHE[key] = cached
-    return cached
+        seeded = artifacts.centroids_from_env(spark, sf_dir)
+        return seeded if seeded is not None else train_ivf_centroids(
+            _embeddings_for_training(spark, sf_dir))
+
+    return session_state.get_or_build("ivf_centroids", spark, sf_dir, _build)
+
+
+def _embeddings_for_training(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return rebalance_for_compute(
+        read_table(spark, sf_dir, "embeddings"), "vec_id"
+    ).select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
+    ).localCheckpoint()
 
 
 def clear_centroid_cache(spark: SparkSession | None = None) -> int:
-    """Drop cached IVF quantizers AND their paired inverted indexes (all,
-    or one session's) — mirrors ``dedup.clear_pair_cache``. The
-    assignments cache falls with the quantizer cache because an inverted
-    index is only meaningful against the exact centroid set it was
-    assigned under. Quantizer entries are localCheckpoints — dropping the
-    reference releases them via the ContextCleaner — but env-seeded
-    assignment entries are ``persist()``'d and must be explicitly
-    unpersisted, or every refresh cycle of a long-lived driver would
-    strand another copy in storage memory (r12 review finding; the same
-    rule ``dedup.clear_pair_cache`` follows). All mutations happen under
-    ``_SIM_CACHE_LOCK`` (r12 ADVICE: an unlocked clear raced readers —
-    one could fetch the (df, fold) tuple and have the df unpersisted out
-    from under it mid-refresh); the unpersist calls themselves run after
-    the pops, outside the critical section."""
-    released = 0
-    app = spark.sparkContext.applicationId if spark is not None else None
-    to_unpersist = []
-    with _SIM_CACHE_LOCK:
-        for key in list(_IVF_CENTROID_CACHE):
-            if app is None or key[0] == app:
-                del _IVF_CENTROID_CACHE[key]
-                released += 1
-        for key in list(_IVF_ASSIGN_CACHE):
-            if app is None or key[0] == app:
-                entry = _IVF_ASSIGN_CACHE.pop(key)
-                if isinstance(entry, tuple):
-                    # no-op on the never-persisted load path
-                    to_unpersist.append(entry[0])
-                released += 1
-        # PQ codebooks fall with the quantizer caches for the same refresh
-        # contract (localCheckpoints — dropping the reference releases them)
-        for key in list(_PQ_CODEBOOK_CACHE):
-            if app is None or key[0] == app:
-                del _PQ_CODEBOOK_CACHE[key]
-                released += 1
-        # ... and the stored code relation falls with the codebooks it was
-        # encoded under (env-seeded entries are persisted tuples — same
-        # explicit-unpersist rule as the assignments cache)
-        for key in list(_PQ_CODES_CACHE):
-            if app is None or key[0] == app:
-                entry = _PQ_CODES_CACHE.pop(key)
-                if isinstance(entry, tuple):
-                    to_unpersist.append(entry[0])
-                released += 1
-        _ASSIGN_FOLD_VERDICTS.clear()
-        _PQ_FOLD_VERDICTS.clear()
-    for df in to_unpersist:
-        df.unpersist()
-    from pyspark_coding_challenge_spark.llm import artifacts
-
-    # a later materialize must rebuild, not no-op on the stale seed path
-    artifacts.invalidate_loaded(spark, artifacts.CENTROIDS_NAME)
-    artifacts.invalidate_loaded(spark, artifacts.ASSIGN_NAME)
-    artifacts.invalidate_loaded(spark, artifacts.PQCB_NAME)
-    artifacts.invalidate_loaded(spark, artifacts.PQCODES_NAME)
-    return released
-
-
-# negative-cache sentinel: a failed env gate must not re-run its meta
-# reads + fold collect (a Spark job) inside the cache lock on EVERY
-# search, nor re-emit its warning (review finding)
-_ASSIGN_MISS = object()
-# memoized use-time fold verdicts: (cache key, id(quantizer)) ->
-# (quantizer strong ref, matched). The strong ref makes the id() stable
-# (the r11 conf-pin lesson: id() alone can be reused after GC); without
-# this, EVERY search re-pays the fold collect and a mismatch re-warns
-# per search (r12 review finding). Cleared with the caches.
-_ASSIGN_FOLD_VERDICTS: dict[tuple, tuple[object, bool]] = {}
+    """Drop cached IVF quantizers with everything only meaningful against
+    them — the stored inverted indexes, PQ codebooks and codes, and the
+    memoized fold verdicts — for all sessions or one (mirrors
+    ``dedup.clear_pair_cache``). Env-seeded index and code entries are
+    persisted and get unpersisted."""
+    return session_state.clear(
+        spark, "ivf_centroids", "ivf_assignments", "pq_codebooks",
+        "pq_codes", "assign_fold_verdicts", "pq_fold_verdicts")
 
 
 def ivf_assignments_for_dir(spark: SparkSession, sf_dir: str,
@@ -609,7 +533,8 @@ def ivf_assignments_for_dir(spark: SparkSession, sf_dir: str,
     path; NEVER builds on miss — ``ivf_search`` assigns inline at the same
     cost, so the artifact is an opt-in (materialized by a deployment that
     searches the same corpus repeatedly, patched churn-sized by
-    ``artifacts.update_centroids_incremental``).
+    ``artifacts.update_centroids_incremental``). A failed env gate is
+    cached too, so its meta reads, fold collect and warning run once.
 
     ``cent``: the quantizer the CALLER will actually search with. The
     index is only returned when its recorded centroid fold matches that
@@ -618,51 +543,33 @@ def ivf_assignments_for_dir(spark: SparkSession, sf_dir: str,
     artifact quantizer on disk and a live one trained on the new corpus,
     artifact-gated assignments would pair with the wrong probe ranking
     and silently drop neighbors). The fold of ``cent`` is one bounded
-    n_lists-row collect, paid only when an index is actually cached."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    with _SIM_CACHE_LOCK:
-        cached = _IVF_ASSIGN_CACHE.get(key)
-    if cached is None:
-        # first-seed path runs Spark jobs (meta reads + fold collect +
-        # metadata counts) — OUTSIDE the lock (r12 ADVICE: holding it here
-        # blocked every concurrent similarity-cache user for multiple
-        # seconds; the negative cache only prevents repeats, not the first
-        # hold). Read-under-lock, seed, re-check-and-install — the same
-        # pattern as the fold-verdict memoization below. A concurrent
-        # seeder may duplicate the work once; the loser unpersists its
-        # duplicate instead of stranding a cached copy.
-        from pyspark_coding_challenge_spark.llm import artifacts
+    n_lists-row collect, paid only when an index is actually cached, and
+    memoized per quantizer object (the verdict holds a strong reference,
+    so the id() key cannot be reused while the entry lives)."""
+    from pyspark_coding_challenge_spark.llm import artifacts
 
-        seeded = artifacts.assignments_from_env(spark, sf_dir)
-        with _SIM_CACHE_LOCK:
-            cached = _IVF_ASSIGN_CACHE.get(key)
-            if cached is None:
-                cached = seeded if seeded is not None else _ASSIGN_MISS
-                _IVF_ASSIGN_CACHE[key] = cached
-        if seeded is not None and cached is not seeded:
-            seeded[0].unpersist()  # lost the install race
-    if cached is _ASSIGN_MISS:
+    cached = session_state.get_or_build(
+        "ivf_assignments", spark, sf_dir,
+        lambda: artifacts.assignments_from_env(spark, sf_dir))
+    if cached is None:
         return None
     df, fold = cached
-    if cent is not None:
-        vkey = (key, id(cent))
-        with _SIM_CACHE_LOCK:
-            hit = _ASSIGN_FOLD_VERDICTS.get(vkey)
-        if hit is not None and hit[0] is cent:
-            return df if hit[1] else None
-        from pyspark_coding_challenge_spark.llm import artifacts
+    if cent is None:
+        return df
 
+    def _verdict() -> tuple[DataFrame, bool]:
         matched = artifacts._centroid_fold(cent) == fold
-        with _SIM_CACHE_LOCK:
-            _ASSIGN_FOLD_VERDICTS[vkey] = (cent, matched)
         if not matched:
             warnings.warn(
                 "stored ivf_assignments were made under a different "
                 "quantizer than the one this search uses — assigning "
                 "inline instead"
             )
-            return None
-    return df
+        return cent, matched
+
+    _, matched = session_state.get_or_build(
+        "assign_fold_verdicts", spark, (sf_dir, id(cent)), _verdict)
+    return df if matched else None
 
 
 def ivf_search(e: DataFrame, cent: DataFrame,
@@ -762,16 +669,6 @@ _SQL_NEWEMB_CTE = ("e AS (SELECT vec_id, CASE WHEN vec_id % 11 = 0 THEN "
                    "FROM e0 WHERE vec_id % 5 <> 0)")
 
 
-# (new_corpus, carried_quantizer, patched_assignments,
-# carried_pq_codebooks, patched_pq_codes) per (session, sf_dir) — reads
-# are lazy handles over the session-lifetime temp artifacts (the
-# _patched_text_state pattern), guarded by the shared similarity cache
-# lock for dict access and a dedicated build lock for the expensive
-# double-snapshot build
-_STORED_IVF_CACHE: dict[tuple[str, str], tuple[DataFrame, ...]] = {}
-_STORED_IVF_BUILD_LOCK = threading.Lock()
-
-
 def _stored_ivf_state(spark: SparkSession, sf_dir: str):
     """(new_emb, carried_centroids, patched_assignments,
     carried_pq_codebooks, patched_pq_codes) for the ``stored_index`` and
@@ -792,84 +689,72 @@ def _stored_ivf_state(spark: SparkSession, sf_dir: str):
     over the original table — neither the corpus x n_lists assignment
     pass nor the corpus x m x k encode pass appears anywhere in the
     search plans (plan-gated in tests/test_plan_quality.py)."""
+    return session_state.get_or_build(
+        "stored_ivf_state", spark, sf_dir,
+        lambda: _build_stored_ivf_state(spark, sf_dir))
+
+
+def _build_stored_ivf_state(spark: SparkSession, sf_dir: str):
     import os as _os
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    with _SIM_CACHE_LOCK:
-        cached = _STORED_IVF_CACHE.get(key)
-    if cached is not None:
-        return cached
-    with _STORED_IVF_BUILD_LOCK:
-        with _SIM_CACHE_LOCK:
-            cached = _STORED_IVF_CACHE.get(key)
-        if cached is not None:
-            return cached
-        from pyspark_coding_challenge_spark.llm import artifacts as A
-        from pyspark_coding_challenge_spark.llm.text import _text_incr_root
+    from pyspark_coding_challenge_spark.llm import artifacts as A
+    from pyspark_coding_challenge_spark.llm.text import _text_incr_root
 
-        emb = read_table(spark, sf_dir, "embeddings")
-        old, new = emb_snapshot_versions(emb)
-        # private per-(session, corpus) root under the process's mkdtemp
-        # parent — the CWE-377-hardened helper the text state uses; the
-        # suffix keys this builder's slot apart from the text builder's
-        root = _text_incr_root(key[0], sf_dir + "#stored_ivf")
-        old_dir = _os.path.join(root, "old")
-        new_dir = _os.path.join(root, "new")
-        art = _os.path.join(root, "art")
-        old.write.mode("overwrite").parquet(
-            _os.path.join(old_dir, "embeddings.parquet"))
-        new.write.mode("overwrite").parquet(
-            _os.path.join(new_dir, "embeddings.parquet"))
-        # stored state: the OLD snapshot's quantizers (coarse + PQ),
-        # digests, inverted index, and compressed code corpus
-        dig = A.embeddings_digest(spark, old_dir)
-        A.materialize_ivf_centroids(spark, old_dir, art, emb_digest=dig)
-        A.materialize_vec_digests(spark, old_dir, art, emb_digest=dig)
-        A.materialize_ivf_assignments(spark, old_dir, art, emb_digest=dig)
-        A.materialize_pq_codebooks(spark, old_dir, art, emb_digest=dig)
-        A.materialize_pq_codes(spark, old_dir, art, emb_digest=dig)
-        # drop the old-snapshot training cache before the refresh (whose
-        # own end-of-run clear is part of its contract)
-        clear_centroid_cache(spark)
-        # the derived snapshots churn ~40% of the vectors BY CONSTRUCTION
-        # — pin the churn gate per-call so the operator knob cannot break
-        # this registered section (the update_text_incremental contract)
-        summary = A.update_centroids_incremental(
-            spark, old_dir, new_dir, art, max_churn_frac=1.0)
-        if summary.get("mode") != "carried" or \
-                summary.get(A.ASSIGN_NAME) != "patched" or \
-                summary.get(A.PQCB_NAME) != "carried" or \
-                summary.get(A.PQCODES_NAME) != "patched":
-            raise RuntimeError(
-                f"stored-index refresh degraded (must CARRY both "
-                f"quantizers and PATCH the index and the codes): {summary}")
-        built = (
-            new.select(
-                "vec_id",
-                F.col("embedding").cast("array<double>").alias("emb"),
-            ),
-            spark.read.parquet(_os.path.join(art, A.CENTROIDS_NAME)),
-            spark.read.parquet(_os.path.join(art, A.ASSIGN_NAME)),
-            spark.read.parquet(_os.path.join(art, A.PQCB_NAME)),
-            # pbucket is refresh-time layout state, not a query column
-            spark.read.parquet(_os.path.join(art, A.PQCODES_NAME))
-            .select("vec_id", "sub", "code"),
-        )
-        with _SIM_CACHE_LOCK:
-            return _STORED_IVF_CACHE.setdefault(key, built)
+    emb = read_table(spark, sf_dir, "embeddings")
+    old, new = emb_snapshot_versions(emb)
+    # private per-(session, corpus) root under the process's mkdtemp
+    # parent — the CWE-377-hardened helper the text state uses; the
+    # suffix keys this state's slot apart from the text state's
+    root = _text_incr_root(spark.sparkContext.applicationId,
+                           sf_dir + "#stored_ivf")
+    old_dir = _os.path.join(root, "old")
+    new_dir = _os.path.join(root, "new")
+    art = _os.path.join(root, "art")
+    old.write.mode("overwrite").parquet(
+        _os.path.join(old_dir, "embeddings.parquet"))
+    new.write.mode("overwrite").parquet(
+        _os.path.join(new_dir, "embeddings.parquet"))
+    # stored state: the OLD snapshot's quantizers (coarse + PQ),
+    # digests, inverted index, and compressed code corpus
+    dig = A.embeddings_digest(spark, old_dir)
+    A.materialize_ivf_centroids(spark, old_dir, art, emb_digest=dig)
+    A.materialize_vec_digests(spark, old_dir, art, emb_digest=dig)
+    A.materialize_ivf_assignments(spark, old_dir, art, emb_digest=dig)
+    A.materialize_pq_codebooks(spark, old_dir, art, emb_digest=dig)
+    A.materialize_pq_codes(spark, old_dir, art, emb_digest=dig)
+    # drop the old-snapshot training cache before the refresh (whose
+    # own end-of-run clear is part of its contract)
+    clear_centroid_cache(spark)
+    # the derived snapshots churn ~40% of the vectors BY CONSTRUCTION
+    # — pin the churn gate per-call so the operator knob cannot break
+    # this registered section (the update_text_incremental contract)
+    summary = A.update_centroids_incremental(
+        spark, old_dir, new_dir, art, max_churn_frac=1.0)
+    if summary.get("mode") != "carried" or \
+            summary.get(A.ASSIGN_NAME) != "patched" or \
+            summary.get(A.PQCB_NAME) != "carried" or \
+            summary.get(A.PQCODES_NAME) != "patched":
+        raise RuntimeError(
+            f"stored-index refresh degraded (must CARRY both "
+            f"quantizers and PATCH the index and the codes): {summary}")
+    return (
+        new.select(
+            "vec_id",
+            F.col("embedding").cast("array<double>").alias("emb"),
+        ),
+        spark.read.parquet(_os.path.join(art, A.CENTROIDS_NAME)),
+        spark.read.parquet(_os.path.join(art, A.ASSIGN_NAME)),
+        spark.read.parquet(_os.path.join(art, A.PQCB_NAME)),
+        # pbucket is refresh-time layout state, not a query column
+        spark.read.parquet(_os.path.join(art, A.PQCODES_NAME))
+        .select("vec_id", "sub", "code"),
+    )
 
 
 def clear_stored_ivf_state(spark: SparkSession | None = None) -> int:
     """Drop cached stored-index state handles (tests; staleness mirror of
     the sibling clear_* helpers). The handles hold no storage."""
-    released = 0
-    app = spark.sparkContext.applicationId if spark is not None else None
-    with _SIM_CACHE_LOCK:
-        for key in list(_STORED_IVF_CACHE):
-            if app is None or key[0] == app:
-                del _STORED_IVF_CACHE[key]
-                released += 1
-    return released
+    return session_state.clear(spark, "stored_ivf_state")
 
 
 def embedding_ann_ivf_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1401,9 +1286,6 @@ def pq_adc_search(e: DataFrame, cent: DataFrame, codebooks: DataFrame,
     )
 
 
-_PQ_CODEBOOK_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def pq_codebooks_for_dir(spark: SparkSession, sf_dir: str,
                          e: DataFrame | None = None,
                          cent: DataFrame | None = None) -> DataFrame:
@@ -1412,48 +1294,27 @@ def pq_codebooks_for_dir(spark: SparkSession, sf_dir: str,
     result is m x k rows; ``llm.artifacts.load_pq_codebooks`` seeds this
     cache from a parquet artifact so a NEW session can search without
     retraining, and the env knob seeds it when no corpus relation was
-    handed in — the ``_centroids_locked`` contract). Same locked
-    check-then-act: training is eager, so the lock also stops two threads
-    from training twice.
+    handed in).
 
     ``cent``: the coarse quantizer the residuals train against (r16) —
-    defaults to the session quantizer for ``sf_dir`` (same cache, same
-    lock, via the already-locked ``_centroids_locked``). The artifact
+    defaults to the session quantizer for ``sf_dir``. The artifact
     layer's env-seed path verifies its stored ``centroids_fold`` against
     the sibling centroid artifact, so a seeded codebook relation pairs
     with the quantizer the session will also seed from that dir."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    with _SIM_CACHE_LOCK:
-        cached = _PQ_CODEBOOK_CACHE.get(key)
-        if cached is None and e is None:
+    def _build() -> DataFrame:
+        emb = e
+        if emb is None:
             from pyspark_coding_challenge_spark.llm import artifacts
 
-            cached = artifacts.pq_codebooks_from_env(spark, sf_dir)
-            if cached is not None:
-                _PQ_CODEBOOK_CACHE[key] = cached
-        if cached is None:
-            if e is None:
-                e = rebalance_for_compute(
-                    read_table(spark, sf_dir, "embeddings"), "vec_id"
-                ).select(
-                    "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-                ).localCheckpoint()
-            if cent is None:
-                cent = _centroids_locked(spark, sf_dir, e, key)
-            cached = train_pq_codebooks(e, cent)
-            _PQ_CODEBOOK_CACHE[key] = cached
-    return cached
+            seeded = artifacts.pq_codebooks_from_env(spark, sf_dir)
+            if seeded is not None:
+                return seeded
+            emb = _embeddings_for_training(spark, sf_dir)
+        quantizer = cent if cent is not None else ivf_centroids_for_dir(
+            spark, sf_dir, emb)
+        return train_pq_codebooks(emb, quantizer)
 
-
-# stored compressed corpus (vec_id, sub, code) seeded from the pq_codes
-# artifact — NEVER built on miss (an inline encode costs the same as
-# building it, so a cache-miss build would just add a write); the
-# ivf_assignments pattern with the codebook fold as the pairing key
-_PQ_CODES_CACHE: dict[tuple[str, str], object] = {}
-_PQ_CODES_MISS = object()
-# memoized use-time fold verdicts, (cache key, id(codebooks)) ->
-# (codebooks strong ref, matched) — the _ASSIGN_FOLD_VERDICTS contract
-_PQ_FOLD_VERDICTS: dict[tuple, tuple[object, bool]] = {}
+    return session_state.get_or_build("pq_codebooks", spark, sf_dir, _build)
 
 
 def pq_codes_with_cohort_for_dir(
@@ -1478,45 +1339,30 @@ def pq_codes_with_cohort_for_dir(
     wrong LUT rows and silently corrupt the shortlist). The fold of
     ``codebooks`` is one bounded m x k-row collect, memoized per object,
     paid only when codes are actually cached."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    with _SIM_CACHE_LOCK:
-        cached = _PQ_CODES_CACHE.get(key)
-    if cached is None:
-        # first-seed path runs Spark jobs — OUTSIDE the lock; read-under-
-        # lock, seed, re-check-and-install; the loser unpersists its
-        # duplicate (the ivf_assignments_for_dir race contract)
-        from pyspark_coding_challenge_spark.llm import artifacts
+    from pyspark_coding_challenge_spark.llm import artifacts
 
-        seeded = artifacts.pq_codes_from_env(spark, sf_dir)
-        with _SIM_CACHE_LOCK:
-            cached = _PQ_CODES_CACHE.get(key)
-            if cached is None:
-                cached = seeded if seeded is not None else _PQ_CODES_MISS
-                _PQ_CODES_CACHE[key] = cached
-        if seeded is not None and cached is not seeded:
-            seeded[0].unpersist()  # lost the install race
-    if cached is _PQ_CODES_MISS:
+    cached = session_state.get_or_build(
+        "pq_codes", spark, sf_dir,
+        lambda: artifacts.pq_codes_from_env(spark, sf_dir))
+    if cached is None:
         return None, None
     df, fold, max_cohort = cached
-    if codebooks is not None:
-        vkey = (key, id(codebooks))
-        with _SIM_CACHE_LOCK:
-            hit = _PQ_FOLD_VERDICTS.get(vkey)
-        if hit is not None and hit[0] is codebooks:
-            return (df, max_cohort) if hit[1] else (None, None)
-        from pyspark_coding_challenge_spark.llm import artifacts
+    if codebooks is None:
+        return df, max_cohort
 
+    def _verdict() -> tuple[DataFrame, bool]:
         matched = artifacts._codebook_fold(codebooks) == fold
-        with _SIM_CACHE_LOCK:
-            _PQ_FOLD_VERDICTS[vkey] = (codebooks, matched)
         if not matched:
             warnings.warn(
                 "stored pq_codes were encoded under different codebooks "
                 "than the ones this search scores with — encoding inline "
                 "instead"
             )
-            return None, None
-    return df, max_cohort
+        return codebooks, matched
+
+    _, matched = session_state.get_or_build(
+        "pq_fold_verdicts", spark, (sf_dir, id(codebooks)), _verdict)
+    return (df, max_cohort) if matched else (None, None)
 
 
 def pq_codes_for_dir(spark: SparkSession, sf_dir: str,
@@ -2022,9 +1868,6 @@ WHERE rank <= {TOP_K}
 """
 
 
-_TOPK_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def topk_for_dir(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-cached exact top-k result — the materialize-once idiom
     (cf. ``dedup.verified_pairs_for_dir``): the merged slug's ``topk``
@@ -2033,24 +1876,14 @@ def topk_for_dir(spark: SparkSession, sf_dir: str) -> DataFrame:
     section (r5 advisory). localCheckpoint, not persist: the result is
     queries x k rows, and the ContextCleaner reclaims the blocks when the
     cache entry is dropped."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    with _SIM_CACHE_LOCK:
-        cached = _TOPK_CACHE.get(key)
-        if cached is None:
-            cached = embedding_topk(spark, sf_dir).localCheckpoint()
-            _TOPK_CACHE[key] = cached
-        return cached
+    return session_state.get_or_build(
+        "topk", spark, sf_dir,
+        lambda: embedding_topk(spark, sf_dir).localCheckpoint())
 
 
 def clear_topk_cache(spark: SparkSession | None = None) -> int:
     """Drop cached top-k results — mirrors ``dedup.clear_pair_cache``."""
-    released = 0
-    app = spark.sparkContext.applicationId if spark is not None else None
-    for key in list(_TOPK_CACHE):
-        if app is None or key[0] == app:
-            del _TOPK_CACHE[key]
-            released += 1
-    return released
+    return session_state.clear(spark, "topk")
 
 
 def register_all(register) -> None:

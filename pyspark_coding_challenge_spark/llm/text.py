@@ -9,13 +9,13 @@ plans, so they scale linearly with input splits at 100 TB.
 
 from __future__ import annotations
 
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from pyspark_coding_challenge_spark.sources.readers import read_table
+from pyspark_coding_challenge_spark import session_state
+from pyspark_coding_challenge_spark.sources.readers import read_table, rebalance_for_compute
 
 # Marker-token sets for the n-gram/stopword language-ID heuristic. Tiny by
 # design: language ID over web-scale data is a cheap first-pass filter, not a
@@ -76,9 +76,6 @@ def sql_n_tokens(text_col: str = "text") -> str:
     return f"CAST(len(string_split({text_col}, ' ')) AS INTEGER)"
 
 
-_DOC_SIGNALS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def shared_doc_signals_for_dir(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-cached FUSED per-document scalar signals: ONE scan of the
     text-heavy corpus computes every cheap per-doc integer the narrow
@@ -94,9 +91,16 @@ def shared_doc_signals_for_dir(spark: SparkSession, sf_dir: str) -> DataFrame:
     error next to the corpus. Same staleness contract as the sibling
     caches: rewritten parquet within one session needs
     ``clear_doc_signals_cache``."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    with _TEXT_CACHE_LOCK:
-        return _doc_signals_locked(spark, sf_dir, key)
+    def _build() -> DataFrame:
+        from pyspark_coding_challenge_spark.llm import artifacts
+
+        seeded = artifacts.signals_from_env(spark, sf_dir)
+        if seeded is not None:
+            return seeded
+        return doc_signals_relation(
+            read_table(spark, sf_dir, "documents")).persist()
+
+    return session_state.get_or_build("doc_signals", spark, sf_dir, _build)
 
 
 def doc_signals_relation(docs: DataFrame) -> DataFrame:
@@ -141,29 +145,6 @@ def doc_signals_relation(docs: DataFrame) -> DataFrame:
     )
 
 
-def _doc_signals_locked(spark, sf_dir, key):
-    cached = _DOC_SIGNALS_CACHE.get(key)
-    if cached is not None:
-        return cached
-    from pyspark_coding_challenge_spark.llm import artifacts
-
-    seeded = artifacts.signals_from_env(spark, sf_dir)
-    if seeded is not None:
-        _DOC_SIGNALS_CACHE[key] = seeded
-        return seeded
-    d = read_table(spark, sf_dir, "documents")
-    sig = doc_signals_relation(d).persist()
-    _DOC_SIGNALS_CACHE[key] = sig
-    return sig
-
-
-_TOKEN_SPINE_CACHE: dict[tuple[str, str], DataFrame] = {}
-# one lock guards all three text caches' check-then-act (r6 review
-# finding in training_demo — same leak class here): persist() is lazy so
-# the critical sections stay cheap
-_TEXT_CACHE_LOCK = threading.Lock()
-
-
 def shared_token_spine_for_dir(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-cached TOKEN SPINE: (doc_id, source, n_tokens) — the
     3-column relation the packing/batching/budgeting kernels consume.
@@ -174,19 +155,16 @@ def shared_token_spine_for_dir(spark: SparkSession, sf_dir: str) -> DataFrame:
     regressed 23-38% when the kernels briefly rode the full relation).
     ``n_tokens`` comes from ``n_tokens_col`` — THE tokenization contract —
     so the centralized pairing with ``sql_n_tokens`` stays live."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    with _TEXT_CACHE_LOCK:
-        cached = _TOKEN_SPINE_CACHE.get(key)
-        if cached is not None:
-            return cached
+    def _build() -> DataFrame:
         from pyspark_coding_challenge_spark.llm import artifacts
 
         spine = artifacts.spine_from_env(spark, sf_dir)
         if spine is None:
             d = read_table(spark, sf_dir, "documents")
             spine = token_spine_relation(d).persist()
-        _TOKEN_SPINE_CACHE[key] = spine
         return spine
+
+    return session_state.get_or_build("token_spine", spark, sf_dir, _build)
 
 
 def token_spine_relation(docs: DataFrame) -> DataFrame:
@@ -197,41 +175,13 @@ def token_spine_relation(docs: DataFrame) -> DataFrame:
 
 def clear_token_spine_cache(spark: SparkSession | None = None) -> int:
     """Release cached token spines — mirrors ``clear_doc_signals_cache``."""
-    released = 0
-    app = spark.sparkContext.applicationId if spark is not None else None
-    for key in list(_TOKEN_SPINE_CACHE):
-        if app is None or key[0] == app:
-            try:
-                _TOKEN_SPINE_CACHE[key].unpersist()
-            except Exception:
-                pass  # session already stopped; the entry is dead either way
-            del _TOKEN_SPINE_CACHE[key]
-            released += 1
-    from pyspark_coding_challenge_spark.llm import artifacts
-
-    # a later materialize must rebuild, not no-op on the stale seed path
-    artifacts.invalidate_loaded(spark, artifacts.SPINE_NAME)
-    return released
+    return session_state.clear(spark, "token_spine")
 
 
 def clear_doc_signals_cache(spark: SparkSession | None = None) -> int:
     """Release cached doc-signal relations (all, or one session's) —
     mirrors ``clear_span_cache`` / ``dedup.clear_pair_cache``."""
-    released = 0
-    app = spark.sparkContext.applicationId if spark is not None else None
-    for key in list(_DOC_SIGNALS_CACHE):
-        if app is None or key[0] == app:
-            try:
-                _DOC_SIGNALS_CACHE[key].unpersist()
-            except Exception:
-                pass  # session already stopped; the entry is dead either way
-            del _DOC_SIGNALS_CACHE[key]
-            released += 1
-    from pyspark_coding_challenge_spark.llm import artifacts
-
-    # a later materialize must rebuild, not no-op on the stale seed path
-    artifacts.invalidate_loaded(spark, artifacts.SIGNALS_NAME)
-    return released
+    return session_state.clear(spark, "doc_signals")
 
 
 def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -642,9 +592,17 @@ def shared_span_starts_for_dir(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicate surface, not the corpus. Same staleness contract as the pair
     cache: rewritten parquet within one session needs
     ``clear_span_cache``."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    with _TEXT_CACHE_LOCK:
-        return _shared_spans_locked(spark, sf_dir, key)
+    def _build() -> DataFrame:
+        from pyspark_coding_challenge_spark.llm import artifacts
+
+        seeded = artifacts.spans_from_env(spark, sf_dir)
+        if seeded is not None:
+            return seeded
+        d = rebalance_for_compute(read_table(spark, sf_dir, "documents"),
+                                  "doc_id")
+        return shared_from_pos(span_pos_relation(d)).persist()
+
+    return session_state.get_or_build("shared_spans", spark, sf_dir, _build)
 
 
 def span_pos_relation(docs: DataFrame) -> DataFrame:
@@ -725,45 +683,10 @@ def shared_spans_relation(pos: DataFrame,
     return pos.join(freq, on="h").select("doc_id", "i", "h")
 
 
-def _shared_spans_locked(spark, sf_dir, key):
-    from pyspark_coding_challenge_spark.sources.readers import rebalance_for_compute
-
-    cached = _SHARED_SPANS_CACHE.get(key)
-    if cached is not None:
-        return cached
-    from pyspark_coding_challenge_spark.llm import artifacts
-
-    seeded = artifacts.spans_from_env(spark, sf_dir)
-    if seeded is not None:
-        _SHARED_SPANS_CACHE[key] = seeded
-        return seeded
-    d = rebalance_for_compute(read_table(spark, sf_dir, "documents"), "doc_id")
-    shared = shared_from_pos(span_pos_relation(d)).persist()
-    _SHARED_SPANS_CACHE[key] = shared
-    return shared
-
-
-_SHARED_SPANS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def clear_span_cache(spark: SparkSession | None = None) -> int:
     """Release cached shared-span relations (all, or one session's) —
     mirrors ``dedup.clear_pair_cache``."""
-    released = 0
-    app = spark.sparkContext.applicationId if spark is not None else None
-    for key in list(_SHARED_SPANS_CACHE):
-        if app is None or key[0] == app:
-            try:
-                _SHARED_SPANS_CACHE[key].unpersist()
-            except Exception:
-                pass  # session already stopped; the entry is dead either way
-            del _SHARED_SPANS_CACHE[key]
-            released += 1
-    from pyspark_coding_challenge_spark.llm import artifacts
-
-    # a later materialize must rebuild, not no-op on the stale seed path
-    artifacts.invalidate_loaded(spark, artifacts.SPANS_NAME)
-    return released
+    return session_state.clear(spark, "shared_spans")
 
 
 def text_span_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1210,15 +1133,6 @@ FROM s
 # incremental text-side refresh, driver-gated (r12, judge item #2a)
 # ---------------------------------------------------------------------------
 
-_TEXT_INCR_STATE_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame, DataFrame]] = {}
-# serializes the expensive state build (NOT the shared cache lock — that
-# one guards dict access for every text cache and must stay cheap to hold)
-_TEXT_INCR_BUILD_LOCK = threading.Lock()
-# the one mkdtemp-created per-process parent under which every build root
-# lives (list used as a write-once cell; guarded by the build lock)
-_TEXT_INCR_PARENT: list[str] = []
-
-
 def _text_incr_root(app_id: str, sf_dir: str) -> str:
     """A fresh private build root for one (session, corpus) state build.
     The r12 deterministic ``/tmp/sg_text_incr_<pid>_<tag>`` path was a
@@ -1232,19 +1146,23 @@ def _text_incr_root(app_id: str, sf_dir: str) -> str:
     cleaned at exit — the leak the deterministic path existed to fix stays
     fixed), with per-(applicationId, corpus) roots under it created
     ``exist_ok=False`` so nothing can pre-create them; distinct sessions
-    get distinct roots. Callers hold ``_TEXT_INCR_BUILD_LOCK``."""
+    get distinct roots. Callers run inside the one in-flight build of
+    their (session, corpus) state."""
     import atexit
     import hashlib
     import os as _os
     import shutil as _shutil
     import tempfile
 
-    if not _TEXT_INCR_PARENT:
+    def _parent() -> str:
         parent = tempfile.mkdtemp(prefix="sg_text_incr_")
         atexit.register(_shutil.rmtree, parent, ignore_errors=True)
-        _TEXT_INCR_PARENT.append(parent)
+        return parent
+
     tag = hashlib.md5(f"{app_id}:{sf_dir}".encode()).hexdigest()[:16]
-    root = _os.path.join(_TEXT_INCR_PARENT[0], tag)
+    root = _os.path.join(
+        session_state.get_or_build("text_incr_parent", None, None, _parent),
+        tag)
     # a rebuild of the SAME (session, corpus) state (cache cleared by a
     # refresh) reuses its slot: wipe, then recreate private
     _shutil.rmtree(root, ignore_errors=True)
@@ -1267,87 +1185,69 @@ def _patched_text_state(spark: SparkSession, sf_dir: str):
     ``update_text_incremental`` clears the session text caches when it
     finishes (its rewritten-path contract), so building this state before
     the sibling sections construct theirs means nothing gets invalidated
-    mid-flight. The build runs under its own lock (not the shared text
-    cache lock, which unrelated cache hits need): two concurrent callers
-    must not each run the multi-minute double-corpus build, and the
-    loser's end-of-refresh cache clears must not invalidate relations the
-    winner's sibling sections are consuming mid-flight."""
+    mid-flight. One build runs per (session, corpus): a concurrent caller
+    waits for it instead of running the multi-minute double-corpus build
+    again, so no loser's end-of-refresh cache clears can invalidate
+    relations the winner's sibling sections are consuming mid-flight."""
+    return session_state.get_or_build(
+        "text_incr_state", spark, sf_dir,
+        lambda: _build_patched_text_state(spark, sf_dir))
+
+
+def _build_patched_text_state(spark: SparkSession, sf_dir: str):
     import os as _os
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    # double-checked: hits (any sf_dir) must not queue behind a
-    # multi-minute build of some other corpus's state (r12 review
-    # finding) — the cheap cache lock guards the get, the build lock only
-    # serializes actual builds
-    with _TEXT_CACHE_LOCK:
-        cached = _TEXT_INCR_STATE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    with _TEXT_INCR_BUILD_LOCK:
-        with _TEXT_CACHE_LOCK:
-            cached = _TEXT_INCR_STATE_CACHE.get(key)
-        if cached is not None:
-            return cached
-        from pyspark_coding_challenge_spark.llm import artifacts as A
-        from pyspark_coding_challenge_spark.llm.dedup import snapshot_versions
+    from pyspark_coding_challenge_spark.llm import artifacts as A
+    from pyspark_coding_challenge_spark.llm.dedup import snapshot_versions
 
-        docs = read_table(spark, sf_dir, "documents")
-        old, new = snapshot_versions(docs)
-        # private per-(session, corpus) root under the process's mkdtemp
-        # parent (see _text_incr_root): wiped before reuse and at process
-        # exit, so long-lived bench hosts never accumulate corpus copies
-        root = _text_incr_root(key[0], sf_dir)
-        old_dir = _os.path.join(root, "old")
-        new_dir = _os.path.join(root, "new")
-        art = _os.path.join(root, "art")
-        old.write.mode("overwrite").parquet(
-            _os.path.join(old_dir, "documents.parquet"))
-        new.write.mode("overwrite").parquet(
-            _os.path.join(new_dir, "documents.parquet"))
-        # stored state: the OLD snapshot's text-side artifacts (digests
-        # power the diff; signals/spine/span_pos/spans get patched)
-        digest = A.corpus_digest(spark, old_dir)
-        A.materialize_doc_digests(spark, old_dir, art, digest)
-        A.materialize_signals(spark, old_dir, art, digest)
-        A.materialize_spine(spark, old_dir, art, digest)
-        A.materialize_span_pos(spark, old_dir, art, digest)
-        A.materialize_spans(spark, old_dir, art, digest)
-        A.materialize_span_stats(spark, old_dir, art, digest)
-        # the derived snapshots churn ~40% of the docs BY CONSTRUCTION, so
-        # the churn-size gate is pinned per-call: an operator tuning
-        # SPARK_GRAFT_INCR_MAX_CHURN_FRAC below 0.4 (a legitimate
-        # prefer-rebuilds policy for production refreshes) must not break
-        # this registered slug
-        summary = A.update_text_incremental(spark, old_dir, new_dir, art,
-                                            max_churn_frac=1.0)
-        # the driver's hash gate must prove the PATCH ran, not just that
-        # some rebuild produced equal rows — fail loudly if it degraded
-        if summary.get(A.SIGNALS_NAME) != "patched" or \
-                summary.get(A.SPINE_NAME) != "patched" or \
-                summary.get(A.SPANPOS_NAME) != "patched" or \
-                summary.get(A.SPANS_NAME) != "patched":
-            raise RuntimeError(
-                f"text incremental refresh degraded to rebuild: {summary}")
-        built = (
-            spark.read.parquet(_os.path.join(art, A.SIGNALS_NAME)),
-            spark.read.parquet(_os.path.join(art, A.SPINE_NAME)),
-            spark.read.parquet(_os.path.join(art, A.SPANS_NAME)),
-        )
-        with _TEXT_CACHE_LOCK:
-            return _TEXT_INCR_STATE_CACHE.setdefault(key, built)
+    docs = read_table(spark, sf_dir, "documents")
+    old, new = snapshot_versions(docs)
+    # private per-(session, corpus) root under the process's mkdtemp
+    # parent (see _text_incr_root): wiped before reuse and at process
+    # exit, so long-lived bench hosts never accumulate corpus copies
+    root = _text_incr_root(spark.sparkContext.applicationId, sf_dir)
+    old_dir = _os.path.join(root, "old")
+    new_dir = _os.path.join(root, "new")
+    art = _os.path.join(root, "art")
+    old.write.mode("overwrite").parquet(
+        _os.path.join(old_dir, "documents.parquet"))
+    new.write.mode("overwrite").parquet(
+        _os.path.join(new_dir, "documents.parquet"))
+    # stored state: the OLD snapshot's text-side artifacts (digests
+    # power the diff; signals/spine/span_pos/spans get patched)
+    digest = A.corpus_digest(spark, old_dir)
+    A.materialize_doc_digests(spark, old_dir, art, digest)
+    A.materialize_signals(spark, old_dir, art, digest)
+    A.materialize_spine(spark, old_dir, art, digest)
+    A.materialize_span_pos(spark, old_dir, art, digest)
+    A.materialize_spans(spark, old_dir, art, digest)
+    A.materialize_span_stats(spark, old_dir, art, digest)
+    # the derived snapshots churn ~40% of the docs BY CONSTRUCTION, so
+    # the churn-size gate is pinned per-call: an operator tuning
+    # SPARK_GRAFT_INCR_MAX_CHURN_FRAC below 0.4 (a legitimate
+    # prefer-rebuilds policy for production refreshes) must not break
+    # this registered slug
+    summary = A.update_text_incremental(spark, old_dir, new_dir, art,
+                                        max_churn_frac=1.0)
+    # the oracle hash gate must prove the PATCH ran, not just that
+    # some rebuild produced equal rows — fail loudly if it degraded
+    if summary.get(A.SIGNALS_NAME) != "patched" or \
+            summary.get(A.SPINE_NAME) != "patched" or \
+            summary.get(A.SPANPOS_NAME) != "patched" or \
+            summary.get(A.SPANS_NAME) != "patched":
+        raise RuntimeError(
+            f"text incremental refresh degraded to rebuild: {summary}")
+    return (
+        spark.read.parquet(_os.path.join(art, A.SIGNALS_NAME)),
+        spark.read.parquet(_os.path.join(art, A.SPINE_NAME)),
+        spark.read.parquet(_os.path.join(art, A.SPANS_NAME)),
+    )
 
 
 def clear_text_incr_state(spark: SparkSession | None = None) -> int:
     """Drop cached patched-artifact handles (tests; staleness mirror of
     the sibling clear_* helpers). The parquet handles hold no storage."""
-    released = 0
-    app = spark.sparkContext.applicationId if spark is not None else None
-    with _TEXT_CACHE_LOCK:
-        for key in list(_TEXT_INCR_STATE_CACHE):
-            if app is None or key[0] == app:
-                del _TEXT_INCR_STATE_CACHE[key]
-                released += 1
-    return released
+    return session_state.clear(spark, "text_incr_state")
 
 
 def text_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:

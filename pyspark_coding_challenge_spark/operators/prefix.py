@@ -24,7 +24,6 @@ still hash-match. Consumers: ``llm.text.text_pack_sequences``,
 
 from __future__ import annotations
 
-import threading
 import zlib
 from typing import Sequence
 
@@ -32,32 +31,19 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from pyspark_coding_challenge_spark import session_state
+
 # Max shards per range-sharded key. Offsets relation is bounded by
 # parts x N_PREFIX_SHARDS rows (three small columns), so the broadcast in
 # step 4 is provably tiny at ANY corpus size; raise for >256-way clusters.
 N_PREFIX_SHARDS = 256
-
-# (applicationId, caller cache_key, key_col, n_shards) -> the 1-row
-# checkpointed breaks relation. The quantile pass is EAGER (localCheckpoint
-# at plan-construction time, r6 finding #2) — without this cache every
-# calling section re-ran it per invocation even though the breaks are a
-# pure function of (data, key). Mirrors the token-spine cache idiom.
-_BREAKS_CACHE: dict[tuple, DataFrame] = {}
-_BREAKS_LOCK = threading.Lock()
 
 
 def clear_breaks_cache(spark=None) -> int:
     """Drop cached quantile breaks (all, or one session's) — mirrors
     ``text.clear_token_spine_cache``. Checkpoint blocks are reclaimed by
     the ContextCleaner once the reference drops."""
-    released = 0
-    app = spark.sparkContext.applicationId if spark is not None else None
-    with _BREAKS_LOCK:  # concurrent clears / a racing setdefault (r7 review)
-        for key in list(_BREAKS_CACHE):
-            if app is None or key[0] == app:
-                del _BREAKS_CACHE[key]
-                released += 1
-    return released
+    return session_state.clear(spark, "breaks")
 
 
 def with_range_shard(
@@ -92,14 +78,7 @@ def with_range_shard(
     re-running the percentile job per call). Only pass it for relations
     that are deterministic for the key — a changing input under the same
     key is the caller's staleness bug."""
-    ck = None
-    stats = None
-    if cache_key is not None:
-        ck = (df.sparkSession.sparkContext.applicationId, cache_key,
-              key_col, n_shards)
-        with _BREAKS_LOCK:
-            stats = _BREAKS_CACHE.get(ck)
-    if stats is None:
+    def _breaks() -> DataFrame:
         qs = [i / n_shards for i in range(1, n_shards)]
         # localCheckpoint pins ONE evaluation of the quantile pass:
         # sharded_cumsum references the sharded df in two plan branches, and
@@ -107,15 +86,14 @@ def with_range_shard(
         # fetches — two independent evaluations could disagree at a break
         # boundary and assign the same row different shards per branch
         # (review finding r6). The checkpointed relation is 1 row.
-        stats = df.agg(
+        return df.agg(
             F.percentile_approx(key_col, qs).alias("_breaks")
         ).localCheckpoint()
-        if ck is not None:
-            with _BREAKS_LOCK:
-                # a racing thread may have landed first; keep ITS handle so
-                # both callers share one checkpoint (the loser's blocks are
-                # reclaimed by the ContextCleaner)
-                stats = _BREAKS_CACHE.setdefault(ck, stats)
+
+    # the quantile pass is EAGER (r6 finding #2): with a cache_key it runs
+    # once per (session, cache_key, key_col, n_shards)
+    stats = _breaks() if cache_key is None else session_state.get_or_build(
+        "breaks", df.sparkSession, (cache_key, key_col, n_shards), _breaks)
     # the stats column is named per key (r10 review finding): a hardcoded
     # '_breaks' made chained with_range_shard calls on two keys collide at
     # analysis (ambiguous reference) and drop() would take both. The name

@@ -45,11 +45,11 @@ import glob as _glob
 import json
 import os
 import shutil
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pyspark_coding_challenge_spark import session_state
 from pyspark_coding_challenge_spark.streaming.windows import (
     _fresh_dirs,
     _stream_shuffle_partitions,
@@ -59,22 +59,14 @@ from pyspark_coding_challenge_spark.streaming.windows import (
 DOCS_LEAF = "documents.parquet"
 DIGESTS_LEAF = "ingest_digests.parquet"
 
-_DOC_SCHEMA_CACHE: dict[tuple[str, str], object] = {}
-_DOC_SCHEMA_LOCK = threading.Lock()
-
-
 def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming reader over ``sf_dir``'s documents table — the documents
     twin of ``windows.read_events_stream`` (footer-probed schema, cached
     per (session, dir); glob keeps the stream off the sibling tables when
     the dataset is the driver's single-file shape)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    with _DOC_SCHEMA_LOCK:
-        schema = _DOC_SCHEMA_CACHE.get(key)
-        if schema is None:
-            schema = spark.read.parquet(f"{sf_dir}/{DOCS_LEAF}").schema
-            _DOC_SCHEMA_CACHE[key] = schema
     path = f"{sf_dir}/{DOCS_LEAF}"
+    schema = session_state.get_or_build(
+        "doc_schema", spark, sf_dir, lambda: spark.read.parquet(path).schema)
     if os.path.isdir(path):
         return spark.readStream.schema(schema).parquet(path)
     return (
@@ -86,14 +78,7 @@ def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def clear_doc_schema_cache(spark: SparkSession | None = None) -> int:
     """Staleness valve, mirroring ``windows.clear_stream_schema_cache``."""
-    released = 0
-    app = spark.sparkContext.applicationId if spark is not None else None
-    with _DOC_SCHEMA_LOCK:
-        for key in list(_DOC_SCHEMA_CACHE):
-            if app is None or key[0] == app:
-                del _DOC_SCHEMA_CACHE[key]
-                released += 1
-    return released
+    return session_state.clear(spark, "doc_schema")
 
 
 def _publish_batch_files(staging: str, sink: str, prefix: str) -> None:
@@ -418,112 +403,96 @@ def compact_ingest_sink(spark: SparkSession, dest_dir: str,
 # (r14 judge item #8)
 # ---------------------------------------------------------------------------
 
-_IRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-_IRS_LOCK = threading.Lock()
-
-
 def _ingest_refresh_serve_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build the loop once per (session, corpus) — see
     ``streaming_ingest_refresh_serve`` for the contract. Cached because the
     bench's best-of-2 and the oracle run would otherwise re-run two ingest
     streams and a refresh per invocation (the ``_patched_text_state``
     rule)."""
+    return session_state.get_or_build(
+        "ingest_refresh_state", spark, sf_dir,
+        lambda: _build_ingest_refresh_serve(spark, sf_dir))
+
+
+def _build_ingest_refresh_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark_coding_challenge_spark.llm import artifacts as A
     from pyspark_coding_challenge_spark.sources.readers import read_table
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    with _IRS_LOCK:
-        cached = _IRS_CACHE.get(key)
-        if cached is not None:
-            return cached
-        # 1. split the corpus deterministically: 60% is "last month's"
-        # source content, 40% arrives later as source growth
-        docs = read_table(spark, sf_dir, "documents")
-        is_old = F.pmod(F.xxhash64(F.col("doc_id").cast("string")),
-                        F.lit(10)) < 6
-        # dirs keyed per CORPUS: the cached served relations read these
-        # parquets lazily, and a plain per-slug dir would let a second
-        # corpus's build (same session, different sf_dir) wipe the files
-        # under the first corpus's live cache entry
-        import hashlib as _hashlib
+    # 1. split the corpus deterministically: 60% is "last month's"
+    # source content, 40% arrives later as source growth
+    docs = read_table(spark, sf_dir, "documents")
+    is_old = F.pmod(F.xxhash64(F.col("doc_id").cast("string")),
+                    F.lit(10)) < 6
+    # dirs keyed per CORPUS: the cached served relations read these
+    # parquets lazily, and a plain per-slug dir would let a second
+    # corpus's build (same session, different sf_dir) wipe the files
+    # under the first corpus's live cache entry
+    import hashlib as _hashlib
 
-        tag = _hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        dest, src = _fresh_dirs(f"ingest_refresh_serve_{tag}")
-        src_docs = os.path.join(src, DOCS_LEAF)
-        docs.filter(is_old).write.mode("overwrite").parquet(src_docs)
-        # 2. first ingest: the stored state a deployment would already
-        # hold — stream the source into the sink, then materialize the
-        # text artifacts ON the ingested corpus
-        ingest_documents(spark, src, dest)
-        digest = A.corpus_digest(spark, dest)
-        art = os.path.join(dest, "art")
-        A.materialize_doc_digests(spark, dest, art, digest)
-        A.materialize_signals(spark, dest, art, digest)
-        A.materialize_spine(spark, dest, art, digest)
-        A.materialize_span_pos(spark, dest, art, digest)
-        A.materialize_spans(spark, dest, art, digest)
-        A.materialize_span_stats(spark, dest, art, digest)
-        # bounded 1-row agg: the last committed batch of the first ingest
-        b0 = spark.read.parquet(os.path.join(dest, DIGESTS_LEAF)) \
-            .agg(F.max("batch_id").alias("m")).collect()[0]["m"]
-        # 3. the source GROWS (new part files); the persisted per-sink
-        # checkpoint means the second ingest reads ONLY the new files,
-        # under fresh monotonic batch ids
-        docs.filter(~is_old).write.mode("append").parquet(src_docs)
-        ingest_documents(spark, src, dest)
-        # 4. the ingest's own changelog for exactly the new batches —
-        # churn detection is O(churn), no corpus-wide diff join
-        changelog = ingest_changelog_relation(spark, dest,
-                                              since_batch=int(b0) + 1)
-        # 5. refresh the stored artifacts through the FULL bounded-trust
-        # gate; the sink is its own old and new snapshot (an in-place
-        # corpus growth). Churn is 40% by construction — pin the gate.
-        ctx = A._refresh_ctx(spark, dest, dest, art, new_changelog=changelog)
-        summary = A.update_text_incremental(spark, dest, dest, art,
-                                            _ctx=ctx, max_churn_frac=1.0)
-        # the driver's hash gate must prove the LOOP ran: changelog
-        # accepted by the gate AND every artifact on its patch path —
-        # fail loudly on any silent degrade
-        if ctx.get("supplied") != "changelog":
+    tag = _hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    dest, src = _fresh_dirs(f"ingest_refresh_serve_{tag}")
+    src_docs = os.path.join(src, DOCS_LEAF)
+    docs.filter(is_old).write.mode("overwrite").parquet(src_docs)
+    # 2. first ingest: the stored state a deployment would already
+    # hold — stream the source into the sink, then materialize the
+    # text artifacts ON the ingested corpus
+    ingest_documents(spark, src, dest)
+    digest = A.corpus_digest(spark, dest)
+    art = os.path.join(dest, "art")
+    A.materialize_doc_digests(spark, dest, art, digest)
+    A.materialize_signals(spark, dest, art, digest)
+    A.materialize_spine(spark, dest, art, digest)
+    A.materialize_span_pos(spark, dest, art, digest)
+    A.materialize_spans(spark, dest, art, digest)
+    A.materialize_span_stats(spark, dest, art, digest)
+    # bounded 1-row agg: the last committed batch of the first ingest
+    b0 = spark.read.parquet(os.path.join(dest, DIGESTS_LEAF)) \
+        .agg(F.max("batch_id").alias("m")).collect()[0]["m"]
+    # 3. the source GROWS (new part files); the persisted per-sink
+    # checkpoint means the second ingest reads ONLY the new files,
+    # under fresh monotonic batch ids
+    docs.filter(~is_old).write.mode("append").parquet(src_docs)
+    ingest_documents(spark, src, dest)
+    # 4. the ingest's own changelog for exactly the new batches —
+    # churn detection is O(churn), no corpus-wide diff join
+    changelog = ingest_changelog_relation(spark, dest,
+                                          since_batch=int(b0) + 1)
+    # 5. refresh the stored artifacts through the FULL bounded-trust
+    # gate; the sink is its own old and new snapshot (an in-place
+    # corpus growth). Churn is 40% by construction — pin the gate.
+    ctx = A._refresh_ctx(spark, dest, dest, art, new_changelog=changelog)
+    summary = A.update_text_incremental(spark, dest, dest, art,
+                                        _ctx=ctx, max_churn_frac=1.0)
+    # the oracle hash gate must prove the LOOP ran: changelog
+    # accepted by the gate AND every artifact on its patch path —
+    # fail loudly on any silent degrade
+    if ctx.get("supplied") != "changelog":
+        raise RuntimeError(
+            f"ingest changelog was not accepted: {ctx.get('supplied')}")
+    for name in (A.SIGNALS_NAME, A.SPINE_NAME, A.SPANPOS_NAME,
+                 A.SPANS_NAME, A.SPANSTATS_NAME):
+        if summary.get(name) != "patched":
             raise RuntimeError(
-                f"ingest changelog was not accepted: {ctx.get('supplied')}")
-        for name in (A.SIGNALS_NAME, A.SPINE_NAME, A.SPANPOS_NAME,
-                     A.SPANS_NAME, A.SPANSTATS_NAME):
-            if summary.get(name) != "patched":
-                raise RuntimeError(
-                    f"ingest refresh degraded to rebuild: {summary}")
-        # 6. serve from the PATCHED artifacts only — no documents table,
-        # source or sink, appears in the served plan
-        sig = spark.read.parquet(os.path.join(art, A.SIGNALS_NAME))
-        spine = spark.read.parquet(os.path.join(art, A.SPINE_NAME))
-        served = (
-            sig.select(
-                "doc_id",
-                F.col("n_chars_len").cast("int").alias("chars"),
-            )
-            .join(spine.select(
-                "doc_id", F.col("n_tokens").cast("int").alias("n_tokens")),
-                on="doc_id")
-            .select(
-                "doc_id", "chars", "n_tokens",
-                F.lit("changelog").alias("digests_mode"),
-                F.lit("patched").alias("signals_mode"),
-                F.lit("patched").alias("spine_mode"),
-            )
+                f"ingest refresh degraded to rebuild: {summary}")
+    # 6. serve from the PATCHED artifacts only — no documents table,
+    # source or sink, appears in the served plan
+    sig = spark.read.parquet(os.path.join(art, A.SIGNALS_NAME))
+    spine = spark.read.parquet(os.path.join(art, A.SPINE_NAME))
+    return (
+        sig.select(
+            "doc_id",
+            F.col("n_chars_len").cast("int").alias("chars"),
         )
-        return _IRS_CACHE.setdefault(key, served)
-
-
-def clear_ingest_refresh_cache(spark: SparkSession | None = None) -> int:
-    """Staleness valve for the loop's served relation (tests)."""
-    released = 0
-    app = spark.sparkContext.applicationId if spark is not None else None
-    with _IRS_LOCK:
-        for key in list(_IRS_CACHE):
-            if app is None or key[0] == app:
-                del _IRS_CACHE[key]
-                released += 1
-    return released
+        .join(spine.select(
+            "doc_id", F.col("n_tokens").cast("int").alias("n_tokens")),
+            on="doc_id")
+        .select(
+            "doc_id", "chars", "n_tokens",
+            F.lit("changelog").alias("digests_mode"),
+            F.lit("patched").alias("signals_mode"),
+            F.lit("patched").alias("spine_mode"),
+        )
+    )
 
 
 def streaming_ingest_refresh_serve(spark: SparkSession,

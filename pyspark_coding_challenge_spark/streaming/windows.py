@@ -42,6 +42,8 @@ import threading
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pyspark_coding_challenge_spark import session_state
+
 WATERMARK_DELAY = "1 hour"
 
 # Every oracle joins this 1-row relation and keeps closed windows only —
@@ -61,19 +63,12 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ensure_event_ts_confs(spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    # locked check-then-act like every other session cache (r10 review
-    # finding — this cache skipped the r6/r7 idiom); the footer probe is
-    # one cheap job, so holding the lock through it is fine
-    with _SCHEMA_CACHE_LOCK:
-        file_schema = _EVENT_SCHEMA_CACHE.get(key)
-        if file_schema is None:
-            # one footer probe per (session, dir) — streaming slugs call
-            # this up to twice per run and the bench repeats runs
-            file_schema = spark.read.parquet(
-                f"{sf_dir}/events.parquet").schema
-            _EVENT_SCHEMA_CACHE[key] = file_schema
     events_path = f"{sf_dir}/events.parquet"
+    # one footer probe per (session, dir) — streaming slugs call this up
+    # to twice per run and the bench repeats runs
+    file_schema = session_state.get_or_build(
+        "event_schema", spark, sf_dir,
+        lambda: spark.read.parquet(events_path).schema)
     if os.path.isdir(events_path):
         # directory-shaped dataset (df.write.parquet output): stream the
         # directory itself. The glob-filter form below would match LEAF
@@ -92,23 +87,12 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return canonicalize_ts(raw, "ts")
 
 
-_EVENT_SCHEMA_CACHE: dict[tuple[str, str], "object"] = {}
-_SCHEMA_CACHE_LOCK = threading.Lock()
-
-
 def clear_stream_schema_cache(spark: SparkSession | None = None) -> int:
     """Invalidate cached events.parquet schemas (all, or one session's) —
     required if sf_dir's parquet is rewritten mid-session with a different
     physical ts type (the staleness contract shared with the pair/span/
     base caches)."""
-    released = 0
-    app = spark.sparkContext.applicationId if spark is not None else None
-    with _SCHEMA_CACHE_LOCK:
-        for key in list(_EVENT_SCHEMA_CACHE):
-            if app is None or key[0] == app:
-                del _EVENT_SCHEMA_CACHE[key]
-                released += 1
-    return released
+    return session_state.clear(spark, "event_schema")
 
 
 def _fresh_dirs(slug: str) -> tuple[str, str]:

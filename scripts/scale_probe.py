@@ -651,17 +651,10 @@ def _refreshable_artifacts(A):
 
 
 def _clear_all_artifact_caches(spark):
-    from pyspark_coding_challenge_spark.llm import dedup as D
-    from pyspark_coding_challenge_spark.llm import similarity as S
-    from pyspark_coding_challenge_spark.llm import text as T
-    from pyspark_coding_challenge_spark.operators import prefix as P
+    from pyspark_coding_challenge_spark import session_state
+    from pyspark_coding_challenge_spark.llm import artifacts as A
 
-    S.clear_centroid_cache(spark)
-    D.clear_pair_cache(spark)
-    T.clear_doc_signals_cache(spark)
-    T.clear_token_spine_cache(spark)
-    T.clear_span_cache(spark)
-    P.clear_breaks_cache(spark)
+    session_state.clear(spark, *A.ARTIFACT_SESSION_KINDS)
 
 
 def _supplied_relations(spark, new_dir: str):

@@ -67,8 +67,16 @@ def main() -> int:
         [sys.executable, "-c", _CHILD, cpus, reps, ",".join(STREAM_SLUGS)],
         capture_output=True, text=True, env=env, cwd="/root/repo")
     line = r.stdout.strip().splitlines()[-1] if r.stdout.strip() else "{}"
+    try:
+        slugs = json.loads(line)
+    except ValueError:
+        # the child died mid-output: show why instead of a traceback here
+        sys.stderr.write(r.stderr)
+        print(f"sweep child (exit {r.returncode}) printed no JSON result: "
+              f"{line[:200]!r}", file=sys.stderr)
+        return 1
     print(json.dumps({"cpus": int(cpus), "partitions": int(parts),
-                      "slugs": json.loads(line)}))
+                      "slugs": slugs}))
     return 0 if r.returncode == 0 else 1
 
 

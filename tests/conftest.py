@@ -11,6 +11,19 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def test_kind(monkeypatch):
+    """A throwaway session-state kind whose release rule records every value
+    it releases; yields (kind name, released values)."""
+    from pyspark_coding_challenge_spark import session_state as SS
+
+    released: list = []
+    monkeypatch.setitem(SS.KINDS, "test_kind",
+                        SS.Kind(SS.STATISTIC, released.append))
+    yield "test_kind", released
+    SS.clear(None, "test_kind")
+
+
 # ---------------------------------------------------------------------------
 # Slow tier (r17, verdict item #3). Every entry below measured >= 10 s in
 # the full-suite duration profile (pytest --durations, 424 tests, 31:16

@@ -564,7 +564,7 @@ def test_full_rebuild_not_defeated_by_env_seeding(spark, tmp_path, monkeypatch):
     """r8 second-review finding: with SPARK_GRAFT_ARTIFACT_DIR pointing at
     the artifact dir, a lineage-failed 'full rebuild' could env-seed from
     the STALE bytes (env checks sf_dir+params only, never lineage) and
-    no-op on the _loaded_from guard — silently keeping the stale artifact.
+    no-op on the _seeded_from guard — silently keeping the stale artifact.
     The fix deletes the stale meta sidecars first, so the rebuild is real."""
     from pyspark_coding_challenge_spark.llm import dedup as D
 

@@ -132,3 +132,25 @@ def test_remeasure_child_failure_is_recorded_not_fatal():
     assert ran is True
     assert entry["ab"]["remeasured"] is False
     assert "child exploded" in entry["ab"]["remeasure_error"]
+
+
+def test_stream_sweep_reports_a_child_that_died_mid_output(monkeypatch,
+                                                          capsys):
+    """A sweep child that dies after printing part of its JSON line makes
+    the sweep exit 1 and show the child's stderr — not raise from
+    ``json.loads``."""
+    import subprocess
+
+    spec = importlib.util.spec_from_file_location(
+        "stream_partitions_sweep",
+        os.path.join(REPO, "scripts", "stream_partitions_sweep.py"))
+    sweep = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(sweep)
+    died = subprocess.CompletedProcess(
+        [], 137, stdout='{"streaming_windowed_aggs": 1.2', stderr="Killed\n")
+    monkeypatch.setattr(sweep.subprocess, "run", lambda *a, **k: died)
+    monkeypatch.setattr(sys, "argv", ["stream_partitions_sweep.py", "2"])
+    assert sweep.main() == 1
+    out = capsys.readouterr()
+    assert "Killed" in out.err
+    assert out.out == ""

@@ -450,7 +450,7 @@ def test_retrain_is_real_under_env_seeding(spark, tmp_path, monkeypatch):
     artifact dir and an IN-PLACE snapshot refresh (same directory path,
     contents changed), the stale centroid meta still passes the
     sf_dir+params check — the builder inside the retrain would env-seed
-    the STALE bytes and materialize would no-op on its _loaded_from
+    the STALE bytes and materialize would no-op on its _seeded_from
     guard, silently keeping the old quantizer while reporting
     'retrained'. The fix deletes the meta sidecar before rebuilding."""
     vecs = _base_vecs()
@@ -547,14 +547,16 @@ def test_env_float_rejects_typos(monkeypatch):
 def test_assign_seed_runs_outside_cache_lock(spark, monkeypatch):
     """r12 ADVICE (similarity.py:544): the first env-seed runs Spark jobs
     (meta reads, fold collect, metadata counts) and must NOT hold the
-    global ``_SIM_CACHE_LOCK`` for their duration — that blocked every
-    concurrent similarity-cache caller for multiple seconds. The seed
-    callable observes the lock state at call time."""
+    global session-state lock for their duration — that blocked every
+    concurrent cache caller for multiple seconds. The seed callable
+    observes the lock state at call time."""
+    from pyspark_coding_challenge_spark import session_state as SS
+
     S.clear_centroid_cache(spark)
     seen: dict = {}
 
     def fake_seed(sp, d):
-        seen["locked"] = S._SIM_CACHE_LOCK.locked()
+        seen["locked"] = SS._LOCK.locked()
         return None
 
     monkeypatch.setattr(A, "assignments_from_env", fake_seed)
@@ -568,19 +570,20 @@ def test_assign_seed_runs_outside_cache_lock(spark, monkeypatch):
 
 
 def test_assign_seed_loser_unpersists_duplicate(spark, monkeypatch):
-    """With the seed outside the lock, two concurrent seeders can race;
-    the loser must unpersist its duplicate persisted artifact read
+    """With the seed outside the lock, an install can land while it runs;
+    the losing seed must unpersist its duplicate persisted artifact read
     instead of stranding a cached copy in storage memory."""
+    from pyspark_coding_challenge_spark import session_state as SS
+
     S.clear_centroid_cache(spark)
-    key = (spark.sparkContext.applicationId, "/race/corpus")
     winner = spark.createDataFrame([(1, 0)], "vec_id long, lid int")
     loser = spark.createDataFrame([(1, 0)], "vec_id long, lid int").persist()
     loser.count()
 
     def fake_seed(sp, d):
-        # simulate another thread winning the install race mid-seed
-        with S._SIM_CACHE_LOCK:
-            S._IVF_ASSIGN_CACHE[key] = (winner, "fold_w")
+        # simulate an install winning the race mid-seed
+        SS.install("ivf_assignments", spark, "/race/corpus",
+                   (winner, "fold_w"))
         return (loser, "fold_l")
 
     monkeypatch.setattr(A, "assignments_from_env", fake_seed)
@@ -592,13 +595,15 @@ def test_assign_seed_loser_unpersists_duplicate(spark, monkeypatch):
 
 def test_clear_centroid_cache_takes_the_lock(spark):
     """r12 ADVICE (similarity.py:477): the clear must mutate the caches
-    under ``_SIM_CACHE_LOCK`` — an unlocked clear races readers, which
+    under the session-state lock — an unlocked clear races readers, which
     can fetch a (df, fold) tuple and have the df unpersisted out from
     under them mid-refresh. Holding the lock here must block the clear."""
     import threading
 
+    from pyspark_coding_challenge_spark import session_state as SS
+
     done = threading.Event()
-    S._SIM_CACHE_LOCK.acquire()
+    SS._LOCK.acquire()
     try:
         t = threading.Thread(
             target=lambda: (S.clear_centroid_cache(spark), done.set()),
@@ -607,7 +612,7 @@ def test_clear_centroid_cache_takes_the_lock(spark):
         t.start()
         assert not done.wait(0.5), "clear mutated the caches lock-free"
     finally:
-        S._SIM_CACHE_LOCK.release()
+        SS._LOCK.release()
     assert done.wait(10), "clear never completed after the lock released"
 
 

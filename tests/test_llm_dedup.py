@@ -590,6 +590,31 @@ def test_incremental_update_repairs_bucket_shrunk_under_cap(spark):
     assert {(r.doc_a, r.doc_b) for r in patched.collect()} == {(1, 3)}
 
 
+def test_incremental_update_rejects_overfull_set_from_another_cap(spark):
+    """ADVICE (dedup.py:1023): ``old_overfull`` carries the cap it was
+    computed at; a set pre-aggregated at a different cap than the patch's
+    ``max_bucket`` would silently change which mega-buckets get repaired,
+    so it is refused. A matching set patches like the per-call probe."""
+    old = spark.createDataFrame([(i, BASE) for i in (1, 2, 3)], schema=DOC_SCHEMA)
+    new = old.filter(F.col("doc_id") != 2)
+    ranked = D.ranked_band_relation(old)
+    bands = ranked.select("doc_id", "band", "bucket")
+    old_pairs = D.verify_jaccard(
+        old, D.lsh_candidate_pairs(old, ranked=ranked, max_bucket=2))
+    diff = D.snapshot_diff(old, new).select("doc_id", "change")
+
+    def overfull(cap):
+        return (bands.groupBy("band", "bucket").count()
+                .filter(F.col("count") > cap).select("band", "bucket"), cap)
+
+    with pytest.raises(ValueError, match="max_bucket=2"):
+        D.incremental_dedup_update(new, diff, old_pairs, bands, max_bucket=2,
+                                   old_overfull=overfull(D.LSH_MAX_BUCKET))
+    _, patched, _ = D.incremental_dedup_update(
+        new, diff, old_pairs, bands, max_bucket=2, old_overfull=overfull(2))
+    assert {(r.doc_a, r.doc_b) for r in patched.collect()} == {(1, 3)}
+
+
 def _cc_labels(spark, edges):
     df = spark.createDataFrame(edges, schema="doc_a BIGINT, doc_b BIGINT")
     return {r.node: r.label for r in D.connected_components(df).collect()}
@@ -668,102 +693,99 @@ def test_clusters_incremental_section_matches_full_relabeling(spark):
     assert got == exp
 
 
-def test_cached_build_discards_build_straddling_clear(spark):
+def test_cached_build_discards_build_straddling_clear(spark, test_kind):
     """r9 advisor: a builder whose (unlocked) build straddles a
     clear_pair_cache may have read artifact paths the clear's caller is
     rewriting — the epoch check must DISCARD that build and retry, never
-    setdefault-install it."""
-    from pyspark_coding_challenge_spark.llm import dedup as D
+    setdefault-install it. (The protocol now lives in ``session_state``.)"""
+    from pyspark_coding_challenge_spark import session_state as SS
 
+    kind, released = test_kind
     app = spark.sparkContext.applicationId
-    cache: dict = {}
-    released, calls = [], []
-
-    def build():
-        calls.append(1)
-        if len(calls) == 1:
-            D.clear_pair_cache(spark)  # bumps this app's epoch mid-build
-        return len(calls)
-
-    out = D._cached_build(cache, (app, "dir"), build,
-                          release=released.append)
-    assert out == 2                      # the straddling build was retried
-    assert cache[(app, "dir")] == 2      # ...and only the retry installed
-    assert released == [1]               # ...the stale build was released
-
-
-def test_cached_build_epoch_is_per_app(spark):
-    """r10 review: clearing one session's caches must NOT discard an
-    unrelated session's in-flight build — the epoch is per-application."""
-    from pyspark_coding_challenge_spark.llm import dedup as D
-
-    cache: dict = {}
     calls = []
 
     def build():
         calls.append(1)
-        D.clear_pair_cache(spark)  # bumps THIS session's epoch only
+        if len(calls) == 1:
+            SS.clear(spark, kind)  # bumps this app's epoch mid-build
         return len(calls)
 
-    out = D._cached_build(cache, ("some-other-app", "dir"), build)
-    assert out == 1 and cache[("some-other-app", "dir")] == 1
-    assert len(calls) == 1  # no discard: the clear was for a different app
+    out = SS.get_or_build(kind, spark, "dir", build)
+    assert out == 2                      # the straddling build was retried
+    assert SS._ENTRIES[(kind, app, "dir")].value == 2  # only the retry
+    assert released == [1]               # ...the stale build was released
 
 
-def test_cached_build_terminal_attempt_installs(spark):
-    """r10 review: under a pathological storm of clears the LAST attempt
-    installs anyway — the entry stays visible to the next clear (which
-    releases it), instead of leaking an untracked persisted handle."""
-    from pyspark_coding_challenge_spark.llm import dedup as D
+def test_cached_build_epoch_is_per_app(spark, test_kind):
+    """r10 review: clearing one session's caches must NOT discard an
+    unrelated session's in-flight build — the epoch is per-application."""
+    from types import SimpleNamespace
 
-    app = spark.sparkContext.applicationId
-    cache: dict = {}
-    released, calls = [], []
+    from pyspark_coding_challenge_spark import session_state as SS
+
+    kind, _ = test_kind
+    other = SimpleNamespace(
+        sparkContext=SimpleNamespace(applicationId="some-other-app"))
+    calls = []
 
     def build():
         calls.append(1)
-        D.clear_pair_cache(spark)  # bump on EVERY attempt
+        SS.clear(spark, kind)  # bumps THIS session's epoch only
         return len(calls)
 
-    out = D._cached_build(cache, (app, "dir"), build,
-                          release=released.append)
+    out = SS.get_or_build(kind, other, "dir", build)
+    assert out == 1
+    assert SS._ENTRIES[(kind, "some-other-app", "dir")].value == 1
+    assert len(calls) == 1  # no discard: the clear was for a different app
+
+
+def test_cached_build_terminal_attempt_installs(spark, test_kind):
+    """r10 review: under a pathological storm of clears the LAST attempt
+    installs anyway — the entry stays visible to the next clear (which
+    releases it), instead of leaking an untracked persisted handle."""
+    from pyspark_coding_challenge_spark import session_state as SS
+
+    kind, released = test_kind
+    app = spark.sparkContext.applicationId
+    calls = []
+
+    def build():
+        calls.append(1)
+        SS.clear(spark, kind)  # bump on EVERY attempt
+        return len(calls)
+
+    out = SS.get_or_build(kind, spark, "dir", build)
     assert out == 3                     # three attempts, third installed
-    assert cache[(app, "dir")] == 3     # tracked => next clear releases it
+    assert SS._ENTRIES[(kind, app, "dir")].value == 3  # tracked
     assert released == [1, 2]           # earlier straddling builds freed
 
 
-def test_cached_build_forced_install_self_heals_on_next_get(spark):
+def test_cached_build_forced_install_self_heals_on_next_get(spark, test_kind):
     """r11 judge finding: the terminal forced install is possibly stale
     (its build read pre-clear state). The entry records the epoch it was
     built against, so the NEXT lookup detects the mismatch, releases the
     stale handle and rebuilds live — no reliance on a future
     clear_pair_cache."""
-    from pyspark_coding_challenge_spark.llm import dedup as D
+    from pyspark_coding_challenge_spark import session_state as SS
 
+    kind, released = test_kind
     app = spark.sparkContext.applicationId
-    cache: dict = {}
-    released, calls = [], []
+    calls = []
 
     def storm_build():
         calls.append(1)
-        D.clear_pair_cache(spark)  # bump on EVERY attempt
+        SS.clear(spark, kind)  # bump on EVERY attempt
         return ("stale", len(calls))
 
-    forced = D._cached_build(cache, (app, "dir"), storm_build,
-                             release=released.append)
+    forced = SS.get_or_build(kind, spark, "dir", storm_build)
     assert forced == ("stale", 3)  # terminal attempt force-installed
 
-    def clean_build():
-        return "fresh"
-
-    healed = D._cached_build(cache, (app, "dir"), clean_build,
-                             release=released.append)
+    healed = SS.get_or_build(kind, spark, "dir", lambda: "fresh")
     assert healed == "fresh"                  # stale entry NOT returned
-    assert cache[(app, "dir")] == "fresh"     # ...and replaced in place
+    assert SS._ENTRIES[(kind, app, "dir")].value == "fresh"  # replaced
     assert ("stale", 3) in released           # ...with its storage released
 
     # and a clean install is NOT invalidated by the next lookup
-    again = D._cached_build(cache, (app, "dir"),
-                            lambda: "rebuilt-too-eagerly",
-                            release=released.append)
+    again = SS.get_or_build(kind, spark, "dir",
+                            lambda: "rebuilt-too-eagerly")
     assert again == "fresh"
