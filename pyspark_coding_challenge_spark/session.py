@@ -14,6 +14,27 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Entries in Spark's JVM-wide LRU of Janino-compiled generated classes
+# (``CodeGenerator.cache``). Every operator is built-in Catalyst
+# expressions, so every plan runs as whole-stage codegen and each query is
+# a set of compiled classes. Spark's default of 100 entries is smaller than
+# one warm pass over the engine's queries, so the LRU evicted each class
+# before its next use and every warm query compiled again. Classes compiled
+# in the cold pass, then in each warm pass (scripts/codegen_probe.py, which
+# reads CodegenMetrics; 4-vCPU host), at the default cap -> with this cap
+# and the stage-id-free class names set in get_spark:
+#   - all 50 registered slugs at sf0.01: 3,015 then ~1,870 -> 1,656 then
+#     8-23 (with stage ids in the class names the cold pass needs 2,169);
+#   - the benchmark's corpus_refresh slugs: 288 then 204-207 -> 242 then
+#     0-6; events_pipeline: 114 then 74-91 -> 94 then 0.
+# 4096 holds the registry with room for the few classes whose code differs
+# on every call. Each cached class retains about 25 KB of heap (full
+# registry 272 -> 307 MB), paid only for classes actually compiled, never up
+# to the cap. Static conf: read once per JVM when CodeGenerator first
+# initialises, so it only takes effect when get_spark creates the session
+# (getOrCreate on an existing session ignores it, like spark.driver.memory).
+CODEGEN_CACHE_MAX_ENTRIES = 4096
+
 
 def _cpus_as_partitions() -> int:
     """SPARK_GRAFT_CPUS as a shuffle-partition count — read at CALL time
@@ -58,6 +79,17 @@ def get_spark(
         # Files: 128 MiB split targets keep scan partitions executor-friendly
         # at any SF; AQE coalesces the small end.
         .config("spark.sql.files.maxPartitionBytes", "134217728")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES))
+        # The cache is keyed by generated source, and by default each
+        # whole-stage class is named after its codegen stage id: a
+        # per-query counter whose values, under AQE, vary between runs of
+        # the same query. An unchanged stage then missed the cache under a
+        # new name (every class the corpus_refresh slugs recompiled in warm
+        # passes differed from a cached one only in that id), and equal
+        # stages of different queries could not share a class. Explain
+        # output keeps the ids; stack traces name the class
+        # GeneratedIterator.
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )

@@ -154,3 +154,37 @@ def test_stream_sweep_reports_a_child_that_died_mid_output(monkeypatch,
     out = capsys.readouterr()
     assert "Killed" in out.err
     assert out.out == ""
+
+
+def test_bench_headline_total_excludes_the_scale_arm():
+    """``bench.py``'s JSON line: ``value`` sums the registered slugs in
+    ``queries`` only; the row-multiplied scale arm is timed under its own
+    ``scale_arm`` key, so the headline total keeps one fixed query set.
+    ``partial`` marks a total that lost a registered slug, not a failed
+    scale-arm entry (no Spark: ``result_record`` is called directly)."""
+    spec = importlib.util.spec_from_file_location(
+        "bench", os.path.join(REPO, "bench.py"))
+    bench = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(bench)
+    assert [name for name, _ in bench._scale_arm_queries()] == [
+        "scale_shingle_hash"]
+    timings = {"dedup_exact": 1.25, "text_vocab_topn": 0.5,
+               "scale_shingle_hash": 2.0}
+    out = bench.result_record(timings, {"scale_shingle_hash"}, {}, "sf")
+    assert out == {
+        "metric": "headline_queries_wall", "value": 1.75, "unit": "sec",
+        "queries": {"dedup_exact": 1.25, "text_vocab_topn": 0.5},
+        "scale_arm": {"scale_shingle_hash": 2.0}, "sf": "sf"}
+
+    failed_arm = bench.result_record(
+        {**timings, "scale_shingle_hash": -1.0}, {"scale_shingle_hash"},
+        {"scale_shingle_hash": "boom"}, "sf")
+    assert failed_arm["value"] == 1.75
+    assert failed_arm["errors"] == {"scale_shingle_hash": "boom"}
+    assert "partial" not in failed_arm
+
+    failed_slug = bench.result_record(
+        {**timings, "text_vocab_topn": -1.0}, {"scale_shingle_hash"},
+        {"text_vocab_topn": "boom"}, "sf")
+    assert failed_slug["value"] == 1.25
+    assert failed_slug["partial"] is True
