@@ -52,7 +52,7 @@ from pyspark.sql import functions as F
 from pyspark_coding_challenge_spark import session_state
 from pyspark_coding_challenge_spark.streaming.windows import (
     _fresh_dirs,
-    _stream_shuffle_partitions,
+    _stream_confs,
 )
 
 #: leaf names inside an ingest destination directory
@@ -250,7 +250,7 @@ def ingest_documents(spark: SparkSession, src_dir: str, dest_dir: str,
             stream = reader.option("pathGlobFilter", DOCS_LEAF).parquet(src_dir)
     ck = os.path.join(dest_dir, "_checkpoint")
     with artifact_maintenance_lease(dest_dir, "ingest_documents"), \
-            _stream_shuffle_partitions(spark):
+            _stream_confs(spark):
         q = (
             stream.writeStream.foreachBatch(_write)
             .option("checkpointLocation", ck)

@@ -29,7 +29,13 @@ same operators: tumbling/sliding/session windows + stateful dedup.
 Scale notes: state is keyed by (window, key) and bounded by the watermark;
 shuffle partitioning is the normal groupBy hash. At 100 TB/day the file
 source becomes Kafka/Delta and the sink Delta/Iceberg; everything else is
-unchanged.
+unchanged. Every stream starts inside ``_stream_confs``, which pins the
+state partition count, the state-store provider and the checkpoint file
+manager. The engine's checkpoints are local directories it creates itself,
+so they rename through Hadoop ``FileSystem`` (one ``rename(2)``) instead of
+``FileContext``, whose link stats fork a ``readlink`` per file on a Hadoop
+without its native library; the ``chmod`` fork per created file remains
+(``scripts/spawn_probe.py`` counts both).
 """
 
 from __future__ import annotations
@@ -162,6 +168,41 @@ def _stream_state_provider() -> str | None:
     return os.environ["SPARK_GRAFT_STREAM_STATE_PROVIDER"].strip()
 
 
+# Checkpoint file manager of every stream the engine starts. Spark's default
+# renames through Hadoop FileContext, which stats both ends of each rename with
+# getFileLinkStatus; without Hadoop's native library (pip PySpark ships none)
+# the local filesystem forks `readlink` for each of those stats - 336 forks
+# per warm streaming_stateful_dedup call, 1,136 per stream-stream join. The
+# FileSystem-based manager renames with FileSystem.rename, one rename(2) on
+# local disk and no readlink. It is no weaker there: FileContext's local
+# overwrite-rename deletes the destination and then renames, while rename(2)
+# replaces it atomically. Hadoop's .crc files and Spark's state-file checksum
+# files are still written and verified. Every checkpoint the engine starts is
+# a local directory it creates itself (_fresh_dirs under
+# tempfile.gettempdir(), ingest's dest_dir/_checkpoint after os.makedirs),
+# which is why this is pinned here and not in get_spark, where an HDFS
+# checkpoint wants FileContext's atomic overwrite-rename. The `chmod` forks
+# stay: without native IO, Hadoop's setPermission always forks one per file
+# created, and that is the floor of this setting.
+_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def _pinned_confs() -> dict[str, str]:
+    """The session confs a stream captures at query start, as the engine
+    wants them for its own streams."""
+    confs = {
+        "spark.sql.shuffle.partitions": str(_stream_state_partitions()),
+        "spark.sql.streaming.checkpointFileManagerClass": _CHECKPOINT_MANAGER,
+    }
+    provider = _stream_state_provider()
+    if provider is not None:
+        confs[_PROVIDER_CONF] = provider
+    return confs
+
+
 # Session-wide confs are process-global per SparkSession: the pin below is
 # REF-COUNTED under a lock (r10 review finding — the naive save/restore was
 # not reentrant: two overlapping streaming starts on one session had the
@@ -169,72 +210,54 @@ def _stream_state_provider() -> str | None:
 # it were the user's setting and leaking 8 shuffle partitions into every
 # later batch query). First enter saves+sets, last exit restores; nested
 # enters just hold the pin (the pinned values are identical process-wide:
-# both knobs are env-derived).
+# all are env-derived or constant).
 #
 # Keyed by the SESSION OBJECT, not applicationId (r11 advisor finding):
-# spark.sql.shuffle.partitions and the provider conf are per-SparkSession,
-# and spark.newSession() shares one applicationId across sessions — an
-# app-keyed pin would treat session B's first enter as a nested enter on
-# session A's record, never pinning B's confs and restoring A's saved value
-# onto whichever session exits last. The record holds a strong reference to
-# the session for its lifetime so id() cannot be reused while pinned.
+# the pinned confs are per-SparkSession, and spark.newSession() shares one
+# applicationId across sessions — an app-keyed pin would treat session B's
+# first enter as a nested enter on session A's record, never pinning B's
+# confs and restoring A's saved value onto whichever session exits last.
+# The record holds a strong reference to the session for its lifetime so
+# id() cannot be reused while pinned.
 _CONF_PIN_LOCK = threading.RLock()
 _CONF_PIN_STATE: dict[int, dict] = {}  # id(SparkSession) -> pin record
 
 
-class _stream_shuffle_partitions:
-    """Temporarily pin the streaming state confs while a query starts —
-    shuffle partitions, and the state-store provider when
-    ``SPARK_GRAFT_STREAM_STATE_PROVIDER`` selects one (both are captured
-    at query start; batch queries planned after restore are unaffected)."""
+class _stream_confs:
+    """Pin the confs a stream captures at query start (``_pinned_confs``)
+    while the query starts and runs; batch queries planned after the
+    outermost exit see the session's own values again."""
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
 
     def __enter__(self):
         with _CONF_PIN_LOCK:
-            key = id(self.spark)
-            rec = _CONF_PIN_STATE.get(key)
+            rec = _CONF_PIN_STATE.get(id(self.spark))
             if rec is not None:
                 rec["depth"] += 1
                 return
-            rec = {"depth": 1, "session": self.spark,
-                   "saved": self.spark.conf.get(
-                       "spark.sql.shuffle.partitions"),
-                   "saved_provider": None, "set_provider": False}
-            self.spark.conf.set(
-                "spark.sql.shuffle.partitions",
-                str(_stream_state_partitions()),
-            )
-            provider = _stream_state_provider()
-            if provider is not None:
-                try:
-                    rec["saved_provider"] = self.spark.conf.get(
-                        _PROVIDER_CONF)
-                except Exception:
-                    rec["saved_provider"] = None
-                self.spark.conf.set(_PROVIDER_CONF, provider)
-                rec["set_provider"] = True
-            _CONF_PIN_STATE[key] = rec
+            confs = _pinned_confs()
+            saved = {k: self.spark.conf.get(k, None) for k in confs}
+            for k, v in confs.items():
+                self.spark.conf.set(k, v)
+            _CONF_PIN_STATE[id(self.spark)] = {
+                "depth": 1, "session": self.spark, "saved": saved}
 
     def __exit__(self, *exc):
         with _CONF_PIN_LOCK:
-            key = id(self.spark)
-            rec = _CONF_PIN_STATE.get(key)
+            rec = _CONF_PIN_STATE.get(id(self.spark))
             if rec is None:
                 return  # unbalanced exit; nothing to restore
             rec["depth"] -= 1
             if rec["depth"] > 0:
                 return
-            del _CONF_PIN_STATE[key]
-            self.spark.conf.set(
-                "spark.sql.shuffle.partitions", rec["saved"])
-            if rec["set_provider"]:
-                if rec["saved_provider"] is not None:
-                    self.spark.conf.set(
-                        _PROVIDER_CONF, rec["saved_provider"])
+            del _CONF_PIN_STATE[id(self.spark)]
+            for k, v in rec["saved"].items():
+                if v is None:
+                    self.spark.conf.unset(k)
                 else:
-                    self.spark.conf.unset(_PROVIDER_CONF)
+                    self.spark.conf.set(k, v)
 
 
 def _read_back(spark: SparkSession, sink: str, schema) -> DataFrame:
@@ -261,7 +284,7 @@ def run_to_parquet(stream: DataFrame, spark: SparkSession, slug: str) -> DataFra
     back as an empty frame with the stream's schema instead of letting
     spark.read.parquet fail schema inference."""
     sink, ck = _fresh_dirs(slug)
-    with _stream_shuffle_partitions(spark):
+    with _stream_confs(spark):
         q = (
             stream.writeStream.format("parquet")
             .option("path", sink)
@@ -291,7 +314,7 @@ def run_update_to_parquet(stream: DataFrame, spark: SparkSession, slug: str) -> 
     def _append(batch_df: DataFrame, _batch_id: int) -> None:
         batch_df.write.mode("append").parquet(sink)
 
-    with _stream_shuffle_partitions(spark):
+    with _stream_confs(spark):
         q = (
             stream.writeStream.foreachBatch(_append)
             .option("checkpointLocation", ck)

@@ -215,18 +215,23 @@ def _drive(spark, stream, slug: str) -> tuple[list[dict], int, str, str]:
     state data source). The emitted total is each operator's own
     no-eviction baseline — a store that never evicted would hold ~every
     emitted key/window at the end."""
+    from pyspark_coding_challenge_spark.streaming.windows import _stream_confs
+
     sink = f"{WORK}/{slug}/sink"
     ck = f"{WORK}/{slug}/ck"
     shutil.rmtree(f"{WORK}/{slug}", ignore_errors=True)
-    q = (
-        stream.writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    # the engine's stream confs (state partitions, state-store provider,
+    # checkpoint file manager), so the probe measures the streams it runs
+    with _stream_confs(spark):
+        q = (
+            stream.writeStream.format("parquet")
+            .option("path", sink)
+            .option("checkpointLocation", ck)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
     series = []
     # recentProgress retains only the last ~spark.sql.streaming
     # .numRecentProgressUpdates entries (default 100) — raised below in
@@ -494,18 +499,11 @@ def main() -> None:
 
     spark = get_spark(app_name="stream_state_probe", master="local[32]")
     spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8"),
-    )
     from pyspark_coding_challenge_spark.streaming.windows import (
-        _PROVIDER_CONF,
         _stream_state_provider,
     )
 
     provider = _stream_state_provider()
-    if provider is not None:
-        spark.conf.set(_PROVIDER_CONF, provider)
     # keep ALL batch progress entries (default retention is 100): a finer
     # N_FILES must never silently truncate the metric series
     spark.conf.set(

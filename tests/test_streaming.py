@@ -4,7 +4,10 @@ multimodal decode stub contract."""
 
 from __future__ import annotations
 
+import json
 import os
+import subprocess
+import sys
 import uuid
 
 import pandas as pd
@@ -262,16 +265,16 @@ def test_stream_conf_pin_is_reentrant(spark):
     have the inner save capture the outer pin — the ref-counted pin
     restores the ORIGINAL conf only at the outermost exit."""
     from pyspark_coding_challenge_spark.streaming.windows import (
-        _stream_shuffle_partitions,
+        _stream_confs,
         _stream_state_partitions,
     )
 
     key = "spark.sql.shuffle.partitions"
     orig = spark.conf.get(key)
     pinned = str(_stream_state_partitions())
-    with _stream_shuffle_partitions(spark):
+    with _stream_confs(spark):
         assert spark.conf.get(key) == pinned
-        with _stream_shuffle_partitions(spark):
+        with _stream_confs(spark):
             assert spark.conf.get(key) == pinned
         # inner exit must NOT restore yet (the old bug restored here,
         # then the outer exit re-set the PIN as if it were the original)
@@ -288,7 +291,7 @@ def test_stream_conf_pin_is_per_session_not_per_app(spark):
     enter on A's record — B was never pinned, and A's saved value landed
     on whichever session exited last."""
     from pyspark_coding_challenge_spark.streaming.windows import (
-        _stream_shuffle_partitions,
+        _stream_confs,
         _stream_state_partitions,
     )
 
@@ -300,13 +303,13 @@ def test_stream_conf_pin_is_per_session_not_per_app(spark):
     try:
         spark.conf.set(key, "17")
         s2.conf.set(key, "23")
-        with _stream_shuffle_partitions(spark):
+        with _stream_confs(spark):
             assert spark.conf.get(key) == pinned
             # B's first enter must PIN B (not count as a nested A enter)
-            with _stream_shuffle_partitions(s2):
+            with _stream_confs(s2):
                 assert s2.conf.get(key) == pinned
                 # nested enter on A while B is pinned: depths independent
-                with _stream_shuffle_partitions(spark):
+                with _stream_confs(spark):
                     assert spark.conf.get(key) == pinned
                 assert spark.conf.get(key) == pinned  # still held by outer
             # B's exit restores B's OWN saved value, leaves A pinned
@@ -316,3 +319,96 @@ def test_stream_conf_pin_is_per_session_not_per_app(spark):
         assert s2.conf.get(key) == "23"
     finally:
         spark.conf.set(key, orig_a)
+
+
+def test_stream_conf_pin_sets_the_checkpoint_manager(spark):
+    """Streams the engine starts rename their checkpoint files with the
+    FileSystem-based manager: the pin sets it, a nested exit keeps it, and
+    the outermost exit unsets it or gives back a caller's own value, on
+    each of two sessions that share one application."""
+    from pyspark_coding_challenge_spark.streaming.windows import (
+        _CHECKPOINT_MANAGER,
+        _stream_confs,
+    )
+
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    own = ("org.apache.spark.sql.execution.streaming.checkpointing."
+           "FileContextBasedCheckpointFileManager")
+    a, b = spark.newSession(), spark.newSession()
+    b.conf.set(key, own)
+    assert a.conf.get(key, None) is None
+    with _stream_confs(a):
+        assert a.conf.get(key) == _CHECKPOINT_MANAGER
+        with _stream_confs(b):
+            assert b.conf.get(key) == _CHECKPOINT_MANAGER
+            with _stream_confs(a):
+                assert a.conf.get(key) == _CHECKPOINT_MANAGER
+            assert a.conf.get(key) == _CHECKPOINT_MANAGER  # held by outer
+        assert b.conf.get(key) == own
+        assert a.conf.get(key) == _CHECKPOINT_MANAGER
+    assert a.conf.get(key, None) is None
+    assert b.conf.get(key) == own
+
+
+# Runs in a fresh JVM: the JVM resolves `readlink` through the PATH it was
+# started with, so the logging shims must be first on PATH before it starts.
+_SPAWN_CHILD = """
+import json, sys
+from pyspark_coding_challenge_spark import registry
+from pyspark_coding_challenge_spark.session import get_spark
+
+sf_dir, log = sys.argv[1], sys.argv[2]
+
+def readlinks():
+    with open(log) as f:
+        return sum(1 for line in f if line.startswith("readlink "))
+
+spark = get_spark(app_name="checkpoint-spawns", master="local[2]", shuffle_partitions=4)
+spark.sparkContext.setLogLevel("ERROR")
+dedup = registry.queries()["streaming_stateful_dedup"]
+counts = []
+for _ in range(2):
+    open(log, "a").close()
+    n0 = readlinks()
+    dedup(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    counts.append(readlinks() - n0)
+print(json.dumps(counts))
+spark.stop()
+"""
+
+
+def test_warm_stream_forks_no_readlink(tmp_path):
+    """Run ``streaming_stateful_dedup`` twice in a fresh JVM whose PATH
+    starts with logging shims for ``readlink`` and ``chmod`` (they append
+    their argv to a log, then exec the real binary), and assert that the
+    second call forks no ``readlink``.
+
+    With Spark's default FileContext-based checkpoint manager this fails:
+    every checkpoint rename stats both of its ends through
+    ``getFileLinkStatus``, which without Hadoop's native library forks
+    ``readlink``: 336 times on each of the two calls, measured."""
+    import importlib.util
+
+    from tests.test_session import REPO, SF_DIR
+
+    spec = importlib.util.spec_from_file_location(
+        "spawn_probe", os.path.join(REPO, "scripts", "spawn_probe.py"))
+    probe = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(probe)
+    log = str(tmp_path / "spawns.log")
+    path = probe.write_shims(str(tmp_path / "shims"), log, ("readlink", "chmod"))
+    env = dict(os.environ, PATH=path, SPARK_GRAFT_DRIVER_MEM="1g",
+               PYTHONPATH=os.pathsep.join(
+                   p for p in (REPO, os.environ.get("PYTHONPATH")) if p))
+    env.pop("PYSPARK_SUBMIT_ARGS", None)
+    proc = subprocess.run(
+        [sys.executable, "-c", _SPAWN_CHILD, SF_DIR, log],
+        cwd=REPO, env=env, capture_output=True, text=True, timeout=600)
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    first, second = json.loads(proc.stdout.strip().splitlines()[-1])
+    with open(log) as f:
+        # the shims ran, or zero readlinks shows nothing
+        assert any(line.startswith("chmod ") for line in f)
+    assert second == 0, (
+        f"a warm streaming call forked readlink {second} times "
+        f"(first call: {first})")
