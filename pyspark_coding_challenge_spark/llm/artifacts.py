@@ -1,59 +1,75 @@
 """Cross-session persisted artifacts for the expensive relations.
 
-The three materialize-once relations — the verified near-dup pair graph
-(``dedup.verified_pairs_for_dir``), the shared-span relation
-(``text.shared_span_starts_for_dir``), and the trained IVF quantizer
-(``similarity.ivf_centroids_for_dir``) — were session-scoped ``persist``
-caches through round 5: correct within a job, but every NEW session repaid
-the full build chain (10-16 s cold vs 0.14 s warm at sf0.1 per
-BENCH_isolated_r5.json; hours at 100 TB). This module is the production
-shape their docstrings promised: ``materialize_*`` lands the relation as a
-parquet table under an artifact directory, ``load_*`` reads it back in ANY
-later session and seeds the same in-session cache the compute path uses —
-so every consumer (``dedup_clusters``, ``llm_corpus_curation``, the span
-kernels, IVF search) transparently runs from the artifact with ZERO
-build-chain jobs.
+The engine keeps fourteen relations as parquet artifacts under one
+artifact directory, so a cold session, a restart or a refresh reuses
+stored state instead of repaying the build chain (10-16 s cold vs 0.14 s
+warm at sf0.1 per BENCH_isolated_r5.json; hours at 100 TB). Each artifact
+is declared once, as an ``ArtifactSpec`` in the ``ARTIFACTS`` table keyed
+by its ``*_NAME``: its builder params, the corpus side its lineage digest
+is taken from, how it is built and written, how a read is projected,
+spread and persisted, the gate pairing it with its sibling artifacts, and
+how ``load_all`` treats it. Three generic functions drive the table:
+
+- ``materialize(spark, sf_dir, artifact_dir, name, digest=None)`` builds
+  one artifact and lands it with its meta sidecar;
+- ``load(spark, sf_dir, artifact_dir, name)`` reads it back in any later
+  session and seeds the session entry the compute path uses, so every
+  consumer (``dedup_clusters``, ``llm_corpus_curation``, the span
+  kernels, IVF and PQ search) runs from the artifact with ZERO
+  build-chain jobs;
+- ``seed_from_env(spark, sf_dir, name)`` does the same on a session-entry
+  miss when ``SPARK_GRAFT_ARTIFACT_DIR`` is set, so cold sessions (the
+  bench, production restarts) seed without an explicit ``load``.
+
+``materialize_all`` and ``load_all`` loop over the table.
 
 Provenance: each artifact carries a ``_artifact_meta.json`` sidecar (the
 leading underscore makes Spark's parquet reader ignore it) recording the
-absolute source ``sf_dir`` and the builder parameters that shape the
-relation's semantics. ``load_*`` refuses an artifact built from a different
-corpus directory or with different parameters — silently joining last
-month's pair graph against this month's corpus is the classic stale-index
-bug, and it must fail loudly.
+absolute source ``sf_dir``, the builder params that shape the relation's
+semantics, and its lineage: the snapshot digest of the corpus it was
+built from (``patched_from`` names the snapshot a refresh patched it
+from). ``load`` raises ValueError for any artifact that cannot serve —
+built from another corpus directory or with other params, failing its
+pairing gate, or unreadable — since silently joining last month's pair
+graph against this month's corpus is the classic stale-index bug, and it
+must fail loudly. ``seed_from_env`` skips such an artifact with a
+``warnings.warn`` and the builder builds normally: the knob is ambient
+config that may legitimately point at an artifact for another sf_dir,
+but silence would mask a stale index.
 
-Automatic seeding (r6 verdict gap #2): when ``SPARK_GRAFT_ARTIFACT_DIR``
-is set, the ``*_for_dir`` builders consult it ON CACHE MISS via the
-``*_from_env`` helpers below — a present, provenance-VALID artifact seeds
-the session cache with zero build-chain jobs, so cold sessions (bench,
-driver, production restarts) run from the artifact without any explicit
-``load_*`` call. A present-but-mismatched artifact (different corpus or
-params) is skipped with a ``warnings.warn`` and the builder builds
-normally: the knob is ambient config that may legitimately point at an
-artifact for a different sf_dir, but silence would mask a stale index.
+The incremental updaters below patch the stored artifacts from a snapshot
+diff when their lineage matches the old snapshot, and fall back to
+``materialize`` otherwise. ``compact_artifacts`` bounds their part-file
+growth.
 
-Session entries live in ``session_state``: the ``*_from_env`` helpers run
-inside the build of the entry they seed (they install nothing themselves,
-only record the seed path on the entry being built), and the explicit
-``load_*`` functions seed through ``session_state.install``, which
-releases the entry it replaces. No module here touches another module's
-cache or lock.
+Session entries live in ``session_state``: ``seed_from_env`` runs inside
+the build of the entry it seeds (it installs nothing itself, only records
+the seed path on the entry being built), and ``load`` seeds through
+``session_state.install``, which releases the entry it replaces. No
+module here touches another module's cache or lock.
 """
 
 from __future__ import annotations
 
 import contextlib
+import importlib
 import json
 import os
 import shutil
 import threading
 import time
 import warnings
+from dataclasses import dataclass
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyspark_coding_challenge_spark import session_state
+from pyspark_coding_challenge_spark.sources.readers import (
+    read_table,
+    rebalance_for_compute,
+)
 
 PAIRS_NAME = "verified_pairs"
 SPANS_NAME = "shared_spans"
@@ -90,14 +106,8 @@ _META_FILE = "_artifact_meta.json"
 def _seeded_from(spark: SparkSession, sf_dir: str, name: str,
                  path: str) -> bool:
     """True when this session's ``name`` entry for ``sf_dir`` was seeded
-    from ``path``. materialize_* consults this to avoid the
-    read-your-own-writes trap (r6): after load_*, the cached
-    relation READS the artifact path, and writing mode("overwrite") to a
-    path being read raises (or worse, rewrites from stale state). A
-    materialize targeting the very path the cache was loaded from is a
-    no-op — the bytes are already there and meta-verified. Clearing the
-    entry forgets the path (r7), so a materialize after a
-    clear rebuilds."""
+    from ``path`` — ``materialize``'s seeded-path guard against the
+    read-your-own-writes trap (r6)."""
     return session_state.loaded_from(name, spark, sf_dir) == \
         os.path.abspath(path)
 
@@ -147,13 +157,6 @@ def _lineage_gate(path: str, sf_dir: str, params: dict,
         return str(exc)
 
 
-# A refresh whose churn rivals the corpus should full-rebuild, not patch:
-# the patch does strictly more work per churned doc than the clean full
-# chain (band-join against the stored index, splice anti-joins, repair
-# probes), and the counted broadcast fallbacks in dedup only keep it
-# CORRECT at that size, not fast. The lineage gate checks digest IDENTITY;
-# this gate checks churn SIZE (r9 judge finding #2 — "one comparison away
-# from a principled fallback"). Fraction of the OLD snapshot's doc count.
 def _env_float(name: str, default: str) -> float:
     """Parse a float knob from the environment, failing LOUDLY on a typo
     (the max-pixels lesson, r11 advisory: a malformed config value must
@@ -177,6 +180,13 @@ def _env_float(name: str, default: str) -> float:
     return val
 
 
+# A refresh whose churn rivals the corpus should full-rebuild, not patch:
+# the patch does strictly more work per churned doc than the clean full
+# chain (band-join against the stored index, splice anti-joins, repair
+# probes), and the counted broadcast fallbacks in dedup only keep it
+# CORRECT at that size, not fast. The lineage gate checks digest IDENTITY;
+# this gate checks churn SIZE (r9 judge finding #2 — "one comparison away
+# from a principled fallback"). Fraction of the OLD snapshot's doc count.
 INCR_MAX_CHURN_FRAC = _env_float("SPARK_GRAFT_INCR_MAX_CHURN_FRAC", "0.5")
 
 # The quantizer carry gates are stricter than the row-patch gate above:
@@ -430,8 +440,6 @@ def corpus_digest(spark: SparkSession, sf_dir: str) -> dict:
     snapshot it patched FROM; a mismatch forces full rebuild). One skinny
     aggregation scan; the collect is a bounded 1-row scalar (repo
     convention: only bounded scalar collects, all disclosed)."""
-    from pyspark_coding_challenge_spark.sources.readers import read_table
-
     return digest_of_digests(
         doc_digest_relation(read_table(spark, sf_dir, "documents"))
     )
@@ -460,8 +468,6 @@ def embeddings_digest(spark: SparkSession, sf_dir: str) -> dict:
     ``corpus_digest``'s embeddings-side twin, folding (vec_id, vec-digest)
     pairs with the identical arithmetic. The lineage key the centroid
     refresh checks before trusting a stored quantizer."""
-    from pyspark_coding_challenge_spark.sources.readers import read_table
-
     return digest_of_digests(
         vec_digest_relation(read_table(spark, sf_dir, "embeddings")),
         id_col="vec_id",
@@ -551,7 +557,7 @@ PQ_BUCKET_WIDTH = 1 << 16
 # near-corpus-wide dynamic overwrite (and the r14 probe measured the
 # partitioned full WRITE itself at ~3.3x the unpartitioned one), strictly
 # worse than the full rebuild it approximates. Past this fraction of the
-# live buckets, fall back to materialize_pq_codes.
+# live buckets, fall back to the full rebuild.
 PQ_PATCH_MAX_BUCKET_FRAC = _env_float(
     "SPARK_GRAFT_PQ_PATCH_MAX_BUCKET_FRAC", "0.5"
 )
@@ -576,51 +582,6 @@ def _pqcodes_params() -> dict:
     return {**_pqcb_params(),
             "encoding": "argmin-l2 per residual subspace, ties to lowest lid",
             "layout": f"pbucket=vec_id div {PQ_BUCKET_WIDTH}"}
-
-
-def _codebook_fold(cb: DataFrame) -> str:
-    """Order-independent content fold of a PQ codebook relation — the
-    identity key pairing a ``pq_codes`` artifact with the EXACT
-    sub-quantizers it was encoded under (``_centroid_fold`` keyed by
-    (sub, lid) instead of lid). Retrained codebooks change the fold, so
-    stale codes fail loudly instead of silently ADC-scoring against the
-    wrong LUT rows. Bounded scalar collect over m x k rows."""
-    from pyspark_coding_challenge_spark.llm.dedup import md5_fold60
-
-    row = (
-        cb.select(
-            md5_fold60(
-                F.concat_ws(":", F.col("sub").cast("string"),
-                            F.col("lid").cast("string"),
-                            F.to_json(F.struct(F.col("cvec").alias("c"))))
-            ).alias("h")
-        )
-        .agg(F.sum(F.col("h").cast("decimal(38,0)")).cast("string").alias("s"))
-        .collect()[0]
-    )
-    return row["s"] if row["s"] is not None else "0"
-
-
-def _centroid_fold(cent: DataFrame) -> str:
-    """Order-independent content fold of a centroid relation — the
-    identity key pairing an ``ivf_assignments`` artifact with the EXACT
-    quantizer it was assigned under (same bytes => same doubles => same
-    to_json => same fold). A retrained quantizer changes the fold, so
-    stale assignments fail loudly instead of silently mis-bucketing the
-    probe join. Bounded scalar collect over n_lists rows."""
-    from pyspark_coding_challenge_spark.llm.dedup import md5_fold60
-
-    row = (
-        cent.select(
-            md5_fold60(
-                F.concat_ws(":", F.col("lid").cast("string"),
-                            F.to_json(F.struct(F.col("cvec").alias("c"))))
-            ).alias("h")
-        )
-        .agg(F.sum(F.col("h").cast("decimal(38,0)")).cast("string").alias("s"))
-        .collect()[0]
-    )
-    return row["s"] if row["s"] is not None else "0"
 
 
 def _spine_params() -> dict:
@@ -652,9 +613,43 @@ def _signals_params() -> dict:
     }
 
 
-# ---------------------------------------------------------------------------
-# env-knob seeding (builders call these on cache miss, under their lock)
-# ---------------------------------------------------------------------------
+def _content_fold(df: DataFrame, *keys: str) -> str:
+    """Order-independent content fold of a trained-state relation (a
+    ``cvec`` column keyed by ``keys``): the identity key that pairs an
+    artifact with the EXACT state it was made under — assignments and
+    residual PQ state with their centroids (``lid``), codes with their
+    codebooks (``sub, lid``). Same bytes => same doubles => same to_json
+    => same fold, so retrained state changes the fold and a stale pairing
+    fails loudly instead of silently mis-bucketing the probe join or
+    ADC-scoring against the wrong LUT rows. Bounded scalar collect over
+    the (n_lists or m x k row) trained relation."""
+    from pyspark_coding_challenge_spark.llm.dedup import md5_fold60
+
+    parts = [F.col(k).cast("string") for k in keys]
+    row = (
+        df.select(
+            md5_fold60(
+                F.concat_ws(":", *parts,
+                            F.to_json(F.struct(F.col("cvec").alias("c"))))
+            ).alias("h")
+        )
+        .agg(F.sum(F.col("h").cast("decimal(38,0)")).cast("string").alias("s"))
+        .collect()[0]
+    )
+    return row["s"] if row["s"] is not None else "0"
+
+
+#: the key columns each trained-state artifact is content-folded by
+_FOLD_KEYS = {CENTROIDS_NAME: ("lid",), PQCB_NAME: ("sub", "lid")}
+
+
+def _embedding_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, emb array<double>) over the corpus embeddings, spread for
+    the per-row vector kernels (assignment, encoding, quantization gaps)."""
+    return rebalance_for_compute(
+        read_table(spark, sf_dir, "embeddings"), "vec_id"
+    ).select("vec_id", F.col("embedding").cast("array<double>").alias("emb"))
+
 
 def _spread(df: DataFrame, key: str | None) -> DataFrame:
     """Re-spread an artifact read across the session's parallelism BEFORE
@@ -665,685 +660,207 @@ def _spread(df: DataFrame, key: str | None) -> DataFrame:
     hand-rolled unconditional repartition would ALSO shuffle a
     production-scale artifact whose scan is already wide — the shared
     helper no-ops in that case)."""
-    if key is None:
-        return df
-    from pyspark_coding_challenge_spark.sources.readers import rebalance_for_compute
-
-    return rebalance_for_compute(df, key)
+    return df if key is None else rebalance_for_compute(df, key)
 
 
-def _from_env(spark: SparkSession, sf_dir: str, name: str, params: dict,
-              persist: bool = True, spread_key: str | None = None) -> DataFrame | None:
-    """Read ``$SPARK_GRAFT_ARTIFACT_DIR/<name>`` if present AND
-    provenance-valid for (sf_dir, params); None otherwise (with a warning
-    when the artifact exists but mismatches). The caller — the build of a
-    ``*_for_dir`` session entry — installs the returned handle; this
-    function only reads, persists, and records the path on the entry being
-    built, for the materialize read-your-own-writes guard."""
-    base = os.environ.get(ENV_ARTIFACT_DIR)
-    if not base:
-        return None
-    path = os.path.join(base, name)
-    if not os.path.exists(os.path.join(path, _META_FILE)):
-        return None
-    try:
-        _check_meta(path, sf_dir, params)
-        # the parquet read resolves its schema EAGERLY — a valid meta
-        # sidecar over deleted/corrupt parquet (partial cleanup, rsync)
-        # raises AnalysisException here, and an ambient seeding knob must
-        # degrade to a normal build, never crash the build (r7)
-        df = _spread(spark.read.parquet(path), spread_key)
-    except ValueError as exc:
-        warnings.warn(f"ignoring {ENV_ARTIFACT_DIR} artifact: {exc}")
-        return None
-    except Exception as exc:  # unreadable artifact: warn and rebuild
-        warnings.warn(f"ignoring unreadable {ENV_ARTIFACT_DIR} artifact "
-                      f"at {path}: {exc}")
-        return None
-    if persist:
-        df = df.persist()
-    session_state.record_seed(name, spark, sf_dir, path)
-    return df
-
-
-def pairs_from_env(spark: SparkSession, sf_dir: str) -> DataFrame | None:
-    return _from_env(spark, sf_dir, PAIRS_NAME, _pairs_params(),
-                     spread_key="doc_a")
-
-
-def spans_from_env(spark: SparkSession, sf_dir: str) -> DataFrame | None:
-    df = _from_env(spark, sf_dir, SPANS_NAME, _spans_params(),
-                   spread_key="doc_id", persist=False)
-    if df is None:
-        return None
-    # the session contract stays (doc_id, i); the artifact's h column is
-    # refresh-time state (the flipped-sharedness delete handle), not a
-    # query column. Project BEFORE persisting so the cached relation
-    # doesn't hold the wide form.
-    return df.select("doc_id", "i").persist()
-
-
-def centroids_from_env(spark: SparkSession, sf_dir: str) -> DataFrame | None:
-    # n_lists rows — lazily re-read per use like load_ivf_centroids, no persist
-    return _from_env(spark, sf_dir, CENTROIDS_NAME, _centroid_params(),
-                     persist=False)
-
-
-def spine_from_env(spark: SparkSession, sf_dir: str) -> DataFrame | None:
-    return _from_env(spark, sf_dir, SPINE_NAME, _spine_params(),
-                     spread_key="doc_id")
-
-
-def signals_from_env(spark: SparkSession, sf_dir: str) -> DataFrame | None:
-    return _from_env(spark, sf_dir, SIGNALS_NAME, _signals_params(),
-                     spread_key="doc_id")
-
-
-def bands_from_env(spark: SparkSession, sf_dir: str) -> DataFrame | None:
-    return _from_env(spark, sf_dir, BANDS_NAME, _bands_params(),
-                     spread_key="doc_id")
-
-
-def cc_from_env(spark: SparkSession, sf_dir: str) -> DataFrame | None:
-    return _from_env(spark, sf_dir, CC_NAME, _cc_params(),
-                     spread_key="node")
+def _llm(module: str):
+    """A sibling ``llm`` module, imported at call time (they import this
+    one)."""
+    return importlib.import_module(f"pyspark_coding_challenge_spark.llm.{module}")
 
 
 # ---------------------------------------------------------------------------
-# verified near-dup pair graph
+# the artifact table
 # ---------------------------------------------------------------------------
+# Hooks take (spark, sf_dir, path, ...) where ``path`` is the artifact's own
+# directory; sibling artifacts live next to it.
 
-def materialize_pairs(spark: SparkSession, sf_dir: str, artifact_dir: str,
-                      digest: dict | None = None) -> str:
-    """Build (or reuse the session cache of) the verified pair graph and
-    land it as parquet. Pairs-only (two ids + two doubles), so the artifact
-    is orders of magnitude smaller than the corpus. Returns the path.
-
-    ``digest``: precomputed ``corpus_digest(spark, sf_dir)`` — pass it when
-    landing several lineage-carrying artifacts of the same corpus
-    (``materialize_all``, the full-rebuild fallback) so the digest scan
-    runs once, not once per artifact (r8 review finding).
-
-    Crash-window note (applies to every materialize_*): ``mode("overwrite")``
-    removes the whole directory INCLUDING the old meta sidecar before any
-    write (execution-verified), so a crash between the parquet write and
-    ``_write_meta`` leaves parquet-without-meta — ``_check_meta`` then
-    fails loudly and the artifact rebuilds; stale-meta-over-new-bytes
-    cannot occur."""
-    from pyspark_coding_challenge_spark.llm.dedup import verified_pairs_for_dir
-
-    path = os.path.join(artifact_dir, PAIRS_NAME)
-    if _seeded_from(spark, sf_dir, PAIRS_NAME, path):
-        return path  # cache was seeded FROM this path — bytes already there
-    df = verified_pairs_for_dir(spark, sf_dir)
-    # the builder itself may JUST have seeded from $SPARK_GRAFT_ARTIFACT_DIR
-    # == this very path (r7 review finding, execution-confirmed): re-check
-    # AFTER it runs, or the overwrite below deletes the parquet it reads
-    # and leaves the artifact dir empty
-    if _seeded_from(spark, sf_dir, PAIRS_NAME, path):
-        return path
-    df.write.mode("overwrite").parquet(path)
-    _write_meta(path, sf_dir, _pairs_params(),
-                lineage={"snapshot": digest or corpus_digest(spark, sf_dir),
-                         "patched_from": None})
-    return path
-
-
-# ---------------------------------------------------------------------------
-# banded index (the incremental-refresh join target)
-# ---------------------------------------------------------------------------
-
-def materialize_bands(spark: SparkSession, sf_dir: str, artifact_dir: str,
-                      digest: dict | None = None) -> str:
-    """Land the (doc_id, band, bucket) banded index — the relation a churn
-    shard band-joins against at refresh time (``update_pairs_incremental``).
-    Shares the session's one banding pass with the pair-graph build
-    (``dedup.banded_index_for_dir``), so materializing both costs one
-    shingle->minhash chain. Thin: N_BANDS rows of three ints per doc.
-    ``digest``: see ``materialize_pairs``."""
-    from pyspark_coding_challenge_spark.llm.dedup import banded_index_for_dir
-
-    path = os.path.join(artifact_dir, BANDS_NAME)
-    if _seeded_from(spark, sf_dir, BANDS_NAME, path):
-        return path
-    df = banded_index_for_dir(spark, sf_dir)
-    if _seeded_from(spark, sf_dir, BANDS_NAME, path):
-        return path  # builder env-seeded from this path — see materialize_pairs
-    df.select("doc_id", "band", "bucket").write.mode("overwrite").parquet(path)
-    _write_meta(path, sf_dir, _bands_params(),
-                lineage={"snapshot": digest or corpus_digest(spark, sf_dir),
-                         "patched_from": None})
-    return path
+@dataclass(frozen=True)
+class ArtifactSpec:
+    """One artifact: how ``materialize`` builds and writes it, how ``load``
+    and ``seed_from_env`` read and check it, and how ``load_all`` treats
+    it. An artifact whose name is a ``session_state`` kind seeds that
+    session entry; the others are refresh-time state only."""
+    #: the builder params the meta sidecar records and every read checks
+    params: Callable[[], dict]
+    #: the corpus table whose snapshot digest is the artifact's lineage
+    side: str
+    #: (spark, sf_dir, path, digest) -> the relation to write, or None
+    #: when ``write`` builds it itself
+    build: Callable | None = None
+    #: (spark, sf_dir, path, built, digest) -> extra lineage fields, for an
+    #: artifact whose write is not "write the built relation"
+    write: Callable | None = None
+    #: materialize is a no-op when the stored lineage already matches
+    #: this corpus digest (the costly rebuilds without a session entry)
+    reuse_current: bool = False
+    #: key a read is re-spread by (``_spread``), and whether it persists
+    spread_key: str | None = None
+    persist: bool = True
+    #: read projection: drops refresh-time columns the session never reads
+    columns: tuple[str, ...] | None = None
+    #: pairing gate run on every read, (spark, sf_dir, path, df) -> extra
+    #: fields of the session value ``(df, *extra)``; raises ValueError
+    gate: Callable | None = None
+    #: the session value built from the read relation (default: itself)
+    session: Callable | None = None
+    #: load_all: absence is configuration, not an error (returns None)
+    optional: bool = False
+    #: load_all: warn with this consequence and return None when the
+    #: artifact cannot serve, instead of raising
+    fallback: str | None = None
+    #: load_all: served only when this sibling loaded
+    needs: str | None = None
 
 
-def _install_persisted(name: str, spark: SparkSession, sf_dir: str,
-                       df: DataFrame, path: str) -> None:
-    """Seed the ``name`` session entry with a persisted artifact read.
-    Persist AFTER the install: the install unpersists the entry it
-    replaces, which may be an earlier read of the same path sharing this
-    read's cached plan."""
-    session_state.install(name, spark, sf_dir, df, loaded_from=path)
-    df.persist()
+def snapshot_digest(spark: SparkSession, sf_dir: str, side: str) -> dict:
+    """The lineage digest of ``sf_dir``'s ``side`` table (an
+    ``ArtifactSpec.side``)."""
+    if side == "documents":
+        return corpus_digest(spark, sf_dir)
+    return embeddings_digest(spark, sf_dir)
 
 
-def load_bands(spark: SparkSession, sf_dir: str, artifact_dir: str,
-               install: bool = True) -> DataFrame:
-    """Read a banded-index artifact and (by default) seed the
-    ``banded_index`` session entry with the re-ranked relation (the
-    ranking window is one shuffle of the thin rows — the artifact stores
-    bucket membership only, since ``_rn`` is derivable and
-    cap-dependent)."""
-    from pyspark_coding_challenge_spark.llm import dedup as D
-
-    path = os.path.join(artifact_dir, BANDS_NAME)
-    _check_meta(path, sf_dir, _bands_params())
-    df = _spread(spark.read.parquet(path), "doc_id")
-    if not install:
-        return df
-    ranked = D.rerank_bands(df)  # the one chunk-rank definition
-    session_state.install(BANDS_NAME, spark, sf_dir, ranked, loaded_from=path)
-    return ranked
+def _sibling(spark: SparkSession, sf_dir: str, path: str,
+             name: str) -> DataFrame:
+    """The provenance-checked sibling artifact ``name`` next to ``path`` —
+    trained state an artifact is made from or paired with. Never the live
+    session state: nothing pins its bytes."""
+    sib = os.path.join(os.path.dirname(path), name)
+    _check_meta(sib, sf_dir, ARTIFACTS[name].params())
+    return spark.read.parquet(sib)
 
 
-def load_pairs(spark: SparkSession, sf_dir: str, artifact_dir: str,
-               install: bool = True) -> DataFrame:
-    """Read a pair-graph artifact and (by default) seed the
-    ``verified_pairs`` session entry so every pair-graph consumer in this
-    session reads the artifact instead of re-running the minhash chain."""
-    path = os.path.join(artifact_dir, PAIRS_NAME)
-    _check_meta(path, sf_dir, _pairs_params())
-    df = _spread(spark.read.parquet(path), "doc_a")
-    if install:
-        _install_persisted(PAIRS_NAME, spark, sf_dir, df, path)
-    return df
+def _paired_fold(spark: SparkSession, sf_dir: str, path: str, name: str,
+                 field: str, mismatch: str) -> str:
+    """The content fold of the sibling trained-state artifact ``name``,
+    after checking that it is the fold ``path``'s lineage recorded under
+    ``field``; ValueError (saying the artifact ``mismatch``) otherwise."""
+    fold = _content_fold(_sibling(spark, sf_dir, path, name), *_FOLD_KEYS[name])
+    recorded = (_read_meta(path).get("lineage") or {}).get(field)
+    if recorded != fold:
+        raise ValueError(
+            f"{os.path.basename(path)} at {path} {mismatch} (fold "
+            f"{recorded}) than the sibling {name} artifact ({fold})")
+    return fold
 
 
-# ---------------------------------------------------------------------------
-# CC labels (the seventh lineage artifact, r9) + per-doc digests
-# ---------------------------------------------------------------------------
-
-def materialize_cc_labels(spark: SparkSession, sf_dir: str, artifact_dir: str,
-                          digest: dict | None = None) -> str:
-    """Land the connected-component labels (node, label) of the thresholded
-    pair graph — the relation ``dedup_clusters`` (all sections) consumes.
-    Storing it completes the refresh chain (r8 judge item #1): a refreshed
-    deployment patches these labels from the pair-graph patch's edge diff
-    (``update_pairs_incremental``) instead of re-running label propagation
-    from scratch. Duplicate-set-proportional (nodes with >= 1 edge only).
-    ``digest``: see ``materialize_pairs``."""
-    from pyspark_coding_challenge_spark.llm.dedup import cc_labels_for_dir
-
-    path = os.path.join(artifact_dir, CC_NAME)
-    if _seeded_from(spark, sf_dir, CC_NAME, path):
-        return path
-    df = cc_labels_for_dir(spark, sf_dir)
-    if _seeded_from(spark, sf_dir, CC_NAME, path):
-        return path  # builder env-seeded from this path — see materialize_pairs
-    df.select("node", "label").write.mode("overwrite").parquet(path)
-    _write_meta(path, sf_dir, _cc_params(),
-                lineage={"snapshot": digest or corpus_digest(spark, sf_dir),
-                         "patched_from": None})
-    return path
+def _count_gate(spark: SparkSession, sf_dir: str, path: str, df: DataFrame,
+                per_vector: int) -> None:
+    """Refuse a per-vector artifact whose row count is not ``per_vector``
+    x the CURRENT corpus's: an in-place corpus regeneration would
+    otherwise silently drop added vectors from every search via the inner
+    join. Both counts are parquet metadata reads. A vector modified in
+    place with an unchanged count keeps its stale rows — the load-time
+    staleness every artifact here accepts, resolved at refresh time by the
+    lineage gate."""
+    n = df.count()
+    expect = per_vector * read_table(spark, sf_dir, "embeddings").count()
+    if n != expect:
+        raise ValueError(
+            f"{os.path.basename(path)} at {path} holds {n} rows but the "
+            f"corpus needs {expect} — stale vs an in-place corpus change; "
+            "refresh the artifacts")
 
 
-def load_cc_labels(spark: SparkSession, sf_dir: str, artifact_dir: str,
-                   install: bool = True) -> DataFrame:
-    """Read a cc_labels artifact and (by default) seed the ``cc_labels``
-    session entry so every cluster consumer in this session reads stored
-    labels instead of re-running label propagation."""
-    path = os.path.join(artifact_dir, CC_NAME)
-    _check_meta(path, sf_dir, _cc_params())
-    df = _spread(spark.read.parquet(path), "node")
-    if install:
-        _install_persisted(CC_NAME, spark, sf_dir, df, path)
-    return df
+def _assignments_gate(spark, sf_dir, path, df) -> tuple:
+    """A stored inverted index serves only under the sibling quantizer it
+    was assigned with; the session value carries that quantizer's fold so
+    the search layer can check the quantizer IT holds."""
+    fold = _paired_fold(spark, sf_dir, path, CENTROIDS_NAME, "centroids_fold",
+                        "was assigned under a different quantizer")
+    _count_gate(spark, sf_dir, path, df, 1)
+    return (fold,)
 
 
-def materialize_doc_digests(spark: SparkSession, sf_dir: str,
-                            artifact_dir: str,
-                            digest: dict | None = None) -> str:
-    """Land the skinny per-doc (doc_id, digest) relation — the refresh
-    accelerator (r8 judge item #2): with it stored, the NEXT refresh's
-    snapshot diff reads two thin columns for the old side instead of
-    re-hashing the old corpus's text, the lineage gate verifies against
-    the artifact's own content fold instead of re-scanning the old corpus,
-    and the new lineage digest is computed by churn-proportional fold
-    arithmetic. The old snapshot's parquet is never touched — it can have
-    been retired. ``digest``: see ``materialize_pairs``."""
-    from pyspark_coding_challenge_spark.sources.readers import read_table
-
-    path = os.path.join(artifact_dir, DIGESTS_NAME)
-    digest = digest or corpus_digest(spark, sf_dir)
-    # idempotence guard — same rationale as materialize_span_pos
-    if _lineage_gate(path, sf_dir, _digests_params(), digest) is None:
-        return path
-    df = doc_digest_relation(read_table(spark, sf_dir, "documents"))
-    df.write.mode("overwrite").parquet(path)
-    _write_meta(path, sf_dir, _digests_params(),
-                lineage={"snapshot": digest, "patched_from": None})
-    return path
+def _pq_codebooks_gate(spark, sf_dir, path, df) -> tuple:
+    """Residual codebooks under another coarse quantizer would encode
+    against the wrong basis and silently corrupt every ADC score (r16), so
+    a sibling ``ivf_centroids`` artifact must carry the recorded
+    ``centroids_fold``. A dir without one is accepted: the session then
+    trains the deterministic coarse quantizer from the corpus the meta's
+    snapshot digest pins, which reproduces the recorded fold."""
+    cent = os.path.join(os.path.dirname(path), CENTROIDS_NAME, _META_FILE)
+    if os.path.exists(cent):
+        _paired_fold(spark, sf_dir, path, CENTROIDS_NAME, "centroids_fold",
+                     "was trained on residuals vs a different coarse quantizer")
+    return ()
 
 
-# ---------------------------------------------------------------------------
-# shared-span relation
-# ---------------------------------------------------------------------------
-
-def materialize_span_pos(spark: SparkSession, sf_dir: str, artifact_dir: str,
-                         digest: dict | None = None) -> str:
-    """Land the per-doc span-POSITION index (doc_id, i, h) — the refresh
-    working state behind shared_spans: positions are per-doc (sharedness
-    is not), so the churn patch deletes gone docs' rows, appends the
-    churn's freshly-tokenized rows, and re-derives sharedness with a
-    thin-int aggregate (``text.shared_from_pos``) — no re-tokenize of the
-    unchanged corpus, which is the compute-dominant cost. Size note for
-    100 TB: one thin-int row per token position — large next to the other
-    artifacts but columnar ints, and the alternative is a full corpus
-    text scan per refresh; a deployment that cannot afford the index
-    simply omits it and the spans refresh degrades to a warned full
-    rebuild."""
-    from pyspark_coding_challenge_spark.llm.text import span_pos_relation
-    from pyspark_coding_challenge_spark.sources.readers import (
-        read_table,
-        rebalance_for_compute,
-    )
-
-    path = os.path.join(artifact_dir, SPANPOS_NAME)
-    digest = digest or corpus_digest(spark, sf_dir)
-    # idempotence guard (r9 review finding): a stored index whose lineage
-    # already matches THIS corpus digest is provably current — skip the
-    # full tokenize+gram+hash rebuild (the most expensive text-side pass)
-    if _lineage_gate(path, sf_dir, _spanpos_params(), digest) is None:
-        return path
-    d = rebalance_for_compute(read_table(spark, sf_dir, "documents"), "doc_id")
-    span_pos_relation(d).write.mode("overwrite").parquet(path)
-    _write_meta(path, sf_dir, _spanpos_params(),
-                lineage={"snapshot": digest, "patched_from": None})
-    return path
+def _pq_codes_gate(spark, sf_dir, path, df) -> tuple:
+    """Residual codes serve only under the sibling codebooks they were
+    encoded with AND the coarse quantizer the residuals were taken against
+    (r16). The session value carries the codebook fold (the search layer's
+    use-time check) and the meta-recorded ADC tie-cohort bound, so
+    ``refine='auto'`` over stored codes aggregates nothing."""
+    fold = _paired_fold(spark, sf_dir, path, PQCB_NAME, "codebooks_fold",
+                        "was encoded under different codebooks")
+    _paired_fold(spark, sf_dir, path, CENTROIDS_NAME, "centroids_fold",
+                 "encodes residuals against a different coarse quantizer")
+    _count_gate(spark, sf_dir, path, df, _pqcb_params()["m_sub"])
+    stats = (_read_meta(path).get("lineage") or {}).get("stats") or {}
+    cohort = stats.get("max_code_cohort")
+    return fold, (int(cohort) if cohort is not None else None)
 
 
-def materialize_spans(spark: SparkSession, sf_dir: str, artifact_dir: str,
-                      digest: dict | None = None) -> str:
-    """Land the shared-span artifact — (doc_id, i, h) since r13: the hash
-    column is the handle the churn patch deletes flipped-sharedness rows
-    by (``update_text_incremental``); session loaders project it away."""
-    from pyspark_coding_challenge_spark.llm.text import (
-        shared_spans_relation,
-        span_pos_relation,
-    )
-    from pyspark_coding_challenge_spark.sources.readers import (
-        read_table,
-        rebalance_for_compute,
-    )
-
-    path = os.path.join(artifact_dir, SPANS_NAME)
-    if _seeded_from(spark, sf_dir, SPANS_NAME, path):
-        return path
-    # a lineage-matching sibling span_pos artifact (just landed by
-    # materialize_all) supplies the positions — deriving sharedness from
-    # it is a thin-int aggregate, vs re-tokenizing the corpus
-    pos = None
+def _span_positions(spark: SparkSession, sf_dir: str, path: str,
+                    digest: dict | None) -> DataFrame:
+    """(doc_id, i, h) span positions: the lineage-matching sibling
+    ``span_pos_index`` (just landed by ``materialize_all``) when there is
+    one — deriving sharedness or counts from it is a thin-int aggregate —
+    else a tokenize pass over the corpus."""
     if digest is not None:
-        pos_path = os.path.join(artifact_dir, SPANPOS_NAME)
+        pos_path = os.path.join(os.path.dirname(path), SPANPOS_NAME)
         if _lineage_gate(pos_path, sf_dir, _spanpos_params(), digest) is None:
-            pos = spark.read.parquet(pos_path)
-    if pos is None:
-        pos = span_pos_relation(
-            rebalance_for_compute(read_table(spark, sf_dir, "documents"),
-                                  "doc_id"))
-    df = shared_spans_relation(pos)
-    if _seeded_from(spark, sf_dir, SPANS_NAME, path):
-        return path  # builder env-seeded from this path — see materialize_pairs
-    df.write.mode("overwrite").parquet(path)
-    _write_meta(path, sf_dir, _spans_params(),
-                lineage={"snapshot": digest or corpus_digest(spark, sf_dir),
-                         "patched_from": None})
-    return path
+            return spark.read.parquet(pos_path)
+    return _llm("text").span_pos_relation(rebalance_for_compute(
+        read_table(spark, sf_dir, "documents"), "doc_id"))
 
 
-def materialize_span_stats(spark: SparkSession, sf_dir: str,
-                           artifact_dir: str,
-                           digest: dict | None = None) -> str:
-    """Land the per-hash distinct-doc counts (h, n_docs) — the refresh
-    state that makes ``shared_spans`` churn-patchable (r12 judge item #3):
-    counts are maintainable under a churn's (h, doc) presence delta where
-    the min/max sharedness trick is not. Never a query-time cache (like
-    ``doc_digests``). Derives from the lineage-matching sibling
-    ``span_pos_index`` when present, else re-tokenizes."""
-    from pyspark_coding_challenge_spark.llm.text import (
-        span_doc_stats,
-        span_pos_relation,
-    )
-    from pyspark_coding_challenge_spark.sources.readers import (
-        read_table,
-        rebalance_for_compute,
-    )
-
-    path = os.path.join(artifact_dir, SPANSTATS_NAME)
-    pos = None
-    if digest is not None:
-        pos_path = os.path.join(artifact_dir, SPANPOS_NAME)
-        if _lineage_gate(pos_path, sf_dir, _spanpos_params(), digest) is None:
-            pos = spark.read.parquet(pos_path)
-    if pos is None:
-        pos = span_pos_relation(
-            rebalance_for_compute(read_table(spark, sf_dir, "documents"),
-                                  "doc_id"))
-    span_doc_stats(pos).write.mode("overwrite").parquet(path)
-    _write_meta(path, sf_dir, _spanstats_params(),
-                lineage={"snapshot": digest or corpus_digest(spark, sf_dir),
-                         "patched_from": None})
-    return path
+def _gap_stats(gaps: DataFrame, key: str) -> dict:
+    """The training-time mean quantization gap the carry-or-retrain drift
+    gate of ``update_centroids_incremental`` compares churned vectors
+    against. One broadcast-argmin corpus scan, paid only when the trained
+    state is (re)written; bounded 1-row scalar collect (repo convention)."""
+    row = gaps.agg(F.avg("gap").alias("m"), F.count("*").alias("n")).collect()[0]
+    return {key: round(float(row["m"]), 6), "n_vecs": int(row["n"])}
 
 
-def load_spans(spark: SparkSession, sf_dir: str, artifact_dir: str,
-               install: bool = True) -> DataFrame:
-    path = os.path.join(artifact_dir, SPANS_NAME)
-    _check_meta(path, sf_dir, _spans_params())
-    # session contract is (doc_id, i); h is refresh-time state (r13)
-    df = _spread(spark.read.parquet(path).select("doc_id", "i"), "doc_id")
-    if install:
-        _install_persisted(SPANS_NAME, spark, sf_dir, df, path)
-    return df
+def _write_centroids(spark, sf_dir, path, cent, digest) -> dict:
+    cent.write.mode("overwrite").parquet(path)
+    gaps = _llm("similarity").quantization_gap(
+        _embedding_vectors(spark, sf_dir), cent)
+    return {"stats": _gap_stats(gaps, "mean_qe")}
 
 
-# ---------------------------------------------------------------------------
-# IVF quantizer
-# ---------------------------------------------------------------------------
-
-def materialize_ivf_centroids(spark: SparkSession, sf_dir: str,
-                              artifact_dir: str,
-                              emb_digest: dict | None = None) -> str:
-    """Land the trained IVF quantizer. Since r12 the meta records lineage
-    against the EMBEDDINGS snapshot digest (``emb_digest`` — pass a
-    precomputed one to skip the digest scan) plus the training-time mean
-    quantization gap (``stats.mean_qe``): the baseline
-    ``update_centroids_incremental``'s drift gate compares churned vectors
-    against. The stats pass is one broadcast-argmax scan of the corpus —
-    small next to training's 2-scans-per-Lloyd-iteration, and it only runs
-    when the quantizer is actually (re)written."""
-    from pyspark_coding_challenge_spark.llm import similarity as S
-    from pyspark_coding_challenge_spark.sources.readers import (
-        read_table,
-        rebalance_for_compute,
-    )
-
-    path = os.path.join(artifact_dir, CENTROIDS_NAME)
-    if _seeded_from(spark, sf_dir, CENTROIDS_NAME, path):
-        return path
-    df = S.ivf_centroids_for_dir(spark, sf_dir)
-    if _seeded_from(spark, sf_dir, CENTROIDS_NAME, path):
-        return path  # builder env-seeded from this path — see materialize_pairs
-    df.write.mode("overwrite").parquet(path)
-    e = rebalance_for_compute(read_table(spark, sf_dir, "embeddings"),
-                              "vec_id").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
-    # bounded 1-row scalar collect (repo convention)
-    row = S.quantization_gap(e, df).agg(
-        F.avg("gap").alias("m"), F.count("*").alias("n")
-    ).collect()[0]
-    stats = {"mean_qe": round(float(row["m"]), 6), "n_vecs": int(row["n"])}
-    _write_meta(path, sf_dir, _centroid_params(),
-                lineage={"snapshot": emb_digest or embeddings_digest(spark, sf_dir),
-                         "patched_from": None, "stats": stats})
-    return path
+def _write_pq_codebooks(spark, sf_dir, path, cb, digest) -> dict:
+    cb.write.mode("overwrite").parquet(path)
+    cent = _sibling(spark, sf_dir, path, CENTROIDS_NAME)
+    gaps = _llm("similarity").pq_quantization_gap(
+        _embedding_vectors(spark, sf_dir), cb, cent)
+    return {"centroids_fold": _content_fold(cent, "lid"),
+            "stats": _gap_stats(gaps, "mean_pq_qe")}
 
 
-def materialize_vec_digests(spark: SparkSession, sf_dir: str,
-                            artifact_dir: str,
-                            emb_digest: dict | None = None) -> str:
-    """Land the per-vector digest artifact — refresh-time state for
-    ``update_centroids_incremental`` (the embeddings diff's old side, so a
-    refresh never re-reads the retired old snapshot's vectors), exactly as
-    ``doc_digests`` serves the text/dedup chain. Never a query-time cache.
-    The lineage snapshot is folded from the WRITTEN relation (pinned
-    first), so artifact content and lineage cannot disagree."""
-    from pyspark_coding_challenge_spark.sources.readers import read_table
-
-    path = os.path.join(artifact_dir, VECDIG_NAME)
-    rel = vec_digest_relation(
-        read_table(spark, sf_dir, "embeddings")
-    ).localCheckpoint()
+def _write_vec_digests(spark, sf_dir, path, rel, digest) -> dict:
+    # the lineage snapshot is folded from the WRITTEN relation (pinned by
+    # its build), so artifact content and lineage cannot disagree
     rel.write.mode("overwrite").parquet(path)
-    _write_meta(path, sf_dir, _vecdig_params(),
-                lineage={"snapshot": emb_digest
-                         or digest_of_digests(rel, id_col="vec_id"),
-                         "patched_from": None})
-    return path
+    return {"snapshot": digest or digest_of_digests(rel, id_col="vec_id")}
 
 
-def materialize_ivf_assignments(spark: SparkSession, sf_dir: str,
-                                artifact_dir: str,
-                                emb_digest: dict | None = None) -> str:
-    """Land the stored inverted index (vec_id, lid): every corpus vector
-    assigned to its nearest centroid FROM THE SIBLING ``ivf_centroids``
-    ARTIFACT (materialize that first — this refuses to pair with a live
-    session quantizer, whose bytes nothing pins). This is the standard
-    IVF deployment shape: with it, a search pays probe + re-rank only;
-    without it, every search repeats the corpus x n_lists assignment
-    pass. Opt-in at BUILD time: the search and refresh layers never
-    create it implicitly (inline assignment costs the same as building
-    it once, so a cache-miss build would only add a write);
-    ``materialize_all`` — the full production build — includes it, and
-    ``build_artifacts.py`` with explicit names skips it.
-
-    Lineage records the embeddings snapshot AND the centroid content fold
-    (``_centroid_fold``), so an index assigned under a since-retrained
-    quantizer fails the load/seed checks loudly."""
-    from pyspark_coding_challenge_spark.llm.similarity import assign_nearest_list
-    from pyspark_coding_challenge_spark.sources.readers import (
-        read_table,
-        rebalance_for_compute,
-    )
-
-    path = os.path.join(artifact_dir, ASSIGN_NAME)
-    if _seeded_from(spark, sf_dir, ASSIGN_NAME, path):
-        return path  # session cache was seeded FROM this path — see
-        # materialize_pairs (rewriting part files under a live lazily-read
-        # handle dies with FileNotFoundException at next execution)
-    cent_path = os.path.join(artifact_dir, CENTROIDS_NAME)
-    _check_meta(cent_path, sf_dir, _centroid_params())
-    cent = spark.read.parquet(cent_path)
-    e = rebalance_for_compute(read_table(spark, sf_dir, "embeddings"),
-                              "vec_id").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
-    assign_nearest_list(e, cent).write.mode("overwrite").parquet(path)
-    _write_meta(path, sf_dir, _assign_params(),
-                lineage={"snapshot": emb_digest
-                         or embeddings_digest(spark, sf_dir),
-                         "centroids_fold": _centroid_fold(cent),
-                         "patched_from": None})
-    return path
+def _write_assignments(spark, sf_dir, path, built, digest) -> dict:
+    cent = _sibling(spark, sf_dir, path, CENTROIDS_NAME)
+    _llm("similarity").assign_nearest_list(
+        _embedding_vectors(spark, sf_dir), cent
+    ).write.mode("overwrite").parquet(path)
+    return {"centroids_fold": _content_fold(cent, "lid")}
 
 
-def _assign_artifact_gate(path: str, cent_path: str, sf_dir: str,
-                          spark: SparkSession) -> tuple[str | None, str | None, DataFrame | None]:
-    """(why-not, centroid_fold, assignments_df): why this assignments
-    artifact cannot serve — sf_dir/params drift, a centroid fold that is
-    not the sibling quantizer artifact's, or a row count that is not the
-    CURRENT corpus's (an in-place corpus regeneration would otherwise
-    silently drop added vectors from every search via the inner join;
-    both counts are parquet metadata reads). A modified-in-place vector
-    with an unchanged count keeps its stale list — the same load-time
-    staleness exposure every artifact here accepts, resolved at refresh
-    time by the lineage gate. On success the opened (and count-forced)
-    DataFrame is returned so callers do not re-open the parquet (r12:
-    the gate-then-reread shape doubled every read of the env seed). Raises nothing; callers warn-and-skip."""
-    try:
-        _check_meta(path, sf_dir, _assign_params())
-        _check_meta(cent_path, sf_dir, _centroid_params())
-        lin = _read_meta(path).get("lineage") or {}
-        fold = _centroid_fold(spark.read.parquet(cent_path))
-        if lin.get("centroids_fold") != fold:
-            return (f"ivf_assignments at {path} was assigned under a "
-                    f"different quantizer (fold {lin.get('centroids_fold')}) "
-                    f"than the sibling ivf_centroids artifact ({fold})"), None, None
-        from pyspark_coding_challenge_spark.sources.readers import read_table
-
-        df = spark.read.parquet(path)
-        n_idx = df.count()
-        n_corpus = read_table(spark, sf_dir, "embeddings").count()
-        if n_idx != n_corpus:
-            return (f"ivf_assignments at {path} indexes {n_idx} vectors "
-                    f"but the corpus has {n_corpus} — stale vs an "
-                    "in-place corpus change; refresh the artifacts"), None, None
-        return None, fold, df
-    except ValueError as exc:
-        return str(exc), None, None
-    except Exception as exc:
-        return f"ivf_assignments unreadable: {exc}", None, None
-
-
-def load_ivf_assignments(spark: SparkSession, sf_dir: str, artifact_dir: str,
-                         install: bool = True) -> DataFrame:
-    """Read a stored inverted index and (by default) seed the similarity
-    session cache — as ``(df, centroid_fold)``, so the search layer can
-    verify the quantizer IT holds is the one the index was assigned under
-    — so ``embedding_ann_ivf`` searches skip the assignment pass. Refuses
-    (ValueError) an index whose centroid fold does not match the sibling
-    quantizer artifact, or whose row count is not the current corpus's
-    (a corrupt parquet under an intact meta also surfaces as ValueError —
-    the per-artifact grace ``load_all`` expects)."""
-    path = os.path.join(artifact_dir, ASSIGN_NAME)
-    cent_path = os.path.join(artifact_dir, CENTROIDS_NAME)
-    why, fold, raw = _assign_artifact_gate(path, cent_path, sf_dir, spark)
-    if why is not None:
-        raise ValueError(why)
-    df = _spread(raw, "vec_id")
-    if install:
-        session_state.install(ASSIGN_NAME, spark, sf_dir, (df, fold),
-                              loaded_from=path)
-    return df
-
-
-def assignments_from_env(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, str] | None:
-    """Env-seed the stored inverted index — the ``_from_env`` protocol
-    (warn-and-None, persist, record the seed path) with the pairing checks
-    it cannot express, returning ``(df, centroid_fold)`` for the search
-    layer's use-time fold gate. Inlined rather than delegated to
-    ``_from_env`` so the artifact parquet is opened ONCE (the gate's
-    count already forced it, r12). The gate's reads are
-    bounded: two metas, an n_lists-row fold scan, two metadata counts."""
-    base = os.environ.get(ENV_ARTIFACT_DIR)
-    if not base:
-        return None
-    path = os.path.join(base, ASSIGN_NAME)
-    if not os.path.exists(os.path.join(path, _META_FILE)):
-        return None
-    why, fold, raw = _assign_artifact_gate(
-        path, os.path.join(base, CENTROIDS_NAME), sf_dir, spark)
-    if why is not None:
-        warnings.warn(f"ignoring {ENV_ARTIFACT_DIR} artifact: {why}")
-        return None
-    df = _spread(raw, "vec_id").persist()
-    session_state.record_seed(ASSIGN_NAME, spark, sf_dir, path)
-    return df, fold
-
-
-def load_ivf_centroids(spark: SparkSession, sf_dir: str, artifact_dir: str,
-                       install: bool = True) -> DataFrame:
-    path = os.path.join(artifact_dir, CENTROIDS_NAME)
-    _check_meta(path, sf_dir, _centroid_params())
-    df = spark.read.parquet(path)
-    if install:
-        session_state.install(CENTROIDS_NAME, spark, sf_dir, df,
-                              loaded_from=path)
-    return df
-
-
-# ---------------------------------------------------------------------------
-# product-quantization artifacts: pq_codebooks + pq_codes (r14)
-# ---------------------------------------------------------------------------
-
-def materialize_pq_codebooks(spark: SparkSession, sf_dir: str,
-                             artifact_dir: str,
-                             emb_digest: dict | None = None) -> str:
-    """Land the trained PQ sub-quantizers (sub, lid, cvec) — the
-    ``materialize_ivf_centroids`` contract for the compressed-domain
-    path: meta records lineage against the embeddings snapshot digest,
-    the CONTENT FOLD of the sibling ``ivf_centroids`` artifact the
-    residuals were taken against (r16 — residual codebooks are only
-    meaningful under exactly that coarse quantizer; materialize it
-    first), plus the training-time mean PQ quantization gap
-    (``stats.mean_pq_qe`` via ``similarity.pq_quantization_gap``), the
-    baseline the carry-or-retrain drift gate in
-    ``update_centroids_incremental`` compares churned vectors against.
-    The stats pass is one broadcast-argmin corpus scan, paid only when
-    the codebooks are actually (re)trained."""
-    from pyspark_coding_challenge_spark.llm import similarity as S
-    from pyspark_coding_challenge_spark.sources.readers import (
-        read_table,
-        rebalance_for_compute,
-    )
-
-    path = os.path.join(artifact_dir, PQCB_NAME)
-    if _seeded_from(spark, sf_dir, PQCB_NAME, path):
-        return path
-    cent_path = os.path.join(artifact_dir, CENTROIDS_NAME)
-    _check_meta(cent_path, sf_dir, _centroid_params())
-    cent = spark.read.parquet(cent_path)
-    df = S.pq_codebooks_for_dir(spark, sf_dir, cent=cent)
-    if _seeded_from(spark, sf_dir, PQCB_NAME, path):
-        return path  # builder env-seeded from this path — see materialize_pairs
-    df.write.mode("overwrite").parquet(path)
-    e = rebalance_for_compute(read_table(spark, sf_dir, "embeddings"),
-                              "vec_id").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
-    # bounded 1-row scalar collect (repo convention)
-    row = S.pq_quantization_gap(e, df, cent).agg(
-        F.avg("gap").alias("m"), F.count("*").alias("n")
-    ).collect()[0]
-    stats = {"mean_pq_qe": round(float(row["m"]), 6), "n_vecs": int(row["n"])}
-    _write_meta(path, sf_dir, _pqcb_params(),
-                lineage={"snapshot": emb_digest or embeddings_digest(spark, sf_dir),
-                         "centroids_fold": _centroid_fold(cent),
-                         "patched_from": None, "stats": stats})
-    return path
-
-
-def materialize_pq_codes(spark: SparkSession, sf_dir: str,
-                         artifact_dir: str,
-                         emb_digest: dict | None = None) -> str:
-    """Land the compressed corpus (vec_id, sub, code): every vector's
-    RESIDUAL (vs the sibling ``ivf_centroids`` ARTIFACT) encoded against
-    the SIBLING ``pq_codebooks`` ARTIFACT (materialize both first — this
-    refuses to pair with live session state, whose bytes nothing pins),
-    the ``materialize_ivf_assignments`` shape. This IS the PQ deployment
-    story: with it, a search scans the ~64x-smaller code relation and
-    never re-encodes; without it, every search repeats the residual +
-    corpus x m x k encode pass. Lineage records the embeddings snapshot
-    AND the content folds of both trained inputs (``_codebook_fold`` /
-    ``_centroid_fold``), so codes encoded under since-retrained state
-    fail the load/seed checks loudly; stats record the ADC tie-cohort
-    bound (``similarity.pq_code_cohort_max`` — r15 judge item #2: one
-    thin aggregation at build time so ``refine='auto'`` serving never
-    re-aggregates the code relation; the patch path maintains an upper
-    bound). Laid out as ``pbucket`` hive partitions (``PQ_BUCKET_WIDTH``)
-    so the refresh patch can overwrite only the churn's buckets."""
-    from pyspark_coding_challenge_spark.llm.similarity import (
-        pq_code_cohort_max,
-        pq_encode,
-    )
-    from pyspark_coding_challenge_spark.sources.readers import (
-        read_table,
-        rebalance_for_compute,
-    )
-
-    path = os.path.join(artifact_dir, PQCODES_NAME)
-    if _seeded_from(spark, sf_dir, PQCODES_NAME, path):
-        return path  # session cache was seeded FROM this path
-    cb_path = os.path.join(artifact_dir, PQCB_NAME)
-    _check_meta(cb_path, sf_dir, _pqcb_params())
-    cb = spark.read.parquet(cb_path)
-    cent_path = os.path.join(artifact_dir, CENTROIDS_NAME)
-    _check_meta(cent_path, sf_dir, _centroid_params())
-    cent = spark.read.parquet(cent_path)
-    e = rebalance_for_compute(read_table(spark, sf_dir, "embeddings"),
-                              "vec_id").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
+def _write_pq_codes(spark, sf_dir, path, built, digest) -> dict:
+    S = _llm("similarity")
+    cb = _sibling(spark, sf_dir, path, PQCB_NAME)
+    cent = _sibling(spark, sf_dir, path, CENTROIDS_NAME)
     # pin STATIC partition overwrite for the full rebuild: under a session
     # left in 'dynamic' (user config, or a leak from the patch path) an
     # overwrite of an existing artifact would keep stale pbucket dirs from
@@ -1353,7 +870,7 @@ def materialize_pq_codes(spark: SparkSession, sf_dir: str,
     prev_mode = spark.conf.get(mode_key, None)
     spark.conf.set(mode_key, "static")
     try:
-        pq_encode(e, cb, cent) \
+        S.pq_encode(_embedding_vectors(spark, sf_dir), cb, cent) \
             .withColumn("pbucket", _pq_bucket(F.col("vec_id"))) \
             .write.mode("overwrite").partitionBy("pbucket").parquet(path)
     finally:
@@ -1364,337 +881,281 @@ def materialize_pq_codes(spark: SparkSession, sf_dir: str,
     # the tie-cohort bound, aggregated ONCE from the landed bytes (thin
     # compressed scan) — exact at build time; the patch path folds an
     # upper bound forward and any rebuild recomputes it here
-    cohort = pq_code_cohort_max(
+    cohort = S.pq_code_cohort_max(
         spark.read.parquet(path).select("vec_id", "sub", "code"))
-    _write_meta(path, sf_dir, _pqcodes_params(),
-                lineage={"snapshot": emb_digest
-                         or embeddings_digest(spark, sf_dir),
-                         "codebooks_fold": _codebook_fold(cb),
-                         "centroids_fold": _centroid_fold(cent),
-                         "patched_from": None,
-                         "stats": {"max_code_cohort": cohort}})
+    return {"codebooks_fold": _content_fold(cb, "sub", "lid"),
+            "centroids_fold": _content_fold(cent, "lid"),
+            "stats": {"max_code_cohort": cohort}}
+
+
+#: every artifact, in dependency order: pairs before bands before cc_labels
+#: (the pair build populates the shared banded-index session entry, so
+#: bands is a free write, and the label build reads the cached pair
+#: graph); span_pos before spans and span_stats (both derive from the
+#: landed index instead of re-tokenizing); centroids before the state
+#: assigned, trained or encoded against them, codebooks before codes.
+ARTIFACTS: dict[str, ArtifactSpec] = {
+    # the verified near-dup pair graph: two ids + two doubles per pair,
+    # orders of magnitude smaller than the corpus
+    PAIRS_NAME: ArtifactSpec(
+        _pairs_params, "documents",
+        build=lambda spark, sf_dir, path, digest:
+            _llm("dedup").verified_pairs_for_dir(spark, sf_dir),
+        spread_key="doc_a"),
+    # the (doc_id, band, bucket) banded index a refresh's churn shard
+    # band-joins against; the chunk rank (_rn) is derivable and
+    # cap-dependent, so it is not stored and a read re-ranks (one shuffle
+    # of the thin rows) — re-pinned by the rank, so no persist
+    BANDS_NAME: ArtifactSpec(
+        _bands_params, "documents",
+        build=lambda spark, sf_dir, path, digest:
+            _llm("dedup").banded_index_for_dir(spark, sf_dir)
+            .select("doc_id", "band", "bucket"),
+        spread_key="doc_id", persist=False,
+        session=lambda df: _llm("dedup").rerank_bands(df)),
+    # connected-component labels of the thresholded pair graph (nodes
+    # with >= 1 edge); the newest dedup artifact (r9), so a dir without
+    # valid labels still loads and the clusters relabel the loaded graph
+    CC_NAME: ArtifactSpec(
+        _cc_params, "documents",
+        build=lambda spark, sf_dir, path, digest:
+            _llm("dedup").cc_labels_for_dir(spark, sf_dir)
+            .select("node", "label"),
+        spread_key="node",
+        fallback="cluster labels will be recomputed from the loaded pair graph"),
+    # per-doc (doc_id, digest): the next refresh's snapshot diff reads two
+    # thin columns for the old side and verifies lineage by the
+    # artifact's own content fold, so the old corpus is never re-read
+    DIGESTS_NAME: ArtifactSpec(
+        _digests_params, "documents",
+        build=lambda spark, sf_dir, path, digest:
+            doc_digest_relation(read_table(spark, sf_dir, "documents")),
+        reuse_current=True),
+    # per-doc span positions (doc_id, i, h), the refresh state behind
+    # shared_spans: one thin-int row per token position; a deployment
+    # that cannot afford it omits it and span refreshes fully rebuild
+    SPANPOS_NAME: ArtifactSpec(
+        _spanpos_params, "documents",
+        build=lambda spark, sf_dir, path, digest:
+            _span_positions(spark, sf_dir, path, None),
+        reuse_current=True),
+    # shared-span starts, stored with the span hash h (r13): the handle a
+    # refresh deletes flipped-sharedness rows by; session reads drop it
+    SPANS_NAME: ArtifactSpec(
+        _spans_params, "documents",
+        build=lambda spark, sf_dir, path, digest:
+            _llm("text").shared_spans_relation(
+                _span_positions(spark, sf_dir, path, digest)),
+        spread_key="doc_id", columns=("doc_id", "i")),
+    # per-hash distinct-doc counts (h, n_docs): what makes shared_spans
+    # churn-patchable (r12) — counts survive a churn's presence delta
+    SPANSTATS_NAME: ArtifactSpec(
+        _spanstats_params, "documents",
+        build=lambda spark, sf_dir, path, digest:
+            _llm("text").span_doc_stats(
+                _span_positions(spark, sf_dir, path, digest))),
+    # the trained IVF quantizer (n_lists rows, lazily re-read per use)
+    # plus its training-time mean quantization gap
+    CENTROIDS_NAME: ArtifactSpec(
+        _centroid_params, "embeddings",
+        build=lambda spark, sf_dir, path, digest:
+            _llm("similarity").ivf_centroids_for_dir(spark, sf_dir),
+        write=_write_centroids, persist=False),
+    # per-vector digests: the embeddings diff's old side, as doc_digests
+    # is the documents'
+    VECDIG_NAME: ArtifactSpec(
+        _vecdig_params, "embeddings",
+        build=lambda spark, sf_dir, path, digest: vec_digest_relation(
+            read_table(spark, sf_dir, "embeddings")).localCheckpoint(),
+        write=_write_vec_digests),
+    # the stored inverted index (vec_id, lid), assigned from the sibling
+    # centroid artifact; opt-in, since inline assignment costs what one
+    # build does — searches without it assign inline
+    ASSIGN_NAME: ArtifactSpec(
+        _assign_params, "embeddings", write=_write_assignments,
+        spread_key="vec_id", gate=_assignments_gate, optional=True,
+        fallback="IVF searches will assign inline"),
+    # PQ sub-quantizers (sub, lid, cvec) trained on residuals vs the
+    # sibling centroid artifact (r16), plus their mean PQ gap (r14)
+    PQCB_NAME: ArtifactSpec(
+        _pqcb_params, "embeddings",
+        build=lambda spark, sf_dir, path, digest:
+            _llm("similarity").pq_codebooks_for_dir(
+                spark, sf_dir,
+                cent=_sibling(spark, sf_dir, path, CENTROIDS_NAME)),
+        write=_write_pq_codebooks, persist=False, gate=_pq_codebooks_gate,
+        optional=True, fallback="PQ searches will train inline"),
+    # the compressed corpus (vec_id, sub, code), ~64x smaller than the
+    # vectors, in pbucket hive partitions so a refresh overwrites only the
+    # churn's buckets; reads drop pbucket
+    PQCODES_NAME: ArtifactSpec(
+        _pqcodes_params, "embeddings", write=_write_pq_codes,
+        spread_key="vec_id", columns=("vec_id", "sub", "code"),
+        gate=_pq_codes_gate, optional=True, needs=PQCB_NAME,
+        fallback="PQ searches will encode inline"),
+    # the (doc_id, source, n_tokens) token spine every packing/batching
+    # kernel consumes
+    SPINE_NAME: ArtifactSpec(
+        _spine_params, "documents",
+        build=lambda spark, sf_dir, path, digest:
+            _llm("text").shared_token_spine_for_dir(spark, sf_dir),
+        spread_key="doc_id"),
+    # the fused per-doc signal relation (token/stopword/marker/2-gram
+    # counts), the dominant text-side cold cost
+    SIGNALS_NAME: ArtifactSpec(
+        _signals_params, "documents",
+        build=lambda spark, sf_dir, path, digest:
+            _llm("text").shared_doc_signals_for_dir(spark, sf_dir),
+        spread_key="doc_id"),
+}
+
+
+def materialize(spark: SparkSession, sf_dir: str, artifact_dir: str,
+                name: str, digest: dict | None = None) -> str:
+    """Build artifact ``name`` from ``sf_dir`` and land it under
+    ``artifact_dir`` with its meta sidecar; returns its path.
+
+    ``digest``: the precomputed ``snapshot_digest`` of the artifact's
+    side — pass it when landing several artifacts of one corpus so the
+    digest scan runs once, not once per artifact.
+
+    Seeded-path guard, checked before AND after the build: when this
+    session's entry was seeded from this very path — by ``load``, or by
+    the builder itself seeding from ``SPARK_GRAFT_ARTIFACT_DIR`` mid-call
+    — it reads these bytes, and overwriting a path being read deletes the
+    parquet it reads. The bytes are already there and meta-verified, so
+    this is a no-op. Clearing the entry forgets the path, so a
+    materialize after a clear rebuilds.
+
+    Crash window: ``mode("overwrite")`` removes the whole directory, old
+    meta included, before any write, so a crash before the meta write
+    leaves parquet without meta, which fails ``_check_meta`` loudly —
+    stale meta over new bytes cannot occur."""
+    spec = ARTIFACTS[name]
+    path = os.path.join(artifact_dir, name)
+    params = spec.params()
+    if spec.reuse_current:
+        digest = digest or snapshot_digest(spark, sf_dir, spec.side)
+        if _lineage_gate(path, sf_dir, params, digest) is None:
+            return path
+    if _seeded_from(spark, sf_dir, name, path):
+        return path
+    built = spec.build(spark, sf_dir, path, digest) if spec.build else None
+    if _seeded_from(spark, sf_dir, name, path):
+        return path
+    if spec.write is None:
+        built.write.mode("overwrite").parquet(path)
+        extra = {}
+    else:
+        extra = spec.write(spark, sf_dir, path, built, digest)
+    lineage = {"snapshot": digest, "patched_from": None, **extra}
+    if lineage["snapshot"] is None:
+        lineage["snapshot"] = snapshot_digest(spark, sf_dir, spec.side)
+    _write_meta(path, sf_dir, params, lineage)
     return path
 
 
-def _pq_codes_artifact_gate(path: str, cb_path: str, sf_dir: str,
-                            spark: SparkSession) -> tuple[str | None, str | None, DataFrame | None, int | None]:
-    """(why-not, codebook_fold, codes_df, max_cohort) —
-    ``_assign_artifact_gate`` for the compressed corpus: sf_dir/params
-    drift, a codebook fold that is not the sibling ``pq_codebooks``
-    artifact's, a centroid fold that is not the sibling
-    ``ivf_centroids`` artifact's (r16 — residual codes are only valid
-    under the coarse quantizer the residuals were taken against), or a
-    row count that is not m x the CURRENT corpus count (an in-place
-    corpus regeneration would otherwise silently drop added vectors from
-    every shortlist via the inner codes join). On success the opened
-    (count-forced) DataFrame and the meta-recorded ADC tie-cohort bound
-    are returned so callers do not re-open the parquet or re-aggregate
-    the codes."""
+def _open(spark: SparkSession, sf_dir: str, path: str,
+          name: str) -> tuple[DataFrame, object]:
+    """(relation, session value) of the artifact ``name`` at ``path``, or
+    ValueError when it cannot serve: missing or mismatched meta, a failed
+    pairing gate, or unreadable parquet. The parquet read resolves its
+    schema eagerly, so a valid meta over deleted or corrupt parquet
+    (partial cleanup, rsync) fails here, not in a later query."""
+    spec = ARTIFACTS[name]
+    _check_meta(path, sf_dir, spec.params())
     try:
-        _check_meta(path, sf_dir, _pqcodes_params())
-        _check_meta(cb_path, sf_dir, _pqcb_params())
-        lin = _read_meta(path).get("lineage") or {}
-        fold = _codebook_fold(spark.read.parquet(cb_path))
-        if lin.get("codebooks_fold") != fold:
-            return (f"pq_codes at {path} was encoded under different "
-                    f"codebooks (fold {lin.get('codebooks_fold')}) than the "
-                    f"sibling pq_codebooks artifact ({fold})"), None, None, None
-        cent_path = os.path.join(os.path.dirname(path), CENTROIDS_NAME)
-        _check_meta(cent_path, sf_dir, _centroid_params())
-        cent_fold = _centroid_fold(spark.read.parquet(cent_path))
-        if lin.get("centroids_fold") != cent_fold:
-            return (f"pq_codes at {path} encodes residuals against a "
-                    f"different coarse quantizer (fold "
-                    f"{lin.get('centroids_fold')}) than the sibling "
-                    f"ivf_centroids artifact ({cent_fold})"), None, None, None
-        from pyspark_coding_challenge_spark.sources.readers import read_table
-
-        # project away the pbucket partition column — refresh-time layout
-        # state, not a query column (the shared_spans h-column rule)
-        df = spark.read.parquet(path).select("vec_id", "sub", "code")
-        n_codes = df.count()
-        expect = _pqcb_params()["m_sub"] * \
-            read_table(spark, sf_dir, "embeddings").count()
-        if n_codes != expect:
-            return (f"pq_codes at {path} holds {n_codes} code rows but the "
-                    f"corpus needs {expect} — stale vs an in-place corpus "
-                    "change; refresh the artifacts"), None, None, None
-        stats = lin.get("stats") or {}
-        cohort = stats.get("max_code_cohort")
-        return None, fold, df, (int(cohort) if cohort is not None else None)
-    except ValueError as exc:
-        return str(exc), None, None, None
+        df = spark.read.parquet(path)
+        if spec.columns:
+            df = df.select(*spec.columns)
+        extra = spec.gate(spark, sf_dir, path, df) if spec.gate else ()
+        df = _spread(df, spec.spread_key)
+        if spec.session:
+            df = spec.session(df)
+    except ValueError:
+        raise
     except Exception as exc:
-        return f"pq_codes unreadable: {exc}", None, None, None
+        raise ValueError(f"{name} at {path} unreadable: {exc}") from exc
+    return df, ((df, *extra) if extra else df)
 
 
-def load_pq_codebooks(spark: SparkSession, sf_dir: str, artifact_dir: str,
-                      install: bool = True) -> DataFrame:
-    """Read stored PQ codebooks and (by default) seed the similarity
-    session cache — ``load_ivf_centroids`` for the sub-quantizers."""
-    path = os.path.join(artifact_dir, PQCB_NAME)
-    _check_meta(path, sf_dir, _pqcb_params())
-    df = spark.read.parquet(path)
-    if install:
-        session_state.install(PQCB_NAME, spark, sf_dir, df, loaded_from=path)
+def load(spark: SparkSession, sf_dir: str, artifact_dir: str, name: str,
+         install: bool = True) -> DataFrame:
+    """Read artifact ``name`` and (by default) seed its session entry, so
+    every consumer in this session reads the artifact instead of running
+    the build chain. Raises ValueError when the artifact cannot serve
+    (see ``_open``). Persists AFTER the install: the install releases the
+    entry it replaces, which may be an earlier read of the same path
+    sharing this read's cached plan."""
+    path = os.path.join(artifact_dir, name)
+    df, value = _open(spark, sf_dir, path, name)
+    if install and name in session_state.KINDS:
+        session_state.install(name, spark, sf_dir, value, loaded_from=path)
+        if ARTIFACTS[name].persist:
+            df.persist()
     return df
 
 
-def load_pq_codes(spark: SparkSession, sf_dir: str, artifact_dir: str,
-                  install: bool = True) -> DataFrame:
-    """Read the stored compressed corpus and (by default) seed the
-    similarity session cache as ``(df, codebook_fold, max_cohort)`` so
-    the search layer can verify the codebooks IT scores with are the ones
-    the codes were encoded under, and resolve ``refine='auto'`` from the
-    meta-recorded tie-cohort bound with zero code aggregations —
-    ``load_ivf_assignments`` for PQ. Refuses (ValueError) codes whose
-    folds do not match the sibling codebook/centroid artifacts or whose
-    row count is not m x the current corpus's."""
-    path = os.path.join(artifact_dir, PQCODES_NAME)
-    cb_path = os.path.join(artifact_dir, PQCB_NAME)
-    why, fold, raw, cohort = _pq_codes_artifact_gate(path, cb_path, sf_dir,
-                                                     spark)
-    if why is not None:
-        raise ValueError(why)
-    df = _spread(raw, "vec_id")
-    if install:
-        session_state.install(PQCODES_NAME, spark, sf_dir,
-                              (df, fold, cohort), loaded_from=path)
-    return df
-
-
-def pq_codebooks_from_env(spark: SparkSession, sf_dir: str) -> DataFrame | None:
-    """Env-seed the PQ sub-quantizers — ``centroids_from_env`` (lazily
-    re-read m x k rows) plus the r16 residual-basis pairing check: when a
-    sibling ``ivf_centroids`` artifact exists in the env dir, the
-    codebooks' recorded ``centroids_fold`` must match its content fold
-    (residual codebooks under a different coarse quantizer would encode
-    against the wrong basis and silently corrupt every ADC score). A dir
-    with no centroid artifact is accepted — the session then trains the
-    deterministic coarse quantizer from the same corpus the meta's
-    snapshot digest pins, which reproduces the recorded fold."""
-    df = _from_env(spark, sf_dir, PQCB_NAME, _pqcb_params(),
-                   persist=False)
-    if df is None:
-        return None
-    base = os.environ.get(ENV_ARTIFACT_DIR)
-    cent_path = os.path.join(base, CENTROIDS_NAME)
-    if os.path.exists(os.path.join(cent_path, _META_FILE)):
-        lin = _read_meta(os.path.join(base, PQCB_NAME)).get("lineage") or {}
-        try:
-            _check_meta(cent_path, sf_dir, _centroid_params())
-            cent_fold = _centroid_fold(spark.read.parquet(cent_path))
-        except Exception as exc:
-            warnings.warn(f"ignoring {ENV_ARTIFACT_DIR} pq_codebooks: "
-                          f"sibling ivf_centroids unreadable ({exc})")
-            return None
-        if lin.get("centroids_fold") != cent_fold:
-            warnings.warn(
-                f"ignoring {ENV_ARTIFACT_DIR} pq_codebooks: trained on "
-                f"residuals vs a different coarse quantizer (fold "
-                f"{lin.get('centroids_fold')}) than the sibling "
-                f"ivf_centroids artifact ({cent_fold})")
-            return None
-    return df
-
-
-def pq_codes_from_env(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, str, int | None] | None:
-    """Env-seed the stored compressed corpus — ``assignments_from_env``
-    for PQ: the ``_from_env`` protocol with the pairing checks it cannot
-    express, returning ``(df, codebook_fold, max_cohort)`` for the search
-    layer's use-time fold gate and aggregation-free ``refine='auto'``.
-    The gate's reads are bounded: three metas, two small fold scans, two
-    metadata counts."""
+def seed_from_env(spark: SparkSession, sf_dir: str, name: str):
+    """The session value of ``$SPARK_GRAFT_ARTIFACT_DIR/<name>`` if it is
+    present and can serve ``sf_dir``; None otherwise, with a warning when
+    it is present but cannot serve. Runs inside the build of the session
+    entry it seeds: the build installs the returned value; this only
+    reads, persists, and records the seed path on the entry being built,
+    for materialize's seeded-path guard."""
     base = os.environ.get(ENV_ARTIFACT_DIR)
     if not base:
         return None
-    path = os.path.join(base, PQCODES_NAME)
+    path = os.path.join(base, name)
     if not os.path.exists(os.path.join(path, _META_FILE)):
         return None
-    why, fold, raw, cohort = _pq_codes_artifact_gate(
-        path, os.path.join(base, PQCB_NAME), sf_dir, spark)
-    if why is not None:
-        warnings.warn(f"ignoring {ENV_ARTIFACT_DIR} artifact: {why}")
+    try:
+        df, value = _open(spark, sf_dir, path, name)
+    except ValueError as exc:
+        warnings.warn(f"ignoring {ENV_ARTIFACT_DIR} artifact: {exc}")
         return None
-    df = _spread(raw, "vec_id").persist()
-    session_state.record_seed(PQCODES_NAME, spark, sf_dir, path)
-    return df, fold, cohort
-
-
-# ---------------------------------------------------------------------------
-# token spine
-# ---------------------------------------------------------------------------
-
-def materialize_spine(spark: SparkSession, sf_dir: str, artifact_dir: str,
-                      digest: dict | None = None) -> str:
-    """The 3-column (doc_id, source, n_tokens) token spine every packing/
-    batching/budgeting kernel consumes — cheap relative to the pair graph,
-    but at 100 TB the tokenize scan behind it is a full corpus pass worth
-    materializing once."""
-    from pyspark_coding_challenge_spark.llm.text import shared_token_spine_for_dir
-
-    path = os.path.join(artifact_dir, SPINE_NAME)
-    if _seeded_from(spark, sf_dir, SPINE_NAME, path):
-        return path
-    df = shared_token_spine_for_dir(spark, sf_dir)
-    if _seeded_from(spark, sf_dir, SPINE_NAME, path):
-        return path  # builder env-seeded from this path — see materialize_pairs
-    df.write.mode("overwrite").parquet(path)
-    _write_meta(path, sf_dir, _spine_params(),
-                lineage={"snapshot": digest or corpus_digest(spark, sf_dir),
-                         "patched_from": None})
-    return path
-
-
-def load_spine(spark: SparkSession, sf_dir: str, artifact_dir: str,
-               install: bool = True) -> DataFrame:
-    path = os.path.join(artifact_dir, SPINE_NAME)
-    _check_meta(path, sf_dir, _spine_params())
-    df = _spread(spark.read.parquet(path), "doc_id")
-    if install:
-        _install_persisted(SPINE_NAME, spark, sf_dir, df, path)
-    return df
-
-
-# ---------------------------------------------------------------------------
-# fused per-doc signal relation
-# ---------------------------------------------------------------------------
-
-def materialize_signals(spark: SparkSession, sf_dir: str,
-                        artifact_dir: str, digest: dict | None = None) -> str:
-    """The 15-column fused per-doc signal relation (token/stopword/marker/
-    2-gram counts) — the dominant text-side cold cost: every cold session
-    re-tokenizes the whole corpus to rebuild it, which at 100 TB is a full
-    corpus pass per restart."""
-    from pyspark_coding_challenge_spark.llm.text import shared_doc_signals_for_dir
-
-    path = os.path.join(artifact_dir, SIGNALS_NAME)
-    if _seeded_from(spark, sf_dir, SIGNALS_NAME, path):
-        return path
-    df = shared_doc_signals_for_dir(spark, sf_dir)
-    if _seeded_from(spark, sf_dir, SIGNALS_NAME, path):
-        return path  # builder env-seeded from this path — see materialize_pairs
-    df.write.mode("overwrite").parquet(path)
-    _write_meta(path, sf_dir, _signals_params(),
-                lineage={"snapshot": digest or corpus_digest(spark, sf_dir),
-                         "patched_from": None})
-    return path
-
-
-def load_signals(spark: SparkSession, sf_dir: str, artifact_dir: str,
-                 install: bool = True) -> DataFrame:
-    path = os.path.join(artifact_dir, SIGNALS_NAME)
-    _check_meta(path, sf_dir, _signals_params())
-    df = _spread(spark.read.parquet(path), "doc_id")
-    if install:
-        _install_persisted(SIGNALS_NAME, spark, sf_dir, df, path)
-    return df
+    if ARTIFACTS[name].persist:
+        df.persist()
+    session_state.record_seed(name, spark, sf_dir, path)
+    return value
 
 
 @_with_lease
 def materialize_all(spark: SparkSession, sf_dir: str, artifact_dir: str) -> dict:
-    """One-call production entry: land all the artifacts. Returns
-    name -> path. Pairs before bands before cc_labels: the pair build
-    populates the shared banded-index session cache (bands is a free
-    write) and the label build reads the cached pair graph. One digest
-    scan serves every lineage-carrying artifact — and the digests
-    artifact IS that scan's per-doc form, so it is landed from the same
-    pass."""
-    digest = corpus_digest(spark, sf_dir)
-    emb_digest = embeddings_digest(spark, sf_dir)
-    return {
-        PAIRS_NAME: materialize_pairs(spark, sf_dir, artifact_dir, digest),
-        BANDS_NAME: materialize_bands(spark, sf_dir, artifact_dir, digest),
-        CC_NAME: materialize_cc_labels(spark, sf_dir, artifact_dir, digest),
-        DIGESTS_NAME: materialize_doc_digests(spark, sf_dir, artifact_dir,
-                                              digest),
-        # span_pos BEFORE spans: sharedness derives from the landed index
-        # (a thin-int aggregate) instead of a second tokenize pass
-        SPANPOS_NAME: materialize_span_pos(spark, sf_dir, artifact_dir,
-                                           digest),
-        SPANS_NAME: materialize_spans(spark, sf_dir, artifact_dir, digest),
-        SPANSTATS_NAME: materialize_span_stats(spark, sf_dir, artifact_dir,
-                                               digest),
-        CENTROIDS_NAME: materialize_ivf_centroids(spark, sf_dir, artifact_dir,
-                                                  emb_digest=emb_digest),
-        VECDIG_NAME: materialize_vec_digests(spark, sf_dir, artifact_dir,
-                                             emb_digest=emb_digest),
-        # after centroids — the index is assigned from the landed artifact
-        ASSIGN_NAME: materialize_ivf_assignments(spark, sf_dir, artifact_dir,
-                                                 emb_digest=emb_digest),
-        PQCB_NAME: materialize_pq_codebooks(spark, sf_dir, artifact_dir,
-                                            emb_digest=emb_digest),
-        # after codebooks — codes are encoded from the landed artifact
-        PQCODES_NAME: materialize_pq_codes(spark, sf_dir, artifact_dir,
-                                           emb_digest=emb_digest),
-        SPINE_NAME: materialize_spine(spark, sf_dir, artifact_dir, digest),
-        SIGNALS_NAME: materialize_signals(spark, sf_dir, artifact_dir, digest),
-    }
+    """One-call production entry: land every artifact, in table order.
+    Returns name -> path. One digest scan per side serves every
+    artifact's lineage."""
+    digests = {side: snapshot_digest(spark, sf_dir, side)
+               for side in ("documents", "embeddings")}
+    return {name: materialize(spark, sf_dir, artifact_dir, name,
+                              digests[spec.side])
+            for name, spec in ARTIFACTS.items()}
 
 
 def load_all(spark: SparkSession, sf_dir: str, artifact_dir: str) -> dict:
-    # doc_digests has no session-cache consumer (it is refresh-time state
-    # for update_pairs_incremental), so it is not loaded here
-    out = {
-        PAIRS_NAME: load_pairs(spark, sf_dir, artifact_dir),
-        BANDS_NAME: load_bands(spark, sf_dir, artifact_dir),
-        SPANS_NAME: load_spans(spark, sf_dir, artifact_dir),
-        CENTROIDS_NAME: load_ivf_centroids(spark, sf_dir, artifact_dir),
-        SPINE_NAME: load_spine(spark, sf_dir, artifact_dir),
-        SIGNALS_NAME: load_signals(spark, sf_dir, artifact_dir),
-    }
-    # cc_labels is the one artifact newer than the others — a pre-r9
-    # artifact dir (all six older artifacts present and valid) must not
-    # fail the whole load; the cluster consumers then just rebuild labels
-    # from the loaded pair graph (r9 review finding)
-    try:
-        out[CC_NAME] = load_cc_labels(spark, sf_dir, artifact_dir)
-    except ValueError as exc:
-        warnings.warn(f"cc_labels not loaded ({exc}); cluster labels will "
-                      "be recomputed from the loaded pair graph")
-        out[CC_NAME] = None
-    # ivf_assignments is r12-new and opt-in — a pre-r12 artifact dir (or
-    # one that chose not to store the index) must not fail the load NOR
-    # warn (absence is a configuration, not degradation; r12 review
-    # finding); IVF searches then just assign inline (same results). A
-    # PRESENT-but-invalid index still warns.
-    if not os.path.exists(os.path.join(artifact_dir, ASSIGN_NAME,
-                                       _META_FILE)):
-        out[ASSIGN_NAME] = None
-    else:
+    """Load every artifact that seeds a session entry; returns name ->
+    relation. The refresh-time state (digests, span positions and stats)
+    has no session consumer and is not loaded. An artifact that cannot
+    serve raises ValueError unless its spec names a ``fallback`` (warned,
+    None); an ``optional`` one that is absent, or one whose ``needs``
+    sibling did not load, is None without a warning."""
+    out: dict = {}
+    for name, spec in ARTIFACTS.items():
+        if name not in session_state.KINDS:
+            continue
+        absent = not os.path.exists(
+            os.path.join(artifact_dir, name, _META_FILE))
+        if (spec.optional and absent) or (
+                spec.needs and out.get(spec.needs) is None):
+            out[name] = None
+            continue
         try:
-            out[ASSIGN_NAME] = load_ivf_assignments(spark, sf_dir,
-                                                    artifact_dir)
+            out[name] = load(spark, sf_dir, artifact_dir, name)
         except ValueError as exc:
-            warnings.warn(f"ivf_assignments not loaded ({exc}); IVF "
-                          "searches will assign inline")
-            out[ASSIGN_NAME] = None
-    # the PQ pair is r14-new and opt-in — same absence-is-configuration
-    # rule as ivf_assignments; PRESENT-but-invalid still warns, and codes
-    # only serve when their codebooks loaded (the fold pairing needs both)
-    if not os.path.exists(os.path.join(artifact_dir, PQCB_NAME,
-                                       _META_FILE)):
-        out[PQCB_NAME] = None
-        out[PQCODES_NAME] = None
-        return out
-    try:
-        out[PQCB_NAME] = load_pq_codebooks(spark, sf_dir, artifact_dir)
-    except ValueError as exc:
-        warnings.warn(f"pq_codebooks not loaded ({exc}); PQ searches will "
-                      "train inline")
-        out[PQCB_NAME] = None
-        out[PQCODES_NAME] = None
-        return out
-    if not os.path.exists(os.path.join(artifact_dir, PQCODES_NAME,
-                                       _META_FILE)):
-        out[PQCODES_NAME] = None
-        return out
-    try:
-        out[PQCODES_NAME] = load_pq_codes(spark, sf_dir, artifact_dir)
-    except ValueError as exc:
-        warnings.warn(f"pq_codes not loaded ({exc}); PQ searches will "
-                      "encode inline")
-        out[PQCODES_NAME] = None
+            if spec.fallback is None:
+                raise
+            warnings.warn(f"{name} not loaded ({exc}); {spec.fallback}")
+            out[name] = None
     return out
 
 
@@ -1947,7 +1408,6 @@ def _refresh_ctx(spark: SparkSession, old_sf_dir: str, new_sf_dir: str,
     to ``new_digests`` (if given) and then to the scan, with a warning.
     Takes precedence over ``new_digests`` when both pass their gates."""
     from pyspark_coding_challenge_spark.llm import dedup as D
-    from pyspark_coding_challenge_spark.sources.readers import read_table
 
     old_digest, old_digests, dig_note = _old_digest_state(
         spark, old_sf_dir, artifact_dir
@@ -2129,23 +1589,16 @@ def update_pairs_incremental(spark: SparkSession, old_sf_dir: str,
         # points at this artifact_dir and the stale meta happens to pass
         # the sf_dir+params check for new_sf_dir (env seeding never sees
         # the lineage digest that just FAILED), the builder would seed
-        # from the stale bytes and materialize_* would no-op on its
+        # from the stale bytes and materialize would no-op on its
         # _seeded_from guard — "full rebuild" would silently keep the
         # stale artifact (r8 review finding).
         _drop_stale_meta(pairs_path, bands_path, cc_path, dig_path)
         new_digest = ctx["new_digest"]
-        return {
-            "mode": "full_rebuild",
-            "reason": reason,
-            PAIRS_NAME: materialize_pairs(spark, new_sf_dir, artifact_dir,
-                                          new_digest),
-            BANDS_NAME: materialize_bands(spark, new_sf_dir, artifact_dir,
-                                          new_digest),
-            CC_NAME: materialize_cc_labels(spark, new_sf_dir, artifact_dir,
-                                           new_digest),
-            DIGESTS_NAME: materialize_doc_digests(spark, new_sf_dir,
-                                                  artifact_dir, new_digest),
-        }
+        out = {"mode": "full_rebuild", "reason": reason}
+        for name in (PAIRS_NAME, BANDS_NAME, CC_NAME, DIGESTS_NAME):
+            out[name] = materialize(spark, new_sf_dir, artifact_dir, name,
+                                    new_digest)
+        return out
 
     # a missing/stale CC artifact degrades the label patch (only) to a
     # full relabel of the patched graph — never the whole refresh
@@ -2156,7 +1609,7 @@ def update_pairs_incremental(spark: SparkSession, old_sf_dir: str,
     )
     # per-artifact wall clocks for the refresh-cost story (r12 judge item
     # #2b — scripts/scale_probe.py --incr records these against the
-    # matching full materialize_* walls). Compute is lazy, so each wall
+    # matching full materialize walls). Compute is lazy, so each wall
     # covers the phase that actually EVALUATES the work: the checkpoints
     # pin pairs+bands, the labels checkpoint pins CC, and each write pays
     # its own artifact's residual evaluation.
@@ -2169,7 +1622,7 @@ def update_pairs_incremental(spark: SparkSession, old_sf_dir: str,
     )
     # the patched frames READ the very paths being overwritten: pin the
     # bytes before mode("overwrite") deletes them (same trap class as the
-    # _seeded_from guard in materialize_*)
+    # _seeded_from guard in materialize)
     new_bands = new_bands.localCheckpoint()
     new_pairs = new_pairs.localCheckpoint()
     walls["pairs_bands_patch"] = round(time.perf_counter() - t0, 3)
@@ -2579,7 +2032,7 @@ def update_centroids_incremental(spark: SparkSession, old_sf_dir: str,
       Cost: one skinny digest diff + one churn-sized drift check — at
       100 TB this replaces 2-corpus-scans-per-Lloyd-iteration retraining
       with work proportional to the churn.
-    * **retrain** — full ``materialize_ivf_centroids`` on the new corpus,
+    * **retrain** — full ``materialize`` of the quantizer on the new corpus,
       forced by any gate: (1) lineage (stored quantizer not trained on
       exactly the old snapshot — params drift, pre-r12 meta, tampering);
       (2) churn fraction > ``CENTROID_MAX_CHURN_FRAC`` of the old vector
@@ -2627,10 +2080,6 @@ def update_centroids_incremental(spark: SparkSession, old_sf_dir: str,
     overridable: a wrong-snapshot or drifted quantizer always retrains."""
     from pyspark_coding_challenge_spark.llm import dedup as D
     from pyspark_coding_challenge_spark.llm import similarity as S
-    from pyspark_coding_challenge_spark.sources.readers import (
-        read_table,
-        rebalance_for_compute,
-    )
 
     cent_path = os.path.join(artifact_dir, CENTROIDS_NAME)
     vd_path = os.path.join(artifact_dir, VECDIG_NAME)
@@ -2648,12 +2097,12 @@ def update_centroids_incremental(spark: SparkSession, old_sf_dir: str,
         S.clear_centroid_cache(spark)
         _drop_stale_meta(cent_path, vd_path)
         emb_digest = embeddings_digest(spark, new_sf_dir)
-        materialize_ivf_centroids(spark, new_sf_dir, artifact_dir,
-                                  emb_digest=emb_digest)
+        materialize(spark, new_sf_dir, artifact_dir, CENTROIDS_NAME,
+                    emb_digest)
         walls[CENTROIDS_NAME] = round(time.perf_counter() - t0, 3)
         t0 = time.perf_counter()
-        materialize_vec_digests(spark, new_sf_dir, artifact_dir,
-                                emb_digest=emb_digest)
+        materialize(spark, new_sf_dir, artifact_dir, VECDIG_NAME,
+                    emb_digest)
         walls[VECDIG_NAME] = round(time.perf_counter() - t0, 3)
         summary.update({"mode": "retrained",
                         "reason": f"bootstrap ({vd_note})",
@@ -2664,8 +2113,8 @@ def update_centroids_incremental(spark: SparkSession, old_sf_dir: str,
             # survive it
             t0 = time.perf_counter()
             _drop_stale_meta(assign_path)
-            materialize_ivf_assignments(spark, new_sf_dir, artifact_dir,
-                                        emb_digest=emb_digest)
+            materialize(spark, new_sf_dir, artifact_dir, ASSIGN_NAME,
+                        emb_digest)
             summary[ASSIGN_NAME] = "full_rebuild"
             walls[ASSIGN_NAME] = round(time.perf_counter() - t0, 3)
         else:
@@ -2677,15 +2126,15 @@ def update_centroids_incremental(spark: SparkSession, old_sf_dir: str,
         if os.path.exists(os.path.join(pqcb_path, _META_FILE)):
             t0 = time.perf_counter()
             _drop_stale_meta(pqcb_path)
-            materialize_pq_codebooks(spark, new_sf_dir, artifact_dir,
-                                     emb_digest=emb_digest)
+            materialize(spark, new_sf_dir, artifact_dir, PQCB_NAME,
+                        emb_digest)
             summary[PQCB_NAME] = "full_rebuild"
             walls[PQCB_NAME] = round(time.perf_counter() - t0, 3)
             if os.path.exists(os.path.join(pqcodes_path, _META_FILE)):
                 t0 = time.perf_counter()
                 _drop_stale_meta(pqcodes_path)
-                materialize_pq_codes(spark, new_sf_dir, artifact_dir,
-                                     emb_digest=emb_digest)
+                materialize(spark, new_sf_dir, artifact_dir, PQCODES_NAME,
+                            emb_digest)
                 summary[PQCODES_NAME] = "full_rebuild"
                 walls[PQCODES_NAME] = round(time.perf_counter() - t0, 3)
             else:
@@ -2866,8 +2315,8 @@ def update_centroids_incremental(spark: SparkSession, old_sf_dir: str,
         # stale quantizer (the pairs updater's full-rebuild branch guards
         # the identical hole). No meta => no env seed.
         _drop_stale_meta(cent_path)
-        materialize_ivf_centroids(spark, new_sf_dir, artifact_dir,
-                                  emb_digest=new_digest)
+        materialize(spark, new_sf_dir, artifact_dir, CENTROIDS_NAME,
+                    new_digest)
     walls[CENTROIDS_NAME] = round(time.perf_counter() - t0, 3)
 
     # --- vec_digests: patch (fold lineage) or rebuild ----------------------
@@ -2892,7 +2341,7 @@ def update_centroids_incremental(spark: SparkSession, old_sf_dir: str,
                             old_digest)
         if why is None and summary["mode"] == "carried":
             lin = _read_meta(assign_path).get("lineage") or {}
-            cur_fold = _centroid_fold(cent)
+            cur_fold = _content_fold(cent, "lid")
             if lin.get("centroids_fold") != cur_fold:
                 why = ("stored assignments were made under a different "
                        "quantizer than the carried one")
@@ -2930,8 +2379,8 @@ def update_centroids_incremental(spark: SparkSession, old_sf_dir: str,
                 warnings.warn(f"{ASSIGN_NAME}: cannot patch ({why}); "
                               "full rebuild")
             _drop_stale_meta(assign_path)
-            materialize_ivf_assignments(spark, new_sf_dir, artifact_dir,
-                                        emb_digest=new_digest)
+            materialize(spark, new_sf_dir, artifact_dir, ASSIGN_NAME,
+                        new_digest)
             summary[ASSIGN_NAME] = "full_rebuild"
         walls[ASSIGN_NAME] = round(time.perf_counter() - t0, 3)
     else:
@@ -2957,7 +2406,7 @@ def update_centroids_incremental(spark: SparkSession, old_sf_dir: str,
 
         t0 = time.perf_counter()
         cent = spark.read.parquet(cent_path)  # post-decision bytes
-        cent_fold = _centroid_fold(cent)
+        cent_fold = _content_fold(cent, "lid")
         pq_reason = _lineage_gate(pqcb_path, old_sf_dir, _pqcb_params(),
                                   old_digest)
         pq_stats = None
@@ -3024,8 +2473,8 @@ def update_centroids_incremental(spark: SparkSession, old_sf_dir: str,
             # stale-meta-first: same env-seed no-op hole as the coarse
             # quantizer's retrain branch
             _drop_stale_meta(pqcb_path)
-            materialize_pq_codebooks(spark, new_sf_dir, artifact_dir,
-                                     emb_digest=new_digest)
+            materialize(spark, new_sf_dir, artifact_dir, PQCB_NAME,
+                        new_digest)
         walls[PQCB_NAME] = round(time.perf_counter() - t0, 3)
 
         # --- pq_codes: patch under a carry (delete gone + encode ONLY the
@@ -3040,7 +2489,7 @@ def update_centroids_incremental(spark: SparkSession, old_sf_dir: str,
                                 old_digest)
             if why is None and summary[PQCB_NAME] == "carried":
                 lin = _read_meta(pqcodes_path).get("lineage") or {}
-                cur_fold = _codebook_fold(cb)
+                cur_fold = _content_fold(cb, "sub", "lid")
                 if lin.get("codebooks_fold") != cur_fold:
                     why = ("stored codes were encoded under different "
                            "codebooks than the carried ones")
@@ -3153,7 +2602,7 @@ def update_centroids_incremental(spark: SparkSession, old_sf_dir: str,
                 # <= stored max) + (churn rows of it, <= churn max) — so
                 # stored + churn is a SAFE upper bound in O(churn) work;
                 # deletions only shrink cohorts. A rebuild recomputes the
-                # exact value (materialize_pq_codes). Auto-refine reading
+                # exact value (the full rebuild). Auto-refine reading
                 # the bound can only over-size the shortlist, never
                 # under-cover a cohort.
                 bound = int(stored_cohort) + int(churn_cohort)
@@ -3171,8 +2620,8 @@ def update_centroids_incremental(spark: SparkSession, old_sf_dir: str,
                     warnings.warn(f"{PQCODES_NAME}: cannot patch ({why}); "
                                   "full rebuild")
                 _drop_stale_meta(pqcodes_path)
-                materialize_pq_codes(spark, new_sf_dir, artifact_dir,
-                                     emb_digest=new_digest)
+                materialize(spark, new_sf_dir, artifact_dir, PQCODES_NAME,
+                            new_digest)
                 summary[PQCODES_NAME] = "full_rebuild"
                 summary["pq_codes_reason"] = why
             walls[PQCODES_NAME] = round(time.perf_counter() - t0, 3)
@@ -3255,12 +2704,6 @@ COMPACT_MAX_PART_FILES = int(_env_float(
 COMPACT_MAX_BUCKET_FILES = int(_env_float(
     "SPARK_GRAFT_COMPACT_MAX_BUCKET_FILES", "4"))
 
-#: every artifact leaf compact_artifacts owns, flat or hive-partitioned
-_ALL_ARTIFACT_NAMES = (
-    PAIRS_NAME, BANDS_NAME, CC_NAME, DIGESTS_NAME, SPANPOS_NAME, SPANS_NAME,
-    SPANSTATS_NAME, SPINE_NAME, SIGNALS_NAME, CENTROIDS_NAME, VECDIG_NAME,
-    ASSIGN_NAME, PQCB_NAME, PQCODES_NAME,
-)
 
 
 def _part_file_names(path: str) -> list[str]:
@@ -3329,7 +2772,7 @@ def artifact_file_counts(artifact_dir: str) -> dict:
     """Visible part-file count per artifact leaf (hive-partitioned leaves
     count across all their partitions) — the probe's before/after field."""
     out: dict = {}
-    for name in _ALL_ARTIFACT_NAMES:
+    for name in ARTIFACTS:
         path = os.path.join(artifact_dir, name)
         if not os.path.isdir(path):
             continue
@@ -3412,7 +2855,7 @@ def compact_artifacts(spark: SparkSession, artifact_dir: str,
               else max_bucket_files)
     report: dict = {}
     touched_any = False
-    for name in _ALL_ARTIFACT_NAMES:
+    for name in ARTIFACTS:
         path = os.path.join(artifact_dir, name)
         _recover_swap(path)
         # crashed PER-BUCKET swaps too (r15 advisor): recover every bucket

@@ -490,7 +490,7 @@ def ivf_centroids_for_dir(spark: SparkSession, sf_dir: str,
     """Session-cached trained IVF quantizer for ``sf_dir`` — the same
     materialize-once idiom as ``dedup.verified_pairs_for_dir``: training is
     the expensive pass (2 corpus scans per Lloyd iteration), the result is
-    n_lists rows. ``llm.artifacts.load_ivf_centroids`` seeds this cache
+    n_lists rows. ``llm.artifacts.load`` seeds this cache
     from a parquet artifact so a NEW session can search without retraining.
     Staleness contract matches the pair cache (key = applicationId +
     sf_dir; ``clear_centroid_cache`` is the release valve). One training
@@ -500,7 +500,8 @@ def ivf_centroids_for_dir(spark: SparkSession, sf_dir: str,
             return train_ivf_centroids(e)
         from pyspark_coding_challenge_spark.llm import artifacts
 
-        seeded = artifacts.centroids_from_env(spark, sf_dir)
+        seeded = artifacts.seed_from_env(spark, sf_dir,
+                                         artifacts.CENTROIDS_NAME)
         return seeded if seeded is not None else train_ivf_centroids(
             _embeddings_for_training(spark, sf_dir))
 
@@ -550,7 +551,8 @@ def ivf_assignments_for_dir(spark: SparkSession, sf_dir: str,
 
     cached = session_state.get_or_build(
         "ivf_assignments", spark, sf_dir,
-        lambda: artifacts.assignments_from_env(spark, sf_dir))
+        lambda: artifacts.seed_from_env(spark, sf_dir,
+                                        artifacts.ASSIGN_NAME))
     if cached is None:
         return None
     df, fold = cached
@@ -558,7 +560,7 @@ def ivf_assignments_for_dir(spark: SparkSession, sf_dir: str,
         return df
 
     def _verdict() -> tuple[DataFrame, bool]:
-        matched = artifacts._centroid_fold(cent) == fold
+        matched = artifacts._content_fold(cent, "lid") == fold
         if not matched:
             warnings.warn(
                 "stored ivf_assignments were made under a different "
@@ -717,11 +719,11 @@ def _build_stored_ivf_state(spark: SparkSession, sf_dir: str):
     # stored state: the OLD snapshot's quantizers (coarse + PQ),
     # digests, inverted index, and compressed code corpus
     dig = A.embeddings_digest(spark, old_dir)
-    A.materialize_ivf_centroids(spark, old_dir, art, emb_digest=dig)
-    A.materialize_vec_digests(spark, old_dir, art, emb_digest=dig)
-    A.materialize_ivf_assignments(spark, old_dir, art, emb_digest=dig)
-    A.materialize_pq_codebooks(spark, old_dir, art, emb_digest=dig)
-    A.materialize_pq_codes(spark, old_dir, art, emb_digest=dig)
+    A.materialize(spark, old_dir, art, A.CENTROIDS_NAME, dig)
+    A.materialize(spark, old_dir, art, A.VECDIG_NAME, dig)
+    A.materialize(spark, old_dir, art, A.ASSIGN_NAME, dig)
+    A.materialize(spark, old_dir, art, A.PQCB_NAME, dig)
+    A.materialize(spark, old_dir, art, A.PQCODES_NAME, dig)
     # drop the old-snapshot training cache before the refresh (whose
     # own end-of-run clear is part of its contract)
     clear_centroid_cache(spark)
@@ -1147,7 +1149,7 @@ def pq_code_cohort_max(codes: DataFrame) -> int:
     the residual quantizer's resolution; the auto policy sizes the
     shortlist past whatever cohort remains. One thin aggregation over the
     code relation (m rows/vector -> one signature/vector); a deployment
-    computes it once at codes-build time — ``materialize_pq_codes``
+    computes it once at codes-build time — ``materialize`` of ``pq_codes``
     stores it in the artifact meta and the patch path maintains an upper
     bound (r15 judge item #2), so the stored-codes serving path never
     pays this aggregation."""
@@ -1291,7 +1293,7 @@ def pq_codebooks_for_dir(spark: SparkSession, sf_dir: str,
                          cent: DataFrame | None = None) -> DataFrame:
     """Session-cached PQ codebooks for ``sf_dir`` — the
     ``ivf_centroids_for_dir`` idiom (training is the expensive pass, the
-    result is m x k rows; ``llm.artifacts.load_pq_codebooks`` seeds this
+    result is m x k rows; ``llm.artifacts.load`` seeds this
     cache from a parquet artifact so a NEW session can search without
     retraining, and the env knob seeds it when no corpus relation was
     handed in).
@@ -1306,7 +1308,8 @@ def pq_codebooks_for_dir(spark: SparkSession, sf_dir: str,
         if emb is None:
             from pyspark_coding_challenge_spark.llm import artifacts
 
-            seeded = artifacts.pq_codebooks_from_env(spark, sf_dir)
+            seeded = artifacts.seed_from_env(spark, sf_dir,
+                                             artifacts.PQCB_NAME)
             if seeded is not None:
                 return seeded
             emb = _embeddings_for_training(spark, sf_dir)
@@ -1343,7 +1346,8 @@ def pq_codes_with_cohort_for_dir(
 
     cached = session_state.get_or_build(
         "pq_codes", spark, sf_dir,
-        lambda: artifacts.pq_codes_from_env(spark, sf_dir))
+        lambda: artifacts.seed_from_env(spark, sf_dir,
+                                        artifacts.PQCODES_NAME))
     if cached is None:
         return None, None
     df, fold, max_cohort = cached
@@ -1351,7 +1355,7 @@ def pq_codes_with_cohort_for_dir(
         return df, max_cohort
 
     def _verdict() -> tuple[DataFrame, bool]:
-        matched = artifacts._codebook_fold(codebooks) == fold
+        matched = artifacts._content_fold(codebooks, "sub", "lid") == fold
         if not matched:
             warnings.warn(
                 "stored pq_codes were encoded under different codebooks "

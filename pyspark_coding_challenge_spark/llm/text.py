@@ -94,7 +94,8 @@ def shared_doc_signals_for_dir(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _build() -> DataFrame:
         from pyspark_coding_challenge_spark.llm import artifacts
 
-        seeded = artifacts.signals_from_env(spark, sf_dir)
+        seeded = artifacts.seed_from_env(spark, sf_dir,
+                                         artifacts.SIGNALS_NAME)
         if seeded is not None:
             return seeded
         return doc_signals_relation(
@@ -158,7 +159,8 @@ def shared_token_spine_for_dir(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _build() -> DataFrame:
         from pyspark_coding_challenge_spark.llm import artifacts
 
-        spine = artifacts.spine_from_env(spark, sf_dir)
+        spine = artifacts.seed_from_env(spark, sf_dir,
+                                        artifacts.SPINE_NAME)
         if spine is None:
             d = read_table(spark, sf_dir, "documents")
             spine = token_spine_relation(d).persist()
@@ -595,7 +597,8 @@ def shared_span_starts_for_dir(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _build() -> DataFrame:
         from pyspark_coding_challenge_spark.llm import artifacts
 
-        seeded = artifacts.spans_from_env(spark, sf_dir)
+        seeded = artifacts.seed_from_env(spark, sf_dir,
+                                         artifacts.SPANS_NAME)
         if seeded is not None:
             return seeded
         d = rebalance_for_compute(read_table(spark, sf_dir, "documents"),
@@ -1216,12 +1219,12 @@ def _build_patched_text_state(spark: SparkSession, sf_dir: str):
     # stored state: the OLD snapshot's text-side artifacts (digests
     # power the diff; signals/spine/span_pos/spans get patched)
     digest = A.corpus_digest(spark, old_dir)
-    A.materialize_doc_digests(spark, old_dir, art, digest)
-    A.materialize_signals(spark, old_dir, art, digest)
-    A.materialize_spine(spark, old_dir, art, digest)
-    A.materialize_span_pos(spark, old_dir, art, digest)
-    A.materialize_spans(spark, old_dir, art, digest)
-    A.materialize_span_stats(spark, old_dir, art, digest)
+    A.materialize(spark, old_dir, art, A.DIGESTS_NAME, digest)
+    A.materialize(spark, old_dir, art, A.SIGNALS_NAME, digest)
+    A.materialize(spark, old_dir, art, A.SPINE_NAME, digest)
+    A.materialize(spark, old_dir, art, A.SPANPOS_NAME, digest)
+    A.materialize(spark, old_dir, art, A.SPANS_NAME, digest)
+    A.materialize(spark, old_dir, art, A.SPANSTATS_NAME, digest)
     # the derived snapshots churn ~40% of the docs BY CONSTRUCTION, so
     # the churn-size gate is pinned per-call: an operator tuning
     # SPARK_GRAFT_INCR_MAX_CHURN_FRAC below 0.4 (a legitimate

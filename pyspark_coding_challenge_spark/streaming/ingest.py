@@ -439,12 +439,12 @@ def _build_ingest_refresh_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingest_documents(spark, src, dest)
     digest = A.corpus_digest(spark, dest)
     art = os.path.join(dest, "art")
-    A.materialize_doc_digests(spark, dest, art, digest)
-    A.materialize_signals(spark, dest, art, digest)
-    A.materialize_spine(spark, dest, art, digest)
-    A.materialize_span_pos(spark, dest, art, digest)
-    A.materialize_spans(spark, dest, art, digest)
-    A.materialize_span_stats(spark, dest, art, digest)
+    A.materialize(spark, dest, art, A.DIGESTS_NAME, digest)
+    A.materialize(spark, dest, art, A.SIGNALS_NAME, digest)
+    A.materialize(spark, dest, art, A.SPINE_NAME, digest)
+    A.materialize(spark, dest, art, A.SPANPOS_NAME, digest)
+    A.materialize(spark, dest, art, A.SPANS_NAME, digest)
+    A.materialize(spark, dest, art, A.SPANSTATS_NAME, digest)
     # bounded 1-row agg: the last committed batch of the first ingest
     b0 = spark.read.parquet(os.path.join(dest, DIGESTS_LEAF)) \
         .agg(F.max("batch_id").alias("m")).collect()[0]["m"]

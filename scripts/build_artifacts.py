@@ -1,15 +1,18 @@
 #!/usr/bin/env python
 """CLI for the cross-session artifact builder (llm/artifacts.py): land the
-verified pair graph, banded index, shared-span relation, trained IVF
-quantizer, token spine, and fused doc signals as parquet artifacts a later
-job loads with ``load_all``/``load_pairs``/... — or, with
-``SPARK_GRAFT_ARTIFACT_DIR`` pointing at ``artifact_dir``, that every
-``*_for_dir`` builder seeds from automatically.
+artifacts of ``artifacts.ARTIFACTS`` as parquet that a later job loads
+with ``load_all``/``load`` — or, with ``SPARK_GRAFT_ARTIFACT_DIR``
+pointing at ``artifact_dir``, that every ``*_for_dir`` builder seeds
+from automatically.
 
 Usage:
     python scripts/build_artifacts.py <sf_dir> <artifact_dir> [names...]
     python scripts/build_artifacts.py --incremental <old_sf_dir> <new_sf_dir> <artifact_dir>
     python scripts/build_artifacts.py --compact <artifact_dir>
+
+``names`` defaults to every artifact in the table (``materialize_all``);
+given names are built in table order, which is dependency order. Unknown
+names exit 2, listing the table's names, before any Spark work.
 
 ``--compact`` is the maintenance pass (r15): rewrite any artifact leaf —
 or any pbucket partition of the hive-partitioned ``pq_codes`` — whose
@@ -19,21 +22,13 @@ byte-for-byte so every lineage fold and hash gate stays green. Run it
 offline between refreshes (the table-format OPTIMIZE contract); prints
 the per-artifact before/after file counts as JSON.
 
-``names`` defaults to all (verified_pairs banded_index cc_labels
-doc_digests span_pos_index shared_spans span_stats ivf_centroids
-vec_digests ivf_assignments pq_codebooks pq_codes token_spine
-doc_signals). Exits non-zero on unknown names before any Spark work.
-
-``--incremental`` patches the dedup-side artifacts (pair graph, banded
-index, CC labels, per-doc digests) from the snapshot diff between the two
-corpus dirs instead of rebuilding them from the whole corpus
-(``artifacts.update_pairs_incremental``): the stored artifacts' lineage
-digest must match the OLD corpus, else it falls back to a warned full
-rebuild from the NEW corpus. With a stored ``doc_digests`` artifact the
-old corpus dir is never read — only its digests are. The text-side
-artifacts (doc_signals, token_spine, shared_spans via the span-position
-index) are patched by ``artifacts.update_text_incremental`` in the same
-invocation.
+``--incremental`` refreshes every refreshable artifact from the snapshot
+diff between the two corpus dirs instead of rebuilding it from the whole
+corpus (``artifacts.update_all_incremental``): an artifact patches when
+its lineage digest matches the OLD corpus, else it falls back to a warned
+full rebuild from the NEW corpus. With stored ``doc_digests`` /
+``vec_digests`` artifacts the old corpus dir is never read — only its
+digests are.
 """
 
 from __future__ import annotations
@@ -82,27 +77,11 @@ def main() -> None:
         raise SystemExit(2)
     sf_dir, artifact_dir = args[0], args[1]
 
-    builders = {
-        A.PAIRS_NAME: A.materialize_pairs,
-        A.BANDS_NAME: A.materialize_bands,
-        A.CC_NAME: A.materialize_cc_labels,
-        A.DIGESTS_NAME: A.materialize_doc_digests,
-        A.SPANPOS_NAME: A.materialize_span_pos,
-        A.SPANS_NAME: A.materialize_spans,
-        A.SPANSTATS_NAME: A.materialize_span_stats,
-        A.CENTROIDS_NAME: A.materialize_ivf_centroids,
-        A.VECDIG_NAME: A.materialize_vec_digests,
-        A.ASSIGN_NAME: A.materialize_ivf_assignments,
-        A.PQCB_NAME: A.materialize_pq_codebooks,
-        A.PQCODES_NAME: A.materialize_pq_codes,
-        A.SPINE_NAME: A.materialize_spine,
-        A.SIGNALS_NAME: A.materialize_signals,
-    }
     names = args[2:]
-    unknown = [n for n in names if n not in builders]
+    unknown = [n for n in names if n not in A.ARTIFACTS]
     if unknown:
-        print(f"unknown artifact names: {unknown}; choose from {list(builders)}",
-              file=sys.stderr)
+        print(f"unknown artifact names: {unknown}; choose from "
+              f"{list(A.ARTIFACTS)}", file=sys.stderr)
         raise SystemExit(2)
 
     from pyspark_coding_challenge_spark.session import get_spark
@@ -110,8 +89,8 @@ def main() -> None:
     spark = get_spark(app_name="build_artifacts")
     spark.sparkContext.setLogLevel("ERROR")
     if not names:
-        # the one-call entry shares a single digest scan across every
-        # lineage artifact and derives shared_spans from the just-landed
+        # the one-call entry shares a single digest scan per side across
+        # every artifact and derives shared_spans from the just-landed
         # span_pos index (r9 review finding: per-name calls with
         # digest=None paid one corpus digest scan PER artifact and
         # re-tokenized the corpus for spans right after span_pos landed)
@@ -119,22 +98,17 @@ def main() -> None:
             print(f"{n}: {path}")
     else:
         # explicit names: one shared digest scan PER SIDE, computed lazily
-        # — the documents digest for the text/dedup builders, the
-        # embeddings digest for the quantizer + vec_digests pair (passing
-        # the docs digest there would record a wrong lineage snapshot)
-        digest = None
-        emb_digest = None
-        for n in names:
-            fn = builders[n]
-            if n in (A.CENTROIDS_NAME, A.VECDIG_NAME, A.ASSIGN_NAME,
-                     A.PQCB_NAME, A.PQCODES_NAME):
-                if emb_digest is None:
-                    emb_digest = A.embeddings_digest(spark, sf_dir)
-                path = fn(spark, sf_dir, artifact_dir, emb_digest=emb_digest)
-            else:
-                if digest is None:
-                    digest = A.corpus_digest(spark, sf_dir)
-                path = fn(spark, sf_dir, artifact_dir, digest)
+        # (passing the documents digest to an embeddings-side artifact
+        # would record a wrong lineage snapshot)
+        digests: dict = {}
+        for n, spec in A.ARTIFACTS.items():
+            if n not in names:
+                continue
+            if spec.side not in digests:
+                digests[spec.side] = A.snapshot_digest(spark, sf_dir,
+                                                       spec.side)
+            path = A.materialize(spark, sf_dir, artifact_dir, n,
+                                 digests[spec.side])
             print(f"{n}: {path}")
     spark.stop()
 

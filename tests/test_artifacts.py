@@ -34,9 +34,9 @@ def test_pairs_artifact_round_trip_in_session(spark, tmp_path):
     )
 
     expected = _clusters_rows(spark, SF_DIR)
-    A.materialize_pairs(spark, SF_DIR, str(tmp_path))
+    A.materialize(spark, SF_DIR, str(tmp_path), A.PAIRS_NAME)
     clear_pair_cache(spark)
-    A.load_pairs(spark, SF_DIR, str(tmp_path))
+    A.load(spark, SF_DIR, str(tmp_path), A.PAIRS_NAME)
     # the pair relation every consumer starts from must read ONLY the
     # artifact — zero build-chain (documents/minhash) scans. (The final
     # dedup_clusters plan hides lineage behind CC's localCheckpoint, so
@@ -57,10 +57,11 @@ def test_pairs_artifact_round_trip_in_session(spark, tmp_path):
 def test_pairs_artifact_refuses_wrong_corpus(spark, tmp_path):
     from pyspark_coding_challenge_spark.llm.dedup import clear_pair_cache
 
-    A.materialize_pairs(spark, SF_DIR, str(tmp_path))
+    A.materialize(spark, SF_DIR, str(tmp_path), A.PAIRS_NAME)
     clear_pair_cache(spark)
     with pytest.raises(ValueError, match="built from"):
-        A.load_pairs(spark, "/root/testdata/sf0.01", str(tmp_path))
+        A.load(spark, os.path.join(os.path.dirname(SF_DIR), "sf0.01"),
+               str(tmp_path), A.PAIRS_NAME)
 
 
 def test_spans_artifact_round_trip(spark, tmp_path):
@@ -70,9 +71,9 @@ def test_spans_artifact_round_trip(spark, tmp_path):
     )
 
     expected = sorted(tuple(r) for r in text_span_dup(spark, SF_DIR).collect())
-    A.materialize_spans(spark, SF_DIR, str(tmp_path))
+    A.materialize(spark, SF_DIR, str(tmp_path), A.SPANS_NAME)
     clear_span_cache(spark)
-    A.load_spans(spark, SF_DIR, str(tmp_path))
+    A.load(spark, SF_DIR, str(tmp_path), A.SPANS_NAME)
     got = text_span_dup(spark, SF_DIR)
     assert sorted(tuple(r) for r in got.collect()) == expected
     clear_span_cache(spark)
@@ -85,9 +86,9 @@ def test_centroid_artifact_serves_search_without_training(spark, tmp_path):
     )
 
     expected = sorted(tuple(r) for r in embedding_ann_ivf(spark, SF_DIR).collect())
-    A.materialize_ivf_centroids(spark, SF_DIR, str(tmp_path))
+    A.materialize(spark, SF_DIR, str(tmp_path), A.CENTROIDS_NAME)
     clear_centroid_cache(spark)
-    A.load_ivf_centroids(spark, SF_DIR, str(tmp_path))
+    A.load(spark, SF_DIR, str(tmp_path), A.CENTROIDS_NAME)
     got = embedding_ann_ivf(spark, SF_DIR)
     assert sorted(tuple(r) for r in got.collect()) == expected
     clear_centroid_cache(spark)
@@ -106,7 +107,7 @@ spark.sparkContext.setLogLevel("ERROR")
 from pyspark_coding_challenge_spark.llm import artifacts as A
 from pyspark_coding_challenge_spark.llm.dedup import dedup_clusters, verified_pairs_for_dir
 
-A.load_pairs(spark, sf_dir, artifact_dir)
+A.load(spark, sf_dir, artifact_dir, A.PAIRS_NAME)
 src_plan = (verified_pairs_for_dir(spark, sf_dir)
             ._jdf.queryExecution().executedPlan().toString())
 assert "documents.parquet" not in src_plan, "fresh session re-ran the build chain"
@@ -121,7 +122,7 @@ def test_pairs_artifact_survives_fresh_session(spark, tmp_path):
     """True cross-session reuse: a subprocess with its own JVM loads the
     artifact and reproduces dedup_clusters bit-for-bit with zero
     minhash-chain scans."""
-    A.materialize_pairs(spark, SF_DIR, str(tmp_path))
+    A.materialize(spark, SF_DIR, str(tmp_path), A.PAIRS_NAME)
     expected = sorted(list(r) for r in __import__(
         "pyspark_coding_challenge_spark.llm.dedup", fromlist=["dedup_clusters"]
     ).dedup_clusters(spark, SF_DIR).collect())
@@ -138,7 +139,7 @@ def test_pairs_artifact_survives_fresh_session(spark, tmp_path):
 
 
 def test_materialize_after_load_same_path_is_noop(spark, tmp_path):
-    """Review finding r6: after load_pairs seeds the cache FROM an artifact
+    """Review finding r6: after load seeds the cache FROM an artifact
     path, re-materializing to that same path must not overwrite a parquet
     dir the cached relation is reading (Spark refuses, or worse) — it is a
     no-op, the bytes are already there."""
@@ -147,10 +148,10 @@ def test_materialize_after_load_same_path_is_noop(spark, tmp_path):
         dedup_minhash_lsh,
     )
 
-    A.materialize_pairs(spark, SF_DIR, str(tmp_path))
+    A.materialize(spark, SF_DIR, str(tmp_path), A.PAIRS_NAME)
     clear_pair_cache(spark)
-    A.load_pairs(spark, SF_DIR, str(tmp_path))
-    path = A.materialize_pairs(spark, SF_DIR, str(tmp_path))
+    A.load(spark, SF_DIR, str(tmp_path), A.PAIRS_NAME)
+    path = A.materialize(spark, SF_DIR, str(tmp_path), A.PAIRS_NAME)
     assert path.endswith(A.PAIRS_NAME)
     assert dedup_minhash_lsh(spark, SF_DIR).count() >= 0
     clear_pair_cache(spark)
@@ -171,7 +172,7 @@ def test_env_knob_seeds_pairs_builder(spark, tmp_path, monkeypatch):
     )
 
     expected = _clusters_rows(spark, SF_DIR)
-    A.materialize_pairs(spark, SF_DIR, str(tmp_path))
+    A.materialize(spark, SF_DIR, str(tmp_path), A.PAIRS_NAME)
     clear_pair_cache(spark)
     monkeypatch.setenv(A.ENV_ARTIFACT_DIR, str(tmp_path))
     plan = (
@@ -194,7 +195,7 @@ def test_env_knob_ignores_mismatched_corpus_with_warning(spark, tmp_path, monkey
         verified_pairs_for_dir,
     )
 
-    A.materialize_pairs(spark, SF_DIR, str(tmp_path))
+    A.materialize(spark, SF_DIR, str(tmp_path), A.PAIRS_NAME)
     clear_pair_cache(spark)
     monkeypatch.setenv(A.ENV_ARTIFACT_DIR, str(tmp_path))
     other = "/root/testdata/sf0.01"
@@ -224,8 +225,8 @@ def test_env_knob_seeds_spine_and_spans(spark, tmp_path, monkeypatch):
     expected_spine = sorted(
         tuple(r) for r in shared_token_spine_for_dir(spark, SF_DIR).collect()
     )
-    A.materialize_spans(spark, SF_DIR, str(tmp_path))
-    A.materialize_spine(spark, SF_DIR, str(tmp_path))
+    A.materialize(spark, SF_DIR, str(tmp_path), A.SPANS_NAME)
+    A.materialize(spark, SF_DIR, str(tmp_path), A.SPINE_NAME)
     clear_span_cache(spark)
     clear_token_spine_cache(spark)
     monkeypatch.setenv(A.ENV_ARTIFACT_DIR, str(tmp_path))
@@ -250,7 +251,7 @@ def test_env_knob_seeds_ivf_centroids(spark, tmp_path, monkeypatch):
     )
 
     expected = sorted(tuple(r) for r in embedding_ann_ivf(spark, SF_DIR).collect())
-    A.materialize_ivf_centroids(spark, SF_DIR, str(tmp_path))
+    A.materialize(spark, SF_DIR, str(tmp_path), A.CENTROIDS_NAME)
     clear_centroid_cache(spark)
     monkeypatch.setenv(A.ENV_ARTIFACT_DIR, str(tmp_path))
     assert sorted(tuple(r) for r in embedding_ann_ivf(spark, SF_DIR).collect()) \
@@ -261,7 +262,7 @@ def test_env_knob_seeds_ivf_centroids(spark, tmp_path, monkeypatch):
 def test_rematerialize_with_env_knob_is_noop_not_destructive(spark, tmp_path, monkeypatch):
     """r7 review finding (execution-confirmed): with the env knob pointing
     at artifact_dir — exactly what re-running scripts/build_artifacts.py
-    does — materialize_pairs' builder seeds FROM the target path mid-call;
+    does — the pairs builder seeds FROM the target path mid-call;
     the overwrite then deleted the parquet it was reading and left the
     artifact dir empty. Must be a no-op with the artifact intact."""
     from pyspark_coding_challenge_spark.llm.dedup import (
@@ -272,10 +273,10 @@ def test_rematerialize_with_env_knob_is_noop_not_destructive(spark, tmp_path, mo
     expected = sorted(
         tuple(r) for r in verified_pairs_for_dir(spark, SF_DIR).collect()
     )
-    A.materialize_pairs(spark, SF_DIR, str(tmp_path))
+    A.materialize(spark, SF_DIR, str(tmp_path), A.PAIRS_NAME)
     clear_pair_cache(spark)  # fresh-session state: cache empty, env set
     monkeypatch.setenv(A.ENV_ARTIFACT_DIR, str(tmp_path))
-    path = A.materialize_pairs(spark, SF_DIR, str(tmp_path))
+    path = A.materialize(spark, SF_DIR, str(tmp_path), A.PAIRS_NAME)
     got = sorted(tuple(r) for r in spark.read.parquet(path).collect())
     assert got == expected  # artifact bytes intact, not destroyed
     clear_pair_cache(spark)
@@ -292,7 +293,7 @@ def test_signals_artifact_env_seed_and_round_trip(spark, tmp_path, monkeypatch):
     )
 
     expected = sorted(tuple(r) for r in text_lang_id(spark, SF_DIR).collect())
-    A.materialize_signals(spark, SF_DIR, str(tmp_path))
+    A.materialize(spark, SF_DIR, str(tmp_path), A.SIGNALS_NAME)
     clear_doc_signals_cache(spark)
     monkeypatch.setenv(A.ENV_ARTIFACT_DIR, str(tmp_path))
     plan = (
@@ -304,7 +305,7 @@ def test_signals_artifact_env_seed_and_round_trip(spark, tmp_path, monkeypatch):
         == expected
     clear_doc_signals_cache(spark)
     # explicit load_* API too
-    A.load_signals(spark, SF_DIR, str(tmp_path))
+    A.load(spark, SF_DIR, str(tmp_path), A.SIGNALS_NAME)
     assert sorted(tuple(r) for r in text_lang_id(spark, SF_DIR).collect()) \
         == expected
     clear_doc_signals_cache(spark)
@@ -322,7 +323,7 @@ def test_rematerialize_after_cache_clear_rebuilds(spark, tmp_path, monkeypatch):
         verified_pairs_for_dir,
     )
 
-    A.materialize_pairs(spark, SF_DIR, str(tmp_path))
+    A.materialize(spark, SF_DIR, str(tmp_path), A.PAIRS_NAME)
     clear_pair_cache(spark)
     monkeypatch.setenv(A.ENV_ARTIFACT_DIR, str(tmp_path))
     verified_pairs_for_dir(spark, SF_DIR)  # seeds from the artifact
@@ -330,7 +331,7 @@ def test_rematerialize_after_cache_clear_rebuilds(spark, tmp_path, monkeypatch):
     monkeypatch.delenv(A.ENV_ARTIFACT_DIR)
     before = os.path.getmtime(os.path.join(str(tmp_path), A.PAIRS_NAME,
                                            A._META_FILE))
-    A.materialize_pairs(spark, SF_DIR, str(tmp_path))  # must rebuild
+    A.materialize(spark, SF_DIR, str(tmp_path), A.PAIRS_NAME)  # must rebuild
     after = os.path.getmtime(os.path.join(str(tmp_path), A.PAIRS_NAME,
                                           A._META_FILE))
     assert after > before, "materialize no-opped on a stale seed record"
@@ -346,9 +347,9 @@ def test_spine_artifact_round_trip(spark, tmp_path):
     expected = sorted(
         tuple(r) for r in shared_token_spine_for_dir(spark, SF_DIR).collect()
     )
-    A.materialize_spine(spark, SF_DIR, str(tmp_path))
+    A.materialize(spark, SF_DIR, str(tmp_path), A.SPINE_NAME)
     clear_token_spine_cache(spark)
-    A.load_spine(spark, SF_DIR, str(tmp_path))
+    A.load(spark, SF_DIR, str(tmp_path), A.SPINE_NAME)
     got = sorted(
         tuple(r) for r in shared_token_spine_for_dir(spark, SF_DIR).collect()
     )
@@ -379,7 +380,7 @@ def _norm_pairs(df):
 
 
 def test_bands_artifact_round_trip_zero_chain_scans(spark, tmp_path):
-    """After load_bands, the banded-index relation must read ONLY the
+    """After load, the banded-index relation must read ONLY the
     artifact (no documents scan / no minhash chain), and candidate pairs
     from it must match the from-scratch chain."""
     from pyspark_coding_challenge_spark.llm import dedup as D
@@ -388,9 +389,9 @@ def test_bands_artifact_round_trip_zero_chain_scans(spark, tmp_path):
     expected = sorted(
         map(tuple, D.lsh_candidate_pairs(docs).collect())
     )
-    A.materialize_bands(spark, SF_DIR, str(tmp_path))
+    A.materialize(spark, SF_DIR, str(tmp_path), A.BANDS_NAME)
     D.clear_pair_cache(spark)
-    A.load_bands(spark, SF_DIR, str(tmp_path))
+    A.load(spark, SF_DIR, str(tmp_path), A.BANDS_NAME)
     ranked = D.banded_index_for_dir(spark, SF_DIR)
     plan = ranked._jdf.queryExecution().executedPlan().toString()
     assert "documents.parquet" not in plan, plan
@@ -429,8 +430,8 @@ def test_incremental_artifact_update_matches_full_build(spark, tmp_path):
 
     old_dir, new_dir = _write_versions(spark, tmp_path)
     art = str(tmp_path / "art")
-    A.materialize_pairs(spark, old_dir, art)
-    A.materialize_bands(spark, old_dir, art)
+    A.materialize(spark, old_dir, art, A.PAIRS_NAME)
+    A.materialize(spark, old_dir, art, A.BANDS_NAME)
     summary = A.update_pairs_incremental(spark, old_dir, new_dir, art)
     assert summary["mode"] == "incremental"
     assert set(summary["churn"]) == {"added", "removed", "modified"}
@@ -450,7 +451,7 @@ def test_incremental_artifact_update_matches_full_build(spark, tmp_path):
         assert meta["lineage"]["snapshot"] == A.corpus_digest(spark, new_dir)
     # the patched artifact now serves loads for the NEW corpus
     D.clear_pair_cache(spark)
-    A.load_pairs(spark, new_dir, art)
+    A.load(spark, new_dir, art, A.PAIRS_NAME)
     assert _norm_pairs(
         D.dedup_minhash_lsh(spark, new_dir)
     ) == _norm_pairs(
@@ -468,8 +469,8 @@ def test_incremental_update_stale_lineage_forces_full_rebuild(spark, tmp_path):
 
     old_dir, new_dir = _write_versions(spark, tmp_path)
     art = str(tmp_path / "art")
-    A.materialize_pairs(spark, old_dir, art)
-    A.materialize_bands(spark, old_dir, art)
+    A.materialize(spark, old_dir, art, A.PAIRS_NAME)
+    A.materialize(spark, old_dir, art, A.BANDS_NAME)
     meta_path = os.path.join(art, A.PAIRS_NAME, "_artifact_meta.json")
     with open(meta_path) as f:
         meta = json.load(f)
@@ -497,8 +498,8 @@ def test_pre_lineage_artifact_forces_full_rebuild(spark, tmp_path):
 
     old_dir, new_dir = _write_versions(spark, tmp_path)
     art = str(tmp_path / "art")
-    A.materialize_pairs(spark, old_dir, art)
-    A.materialize_bands(spark, old_dir, art)
+    A.materialize(spark, old_dir, art, A.PAIRS_NAME)
+    A.materialize(spark, old_dir, art, A.BANDS_NAME)
     for name in (A.PAIRS_NAME, A.BANDS_NAME):
         meta_path = os.path.join(art, name, "_artifact_meta.json")
         with open(meta_path) as f:
@@ -536,8 +537,8 @@ def test_stale_lineage_rebuild_in_fresh_session(spark, tmp_path):
 
     old_dir, new_dir = _write_versions(spark, tmp_path)
     art = str(tmp_path / "art")
-    A.materialize_pairs(spark, old_dir, art)
-    A.materialize_bands(spark, old_dir, art)
+    A.materialize(spark, old_dir, art, A.PAIRS_NAME)
+    A.materialize(spark, old_dir, art, A.BANDS_NAME)
     meta_path = os.path.join(art, A.BANDS_NAME, "_artifact_meta.json")
     with open(meta_path) as f:
         meta = json.load(f)
@@ -555,8 +556,8 @@ def test_stale_lineage_rebuild_in_fresh_session(spark, tmp_path):
     assert json.loads(line[len("SUMMARY_JSON:"):])["mode"] == "full_rebuild"
     # rebuilt artifact is valid for the NEW corpus in this session too
     D.clear_pair_cache(spark)
-    A.load_pairs(spark, new_dir, art)
-    A.load_bands(spark, new_dir, art)
+    A.load(spark, new_dir, art, A.PAIRS_NAME)
+    A.load(spark, new_dir, art, A.BANDS_NAME)
     D.clear_pair_cache(spark)
 
 
@@ -570,8 +571,8 @@ def test_full_rebuild_not_defeated_by_env_seeding(spark, tmp_path, monkeypatch):
 
     _, new_dir = _write_versions(spark, tmp_path)
     art = str(tmp_path / "art")
-    A.materialize_pairs(spark, new_dir, art)
-    A.materialize_bands(spark, new_dir, art)
+    A.materialize(spark, new_dir, art, A.PAIRS_NAME)
+    A.materialize(spark, new_dir, art, A.BANDS_NAME)
     good_lineage = A._read_meta(os.path.join(art, A.PAIRS_NAME))["lineage"]
     for name in (A.PAIRS_NAME, A.BANDS_NAME):
         meta_path = os.path.join(art, name, "_artifact_meta.json")
@@ -613,9 +614,9 @@ def test_cc_labels_artifact_round_trip_zero_cc_runs(spark, tmp_path):
     from pyspark_coding_challenge_spark.llm import dedup as D
 
     expected = _clusters_rows(spark, SF_DIR)
-    A.materialize_cc_labels(spark, SF_DIR, str(tmp_path))
+    A.materialize(spark, SF_DIR, str(tmp_path), A.CC_NAME)
     D.clear_pair_cache(spark)
-    A.load_cc_labels(spark, SF_DIR, str(tmp_path))
+    A.load(spark, SF_DIR, str(tmp_path), A.CC_NAME)
     src_plan = (
         D.cc_labels_for_dir(spark, SF_DIR)
         ._jdf.queryExecution().executedPlan().toString()
@@ -642,10 +643,10 @@ def test_incremental_update_patches_cc_labels_and_digests(spark, tmp_path,
     old_dir, new_dir = _write_versions(spark, tmp_path)
     art = str(tmp_path / "art")
     digest = A.corpus_digest(spark, old_dir)
-    A.materialize_pairs(spark, old_dir, art, digest)
-    A.materialize_bands(spark, old_dir, art, digest)
-    A.materialize_cc_labels(spark, old_dir, art, digest)
-    A.materialize_doc_digests(spark, old_dir, art, digest)
+    A.materialize(spark, old_dir, art, A.PAIRS_NAME, digest)
+    A.materialize(spark, old_dir, art, A.BANDS_NAME, digest)
+    A.materialize(spark, old_dir, art, A.CC_NAME, digest)
+    A.materialize(spark, old_dir, art, A.DIGESTS_NAME, digest)
     D.clear_pair_cache(spark)
     new_digest_expected = A.corpus_digest(spark, new_dir)
 
@@ -684,10 +685,10 @@ def test_cc_autoselect_full_below_crossover(spark, tmp_path, monkeypatch):
     old_dir, new_dir = _write_versions(spark, tmp_path)
     art = str(tmp_path / "art")
     digest = A.corpus_digest(spark, old_dir)
-    A.materialize_pairs(spark, old_dir, art, digest)
-    A.materialize_bands(spark, old_dir, art, digest)
-    A.materialize_cc_labels(spark, old_dir, art, digest)
-    A.materialize_doc_digests(spark, old_dir, art, digest)
+    A.materialize(spark, old_dir, art, A.PAIRS_NAME, digest)
+    A.materialize(spark, old_dir, art, A.BANDS_NAME, digest)
+    A.materialize(spark, old_dir, art, A.CC_NAME, digest)
+    A.materialize(spark, old_dir, art, A.DIGESTS_NAME, digest)
     D.clear_pair_cache(spark)
 
     monkeypatch.setattr(D, "CC_INCR_MIN_EDGES", 10**9)  # tiny test graph
@@ -739,10 +740,10 @@ def test_cc_patch_equals_full_in_fresh_session(spark, tmp_path):
     old_dir, new_dir = _write_versions(spark, tmp_path)
     art = str(tmp_path / "art")
     digest = A.corpus_digest(spark, old_dir)
-    A.materialize_pairs(spark, old_dir, art, digest)
-    A.materialize_bands(spark, old_dir, art, digest)
-    A.materialize_cc_labels(spark, old_dir, art, digest)
-    A.materialize_doc_digests(spark, old_dir, art, digest)
+    A.materialize(spark, old_dir, art, A.PAIRS_NAME, digest)
+    A.materialize(spark, old_dir, art, A.BANDS_NAME, digest)
+    A.materialize(spark, old_dir, art, A.CC_NAME, digest)
+    A.materialize(spark, old_dir, art, A.DIGESTS_NAME, digest)
     D.clear_pair_cache(spark)
 
     env = dict(os.environ, PYTHONPATH="/root/repo",
@@ -765,12 +766,12 @@ def test_cc_patch_equals_full_in_fresh_session(spark, tmp_path):
 
 def _materialize_text_side(spark, sf_dir, art):
     digest = A.corpus_digest(spark, sf_dir)
-    A.materialize_doc_digests(spark, sf_dir, art, digest)
-    A.materialize_signals(spark, sf_dir, art, digest)
-    A.materialize_spine(spark, sf_dir, art, digest)
-    A.materialize_span_pos(spark, sf_dir, art, digest)
-    A.materialize_spans(spark, sf_dir, art, digest)
-    A.materialize_span_stats(spark, sf_dir, art, digest)
+    A.materialize(spark, sf_dir, art, A.DIGESTS_NAME, digest)
+    A.materialize(spark, sf_dir, art, A.SIGNALS_NAME, digest)
+    A.materialize(spark, sf_dir, art, A.SPINE_NAME, digest)
+    A.materialize(spark, sf_dir, art, A.SPANPOS_NAME, digest)
+    A.materialize(spark, sf_dir, art, A.SPANS_NAME, digest)
+    A.materialize(spark, sf_dir, art, A.SPANSTATS_NAME, digest)
     return digest
 
 
@@ -915,9 +916,9 @@ def test_update_all_incremental_one_context(spark, tmp_path, monkeypatch):
     old_dir, new_dir = _write_versions(spark, tmp_path)
     art = str(tmp_path / "art")
     digest = A.corpus_digest(spark, old_dir)
-    A.materialize_pairs(spark, old_dir, art, digest)
-    A.materialize_bands(spark, old_dir, art, digest)
-    A.materialize_cc_labels(spark, old_dir, art, digest)
+    A.materialize(spark, old_dir, art, A.PAIRS_NAME, digest)
+    A.materialize(spark, old_dir, art, A.BANDS_NAME, digest)
+    A.materialize(spark, old_dir, art, A.CC_NAME, digest)
     _materialize_text_side(spark, old_dir, art)
     D.clear_pair_cache(spark)
     _clear_text_caches(spark)
@@ -946,8 +947,8 @@ def test_churn_gate_forces_full_rebuild(spark, tmp_path, monkeypatch):
 
     old_dir, new_dir = _write_versions(spark, tmp_path)
     art = str(tmp_path / "art")
-    A.materialize_pairs(spark, old_dir, art)
-    A.materialize_bands(spark, old_dir, art)
+    A.materialize(spark, old_dir, art, A.PAIRS_NAME)
+    A.materialize(spark, old_dir, art, A.BANDS_NAME)
     D.clear_pair_cache(spark)
     monkeypatch.setattr(A, "INCR_MAX_CHURN_FRAC", 0.1)
     import warnings as W
@@ -1008,10 +1009,10 @@ def test_cc_full_relabel_records_unpatched_lineage(spark, tmp_path,
     old_dir, new_dir = _write_versions(spark, tmp_path)
     art = str(tmp_path / "art")
     digest = A.corpus_digest(spark, old_dir)
-    A.materialize_pairs(spark, old_dir, art, digest)
-    A.materialize_bands(spark, old_dir, art, digest)
-    A.materialize_cc_labels(spark, old_dir, art, digest)
-    A.materialize_doc_digests(spark, old_dir, art, digest)
+    A.materialize(spark, old_dir, art, A.PAIRS_NAME, digest)
+    A.materialize(spark, old_dir, art, A.BANDS_NAME, digest)
+    A.materialize(spark, old_dir, art, A.CC_NAME, digest)
+    A.materialize(spark, old_dir, art, A.DIGESTS_NAME, digest)
     D.clear_pair_cache(spark)
     monkeypatch.setattr(D, "CC_INCR_MIN_EDGES", 10**9)
     summary = A.update_pairs_incremental(spark, old_dir, new_dir, art)

@@ -11,6 +11,8 @@ import importlib.util
 import os
 import sys
 
+import pytest
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -188,3 +190,29 @@ def test_bench_headline_total_excludes_the_scale_arm():
         {"text_vocab_topn": "boom"}, "sf")
     assert failed_slug["value"] == 1.25
     assert failed_slug["partial"] is True
+
+
+def test_build_artifacts_rejects_unknown_names_before_spark(monkeypatch,
+                                                             capsys):
+    """``scripts/build_artifacts.py`` takes its names from the artifact
+    table: an unknown name exits 2 and lists the table's names, without
+    starting Spark."""
+    from pyspark_coding_challenge_spark import session
+    from pyspark_coding_challenge_spark.llm import artifacts as A
+
+    def no_spark(*a, **k):
+        raise AssertionError("get_spark called")
+
+    monkeypatch.setattr(session, "get_spark", no_spark)
+    spec = importlib.util.spec_from_file_location(
+        "build_artifacts", os.path.join(REPO, "scripts", "build_artifacts.py"))
+    script = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(script)
+    monkeypatch.setattr(sys, "argv", ["build_artifacts.py", "/sf", "/art",
+                                      A.PAIRS_NAME, "no_such_artifact"])
+    with pytest.raises(SystemExit) as exc:
+        script.main()
+    assert exc.value.code == 2
+    err = capsys.readouterr().err
+    assert "no_such_artifact" in err
+    assert str(list(A.ARTIFACTS)) in err

@@ -78,8 +78,8 @@ def _build_old(spark, tmp_path, vecs=None):
     old = _write_emb(spark, tmp_path / "old", vecs or _base_vecs())
     art = str(tmp_path / "art")
     emb_digest = A.embeddings_digest(spark, old)
-    A.materialize_ivf_centroids(spark, old, art, emb_digest=emb_digest)
-    A.materialize_vec_digests(spark, old, art, emb_digest=emb_digest)
+    A.materialize(spark, old, art, A.CENTROIDS_NAME, emb_digest)
+    A.materialize(spark, old, art, A.VECDIG_NAME, emb_digest)
     S.clear_centroid_cache(spark)
     return old, art
 
@@ -123,7 +123,7 @@ def test_carry_on_small_churn(spark, tmp_path):
 
     # a fresh consumer loads the carried quantizer for the NEW dir
     S.clear_centroid_cache(spark)
-    loaded = A.load_ivf_centroids(spark, new, art)
+    loaded = A.load(spark, new, art, A.CENTROIDS_NAME)
     assert loaded.count() == len(before)
     S.clear_centroid_cache(spark)
 
@@ -258,7 +258,7 @@ def test_carried_quantizer_clears_recall_floor(spark, tmp_path):
     assert summary["mode"] == "carried"
 
     S.clear_centroid_cache(spark)
-    cent = A.load_ivf_centroids(spark, new, art)
+    cent = A.load(spark, new, art, A.CENTROIDS_NAME)
     from pyspark_coding_challenge_spark.sources.readers import read_table
 
     e = read_table(spark, new, "embeddings").select(
@@ -282,13 +282,13 @@ def test_assignments_artifact_serves_search_identically(spark, tmp_path):
     art = str(tmp_path / "art")
     S.clear_centroid_cache(spark)
     emb_digest = A.embeddings_digest(spark, new)
-    A.materialize_ivf_centroids(spark, new, art, emb_digest=emb_digest)
-    A.materialize_ivf_assignments(spark, new, art, emb_digest=emb_digest)
+    A.materialize(spark, new, art, A.CENTROIDS_NAME, emb_digest)
+    A.materialize(spark, new, art, A.ASSIGN_NAME, emb_digest)
 
     S.clear_centroid_cache(spark)
     baseline = sorted(tuple(r)
                       for r in S.embedding_ann_ivf(spark, new).collect())
-    A.load_ivf_assignments(spark, new, art)
+    A.load(spark, new, art, A.ASSIGN_NAME)
     served = S.embedding_ann_ivf(spark, new)
     plan = served._jdf.queryExecution().executedPlan().toString()
     # the artifact's thin (vec_id, lid) parquet scan replaces the inline
@@ -313,7 +313,7 @@ def test_assignments_patch_under_carry_equals_full(spark, tmp_path):
     vecs = _base_vecs()
     old, art = _build_old(spark, tmp_path, vecs)
     emb_digest = A.embeddings_digest(spark, old)
-    A.materialize_ivf_assignments(spark, old, art, emb_digest=emb_digest)
+    A.materialize(spark, old, art, A.ASSIGN_NAME, emb_digest)
 
     new_vecs = dict(vecs)
     del new_vecs[37]
@@ -348,8 +348,8 @@ def test_assignments_rebuild_under_retrain(spark, tmp_path):
     matches the NEW quantizer."""
     vecs = _base_vecs()
     old, art = _build_old(spark, tmp_path, vecs)
-    A.materialize_ivf_assignments(
-        spark, old, art, emb_digest=A.embeddings_digest(spark, old))
+    A.materialize(spark, old, art, A.ASSIGN_NAME,
+                  A.embeddings_digest(spark, old))
     new_vecs = {i: v for i, v in vecs.items() if i >= 15}  # churn gate
     new = _write_emb(spark, tmp_path / "new", new_vecs)
     summary = A.update_centroids_incremental(spark, old, new, art)
@@ -358,7 +358,7 @@ def test_assignments_rebuild_under_retrain(spark, tmp_path):
     # pairing invariant: fold recorded == fold of the retrained quantizer
     cent = spark.read.parquet(os.path.join(art, A.CENTROIDS_NAME))
     assert _meta(art, A.ASSIGN_NAME)["lineage"]["centroids_fold"] == \
-        A._centroid_fold(cent)
+        A._content_fold(cent, "lid")
     S.clear_centroid_cache(spark)
 
 
@@ -370,8 +370,8 @@ def test_assignments_refuse_foreign_quantizer(spark, tmp_path):
     art = str(tmp_path / "art")
     S.clear_centroid_cache(spark)
     emb_digest = A.embeddings_digest(spark, new)
-    A.materialize_ivf_centroids(spark, new, art, emb_digest=emb_digest)
-    A.materialize_ivf_assignments(spark, new, art, emb_digest=emb_digest)
+    A.materialize(spark, new, art, A.CENTROIDS_NAME, emb_digest)
+    A.materialize(spark, new, art, A.ASSIGN_NAME, emb_digest)
     meta_path = os.path.join(art, A.ASSIGN_NAME, "_artifact_meta.json")
     with open(meta_path) as f:
         meta = json.load(f)
@@ -379,7 +379,7 @@ def test_assignments_refuse_foreign_quantizer(spark, tmp_path):
     with open(meta_path, "w") as f:
         json.dump(meta, f)
     with pytest.raises(ValueError, match="different quantizer"):
-        A.load_ivf_assignments(spark, new, art)
+        A.load(spark, new, art, A.ASSIGN_NAME)
     S.clear_centroid_cache(spark)
 
 
@@ -408,8 +408,8 @@ def test_update_all_runs_embeddings_side(spark, tmp_path):
     _write_emb(spark, tmp_path / "new", new_vecs)
     art = str(tmp_path / "art")
     emb_digest = A.embeddings_digest(spark, old)
-    A.materialize_ivf_centroids(spark, old, art, emb_digest=emb_digest)
-    A.materialize_vec_digests(spark, old, art, emb_digest=emb_digest)
+    A.materialize(spark, old, art, A.CENTROIDS_NAME, emb_digest)
+    A.materialize(spark, old, art, A.VECDIG_NAME, emb_digest)
     S.clear_centroid_cache(spark)
 
     got = A.update_all_incremental(spark, old, new, art)
@@ -457,8 +457,8 @@ def test_retrain_is_real_under_env_seeding(spark, tmp_path, monkeypatch):
     d = _write_emb(spark, tmp_path / "corpus", vecs)
     art = str(tmp_path / "art")
     emb_digest = A.embeddings_digest(spark, d)
-    A.materialize_ivf_centroids(spark, d, art, emb_digest=emb_digest)
-    A.materialize_vec_digests(spark, d, art, emb_digest=emb_digest)
+    A.materialize(spark, d, art, A.CENTROIDS_NAME, emb_digest)
+    A.materialize(spark, d, art, A.VECDIG_NAME, emb_digest)
     S.clear_centroid_cache(spark)
     before = _centroid_rows(spark, art)
 
@@ -555,11 +555,12 @@ def test_assign_seed_runs_outside_cache_lock(spark, monkeypatch):
     S.clear_centroid_cache(spark)
     seen: dict = {}
 
-    def fake_seed(sp, d):
+    def fake_seed(sp, d, name):
+        assert name == A.ASSIGN_NAME
         seen["locked"] = SS._LOCK.locked()
         return None
 
-    monkeypatch.setattr(A, "assignments_from_env", fake_seed)
+    monkeypatch.setattr(A, "seed_from_env", fake_seed)
     assert S.ivf_assignments_for_dir(spark, "/no/such/corpus") is None
     assert seen == {"locked": False}
     # and the negative result is cached — a second call must not re-seed
@@ -580,13 +581,13 @@ def test_assign_seed_loser_unpersists_duplicate(spark, monkeypatch):
     loser = spark.createDataFrame([(1, 0)], "vec_id long, lid int").persist()
     loser.count()
 
-    def fake_seed(sp, d):
+    def fake_seed(sp, d, name):
         # simulate an install winning the race mid-seed
         SS.install("ivf_assignments", spark, "/race/corpus",
                    (winner, "fold_w"))
         return (loser, "fold_l")
 
-    monkeypatch.setattr(A, "assignments_from_env", fake_seed)
+    monkeypatch.setattr(A, "seed_from_env", fake_seed)
     got = S.ivf_assignments_for_dir(spark, "/race/corpus")
     assert got is winner
     assert not loser.storageLevel.useMemory, "loser's persist leaked"

@@ -245,8 +245,8 @@ def _emb_pair(spark, tmp_path):
 def _vec_stored(spark, old, tmp_path):
     art = str(tmp_path / "vart")
     dig = A.embeddings_digest(spark, old)
-    A.materialize_ivf_centroids(spark, old, art, emb_digest=dig)
-    A.materialize_vec_digests(spark, old, art, emb_digest=dig)
+    A.materialize(spark, old, art, A.CENTROIDS_NAME, dig)
+    A.materialize(spark, old, art, A.VECDIG_NAME, dig)
     from pyspark_coding_challenge_spark.llm.similarity import clear_centroid_cache
     clear_centroid_cache(spark)
     return art

@@ -50,15 +50,15 @@ def _build_text_state(spark, sf_dir: str, art: str) -> None:
     ``update_all_incremental`` patches; the corpora here carry no
     embeddings table, so the embeddings side records 'skipped'."""
     digest = A.corpus_digest(spark, sf_dir)
-    A.materialize_pairs(spark, sf_dir, art, digest)
-    A.materialize_bands(spark, sf_dir, art, digest)
-    A.materialize_cc_labels(spark, sf_dir, art, digest)
-    A.materialize_doc_digests(spark, sf_dir, art, digest)
-    A.materialize_signals(spark, sf_dir, art, digest)
-    A.materialize_spine(spark, sf_dir, art, digest)
-    A.materialize_span_pos(spark, sf_dir, art, digest)
-    A.materialize_spans(spark, sf_dir, art, digest)
-    A.materialize_span_stats(spark, sf_dir, art, digest)
+    A.materialize(spark, sf_dir, art, A.PAIRS_NAME, digest)
+    A.materialize(spark, sf_dir, art, A.BANDS_NAME, digest)
+    A.materialize(spark, sf_dir, art, A.CC_NAME, digest)
+    A.materialize(spark, sf_dir, art, A.DIGESTS_NAME, digest)
+    A.materialize(spark, sf_dir, art, A.SIGNALS_NAME, digest)
+    A.materialize(spark, sf_dir, art, A.SPINE_NAME, digest)
+    A.materialize(spark, sf_dir, art, A.SPANPOS_NAME, digest)
+    A.materialize(spark, sf_dir, art, A.SPANS_NAME, digest)
+    A.materialize(spark, sf_dir, art, A.SPANSTATS_NAME, digest)
     from pyspark_coding_challenge_spark.llm import dedup as D
 
     D.clear_pair_cache(spark)
@@ -170,7 +170,7 @@ def test_compact_heals_a_crashed_swap(spark, tmp_path):
     src = _write_docs(spark, tmp_path / "v0", _corpus_rows(0))
     art = str(tmp_path / "art")
     digest = A.corpus_digest(spark, src)
-    A.materialize_signals(spark, src, art, digest)
+    A.materialize(spark, src, art, A.SIGNALS_NAME, digest)
     path = os.path.join(art, A.SIGNALS_NAME)
     want = _rows_of(spark, path)
 
@@ -227,7 +227,7 @@ def test_compact_partitioned_artifact_per_bucket(spark, tmp_path):
         "under-threshold bucket was rewritten"
     assert _rows_of(spark, codes_path, drop=("pbucket",)) == want
     # the compacted artifact still passes the fold + row-count load gate
-    A.load_pq_codes(spark, sf, art, install=False)
+    A.load(spark, sf, art, A.PQCODES_NAME, install=False)
     from pyspark_coding_challenge_spark.llm import similarity as S
 
     S.clear_centroid_cache(spark)
@@ -357,7 +357,7 @@ def test_maintenance_lease_blocks_concurrent_holders(spark, tmp_path):
     src = _write_docs(spark, tmp_path / "v0", _corpus_rows(0))
     art = str(tmp_path / "art")
     digest = A.corpus_digest(spark, src)
-    A.materialize_signals(spark, src, art, digest)
+    A.materialize(spark, src, art, A.SIGNALS_NAME, digest)
     want = _rows_of(spark, os.path.join(art, A.SIGNALS_NAME))
 
     errs = []
@@ -392,7 +392,7 @@ def test_maintenance_lease_breaks_stale_dead_pid(spark, tmp_path,
     src = _write_docs(spark, tmp_path / "v0", _corpus_rows(0))
     art = str(tmp_path / "art")
     digest = A.corpus_digest(spark, src)
-    A.materialize_signals(spark, src, art, digest)
+    A.materialize(spark, src, art, A.SIGNALS_NAME, digest)
     with open(os.path.join(art, A._LEASE_FILE), "w") as f:
         json.dump({"pid": 2 ** 22 + 1234567, "holder": "crashed", "ts": 0}, f)
     report = A.compact_artifacts(spark, art, max_files=10 ** 6)

@@ -207,7 +207,7 @@ def test_unreadable_env_artifact_warns_and_rebuilds(spark, tmp_path, monkeypatch
     )
 
     SF = "/root/testdata/sf0.001"
-    A.materialize_pairs(spark, SF, str(tmp_path))
+    A.materialize(spark, SF, str(tmp_path), A.PAIRS_NAME)
     clear_pair_cache(spark)
     for f in glob.glob(f"{tmp_path}/{A.PAIRS_NAME}/*.parquet"):
         os.remove(f)  # meta sidecar survives, data gone

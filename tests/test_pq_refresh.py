@@ -91,10 +91,10 @@ def _build_old(spark, tmp_path, vecs=None):
     old = _write_emb(spark, tmp_path / "old", vecs or _base_vecs())
     art = str(tmp_path / "art")
     emb_digest = A.embeddings_digest(spark, old)
-    A.materialize_ivf_centroids(spark, old, art, emb_digest=emb_digest)
-    A.materialize_vec_digests(spark, old, art, emb_digest=emb_digest)
-    A.materialize_pq_codebooks(spark, old, art, emb_digest=emb_digest)
-    A.materialize_pq_codes(spark, old, art, emb_digest=emb_digest)
+    A.materialize(spark, old, art, A.CENTROIDS_NAME, emb_digest)
+    A.materialize(spark, old, art, A.VECDIG_NAME, emb_digest)
+    A.materialize(spark, old, art, A.PQCB_NAME, emb_digest)
+    A.materialize(spark, old, art, A.PQCODES_NAME, emb_digest)
     S.clear_centroid_cache(spark)
     return old, art
 
@@ -150,7 +150,7 @@ def test_pq_carry_on_small_churn(spark, tmp_path):
     assert patched == full
     cmeta = _meta(art, A.PQCODES_NAME)
     assert cmeta["lineage"]["snapshot"] == A.embeddings_digest(spark, new)
-    assert cmeta["lineage"]["codebooks_fold"] == A._codebook_fold(cb)
+    assert cmeta["lineage"]["codebooks_fold"] == A._content_fold(cb, "sub", "lid")
     S.clear_centroid_cache(spark)
 
 
@@ -243,7 +243,7 @@ def test_pq_retrain_on_drift(spark, tmp_path):
     # pairing invariant: recorded fold == fold of the retrained codebooks
     cb = spark.read.parquet(os.path.join(art, A.PQCB_NAME))
     assert _meta(art, A.PQCODES_NAME)["lineage"]["codebooks_fold"] == \
-        A._codebook_fold(cb)
+        A._content_fold(cb, "sub", "lid")
     # fresh training stats recorded for the next refresh's drift gate
     assert _meta(art, A.PQCB_NAME)["lineage"]["stats"]["n_vecs"] == 42
     S.clear_centroid_cache(spark)
@@ -257,8 +257,8 @@ def test_pq_absent_is_recorded(spark, tmp_path):
     old = _write_emb(spark, tmp_path / "old", vecs)
     art = str(tmp_path / "art")
     emb_digest = A.embeddings_digest(spark, old)
-    A.materialize_ivf_centroids(spark, old, art, emb_digest=emb_digest)
-    A.materialize_vec_digests(spark, old, art, emb_digest=emb_digest)
+    A.materialize(spark, old, art, A.CENTROIDS_NAME, emb_digest)
+    A.materialize(spark, old, art, A.VECDIG_NAME, emb_digest)
     S.clear_centroid_cache(spark)
     new_vecs = dict(vecs)
     new_vecs[100] = vecs[7]
@@ -279,9 +279,9 @@ def test_pq_codes_refuse_foreign_codebooks(spark, tmp_path):
     art = str(tmp_path / "art")
     S.clear_centroid_cache(spark)
     emb_digest = A.embeddings_digest(spark, new)
-    A.materialize_ivf_centroids(spark, new, art, emb_digest=emb_digest)
-    A.materialize_pq_codebooks(spark, new, art, emb_digest=emb_digest)
-    A.materialize_pq_codes(spark, new, art, emb_digest=emb_digest)
+    A.materialize(spark, new, art, A.CENTROIDS_NAME, emb_digest)
+    A.materialize(spark, new, art, A.PQCB_NAME, emb_digest)
+    A.materialize(spark, new, art, A.PQCODES_NAME, emb_digest)
     meta_path = os.path.join(art, A.PQCODES_NAME, "_artifact_meta.json")
     with open(meta_path) as f:
         meta = json.load(f)
@@ -289,7 +289,7 @@ def test_pq_codes_refuse_foreign_codebooks(spark, tmp_path):
     with open(meta_path, "w") as f:
         json.dump(meta, f)
     with pytest.raises(ValueError, match="different codebooks"):
-        A.load_pq_codes(spark, new, art)
+        A.load(spark, new, art, A.PQCODES_NAME)
     S.clear_centroid_cache(spark)
 
 
@@ -302,17 +302,17 @@ def test_pq_codes_artifact_serves_search_identically(spark, tmp_path):
     art = str(tmp_path / "art")
     S.clear_centroid_cache(spark)
     emb_digest = A.embeddings_digest(spark, new)
-    A.materialize_ivf_centroids(spark, new, art, emb_digest=emb_digest)
-    A.materialize_ivf_assignments(spark, new, art, emb_digest=emb_digest)
-    A.materialize_pq_codebooks(spark, new, art, emb_digest=emb_digest)
-    A.materialize_pq_codes(spark, new, art, emb_digest=emb_digest)
+    A.materialize(spark, new, art, A.CENTROIDS_NAME, emb_digest)
+    A.materialize(spark, new, art, A.ASSIGN_NAME, emb_digest)
+    A.materialize(spark, new, art, A.PQCB_NAME, emb_digest)
+    A.materialize(spark, new, art, A.PQCODES_NAME, emb_digest)
 
     S.clear_centroid_cache(spark)
     baseline = sorted(tuple(r)
                       for r in S.embedding_ann_pq(spark, new).collect())
-    A.load_ivf_centroids(spark, new, art)
-    A.load_pq_codebooks(spark, new, art)
-    A.load_pq_codes(spark, new, art)
+    A.load(spark, new, art, A.CENTROIDS_NAME)
+    A.load(spark, new, art, A.PQCB_NAME)
+    A.load(spark, new, art, A.PQCODES_NAME)
     served = S.embedding_ann_pq(spark, new)
     plan = served._jdf.queryExecution().executedPlan().toString()
     # the artifact's thin scan replaces the inline encode (plan paths
@@ -333,9 +333,9 @@ def test_env_knob_seeds_pq_pair(spark, tmp_path, monkeypatch):
     art = str(tmp_path / "art")
     S.clear_centroid_cache(spark)
     emb_digest = A.embeddings_digest(spark, new)
-    A.materialize_ivf_centroids(spark, new, art, emb_digest=emb_digest)
-    A.materialize_pq_codebooks(spark, new, art, emb_digest=emb_digest)
-    A.materialize_pq_codes(spark, new, art, emb_digest=emb_digest)
+    A.materialize(spark, new, art, A.CENTROIDS_NAME, emb_digest)
+    A.materialize(spark, new, art, A.PQCB_NAME, emb_digest)
+    A.materialize(spark, new, art, A.PQCODES_NAME, emb_digest)
     baseline = sorted(tuple(r)
                       for r in S.embedding_ann_pq(spark, new).collect())
     S.clear_centroid_cache(spark)
@@ -457,11 +457,11 @@ def test_update_all_refreshes_pq_side(spark, tmp_path):
     _write_emb(spark, tmp_path / "new", new_vecs)
     old, art = old, str(tmp_path / "art")
     emb_digest = A.embeddings_digest(spark, old)
-    A.materialize_ivf_centroids(spark, old, art, emb_digest=emb_digest)
-    A.materialize_vec_digests(spark, old, art, emb_digest=emb_digest)
-    A.materialize_ivf_assignments(spark, old, art, emb_digest=emb_digest)
-    A.materialize_pq_codebooks(spark, old, art, emb_digest=emb_digest)
-    A.materialize_pq_codes(spark, old, art, emb_digest=emb_digest)
+    A.materialize(spark, old, art, A.CENTROIDS_NAME, emb_digest)
+    A.materialize(spark, old, art, A.VECDIG_NAME, emb_digest)
+    A.materialize(spark, old, art, A.ASSIGN_NAME, emb_digest)
+    A.materialize(spark, old, art, A.PQCB_NAME, emb_digest)
+    A.materialize(spark, old, art, A.PQCODES_NAME, emb_digest)
     S.clear_centroid_cache(spark)
 
     got = A.update_all_incremental(spark, old, new, art)
@@ -561,7 +561,7 @@ def test_pq_codes_clustered_churn_still_patches(spark, tmp_path):
 
 
 def test_pq_codes_full_rebuild_is_static_under_dynamic_conf(spark, tmp_path):
-    """r15 (r14 advisor): a full ``materialize_pq_codes`` over an existing
+    """r15 (r14 advisor): a full ``materialize`` of ``pq_codes`` over an existing
     artifact must not inherit a session-level 'dynamic' partition-
     overwrite mode — under dynamic, buckets absent from the new corpus
     would survive as stale directories and the artifact would land broken
@@ -583,18 +583,18 @@ def test_pq_codes_full_rebuild_is_static_under_dynamic_conf(spark, tmp_path):
     S.clear_centroid_cache(spark)
     emb_digest = A.embeddings_digest(spark, new)
     # r16: the PQ pair is residual-based — rebuild its coarse basis first
-    A.materialize_ivf_centroids(spark, new, art, emb_digest=emb_digest)
-    A.materialize_pq_codebooks(spark, new, art, emb_digest=emb_digest)
+    A.materialize(spark, new, art, A.CENTROIDS_NAME, emb_digest)
+    A.materialize(spark, new, art, A.PQCB_NAME, emb_digest)
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
-        A.materialize_pq_codes(spark, new, art, emb_digest=emb_digest)
+        A.materialize(spark, new, art, A.PQCODES_NAME, emb_digest)
     finally:
         spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
     assert not os.path.exists(
         os.path.join(art, A.PQCODES_NAME, "pbucket=1")
     ), "dynamic session conf leaked into the full rebuild"
     # the rebuilt artifact passes the load gate (row count = m x corpus)
-    A.load_pq_codes(spark, new, art, install=False)
+    A.load(spark, new, art, A.PQCODES_NAME, install=False)
     S.clear_centroid_cache(spark)
 
 
@@ -624,8 +624,8 @@ def test_coarse_retrain_forces_pq_retrain(spark, tmp_path):
     lineage (the tampering case its gate exists for)."""
     vecs = _base_vecs()
     old, art = _build_old(spark, tmp_path, vecs)
-    A.materialize_ivf_assignments(
-        spark, old, art, emb_digest=A.embeddings_digest(spark, old))
+    A.materialize(spark, old, art, A.ASSIGN_NAME,
+                  A.embeddings_digest(spark, old))
     S.clear_centroid_cache(spark)
     # corrupt the COARSE artifact's recorded snapshot: its lineage gate
     # now fails -> coarse retrains; the PQ artifacts' own metas are intact
@@ -647,9 +647,9 @@ def test_coarse_retrain_forces_pq_retrain(spark, tmp_path):
     # the rebuilt pair records the NEW coarse basis
     cent = spark.read.parquet(os.path.join(art, A.CENTROIDS_NAME))
     assert _meta(art, A.PQCB_NAME)["lineage"]["centroids_fold"] == \
-        A._centroid_fold(cent)
+        A._content_fold(cent, "lid")
     assert _meta(art, A.PQCODES_NAME)["lineage"]["centroids_fold"] == \
-        A._centroid_fold(cent)
+        A._content_fold(cent, "lid")
     S.clear_centroid_cache(spark)
 
 
@@ -740,9 +740,9 @@ def test_auto_refine_over_stored_codes_aggregates_nothing(spark, tmp_path,
     art = str(tmp_path / "art")
     S.clear_centroid_cache(spark)
     emb_digest = A.embeddings_digest(spark, new)
-    A.materialize_ivf_centroids(spark, new, art, emb_digest=emb_digest)
-    A.materialize_pq_codebooks(spark, new, art, emb_digest=emb_digest)
-    A.materialize_pq_codes(spark, new, art, emb_digest=emb_digest)
+    A.materialize(spark, new, art, A.CENTROIDS_NAME, emb_digest)
+    A.materialize(spark, new, art, A.PQCB_NAME, emb_digest)
+    A.materialize(spark, new, art, A.PQCODES_NAME, emb_digest)
     S.clear_centroid_cache(spark)
 
     monkeypatch.setenv(A.ENV_ARTIFACT_DIR, art)

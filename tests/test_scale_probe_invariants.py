@@ -23,7 +23,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 DIGEST_COST = 7.0       # fake seconds per corpus digest scan
 EMB_DIGEST_COST = 3.0   # fake seconds per embeddings digest scan
-MAT_COST = 1.0          # fake seconds per materialize_* call
+MAT_COST = 1.0          # fake seconds per materialize call
 PATCH_COST = 5.0        # fake seconds for the whole update_all_incremental
 
 
@@ -53,22 +53,8 @@ def test_both_arms_time_their_digest_scans(tmp_path, monkeypatch):
     # materializer advances the fake clock by a known amount
     monkeypatch.setattr(A, "corpus_digest", spend(DIGEST_COST))
     monkeypatch.setattr(A, "embeddings_digest", spend(EMB_DIGEST_COST))
-    # the 8 text/dedup materializers resolve through _refreshable_artifacts
-    # — replace the resolver output wholesale
-    monkeypatch.setattr(
-        sp, "_refreshable_artifacts",
-        lambda mod: [(n, spend(MAT_COST)) for n, _ in (
-            (A.PAIRS_NAME, None), (A.BANDS_NAME, None), (A.CC_NAME, None),
-            (A.DIGESTS_NAME, None), (A.SPANPOS_NAME, None),
-            (A.SPANS_NAME, None), (A.SPANSTATS_NAME, None),
-            (A.SPINE_NAME, None), (A.SIGNALS_NAME, None),
-        )],
-    )
-    monkeypatch.setattr(A, "materialize_ivf_centroids", spend(MAT_COST))
-    monkeypatch.setattr(A, "materialize_vec_digests", spend(MAT_COST))
-    monkeypatch.setattr(A, "materialize_ivf_assignments", spend(MAT_COST))
-    monkeypatch.setattr(A, "materialize_pq_codebooks", spend(MAT_COST))
-    monkeypatch.setattr(A, "materialize_pq_codes", spend(MAT_COST))
+    # every artifact build goes through the one generic materializer
+    monkeypatch.setattr(A, "materialize", spend(MAT_COST))
     monkeypatch.setattr(sp, "_clear_all_artifact_caches", lambda s: None)
 
     calls = []

@@ -74,12 +74,12 @@ def _build(spark, tmp_path):
     new = _write(spark, tmp_path / "new", _new_rows())
     art = str(tmp_path / "art")
     dig = A.corpus_digest(spark, old)
-    A.materialize_doc_digests(spark, old, art, dig)
-    A.materialize_span_pos(spark, old, art, dig)
-    A.materialize_spans(spark, old, art, dig)
-    A.materialize_span_stats(spark, old, art, dig)
-    A.materialize_signals(spark, old, art, dig)
-    A.materialize_spine(spark, old, art, dig)
+    A.materialize(spark, old, art, A.DIGESTS_NAME, dig)
+    A.materialize(spark, old, art, A.SPANPOS_NAME, dig)
+    A.materialize(spark, old, art, A.SPANS_NAME, dig)
+    A.materialize(spark, old, art, A.SPANSTATS_NAME, dig)
+    A.materialize(spark, old, art, A.SIGNALS_NAME, dig)
+    A.materialize(spark, old, art, A.SPINE_NAME, dig)
     return old, new, art
 
 
@@ -126,12 +126,12 @@ def test_spans_patch_skips_pos_scan_when_nothing_flips_shared(spark, tmp_path):
     new = _write(spark, tmp_path / "new", sorted(rows.items()))
     art = str(tmp_path / "art")
     dig = A.corpus_digest(spark, old)
-    A.materialize_doc_digests(spark, old, art, dig)
-    A.materialize_span_pos(spark, old, art, dig)
-    A.materialize_spans(spark, old, art, dig)
-    A.materialize_span_stats(spark, old, art, dig)
-    A.materialize_signals(spark, old, art, dig)
-    A.materialize_spine(spark, old, art, dig)
+    A.materialize(spark, old, art, A.DIGESTS_NAME, dig)
+    A.materialize(spark, old, art, A.SPANPOS_NAME, dig)
+    A.materialize(spark, old, art, A.SPANS_NAME, dig)
+    A.materialize(spark, old, art, A.SPANSTATS_NAME, dig)
+    A.materialize(spark, old, art, A.SIGNALS_NAME, dig)
+    A.materialize(spark, old, art, A.SPINE_NAME, dig)
     summary = A.update_text_incremental(spark, old, new, art)
     assert summary[A.SPANS_NAME] == "patched"
     new_docs = spark.read.parquet(os.path.join(new, "documents.parquet"))

@@ -52,14 +52,14 @@ def _corpora(spark, tmp_path):
 def _stored_state(spark, old, tmp_path):
     art = str(tmp_path / "art")
     dig = A.corpus_digest(spark, old)
-    A.materialize_pairs(spark, old, art, dig)
-    A.materialize_bands(spark, old, art, dig)
-    A.materialize_cc_labels(spark, old, art, dig)
-    A.materialize_doc_digests(spark, old, art, dig)
-    A.materialize_signals(spark, old, art, dig)
-    A.materialize_spine(spark, old, art, dig)
-    A.materialize_span_pos(spark, old, art, dig)
-    A.materialize_spans(spark, old, art, dig)
+    A.materialize(spark, old, art, A.PAIRS_NAME, dig)
+    A.materialize(spark, old, art, A.BANDS_NAME, dig)
+    A.materialize(spark, old, art, A.CC_NAME, dig)
+    A.materialize(spark, old, art, A.DIGESTS_NAME, dig)
+    A.materialize(spark, old, art, A.SIGNALS_NAME, dig)
+    A.materialize(spark, old, art, A.SPINE_NAME, dig)
+    A.materialize(spark, old, art, A.SPANPOS_NAME, dig)
+    A.materialize(spark, old, art, A.SPANS_NAME, dig)
     D.clear_pair_cache(spark)
     return art
 
@@ -163,8 +163,8 @@ def test_supplied_vec_digests_on_the_embeddings_side(spark, tmp_path):
     new = write_emb(tmp_path / "new", [i for i in range(44) if i % 10 != 3])
     art = str(tmp_path / "art")
     dig = A.embeddings_digest(spark, old)
-    A.materialize_ivf_centroids(spark, old, art, emb_digest=dig)
-    A.materialize_vec_digests(spark, old, art, emb_digest=dig)
+    A.materialize(spark, old, art, A.CENTROIDS_NAME, dig)
+    A.materialize(spark, old, art, A.VECDIG_NAME, dig)
     from pyspark_coding_challenge_spark.llm import similarity as S
 
     S.clear_centroid_cache(spark)
