@@ -141,13 +141,23 @@ def _read_meta(path: str) -> dict:
         return json.load(f)
 
 
-def _lineage_gate(path: str, sf_dir: str, params: dict,
-                  old_digest: dict) -> str | None:
-    """Why this artifact cannot be PATCHED from the old snapshot (wrong
+def _lineage(path: str) -> dict:
+    """The lineage recorded in the meta sidecar at ``path`` ({} if none)."""
+    return _read_meta(path).get("lineage") or {}
+
+
+def _has_meta(artifact_dir: str, name: str) -> bool:
+    return os.path.exists(os.path.join(artifact_dir, name, _META_FILE))
+
+
+def _lineage_gate(artifact_dir: str, name: str, sf_dir: str,
+                  old_digest: dict | None) -> str | None:
+    """Why artifact ``name`` cannot be PATCHED from the old snapshot (wrong
     corpus dir, params drift, missing/pre-lineage meta, or a lineage
     digest that is not exactly ``old_digest``) — or None when it can."""
+    path = os.path.join(artifact_dir, name)
     try:
-        _check_meta(path, sf_dir, params)
+        _check_meta(path, sf_dir, ARTIFACTS[name].params())
         lin = _read_meta(path).get("lineage")
         if not lin or lin.get("snapshot") != old_digest:
             return (f"artifact at {path} has lineage {lin}, which does not "
@@ -157,29 +167,6 @@ def _lineage_gate(path: str, sf_dir: str, params: dict,
         return str(exc)
 
 
-def _env_float(name: str, default: str) -> float:
-    """Parse a float knob from the environment, failing LOUDLY on a typo
-    (the max-pixels lesson, r11 advisory: a malformed config value must
-    abort at import, not silently push the refresh down a wrong path).
-    'nan'/'inf'/negatives parse as floats but poison every gate
-    comparison into False — reject them the same way."""
-    import math
-
-    raw = os.environ.get(name, default)
-    try:
-        val = float(raw)
-    except ValueError as exc:
-        raise RuntimeError(
-            f"{name}={raw!r} is not a valid float — fix or unset it"
-        ) from exc
-    if not math.isfinite(val) or val < 0:
-        raise RuntimeError(
-            f"{name}={raw!r} must be a finite non-negative float — "
-            "fix or unset it"
-        )
-    return val
-
-
 # A refresh whose churn rivals the corpus should full-rebuild, not patch:
 # the patch does strictly more work per churned doc than the clean full
 # chain (band-join against the stored index, splice anti-joins, repair
@@ -187,42 +174,34 @@ def _env_float(name: str, default: str) -> float:
 # CORRECT at that size, not fast. The lineage gate checks digest IDENTITY;
 # this gate checks churn SIZE (r9 judge finding #2 — "one comparison away
 # from a principled fallback"). Fraction of the OLD snapshot's doc count.
-INCR_MAX_CHURN_FRAC = _env_float("SPARK_GRAFT_INCR_MAX_CHURN_FRAC", "0.5")
+INCR_MAX_CHURN_FRAC = 0.5
 
 # The quantizer carry gates are stricter than the row-patch gate above:
 # centroid QUALITY is a distribution property, not a per-row one, so the
 # tolerance for carrying a stale quantizer is lower than for patching rows.
-CENTROID_MAX_CHURN_FRAC = _env_float(
-    "SPARK_GRAFT_CENTROID_MAX_CHURN_FRAC", "0.25"
-)
+CENTROID_MAX_CHURN_FRAC = 0.25
 # Retrain when the churn cohort's mean quantization gap exceeds
 # ratio * training-time mean + margin. The margin keeps a near-zero
 # training gap (tightly clustered corpus) from making the ratio test
 # hair-trigger on measurement noise.
-CENTROID_QE_DRIFT_RATIO = _env_float("SPARK_GRAFT_CENTROID_QE_DRIFT_RATIO",
-                                     "1.5")
-CENTROID_QE_DRIFT_MARGIN = _env_float("SPARK_GRAFT_CENTROID_QE_DRIFT_MARGIN",
-                                      "0.05")
+CENTROID_QE_DRIFT_RATIO = 1.5
+CENTROID_QE_DRIFT_MARGIN = 0.05
 
 
 def _churn_gate(ctx: dict, limit: float | None = None) -> str | None:
-    """Why this refresh should NOT be patched based on churn SIZE — or None
-    when patching is sane. Arithmetic on scalars the shared refresh context
-    already collected (churn counts from the pinned diff, the old doc count
-    from its digest): no extra jobs. ``limit`` overrides the env-tuned
-    default for callers whose churn is fixed by construction (the
-    registered incremental_refresh section derives ~40% churn; the
-    operator knob must not be able to break that slug)."""
+    """Why this refresh should NOT be patched (or carried) based on churn
+    SIZE — or None when it is sane. Arithmetic on scalars the shared
+    refresh context already collected (churn counts from the pinned diff,
+    the old row count from its digest): no extra jobs. ``limit`` defaults
+    to ``INCR_MAX_CHURN_FRAC``; callers pass their own bound (the
+    quantizer gates, and sections whose churn is fixed by construction)."""
     if limit is None:
         limit = INCR_MAX_CHURN_FRAC
     n_churn = sum(ctx["churn"].values())  # diff rows exclude 'unchanged'
     n_old = int(ctx["old_digest"]["n_docs"])
     if n_old > 0 and n_churn > limit * n_old:
-        return (
-            f"churn of {n_churn} docs is {n_churn / n_old:.0%} of the "
-            f"{n_old}-doc old snapshot (limit {limit:.0%}: "
-            "past that a patch does more work than a rebuild)"
-        )
+        return _SIDES[ctx.get("side", "documents")].churn_text.format(
+            n=n_churn, frac=n_churn / n_old, n_old=n_old, limit=limit)
     return None
 
 
@@ -474,6 +453,48 @@ def embeddings_digest(spark: SparkSession, sf_dir: str) -> dict:
     )
 
 
+@dataclass(frozen=True)
+class _Side:
+    """One corpus side of an incremental refresh, keyed in ``_SIDES`` by
+    its ``ArtifactSpec.side``."""
+    #: the corpus table, its id column and its per-row digest relation
+    table: str
+    id_col: str
+    digest_rel: Callable[[DataFrame], DataFrame]
+    #: (old (id, digest) rows, new table) -> churn rows, hashing the new
+    #: table (the dedup diff constructors, looked up at call time)
+    diff: Callable[[DataFrame, DataFrame], DataFrame]
+    #: the stored per-row digests artifact: the diff's old side
+    digests: str
+    #: re-spread the new table before its per-row kernels
+    spread: bool
+    #: the churn gate's verdict, formatted with n, frac, n_old and limit
+    churn_text: str
+    #: how warnings name a supplied changelog and supplied digests
+    changelog: str
+    supplied: str
+
+
+_SIDES = {
+    "documents": _Side(
+        "documents", "doc_id", doc_digest_relation,
+        lambda old, new: _llm("dedup").snapshot_diff_from_digests(old, new),
+        DIGESTS_NAME, False,
+        "churn of {n} docs is {frac:.0%} of the {n_old}-doc old snapshot "
+        "(limit {limit:.0%}: past that a patch does more work than a "
+        "rebuild)",
+        "changelog", "doc digests"),
+    "embeddings": _Side(
+        "embeddings", "vec_id", vec_digest_relation,
+        lambda old, new: _llm("dedup").digest_diff(
+            old, vec_digest_relation(new), id_col="vec_id"),
+        VECDIG_NAME, True,
+        "churn of {n} vectors is {frac:.0%} of the {n_old}-vector old "
+        "snapshot (limit {limit:.0%})",
+        "vec changelog", "vec digests"),
+}
+
+
 def _cc_params() -> dict:
     # labels derive from the thresholded pair graph, so they inherit every
     # pair-graph knob plus the edge threshold
@@ -558,16 +579,13 @@ PQ_BUCKET_WIDTH = 1 << 16
 # partitioned full WRITE itself at ~3.3x the unpartitioned one), strictly
 # worse than the full rebuild it approximates. Past this fraction of the
 # live buckets, fall back to the full rebuild.
-PQ_PATCH_MAX_BUCKET_FRAC = _env_float(
-    "SPARK_GRAFT_PQ_PATCH_MAX_BUCKET_FRAC", "0.5"
-)
+PQ_PATCH_MAX_BUCKET_FRAC = 0.5
 # The fraction test is meaningless without pruning granularity: on a 1-3
 # bucket artifact (small corpus) ANY churn touches most buckets, yet the
 # patch is bounded I/O by construction and the registered stored_pq section
 # pins mode='patched' on exactly such corpora — so the guard only arms past
 # this many live buckets.
-PQ_PATCH_MIN_BUCKETS = int(_env_float(
-    "SPARK_GRAFT_PQ_PATCH_MIN_BUCKETS", "4"))
+PQ_PATCH_MIN_BUCKETS = 4
 
 
 def _pq_bucket(col: Column) -> Column:
@@ -737,7 +755,7 @@ def _paired_fold(spark: SparkSession, sf_dir: str, path: str, name: str,
     after checking that it is the fold ``path``'s lineage recorded under
     ``field``; ValueError (saying the artifact ``mismatch``) otherwise."""
     fold = _content_fold(_sibling(spark, sf_dir, path, name), *_FOLD_KEYS[name])
-    recorded = (_read_meta(path).get("lineage") or {}).get(field)
+    recorded = _lineage(path).get(field)
     if recorded != fold:
         raise ValueError(
             f"{os.path.basename(path)} at {path} {mismatch} (fold "
@@ -780,8 +798,7 @@ def _pq_codebooks_gate(spark, sf_dir, path, df) -> tuple:
     ``centroids_fold``. A dir without one is accepted: the session then
     trains the deterministic coarse quantizer from the corpus the meta's
     snapshot digest pins, which reproduces the recorded fold."""
-    cent = os.path.join(os.path.dirname(path), CENTROIDS_NAME, _META_FILE)
-    if os.path.exists(cent):
+    if _has_meta(os.path.dirname(path), CENTROIDS_NAME):
         _paired_fold(spark, sf_dir, path, CENTROIDS_NAME, "centroids_fold",
                      "was trained on residuals vs a different coarse quantizer")
     return ()
@@ -798,7 +815,7 @@ def _pq_codes_gate(spark, sf_dir, path, df) -> tuple:
     _paired_fold(spark, sf_dir, path, CENTROIDS_NAME, "centroids_fold",
                  "encodes residuals against a different coarse quantizer")
     _count_gate(spark, sf_dir, path, df, _pqcb_params()["m_sub"])
-    stats = (_read_meta(path).get("lineage") or {}).get("stats") or {}
+    stats = _lineage(path).get("stats") or {}
     cohort = stats.get("max_code_cohort")
     return fold, (int(cohort) if cohort is not None else None)
 
@@ -810,9 +827,9 @@ def _span_positions(spark: SparkSession, sf_dir: str, path: str,
     one — deriving sharedness or counts from it is a thin-int aggregate —
     else a tokenize pass over the corpus."""
     if digest is not None:
-        pos_path = os.path.join(os.path.dirname(path), SPANPOS_NAME)
-        if _lineage_gate(pos_path, sf_dir, _spanpos_params(), digest) is None:
-            return spark.read.parquet(pos_path)
+        art = os.path.dirname(path)
+        if _lineage_gate(art, SPANPOS_NAME, sf_dir, digest) is None:
+            return spark.read.parquet(os.path.join(art, SPANPOS_NAME))
     return _llm("text").span_pos_relation(rebalance_for_compute(
         read_table(spark, sf_dir, "documents"), "doc_id"))
 
@@ -861,23 +878,15 @@ def _write_pq_codes(spark, sf_dir, path, built, digest) -> dict:
     S = _llm("similarity")
     cb = _sibling(spark, sf_dir, path, PQCB_NAME)
     cent = _sibling(spark, sf_dir, path, CENTROIDS_NAME)
-    # pin STATIC partition overwrite for the full rebuild: under a session
-    # left in 'dynamic' (user config, or a leak from the patch path) an
-    # overwrite of an existing artifact would keep stale pbucket dirs from
-    # the previous corpus — the load gate would reject it later, but the
-    # build itself would land broken bytes on disk (r14 advisor)
-    mode_key = "spark.sql.sources.partitionOverwriteMode"
-    prev_mode = spark.conf.get(mode_key, None)
-    spark.conf.set(mode_key, "static")
-    try:
-        S.pq_encode(_embedding_vectors(spark, sf_dir), cb, cent) \
-            .withColumn("pbucket", _pq_bucket(F.col("vec_id"))) \
-            .write.mode("overwrite").partitionBy("pbucket").parquet(path)
-    finally:
-        if prev_mode is None:
-            spark.conf.unset(mode_key)
-        else:
-            spark.conf.set(mode_key, prev_mode)
+    # STATIC partition overwrite for the full rebuild, pinned on the writer
+    # (it takes precedence over the session conf): under a session in
+    # 'dynamic' an overwrite of an existing artifact would keep stale
+    # pbucket dirs from the previous corpus — the load gate would reject
+    # it later, but the build itself would land broken bytes (r14 advisor)
+    S.pq_encode(_embedding_vectors(spark, sf_dir), cb, cent) \
+        .withColumn("pbucket", _pq_bucket(F.col("vec_id"))) \
+        .write.mode("overwrite").option("partitionOverwriteMode", "static") \
+        .partitionBy("pbucket").parquet(path)
     # the tie-cohort bound, aggregated ONCE from the landed bytes (thin
     # compressed scan) — exact at build time; the patch path folds an
     # upper bound forward and any rebuild recomputes it here
@@ -1036,7 +1045,7 @@ def materialize(spark: SparkSession, sf_dir: str, artifact_dir: str,
     params = spec.params()
     if spec.reuse_current:
         digest = digest or snapshot_digest(spark, sf_dir, spec.side)
-        if _lineage_gate(path, sf_dir, params, digest) is None:
+        if _lineage_gate(artifact_dir, name, sf_dir, digest) is None:
             return path
     if _seeded_from(spark, sf_dir, name, path):
         return path
@@ -1106,9 +1115,9 @@ def seed_from_env(spark: SparkSession, sf_dir: str, name: str):
     base = os.environ.get(ENV_ARTIFACT_DIR)
     if not base:
         return None
-    path = os.path.join(base, name)
-    if not os.path.exists(os.path.join(path, _META_FILE)):
+    if not _has_meta(base, name):
         return None
+    path = os.path.join(base, name)
     try:
         df, value = _open(spark, sf_dir, path, name)
     except ValueError as exc:
@@ -1143,9 +1152,7 @@ def load_all(spark: SparkSession, sf_dir: str, artifact_dir: str) -> dict:
     for name, spec in ARTIFACTS.items():
         if name not in session_state.KINDS:
             continue
-        absent = not os.path.exists(
-            os.path.join(artifact_dir, name, _META_FILE))
-        if (spec.optional and absent) or (
+        if (spec.optional and not _has_meta(artifact_dir, name)) or (
                 spec.needs and out.get(spec.needs) is None):
             out[name] = None
             continue
@@ -1348,144 +1355,153 @@ def _changelog_gate(changelog: DataFrame, old_digests: DataFrame,
     return None
 
 
-def _old_digest_state(spark: SparkSession, old_sf_dir: str,
-                      artifact_dir: str) -> tuple[dict, DataFrame | None, str | None]:
-    """Resolve the OLD snapshot's digest for the refresh lineage gate —
-    from the ``doc_digests`` artifact when one is present, provenance-valid
-    AND self-consistent (its content fold equals its own recorded
-    lineage.snapshot), in which case the old corpus's parquet is never
-    touched (it may have been retired); otherwise by scanning
-    ``old_sf_dir`` (legacy bootstrap). Returns ``(old_digest,
-    old_digests_df_or_None, note_or_None)``. Note the trust chain: a
-    self-consistent digest artifact that does NOT reflect the corpus the
-    indexes were built from will fail the pairs/bands lineage comparison
-    downstream — the gate cannot be spoofed by tampering one sidecar."""
-    dig_path = os.path.join(artifact_dir, DIGESTS_NAME)
+def _old_digest_state(
+        spark: SparkSession, old_sf_dir: str, artifact_dir: str,
+        side: str = "documents",
+) -> tuple[dict | None, DataFrame | None, str | None]:
+    """Resolve the OLD snapshot's ``side`` digest for the refresh lineage
+    gate — from the side's stored digests artifact when one is present,
+    provenance-valid AND self-consistent (its content fold equals its own
+    recorded lineage.snapshot), in which case the old snapshot's parquet
+    is never touched (it may have been retired); otherwise by scanning
+    ``old_sf_dir``. Returns ``(old_digest, old_digests_df_or_None,
+    note_or_None)``; ``old_digest`` is None when there is neither a valid
+    artifact nor an old table to rescan (the caller bootstraps a full
+    build). Note the trust chain: a self-consistent digest artifact that
+    does NOT reflect the corpus the indexes were built from fails their
+    lineage comparison downstream — the gate cannot be spoofed by
+    tampering one sidecar."""
+    s = _SIDES[side]
+    path = os.path.join(artifact_dir, s.digests)
     try:
-        _check_meta(dig_path, old_sf_dir, _digests_params())
-        cand = spark.read.parquet(dig_path)
-        content = digest_of_digests(cand)
-        lin = _read_meta(dig_path).get("lineage")
+        _check_meta(path, old_sf_dir, ARTIFACTS[s.digests].params())
+        cand = spark.read.parquet(path)
+        content = digest_of_digests(cand, id_col=s.id_col)
+        lin = _read_meta(path).get("lineage")
         if lin and lin.get("snapshot") == content:
             return content, cand, None
-        note = (f"doc_digests content fold {content} does not match its "
+        note = (f"{s.digests} content fold {content} does not match its "
                 f"recorded lineage {lin}")
     except ValueError as exc:
         note = str(exc)
     except Exception as exc:  # unreadable/missing parquet under a valid meta
-        note = f"doc_digests unreadable: {exc}"
-    return corpus_digest(spark, old_sf_dir), None, note
+        note = f"{s.digests} unreadable: {exc}"
+    if not os.path.exists(os.path.join(old_sf_dir, f"{s.table}.parquet")):
+        return None, None, (f"{note}; and {old_sf_dir} has no {s.table} "
+                            "table to rescan")
+    return snapshot_digest(spark, old_sf_dir, side), None, note
 
 
 def _refresh_ctx(spark: SparkSession, old_sf_dir: str, new_sf_dir: str,
                  artifact_dir: str, new_digests: DataFrame | None = None,
-                 new_changelog: DataFrame | None = None) -> dict:
-    """The SHARED refresh context both incremental updaters consume: the
-    old snapshot's digest (from the ``doc_digests`` artifact when valid —
-    no old-corpus read), the pinned churn diff, churn counts, the gone-id
-    relation, and the NEW snapshot's digest + patched digest relation
-    (churn-proportional fold arithmetic when the artifact is present).
-    Built ONCE per refresh and passed to both updaters — building it
-    after one updater has overwritten the digest artifact would read
+                 new_changelog: DataFrame | None = None,
+                 side: str = "documents") -> dict:
+    """The SHARED refresh context of one corpus side: the old snapshot's
+    digest (from the side's stored digests artifact when valid — no
+    old-snapshot read), the pinned churn diff, churn counts, the gone-id
+    and delta-id relations, and the NEW snapshot's digest + patched
+    digest relation (churn-proportional fold arithmetic when the artifact
+    is present). The documents-side context is built ONCE per refresh and
+    passed to both of that side's updaters — building it after one
+    updater has overwritten the digest artifact would read
     already-patched state.
 
-    ``new_digests``: an optional caller-supplied (doc_id, digest)
-    relation for the NEW snapshot — an ingest pipeline computes these
-    once at write time, and with them the diff becomes pure digest
-    arithmetic: the new corpus's text is hashed NOWHERE in the refresh
-    (the last corpus-proportional hash scan, r13 judge item #2). Gated by
+    ``new_digests``: an optional caller-supplied (id, digest) relation
+    for the NEW snapshot — an ingest pipeline computes these once at
+    write time, and with them the diff becomes pure digest arithmetic:
+    the new snapshot is hashed NOWHERE in the refresh (the last
+    corpus-proportional hash scan, r13 judge item #2). Gated by
     ``_supplied_digest_gate``; a rejected relation falls back to the scan
     with a warning, recorded as ``supplied`` in the ctx/summaries.
 
-    ``new_changelog``: an optional caller-supplied churn changelog
-    (doc_id, change, digest_new) — the step past supplied digests: a
-    CDC-shaped ingest already knows its op codes, and with them churn
-    DETECTION is O(churn) too (no corpus-wide diff join — the one
-    corpus-proportional term the supplied path still paid; the r13 ctx
-    micro-arm measured that join at 0.9->2.5 s across 1x-30x). Requires
-    a valid stored ``doc_digests`` artifact (the old side of the fold
-    arithmetic); gated by ``_changelog_gate``; any rejection falls back
-    to ``new_digests`` (if given) and then to the scan, with a warning.
-    Takes precedence over ``new_digests`` when both pass their gates."""
-    from pyspark_coding_challenge_spark.llm import dedup as D
+    ``new_changelog``: an optional caller-supplied churn changelog (id,
+    change, digest_new) — the step past supplied digests: a CDC-shaped
+    ingest already knows its op codes, and with them churn DETECTION is
+    O(churn) too (no corpus-wide diff join — the one corpus-proportional
+    term the supplied path still paid; the r13 ctx micro-arm measured
+    that join at 0.9->2.5 s across 1x-30x). Requires a valid stored
+    digests artifact (the old side of the fold arithmetic); gated by
+    ``_changelog_gate``; any rejection falls back to ``new_digests`` (if
+    given) and then to the scan, with a warning. Takes precedence over
+    ``new_digests`` when both pass their gates.
 
+    With no old state at all (``_old_digest_state`` bootstrap) the
+    context holds only the new snapshot's digest; ``_bootstrap`` names
+    why, and every updater rebuilds in full."""
+    s = _SIDES[side]
+    idc = s.id_col
     old_digest, old_digests, dig_note = _old_digest_state(
-        spark, old_sf_dir, artifact_dir
-    )
-    new_docs = read_table(spark, new_sf_dir, "documents")
-    supplied_note = None
-    changelog_diff = None
+        spark, old_sf_dir, artifact_dir, side)
+    new_tab = read_table(spark, new_sf_dir, s.table)
+    if s.spread:
+        new_tab = rebalance_for_compute(new_tab, idc)
+    ctx = {"side": side, "old_digest": old_digest,
+           "old_digests": old_digests, "dig_note": dig_note,
+           "new_docs": new_tab, "supplied": None}
+    if old_digest is None:
+        ctx.update(churn={}, diff=None, gone=None, delta_ids=None,
+                   new_digests_rel=None,
+                   new_digest=snapshot_digest(spark, new_sf_dir, side))
+        return ctx
+    diff = None
     if new_changelog is not None:
         if old_digests is None:
-            warnings.warn("ignoring supplied changelog: no valid stored "
-                          "doc_digests artifact to patch against")
-            supplied_note = "changelog rejected (no stored doc_digests)"
+            warnings.warn(f"ignoring supplied {s.changelog}: no valid stored "
+                          f"{s.digests} artifact to patch against")
+            ctx["supplied"] = f"changelog rejected (no stored {s.digests})"
         else:
             why = _changelog_gate(new_changelog, old_digests,
-                                  old_digest["n_docs"], new_docs,
-                                  "doc_id", doc_digest_relation)
+                                  old_digest["n_docs"], new_tab, idc,
+                                  s.digest_rel)
             if why is not None:
-                warnings.warn(f"ignoring supplied changelog: {why}; "
+                warnings.warn(f"ignoring supplied {s.changelog}: {why}; "
                               "falling back")
-                supplied_note = f"changelog rejected ({why})"
+                ctx["supplied"] = f"changelog rejected ({why})"
             else:
-                supplied_note = "changelog"
-                changelog_diff = new_changelog.select(
-                    "doc_id",
+                ctx["supplied"] = "changelog"
+                # O(churn): the changelog IS the diff — no corpus-wide join
+                diff = new_changelog.select(
+                    idc,
                     F.col("change").cast("string").alias("change"),
                     F.col("digest_new").cast("string").alias("digest_new"),
                 )
-    if new_digests is not None and changelog_diff is None:
-        why = _supplied_digest_gate(new_digests, new_docs, "doc_id",
-                                    doc_digest_relation)
+    if new_digests is not None and diff is None:
+        why = _supplied_digest_gate(new_digests, new_tab, idc, s.digest_rel)
         if why is not None:
-            warnings.warn(f"ignoring supplied doc digests: {why}; hashing "
+            warnings.warn(f"ignoring supplied {s.supplied}: {why}; hashing "
                           "the new snapshot instead")
-            dig_note_s = f"rejected ({why})"
+            verdict = f"rejected ({why})"
             new_digests = None
         else:
-            dig_note_s = "supplied"
+            verdict = "supplied"
             new_digests = new_digests.select(
-                "doc_id", F.col("digest").cast("string").alias("digest"))
+                idc, F.col("digest").cast("string").alias("digest"))
         # a rejected changelog's note survives in front of the digests
         # verdict so the summaries show the full fallback chain
-        supplied_note = (f"{supplied_note}; {dig_note_s}"
-                         if supplied_note else dig_note_s)
-    # churn relation is consumed many times (counts, gone, delta, digest
-    # folds) — pin it, WITH digest_new (the digest-artifact patch needs it)
-    if changelog_diff is not None:
-        # O(churn): the changelog IS the diff — no corpus-wide join
-        diff = changelog_diff.localCheckpoint()
-    elif new_digests is not None:
+        prior = ctx["supplied"]
+        ctx["supplied"] = f"{prior}; {verdict}" if prior else verdict
+    if diff is None:
         old_side = (old_digests if old_digests is not None
-                    else doc_digest_relation(
-                        read_table(spark, old_sf_dir, "documents")))
-        diff = D.digest_diff(old_side, new_digests) \
-            .select("doc_id", "change", "digest_new").localCheckpoint()
-    elif old_digests is not None:
-        diff = D.snapshot_diff_from_digests(old_digests, new_docs) \
-            .select("doc_id", "change", "digest_new").localCheckpoint()
-    else:
-        old_docs = read_table(spark, old_sf_dir, "documents")
-        diff = D.snapshot_diff(old_docs, new_docs) \
-            .select("doc_id", "change", "digest_new").localCheckpoint()
+                    else s.digest_rel(read_table(spark, old_sf_dir, s.table)))
+        diff = (_llm("dedup").digest_diff(old_side, new_digests, id_col=idc)
+                if new_digests is not None else s.diff(old_side, new_tab))
+        diff = diff.select(idc, "change", "digest_new")
+    # the churn relation is consumed many times (counts, gone, delta,
+    # digest folds) — pin it, WITH digest_new (the digests patch needs it)
+    diff = diff.localCheckpoint()
     churn = {
         r["change"]: r["n"]
         for r in diff.groupBy("change").agg(F.count("*").alias("n")).collect()
     }
-    gone = diff.filter(F.col("change").isin("removed", "modified")) \
-        .select("doc_id")
-    delta_ids = diff.filter(F.col("change").isin("added", "modified")) \
-        .select("doc_id")
+    gone = diff.filter(F.col("change").isin("removed", "modified")).select(idc)
+    upserts = diff.filter(F.col("change").isin("added", "modified"))
     if old_digests is not None:
         # churn-proportional fold arithmetic: the snapshot digest is a SUM
-        # of per-doc folds, so new = old - gone + churn (bounded scalars)
+        # of per-row folds, so new = old - gone + churn (bounded scalars)
         gone_fold = digest_of_digests(
-            old_digests.join(gone, on="doc_id", how="left_semi")
-        )
-        add_rows = diff.filter(F.col("change").isin("added", "modified")) \
-            .select("doc_id", F.col("digest_new").alias("digest"))
-        add_fold = digest_of_digests(add_rows)
+            old_digests.join(gone, on=idc, how="left_semi"), id_col=idc)
+        add_rows = upserts.select(idc, F.col("digest_new").alias("digest"))
+        add_fold = digest_of_digests(add_rows, id_col=idc)
         new_digest = {
             "fold_sum": str(int(old_digest["fold_sum"])
                             - int(gone_fold["fold_sum"])
@@ -1494,24 +1510,226 @@ def _refresh_ctx(spark: SparkSession, old_sf_dir: str, new_sf_dir: str,
                        + add_fold["n_docs"]),
         }
         new_digests_rel = (
-            old_digests.join(gone, on="doc_id", how="left_anti")
+            old_digests.join(gone, on=idc, how="left_anti")
             .unionByName(add_rows)
-            # reads the digest-artifact path — pin before its overwrite
+            # reads the digests artifact path — pin before its overwrite
             .localCheckpoint()
         )
-    elif new_digests is not None:
-        new_digests_rel = new_digests.localCheckpoint()
-        new_digest = digest_of_digests(new_digests_rel)
     else:
-        new_digest = corpus_digest(spark, new_sf_dir)
-        new_digests_rel = doc_digest_relation(new_docs)
-    return {
-        "old_digest": old_digest, "old_digests": old_digests,
-        "dig_note": dig_note, "new_docs": new_docs, "diff": diff,
-        "churn": churn, "gone": gone, "delta_ids": delta_ids,
-        "new_digest": new_digest, "new_digests_rel": new_digests_rel,
-        "supplied": supplied_note,
-    }
+        # no stored digests means no changelog either: the new side's
+        # digests are the supplied or freshly hashed relation
+        new_digests_rel = (new_digests if new_digests is not None
+                           else s.digest_rel(new_tab)).localCheckpoint()
+        new_digest = digest_of_digests(new_digests_rel, id_col=idc)
+    ctx.update(diff=diff, churn=churn, gone=gone,
+               delta_ids=upserts.select(idc), new_digest=new_digest,
+               new_digests_rel=new_digests_rel)
+    return ctx
+
+
+def _bootstrap(ctx: dict) -> str | None:
+    """Why a refresh has nothing to patch from (no stored digests and no
+    old table to rescan) — or None when it has."""
+    if ctx["old_digest"] is None:
+        return f"bootstrap ({ctx['dig_note']})"
+    return None
+
+
+def _digests_lineage(ctx: dict) -> dict:
+    """Lineage of a side's refreshed digests artifact: patched from the
+    old snapshot when the stored rows were folded forward, else a rescan
+    of the new one."""
+    if ctx["old_digests"] is not None:
+        return {"snapshot": ctx["new_digest"],
+                "patched_from": ctx["old_digest"]}
+    return {"snapshot": ctx["new_digest"], "patched_from": None,
+            "via": "corpus_scan"}
+
+
+@contextlib.contextmanager
+def _timed(walls: dict, key: str):
+    """Record the wall of the block as ``walls[key]`` (seconds, 3 dp) — the
+    per-artifact refresh walls ``scripts/scale_probe.py --incr`` reports
+    (r12 judge item #2b). Compute is lazy, so each block covers the phase
+    that evaluates its artifact's work."""
+    t0 = time.perf_counter()
+    yield
+    walls[key] = round(time.perf_counter() - t0, 3)
+
+
+def _land(df: DataFrame | None, sf_dir: str, artifact_dir: str, name: str,
+          lineage: dict) -> None:
+    """Overwrite artifact ``name`` with ``df`` and write its meta sidecar
+    with ``lineage``; ``df=None`` keeps the bytes and re-points only the
+    meta (a carry, or a write the caller made itself)."""
+    path = os.path.join(artifact_dir, name)
+    if df is not None:
+        df.write.mode("overwrite").parquet(path)
+    _write_meta(path, sf_dir, ARTIFACTS[name].params(), lineage)
+
+
+def _rebuild(spark: SparkSession, sf_dir: str, artifact_dir: str,
+             digest: dict, *names: str, walls: dict | None = None) -> dict:
+    """Full rebuild of ``names`` from ``sf_dir``, in order; returns name ->
+    path. Every stale meta sidecar is deleted FIRST: if
+    SPARK_GRAFT_ARTIFACT_DIR points at this artifact_dir and a stale meta
+    passes the sf_dir+params check (an in-place snapshot refresh, or a
+    prior carry that re-pointed it), a builder inside materialize would
+    env-seed the stale bytes — the pair build seeds the bands, too — and
+    materialize would no-op on its _seeded_from guard, so the "rebuild"
+    would silently keep stale state (r8 review finding). No meta => no
+    env seed; a crash leaves loudly-invalid artifacts, never silently
+    stale ones."""
+    _drop_stale_meta(*(os.path.join(artifact_dir, n) for n in names))
+    out = {}
+    for name in names:
+        with _timed(walls if walls is not None else {}, name):
+            out[name] = materialize(spark, sf_dir, artifact_dir, name, digest)
+    return out
+
+
+def _patch_rows(spark: SparkSession, sf_dir: str, artifact_dir: str,
+                name: str, ctx: dict, churn_rows: DataFrame,
+                lineage: dict) -> DataFrame:
+    """Patch the per-row artifact ``name``: delete the refresh's gone
+    rows, append ``churn_rows``, pin (the rows read the path about to be
+    overwritten), overwrite, re-point the meta. Returns the pinned
+    patched relation."""
+    patched = (
+        spark.read.parquet(os.path.join(artifact_dir, name))
+        .join(ctx["gone"], on=_SIDES[ctx["side"]].id_col, how="left_anti")
+        .unionByName(churn_rows)
+        .localCheckpoint()
+    )
+    _land(patched, sf_dir, artifact_dir, name, lineage)
+    return patched
+
+
+def _unpaired(lin: dict, paired: dict) -> str | None:
+    """The first of ``paired`` (lineage field -> (expected value, why))
+    that lineage ``lin`` does not record: its why, or None."""
+    return next((why for field, (value, why) in paired.items()
+                 if lin.get(field) != value), None)
+
+
+def _carry_or_retrain(spark: SparkSession, ctx: dict, old_sf_dir: str,
+                      new_sf_dir: str, artifact_dir: str, name: str,
+                      limit: float, summary: dict, *, prefix: str,
+                      stats_key: str, gap: Callable, what: str,
+                      reason: str | None = None,
+                      paired: dict | None = None) -> str:
+    """Carry the stored trained model ``name`` (bytes verbatim, meta
+    re-pointed at the new snapshot with ``carried_from``) or retrain it,
+    and return 'carried' or 'retrained'. It retrains on the first gate
+    that fails: its lineage gate; ``reason`` (the caller's own verdict);
+    the ``paired`` lineage fields (see ``_unpaired``); a stored
+    ``stats.<stats_key>`` training baseline; the churn gate at ``limit``;
+    and the drift gate — the churn cohort's mean ``gap`` (a kernel over
+    the stored model, run on the added/modified vectors only, so the
+    check is churn-sized) must not exceed ``CENTROID_QE_DRIFT_RATIO`` x
+    the training-time mean + ``CENTROID_QE_DRIFT_MARGIN``. The baseline
+    is the ORIGINAL training distribution and a carry keeps it, so
+    repeated small drifts accumulate against a fixed reference instead of
+    boiling the frog. Records ``<prefix>churn_qe``/``<prefix>trained_qe``
+    when the drift gate measured, and ``<prefix>reason`` for a retrain or
+    a vacuous drift check."""
+    path = os.path.join(artifact_dir, name)
+    paired = paired or {}
+    reason = _lineage_gate(artifact_dir, name, old_sf_dir,
+                           ctx["old_digest"]) or reason
+    stats = None
+    if reason is None:
+        lin = _lineage(path)
+        stats = lin.get("stats")
+        reason = _unpaired(lin, paired)
+        if reason is None and (not stats or stats_key not in stats):
+            reason = (f"stored {name} meta records no training stats — no "
+                      "drift baseline to carry against")
+    reason = reason or _churn_gate(ctx, limit)
+    if reason is None:
+        # bounded 1-row scalar collect (repo convention); churn-sized input
+        row = gap(spark.read.parquet(path)).agg(
+            F.avg("gap").alias("m")).collect()[0]
+        if row["m"] is None:
+            summary[prefix + "reason"] = ("no added/modified vectors — drift "
+                                          "check vacuous")
+        else:
+            churn_qe, trained_qe = float(row["m"]), float(stats[stats_key])
+            summary[prefix + "churn_qe"] = round(churn_qe, 6)
+            summary[prefix + "trained_qe"] = trained_qe
+            if churn_qe > (CENTROID_QE_DRIFT_RATIO * trained_qe
+                           + CENTROID_QE_DRIFT_MARGIN):
+                reason = (
+                    f"churned vectors' mean {what} {churn_qe:.4f} exceeds "
+                    f"{CENTROID_QE_DRIFT_RATIO} x training-time "
+                    f"{trained_qe:.4f} + {CENTROID_QE_DRIFT_MARGIN} — the "
+                    f"stored {name} does not cover the new vector mass")
+    if reason is None:
+        _land(None, new_sf_dir, artifact_dir, name,
+              {"snapshot": ctx["new_digest"],
+               "carried_from": ctx["old_digest"],
+               **{field: value for field, (value, _) in paired.items()},
+               "stats": stats})
+        return "carried"
+    summary[prefix + "reason"] = reason
+    _rebuild(spark, new_sf_dir, artifact_dir, ctx["new_digest"], name)
+    return "retrained"
+
+
+def _scattered_churn(path: str, touched: list[int]) -> str | None:
+    """Why a pq_codes patch touching the ``touched`` pbuckets costs more
+    than the rebuild it approximates (r14 judge item #2) — or None. Past
+    ``PQ_PATCH_MAX_BUCKET_FRAC`` of the live buckets the patch reads and
+    rewrites nearly the whole artifact ANYWAY, plus the anti-join and the
+    partitioned-write overhead. Only touched buckets that ALREADY EXIST
+    count (r15 advisor): brand-new buckets from corpus growth are
+    appended by the dynamic overwrite without rewriting any data. Live
+    buckets come from one bounded listdir of the hive layout."""
+    live = _live_pbuckets(path)
+    touched_existing = [b for b in touched if b in live]
+    if len(live) >= PQ_PATCH_MIN_BUCKETS and \
+            len(touched_existing) > PQ_PATCH_MAX_BUCKET_FRAC * len(live):
+        return (f"churn touches {len(touched_existing)} of {len(live)} live "
+                f"pbuckets (> {PQ_PATCH_MAX_BUCKET_FRAC:.0%}) — scattered "
+                "churn: a patch would rewrite nearly the whole artifact "
+                "with extra anti-join and partitioned-write cost; full "
+                "rebuild is cheaper")
+    return None
+
+
+def _patch_pq_codes(spark: SparkSession, path: str, ctx: dict,
+                    touched: list[int], churn_codes: DataFrame) -> int:
+    """The partition-pruned pq_codes patch: only the ``touched`` pbuckets
+    are read (a pruned scan) and re-written (dynamic partition overwrite)
+    — the unpartitioned delete+append rewrite was corpus-sized I/O no
+    matter how small the churn. Returns the churn rows' tie-cohort max."""
+    if not touched:
+        return 0
+    patched = (
+        spark.read.parquet(path)
+        .filter(F.col("pbucket").isin(touched))
+        .select("vec_id", "sub", "code")
+        .join(ctx["gone"], on="vec_id", how="left_anti")
+        .unionByName(churn_codes)
+        .withColumn("pbucket", _pq_bucket(F.col("vec_id")))
+        # reads partitions being overwritten — pin first
+        .localCheckpoint()
+    )
+    # one churn-bucket-sized aggregation of the PINNED patch (no re-encode)
+    churn_cohort = _llm("similarity").pq_code_cohort_max(
+        patched.select("vec_id", "sub", "code")
+        .join(ctx["delta_ids"], on="vec_id", how="left_semi"))
+    patched.write.mode("overwrite") \
+        .option("partitionOverwriteMode", "dynamic") \
+        .partitionBy("pbucket").parquet(path)
+    # a bucket whose every row was deleted writes nothing back — dynamic
+    # overwrite never touches it — so its stale directory is dropped by
+    # hand (bounded loop over the touched set)
+    present = {r["pbucket"]
+               for r in patched.select("pbucket").distinct().collect()}
+    for b in set(touched) - present:
+        shutil.rmtree(os.path.join(path, f"pbucket={b}"), ignore_errors=True)
+    return churn_cohort
 
 
 @_with_lease
@@ -1547,31 +1765,27 @@ def update_pairs_incremental(spark: SparkSession, old_sf_dir: str,
     Lineage gate (judge r8 #6): the stored artifacts must record — in their
     meta sidecar's ``lineage.snapshot`` — the digest of EXACTLY the corpus
     at ``old_sf_dir``; any mismatch (stale artifact, tampered meta,
-    pre-lineage artifact, params drift) forces a warned FULL REBUILD from
-    ``new_sf_dir`` rather than silently patching the wrong index. A
-    missing/stale CC or digest artifact alone degrades only ITS piece to a
-    full rebuild (recorded in the summary), not the whole refresh. The
-    patched artifacts record ``lineage = {snapshot: digest(new),
-    patched_from: digest(old)}``, so a chain of refreshes is auditable.
+    pre-lineage artifact, params drift), or no old state at all (no valid
+    ``doc_digests`` and no old documents table: ``reason`` starts with
+    ``bootstrap``), forces a warned FULL REBUILD from ``new_sf_dir``
+    rather than silently patching the wrong index. A missing/stale CC or
+    digest artifact alone degrades only ITS piece to a full rebuild
+    (recorded in the summary), not the whole refresh. The patched
+    artifacts record ``lineage = {snapshot: digest(new), patched_from:
+    digest(old)}``, so a chain of refreshes is auditable.
 
     Returns a summary dict: ``mode`` ('incremental' | 'full_rebuild'),
     churn counts, ``cc_mode`` ('incremental' | 'full' | 'full_rebuild'),
     ``old_side`` ('doc_digests' | 'corpus_scan'), and the artifact paths."""
-    from pyspark_coding_challenge_spark.llm import dedup as D
-
-    pairs_path = os.path.join(artifact_dir, PAIRS_NAME)
-    bands_path = os.path.join(artifact_dir, BANDS_NAME)
-    cc_path = os.path.join(artifact_dir, CC_NAME)
-    dig_path = os.path.join(artifact_dir, DIGESTS_NAME)
+    D = _llm("dedup")
     ctx = _ctx if _ctx is not None else _refresh_ctx(
         spark, old_sf_dir, new_sf_dir, artifact_dir, new_digests=new_digests
     )
-    old_digest, old_digests, dig_note = (
-        ctx["old_digest"], ctx["old_digests"], ctx["dig_note"]
-    )
+    old_digest, old_digests = ctx["old_digest"], ctx["old_digests"]
     reason = (
-        _lineage_gate(pairs_path, old_sf_dir, _pairs_params(), old_digest)
-        or _lineage_gate(bands_path, old_sf_dir, _bands_params(), old_digest)
+        _bootstrap(ctx)
+        or _lineage_gate(artifact_dir, PAIRS_NAME, old_sf_dir, old_digest)
+        or _lineage_gate(artifact_dir, BANDS_NAME, old_sf_dir, old_digest)
         or _churn_gate(ctx)
     )
     if reason is not None:
@@ -1582,137 +1796,95 @@ def update_pairs_incremental(spark: SparkSession, old_sf_dir: str,
         # this session may hold pair/band caches (or their seed paths)
         # reading the very paths the rebuild overwrites — for old_sf_dir
         # as much as new_sf_dir; drop them all BEFORE rebuilding or later
-        # consumers read deleted/rewritten files (r8 review finding — the
-        # incremental branch below already did this)
+        # consumers read deleted/rewritten files (r8 review finding)
         D.clear_pair_cache(spark)
-        # ALSO delete the stale meta sidecars: if SPARK_GRAFT_ARTIFACT_DIR
-        # points at this artifact_dir and the stale meta happens to pass
-        # the sf_dir+params check for new_sf_dir (env seeding never sees
-        # the lineage digest that just FAILED), the builder would seed
-        # from the stale bytes and materialize would no-op on its
-        # _seeded_from guard — "full rebuild" would silently keep the
-        # stale artifact (r8 review finding).
-        _drop_stale_meta(pairs_path, bands_path, cc_path, dig_path)
-        new_digest = ctx["new_digest"]
-        out = {"mode": "full_rebuild", "reason": reason}
-        for name in (PAIRS_NAME, BANDS_NAME, CC_NAME, DIGESTS_NAME):
-            out[name] = materialize(spark, new_sf_dir, artifact_dir, name,
-                                    new_digest)
-        return out
+        return {"mode": "full_rebuild", "reason": reason,
+                **_rebuild(spark, new_sf_dir, artifact_dir, ctx["new_digest"],
+                           PAIRS_NAME, BANDS_NAME, CC_NAME, DIGESTS_NAME)}
 
     # a missing/stale CC artifact degrades the label patch (only) to a
     # full relabel of the patched graph — never the whole refresh
-    cc_reason = _lineage_gate(cc_path, old_sf_dir, _cc_params(), old_digest)
-
-    new_docs, diff, churn, gone = (
-        ctx["new_docs"], ctx["diff"], ctx["churn"], ctx["gone"]
-    )
-    # per-artifact wall clocks for the refresh-cost story (r12 judge item
-    # #2b — scripts/scale_probe.py --incr records these against the
-    # matching full materialize walls). Compute is lazy, so each wall
-    # covers the phase that actually EVALUATES the work: the checkpoints
-    # pin pairs+bands, the labels checkpoint pins CC, and each write pays
-    # its own artifact's residual evaluation.
+    cc_reason = _lineage_gate(artifact_dir, CC_NAME, old_sf_dir, old_digest)
+    pairs_path = os.path.join(artifact_dir, PAIRS_NAME)
+    gone = ctx["gone"]
     walls: dict[str, float] = {}
-    t0 = time.perf_counter()
-    old_pairs = spark.read.parquet(pairs_path)
-    old_bands = spark.read.parquet(bands_path)
-    new_bands, new_pairs, fresh_pairs = D.incremental_dedup_update(
-        new_docs, diff.select("doc_id", "change"), old_pairs, old_bands
-    )
-    # the patched frames READ the very paths being overwritten: pin the
-    # bytes before mode("overwrite") deletes them (same trap class as the
-    # _seeded_from guard in materialize)
-    new_bands = new_bands.localCheckpoint()
-    new_pairs = new_pairs.localCheckpoint()
-    walls["pairs_bands_patch"] = round(time.perf_counter() - t0, 3)
+    with _timed(walls, "pairs_bands_patch"):
+        old_pairs = spark.read.parquet(pairs_path)
+        old_bands = spark.read.parquet(os.path.join(artifact_dir, BANDS_NAME))
+        new_bands, new_pairs, fresh_pairs = D.incremental_dedup_update(
+            ctx["new_docs"], ctx["diff"].select("doc_id", "change"),
+            old_pairs, old_bands)
+        # the patched frames READ the very paths being overwritten: pin
+        # the bytes before mode("overwrite") deletes them (same trap class
+        # as the _seeded_from guard in materialize)
+        new_bands = new_bands.localCheckpoint()
+        new_pairs = new_pairs.localCheckpoint()
 
     # ---- CC labels: patch from the churn's own edge diff, or relabel ----
-    t0 = time.perf_counter()
-    new_edges = D._threshold_edges(new_pairs)
-    if cc_reason is not None:
-        cc_mode = "full_rebuild"
-        labels = D.connected_components(new_edges)
-    else:
-        # pin every old-side read BEFORE the overwrites delete the bytes
-        old_edges = D._threshold_edges(old_pairs).localCheckpoint()
-        n_old_edges = old_edges.count()
-        if n_old_edges < D.CC_INCR_MIN_EDGES:
-            # below the measured crossover a from-scratch relabel is
-            # cheaper than the patch machinery (r8 judge item #6)
-            cc_mode = "full"
+    with _timed(walls, "cc_patch"):
+        new_edges = D._threshold_edges(new_pairs)
+        if cc_reason is not None:
+            cc_mode = "full_rebuild"
             labels = D.connected_components(new_edges)
         else:
-            cc_mode = "incremental"
-            old_cc = spark.read.parquet(cc_path).localCheckpoint()
-            removed = (
-                old_edges.join(gone.withColumnRenamed("doc_id", "doc_a"),
-                               on="doc_a", how="left_semi")
-                .unionByName(
-                    old_edges.join(gone.withColumnRenamed("doc_id", "doc_b"),
-                                   on="doc_b", how="left_semi")
+            # pin every old-side read BEFORE the overwrites delete the bytes
+            old_edges = D._threshold_edges(old_pairs).localCheckpoint()
+            if old_edges.count() < D.CC_INCR_MIN_EDGES:
+                # below the measured crossover a from-scratch relabel is
+                # cheaper than the patch machinery (r8 judge item #6)
+                cc_mode = "full"
+                labels = D.connected_components(new_edges)
+            else:
+                cc_mode = "incremental"
+                old_cc = spark.read.parquet(
+                    os.path.join(artifact_dir, CC_NAME)).localCheckpoint()
+                removed = (
+                    old_edges.join(gone.withColumnRenamed("doc_id", "doc_a"),
+                                   on="doc_a", how="left_semi")
+                    .unionByName(
+                        old_edges.join(
+                            gone.withColumnRenamed("doc_id", "doc_b"),
+                            on="doc_b", how="left_semi"))
+                    .distinct()
                 )
-                .distinct()
-            )
-            # fresh_pairs is pinned inside the patch, so thresholding it
-            # here is a cheap filter over the checkpoint, not a re-verify
-            labels = D.incremental_cc_update(
-                old_cc, new_edges,
-                known_added=D._threshold_edges(fresh_pairs),
-                known_removed=removed,
-            )
-    labels = labels.localCheckpoint()
-    walls["cc_patch"] = round(time.perf_counter() - t0, 3)
+                # fresh_pairs is pinned inside the patch, so thresholding
+                # it here is a cheap filter over the checkpoint
+                labels = D.incremental_cc_update(
+                    old_cc, new_edges,
+                    known_added=D._threshold_edges(fresh_pairs),
+                    known_removed=removed,
+                )
+        labels = labels.localCheckpoint()
 
-    # ---- new lineage digest + patched digest artifact (from the ctx:
-    # churn-proportional fold arithmetic when the digests artifact exists,
-    # corpus scan otherwise) ----
-    new_digests_rel = ctx["new_digests_rel"]
     lineage = {"snapshot": ctx["new_digest"], "patched_from": old_digest}
-
-    t0 = time.perf_counter()
-    new_pairs.write.mode("overwrite").parquet(pairs_path)
-    _write_meta(pairs_path, new_sf_dir, _pairs_params(), lineage)
-    walls[PAIRS_NAME + "_write"] = round(time.perf_counter() - t0, 3)
-    t0 = time.perf_counter()
-    new_bands.write.mode("overwrite").parquet(bands_path)
-    _write_meta(bands_path, new_sf_dir, _bands_params(), lineage)
-    walls[BANDS_NAME + "_write"] = round(time.perf_counter() - t0, 3)
-    t0 = time.perf_counter()
-    labels.select("node", "label").write.mode("overwrite").parquet(cc_path)
     # patched_from is PER-ARTIFACT: it records that THIS artifact's own
-    # old bytes were consumed (r9 advisor finding; the r10 review pass
-    # extended the rule to every branch). Only cc_mode='incremental'
-    # consumed the stored labels; a relabel from the patched graph records
-    # patched_from: None plus a 'via' note so the audit chain still shows
-    # the content descends from the patch chain, not a corpus rescan.
-    _write_meta(cc_path, new_sf_dir, _cc_params(),
-                lineage if cc_mode == "incremental"
-                else {"snapshot": ctx["new_digest"], "patched_from": None,
-                      "via": "relabel_of_patched_pair_graph"})
-    walls[CC_NAME + "_write"] = round(time.perf_counter() - t0, 3)
-    t0 = time.perf_counter()
-    new_digests_rel.write.mode("overwrite").parquet(dig_path)
-    # same rule: when the digest artifact was missing/stale the new
-    # relation came from a corpus scan, not a fold of the old rows
-    _write_meta(dig_path, new_sf_dir, _digests_params(),
-                lineage if old_digests is not None
-                else {"snapshot": ctx["new_digest"], "patched_from": None,
-                      "via": "corpus_scan"})
-    walls[DIGESTS_NAME + "_write"] = round(time.perf_counter() - t0, 3)
+    # old bytes were consumed (r9 advisor finding). Only
+    # cc_mode='incremental' consumed the stored labels; a relabel of the
+    # patched graph records patched_from: None plus a 'via' note so the
+    # audit chain still shows the content descends from the patch chain
+    cc_lineage = lineage if cc_mode == "incremental" else {
+        "snapshot": ctx["new_digest"], "patched_from": None,
+        "via": "relabel_of_patched_pair_graph"}
+    for name, rel, lin in (
+            (PAIRS_NAME, new_pairs, lineage), (BANDS_NAME, new_bands, lineage),
+            (CC_NAME, labels.select("node", "label"), cc_lineage),
+            (DIGESTS_NAME, ctx["new_digests_rel"], _digests_lineage(ctx))):
+        with _timed(walls, name + "_write"):
+            _land(rel, new_sf_dir, artifact_dir, name, lin)
     # any session cache seeded from these paths now reads rewritten bytes:
     # drop this session's pair/band/label caches wholesale (clear_pair_cache
     # also forgets the paths they were seeded from)
     D.clear_pair_cache(spark)
-    summary = {"mode": "incremental", "churn": churn, "cc_mode": cc_mode,
+    summary = {"mode": "incremental", "churn": ctx["churn"],
+               "cc_mode": cc_mode,
                "old_side": "doc_digests" if old_digests is not None
                else "corpus_scan", "walls": walls,
-               PAIRS_NAME: pairs_path, BANDS_NAME: bands_path,
-               CC_NAME: cc_path, DIGESTS_NAME: dig_path}
+               **{name: os.path.join(artifact_dir, name) for name in
+                  (PAIRS_NAME, BANDS_NAME, CC_NAME, DIGESTS_NAME)}}
     if cc_reason is not None:
         summary["cc_reason"] = cc_reason
-    if dig_note is not None:
-        summary["digests_note"] = dig_note
+    if ctx["dig_note"] is not None:
+        summary["digests_note"] = ctx["dig_note"]
     if ctx.get("supplied") is not None:
         summary["new_digests"] = ctx["supplied"]
     return summary
@@ -1747,119 +1919,93 @@ def update_text_incremental(spark: SparkSession, old_sf_dir: str,
     match the old snapshot is rebuilt in full from ``new_sf_dir`` with a
     warning (recorded in the summary), without failing the others. A
     missing ``span_pos_index`` (e.g. pre-r9 artifact dirs) rebuilds both
-    it and ``shared_spans``. All patched metas record ``lineage =
-    {snapshot: digest(new), patched_from: digest(old)}``.
+    it and ``shared_spans``. With no old state at all (no valid
+    ``doc_digests`` and no old documents table) every piece rebuilds, and
+    ``reason`` starts with ``bootstrap``. All patched metas record
+    ``lineage = {snapshot: digest(new), patched_from: digest(old)}``.
 
-    ``max_churn_frac`` overrides the env-tuned churn-size gate for this
-    call only (see ``_churn_gate``) — the registered incremental_refresh
-    section passes an explicit bound so the operator knob cannot break a
-    driver-gated slug whose churn is fixed by construction."""
-    from pyspark_coding_challenge_spark.llm import text as T
-
-    sig_path = os.path.join(artifact_dir, SIGNALS_NAME)
-    spine_path = os.path.join(artifact_dir, SPINE_NAME)
-    pos_path = os.path.join(artifact_dir, SPANPOS_NAME)
-    spans_path = os.path.join(artifact_dir, SPANS_NAME)
+    ``max_churn_frac`` overrides the default churn-size gate
+    (``INCR_MAX_CHURN_FRAC``, see ``_churn_gate``) for this call only —
+    for callers whose churn is fixed by construction and that must
+    prove the patch path ran (the registered incremental_refresh section
+    and the ingest loop derive ~40% churn)."""
+    T = _llm("text")
     ctx = _ctx if _ctx is not None else _refresh_ctx(
         spark, old_sf_dir, new_sf_dir, artifact_dir, new_digests=new_digests
     )
-    old_digest = ctx["old_digest"]
-    new_docs, gone, delta_ids = ctx["new_docs"], ctx["gone"], ctx["delta_ids"]
-    churn_docs = new_docs.join(delta_ids, on="doc_id", how="left_semi")
+    old_digest, new_docs = ctx["old_digest"], ctx["new_docs"]
+    gone = ctx["gone"]
     lineage = {"snapshot": ctx["new_digest"], "patched_from": old_digest}
     # rebuilt-from-scratch artifacts record patched_from: None — the old
     # bytes were NOT an input, and claiming a patch occurred makes the
     # audit chain lie (r9 advisor finding)
     rebuilt_lineage = {"snapshot": ctx["new_digest"], "patched_from": None}
-    churn_reason = _churn_gate(ctx, limit=max_churn_frac)
+    churn_reason = _bootstrap(ctx) or _churn_gate(ctx, limit=max_churn_frac)
+    churn_docs = None if churn_reason else new_docs.join(
+        ctx["delta_ids"], on="doc_id", how="left_semi")
+    walls: dict[str, float] = {}
     # mirror the dedup updater's reporting (r10 review finding): a
     # churn-gated refresh rebuilds EVERY text artifact, so the summary
     # says so instead of claiming an incremental mode it didn't run
     summary: dict = {"mode": ("full_rebuild" if churn_reason is not None
                               else "incremental"),
-                     "churn": ctx["churn"],
-                     # per-artifact wall clocks (r12 judge item #2b) —
-                     # each covers the phase that evaluates that
-                     # artifact's patch, compute + write
-                     "walls": {}}
+                     "churn": ctx["churn"], "walls": walls}
     if churn_reason is not None:
         summary["reason"] = churn_reason
     if ctx.get("supplied") is not None:
         summary["new_digests"] = ctx["supplied"]
 
-    def _patch_per_doc(name, path, params, build_rel):
-        """delete-gone + append-churn for a strictly per-doc relation;
-        full rebuild of just this artifact when its lineage can't patch
-        or the churn-size gate says a rebuild is cheaper."""
-        t0 = time.perf_counter()
-        why = churn_reason or _lineage_gate(path, old_sf_dir, params,
-                                            old_digest)
-        if why is None:
-            patched = (
-                spark.read.parquet(path)
-                .join(gone, on="doc_id", how="left_anti")
-                .unionByName(build_rel(churn_docs))
-                # reads the path being overwritten — pin first
-                .localCheckpoint()
-            )
-            patched.write.mode("overwrite").parquet(path)
-            _write_meta(path, new_sf_dir, params, lineage)
-            summary[name] = "patched"
-        else:
-            warnings.warn(f"{name}: cannot patch ({why}); full rebuild")
-            build_rel(new_docs).write.mode("overwrite").parquet(path)
-            _write_meta(path, new_sf_dir, params, rebuilt_lineage)
-            summary[name] = "full_rebuild"
-        summary["walls"][name] = round(time.perf_counter() - t0, 3)
-        return path
+    def gate(name):
+        return churn_reason or _lineage_gate(artifact_dir, name, old_sf_dir,
+                                             old_digest)
 
-    _patch_per_doc(SIGNALS_NAME, sig_path, _signals_params(),
-                   T.doc_signals_relation)
-    _patch_per_doc(SPINE_NAME, spine_path, _spine_params(),
-                   T.token_spine_relation)
+    for name, build_rel in ((SIGNALS_NAME, T.doc_signals_relation),
+                            (SPINE_NAME, T.token_spine_relation)):
+        with _timed(walls, name):
+            why = gate(name)
+            if why is None:
+                _patch_rows(spark, new_sf_dir, artifact_dir, name, ctx,
+                            build_rel(churn_docs), lineage)
+                summary[name] = "patched"
+            else:
+                warnings.warn(f"{name}: cannot patch ({why}); full rebuild")
+                _land(build_rel(new_docs), new_sf_dir, artifact_dir, name,
+                      rebuilt_lineage)
+                summary[name] = "full_rebuild"
 
     # spans: per-doc POSITIONS patched; sharedness patched CHURN-SIZED
     # from the churn's own (h, doc) presence delta against the stored
     # span_stats counts (r12 judge item #3 — this replaced the
     # corpus-proportional re-derivation, whose groupBy-h shuffle over
     # every position was ~equal to a full rebuild at every probe factor)
-    t0 = time.perf_counter()
-    pos_why = churn_reason or _lineage_gate(pos_path, old_sf_dir,
-                                            _spanpos_params(), old_digest)
-    stats_path = os.path.join(artifact_dir, SPANSTATS_NAME)
+    pos_why = gate(SPANPOS_NAME)
     spans_why = (
         pos_why
-        or _lineage_gate(spans_path, old_sf_dir, _spans_params(), old_digest)
-        or _lineage_gate(stats_path, old_sf_dir, _spanstats_params(),
-                         old_digest)
+        or _lineage_gate(artifact_dir, SPANS_NAME, old_sf_dir, old_digest)
+        or _lineage_gate(artifact_dir, SPANSTATS_NAME, old_sf_dir, old_digest)
     )
-    if pos_why is None:
-        old_pos = spark.read.parquet(pos_path)
-        # churn-sized; consumed by the pos patch AND the sharedness patch
-        churn_pos = T.span_pos_relation(churn_docs).localCheckpoint()
-        # gone docs' (h, doc) presence — read from the OLD index (a
-        # broadcast semi scan, churn-sized output) and pinned BEFORE the
-        # pos overwrite deletes the bytes
-        gone_pairs = (
-            old_pos.join(gone, on="doc_id", how="left_semi")
-            .select("h", "doc_id").distinct().localCheckpoint()
-        )
-        new_pos = (
-            old_pos.join(gone, on="doc_id", how="left_anti")
-            .unionByName(churn_pos)
-            .localCheckpoint()
-        )
-        summary[SPANPOS_NAME] = "patched"
-    else:
-        warnings.warn(f"{SPANPOS_NAME}: cannot patch ({pos_why}); "
-                      "full rebuild (and shared_spans with it)")
-        new_pos = T.span_pos_relation(new_docs).localCheckpoint()
-        summary[SPANPOS_NAME] = "full_rebuild"
-    pos_lineage = (lineage if summary[SPANPOS_NAME] == "patched"
-                   else rebuilt_lineage)
-    new_pos.write.mode("overwrite").parquet(pos_path)
-    _write_meta(pos_path, new_sf_dir, _spanpos_params(), pos_lineage)
-    summary["walls"][SPANPOS_NAME] = round(time.perf_counter() - t0, 3)
+    with _timed(walls, SPANPOS_NAME):
+        if pos_why is None:
+            # churn-sized; consumed by the pos patch AND the sharedness patch
+            churn_pos = T.span_pos_relation(churn_docs).localCheckpoint()
+            # gone docs' (h, doc) presence — read from the OLD index (a
+            # broadcast semi scan, churn-sized output) and pinned BEFORE
+            # the pos overwrite deletes the bytes
+            gone_pairs = (
+                spark.read.parquet(os.path.join(artifact_dir, SPANPOS_NAME))
+                .join(gone, on="doc_id", how="left_semi")
+                .select("h", "doc_id").distinct().localCheckpoint()
+            )
+            new_pos = _patch_rows(spark, new_sf_dir, artifact_dir,
+                                  SPANPOS_NAME, ctx, churn_pos, lineage)
+            summary[SPANPOS_NAME] = "patched"
+        else:
+            warnings.warn(f"{SPANPOS_NAME}: cannot patch ({pos_why}); "
+                          "full rebuild (and shared_spans with it)")
+            new_pos = T.span_pos_relation(new_docs).localCheckpoint()
+            _land(new_pos, new_sf_dir, artifact_dir, SPANPOS_NAME,
+                  rebuilt_lineage)
+            summary[SPANPOS_NAME] = "full_rebuild"
     if spans_why is None:
         # ---- churn-sized sharedness patch ----
         # stats side: per-hash distinct-doc-count delta from the churn's
@@ -1867,48 +2013,47 @@ def update_text_incremental(spark: SparkSession, old_sf_dir: str,
         # (including net-zero ones — a modified doc that keeps a hash
         # must still re-enter the spans patch below), so every relation
         # here is churn-sized and broadcastable.
-        t0 = time.perf_counter()
-        old_stats = spark.read.parquet(stats_path)
-        old_spans = spark.read.parquet(spans_path)
-        add_pairs = churn_pos.select("h", "doc_id").distinct()
-        delta = (
-            gone_pairs.withColumn("d", F.lit(-1))
-            .unionByName(add_pairs.withColumn("d", F.lit(1)))
-            .groupBy("h").agg(F.sum("d").cast("bigint").alias("dn"))
-            .localCheckpoint()
-        )
-        # old counts for touched hashes: a broadcast-inner scan of the
-        # thin stats artifact — shuffle-free; brand-new hashes have no
-        # stats row (n_old = 0)
-        matched = (
-            old_stats.join(F.broadcast(delta), on="h")
-            .select("h", F.col("n_docs").alias("n_old"),
-                    (F.col("n_docs") + F.col("dn")).alias("n_new"))
-        )
-        fresh_h = (
-            delta.join(matched.select("h"), on="h", how="left_anti")
-            .select("h", F.lit(0).cast("bigint").alias("n_old"),
-                    F.col("dn").alias("n_new"))
-        )
-        trans = matched.unionByName(fresh_h).localCheckpoint()
-        newly_shared = trans.filter(
-            (F.col("n_old") < 2) & (F.col("n_new") >= 2)).select("h")
-        newly_unshared = trans.filter(
-            (F.col("n_old") >= 2) & (F.col("n_new") < 2)).select("h")
-        # stats patch: untouched rows stream through one broadcast-anti
-        # scan (shuffle-free, the honest thin-artifact residual); touched
-        # rows are replaced churn-sized. Pinned before its overwrite.
-        new_stats = (
-            old_stats.join(F.broadcast(trans.select("h")), on="h",
-                           how="left_anti")
-            .unionByName(trans.filter(F.col("n_new") > 0)
-                         .select("h", F.col("n_new").alias("n_docs")))
-            .localCheckpoint()
-        )
-        new_stats.write.mode("overwrite").parquet(stats_path)
-        _write_meta(stats_path, new_sf_dir, _spanstats_params(), lineage)
-        summary[SPANSTATS_NAME] = "patched"
-        summary["walls"][SPANSTATS_NAME] = round(time.perf_counter() - t0, 3)
+        with _timed(walls, SPANSTATS_NAME):
+            old_stats = spark.read.parquet(
+                os.path.join(artifact_dir, SPANSTATS_NAME))
+            add_pairs = churn_pos.select("h", "doc_id").distinct()
+            delta = (
+                gone_pairs.withColumn("d", F.lit(-1))
+                .unionByName(add_pairs.withColumn("d", F.lit(1)))
+                .groupBy("h").agg(F.sum("d").cast("bigint").alias("dn"))
+                .localCheckpoint()
+            )
+            # old counts for touched hashes: a broadcast-inner scan of the
+            # thin stats artifact — shuffle-free; brand-new hashes have no
+            # stats row (n_old = 0)
+            matched = (
+                old_stats.join(F.broadcast(delta), on="h")
+                .select("h", F.col("n_docs").alias("n_old"),
+                        (F.col("n_docs") + F.col("dn")).alias("n_new"))
+            )
+            fresh_h = (
+                delta.join(matched.select("h"), on="h", how="left_anti")
+                .select("h", F.lit(0).cast("bigint").alias("n_old"),
+                        F.col("dn").alias("n_new"))
+            )
+            trans = matched.unionByName(fresh_h).localCheckpoint()
+            newly_shared = trans.filter(
+                (F.col("n_old") < 2) & (F.col("n_new") >= 2)).select("h")
+            newly_unshared = trans.filter(
+                (F.col("n_old") >= 2) & (F.col("n_new") < 2)).select("h")
+            # stats patch: untouched rows stream through one
+            # broadcast-anti scan (shuffle-free, the honest thin-artifact
+            # residual); touched rows are replaced churn-sized. Pinned
+            # before its overwrite.
+            new_stats = (
+                old_stats.join(F.broadcast(trans.select("h")), on="h",
+                               how="left_anti")
+                .unionByName(trans.filter(F.col("n_new") > 0)
+                             .select("h", F.col("n_new").alias("n_docs")))
+                .localCheckpoint()
+            )
+            _land(new_stats, new_sf_dir, artifact_dir, SPANSTATS_NAME, lineage)
+            summary[SPANSTATS_NAME] = "patched"
         # spans patch: delete gone docs' rows and flipped-unshared rows
         # (both broadcast-anti — shuffle-free); add the churn docs' shared
         # rows (their hashes are all in ``trans``, so the shared test is a
@@ -1916,60 +2061,50 @@ def update_text_incremental(spark: SparkSession, old_sf_dir: str,
         # shared hashes — a broadcast-semi scan of the patched position
         # index, skipped entirely when nothing became newly shared
         # (bounded existence check). Zero corpus-proportional shuffles.
-        t0 = time.perf_counter()
-        kept = (
-            old_spans.join(gone, on="doc_id", how="left_anti")
-            .join(F.broadcast(newly_unshared), on="h", how="left_anti")
-        )
-        add_churn = churn_pos.join(
-            F.broadcast(trans.filter(F.col("n_new") >= 2).select("h")),
-            on="h", how="left_semi").select("doc_id", "i", "h")
-        new_spans = kept.select("doc_id", "i", "h").unionByName(add_churn)
-        if newly_shared.limit(1).count() > 0:  # bounded existence check
-            add_flipped = (
-                new_pos.join(F.broadcast(newly_shared), on="h",
-                             how="left_semi")
-                .join(delta_ids, on="doc_id", how="left_anti")
-                .select("doc_id", "i", "h")
+        with _timed(walls, SPANS_NAME):
+            kept = (
+                spark.read.parquet(os.path.join(artifact_dir, SPANS_NAME))
+                .join(gone, on="doc_id", how="left_anti")
+                .join(F.broadcast(newly_unshared), on="h", how="left_anti")
             )
-            new_spans = new_spans.unionByName(add_flipped)
-        # reads the path being overwritten — pin first
-        new_spans = new_spans.localCheckpoint()
-        new_spans.write.mode("overwrite").parquet(spans_path)
-        _write_meta(spans_path, new_sf_dir, _spans_params(), lineage)
-        summary[SPANS_NAME] = "patched"
-        summary["walls"][SPANS_NAME] = round(time.perf_counter() - t0, 3)
+            add_churn = churn_pos.join(
+                F.broadcast(trans.filter(F.col("n_new") >= 2).select("h")),
+                on="h", how="left_semi").select("doc_id", "i", "h")
+            new_spans = kept.select("doc_id", "i", "h").unionByName(add_churn)
+            if newly_shared.limit(1).count() > 0:  # bounded existence check
+                new_spans = new_spans.unionByName(
+                    new_pos.join(F.broadcast(newly_shared), on="h",
+                                 how="left_semi")
+                    .join(ctx["delta_ids"], on="doc_id", how="left_anti")
+                    .select("doc_id", "i", "h"))
+            # reads the path being overwritten — pin first
+            _land(new_spans.localCheckpoint(), new_sf_dir, artifact_dir,
+                  SPANS_NAME, lineage)
+            summary[SPANS_NAME] = "patched"
     else:
         # derive both from the (patched or rebuilt) position index: stats
         # via one distinct+count shuffle, sharedness from the stats — the
         # pre-r13 fallback for pre-r13 artifact dirs and churn-gated
         # rebuilds. new_pos is checkpointed, so deriving after the pos
         # overwrite reads the checkpoint, not the rewritten path.
-        if summary[SPANPOS_NAME] == "patched":
+        pos_patched = summary[SPANPOS_NAME] == "patched"
+        if pos_patched:
             warnings.warn(f"{SPANS_NAME}/{SPANSTATS_NAME}: cannot patch "
                           f"({spans_why}); re-deriving from the patched "
                           "position index")
-        derived_via = ("rederived_from_patched_span_pos"
-                       if summary[SPANPOS_NAME] == "patched"
-                       else "corpus_rebuild")
-        derived_mode = ("rederived" if summary[SPANPOS_NAME] == "patched"
-                        else "full_rebuild")
-        derived_lineage = {"snapshot": ctx["new_digest"],
-                           "patched_from": None, "via": derived_via}
-        t0 = time.perf_counter()
-        stats_rel = T.span_doc_stats(new_pos).localCheckpoint()
-        stats_rel.write.mode("overwrite").parquet(stats_path)
-        _write_meta(stats_path, new_sf_dir, _spanstats_params(),
-                    derived_lineage)
-        summary[SPANSTATS_NAME] = derived_mode
-        summary["walls"][SPANSTATS_NAME] = round(time.perf_counter() - t0, 3)
-        t0 = time.perf_counter()
-        T.shared_spans_relation(new_pos, stats=stats_rel) \
-            .write.mode("overwrite").parquet(spans_path)
-        _write_meta(spans_path, new_sf_dir, _spans_params(),
-                    derived_lineage)
-        summary[SPANS_NAME] = derived_mode
-        summary["walls"][SPANS_NAME] = round(time.perf_counter() - t0, 3)
+        derived_lineage = {
+            "snapshot": ctx["new_digest"], "patched_from": None,
+            "via": ("rederived_from_patched_span_pos" if pos_patched
+                    else "corpus_rebuild")}
+        derived_mode = "rederived" if pos_patched else "full_rebuild"
+        with _timed(walls, SPANSTATS_NAME):
+            stats_rel = T.span_doc_stats(new_pos).localCheckpoint()
+            _land(stats_rel, new_sf_dir, artifact_dir, SPANSTATS_NAME,
+                  derived_lineage)
+        with _timed(walls, SPANS_NAME):
+            _land(T.shared_spans_relation(new_pos, stats=stats_rel),
+                  new_sf_dir, artifact_dir, SPANS_NAME, derived_lineage)
+        summary[SPANSTATS_NAME] = summary[SPANS_NAME] = derived_mode
 
     # session caches seeded from these paths now read rewritten bytes; the
     # quantile shard breaks derive FROM the spine (keyed by sf_dir):
@@ -1982,36 +2117,6 @@ def update_text_incremental(spark: SparkSession, old_sf_dir: str,
     return summary
 
 
-def _old_vecdig_state(spark: SparkSession, old_sf_dir: str,
-                      artifact_dir: str) -> tuple[dict | None, DataFrame | None, str | None]:
-    """``_old_digest_state`` for the embeddings side: resolve the OLD
-    snapshot's embeddings digest from the ``vec_digests`` artifact when it
-    is provenance-valid AND self-consistent (content fold == its recorded
-    lineage.snapshot) — in which case the old snapshot's vectors are never
-    re-read; otherwise by scanning ``old_sf_dir``. Same trust chain: a
-    tampered sidecar fails the centroid lineage comparison downstream."""
-    path = os.path.join(artifact_dir, VECDIG_NAME)
-    try:
-        _check_meta(path, old_sf_dir, _vecdig_params())
-        cand = spark.read.parquet(path)
-        content = digest_of_digests(cand, id_col="vec_id")
-        lin = _read_meta(path).get("lineage")
-        if lin and lin.get("snapshot") == content:
-            return content, cand, None
-        note = (f"vec_digests content fold {content} does not match its "
-                f"recorded lineage {lin}")
-    except ValueError as exc:
-        note = str(exc)
-    except Exception as exc:  # unreadable/missing parquet under a valid meta
-        note = f"vec_digests unreadable: {exc}"
-    if not os.path.exists(os.path.join(old_sf_dir, "embeddings.parquet")):
-        # no artifact AND no old corpus: nothing to refresh from — the
-        # caller bootstraps a full build on the new snapshot
-        return None, None, (f"{note}; and {old_sf_dir} has no embeddings "
-                            "table to rescan")
-    return embeddings_digest(spark, old_sf_dir), None, note
-
-
 @_with_lease
 def update_centroids_incremental(spark: SparkSession, old_sf_dir: str,
                                  new_sf_dir: str, artifact_dir: str,
@@ -2019,9 +2124,11 @@ def update_centroids_incremental(spark: SparkSession, old_sf_dir: str,
                                  new_vec_digests: DataFrame | None = None,
                                  new_vec_changelog: DataFrame | None = None) -> dict:
     """Refresh the EMBEDDINGS-side artifacts (``ivf_centroids`` +
-    ``vec_digests``) from the embeddings snapshot diff. The quantizer is a
-    trained model, not a per-row relation, so there is no row patch; the
-    refresh decision is CARRY vs RETRAIN:
+    ``vec_digests``) from the embeddings snapshot diff — the shared
+    ``_refresh_ctx`` on the embeddings side, with the same supplied
+    digests and changelog contract as the documents side. The quantizer
+    is a trained model, not a per-row relation, so there is no row patch;
+    the refresh decision is CARRY vs RETRAIN (``_carry_or_retrain``):
 
     * **carry** — the stored quantizer's bytes are kept verbatim and only
       its meta is re-pointed at the new snapshot (lineage records
@@ -2037,12 +2144,8 @@ def update_centroids_incremental(spark: SparkSession, old_sf_dir: str,
       exactly the old snapshot — params drift, pre-r12 meta, tampering);
       (2) churn fraction > ``CENTROID_MAX_CHURN_FRAC`` of the old vector
       count; (3) drift — the churn cohort's mean quantization gap
-      (``similarity.quantization_gap``, computed over added/modified
-      vectors ONLY, so the check is churn-sized) exceeds
-      ``ratio * training-time mean + margin``. The stored ``stats.mean_qe``
-      baseline is the ORIGINAL training distribution and is carried
-      unchanged through successive carries, so repeated small drifts
-      accumulate against a fixed reference instead of boiling the frog.
+      (``similarity.quantization_gap``) exceeds ``ratio * training-time
+      mean + margin`` against the stored ``stats.mean_qe`` baseline.
 
     ``vec_digests`` itself patches by delete+append with fold-arithmetic
     lineage (the ``doc_digests`` pattern) whenever the stored artifact is
@@ -2056,580 +2159,208 @@ def update_centroids_incremental(spark: SparkSession, old_sf_dir: str,
     ``pq_codebooks`` is a trained model — carry-or-retrain under its own
     lineage gate, the shared churn-fraction gate, and a PQ drift gate
     (churn cohort's mean ``similarity.pq_quantization_gap`` vs the
-    training-time ``stats.mean_pq_qe``, same ratio/margin knobs);
-    ``pq_codes`` is a per-row relation — delete gone + encode only the
-    churn under a codebook carry (encoding is deterministic per vector),
-    full rebuild under a retrain. The decisions are independent of the
-    coarse quantizer's: ADC scoring never reads coarse centroids, so one
-    side retraining does not force the other. Summary keys:
-    ``pq_codebooks`` ('carried' | 'retrained' | 'absent'), ``pq_codes``
-    ('patched' | 'full_rebuild' | 'absent'), ``pq_churn_qe`` /
-    ``pq_trained_qe`` / ``pq_reason`` when those gates ran.
+    training-time ``stats.mean_pq_qe``, same ratio/margin). r16: the
+    sub-quantizers fit RESIDUALS against the coarse quantizer, so a
+    coarse retrain changes every residual's basis and forces a PQ retrain
+    (and a codes rebuild); a PQ retrain alone leaves the coarse artifact
+    alone. ``pq_codes`` is a per-row relation — under a codebook carry
+    only the pbuckets the churn touches are read and re-written (delete
+    gone + encode only the churn; encoding is deterministic per vector),
+    falling back to a full rebuild under a retrain or scattered churn.
+    Summary keys: ``pq_codebooks`` ('carried' | 'retrained' | 'absent'),
+    ``pq_codes`` ('patched' | 'full_rebuild' | 'absent'),
+    ``pq_churn_qe`` / ``pq_trained_qe`` / ``pq_reason`` when those gates
+    ran.
 
     Returns a summary: ``mode`` ('carried' | 'retrained'), ``churn``
-    counts, ``reason`` (why retrained, or why the drift check was
-    skipped), ``churn_qe``/``trained_qe`` when the drift gate ran,
-    per-artifact ``walls``, ``vec_digests`` ('patched' | 'full_rebuild'),
-    and ``ivf_assignments`` ('patched' | 'full_rebuild' | 'absent').
+    counts, ``reason`` (why retrained — ``bootstrap (...)`` when there is
+    no old state to refresh from — or why the drift check was skipped),
+    ``churn_qe``/``trained_qe`` when the drift gate ran, per-artifact
+    ``walls``, ``vec_digests`` ('patched' | 'full_rebuild'), and
+    ``ivf_assignments`` ('patched' | 'full_rebuild' | 'absent').
 
-    ``max_churn_frac`` overrides the env-tuned ``CENTROID_MAX_CHURN_FRAC``
-    gate for this call only — the registered ``stored_index`` section
-    derives ~40% churn by construction, and the operator knob must not be
-    able to break a driver-gated slug (the same override contract as
-    ``update_text_incremental``). The lineage and drift gates are NOT
-    overridable: a wrong-snapshot or drifted quantizer always retrains."""
-    from pyspark_coding_challenge_spark.llm import dedup as D
-    from pyspark_coding_challenge_spark.llm import similarity as S
-
-    cent_path = os.path.join(artifact_dir, CENTROIDS_NAME)
-    vd_path = os.path.join(artifact_dir, VECDIG_NAME)
+    ``max_churn_frac`` overrides ``CENTROID_MAX_CHURN_FRAC`` for this
+    call only: the registered ``stored_index`` section derives ~40%
+    churn by construction, above the 0.25 default, and must prove the
+    carry path ran. The lineage and drift gates are NOT overridable: a
+    wrong-snapshot or drifted quantizer always retrains."""
+    S = _llm("similarity")
     walls: dict[str, float] = {}
     summary: dict = {"walls": walls}
-
-    t0 = time.perf_counter()
-    old_digest, old_vd, vd_note = _old_vecdig_state(spark, old_sf_dir,
-                                                    artifact_dir)
-    if vd_note is not None:
-        summary["vec_digests_note"] = vd_note
-    if old_digest is None:
-        # bootstrap: no stored digests and the old snapshot has no
-        # embeddings to rescan — full build on the new snapshot
-        S.clear_centroid_cache(spark)
-        _drop_stale_meta(cent_path, vd_path)
-        emb_digest = embeddings_digest(spark, new_sf_dir)
-        materialize(spark, new_sf_dir, artifact_dir, CENTROIDS_NAME,
-                    emb_digest)
-        walls[CENTROIDS_NAME] = round(time.perf_counter() - t0, 3)
-        t0 = time.perf_counter()
-        materialize(spark, new_sf_dir, artifact_dir, VECDIG_NAME,
-                    emb_digest)
-        walls[VECDIG_NAME] = round(time.perf_counter() - t0, 3)
-        summary.update({"mode": "retrained",
-                        "reason": f"bootstrap ({vd_note})",
-                        VECDIG_NAME: "full_rebuild"})
-        assign_path = os.path.join(artifact_dir, ASSIGN_NAME)
-        if os.path.exists(os.path.join(assign_path, _META_FILE)):
-            # an index assigned under the pre-bootstrap quantizer must not
-            # survive it
-            t0 = time.perf_counter()
-            _drop_stale_meta(assign_path)
-            materialize(spark, new_sf_dir, artifact_dir, ASSIGN_NAME,
-                        emb_digest)
-            summary[ASSIGN_NAME] = "full_rebuild"
-            walls[ASSIGN_NAME] = round(time.perf_counter() - t0, 3)
-        else:
-            summary[ASSIGN_NAME] = "absent"
-        # same rule for the PQ pair: state trained/encoded under the
-        # pre-bootstrap corpus must not survive it
-        pqcb_path = os.path.join(artifact_dir, PQCB_NAME)
-        pqcodes_path = os.path.join(artifact_dir, PQCODES_NAME)
-        if os.path.exists(os.path.join(pqcb_path, _META_FILE)):
-            t0 = time.perf_counter()
-            _drop_stale_meta(pqcb_path)
-            materialize(spark, new_sf_dir, artifact_dir, PQCB_NAME,
-                        emb_digest)
-            summary[PQCB_NAME] = "full_rebuild"
-            walls[PQCB_NAME] = round(time.perf_counter() - t0, 3)
-            if os.path.exists(os.path.join(pqcodes_path, _META_FILE)):
-                t0 = time.perf_counter()
-                _drop_stale_meta(pqcodes_path)
-                materialize(spark, new_sf_dir, artifact_dir, PQCODES_NAME,
-                            emb_digest)
-                summary[PQCODES_NAME] = "full_rebuild"
-                walls[PQCODES_NAME] = round(time.perf_counter() - t0, 3)
-            else:
-                summary[PQCODES_NAME] = "absent"
-        else:
-            summary[PQCB_NAME] = "absent"
-            summary[PQCODES_NAME] = "absent"
-        return summary
-    new_emb = rebalance_for_compute(
-        read_table(spark, new_sf_dir, "embeddings"), "vec_id"
-    )
-    # caller-supplied CDC changelog for the NEW snapshot (the doc side's
-    # ``new_changelog`` twin): with it churn DETECTION is O(churn) — no
-    # vector-corpus-wide diff join. Requires a valid stored vec_digests
-    # artifact (the old side of the fold arithmetic); falls back to
-    # ``new_vec_digests`` then the scan.
-    cl_diff = None
-    if new_vec_changelog is not None:
-        if old_vd is None:
-            warnings.warn("ignoring supplied vec changelog: no valid "
-                          "stored vec_digests artifact to patch against")
-            summary["new_vec_digests"] = \
-                "changelog rejected (no stored vec_digests)"
-        else:
-            why = _changelog_gate(new_vec_changelog, old_vd,
-                                  int(old_digest["n_docs"]), new_emb,
-                                  "vec_id", vec_digest_relation)
-            if why is not None:
-                warnings.warn(f"ignoring supplied vec changelog: {why}; "
-                              "falling back")
-                summary["new_vec_digests"] = f"changelog rejected ({why})"
-            else:
-                summary["new_vec_digests"] = "changelog"
-                cl_diff = new_vec_changelog.select(
-                    "vec_id",
-                    F.col("change").cast("string").alias("change"),
-                    F.col("digest_new").cast("string").alias("digest_new"),
-                )
-    # caller-supplied (vec_id, digest) for the NEW snapshot (r13 judge
-    # item #2): with it the embeddings diff never re-serializes/hashes the
-    # new vectors — the side's one corpus-proportional term. Same bounded-
-    # trust gate + scan fallback as the doc side.
-    if new_vec_digests is not None and cl_diff is None:
-        why = _supplied_digest_gate(new_vec_digests, new_emb, "vec_id",
-                                    vec_digest_relation)
-        if why is not None:
-            warnings.warn(f"ignoring supplied vec digests: {why}; hashing "
-                          "the new snapshot instead")
-            note = f"rejected ({why})"
-            new_vec_digests = None
-        else:
-            note = "supplied"
-            new_vec_digests = new_vec_digests.select(
-                "vec_id", F.col("digest").cast("string").alias("digest"))
-        prior = summary.get("new_vec_digests")
-        summary["new_vec_digests"] = f"{prior}; {note}" if prior else note
-    if cl_diff is not None:
-        # O(churn): the changelog IS the diff — no corpus-wide join.
-        # old_vd is guaranteed non-None here, so the fold-arithmetic
-        # branch below never needs the (undefined) fresh digest relation.
-        diff = cl_diff.localCheckpoint()
-    else:
-        new_vd_raw = (new_vec_digests if new_vec_digests is not None
-                      else vec_digest_relation(new_emb))
-        if old_vd is not None:
-            old_side = old_vd
-        else:
-            old_side = vec_digest_relation(
-                read_table(spark, old_sf_dir, "embeddings")
-            )
-        # pinned churn diff — consumed by counts, gone/delta, folds, drift
-        diff = D.digest_diff(old_side, new_vd_raw, id_col="vec_id") \
-            .localCheckpoint()
-    churn = {
-        r["change"]: r["n"]
-        for r in diff.groupBy("change").agg(F.count("*").alias("n")).collect()
-    }
-    summary["churn"] = churn
-    gone = diff.filter(F.col("change").isin("removed", "modified")) \
-        .select("vec_id")
-    delta_ids = diff.filter(F.col("change").isin("added", "modified")) \
-        .select("vec_id")
-    n_churn = sum(churn.values())
-    n_old = int(old_digest["n_docs"])
-
-    # new snapshot digest: fold arithmetic off the stored artifact when
-    # valid (churn-proportional), else fold the fresh relation
-    if old_vd is not None:
-        gone_fold = digest_of_digests(
-            old_vd.join(gone, on="vec_id", how="left_semi"), id_col="vec_id"
-        )
-        add_rows = diff.filter(F.col("change").isin("added", "modified")) \
-            .select("vec_id", F.col("digest_new").alias("digest"))
-        add_fold = digest_of_digests(add_rows, id_col="vec_id")
-        new_digest = {
-            "fold_sum": str(int(old_digest["fold_sum"])
-                            - int(gone_fold["fold_sum"])
-                            + int(add_fold["fold_sum"])),
-            "n_docs": (old_digest["n_docs"] - gone_fold["n_docs"]
-                       + add_fold["n_docs"]),
-        }
-        new_vd_rel = (
-            old_vd.join(gone, on="vec_id", how="left_anti")
-            .unionByName(add_rows)
-            # reads the vec_digests path being overwritten — pin first
-            .localCheckpoint()
-        )
-    else:
-        new_vd_rel = new_vd_raw.localCheckpoint()
-        new_digest = digest_of_digests(new_vd_rel, id_col="vec_id")
-    walls["diff"] = round(time.perf_counter() - t0, 3)
-
-    # --- the carry/retrain decision ---------------------------------------
-    t0 = time.perf_counter()
-    reason = _lineage_gate(cent_path, old_sf_dir, _centroid_params(),
-                           old_digest)
-    stored_stats = None
-    if reason is None:
-        stored_stats = (_read_meta(cent_path).get("lineage") or {}).get("stats")
-        if not stored_stats or "mean_qe" not in stored_stats:
-            reason = ("stored quantizer meta records no training stats "
-                      "(pre-r12 artifact) — no drift baseline to carry against")
-    churn_limit = (CENTROID_MAX_CHURN_FRAC if max_churn_frac is None
-                   else max_churn_frac)
-    if reason is None and n_old > 0 and n_churn > churn_limit * n_old:
-        reason = (
-            f"churn of {n_churn} vectors is {n_churn / n_old:.0%} of the "
-            f"{n_old}-vector old snapshot "
-            f"(limit {churn_limit:.0%})"
-        )
-    if reason is None:
-        fresh = new_emb.select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-        ).join(delta_ids, on="vec_id", how="left_semi")
-        cent = spark.read.parquet(cent_path)
-        # bounded 1-row scalar collect (repo convention); churn-sized input
-        row = S.quantization_gap(fresh, cent).agg(
-            F.avg("gap").alias("m")
-        ).collect()[0]
-        if row["m"] is None:
-            summary["reason"] = "no added/modified vectors — drift check vacuous"
-        else:
-            churn_qe = float(row["m"])
-            trained_qe = float(stored_stats["mean_qe"])
-            summary["churn_qe"] = round(churn_qe, 6)
-            summary["trained_qe"] = trained_qe
-            ceiling = (CENTROID_QE_DRIFT_RATIO * trained_qe
-                       + CENTROID_QE_DRIFT_MARGIN)
-            if churn_qe > ceiling:
-                reason = (
-                    f"churned vectors' mean quantization gap {churn_qe:.4f} "
-                    f"exceeds {CENTROID_QE_DRIFT_RATIO} x training-time "
-                    f"{trained_qe:.4f} + {CENTROID_QE_DRIFT_MARGIN} — the "
-                    "stored quantizer does not cover the new vector mass"
-                )
-
+    with _timed(walls, "diff"):
+        ctx = _refresh_ctx(spark, old_sf_dir, new_sf_dir, artifact_dir,
+                           new_vec_digests, new_vec_changelog, "embeddings")
+    old_digest, new_digest = ctx["old_digest"], ctx["new_digest"]
+    if ctx["dig_note"] is not None:
+        summary["vec_digests_note"] = ctx["dig_note"]
+    if ctx["supplied"] is not None:
+        summary["new_vec_digests"] = ctx["supplied"]
     # a session quantizer cached for either dir no longer reflects what
-    # the artifact is about to say — drop them all; the next consumer
+    # the artifacts are about to say — drop them all; the next consumer
     # re-seeds from the artifact (clear also forgets the seed paths)
     S.clear_centroid_cache(spark)
-    if reason is None:
-        summary["mode"] = "carried"
-        _write_meta(cent_path, new_sf_dir, _centroid_params(),
-                    lineage={"snapshot": new_digest,
-                             "carried_from": old_digest,
-                             # the ORIGINAL training baseline, not this
-                             # carry's churn_qe — see docstring
-                             "stats": stored_stats})
-    else:
-        summary["mode"] = "retrained"
-        summary["reason"] = reason
-        # delete the stale meta FIRST: if SPARK_GRAFT_ARTIFACT_DIR points
-        # at this artifact_dir and the stale meta passes the
-        # sf_dir+params check for new_sf_dir (an in-place snapshot
-        # refresh, or a prior carry that re-pointed it), the builder
-        # inside materialize would env-seed the stale bytes and no-op on
-        # its _seeded_from guard — "retrained" would silently keep the
-        # stale quantizer (the pairs updater's full-rebuild branch guards
-        # the identical hole). No meta => no env seed.
-        _drop_stale_meta(cent_path)
-        materialize(spark, new_sf_dir, artifact_dir, CENTROIDS_NAME,
-                    new_digest)
-    walls[CENTROIDS_NAME] = round(time.perf_counter() - t0, 3)
+    if old_digest is None:
+        # full build on the new snapshot; present optional state trained,
+        # assigned or encoded under the pre-bootstrap corpus must not
+        # survive it
+        names = [CENTROIDS_NAME, VECDIG_NAME]
+        for name, spec in ARTIFACTS.items():
+            if spec.side == "embeddings" and spec.optional:
+                if _has_meta(artifact_dir, name) and \
+                        spec.needs in (None, *names):
+                    names.append(name)
+                    summary[name] = "full_rebuild"
+                else:
+                    summary[name] = "absent"
+        _rebuild(spark, new_sf_dir, artifact_dir, new_digest, *names,
+                 walls=walls)
+        summary.update({"mode": "retrained", "reason": _bootstrap(ctx),
+                        VECDIG_NAME: "full_rebuild"})
+        return summary
 
-    # --- vec_digests: patch (fold lineage) or rebuild ----------------------
-    t0 = time.perf_counter()
-    new_vd_rel.write.mode("overwrite").parquet(vd_path)
-    _write_meta(vd_path, new_sf_dir, _vecdig_params(),
-                lineage={"snapshot": new_digest,
-                         "patched_from": old_digest}
-                if old_vd is not None
-                else {"snapshot": new_digest, "patched_from": None,
-                      "via": "corpus_scan"})
-    summary[VECDIG_NAME] = ("patched" if old_vd is not None
+    summary["churn"] = ctx["churn"]
+    # the churn cohort: every drift check, assignment and encode runs on it
+    fresh = _embedding_vectors(spark, new_sf_dir).join(
+        ctx["delta_ids"], on="vec_id", how="left_semi")
+    limit = (CENTROID_MAX_CHURN_FRAC if max_churn_frac is None
+             else max_churn_frac)
+    with _timed(walls, CENTROIDS_NAME):
+        summary["mode"] = _carry_or_retrain(
+            spark, ctx, old_sf_dir, new_sf_dir, artifact_dir, CENTROIDS_NAME,
+            limit, summary, prefix="", stats_key="mean_qe",
+            what="quantization gap",
+            gap=lambda cent: S.quantization_gap(fresh, cent))
+    carried = summary["mode"] == "carried"
+    with _timed(walls, VECDIG_NAME):
+        _land(ctx["new_digests_rel"], new_sf_dir, artifact_dir, VECDIG_NAME,
+              _digests_lineage(ctx))
+    summary[VECDIG_NAME] = ("patched" if ctx["old_digests"] is not None
                             else "full_rebuild")
-    walls[VECDIG_NAME] = round(time.perf_counter() - t0, 3)
+
+    has = {name: _has_meta(artifact_dir, name)
+           for name in (ASSIGN_NAME, PQCB_NAME, PQCODES_NAME)}
+    cent = spark.read.parquet(os.path.join(artifact_dir, CENTROIDS_NAME))
+    cent_fold = (_content_fold(cent, "lid")  # post-decision bytes
+                 if has[ASSIGN_NAME] or has[PQCB_NAME] else None)
 
     # --- stored inverted index (opt-in): patch under a carry ---------------
-    assign_path = os.path.join(artifact_dir, ASSIGN_NAME)
-    if os.path.exists(os.path.join(assign_path, _META_FILE)):
-        t0 = time.perf_counter()
-        cent = spark.read.parquet(cent_path)  # post-decision bytes
-        why = _lineage_gate(assign_path, old_sf_dir, _assign_params(),
-                            old_digest)
-        if why is None and summary["mode"] == "carried":
-            lin = _read_meta(assign_path).get("lineage") or {}
-            cur_fold = _content_fold(cent, "lid")
-            if lin.get("centroids_fold") != cur_fold:
-                why = ("stored assignments were made under a different "
-                       "quantizer than the carried one")
-        elif summary["mode"] == "retrained":
-            why = "quantizer retrained — every vector reassigns"
-        if why is None:
-            # delete gone rows, assign ONLY the churn against the carried
-            # quantizer (churn x n_lists dots) — identical to a full
-            # reassignment because assignment is deterministic per vector
-            from pyspark_coding_challenge_spark.llm.similarity import (
-                assign_nearest_list,
-            )
-
-            churn_e = new_emb.select(
-                "vec_id",
-                F.col("embedding").cast("array<double>").alias("emb"),
-            ).join(delta_ids, on="vec_id", how="left_semi")
-            patched = (
-                spark.read.parquet(assign_path)
-                .join(gone, on="vec_id", how="left_anti")
-                .unionByName(assign_nearest_list(churn_e, cent))
-                # reads the path being overwritten — pin first
-                .localCheckpoint()
-            )
-            patched.write.mode("overwrite").parquet(assign_path)
-            _write_meta(assign_path, new_sf_dir, _assign_params(),
-                        lineage={"snapshot": new_digest,
-                                 "centroids_fold": cur_fold,
-                                 "patched_from": old_digest})
-            summary[ASSIGN_NAME] = "patched"
-        else:
-            if summary["mode"] != "retrained":
-                # a retrain REASSIGNING everything is by design, not a
-                # degradation — only a carried-mode patch failure warns
-                warnings.warn(f"{ASSIGN_NAME}: cannot patch ({why}); "
-                              "full rebuild")
-            _drop_stale_meta(assign_path)
-            materialize(spark, new_sf_dir, artifact_dir, ASSIGN_NAME,
-                        new_digest)
-            summary[ASSIGN_NAME] = "full_rebuild"
-        walls[ASSIGN_NAME] = round(time.perf_counter() - t0, 3)
+    if has[ASSIGN_NAME]:
+        with _timed(walls, ASSIGN_NAME):
+            if carried:
+                why = _lineage_gate(artifact_dir, ASSIGN_NAME, old_sf_dir,
+                                    old_digest) or _unpaired(
+                    _lineage(os.path.join(artifact_dir, ASSIGN_NAME)),
+                    {"centroids_fold": (
+                        cent_fold, "stored assignments were made under a "
+                        "different quantizer than the carried one")})
+            else:
+                why = "quantizer retrained — every vector reassigns"
+            if why is None:
+                _patch_rows(spark, new_sf_dir, artifact_dir, ASSIGN_NAME, ctx,
+                            S.assign_nearest_list(fresh, cent),
+                            {"snapshot": new_digest,
+                             "centroids_fold": cent_fold,
+                             "patched_from": old_digest})
+                summary[ASSIGN_NAME] = "patched"
+            else:
+                if carried:
+                    # a retrain REASSIGNING everything is by design, not a
+                    # degradation — only a carried-mode patch failure warns
+                    warnings.warn(f"{ASSIGN_NAME}: cannot patch ({why}); "
+                                  "full rebuild")
+                _rebuild(spark, new_sf_dir, artifact_dir, new_digest,
+                         ASSIGN_NAME)
+                summary[ASSIGN_NAME] = "full_rebuild"
     else:
         summary[ASSIGN_NAME] = "absent"
 
-    # --- PQ codebooks (opt-in): carry or retrain — the quantizer gates
-    # applied to the sub-quantizers, with PQ's OWN drift statistic
-    # (``similarity.pq_quantization_gap`` vs the training-time
-    # ``stats.mean_pq_qe`` baseline, same ratio/margin knobs). r16: the
-    # sub-quantizers fit RESIDUALS against the coarse quantizer, so they
-    # are COUPLED downstream of it — a coarse retrain changes every
-    # residual's basis and forces a PQ retrain (and a codes rebuild);
-    # the reverse still does not hold (the coarse quantizer never reads
-    # PQ state), so a PQ retrain alone leaves the coarse artifact alone.
-    pqcb_path = os.path.join(artifact_dir, PQCB_NAME)
-    pqcodes_path = os.path.join(artifact_dir, PQCODES_NAME)
-    if os.path.exists(os.path.join(pqcb_path, _META_FILE)):
-        from pyspark_coding_challenge_spark.llm.similarity import (
-            pq_code_cohort_max,
-            pq_encode,
-            pq_quantization_gap,
-        )
+    # --- PQ codebooks (opt-in): the quantizer's carry-or-retrain with
+    # PQ's own drift statistic, coupled to the coarse decision ------------
+    if not has[PQCB_NAME]:
+        summary[PQCB_NAME] = summary[PQCODES_NAME] = "absent"
+        return summary
+    with _timed(walls, PQCB_NAME):
+        summary[PQCB_NAME] = _carry_or_retrain(
+            spark, ctx, old_sf_dir, new_sf_dir, artifact_dir, PQCB_NAME,
+            limit, summary, prefix="pq_", stats_key="mean_pq_qe",
+            what="PQ quantization gap",
+            gap=lambda cb: S.pq_quantization_gap(fresh, cb, cent),
+            reason=None if carried else (
+                "coarse quantizer retrained — the residual basis changed "
+                "under the sub-quantizers"),
+            # the carried residual basis must be the carried coarse
+            # quantizer; a carry records it again
+            paired={"centroids_fold": (
+                cent_fold, "stored codebooks were trained on residuals vs a "
+                "different coarse quantizer than the carried one")})
 
-        t0 = time.perf_counter()
-        cent = spark.read.parquet(cent_path)  # post-decision bytes
-        cent_fold = _content_fold(cent, "lid")
-        pq_reason = _lineage_gate(pqcb_path, old_sf_dir, _pqcb_params(),
-                                  old_digest)
-        pq_stats = None
-        if pq_reason is None and summary["mode"] != "carried":
-            pq_reason = ("coarse quantizer retrained — the residual basis "
-                         "changed under the sub-quantizers")
-        if pq_reason is None:
-            pqcb_lin = _read_meta(pqcb_path).get("lineage") or {}
-            if pqcb_lin.get("centroids_fold") != cent_fold:
-                pq_reason = ("stored codebooks were trained on residuals "
-                             "vs a different coarse quantizer than the "
-                             "carried one")
-            pq_stats = pqcb_lin.get("stats")
-            if pq_reason is None and (not pq_stats
-                                      or "mean_pq_qe" not in pq_stats):
-                pq_reason = ("stored codebooks meta records no training "
-                             "stats — no drift baseline to carry against")
-        if pq_reason is None and n_old > 0 and n_churn > churn_limit * n_old:
-            pq_reason = (
-                f"churn of {n_churn} vectors is {n_churn / n_old:.0%} of the "
-                f"{n_old}-vector old snapshot (limit {churn_limit:.0%})"
-            )
-        if pq_reason is None:
-            pq_fresh = new_emb.select(
-                "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-            ).join(delta_ids, on="vec_id", how="left_semi")
-            cb = spark.read.parquet(pqcb_path)
-            # bounded 1-row scalar collect (repo convention); churn-sized
-            # (the residual assignment inside the gap kernel runs over
-            # the churn cohort only)
-            row = pq_quantization_gap(pq_fresh, cb, cent).agg(
-                F.avg("gap").alias("m")
-            ).collect()[0]
-            if row["m"] is not None:
-                pq_churn_qe = float(row["m"])
-                pq_trained_qe = float(pq_stats["mean_pq_qe"])
-                summary["pq_churn_qe"] = round(pq_churn_qe, 6)
-                summary["pq_trained_qe"] = pq_trained_qe
-                ceiling = (CENTROID_QE_DRIFT_RATIO * pq_trained_qe
-                           + CENTROID_QE_DRIFT_MARGIN)
-                if pq_churn_qe > ceiling:
-                    pq_reason = (
-                        f"churned vectors' mean PQ quantization gap "
-                        f"{pq_churn_qe:.4f} exceeds "
-                        f"{CENTROID_QE_DRIFT_RATIO} x training-time "
-                        f"{pq_trained_qe:.4f} + {CENTROID_QE_DRIFT_MARGIN} "
-                        "— the stored sub-quantizers do not cover the new "
-                        "vector mass"
-                    )
-        if pq_reason is None:
-            summary[PQCB_NAME] = "carried"
-            _write_meta(pqcb_path, new_sf_dir, _pqcb_params(),
-                        lineage={"snapshot": new_digest,
-                                 "carried_from": old_digest,
-                                 # the carried residual basis (verified
-                                 # == the carried coarse quantizer above)
-                                 "centroids_fold": cent_fold,
-                                 # the ORIGINAL training baseline — the
-                                 # centroid-carry boiled-frog rule
-                                 "stats": pq_stats})
-        else:
-            summary[PQCB_NAME] = "retrained"
-            summary["pq_reason"] = pq_reason
-            # stale-meta-first: same env-seed no-op hole as the coarse
-            # quantizer's retrain branch
-            _drop_stale_meta(pqcb_path)
-            materialize(spark, new_sf_dir, artifact_dir, PQCB_NAME,
-                        new_digest)
-        walls[PQCB_NAME] = round(time.perf_counter() - t0, 3)
-
-        # --- pq_codes: patch under a carry (delete gone + encode ONLY the
-        # churn against the carried codebooks — identical to a full
-        # re-encode because encoding is deterministic per vector), rebuild
-        # under a retrain. The ivf_assignments block, row-for-row.
-        if os.path.exists(os.path.join(pqcodes_path, _META_FILE)):
-            t0 = time.perf_counter()
-            cb = spark.read.parquet(pqcb_path)  # post-decision bytes
-            stored_cohort = None
-            why = _lineage_gate(pqcodes_path, old_sf_dir, _pqcodes_params(),
-                                old_digest)
-            if why is None and summary[PQCB_NAME] == "carried":
-                lin = _read_meta(pqcodes_path).get("lineage") or {}
-                cur_fold = _content_fold(cb, "sub", "lid")
-                if lin.get("codebooks_fold") != cur_fold:
-                    why = ("stored codes were encoded under different "
-                           "codebooks than the carried ones")
-                elif lin.get("centroids_fold") != cent_fold:
-                    # r16: residual codes are basis-bound to the coarse
-                    # quantizer too
-                    why = ("stored codes encode residuals against a "
-                           "different coarse quantizer than the carried "
-                           "one")
-                else:
-                    stored_cohort = (lin.get("stats") or {}).get(
-                        "max_code_cohort")
-                    if stored_cohort is None:
-                        # params-gated r16 artifacts always carry it; a
-                        # hand-edited meta without it cannot maintain the
-                        # bound — rebuild recomputes it exactly
-                        why = ("stored codes meta records no "
-                               "max_code_cohort — the tie-cohort bound "
-                               "cannot be maintained under a patch")
-            elif summary[PQCB_NAME] == "retrained":
-                why = "codebooks retrained — every vector re-encodes"
-            if why is None:
-                # the buckets the churn touches — bounded collect
-                # (<= churn rows, usually a handful of distinct buckets).
-                # Only THOSE partitions are read (partition-pruned scan)
-                # and re-written (dynamic partition overwrite): the
-                # unpartitioned delete+append rewrite was corpus-sized
-                # I/O no matter how small the churn.
-                touched = sorted(
-                    r["b"] for r in
-                    gone.unionByName(delta_ids)
-                    .select(_pq_bucket(F.col("vec_id")).alias("b"))
-                    .distinct().collect()
-                )
-                # scattered-churn guard (r14 judge item #2): when the
-                # churn touches most of the live buckets the patch reads
-                # and rewrites nearly the whole artifact ANYWAY — plus the
-                # anti-join and the partitioned-write overhead — so the
-                # honest move is the rebuild it approximates. Bucket
-                # count by one bounded listdir of the hive layout.
-                # Only touched buckets that ALREADY EXIST count toward
-                # the fraction (r15 advisor): brand-new buckets from pure
-                # corpus growth are appended by dynamic overwrite without
-                # rewriting any existing data, so an append-heavy delta
-                # spanning many new buckets must not force a rebuild.
-                live = _live_pbuckets(pqcodes_path)
-                touched_existing = [b for b in touched if b in live]
-                if len(live) >= PQ_PATCH_MIN_BUCKETS and \
-                        len(touched_existing) > \
-                        PQ_PATCH_MAX_BUCKET_FRAC * len(live):
-                    why = (
-                        f"churn touches {len(touched_existing)} of "
-                        f"{len(live)} live pbuckets "
-                        f"(> {PQ_PATCH_MAX_BUCKET_FRAC:.0%}) "
-                        "— scattered churn: a patch would rewrite nearly "
-                        "the whole artifact with extra anti-join and "
-                        "partitioned-write cost; full rebuild is cheaper"
-                    )
-            if why is None:
-                churn_pq_e = new_emb.select(
-                    "vec_id",
-                    F.col("embedding").cast("array<double>").alias("emb"),
-                ).join(delta_ids, on="vec_id", how="left_semi")
-                churn_cohort = 0
-                if touched:
-                    patched = (
-                        spark.read.parquet(pqcodes_path)
-                        .filter(F.col("pbucket").isin(touched))
-                        .select("vec_id", "sub", "code")
-                        .join(gone, on="vec_id", how="left_anti")
-                        .unionByName(pq_encode(churn_pq_e, cb, cent))
-                        .withColumn("pbucket", _pq_bucket(F.col("vec_id")))
-                        # reads partitions being overwritten — pin first
-                        .localCheckpoint()
-                    )
-                    # the churn rows' own tie-cohort max — one
-                    # churn-bucket-sized aggregation of the PINNED patch
-                    # relation (no re-encode); folded into the maintained
-                    # upper bound below
-                    churn_cohort = pq_code_cohort_max(
-                        patched.select("vec_id", "sub", "code")
-                        .join(delta_ids, on="vec_id", how="left_semi"))
-                    mode_key = "spark.sql.sources.partitionOverwriteMode"
-                    prev_mode = spark.conf.get(mode_key, None)
-                    spark.conf.set(mode_key, "dynamic")
-                    try:
-                        patched.write.mode("overwrite") \
-                            .partitionBy("pbucket").parquet(pqcodes_path)
-                    finally:
-                        if prev_mode is None:
-                            spark.conf.unset(mode_key)
-                        else:
-                            spark.conf.set(mode_key, prev_mode)
-                    # a bucket whose every row was deleted writes nothing
-                    # back — dynamic overwrite never touches it — so its
-                    # stale directory is dropped by hand (bounded loop
-                    # over the touched set)
-                    present = {
-                        r["pbucket"] for r in
-                        patched.select("pbucket").distinct().collect()
-                    }
-                    import shutil as _shutil
-
-                    for b in set(touched) - present:
-                        _shutil.rmtree(
-                            os.path.join(pqcodes_path, f"pbucket={b}"),
-                            ignore_errors=True)
-                # maintained tie-cohort bound: any signature's post-patch
-                # population is (surviving rows of that signature,
-                # <= stored max) + (churn rows of it, <= churn max) — so
-                # stored + churn is a SAFE upper bound in O(churn) work;
-                # deletions only shrink cohorts. A rebuild recomputes the
-                # exact value (the full rebuild). Auto-refine reading
-                # the bound can only over-size the shortlist, never
-                # under-cover a cohort.
-                bound = int(stored_cohort) + int(churn_cohort)
-                _write_meta(pqcodes_path, new_sf_dir, _pqcodes_params(),
-                            lineage={"snapshot": new_digest,
-                                     "codebooks_fold": cur_fold,
-                                     "centroids_fold": cent_fold,
-                                     "patched_from": old_digest,
-                                     "stats": {"max_code_cohort": bound}})
-                summary[PQCODES_NAME] = "patched"
-                summary["pq_max_code_cohort"] = bound
-            else:
-                if summary[PQCB_NAME] != "retrained":
-                    # only a carried-mode patch failure is a degradation
-                    warnings.warn(f"{PQCODES_NAME}: cannot patch ({why}); "
-                                  "full rebuild")
-                _drop_stale_meta(pqcodes_path)
-                materialize(spark, new_sf_dir, artifact_dir, PQCODES_NAME,
-                            new_digest)
-                summary[PQCODES_NAME] = "full_rebuild"
-                summary["pq_codes_reason"] = why
-            walls[PQCODES_NAME] = round(time.perf_counter() - t0, 3)
-        else:
-            summary[PQCODES_NAME] = "absent"
-    else:
-        summary[PQCB_NAME] = "absent"
+    # --- pq_codes: bucket patch under a carry, rebuild under a retrain ---
+    if not has[PQCODES_NAME]:
         summary[PQCODES_NAME] = "absent"
+        return summary
+    codes_path = os.path.join(artifact_dir, PQCODES_NAME)
+    with _timed(walls, PQCODES_NAME):
+        cb = spark.read.parquet(os.path.join(artifact_dir, PQCB_NAME))
+        if summary[PQCB_NAME] == "retrained":
+            why = "codebooks retrained — every vector re-encodes"
+        else:
+            why = _lineage_gate(artifact_dir, PQCODES_NAME, old_sf_dir,
+                                old_digest)
+        if why is None:
+            cb_fold = _content_fold(cb, "sub", "lid")
+            lin = _lineage(codes_path)
+            stored_cohort = (lin.get("stats") or {}).get("max_code_cohort")
+            why = _unpaired(lin, {
+                "codebooks_fold": (cb_fold, "stored codes were encoded "
+                                   "under different codebooks than the "
+                                   "carried ones"),
+                # r16: residual codes are basis-bound to the coarse
+                # quantizer too
+                "centroids_fold": (cent_fold, "stored codes encode residuals "
+                                   "against a different coarse quantizer "
+                                   "than the carried one")})
+            if why is None and stored_cohort is None:
+                # params-gated r16 artifacts always carry it; a hand-edited
+                # meta without it cannot maintain the bound — a rebuild
+                # recomputes it exactly
+                why = ("stored codes meta records no max_code_cohort — the "
+                       "tie-cohort bound cannot be maintained under a patch")
+        if why is None:
+            # the buckets the churn touches — bounded collect (<= churn
+            # rows, usually a handful of distinct buckets)
+            touched = sorted(
+                r["b"] for r in
+                ctx["gone"].unionByName(ctx["delta_ids"])
+                .select(_pq_bucket(F.col("vec_id")).alias("b"))
+                .distinct().collect()
+            )
+            why = _scattered_churn(codes_path, touched)
+        if why is None:
+            churn_cohort = _patch_pq_codes(spark, codes_path, ctx, touched,
+                                           S.pq_encode(fresh, cb, cent))
+            # maintained tie-cohort bound: any signature's post-patch
+            # population is (surviving rows of that signature, <= stored
+            # max) + (churn rows of it, <= churn max) — so stored + churn
+            # is a SAFE upper bound in O(churn) work; deletions only
+            # shrink cohorts, and a rebuild recomputes the exact value.
+            # Auto-refine reading the bound can only over-size the
+            # shortlist, never under-cover a cohort.
+            bound = int(stored_cohort) + int(churn_cohort)
+            _land(None, new_sf_dir, artifact_dir, PQCODES_NAME,
+                  {"snapshot": new_digest, "codebooks_fold": cb_fold,
+                   "centroids_fold": cent_fold, "patched_from": old_digest,
+                   "stats": {"max_code_cohort": bound}})
+            summary[PQCODES_NAME] = "patched"
+            summary["pq_max_code_cohort"] = bound
+        else:
+            if summary[PQCB_NAME] != "retrained":
+                # only a carried-mode patch failure is a degradation
+                warnings.warn(f"{PQCODES_NAME}: cannot patch ({why}); "
+                              "full rebuild")
+            _rebuild(spark, new_sf_dir, artifact_dir, new_digest,
+                     PQCODES_NAME)
+            summary[PQCODES_NAME] = "full_rebuild"
+            summary["pq_codes_reason"] = why
     return summary
 
 
@@ -2698,12 +2429,9 @@ def update_all_incremental(spark: SparkSession, old_sf_dir: str,
 # dirs), like any table-format OPTIMIZE.
 
 #: rewrite a flat artifact when it holds more than this many part files
-COMPACT_MAX_PART_FILES = int(_env_float(
-    "SPARK_GRAFT_COMPACT_MAX_PART_FILES", "32"))
+COMPACT_MAX_PART_FILES = 32
 #: rewrite one hive partition (pq_codes pbucket) past this many part files
-COMPACT_MAX_BUCKET_FILES = int(_env_float(
-    "SPARK_GRAFT_COMPACT_MAX_BUCKET_FILES", "4"))
-
+COMPACT_MAX_BUCKET_FILES = 4
 
 
 def _part_file_names(path: str) -> list[str]:

@@ -175,9 +175,7 @@ EVAL_MOD = 10            # synthetic eval split: doc_id % 10 == 0
 # bound the join goes through the BLOOM pre-pass below (r6): the train side
 # is map-side filtered against the eval shingle bitmap BEFORE the exact
 # shuffle join ever moves a row.
-BROADCAST_EVAL_MAX_TOKENS = int(
-    os.environ.get("SPARK_GRAFT_BROADCAST_EVAL_MAX_TOKENS", "2000000")
-)
+BROADCAST_EVAL_MAX_TOKENS = 2_000_000
 
 # Bloom bitmap for the non-broadcast decontamination path — a PACKED
 # bitmap, not a row set (r6 verdict finding #3: broadcasting occupied
@@ -190,13 +188,11 @@ BROADCAST_EVAL_MAX_TOKENS = int(
 # ceiling that is 1 GiB of packed words behind 512 Ki hash entries (2^27
 # words / 256 per segment) — executor-resident for real.
 #
-# Width: 0 (default) = AUTO-SIZE from the same n_chars-estimated eval
-# token count the broadcast decision uses, at DECON_BLOOM_BITS_PER_KEY
-# bits per expected shingle (k=2 probes at 10 bits/key -> ~3% FPR;
-# survivors still go through the exact join, so FPR costs shuffle bytes,
-# never correctness), clamped to [2^20, 2^33] and rounded up to whole
-# segments. Set the env var to pin a width instead.
-DECON_BLOOM_BITS = int(os.environ.get("SPARK_GRAFT_DECON_BLOOM_BITS", "0"))
+# Width: AUTO-SIZED from the same n_chars-estimated eval token count the
+# broadcast decision uses, at DECON_BLOOM_BITS_PER_KEY bits per expected
+# shingle (k=2 probes at 10 bits/key -> ~3% FPR; survivors still go
+# through the exact join, so FPR costs shuffle bytes, never correctness),
+# clamped to [2^20, 2^33] and rounded up to whole segments.
 DECON_BLOOM_BITS_PER_KEY = 10
 _BLOOM_SEG_LOG2_WORDS = 8  # 256 words = 2 KiB packed bits per segment row
 _BLOOM_SEG_WORDS = 1 << _BLOOM_SEG_LOG2_WORDS
@@ -207,10 +203,8 @@ DECON_BLOOM_MAX_BITS = 1 << 33
 def _bloom_width_bits(est_eval_tokens: int) -> int:
     """Bitmap width in bits for an estimated eval shingle count; whole
     segments so every probe position lands in a materializable row."""
-    m = DECON_BLOOM_BITS
-    if m <= 0:
-        m = max(1 << 20, min(DECON_BLOOM_MAX_BITS,
-                             est_eval_tokens * DECON_BLOOM_BITS_PER_KEY))
+    m = max(1 << 20, min(DECON_BLOOM_MAX_BITS,
+                         est_eval_tokens * DECON_BLOOM_BITS_PER_KEY))
     return ((m + _BLOOM_SEG_BITS - 1) // _BLOOM_SEG_BITS) * _BLOOM_SEG_BITS
 
 
@@ -260,7 +254,8 @@ def decontaminate(spark: SparkSession, sf_dir: str,
     side's token count from the pre-materialized ``n_chars`` column (one
     skinny-column scan — never re-tokenizes the split just to pick a
     strategy) and hints iff the estimate is at most
-    ``BROADCAST_EVAL_MAX_TOKENS``; pass True/False to skip the probe.
+    ``BROADCAST_EVAL_MAX_TOKENS``; pass True/False to force a strategy
+    (False still runs the probe, which sizes the bloom bitmap).
 
     Above the cap (``broadcast_eval=False``), the exact join is preceded
     by a BLOOM pre-pass: eval shingle hashes set two probe positions (the
@@ -308,8 +303,7 @@ def decontaminate(spark: SparkSession, sf_dir: str,
 
     eval_docs = d.filter(F.col("doc_id") % EVAL_MOD == 0)
     est_chars = None
-    agg = None
-    if broadcast_eval is None or (not broadcast_eval and DECON_BLOOM_BITS <= 0):
+    if not broadcast_eval:
         # one skinny-column scan serves BOTH the broadcast decision and the
         # bloom auto-sizing — never tokenize the split to pick a strategy.
         # sum() is NULL both for an empty split AND for an unpopulated
@@ -356,11 +350,9 @@ def decontaminate(spark: SparkSession, sf_dir: str,
         # unknown split size (n_chars unpopulated): size the bitmap from
         # the doc count at a generous 4k chars/doc instead of collapsing
         # to the minimum width (an undersized bloom is correct — the exact
-        # join follows — but filters nothing). With a pinned
-        # DECON_BLOOM_BITS no scan ran (agg is None) and the estimate is
-        # unused by _bloom_width_bits anyway.
+        # join follows — but filters nothing)
         if est_chars is None:
-            est_chars = int(agg[1]) * 4000 if agg is not None else 0
+            est_chars = int(agg[1]) * 4000
         m = _bloom_width_bits(est_chars // CHARS_PER_TOKEN_EST)
         p1 = lambda c: F.pmod(c, F.lit(m))  # noqa: E731
         p2 = lambda c: F.pmod(_mix60(c), F.lit(m))  # noqa: E731

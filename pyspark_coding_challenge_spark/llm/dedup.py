@@ -432,9 +432,7 @@ LSH_MAX_BUCKET = int(os.environ.get("SPARK_GRAFT_LSH_MAX_BUCKET", "256"))
 # driver-memory limit and hard-fail the refresh. Relations at risk are
 # thin id rows (~30 bytes serialized): 5M rows ≈ 150 MB broadcast — far
 # under the hard limits, far over anything a sane daily churn produces.
-BROADCAST_HINT_MAX_ROWS = int(
-    os.environ.get("SPARK_GRAFT_BROADCAST_HINT_MAX_ROWS", "5000000")
-)
+BROADCAST_HINT_MAX_ROWS = 5_000_000
 
 
 def _hint_if_small(pinned: DataFrame, n_rows: int) -> DataFrame:
@@ -789,8 +787,9 @@ def incremental_dedup_update(
     # exchange) and only churn-sized data moves. Contract note: the
     # incremental path assumes churn << corpus; the artifacts updater
     # ENFORCES that with a churn-size gate (artifacts._churn_gate, r10) —
-    # a refresh whose churn exceeds INCR_MAX_CHURN_FRAC of the old corpus
-    # full-rebuilds instead of patching.
+    # a refresh whose churn exceeds INCR_MAX_CHURN_FRAC (0.5) of the old
+    # corpus full-rebuilds instead of patching, unless its caller pins a
+    # bound for a churn fixed by construction.
     gone = (
         diff.filter(F.col("change").isin("removed", "modified"))
         .select(id_col)

@@ -727,9 +727,9 @@ def _build_stored_ivf_state(spark: SparkSession, sf_dir: str):
     # drop the old-snapshot training cache before the refresh (whose
     # own end-of-run clear is part of its contract)
     clear_centroid_cache(spark)
-    # the derived snapshots churn ~40% of the vectors BY CONSTRUCTION
-    # — pin the churn gate per-call so the operator knob cannot break
-    # this registered section (the update_text_incremental contract)
+    # the derived snapshots churn ~40% of the vectors BY CONSTRUCTION,
+    # above the 0.25 default centroid churn gate, and this section must
+    # prove the carry path ran: pin the gate open per call
     summary = A.update_centroids_incremental(
         spark, old_dir, new_dir, art, max_churn_frac=1.0)
     if summary.get("mode") != "carried" or \

@@ -459,7 +459,9 @@ def _build_ingest_refresh_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
                                           since_batch=int(b0) + 1)
     # 5. refresh the stored artifacts through the FULL bounded-trust
     # gate; the sink is its own old and new snapshot (an in-place
-    # corpus growth). Churn is 40% by construction — pin the gate.
+    # corpus growth). Churn is ~40% by construction, close to the 0.5
+    # default gate, and the loop must prove the patch path ran — pin the
+    # gate open.
     ctx = A._refresh_ctx(spark, dest, dest, art, new_changelog=changelog)
     summary = A.update_text_incremental(spark, dest, dest, art,
                                         _ctx=ctx, max_churn_frac=1.0)

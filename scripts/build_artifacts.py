@@ -16,8 +16,8 @@ names exit 2, listing the table's names, before any Spark work.
 
 ``--compact`` is the maintenance pass (r15): rewrite any artifact leaf —
 or any pbucket partition of the hive-partitioned ``pq_codes`` — whose
-part-file count exceeds the threshold (``SPARK_GRAFT_COMPACT_MAX_PART_
-FILES`` / ``_BUCKET_FILES``), coalesced, preserving the meta sidecars
+part-file count exceeds the threshold (``artifacts.COMPACT_MAX_PART_FILES``
+/ ``COMPACT_MAX_BUCKET_FILES``), coalesced, preserving the meta sidecars
 byte-for-byte so every lineage fold and hash gate stays green. Run it
 offline between refreshes (the table-format OPTIMIZE contract); prints
 the per-artifact before/after file counts as JSON.

@@ -78,7 +78,6 @@ SLOW_TESTS = (
     "test_pq_refresh.py::test_auto_refine_over_stored_codes_aggregates_nothing",
     "test_pq_refresh.py::test_coarse_retrain_forces_pq_retrain",
     "test_pq_refresh.py::test_env_knob_seeds_pq_pair",
-    "test_pq_refresh.py::test_pq_carry_on_small_churn",
     "test_pq_refresh.py::test_pq_codes_artifact_serves_search_identically",
     "test_pq_refresh.py::test_pq_codes_clustered_churn_still_patches",
     "test_pq_refresh.py::test_pq_codes_cohort_bound_maintained_under_patch",

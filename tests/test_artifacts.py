@@ -1023,3 +1023,38 @@ def test_cc_full_relabel_records_unpatched_lineage(spark, tmp_path,
     pairs_meta = A._read_meta(os.path.join(art, A.PAIRS_NAME))
     assert pairs_meta["lineage"]["patched_from"] == digest
     D.clear_pair_cache(spark)
+
+
+def test_text_refresh_bootstraps_without_old_state(spark, tmp_path):
+    """No stored doc_digests AND no old documents table: nothing to patch
+    from, so the text refresh rebuilds every artifact from the new
+    snapshot with a warning and a ``bootstrap`` reason (the embeddings
+    side's bootstrap, now shared) instead of failing on the missing old
+    table."""
+    from pyspark_coding_challenge_spark.llm import text as T
+
+    old = str(tmp_path / "old")
+    os.makedirs(old)
+    art = str(tmp_path / "art")
+    _clear_text_caches(spark)
+    import warnings as W
+    with W.catch_warnings(record=True) as caught:
+        W.simplefilter("always")
+        summary = A.update_text_incremental(spark, old, SF_DIR, art)
+    assert summary["mode"] == "full_rebuild", summary
+    assert summary["reason"].startswith("bootstrap"), summary
+    assert any("bootstrap" in str(w.message) for w in caught)
+    digest = A.corpus_digest(spark, SF_DIR)
+    for name in (A.SIGNALS_NAME, A.SPINE_NAME, A.SPANPOS_NAME, A.SPANS_NAME,
+                 A.SPANSTATS_NAME):
+        assert summary[name] == "full_rebuild", (name, summary)
+        meta = A._read_meta(os.path.join(art, name))
+        assert meta["lineage"] == {"snapshot": digest, "patched_from": None,
+                                   **({"via": "corpus_rebuild"} if name in
+                                      (A.SPANS_NAME, A.SPANSTATS_NAME)
+                                      else {})}, name
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    got = sorted(map(tuple, spark.read.parquet(
+        os.path.join(art, A.SPINE_NAME)).collect()))
+    assert got == sorted(map(tuple, T.token_spine_relation(docs).collect()))
+    _clear_text_caches(spark)

@@ -77,7 +77,6 @@ def test_bloom_width_auto_sizes_from_estimate():
     the static 2^20 default silently saturated at prod scale)."""
     from pyspark_coding_challenge_spark.llm import curation as C
 
-    assert C.DECON_BLOOM_BITS <= 0  # default is auto
     assert C._bloom_width_bits(0) == 1 << 20
     assert C._bloom_width_bits(10**5) == 1 << 20  # 10^6 bits < floor
     mid = C._bloom_width_bits(10**7)  # 10^8 bits, in range
@@ -92,7 +91,7 @@ def test_bloom_saturated_tiny_bitmap_still_exact(spark, monkeypatch):
     row-identical because the exact join discards every false positive."""
     from pyspark_coding_challenge_spark.llm import curation as C
 
-    monkeypatch.setattr(C, "DECON_BLOOM_BITS", C._BLOOM_SEG_BITS)
+    monkeypatch.setattr(C, "_bloom_width_bits", lambda est: C._BLOOM_SEG_BITS)
     sf = "/root/testdata/sf0.001"
     fast = C.decontaminate(spark, sf, broadcast_eval=True)
     bloom = C.decontaminate(spark, sf, broadcast_eval=False)
