@@ -66,6 +66,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyspark_coding_challenge_spark import session_state
+from pyspark_coding_challenge_spark.session import scratch_dir
 from pyspark_coding_challenge_spark.sources.readers import (
     read_table,
     rebalance_for_compute,
@@ -1130,15 +1131,20 @@ def seed_from_env(spark: SparkSession, sf_dir: str, name: str):
 
 
 @_with_lease
-def materialize_all(spark: SparkSession, sf_dir: str, artifact_dir: str) -> dict:
-    """One-call production entry: land every artifact, in table order.
-    Returns name -> path. One digest scan per side serves every
-    artifact's lineage."""
-    digests = {side: snapshot_digest(spark, sf_dir, side)
-               for side in ("documents", "embeddings")}
-    return {name: materialize(spark, sf_dir, artifact_dir, name,
-                              digests[spec.side])
-            for name, spec in ARTIFACTS.items()}
+def materialize_all(spark: SparkSession, sf_dir: str, artifact_dir: str,
+                    names=None) -> dict:
+    """One-call production entry: land every artifact, or those in
+    ``names``, in table order. Returns name -> path. One digest scan per
+    side serves every artifact's lineage, run only for a side landed."""
+    digests: dict = {}
+    out = {}
+    for name, spec in ARTIFACTS.items():
+        if names is None or name in names:
+            if spec.side not in digests:
+                digests[spec.side] = snapshot_digest(spark, sf_dir, spec.side)
+            out[name] = materialize(spark, sf_dir, artifact_dir, name,
+                                    digests[spec.side])
+    return out
 
 
 def load_all(spark: SparkSession, sf_dir: str, artifact_dir: str) -> dict:
@@ -2411,6 +2417,49 @@ def update_all_incremental(spark: SparkSession, old_sf_dir: str,
         emb = {"mode": "skipped",
                "reason": "no embeddings table in the new snapshot"}
     return {"dedup": dedup, "text": text, "embeddings": emb}
+
+
+#: the documents-side stored state the refreshed text sections serve
+#: from, and the patch path each of its per-doc relations must take
+TEXT_STATE = (DIGESTS_NAME, SPANPOS_NAME, SPANS_NAME, SPANSTATS_NAME,
+              SPINE_NAME, SIGNALS_NAME)
+TEXT_PATCHED = dict.fromkeys(TEXT_STATE[1:], "patched")
+
+
+def require_modes(summary: dict, required: dict) -> None:
+    """Raise unless the refresh ``summary`` holds every ``required`` mode.
+    A section served from refreshed artifacts must prove the refresh took
+    its incremental path: a silent rebuild produces equal rows, so the
+    oracle hash gate alone cannot tell them apart."""
+    if any(summary.get(k) != v for k, v in required.items()):
+        raise RuntimeError(
+            f"refresh degraded (required {required}): {summary}")
+
+
+def stored_refresh_state(spark: SparkSession, sf_dir: str, side: str,
+                         old: DataFrame, new: DataFrame, names,
+                         required: dict) -> str:
+    """The artifact dir of a section served from refreshed stored state:
+    the derived ``old`` and ``new`` snapshots of ``side``'s table land in
+    this session's scratch slot for ``sf_dir``, the old snapshot's
+    ``names`` artifacts are materialized (the stored state a deployment
+    would already hold), the side's updater refreshes them to the new
+    snapshot, and ``require_modes`` checks it took the ``required`` paths.
+    The derived snapshots churn ~40% of the rows by construction, above
+    both default churn gates, and the section must prove the incremental
+    path ran, so the gate is pinned open for this call."""
+    root = scratch_dir(f"{spark.sparkContext.applicationId}:{sf_dir}#{side}")
+    old_dir, new_dir = os.path.join(root, "old"), os.path.join(root, "new")
+    for snap, d in ((old, old_dir), (new, new_dir)):
+        snap.write.mode("overwrite").parquet(
+            os.path.join(d, f"{_SIDES[side].table}.parquet"))
+    art = os.path.join(root, "art")
+    materialize_all(spark, old_dir, art, names)
+    update = (update_text_incremental if side == "documents"
+              else update_centroids_incremental)
+    require_modes(update(spark, old_dir, new_dir, art, max_churn_frac=1.0),
+                  required)
+    return art
 
 
 # ---------------------------------------------------------------------------

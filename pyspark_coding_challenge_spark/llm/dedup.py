@@ -1113,8 +1113,7 @@ CC_INCR_MIN_EDGES = int(os.environ.get("SPARK_GRAFT_CC_INCR_MIN_EDGES", "80000")
 
 def connected_components(edges: DataFrame, src_col: str = "doc_a",
                          dst_col: str = "doc_b",
-                         max_iter: int = CC_MAX_ITER,
-                         strict: bool = False) -> DataFrame:
+                         max_iter: int = CC_MAX_ITER) -> DataFrame:
     """Min-label propagation connected components over an undirected edge
     list: every node converges to the minimum node id in its component.
 
@@ -1127,8 +1126,7 @@ def connected_components(edges: DataFrame, src_col: str = "doc_a",
     long template chain), this AUTOMATICALLY downgrades to the
     O(log^2 n)-round alternating large-star/small-star algorithm
     (``connected_components_star``, property-tested label-equal) instead of
-    aborting the job; pass ``strict=True`` to get the old raise — the opt-in
-    for pipelines that treat a deep graph as a data bug to investigate.
+    aborting the job.
 
     Convergence detection costs one scalar action per round: labels only
     ever DECREASE, so ``sum(label)`` is strictly monotone and a fixpoint is
@@ -1192,20 +1190,12 @@ def connected_components(edges: DataFrame, src_col: str = "doc_a",
     sym.unpersist()
     if not converged:
         # Silently returning partial labels would merge/split clusters
-        # wrongly downstream. Strict mode raises (a graph this deep is
-        # usually a data bug); the default downgrades to the O(log^2 n)
-        # star algorithm and finishes the job. ``edges`` stays persisted
+        # wrongly downstream, so downgrade to the O(log^2 n) star
+        # algorithm and finish the job. ``edges`` stays persisted
         # through the star run — unpersisting first would make the fallback
         # re-derive the caller's whole edge pipeline (for dedup_clusters,
         # the minhash candidate+verify chain) on top of the max_iter rounds
         # already spent.
-        if strict:
-            edges.unpersist()
-            raise RuntimeError(
-                f"connected_components did not converge in {max_iter} rounds; "
-                "use strict=False for the automatic large-star/small-star "
-                "fallback, or raise max_iter"
-            )
         try:
             return connected_components_star(
                 edges.select(F.col("src").alias(src_col), F.col("dst").alias(dst_col)),
@@ -1467,7 +1457,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     large-star/small-star (2.3 s) on real near-dup graphs (tiny diameters —
     223x2 + 9x3 + 1x4 components); hash-min now falls back to
     ``connected_components_star`` automatically when diameter is
-    adversarial (raising only under ``strict=True``). The pair graph is the
+    adversarial. The pair graph is the
     shared per-session materialization (``verified_pairs_for_dir``) — this
     slug pays CC cost only when ``dedup_minhash_lsh`` ran first.
     """

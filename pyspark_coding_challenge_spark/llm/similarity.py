@@ -317,16 +317,6 @@ def embedding_ann_lsh_slug(spark: SparkSession, sf_dir: str) -> DataFrame:
     return base.unionByName(mp2, allowMissingColumns=True)
 
 
-def ann_lsh_multiprobe2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The registered radius-2 multiprobe section (r9 judge #4): recall@10
-    pytest-floored at >= 0.8 on the 1x and 2x corpora, and measured at
-    0.98/0.98/0.96/1.0 over the 1x/2x/5x/10x replicated corpora where the
-    flip-one radius sat at 0.64-0.96 (``SCALE_PROBE_ANN_r10.json``, which
-    also records candidate fraction + wall per radius per factor);
-    hash-gated against the mask-parameterized oracle."""
-    return embedding_ann_lsh(spark, sf_dir, multiprobe=2)
-
-
 # ---------------------------------------------------------------------------
 # IVF (inverted-file) ANN — data-adaptive coarse quantizer
 # ---------------------------------------------------------------------------
@@ -676,8 +666,9 @@ def _stored_ivf_state(spark: SparkSession, sf_dir: str):
     carried_pq_codebooks, patched_pq_codes) for the ``stored_index`` and
     ``stored_pq`` sections — the embeddings twin of
     ``text._patched_text_state`` (r12 judge item #1; PQ artifacts r14,
-    r13 judge item #1). Built once per (session, sf_dir): the derived
-    (old, new) embedding snapshots land in a private temp root, the OLD
+    r13 judge item #1). Built once per (session, sf_dir) by
+    ``artifacts.stored_refresh_state``: the derived (old, new) embedding
+    snapshots land in a private scratch slot, the OLD
     snapshot's embeddings-side artifacts are materialized (the stored
     state a deployment would already hold: trained quantizer + PQ
     sub-quantizers + per-vector digests + inverted index + compressed
@@ -700,56 +691,27 @@ def _build_stored_ivf_state(spark: SparkSession, sf_dir: str):
     import os as _os
 
     from pyspark_coding_challenge_spark.llm import artifacts as A
-    from pyspark_coding_challenge_spark.llm.text import _text_incr_root
 
-    emb = read_table(spark, sf_dir, "embeddings")
-    old, new = emb_snapshot_versions(emb)
-    # private per-(session, corpus) root under the process's mkdtemp
-    # parent — the CWE-377-hardened helper the text state uses; the
-    # suffix keys this state's slot apart from the text state's
-    root = _text_incr_root(spark.sparkContext.applicationId,
-                           sf_dir + "#stored_ivf")
-    old_dir = _os.path.join(root, "old")
-    new_dir = _os.path.join(root, "new")
-    art = _os.path.join(root, "art")
-    old.write.mode("overwrite").parquet(
-        _os.path.join(old_dir, "embeddings.parquet"))
-    new.write.mode("overwrite").parquet(
-        _os.path.join(new_dir, "embeddings.parquet"))
-    # stored state: the OLD snapshot's quantizers (coarse + PQ),
-    # digests, inverted index, and compressed code corpus
-    dig = A.embeddings_digest(spark, old_dir)
-    A.materialize(spark, old_dir, art, A.CENTROIDS_NAME, dig)
-    A.materialize(spark, old_dir, art, A.VECDIG_NAME, dig)
-    A.materialize(spark, old_dir, art, A.ASSIGN_NAME, dig)
-    A.materialize(spark, old_dir, art, A.PQCB_NAME, dig)
-    A.materialize(spark, old_dir, art, A.PQCODES_NAME, dig)
-    # drop the old-snapshot training cache before the refresh (whose
-    # own end-of-run clear is part of its contract)
-    clear_centroid_cache(spark)
-    # the derived snapshots churn ~40% of the vectors BY CONSTRUCTION,
-    # above the 0.25 default centroid churn gate, and this section must
-    # prove the carry path ran: pin the gate open per call
-    summary = A.update_centroids_incremental(
-        spark, old_dir, new_dir, art, max_churn_frac=1.0)
-    if summary.get("mode") != "carried" or \
-            summary.get(A.ASSIGN_NAME) != "patched" or \
-            summary.get(A.PQCB_NAME) != "carried" or \
-            summary.get(A.PQCODES_NAME) != "patched":
-        raise RuntimeError(
-            f"stored-index refresh degraded (must CARRY both "
-            f"quantizers and PATCH the index and the codes): {summary}")
+    old, new = emb_snapshot_versions(read_table(spark, sf_dir, "embeddings"))
+    # stored state: the OLD snapshot's quantizers (coarse + PQ), digests,
+    # inverted index and compressed code corpus
+    art = A.stored_refresh_state(
+        spark, sf_dir, "embeddings", old, new,
+        (A.CENTROIDS_NAME, A.VECDIG_NAME, A.ASSIGN_NAME, A.PQCB_NAME,
+         A.PQCODES_NAME),
+        {"mode": "carried", A.ASSIGN_NAME: "patched",
+         A.PQCB_NAME: "carried", A.PQCODES_NAME: "patched"})
+    cent, asg, cb, codes = (spark.read.parquet(_os.path.join(art, name))
+                            for name in (A.CENTROIDS_NAME, A.ASSIGN_NAME,
+                                         A.PQCB_NAME, A.PQCODES_NAME))
     return (
         new.select(
             "vec_id",
             F.col("embedding").cast("array<double>").alias("emb"),
         ),
-        spark.read.parquet(_os.path.join(art, A.CENTROIDS_NAME)),
-        spark.read.parquet(_os.path.join(art, A.ASSIGN_NAME)),
-        spark.read.parquet(_os.path.join(art, A.PQCB_NAME)),
+        cent, asg, cb,
         # pbucket is refresh-time layout state, not a query column
-        spark.read.parquet(_os.path.join(art, A.PQCODES_NAME))
-        .select("vec_id", "sub", "code"),
+        codes.select("vec_id", "sub", "code"),
     )
 
 
@@ -1367,13 +1329,6 @@ def pq_codes_with_cohort_for_dir(
     _, matched = session_state.get_or_build(
         "pq_fold_verdicts", spark, (sf_dir, id(codebooks)), _verdict)
     return (df, max_cohort) if matched else (None, None)
-
-
-def pq_codes_for_dir(spark: SparkSession, sf_dir: str,
-                     codebooks: DataFrame | None = None) -> DataFrame | None:
-    """The code relation alone — ``pq_codes_with_cohort_for_dir`` for
-    callers that pin an explicit refine and never need the cohort bound."""
-    return pq_codes_with_cohort_for_dir(spark, sf_dir, codebooks)[0]
 
 
 def embedding_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:

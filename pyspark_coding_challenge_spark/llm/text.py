@@ -1136,51 +1136,14 @@ FROM s
 # incremental text-side refresh, driver-gated (r12, judge item #2a)
 # ---------------------------------------------------------------------------
 
-def _text_incr_root(app_id: str, sf_dir: str) -> str:
-    """A fresh private build root for one (session, corpus) state build.
-    The r12 deterministic ``/tmp/sg_text_incr_<pid>_<tag>`` path was a
-    CWE-377 regression (r12 ADVICE): predictable and world-visible, another
-    user could pre-create it or plant a symlink (``rmtree(ignore_errors)``
-    silently no-ops on a symlink root and the parquet writes then follow
-    it), and keying by pid while the cache keys by applicationId let a
-    second SparkSession in the same process rmtree the files backing the
-    first session's cached lazily-read DataFrames. Now: ONE
-    ``mkdtemp``-created parent per process (0700, unpredictable name,
-    cleaned at exit — the leak the deterministic path existed to fix stays
-    fixed), with per-(applicationId, corpus) roots under it created
-    ``exist_ok=False`` so nothing can pre-create them; distinct sessions
-    get distinct roots. Callers run inside the one in-flight build of
-    their (session, corpus) state."""
-    import atexit
-    import hashlib
-    import os as _os
-    import shutil as _shutil
-    import tempfile
-
-    def _parent() -> str:
-        parent = tempfile.mkdtemp(prefix="sg_text_incr_")
-        atexit.register(_shutil.rmtree, parent, ignore_errors=True)
-        return parent
-
-    tag = hashlib.md5(f"{app_id}:{sf_dir}".encode()).hexdigest()[:16]
-    root = _os.path.join(
-        session_state.get_or_build("text_incr_parent", None, None, _parent),
-        tag)
-    # a rebuild of the SAME (session, corpus) state (cache cleared by a
-    # refresh) reuses its slot: wipe, then recreate private
-    _shutil.rmtree(root, ignore_errors=True)
-    _os.makedirs(root, mode=0o700, exist_ok=False)
-    return root
-
-
 def _patched_text_state(spark: SparkSession, sf_dir: str):
     """(signals, spine, shared_spans) READ BACK from artifacts patched by
     ``artifacts.update_text_incremental`` over the deterministic snapshot
     pair — the text twin of ``dedup._incr_patched_state``. Built once per
-    (session, sf_dir): the derived (old, new) corpora land in a temp dir,
-    the OLD snapshot's text artifacts are materialized (the stored state a
-    deployment would already hold), and the refresh patches them to the
-    NEW snapshot. The returned frames scan the PATCHED parquet only — no
+    (session, sf_dir) by ``artifacts.stored_refresh_state``: the derived
+    (old, new) corpora land in a private scratch slot, the OLD snapshot's
+    text artifacts are materialized (the stored state a deployment would
+    already hold), and the refresh patches them to the NEW snapshot. The returned frames scan the PATCHED parquet only — no
     documents table, old or new, appears in their plans, which is the
     100 TB point: last month's corpus is never re-read.
 
@@ -1203,46 +1166,11 @@ def _build_patched_text_state(spark: SparkSession, sf_dir: str):
     from pyspark_coding_challenge_spark.llm import artifacts as A
     from pyspark_coding_challenge_spark.llm.dedup import snapshot_versions
 
-    docs = read_table(spark, sf_dir, "documents")
-    old, new = snapshot_versions(docs)
-    # private per-(session, corpus) root under the process's mkdtemp
-    # parent (see _text_incr_root): wiped before reuse and at process
-    # exit, so long-lived bench hosts never accumulate corpus copies
-    root = _text_incr_root(spark.sparkContext.applicationId, sf_dir)
-    old_dir = _os.path.join(root, "old")
-    new_dir = _os.path.join(root, "new")
-    art = _os.path.join(root, "art")
-    old.write.mode("overwrite").parquet(
-        _os.path.join(old_dir, "documents.parquet"))
-    new.write.mode("overwrite").parquet(
-        _os.path.join(new_dir, "documents.parquet"))
-    # stored state: the OLD snapshot's text-side artifacts (digests
-    # power the diff; signals/spine/span_pos/spans get patched)
-    digest = A.corpus_digest(spark, old_dir)
-    A.materialize(spark, old_dir, art, A.DIGESTS_NAME, digest)
-    A.materialize(spark, old_dir, art, A.SIGNALS_NAME, digest)
-    A.materialize(spark, old_dir, art, A.SPINE_NAME, digest)
-    A.materialize(spark, old_dir, art, A.SPANPOS_NAME, digest)
-    A.materialize(spark, old_dir, art, A.SPANS_NAME, digest)
-    A.materialize(spark, old_dir, art, A.SPANSTATS_NAME, digest)
-    # the derived snapshots churn ~40% of the docs BY CONSTRUCTION, close
-    # to the 0.5 default churn gate, and this section must prove the
-    # patch path ran: pin the gate open per call
-    summary = A.update_text_incremental(spark, old_dir, new_dir, art,
-                                        max_churn_frac=1.0)
-    # the oracle hash gate must prove the PATCH ran, not just that
-    # some rebuild produced equal rows — fail loudly if it degraded
-    if summary.get(A.SIGNALS_NAME) != "patched" or \
-            summary.get(A.SPINE_NAME) != "patched" or \
-            summary.get(A.SPANPOS_NAME) != "patched" or \
-            summary.get(A.SPANS_NAME) != "patched":
-        raise RuntimeError(
-            f"text incremental refresh degraded to rebuild: {summary}")
-    return (
-        spark.read.parquet(_os.path.join(art, A.SIGNALS_NAME)),
-        spark.read.parquet(_os.path.join(art, A.SPINE_NAME)),
-        spark.read.parquet(_os.path.join(art, A.SPANS_NAME)),
-    )
+    old, new = snapshot_versions(read_table(spark, sf_dir, "documents"))
+    art = A.stored_refresh_state(spark, sf_dir, "documents", old, new,
+                                 A.TEXT_STATE, A.TEXT_PATCHED)
+    return tuple(spark.read.parquet(_os.path.join(art, name))
+                 for name in (A.SIGNALS_NAME, A.SPINE_NAME, A.SPANS_NAME))
 
 
 def clear_text_incr_state(spark: SparkSession | None = None) -> int:

@@ -24,14 +24,12 @@ Catalyst, scans project/filter at the parquet reader (``PushedFilters`` /
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pyspark_coding_challenge_spark.functions.arrays import pad_truncate
 from pyspark_coding_challenge_spark.operators.asof import asof_join
+from pyspark_coding_challenge_spark.session import scratch_dir
 from pyspark_coding_challenge_spark.sources.readers import read_table
 from pyspark_coding_challenge_spark.sources.writers import write_partitioned_parquet
 
@@ -67,13 +65,13 @@ WHERE l_shipdate >= TIMESTAMP '1998-01-01' AND l_quantity < 10
 def sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Round-trip through the engine's documented sink (snappy parquet
     partitioned by a day/partition column — README.md:38,65): write the
-    filtered orders, read them back. The target is a FIXED per-(process,
-    sf_dir) path (overwrite mode), so repeated invocations — bench warm-up
-    + best-of-2 + oracle runs — replace the data instead of accumulating
-    mkdtemp copies; keying by sf_dir keeps two scale factors constructed
-    in the same process from clobbering each other, and the eager
+    filtered orders, read them back. The target is the engine's private
+    scratch slot for ``sf_dir`` (``session.scratch_dir``), wiped per call,
+    so repeated invocations — bench warm-up + best-of-2 + oracle runs —
+    replace the data instead of accumulating copies, and two scale factors
+    constructed in the same process do not clobber each other; the eager
     ``localCheckpoint`` pins the returned rows so a LATER construction's
-    overwrite of the same path cannot corrupt an earlier, not-yet-executed
+    wipe of the same slot cannot corrupt an earlier, not-yet-executed
     result (the write is eager but a bare read-back would be lazy)."""
     orders = read_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 400000)
     out = orders.select(
@@ -82,12 +80,7 @@ def sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderstatus",
         _cents("o_totalprice").alias("price_cents"),
     )
-    import hashlib
-
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_sink_parquet_{os.getpid()}_{tag}"
-    )
+    path = scratch_dir(f"sink_parquet:{sf_dir}")
     write_partitioned_parquet(out, path, partition_cols=("o_orderstatus",))
     back = spark.read.parquet(path).localCheckpoint()
     return back.select(

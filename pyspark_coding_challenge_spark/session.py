@@ -6,13 +6,22 @@ join splitting, join-strategy switching), Arrow enabled for the few pandas-UDF
 operators, and shuffle partitions sized by the caller rather than hard-coded
 (the reference hard-codes ``repartition(200, ...)`` at
 ``pyspark-coding-challenge/src/pipeline.py:153-156``; we do not).
+
+``scratch_dir`` is the one place the engine gets a directory for what it
+writes on its own behalf.
 """
 
 from __future__ import annotations
 
+import atexit
+import hashlib
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
+
+from pyspark_coding_challenge_spark import session_state
 
 # Entries in Spark's JVM-wide LRU of Janino-compiled generated classes
 # (``CodeGenerator.cache``). Every operator is built-in Catalyst
@@ -111,3 +120,53 @@ def get_spark(
     if shuffle_partitions is not None:
         spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     return spark
+
+
+#: name prefix of a process's scratch root; the pid follows it, so a later
+#: process can tell which roots belong to processes that are gone
+SCRATCH_PREFIX = "spark_graft_scratch_"
+
+
+def _scratch_root() -> str:
+    """Create this process's scratch root: one ``mkdtemp`` under the temp
+    dir (mode 0700, unpredictable name, so no other user can pre-create
+    it or plant a symlink there), removed at exit by the process that
+    created it and by no forked child. A root whose pid is gone (the
+    process was killed before its exit hook ran) is swept here, once per
+    process."""
+    tmp = tempfile.gettempdir()
+    for entry in os.listdir(tmp):
+        pid = entry[len(SCRATCH_PREFIX):].split("_", 1)[0]
+        if not entry.startswith(SCRATCH_PREFIX) or not pid.isdigit() or \
+                int(pid) == os.getpid():
+            continue
+        try:
+            os.kill(int(pid), 0)
+        except ProcessLookupError:
+            shutil.rmtree(os.path.join(tmp, entry), ignore_errors=True)
+        except PermissionError:
+            pass  # another user's live process
+    owner = os.getpid()
+    root = tempfile.mkdtemp(prefix=f"{SCRATCH_PREFIX}{owner}_")
+
+    def _remove() -> None:
+        if os.getpid() == owner:
+            shutil.rmtree(root, ignore_errors=True)
+
+    atexit.register(_remove)
+    return root
+
+
+def scratch_dir(key: str) -> str:
+    """A fresh private directory for what the engine writes on its own
+    behalf (stream sinks and checkpoints, the parquet sink's round trip,
+    the derived snapshots and artifacts of the stored-state sections):
+    ``<root>/<md5(key)>`` under this process's scratch root, wiped and
+    recreated 0700 on every call. The same key reuses its slot, so
+    repeated runs overwrite instead of accumulating copies; callers key
+    by whatever must not share a slot (slug, corpus, session)."""
+    root = session_state.get_or_build("scratch_root", None, None, _scratch_root)
+    path = os.path.join(root, hashlib.md5(key.encode()).hexdigest())
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path, mode=0o700)
+    return path

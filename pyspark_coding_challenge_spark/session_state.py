@@ -78,7 +78,6 @@ KINDS: dict[str, Kind] = {
     "token_spine": Kind(ARTIFACT, _unpersist),
     "shared_spans": Kind(ARTIFACT, _unpersist),
     "text_incr_state": Kind(STORED),
-    "text_incr_parent": Kind(STORED),
     # llm.similarity; the fold verdicts pair a stored index with the
     # quantizer a search uses, memoized per quantizer object
     "ivf_centroids": Kind(ARTIFACT),
@@ -95,6 +94,8 @@ KINDS: dict[str, Kind] = {
     "event_schema": Kind(METADATA),
     "breaks": Kind(STATISTIC),
     "eval_stats": Kind(STATISTIC),
+    # session.scratch_dir's process-wide root
+    "scratch_root": Kind(STORED),
 }
 
 

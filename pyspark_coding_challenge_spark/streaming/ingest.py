@@ -50,10 +50,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyspark_coding_challenge_spark import session_state
-from pyspark_coding_challenge_spark.streaming.windows import (
-    _fresh_dirs,
-    _stream_confs,
-)
+from pyspark_coding_challenge_spark.session import scratch_dir
+from pyspark_coding_challenge_spark.streaming.windows import _stream_confs
 
 #: leaf names inside an ingest destination directory
 DOCS_LEAF = "documents.parquet"
@@ -304,7 +302,7 @@ def streaming_ingest_digests(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus directly with ``copies = 1``, so the hash gate proves (a) every
     document flowed through the stream exactly once and (b) the write-time
     digest equals the batch-side definition the refresh chain trusts."""
-    sink, _ = _fresh_dirs("ingest_digests_dest")
+    sink = scratch_dir("ingest_digests_dest")
     ingest_documents(spark, sf_dir, sink)
     dig = spark.read.parquet(os.path.join(sink, DIGESTS_LEAF))
     return (
@@ -423,28 +421,19 @@ def _build_ingest_refresh_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents")
     is_old = F.pmod(F.xxhash64(F.col("doc_id").cast("string")),
                     F.lit(10)) < 6
-    # dirs keyed per CORPUS: the cached served relations read these
-    # parquets lazily, and a plain per-slug dir would let a second
-    # corpus's build (same session, different sf_dir) wipe the files
-    # under the first corpus's live cache entry
-    import hashlib as _hashlib
-
-    tag = _hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    dest, src = _fresh_dirs(f"ingest_refresh_serve_{tag}")
+    # a slot per CORPUS: the cached served relations read these parquets
+    # lazily, and a second corpus's build (same session, different
+    # sf_dir) must not wipe the files under the first one's cache entry
+    root = scratch_dir(f"ingest_refresh_serve:{sf_dir}")
+    dest, src = os.path.join(root, "dest"), os.path.join(root, "src")
     src_docs = os.path.join(src, DOCS_LEAF)
     docs.filter(is_old).write.mode("overwrite").parquet(src_docs)
     # 2. first ingest: the stored state a deployment would already
     # hold — stream the source into the sink, then materialize the
     # text artifacts ON the ingested corpus
     ingest_documents(spark, src, dest)
-    digest = A.corpus_digest(spark, dest)
     art = os.path.join(dest, "art")
-    A.materialize(spark, dest, art, A.DIGESTS_NAME, digest)
-    A.materialize(spark, dest, art, A.SIGNALS_NAME, digest)
-    A.materialize(spark, dest, art, A.SPINE_NAME, digest)
-    A.materialize(spark, dest, art, A.SPANPOS_NAME, digest)
-    A.materialize(spark, dest, art, A.SPANS_NAME, digest)
-    A.materialize(spark, dest, art, A.SPANSTATS_NAME, digest)
+    A.materialize_all(spark, dest, art, A.TEXT_STATE)
     # bounded 1-row agg: the last committed batch of the first ingest
     b0 = spark.read.parquet(os.path.join(dest, DIGESTS_LEAF)) \
         .agg(F.max("batch_id").alias("m")).collect()[0]["m"]
@@ -466,16 +455,8 @@ def _build_ingest_refresh_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     summary = A.update_text_incremental(spark, dest, dest, art,
                                         _ctx=ctx, max_churn_frac=1.0)
     # the oracle hash gate must prove the LOOP ran: changelog
-    # accepted by the gate AND every artifact on its patch path —
-    # fail loudly on any silent degrade
-    if ctx.get("supplied") != "changelog":
-        raise RuntimeError(
-            f"ingest changelog was not accepted: {ctx.get('supplied')}")
-    for name in (A.SIGNALS_NAME, A.SPINE_NAME, A.SPANPOS_NAME,
-                 A.SPANS_NAME, A.SPANSTATS_NAME):
-        if summary.get(name) != "patched":
-            raise RuntimeError(
-                f"ingest refresh degraded to rebuild: {summary}")
+    # accepted by the gate AND every artifact on its patch path
+    A.require_modes(summary, {**A.TEXT_PATCHED, "new_digests": "changelog"})
     # 6. serve from the PATCHED artifacts only — no documents table,
     # source or sink, appears in the served plan
     sig = spark.read.parquet(os.path.join(art, A.SIGNALS_NAME))

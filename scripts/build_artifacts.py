@@ -88,28 +88,14 @@ def main() -> None:
 
     spark = get_spark(app_name="build_artifacts")
     spark.sparkContext.setLogLevel("ERROR")
-    if not names:
-        # the one-call entry shares a single digest scan per side across
-        # every artifact and derives shared_spans from the just-landed
-        # span_pos index (r9 review finding: per-name calls with
-        # digest=None paid one corpus digest scan PER artifact and
-        # re-tokenized the corpus for spans right after span_pos landed)
-        for n, path in A.materialize_all(spark, sf_dir, artifact_dir).items():
-            print(f"{n}: {path}")
-    else:
-        # explicit names: one shared digest scan PER SIDE, computed lazily
-        # (passing the documents digest to an embeddings-side artifact
-        # would record a wrong lineage snapshot)
-        digests: dict = {}
-        for n, spec in A.ARTIFACTS.items():
-            if n not in names:
-                continue
-            if spec.side not in digests:
-                digests[spec.side] = A.snapshot_digest(spark, sf_dir,
-                                                       spec.side)
-            path = A.materialize(spark, sf_dir, artifact_dir, n,
-                                 digests[spec.side])
-            print(f"{n}: {path}")
+    # one shared digest scan per side across every artifact landed, and
+    # shared_spans derives from the just-landed span_pos index (r9 review
+    # finding: per-name calls with digest=None paid one corpus digest scan
+    # PER artifact and re-tokenized the corpus for spans right after
+    # span_pos landed)
+    for n, path in A.materialize_all(spark, sf_dir, artifact_dir,
+                                     names or None).items():
+        print(f"{n}: {path}")
     spark.stop()
 
 

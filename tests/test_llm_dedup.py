@@ -148,18 +148,6 @@ def test_dedup_clusters_groups_transitive_near_dups(spark, tmp_path):
     assert 3 not in labels  # unrelated doc is in no pair, so no cluster row
 
 
-def test_connected_components_strict_raises_rather_than_truncating(spark):
-    # a long chain propagates the min one hop per round; with max_iter too
-    # small, strict mode must REFUSE (silently partial labels would corrupt
-    # downstream dedup), not return.
-    chain = [(i, i + 1) for i in range(1, 12)]
-    edges = spark.createDataFrame(chain, schema="doc_a BIGINT, doc_b BIGINT")
-    import pytest
-
-    with pytest.raises(RuntimeError, match="did not converge"):
-        D.connected_components(edges, max_iter=2, strict=True)
-
-
 def test_connected_components_auto_falls_back_to_star_on_deep_graph(spark):
     # r4 verdict: a diameter > max_iter graph used to abort the whole
     # curation job although the O(log^2 n) star algorithm sat in the same

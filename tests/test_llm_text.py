@@ -355,28 +355,3 @@ def test_pii_counts_follow_scrub_order(spark, tmp_path):
     # ONLY the augmentation phone: the +49... run was consumed by <EMAIL>
     assert row.n_phones == 1
     assert row.n_ips == 1
-
-
-def test_text_incr_root_private_and_per_session():
-    """r12 ADVICE (CWE-377): the incremental-state build root must live
-    under a mkdtemp-created 0700 parent (unpredictable, unshared — no
-    pre-create or symlink planting on a shared host), be keyed by
-    applicationId (two sessions in one process must never rmtree each
-    other's parquet), and wipe-and-recreate privately on slot reuse."""
-    import os
-    import stat
-
-    from pyspark_coding_challenge_spark.llm import text as T
-
-    r1 = T._text_incr_root("app-one", "/corpus/a")
-    r2 = T._text_incr_root("app-two", "/corpus/a")
-    assert r1 != r2, "two sessions shared one build root"
-    parent = os.path.dirname(r1)
-    assert os.path.dirname(r2) == parent
-    assert os.path.basename(parent).startswith("sg_text_incr_")
-    assert stat.S_IMODE(os.stat(parent).st_mode) == 0o700
-    assert stat.S_IMODE(os.stat(r1).st_mode) == 0o700
-    # same (session, corpus) reuses its slot, wiped clean first
-    open(os.path.join(r1, "stale"), "w").close()
-    r1b = T._text_incr_root("app-one", "/corpus/a")
-    assert r1b == r1 and os.listdir(r1) == []

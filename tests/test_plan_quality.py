@@ -22,8 +22,17 @@ def _plan(spark, slug: str) -> str:
 
 def _plan_fn(spark, fn) -> str:
     """Plan of an un-registered part function (the Phase-2 sweeps are
-    section-merged into combined slugs; plan gates still pin each part)."""
-    return fn(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
+    section-merged into combined slugs; plan gates still pin each part).
+    Scan locations are rendered in full: Spark abbreviates each scan's
+    metadata to 100 characters by default, which cuts the artifact name
+    off any path under a temp dir longer than a few dozen characters, so
+    a name check would depend on where the temp dir is."""
+    key = "spark.sql.maxMetadataStringLength"
+    spark.conf.set(key, "10000")
+    try:
+        return fn(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.unset(key)
 
 
 def test_scan_parquet_pushes_filters_and_prunes_columns(spark):

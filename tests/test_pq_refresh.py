@@ -342,7 +342,7 @@ def test_env_knob_seeds_pq_pair(spark, tmp_path, monkeypatch):
 
     monkeypatch.setenv(A.ENV_ARTIFACT_DIR, art)
     cb = S.pq_codebooks_for_dir(spark, new)      # env-seeded, no training
-    codes = S.pq_codes_for_dir(spark, new, cb)   # env-seeded, fold-matched
+    codes = S.pq_codes_with_cohort_for_dir(spark, new, cb)[0]  # env-seeded, fold-matched
     assert codes is not None
     served = S.embedding_ann_pq(spark, new)
     plan = served._jdf.queryExecution().executedPlan().toString()

@@ -26,7 +26,8 @@ PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
 # the row they belong to: the prior snapshot's digests and over-cap set
 # "joined the session-cached STORED state" (same document, §1); the fold
 # verdicts memoize the pairing metadata of the assignments/codes rows; the
-# build-root cell belongs to the text state's artifact build.
+# scratch root, first the text state's build-root cell, belongs to the
+# artifact builds it serves.
 AUDIT_R17 = {
     "verified_pairs": ("dedup._VERIFIED_PAIRS_CACHE", "declared artifact"),
     "banded_index": ("dedup._BANDED_INDEX_CACHE", "declared artifact"),
@@ -39,7 +40,7 @@ AUDIT_R17 = {
     "token_spine": ("text._TOKEN_SPINE_CACHE", "declared artifact"),
     "shared_spans": ("text._SHARED_SPANS_CACHE", "declared artifact"),
     "text_incr_state": ("text._TEXT_INCR_STATE_CACHE", "artifact build"),
-    "text_incr_parent": ("text._TEXT_INCR_PARENT", "artifact build"),
+    "scratch_root": ("text._TEXT_INCR_PARENT", "artifact build"),
     "ivf_centroids": ("similarity._IVF_CENTROID_CACHE", "declared artifacts"),
     "ivf_assignments": ("similarity._IVF_ASSIGN_CACHE", "declared artifacts"),
     "pq_codebooks": ("similarity._PQ_CODEBOOK_CACHE", "declared artifacts"),
