@@ -45,19 +45,21 @@ def _base(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def training_examples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The base join feeds FOUR consumers (impressions + three action
-    # streams). It is NOT persisted (r17): the audited session cache of
-    # the persisted join served warm runs from storage built outside the
-    # timed region (the bench's untimed warm-up) — and measurement shows
-    # the un-persisted plan is FASTER anyway (best-of-3 warm: 3.24 s vs
-    # 3.85 s persisted, 3.42 s per-call localCheckpoint): Spark reuses
-    # the join's shuffle exchanges across all four consumers
-    # (ReusedExchange), so the lineitem/orders scans and shuffles run
-    # once and only the cheap post-shuffle join re-evaluates per branch —
-    # recomputing that beats scanning a memory-cached wide join four
-    # times. The reference's reuse-persistence hint (README.md:64) is
-    # exercised by produce_training_examples' persist_actions parameter
-    # and the persist_hint slug; it is not load-bearing here.
+    # The base join feeds the impressions, the three action streams and,
+    # inside produce_training_examples, the history cutoffs. It is NOT
+    # persisted (r17): the audited session cache of the persisted join
+    # served warm runs from storage built outside the timed region (the
+    # bench's untimed warm-up), and the un-persisted plan measured faster
+    # anyway (best-of-3 warm: 3.24 s vs 3.85 s persisted, 3.42 s per-call
+    # localCheckpoint). Nothing of the join itself is shared: each
+    # consumer prunes its own columns and pushes its own filter, so the
+    # executed plan (sf0.01) scans lineitem five times and broadcast-joins
+    # each scan to orders. Only the orders broadcast of the cart and order
+    # branches, which read the same orders columns, is a ReusedExchange
+    # (three orders scans); no shuffle exchange is reused. The reference's
+    # reuse-persistence hint (README.md:64) is exercised by
+    # produce_training_examples' persist_actions parameter and the
+    # persist_hint slug; it is not load-bearing here.
     base = _base(spark, sf_dir)
 
     imps = (

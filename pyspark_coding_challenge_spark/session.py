@@ -44,6 +44,27 @@ from pyspark_coding_challenge_spark import session_state
 # (getOrCreate on an existing session ignores it, like spark.driver.memory).
 CODEGEN_CACHE_MAX_ENTRIES = 4096
 
+# Size of the pages Spark's Tungsten memory manager hands to every sorter,
+# hash aggregate and hash-join build (``spark.buffer.pageSize``). Unset,
+# Spark derives it from execution memory / cores / 16, rounded up to a power
+# of two and clamped to 1-64 MB, so the 8 GB driver at local[4] gets 64 MB
+# pages: each such operator allocates and zeroes at least one 64 MB on-heap
+# long[] per task however few rows it holds, and the driver keeps each live
+# broadcast relation as built, whole page included, for as long as a
+# session-cached plan holds it. The benchmark's corpus_refresh after its
+# cold pass, 2 warm passes and the GC loop (scripts/heap_probe.py, seed 1,
+# 4-vCPU host), by page size -> driver block store, retained heap:
+#   - Spark's 64 MB: 67.0 MB (66.0 MB broadcast relations, one of them
+#     64.1 MB as built against 0.09 MB serialized), 156.9 MB;
+#   - 8 MB: 11.0, 103.8; 4 MB: 7.0, 99.8; 2 MB: 5.0, 96.2; 1 MB: 4.0, 92.8.
+# events_pipeline keeps no blocks and reads 74.6-75.5 MB at 64, 4, 2 and
+# 1 MB. Below 2 MB the saving is a few MB, while a task may hold at most
+# 8192 pages (TaskMemoryManager's page table), 16 GB at 2 MB. More rows, or
+# a row larger than a page, take more or larger pages, so outputs cannot
+# change. Static conf: read when the SparkContext starts, so it only takes
+# effect when get_spark creates the session (like spark.driver.memory).
+PAGE_SIZE = "2m"
+
 
 def _cpus_as_partitions() -> int:
     """SPARK_GRAFT_CPUS as a shuffle-partition count — read at CALL time
@@ -99,6 +120,7 @@ def get_spark(
         # output keeps the ids; stack traces name the class
         # GeneratedIterator.
         .config("spark.sql.codegen.useIdInClassName", "false")
+        .config("spark.buffer.pageSize", PAGE_SIZE)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )

@@ -47,6 +47,7 @@ import os
 import shutil
 import subprocess
 import sys
+import tempfile
 import time
 
 
@@ -146,8 +147,6 @@ print("SECTIONS_JSON " + json.dumps({
 }))
 """
 
-AB_TREE = "/tmp/spark_graft_ab_tree"
-
 # Auto re-measure for band-exceeding control slugs (r13 verdict item #6:
 # user_history_topk read high in three consecutive rounds, each manually
 # adjudicated "noise" — the adjudication is now automatic evidence). A
@@ -161,7 +160,7 @@ REMEASURE_RUNS = 5
 
 
 def maybe_remeasure_pair(entry: dict, slug: str, sf_dir: str, cpus: str,
-                         repo_root: str, ab_tree: str = AB_TREE,
+                         repo_root: str, ab_tree: str | None = None,
                          run_child=None,
                          wait_idle=None, max_load: float = 16.0) -> bool:
     """Append a ``remeasure`` verdict to ``entry['ab']`` when its paired
@@ -217,22 +216,21 @@ def _run_child(slug: str, sf_dir: str, cpus: str, cwd: str,
     return json.loads(line[len("ISO_RESULT "):])
 
 
-def _setup_ab_tree(repo_root: str, ref: str) -> dict:
-    """Throwaway detached worktree at ``ref`` + its registry's section
-    counts (queried in-tree, so a prior round's registry shape is the one
-    that actually ran there)."""
-    shutil.rmtree(AB_TREE, ignore_errors=True)
+def _setup_ab_tree(repo_root: str, ref: str, ab_tree: str) -> dict:
+    """Throwaway detached worktree at ``ref`` in the empty dir ``ab_tree``
+    + its registry's section counts (queried in-tree, so a prior round's
+    registry shape is the one that actually ran there)."""
     subprocess.run(["git", "worktree", "prune"], cwd=repo_root, check=False,
                    capture_output=True)
     proc = subprocess.run(
-        ["git", "worktree", "add", "--detach", AB_TREE, ref],
+        ["git", "worktree", "add", "--detach", ab_tree, ref],
         cwd=repo_root, capture_output=True, text=True, check=False,
     )
     if proc.returncode != 0:
         raise SystemExit(f"git worktree add {ref} failed: {proc.stderr[-500:]}")
     dump = subprocess.run(
         [sys.executable, "-c", _DUMP_SECTIONS],
-        capture_output=True, text=True, cwd=AB_TREE, check=False,
+        capture_output=True, text=True, cwd=ab_tree, check=False,
     )
     line = next(
         (ln for ln in dump.stdout.splitlines()
@@ -245,10 +243,10 @@ def _setup_ab_tree(repo_root: str, ref: str) -> dict:
     return json.loads(line[len("SECTIONS_JSON "):])
 
 
-def _teardown_ab_tree(repo_root: str) -> None:
-    subprocess.run(["git", "worktree", "remove", "--force", AB_TREE],
+def _teardown_ab_tree(repo_root: str, ab_tree: str) -> None:
+    subprocess.run(["git", "worktree", "remove", "--force", ab_tree],
                    cwd=repo_root, check=False, capture_output=True)
-    shutil.rmtree(AB_TREE, ignore_errors=True)
+    shutil.rmtree(ab_tree, ignore_errors=True)
 
 
 def main() -> None:
@@ -331,12 +329,13 @@ def main() -> None:
                     )
                 break
 
-    ab_sections: dict = {}
-    if ab_ref:
-        ab_sections = _setup_ab_tree(repo_root, ab_ref)
-
+    ab_tree, ab_sections = None, {}
     slugs: dict[str, dict] = {}
     try:
+        if ab_ref:
+            # a private dir per run: two concurrent runs never share a tree
+            ab_tree = tempfile.mkdtemp(prefix="spark_graft_ab_tree-")
+            ab_sections = _setup_ab_tree(repo_root, ab_ref, ab_tree)
         n_ab = 0  # alternation counts AB-ELIGIBLE slugs only (r10 review
         # finding: indexing the full list lets slugs absent from the prior
         # tree cluster the eligible ones onto one order, breaking the
@@ -360,7 +359,7 @@ def main() -> None:
                 recs = {}
                 failed = None
                 for tree in order:
-                    cwd = repo_root if tree == "cur" else AB_TREE
+                    cwd = repo_root if tree == "cur" else ab_tree
                     # n_runs=3 on BOTH trees (r9 advisor finding: the r8 AB
                     # runs used best-of-2 but recorded it in the same
                     # 'best' field later rounds read as prev_best under the
@@ -431,7 +430,7 @@ def main() -> None:
                 # band-exceeding control slugs get the automatic >= 5-run
                 # paired second opinion (r13 verdict item #6)
                 if maybe_remeasure_pair(entry, slug, sf_dir, cpus,
-                                        repo_root,
+                                        repo_root, ab_tree=ab_tree,
                                         wait_idle=wait_for_idle,
                                         max_load=max_load):
                     rm = entry["ab"].get("remeasure")
@@ -440,8 +439,8 @@ def main() -> None:
             print(f"{slug}: cold={entry['cold']} best={entry['best']}{extra}",
                   file=sys.stderr)
     finally:
-        if ab_ref:
-            _teardown_ab_tree(repo_root)
+        if ab_tree:
+            _teardown_ab_tree(repo_root, ab_tree)
 
     for slug, entry in slugs.items():
         if "error" not in entry:

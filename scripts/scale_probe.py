@@ -12,7 +12,8 @@ adversarial test). A scale-safe plan should grow ~linearly in rows here:
 every probed kernel is shuffle-keyed by hash/doc_id with map-side combining,
 so doubling rows should roughly double time, not square it.
 
-Synthetic data lives under /tmp (never /root/testdata). Usage:
+Synthetic data lives in a fresh private temp dir per run (never beside
+the input test data), removed when the run ends, failed or not. Usage:
 ``python scripts/scale_probe.py [round_number]``.
 """
 
@@ -22,6 +23,7 @@ import json
 import os
 import shutil
 import sys
+import tempfile
 import time
 
 REPLICAS = (1, 2, 5, 10)
@@ -32,7 +34,8 @@ REPLICAS = (1, 2, 5, 10)
 # past the extrapolation point
 DEEP_REPLICAS = (1, 10, 30, 100)
 BASE_SF = "/root/testdata/sf0.1"
-WORK = "/tmp/spark_graft_scale_probe"
+# this run's private work dir, made by main()
+WORK = ""
 
 
 def build_corpus(spark, factor: int) -> str:
@@ -1473,7 +1476,7 @@ def _emit(result: dict, artifact: str | None, rnd) -> None:
         print(f"wrote {path}", file=sys.stderr)
 
 
-def main() -> None:
+def _probe() -> None:
     args = [a for a in sys.argv[1:] if not a.startswith("-")]
     tpch = "--tpch" in sys.argv
     skew = "--skew" in sys.argv
@@ -1488,7 +1491,6 @@ def main() -> None:
         # reason) — fail before the multi-minute factor loops, not after
         print(f"round must be an integer, got {rnd!r}", file=sys.stderr)
         raise SystemExit(2)
-    os.makedirs(WORK, exist_ok=True)
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from pyspark_coding_challenge_spark.session import get_spark
 
@@ -1748,6 +1750,14 @@ def main() -> None:
             result["partial"] = True
         _emit(result, artifact, rnd)
         spark.stop()
+
+
+def main() -> None:
+    global WORK
+    WORK = tempfile.mkdtemp(prefix="spark_graft_scale_probe-")
+    try:
+        _probe()
+    finally:
         shutil.rmtree(WORK, ignore_errors=True)
 
 

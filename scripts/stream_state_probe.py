@@ -41,8 +41,9 @@ watermark horizon.
 
 Usage: ``python scripts/stream_state_probe.py [--skew] [round_number]`` —
 writes ``STREAM_STATE_PROBE_r{N}.json`` (or ``..._SKEW_r{N}.json``) at the
-repo root when a round is given. Synthetic data lives under /tmp, never
-/root/testdata.
+repo root when a round is given. Synthetic data lives in a fresh private
+temp dir per run (never beside the input test data), removed when the run
+ends, failed or not.
 """
 
 from __future__ import annotations
@@ -51,11 +52,13 @@ import json
 import os
 import shutil
 import sys
+import tempfile
 
 FACTOR = 10
 N_FILES = 16  # => N_FILES micro-batches (maxFilesPerTrigger=1)
 BASE_SF = "/root/testdata/sf0.1"
-WORK = "/tmp/spark_graft_stream_probe"
+# this run's private work dir, made by main()
+WORK = ""
 
 
 def _build_replicated_events(spark, out: str, user_expr=None,
@@ -482,11 +485,10 @@ def _skew_probe(spark, provider: str | None, rnd) -> None:
         print(f"wrote {path}", file=sys.stderr)
 
 
-def main() -> None:
+def _probe() -> None:
     skew = "--skew" in sys.argv
     args = [a for a in sys.argv[1:] if not a.startswith("-")]
     rnd = args[0] if args else None
-    os.makedirs(WORK, exist_ok=True)
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from pyspark.sql import functions as F
 
@@ -513,7 +515,6 @@ def main() -> None:
     if skew:
         _skew_probe(spark, provider, rnd)
         spark.stop()
-        shutil.rmtree(WORK, ignore_errors=True)
         return
 
     ev_dir = build_events(spark)
@@ -646,7 +647,15 @@ def main() -> None:
             fh.write(out + "\n")
         print(f"wrote {path}", file=sys.stderr)
     spark.stop()
-    shutil.rmtree(WORK, ignore_errors=True)
+
+
+def main() -> None:
+    global WORK
+    WORK = tempfile.mkdtemp(prefix="spark_graft_stream_probe-")
+    try:
+        _probe()
+    finally:
+        shutil.rmtree(WORK, ignore_errors=True)
 
 
 if __name__ == "__main__":

@@ -16,12 +16,12 @@ SF_DIR = "/root/testdata/sf0.001"
 
 
 def _plan(spark, slug: str) -> str:
-    df = registry.queries()[slug](spark, SF_DIR)
-    return df._jdf.queryExecution().executedPlan().toString()
+    return _plan_fn(spark, registry.queries()[slug])
 
 
 def _plan_fn(spark, fn) -> str:
-    """Plan of an un-registered part function (the Phase-2 sweeps are
+    """Executed plan of ``fn(spark, SF_DIR)``: a registered slug's query
+    (``_plan``) or an un-registered part function (the Phase-2 sweeps are
     section-merged into combined slugs; plan gates still pin each part).
     Scan locations are rendered in full: Spark abbreviates each scan's
     metadata to 100 characters by default, which cuts the artifact name

