@@ -422,7 +422,7 @@ def _band_buckets(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text
 # jaccard ~1 and connected-components stitches the chunks back into one
 # cluster. Nothing is silently dropped: every member still pairs within its
 # chunk, and ``lsh_oversized_buckets`` is the audit ledger for what was split.
-LSH_MAX_BUCKET = int(os.environ.get("SPARK_GRAFT_LSH_MAX_BUCKET", "256"))
+LSH_MAX_BUCKET = 256
 
 # Ceiling for COUNTED broadcast hints on relations that are only
 # *usually* churn-bounded (r9 advisor, medium): a broadcast hint is
@@ -643,29 +643,14 @@ def banded_index_for_dir(spark: SparkSession, sf_dir: str) -> DataFrame:
     return session_state.get_or_build("banded_index", spark, sf_dir, _build)
 
 
-# Besides the declared artifacts above, ONLY the derived PRIOR snapshot's
-# state is session-cached: it models the stored artifacts a deployment's
-# refresh reads from disk. The PATCHED (post-refresh) pair graph and labels
-# are recomputed per invocation since r17 — the r16 caches of them
-# (_INCR_PATCHED_CACHE / _INCR_NEW_CC_CACHE) served each incremental
-# section's own output from the bench's untimed warm-up, which the r16
-# verdict called result caching, not optimization ("What's wrong" #1:
-# "caching the new, patched output crosses the line from 'model stored
-# state' to 'serve the answer'"). The refresh IS the operation these
-# sections declare; its churn-proportional patch cost belongs in the
-# timed region.
-
-
 def clear_pair_cache(spark: SparkSession | None = None) -> int:
-    """Release the pair-graph, banded-index, CC-label and prior-snapshot
-    entries — all sessions', or only the given session's — and forget the
-    artifact paths they were seeded from. Returns how many entries were
-    released. Use when an sf_dir's data is rewritten mid-session or to
-    free storage memory in a long-lived session after dedup work."""
+    """Release the pair-graph, banded-index and CC-label entries — all
+    sessions', or only the given session's — and forget the artifact
+    paths they were seeded from. Returns how many entries were released.
+    Use when an sf_dir's data is rewritten mid-session or to free storage
+    memory in a long-lived session after dedup work."""
     return session_state.clear(
-        spark, "verified_pairs", "banded_index", "cc_labels",
-        "incr_old_state", "incr_old_cc", "incr_old_digests",
-        "incr_old_overfull")
+        spark, "verified_pairs", "banded_index", "cc_labels")
 
 
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -693,7 +678,6 @@ def incremental_dedup_update(
     old_pairs: DataFrame, old_bands: DataFrame,
     id_col: str = "doc_id", text_col: str = "text",
     max_bucket: int = LSH_MAX_BUCKET,
-    old_overfull: tuple[DataFrame, int] | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Patch a banded index + verified pair graph with a corpus snapshot
     diff — the 100 TB deployment shape of near-dup maintenance: a daily
@@ -714,18 +698,6 @@ def incremental_dedup_update(
       (``verified_pairs_for_dir`` shape: all candidate pairs, unfiltered).
     * ``old_bands`` — the stored banded index over the OLD corpus
       ((doc_id, band, bucket); extra columns like ``_rn`` are ignored).
-    * ``old_overfull`` (optional, r17) — ``(relation, cap)``: the OLD
-      index's over-cap (band, bucket) set, PRE-AGGREGATED by the caller
-      from its stored state (usually once per session: bucket sizes are a
-      pure function of the stored index, exactly the statistic a
-      deployment keeps next to the artifact), and the cap it was computed
-      at, which must equal ``max_bucket`` (ValueError otherwise: a set
-      computed at another cap silently changes which mega-buckets get
-      repaired). When supplied, the per-call repair probe is one
-      semi-join against this (usually empty, localCheckpointed) relation
-      instead of re-counting every touched bucket's old membership —
-      same decision, ~an order less probe work. ``None`` derives it from
-      ``old_bands`` per call (the pre-r17 behavior).
 
     Returns ``(new_bands, new_pairs, fresh_pairs)`` — the patched banded
     index and pair graph of the NEW corpus, plus the freshly-verified pair
@@ -769,10 +741,6 @@ def incremental_dedup_update(
     (AQE-skew-splittable, never all-pairs), and a verify kernel over fresh
     candidates only — the shingle explode, the dominant full-rebuild cost,
     runs over churn docs plus their candidate partners alone."""
-    if old_overfull is not None and old_overfull[1] != max_bucket:
-        raise ValueError(
-            f"old_overfull was computed at cap {old_overfull[1]}, but this "
-            f"patch uses max_bucket={max_bucket}")
     # Broadcast discipline (r9, measured in SCALE_PROBE_INCR_r9): every
     # STRICTLY churn-bounded relation below (gone/delta ids, the delta
     # bands, the touched-bucket set) is EXPLICITLY broadcast-hinted into
@@ -877,24 +845,15 @@ def incremental_dedup_update(
         .unionByName(delta_bands.select("band", "bucket"))
         .distinct()
     )
-    if old_overfull is not None:
-        # repair is needed only for buckets BOTH over the cap in the old
-        # index AND touched by churn — intersecting the caller's stored
-        # over-cap set with the churn's touched set is the same predicate
-        # with the corpus-sized count already paid once at state build
-        overfull = old_overfull[0].select("band", "bucket").join(
-            F.broadcast(touched_buckets), on=["band", "bucket"],
-            how="left_semi")
-    else:
-        overfull = (
-            old_bands.select(id_col, "band", "bucket")
-            .join(F.broadcast(touched_buckets), on=["band", "bucket"],
-                  how="left_semi")
-            .groupBy("band", "bucket")
-            .agg(F.count("*").alias("_n_old"))
-            .filter(F.col("_n_old") > max_bucket)
-            .select("band", "bucket")
-        )
+    overfull = (
+        old_bands.select(id_col, "band", "bucket")
+        .join(F.broadcast(touched_buckets), on=["band", "bucket"],
+              how="left_semi")
+        .groupBy("band", "bucket")
+        .agg(F.count("*").alias("_n_old"))
+        .filter(F.col("_n_old") > max_bucket)
+        .select("band", "bucket")
+    )
     repair = []
     if overfull.limit(1).count() > 0:
         om = new_bands_all.join(F.broadcast(overfull),
@@ -946,137 +905,54 @@ def incremental_dedup_update(
 
 def _threshold_edges(pairs: DataFrame) -> DataFrame:
     """THE near-dup edge derivation (unrounded-ratio threshold) — one
-    definition shared by the old-CC build and both consumers of the
-    patched graph, so the patch's old_cc/old_edges consistency contract
-    cannot drift (r8 review finding)."""
+    definition shared by the CC build and the pairs refresh's label
+    patch, so the patch's old_cc/old_edges consistency contract cannot
+    drift (r8 review finding)."""
     return pairs.filter(F.col("_jac_raw") >= JACCARD_THRESHOLD).select(
         "doc_a", "doc_b"
     )
 
 
-def _incr_old_state(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    """The derived PRIOR snapshot's banded index + pair graph — the STORED
-    state a refresh starts from (in deployment: the parquet artifacts;
-    ``llm.artifacts.update_pairs_incremental`` reads them from disk) —
-    session-cached per (app, sf_dir) like every other materialize-once
-    relation; rebuilding them per invocation would time the artifact BUILD
-    inside every refresh, which is exactly what the incremental path
-    exists to avoid. Both are localCheckpoints (eager, pinned — each is
-    consumed by 2+ patch branches)."""
-    def _build() -> tuple[DataFrame, DataFrame]:
-        old, _ = snapshot_versions(read_table(spark, sf_dir, "documents"))
-        old_ranked = ranked_band_relation(old)
-        old_pairs = verify_jaccard(
-            old, lsh_candidate_pairs(old, ranked=old_ranked)
-        ).localCheckpoint()
-        return (old_ranked, old_pairs)
-
-    return session_state.get_or_build("incr_old_state", spark, sf_dir, _build)
-
-
-def _incr_old_digests(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The derived PRIOR snapshot's per-doc digests — the ``doc_digests``
-    artifact convention: a deployment diffs the new snapshot against
-    STORED digests, never re-hashing last month's corpus
-    (``snapshot_diff_from_digests``). Session-cached like the rest of the
-    prior-snapshot state; values are identical to what ``snapshot_diff``
-    would derive from the old docs (same md5 over null-coalesced text)."""
-    def _build() -> DataFrame:
-        old, _ = snapshot_versions(read_table(spark, sf_dir, "documents"))
-        return old.select(
-            "doc_id", F.md5(F.coalesce("text", F.lit(""))).alias("digest")
-        ).localCheckpoint()
-
-    return session_state.get_or_build("incr_old_digests", spark, sf_dir,
-                                      _build)
-
-
-def _incr_old_overfull(spark: SparkSession,
-                       sf_dir: str) -> tuple[DataFrame, int]:
-    """The PRIOR snapshot index's over-cap (band, bucket) set, paired with
-    the cap it was computed at (``LSH_MAX_BUCKET``, the one the patch
-    uses) — a pure statistic of the stored banded index, pinned once per
-    session so each refresh's mega-bucket repair probe intersects a tiny
-    (usually empty) relation instead of re-counting every touched bucket's
-    membership."""
-    def _build() -> tuple[DataFrame, int]:
-        old_bands = _incr_old_state(spark, sf_dir)[0]
-        return (
-            old_bands.select("band", "bucket")
-            .groupBy("band", "bucket")
-            .agg(F.count("*").alias("_n_old"))
-            .filter(F.col("_n_old") > LSH_MAX_BUCKET)
-            .select("band", "bucket")
-            .localCheckpoint(),
-            LSH_MAX_BUCKET,
-        )
-
-    return session_state.get_or_build("incr_old_overfull", spark, sf_dir,
-                                      _build)
-
-
-def _incr_patched_state(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """The PATCHED verified pair graph of the derived NEW snapshot —
-    diff + ``incremental_dedup_update`` against the cached old state.
-    Computed PER INVOCATION (r17; it was session-cached r8-r16): the
-    refresh is the operation the incremental sections declare, so the
-    diff derivation and churn patch are their honest timed cost — only
-    the PRIOR snapshot's state (``_incr_old_state``), which models the
-    stored artifacts a deployment reads from disk, is session-cached.
-    Returns ``(diff, patched_pairs, fresh_pairs)`` — the pinned diff and
-    the fresh-pair split ride along so the CC label patch can derive its
-    edge diff from the churn directly instead of anti-joining the full
-    old and new graphs (r9). (The patch's COST story lives in
+def _refreshed_artifact(spark: SparkSession, sf_dir: str, section: str,
+                        name: str) -> DataFrame:
+    """Artifact ``name`` as the incremental ``section`` serves it,
+    refreshed on this call by the production updater
+    (``artifacts.update_pairs_incremental``): the derived OLD snapshot's
+    pair graph, banded index, CC labels and doc digests are the stored
+    state (landed once per session), and each call patches a copy of
+    them to the derived NEW snapshot in the section's own slot. The
+    refresh must take its incremental path on every piece, so both of its
+    size gates are pinned open: the derived churn is fixed by
+    construction (~40% of the old snapshot, all of it on a corpus of a
+    few docs), and at test scale factors the stored graph sits below the
+    CC crossover, where a full relabel would prove nothing about
+    ``incremental_cc_update``. (The patch's COST story lives in
     ``SCALE_PROBE_INCR_r*.json``; the registered sections prove its
     CORRECTNESS via the hash gate.)"""
-    old_ranked, old_pairs = _incr_old_state(spark, sf_dir)
-    # rebalance the BASE scan (r17, guide §2.5): the churn minhash and
-    # verify kernels inside the patch inherit partitioning through narrow
-    # semi-joins, and a small/single-row-group snapshot file would run
-    # them on one core (measured: 1 scan split at sf0.1, ~1 s of
-    # single-threaded kernel per refresh). Probing the split count here
-    # hits the memoized attribute on the session-cached table DataFrame;
-    # at scale the scan is already wide and this is a no-op.
-    _, new = snapshot_versions(
-        rebalance_for_compute(read_table(spark, sf_dir, "documents"),
-                              "doc_id"))
-    # diff against the STORED digests (r17): the old corpus is never
-    # re-hashed per refresh — snapshot_diff_from_digests is the declared
-    # deployment shape and produces byte-identical change rows.
-    # pin: the diff feeds `gone` (3 anti-joins) + `delta_ids` inside
-    # the patch — unpinned, the digest full-outer join would re-run
-    # per branch (the artifact updater's trap)
-    diff = snapshot_diff_from_digests(
-        _incr_old_digests(spark, sf_dir), new
-    ).select("doc_id", "change").localCheckpoint()
-    _, patched, fresh = incremental_dedup_update(
-        new, diff, old_pairs,
-        old_ranked.select("doc_id", "band", "bucket"),
-        old_overfull=_incr_old_overfull(spark, sf_dir),
-    )
-    # patched stays LAZY (r17): each consumer evaluates it exactly once
-    # per invocation — the minhash section thresholds it straight into
-    # the union, and the clusters label patch feeds it through
-    # connected_components, which persists its own edge input. The
-    # splice union is anti-joins over the already-checkpointed old_pairs/
-    # diff/fresh, so laziness re-runs no corpus-sized work. fresh is a
-    # localCheckpoint (pinned inside the patch, consumed twice).
-    return (diff, patched, fresh)
+    import functools
 
+    from pyspark_coding_challenge_spark.llm import artifacts as A
 
-def _incr_patched_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _incr_patched_state(spark, sf_dir)[1]
+    old, new = snapshot_versions(read_table(spark, sf_dir, "documents"))
+    art = A.stored_refresh_state(
+        spark, sf_dir, "documents", old, new, A.PAIRS_STATE,
+        functools.partial(A.update_pairs_incremental, cc_min_edges=0,
+                          max_churn_frac=1.0),
+        A.PAIRS_PATCHED, section)
+    return spark.read.parquet(os.path.join(art, name))
 
 
 def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The registered INCREMENTAL-refresh section: derive the deterministic
-    (old, new) snapshots (``snapshot_versions``), patch the stored old
-    state with the diff (``incremental_dedup_update`` via the shared
-    ``_incr_patched_pairs`` materialization), and threshold. The DuckDB
-    oracle is a FULL recompute of the minhash chain over the NEW corpus,
-    so the driver's hash gate proves incremental == full — the
-    judge-specified done-condition for r8 #1."""
-    patched = _incr_patched_pairs(spark, sf_dir)
+    (old, new) snapshots (``snapshot_versions``), refresh the old
+    snapshot's stored artifacts with the diff (``_refreshed_artifact``)
+    and threshold the patched pair graph. The DuckDB oracle is a FULL
+    recompute of the minhash chain over the NEW corpus, so the driver's
+    hash gate proves incremental == full for the updater a deployment
+    runs."""
+    patched = _refreshed_artifact(spark, sf_dir,
+                                  "dedup_minhash_lsh/incremental",
+                                  "verified_pairs")
     return patched.filter(F.col("_jac_raw") >= JACCARD_THRESHOLD).select(
         "doc_a", "doc_b", "jaccard"
     )
@@ -1108,7 +984,7 @@ CC_MAX_ITER = 25
 # ~80k stored edges. The artifact refresh (artifacts.update_pairs_
 # incremental) gates on the STORED graph's edge count against this and
 # falls back to full CC below it (r8 judge item #6).
-CC_INCR_MIN_EDGES = int(os.environ.get("SPARK_GRAFT_CC_INCR_MIN_EDGES", "80000"))
+CC_INCR_MIN_EDGES = 80_000
 
 
 def connected_components(edges: DataFrame, src_col: str = "doc_a",
@@ -1553,17 +1429,6 @@ def dedup_clusters_sectioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _incr_old_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The derived prior snapshot's CC labels — the stored cluster state an
-    incremental refresh patches; session-cached."""
-    return session_state.get_or_build(
-        "incr_old_cc", spark, sf_dir,
-        lambda: connected_components(
-            _threshold_edges(_incr_old_state(spark, sf_dir)[1])
-        ),
-    )
-
-
 def _cluster_shape(cc: DataFrame) -> DataFrame:
     """(doc_id, cluster_id, cluster_size, is_keeper) from (node, label) —
     the one output-shaping definition all cluster sections share."""
@@ -1578,50 +1443,16 @@ def _cluster_shape(cc: DataFrame) -> DataFrame:
 def dedup_clusters_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ``incremental`` section of ``dedup_clusters`` (r7 verdict #1's
     last clause: "re-run CC only on components touched by new or removed
-    edges"): stored state = the old snapshot's pair graph AND its CC
-    labels; the refresh patches the pair graph from the diff
-    (``_incr_patched_pairs``) and then patches the LABELS with
+    edges"): the refresh (``_refreshed_artifact``) patches the stored
+    pair graph from the diff and then the stored LABELS with
     ``incremental_cc_update`` — label propagation re-runs on the affected
     subgraph only, untouched components keep their labels verbatim. The
     DuckDB oracle is the FULL recursive-CTE CC over the post-churn
     snapshot, so the hash gate proves patched labels == full relabeling.
     Output shape matches the ``clusters`` section (doc_id, cluster_id,
-    cluster_size, is_keeper) over the NEW corpus's near-dup graph.
-
-    r9: the edge diff comes from the pair-graph patch itself —
-    known_added = the freshly-verified pairs above threshold,
-    known_removed = old edges with a churned endpoint — so the two
-    full-graph anti-joins are skipped (both known sets are
-    churn-proportional; supersets of the true diff are fine, see
-    ``incremental_cc_update``).
-
-    r17: the label patch runs PER INVOCATION. The r16 session cache of
-    its output (_INCR_NEW_CC_CACHE) served this section's answer from the
-    bench's untimed warm-up — removed per the r16 verdict. Only the
-    prior-snapshot stored state (_incr_old_state/_incr_old_cc) stays
-    session-cached; the per-call cost is the diff + churn patch, which is
-    churn-proportional by construction."""
-    old_edges = _threshold_edges(_incr_old_state(spark, sf_dir)[1])
-    diff, patched, fresh = _incr_patched_state(spark, sf_dir)
-    new_edges = _threshold_edges(patched)
-    gone = diff.filter(
-        F.col("change").isin("removed", "modified")).select("doc_id")
-    removed = (
-        old_edges.join(gone.withColumnRenamed("doc_id", "doc_a"),
-                       on="doc_a", how="left_semi")
-        .unionByName(
-            old_edges.join(gone.withColumnRenamed("doc_id", "doc_b"),
-                           on="doc_b", how="left_semi")
-        )
-        .distinct()
-    )
-    # lazy return: the labels union feeds exactly one consumer
-    # (_cluster_shape's window chain inside the slug's union job), and
-    # every multi-consumer input inside the patch is already pinned
-    return _cluster_shape(incremental_cc_update(
-        _incr_old_cc(spark, sf_dir), new_edges,
-        known_added=_threshold_edges(fresh), known_removed=removed,
-    ))
+    cluster_size, is_keeper) over the NEW corpus's near-dup graph."""
+    return _cluster_shape(_refreshed_artifact(
+        spark, sf_dir, "dedup_clusters/incremental", "cc_labels"))
 
 
 def _clusters_incremental_oracle() -> str:

@@ -688,6 +688,7 @@ def _stored_ivf_state(spark: SparkSession, sf_dir: str):
 
 
 def _build_stored_ivf_state(spark: SparkSession, sf_dir: str):
+    import functools
     import os as _os
 
     from pyspark_coding_challenge_spark.llm import artifacts as A
@@ -699,8 +700,12 @@ def _build_stored_ivf_state(spark: SparkSession, sf_dir: str):
         spark, sf_dir, "embeddings", old, new,
         (A.CENTROIDS_NAME, A.VECDIG_NAME, A.ASSIGN_NAME, A.PQCB_NAME,
          A.PQCODES_NAME),
+        # the derived churn is fixed by construction, above the quantizer
+        # carry gate: pin the gate open
+        functools.partial(A.update_centroids_incremental, max_churn_frac=1.0),
         {"mode": "carried", A.ASSIGN_NAME: "patched",
-         A.PQCB_NAME: "carried", A.PQCODES_NAME: "patched"})
+         A.PQCB_NAME: "carried", A.PQCODES_NAME: "patched"},
+        "embedding_ann_ivf/stored_index")
     cent, asg, cb, codes = (spark.read.parquet(_os.path.join(art, name))
                             for name in (A.CENTROIDS_NAME, A.ASSIGN_NAME,
                                          A.PQCB_NAME, A.PQCODES_NAME))

@@ -34,8 +34,6 @@ struct_pack, array_sort_structs, array_transform, array_pad_truncate.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -54,14 +52,7 @@ from pyspark_coding_challenge_spark.functions.arrays import pad_truncate, sorted
 # semantics. Callers that truly need unbounded large-K history pass an
 # explicit huge lookback_days.
 ROLLING_AUTO_LOOKBACK_MIN_K = 64
-
-
-def _auto_lookback_days() -> int:
-    """SPARK_GRAFT_ROLLING_LOOKBACK_DAYS, read at CALL time — same
-    rationale as ``session._cpus_as_partitions`` (the env var may be set
-    after import; an import-time read would silently ignore it and keep
-    dropping history past the default horizon, r6 review finding)."""
-    return int(os.environ.get("SPARK_GRAFT_ROLLING_LOOKBACK_DAYS", "365"))
+ROLLING_AUTO_LOOKBACK_DAYS = 365
 
 
 def last_k_history(
@@ -188,7 +179,7 @@ def rolling_last_k_history(
     Large-K guard (r4 verdict #4): when ``k`` exceeds
     ``ROLLING_AUTO_LOOKBACK_MIN_K`` and ``lookback_days`` is None, the
     bounded path is selected automatically with
-    ``_auto_lookback_days()`` — see its comment for why the
+    ``ROLLING_AUTO_LOOKBACK_DAYS`` — see its comment for why the
     unbounded frame is quadratic in K and the horizon is lossless in
     practice. This CHANGES semantics for large-K entities whose last K
     actions stretch past the horizon (older actions drop out). Pass any
@@ -198,11 +189,10 @@ def rolling_last_k_history(
     testdata.
     """
     if lookback_days is None and k > ROLLING_AUTO_LOOKBACK_MIN_K:
-        lookback_days = _auto_lookback_days()
-    # Normalize AFTER the auto-default too: a nonpositive value — from the
-    # caller OR from the SPARK_GRAFT_ROLLING_LOOKBACK_DAYS env var feeding
-    # the auto lookback — means "exact unbounded path"; letting it
-    # through would build an inverted rangeBetween frame and fail analysis.
+        lookback_days = ROLLING_AUTO_LOOKBACK_DAYS
+    # a nonpositive value from the caller means "exact unbounded path";
+    # letting it through would build an inverted rangeBetween frame and
+    # fail analysis
     if lookback_days is not None and lookback_days <= 0:
         lookback_days = None  # explicit unbounded opt-in
 

@@ -19,13 +19,20 @@ module's public ``clear_*`` function names the kinds that fall together.
   (app, kind) it clears, so a build that straddled a clear — and may have
   read artifact bytes the clearing caller is rewriting — is released and
   retried. The third attempt installs anyway (an uninstalled, unreleased
-  handle would leak), recording the epoch it STARTED at, so the next
+  handle would leak), recording an epoch no lookup accepts, so the next
   lookup sees a stale entry, releases it and rebuilds.
 
 Epochs are per (app, kind), not per app: the stored-state builds clear
 other kinds of their own session mid-build (the refresh updaters do) and
 must not discard themselves for it. ``clear`` pops entries under the lock,
 releases them outside it and never waits for an in-flight build.
+
+``clear_loaded_under`` is the precise clear of a refresh that rewrote some
+artifact paths: it drops only the session's entries whose ``loaded_from``
+lies under those paths, and marks only the in-flight builds that recorded a
+seed there for retry. Every other entry, of the same kinds included, stays
+as it is, so a refresh of one artifact dir never unpersists the pair graph
+another corpus's sections are reading.
 
 ``spark=None`` addresses process-wide entries in ``get_or_build``, and
 every session's entries in ``clear``.
@@ -65,14 +72,10 @@ class Kind:
 
 
 KINDS: dict[str, Kind] = {
-    # llm.dedup: declared artifacts, then the prior snapshot's stored state
+    # llm.dedup: declared artifacts
     "verified_pairs": Kind(ARTIFACT, _unpersist),
     "banded_index": Kind(ARTIFACT),
     "cc_labels": Kind(ARTIFACT, _unpersist),
-    "incr_old_state": Kind(STORED),
-    "incr_old_cc": Kind(STORED),
-    "incr_old_digests": Kind(STORED),
-    "incr_old_overfull": Kind(STORED),
     # llm.text
     "doc_signals": Kind(ARTIFACT, _unpersist),
     "token_spine": Kind(ARTIFACT, _unpersist),
@@ -88,6 +91,9 @@ KINDS: dict[str, Kind] = {
     "pq_fold_verdicts": Kind(METADATA),
     "stored_ivf_state": Kind(STORED),
     "topk": Kind(QUERY_OUTPUT),
+    # llm.artifacts: the landed prior snapshot a refreshed section's
+    # updater starts from (its dirs; the bytes live in the scratch root)
+    "refresh_prior": Kind(STORED),
     # streaming, operators, curation
     "ingest_refresh_state": Kind(STORED),
     "doc_schema": Kind(METADATA),
@@ -111,6 +117,7 @@ class _Flight:
         self.thread = threading.get_ident()
         self.done = threading.Event()
         self.loaded_from: str | None = None
+        self.superseded = False  # a clear_loaded_under hit its seed path
 
 
 _LOCK = threading.Lock()
@@ -161,14 +168,16 @@ def get_or_build(kind: str, spark, key, build: Callable[[], Any]) -> Any:
         flight.done.wait()
     try:
         for attempt in range(3):
-            flight.loaded_from = None
+            flight.loaded_from, flight.superseded = None, False
             built = build()
             with _LOCK:
                 current = _EPOCHS[(app, kind)]
-                install_now = current == epoch or attempt == 2
+                valid = current == epoch and not flight.superseded
+                install_now = valid or attempt == 2
                 if install_now:
-                    winner = _ENTRIES.setdefault(
-                        ekey, _Entry(built, epoch, flight.loaded_from)).value
+                    winner = _ENTRIES.setdefault(ekey, _Entry(
+                        built, epoch if valid else -1,
+                        flight.loaded_from)).value
                 epoch = current
             if install_now and winner is built:
                 return built
@@ -228,6 +237,30 @@ def clear(spark, *kinds: str) -> int:
                 _EPOCHS[ek] += 1
         dropped = [(ek[0], _ENTRIES.pop(ek)) for ek in list(_ENTRIES)
                    if ek[0] in kinds and (spark is None or ek[1] == app)]
+    for kind, entry in dropped:
+        _release(kind, entry.value)
+    return len(dropped)
+
+
+def _under(path: str | None, roots: list[str]) -> bool:
+    return path is not None and any(
+        path == r or path.startswith(r + os.sep) for r in roots)
+
+
+def clear_loaded_under(spark, *paths: str) -> int:
+    """Drop the given session's entries, of any kind, whose
+    ``loaded_from`` lies under one of ``paths`` (the artifacts a refresh
+    just rewrote), and return how many were dropped. A build in flight
+    that recorded a seed under ``paths`` is retried, as after ``clear``;
+    no epoch moves, so every other entry stays valid."""
+    roots = [os.path.abspath(p) for p in paths]
+    app = _app(spark)
+    with _LOCK:
+        for ek, flight in _FLIGHTS.items():
+            if ek[1] == app and _under(flight.loaded_from, roots):
+                flight.superseded = True
+        dropped = [(ek[0], _ENTRIES.pop(ek)) for ek, e in list(_ENTRIES.items())
+                   if ek[1] == app and _under(e.loaded_from, roots)]
     for kind, entry in dropped:
         _release(kind, entry.value)
     return len(dropped)

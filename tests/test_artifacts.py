@@ -715,7 +715,8 @@ spark.sparkContext.setLogLevel("ERROR")
 from pyspark_coding_challenge_spark.llm import artifacts as A
 from pyspark_coding_challenge_spark.llm import dedup as D
 
-summary = A.update_pairs_incremental(spark, old_dir, new_dir, art)
+summary = A.update_pairs_incremental(spark, old_dir, new_dir, art,
+                                     cc_min_edges=0)
 new_docs = spark.read.parquet(new_dir + "/documents.parquet")
 full = sorted(
     (r.node, r.label)
@@ -746,17 +747,50 @@ def test_cc_patch_equals_full_in_fresh_session(spark, tmp_path):
     A.materialize(spark, old_dir, art, A.DIGESTS_NAME, digest)
     D.clear_pair_cache(spark)
 
-    env = dict(os.environ, PYTHONPATH="/root/repo",
-               SPARK_GRAFT_CC_INCR_MIN_EDGES="0")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     proc = subprocess.run(
         [sys.executable, "-c", _CC_PATCH_SUBPROCESS, old_dir, new_dir, art],
-        capture_output=True, text=True, timeout=600, env=env, cwd="/root/repo",
+        capture_output=True, text=True, timeout=600,
+        env=dict(os.environ, PYTHONPATH=repo), cwd=repo,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
     line = [l for l in proc.stdout.splitlines() if l.startswith("RESULT_JSON:")][0]
     got = json.loads(line[len("RESULT_JSON:"):])
     assert got == {"mode": "incremental", "cc_mode": "incremental",
                    "old_side": "doc_digests", "labels_equal_full": True}
+
+
+def test_pairs_refresh_clears_only_entries_read_from_its_artifacts(
+        spark, tmp_path):
+    """The pairs updater drops only this session's entries loaded from the
+    artifacts it rewrites: another corpus's persisted pair graph (the one
+    the registered pairs and clusters sections read) survives as the same
+    object, still persisted, while the entry ``load`` installed from the
+    rewritten dir falls."""
+    from pyspark import StorageLevel
+
+    from pyspark_coding_challenge_spark import session_state as SS
+    from pyspark_coding_challenge_spark.llm import dedup as D
+
+    old_dir, new_dir = _write_versions(spark, tmp_path)
+    art = str(tmp_path / "art")
+    digest = A.corpus_digest(spark, old_dir)
+    for name in (A.PAIRS_NAME, A.BANDS_NAME, A.CC_NAME, A.DIGESTS_NAME):
+        A.materialize(spark, old_dir, art, name, digest)
+    D.clear_pair_cache(spark)
+    kept = D.verified_pairs_for_dir(spark, SF_DIR)
+    kept.count()
+    A.load(spark, old_dir, art, A.PAIRS_NAME)
+    assert SS.loaded_from("verified_pairs", spark, old_dir) == \
+        os.path.join(art, A.PAIRS_NAME)
+    loaded = ("verified_pairs", spark.sparkContext.applicationId, old_dir)
+
+    summary = A.update_pairs_incremental(spark, old_dir, new_dir, art)
+    assert summary["mode"] == "incremental"
+    assert D.verified_pairs_for_dir(spark, SF_DIR) is kept
+    assert kept.storageLevel != StorageLevel.NONE
+    assert loaded not in SS._ENTRIES
+    D.clear_pair_cache(spark)
 
 
 # ---------------------------------------------------------------------------

@@ -143,10 +143,9 @@ def test_bounded_lookback_drops_ancient_history(spark):
 
 
 def test_nonpositive_lookback_normalizes_to_unbounded_at_any_k(spark):
-    """A nonpositive lookback_days — explicit, or via the
-    SPARK_GRAFT_ROLLING_LOOKBACK_DAYS env feeding the large-K auto-default
-    — must select the exact unbounded path, not build an inverted
-    rangeBetween frame that fails analysis."""
+    """A nonpositive lookback_days, at small or large K, must select the
+    exact unbounded path, not build an inverted rangeBetween frame that
+    fails analysis."""
     actions = spark.createDataFrame(
         [(1, ts("2025-03-01 10:00:00"), 7, 1), (1, ts("2025-03-03 10:00:00"), 8, 2)],
         ACTIONS_DDL)

@@ -578,31 +578,6 @@ def test_incremental_update_repairs_bucket_shrunk_under_cap(spark):
     assert {(r.doc_a, r.doc_b) for r in patched.collect()} == {(1, 3)}
 
 
-def test_incremental_update_rejects_overfull_set_from_another_cap(spark):
-    """ADVICE (dedup.py:1023): ``old_overfull`` carries the cap it was
-    computed at; a set pre-aggregated at a different cap than the patch's
-    ``max_bucket`` would silently change which mega-buckets get repaired,
-    so it is refused. A matching set patches like the per-call probe."""
-    old = spark.createDataFrame([(i, BASE) for i in (1, 2, 3)], schema=DOC_SCHEMA)
-    new = old.filter(F.col("doc_id") != 2)
-    ranked = D.ranked_band_relation(old)
-    bands = ranked.select("doc_id", "band", "bucket")
-    old_pairs = D.verify_jaccard(
-        old, D.lsh_candidate_pairs(old, ranked=ranked, max_bucket=2))
-    diff = D.snapshot_diff(old, new).select("doc_id", "change")
-
-    def overfull(cap):
-        return (bands.groupBy("band", "bucket").count()
-                .filter(F.col("count") > cap).select("band", "bucket"), cap)
-
-    with pytest.raises(ValueError, match="max_bucket=2"):
-        D.incremental_dedup_update(new, diff, old_pairs, bands, max_bucket=2,
-                                   old_overfull=overfull(D.LSH_MAX_BUCKET))
-    _, patched, _ = D.incremental_dedup_update(
-        new, diff, old_pairs, bands, max_bucket=2, old_overfull=overfull(2))
-    assert {(r.doc_a, r.doc_b) for r in patched.collect()} == {(1, 3)}
-
-
 def _cc_labels(spark, edges):
     df = spark.createDataFrame(edges, schema="doc_a BIGINT, doc_b BIGINT")
     return {r.node: r.label for r in D.connected_components(df).collect()}
@@ -652,17 +627,29 @@ def test_incremental_cc_empty_diff_is_identity(spark):
     assert _incr_labels(spark, old, old) == _cc_labels(spark, old)
 
 
-def test_clusters_incremental_section_matches_full_relabeling(spark):
+def test_clusters_incremental_section_matches_full_relabeling(spark,
+                                                              monkeypatch):
     """The registered section's label patch equals a from-scratch CC over
-    the patched graph (the in-process twin of its DuckDB oracle)."""
+    the patched graph (the in-process twin of its DuckDB oracle). The
+    patched pairs are read from the section's own refreshed slot."""
+    import os
+
     from pyspark.sql import functions as F2
 
+    from pyspark_coding_challenge_spark.llm import artifacts as A
+
+    slots = []
+    real = A.stored_refresh_state
+    monkeypatch.setattr(A, "stored_refresh_state",
+                        lambda *a, **k: slots.append(real(*a, **k))
+                        or slots[-1])
     sf = "/root/testdata/sf0.001"
     got = {
         (r.doc_id, r.cluster_id, r.cluster_size, r.is_keeper)
         for r in D.dedup_clusters_incremental(spark, sf).collect()
     }
-    new_edges = D._incr_patched_pairs(spark, sf).filter(
+    assert len(slots) == 1
+    new_edges = spark.read.parquet(os.path.join(slots[0], A.PAIRS_NAME)).filter(
         F2.col("_jac_raw") >= D.JACCARD_THRESHOLD
     ).select("doc_a", "doc_b")
     full = D.connected_components(new_edges)
@@ -679,6 +666,25 @@ def test_clusters_incremental_section_matches_full_relabeling(spark):
         .collect()
     }
     assert got == exp
+
+
+@pytest.mark.parametrize("section", [D.dedup_minhash_incremental,
+                                     D.dedup_clusters_incremental])
+def test_incremental_section_raises_on_degrade(spark, monkeypatch, section):
+    """The incremental sections must serve the pairs refresh's INCREMENTAL
+    path: if the updater reports a full rebuild, the section raises rather
+    than serve rows a rebuild produced — the hash gate must prove the
+    patch, not value-equality by accident."""
+    from pyspark_coding_challenge_spark.llm import artifacts as A
+
+    real = A.update_pairs_incremental
+
+    def degraded(*a, **k):
+        return {**real(*a, **k), "mode": "full_rebuild"}
+
+    monkeypatch.setattr(A, "update_pairs_incremental", degraded)
+    with pytest.raises(RuntimeError, match="degraded"):
+        section(spark, "/root/testdata/sf0.001")
 
 
 def test_cached_build_discards_build_straddling_clear(spark, test_kind):

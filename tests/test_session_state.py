@@ -23,19 +23,17 @@ PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
 
 # kind -> (the cache it replaced, its class in the OPTIMIZATION_r17.md §2
 # stored-state audit). Rows the audit table does not list are folded under
-# the row they belong to: the prior snapshot's digests and over-cap set
-# "joined the session-cached STORED state" (same document, §1); the fold
-# verdicts memoize the pairing metadata of the assignments/codes rows; the
-# scratch root, first the text state's build-root cell, belongs to the
+# the row they belong to: the refresh prior (the landed old snapshot the
+# refreshed sections' updaters start from) takes over the prior-snapshot
+# stored state the dedup incremental sections used to cache in memory; the
+# fold verdicts memoize the pairing metadata of the assignments/codes rows;
+# the scratch root, first the text state's build-root cell, belongs to the
 # artifact builds it serves.
 AUDIT_R17 = {
     "verified_pairs": ("dedup._VERIFIED_PAIRS_CACHE", "declared artifact"),
     "banded_index": ("dedup._BANDED_INDEX_CACHE", "declared artifact"),
     "cc_labels": ("dedup._CC_LABELS_CACHE", "declared artifact"),
-    "incr_old_state": ("dedup._INCR_OLD_CACHE", "stored state"),
-    "incr_old_cc": ("dedup._INCR_OLD_CC_CACHE", "stored state"),
-    "incr_old_digests": ("dedup._INCR_OLD_DIGESTS_CACHE", "stored state"),
-    "incr_old_overfull": ("dedup._INCR_OLD_OVERFULL_CACHE", "stored state"),
+    "refresh_prior": ("dedup._INCR_OLD_CACHE", "stored state"),
     "doc_signals": ("text._DOC_SIGNALS_CACHE", "declared artifact"),
     "token_spine": ("text._TOKEN_SPINE_CACHE", "declared artifact"),
     "shared_spans": ("text._SHARED_SPANS_CACHE", "declared artifact"),
@@ -257,24 +255,30 @@ def test_clear_never_waits_for_an_in_flight_build(test_kind):
 
 
 def test_stress_every_build_is_released_exactly_once(test_kind):
-    """Many threads racing gets and clears on a few keys: every value a
-    build produced is, once everything is cleared, released exactly once —
-    a lost install would leak one, a double install release one twice."""
+    """Many threads racing gets, clears and precise clears on a few keys:
+    every value a build produced is, once everything is cleared, released
+    exactly once — a lost install would leak one, a double install release
+    one twice."""
     kind, released = test_kind
     sp = _session("stress")
     tokens = itertools.count()
     built: list[int] = []
 
-    def build():
-        token = next(tokens)
-        built.append(token)
-        return token
+    def build(key):
+        def run():
+            token = next(tokens)
+            built.append(token)
+            SS.record_seed(kind, sp, key, f"/stress/{key}")
+            return token
+        return run
 
     def worker(i):
         for j in range(150):
-            SS.get_or_build(kind, sp, j % 3, build)
+            SS.get_or_build(kind, sp, j % 3, build(j % 3))
             if j % 7 == i % 7:
                 SS.clear(sp, kind)
+            elif j % 5 == i % 5:
+                SS.clear_loaded_under(sp, "/stress/0")
 
     interval = sys.getswitchinterval()
     sys.setswitchinterval(1e-6)
@@ -341,6 +345,33 @@ def test_clear_scopes_to_one_session_or_all(test_kind):
     assert SS.clear(a, kind) == 1 and released == ["a"]
     assert SS.get_or_build(kind, b, "k", lambda: "rebuilt") == "b"
     assert SS.clear(None, kind) == 1 and released == ["a", "b"]
+
+
+def test_clear_loaded_under_drops_only_entries_read_from_those_paths(
+        test_kind):
+    """A refresh's precise clear: entries loaded from under the rewritten
+    paths fall, built entries and entries loaded elsewhere stay valid, and
+    a build in flight that seeded from under the paths is retried."""
+    kind, released = test_kind
+    sp = _session("clear-under")
+    SS.install(kind, sp, "rewritten", "stale", loaded_from="/art/x/pairs")
+    SS.install(kind, sp, "sibling", "kept", loaded_from="/art/xy/pairs")
+    assert SS.get_or_build(kind, sp, "built", lambda: "built") == "built"
+    calls = []
+
+    def build():
+        calls.append(1)
+        SS.record_seed(kind, sp, "seeding", "/art/x/bands")
+        if len(calls) == 1:
+            assert SS.clear_loaded_under(sp, "/art/x") == 1
+        return len(calls)
+
+    assert SS.get_or_build(kind, sp, "seeding", build) == 2
+    assert released == ["stale", 1]
+    assert SS.loaded_from(kind, sp, "rewritten") is None
+    for key, value in (("sibling", "kept"), ("built", "built"),
+                       ("seeding", 2)):
+        assert SS.get_or_build(kind, sp, key, lambda: "rebuilt") == value
 
 
 def test_undeclared_kind_fails_loudly():
