@@ -43,20 +43,27 @@ diff when their lineage matches the old snapshot, and fall back to
 growth.
 
 The registered sections served from refreshed artifacts (text, IVF and the
-two dedup incremental sections) share one fixture in two steps. The prior
-(``_refresh_prior``) is session-cached: the derived old and new snapshot
-dirs and the old snapshot's landed artifacts, the stored state a
-deployment already holds. ``stored_refresh_state`` then copies those
-artifacts into the calling section's scratch slot, runs the updater the
-caller names on the copy and checks its modes (``require_modes``).
+two dedup incremental sections) share one fixture in two steps, and every
+call runs both. The prior (``_refresh_prior``) is session-cached, one per
+corpus side: the derived old and new snapshot dirs and the old snapshot's
+landed artifacts (``PRIOR_NAMES``), the stored state a deployment already
+holds. ``stored_refresh_state`` then copies the caller's artifacts into
+its scratch slot, runs the updater the caller names on the copy and
+checks its modes (``require_modes``). No session entry holds what a
+refresh produced.
 
 Session entries live in ``session_state``: ``seed_from_env`` runs inside
 the build of the entry it seeds (it installs nothing itself, only records
 the seed path on the entry being built), and ``load`` seeds through
-``session_state.install``, which releases the entry it replaces. The pairs
-updater drops only the entries loaded from the paths it rewrote
-(``session_state.clear_loaded_under``). No module here touches another
-module's cache or lock.
+``session_state.install``, which releases the entry it replaces.
+
+One clear rule: a writer of artifact bytes (the updaters,
+``compact_artifacts``) drops only the session entries loaded from the
+paths it rewrote (``session_state.clear_loaded_under``), never a whole
+kind. Two derived kinds need no clear of their own: the fold verdicts are
+keyed by the stored fold they judged, and the shard ``breaks`` fall only
+when a refresh dropped a ``token_spine`` entry they derive from. No
+module here touches another module's cache or lock.
 """
 
 from __future__ import annotations
@@ -98,17 +105,6 @@ PQCB_NAME = "pq_codebooks"
 PQCODES_NAME = "pq_codes"
 
 ENV_ARTIFACT_DIR = "SPARK_GRAFT_ARTIFACT_DIR"
-
-# every session kind that reads, or derives from, artifact bytes: the
-# similarity quantizer family, the dedup pair family, the text artifacts
-# and the shard breaks derived from the spine. Dropped together when the
-# bytes under an artifact directory move (compaction).
-ARTIFACT_SESSION_KINDS = (
-    "ivf_centroids", "ivf_assignments", "pq_codebooks", "pq_codes",
-    "assign_fold_verdicts", "pq_fold_verdicts",
-    "verified_pairs", "banded_index", "cc_labels",
-    "doc_signals", "token_spine", "shared_spans", "breaks",
-)
 
 _META_FILE = "_artifact_meta.json"
 
@@ -1349,9 +1345,7 @@ def _changelog_gate(changelog: DataFrame, old_digests: DataFrame,
         .collect()
     ]
     if removed_ids:
-        still_there = corpus.filter(F.col(id_col).isin(removed_ids)) \
-            .limit(1).count()
-        if still_there:
+        if not corpus.filter(F.col(id_col).isin(removed_ids)).isEmpty():
             return ("a sampled 'removed' id is still present in the new "
                     "corpus — stale or wrong changelog")
     gone_ids = [
@@ -2091,7 +2085,7 @@ def update_text_incremental(spark: SparkSession, old_sf_dir: str,
                 F.broadcast(trans.filter(F.col("n_new") >= 2).select("h")),
                 on="h", how="left_semi").select("doc_id", "i", "h")
             new_spans = kept.select("doc_id", "i", "h").unionByName(add_churn)
-            if newly_shared.limit(1).count() > 0:  # bounded existence check
+            if not newly_shared.isEmpty():  # bounded existence check
                 new_spans = new_spans.unionByName(
                     new_pos.join(F.broadcast(newly_shared), on="h",
                                  how="left_semi")
@@ -2126,14 +2120,18 @@ def update_text_incremental(spark: SparkSession, old_sf_dir: str,
                   new_sf_dir, artifact_dir, SPANS_NAME, derived_lineage)
         summary[SPANSTATS_NAME] = summary[SPANS_NAME] = derived_mode
 
-    # session caches seeded from these paths now read rewritten bytes; the
-    # quantile shard breaks derive FROM the spine (keyed by sf_dir):
-    # without dropping them, post-refresh pack/batch plans shard new
-    # doc_ids against pre-churn quantiles — values stay correct (breaks
-    # are monotone) but added ids pile into the top shard, re-creating the
-    # skew the quantile pass exists to prevent (r10 review finding)
-    session_state.clear(spark, "doc_signals", "token_spine", "shared_spans",
-                        "breaks")
+    # session entries seeded from these paths now read rewritten bytes;
+    # entries built elsewhere stay. The quantile shard breaks derive FROM
+    # the spine: when a spine entry fell, post-refresh pack/batch plans
+    # would shard new doc_ids against pre-churn quantiles — values stay
+    # correct (breaks are monotone) but added ids pile into the top
+    # shard, re-creating the skew the quantile pass exists to prevent
+    # (r10 review finding)
+    dropped = session_state.clear_loaded_under(spark, *(
+        os.path.join(artifact_dir, name) for name in
+        (SIGNALS_NAME, SPINE_NAME, SPANPOS_NAME, SPANSTATS_NAME, SPANS_NAME)))
+    if "token_spine" in dropped:
+        session_state.clear(spark, "breaks")
     return summary
 
 
@@ -2215,10 +2213,12 @@ def update_centroids_incremental(spark: SparkSession, old_sf_dir: str,
         summary["vec_digests_note"] = ctx["dig_note"]
     if ctx["supplied"] is not None:
         summary["new_vec_digests"] = ctx["supplied"]
-    # a session quantizer cached for either dir no longer reflects what
-    # the artifacts are about to say — drop them all; the next consumer
-    # re-seeds from the artifact (clear also forgets the seed paths)
-    S.clear_centroid_cache(spark)
+    # a session entry seeded from these paths no longer reflects what the
+    # artifacts are about to say — drop it before any rewrite, so the
+    # rebuilds' seeded-path guard cannot skip them; the next consumer
+    # re-seeds from the artifact
+    session_state.clear_loaded_under(spark, *(
+        os.path.join(artifact_dir, name) for name in EMB_STATE))
     if old_digest is None:
         # full build on the new snapshot; present optional state trained,
         # assigned or encoded under the pre-bootstrap corpus must not
@@ -2443,6 +2443,14 @@ TEXT_PATCHED = dict.fromkeys(TEXT_STATE[1:], "patched")
 PAIRS_STATE = (PAIRS_NAME, BANDS_NAME, CC_NAME, DIGESTS_NAME)
 PAIRS_PATCHED = {"mode": "incremental", "cc_mode": "incremental",
                  "old_side": "doc_digests"}
+#: the embeddings-side stored state ``update_centroids_incremental``
+#: rewrites, which the refreshed IVF sections serve from
+EMB_STATE = (CENTROIDS_NAME, VECDIG_NAME, ASSIGN_NAME, PQCB_NAME,
+             PQCODES_NAME)
+#: per corpus side, every artifact its refreshed sections copy from the
+#: one prior that side lands per session
+PRIOR_NAMES = {"documents": tuple(dict.fromkeys(TEXT_STATE + PAIRS_STATE)),
+               "embeddings": EMB_STATE}
 
 
 def require_modes(summary: dict, required: dict) -> None:
@@ -2456,26 +2464,25 @@ def require_modes(summary: dict, required: dict) -> None:
 
 
 def _refresh_prior(spark: SparkSession, sf_dir: str, side: str,
-                   old: DataFrame, new: DataFrame,
-                   names: tuple) -> tuple[str, str, str]:
+                   old: DataFrame, new: DataFrame) -> tuple[str, str, str]:
     """(old_dir, new_dir, prior_dir), built once per (session, ``sf_dir``,
-    ``side``, ``names``): the derived ``old`` and ``new`` snapshots of
-    ``side``'s table land in a private scratch slot, and the old
-    snapshot's ``names`` artifacts under ``prior_dir`` (the stored state a
-    deployment would already hold). Nothing writes to it afterwards."""
+    ``side``): the derived ``old`` and ``new`` snapshots of ``side``'s
+    table land in a private scratch slot, and the old snapshot's
+    ``PRIOR_NAMES[side]`` artifacts under ``prior_dir`` (the stored state
+    a deployment would already hold). Nothing writes to it afterwards."""
     def _build() -> tuple[str, str, str]:
         root = scratch_dir(f"{spark.sparkContext.applicationId}:{sf_dir}"
-                           f"#{side}:{','.join(names)}")
+                           f"#{side}")
         old_dir, new_dir = os.path.join(root, "old"), os.path.join(root, "new")
         for snap, d in ((old, old_dir), (new, new_dir)):
             snap.write.mode("overwrite").parquet(
                 os.path.join(d, f"{_SIDES[side].table}.parquet"))
         prior = os.path.join(root, "prior")
-        materialize_all(spark, old_dir, prior, names)
+        materialize_all(spark, old_dir, prior, PRIOR_NAMES[side])
         return old_dir, new_dir, prior
 
     return session_state.get_or_build("refresh_prior", spark,
-                                      (sf_dir, side, names), _build)
+                                      (sf_dir, side), _build)
 
 
 def stored_refresh_state(spark: SparkSession, sf_dir: str, side: str,
@@ -2483,15 +2490,14 @@ def stored_refresh_state(spark: SparkSession, sf_dir: str, side: str,
                          update: Callable[..., dict], required: dict,
                          section: str) -> str:
     """The artifact dir ``section`` serves from, refreshed by this call:
-    the session's prior (``_refresh_prior``: the derived ``old`` and
-    ``new`` snapshots of ``side`` and the old snapshot's ``names``
-    artifacts) is copied into the section's scratch slot, ``update``
-    (an updater, with whatever gate its caller pins) refreshes the copy to
-    the new snapshot, and ``require_modes`` checks it took the
+    the ``names`` artifacts of the session's prior for ``side``
+    (``_refresh_prior``: the derived ``old`` and ``new`` snapshots and the
+    old snapshot's artifacts) are copied into the section's scratch slot,
+    ``update`` (an updater, with whatever gate its caller pins) refreshes
+    the copy to the new snapshot, and ``require_modes`` checks it took the
     ``required`` paths. The slot is wiped by the next call for the same
     section, so a result read from it stays valid until then."""
-    old_dir, new_dir, prior = _refresh_prior(spark, sf_dir, side, old, new,
-                                             names)
+    old_dir, new_dir, prior = _refresh_prior(spark, sf_dir, side, old, new)
     art = scratch_dir(f"{spark.sparkContext.applicationId}:{sf_dir}"
                       f"#{section}")
     for name in names:
@@ -2660,8 +2666,9 @@ def compact_artifacts(spark: SparkSession, artifact_dir: str,
     buckets keep their mtimes (the pq-refresh I/O-bound test pins the same
     invariant for the patch).
 
-    Session caches seeded from these paths are dropped afterwards — the
-    bytes moved, exactly as after a refresh. Returns ``{name: {"before":
+    Session entries seeded from the rewritten paths are dropped
+    afterwards — the bytes moved, as after a refresh; the rows did not, so
+    nothing derived from them falls. Returns ``{name: {"before":
     n, "after": m, "compacted": bool}}``. Run offline: no concurrent
     refresh or query should hold these paths open (same contract as a
     table-format OPTIMIZE)."""
@@ -2669,7 +2676,7 @@ def compact_artifacts(spark: SparkSession, artifact_dir: str,
     blimit = (COMPACT_MAX_BUCKET_FILES if max_bucket_files is None
               else max_bucket_files)
     report: dict = {}
-    touched_any = False
+    rewritten = []
     for name in ARTIFACTS:
         path = os.path.join(artifact_dir, name)
         _recover_swap(path)
@@ -2694,7 +2701,6 @@ def compact_artifacts(spark: SparkSession, artifact_dir: str,
             report[name] = {"before": before, "after": after,
                             "compacted": bool(over),
                             "buckets_compacted": len(over)}
-            touched_any = touched_any or bool(over)
         else:
             parts = _part_file_names(path)
             if len(parts) > limit:
@@ -2702,13 +2708,10 @@ def compact_artifacts(spark: SparkSession, artifact_dir: str,
                 report[name] = {"before": len(parts),
                                 "after": len(_part_file_names(path)),
                                 "compacted": True}
-                touched_any = True
             else:
                 report[name] = {"before": len(parts), "after": len(parts),
                                 "compacted": False}
-    if touched_any:
-        # the bytes under the compacted paths moved: any session relation
-        # (and its seed path) reading them is stale (same rule as the
-        # refresh updaters)
-        session_state.clear(spark, *ARTIFACT_SESSION_KINDS)
+        if report[name]["compacted"]:
+            rewritten.append(path)
+    session_state.clear_loaded_under(spark, *rewritten)
     return report

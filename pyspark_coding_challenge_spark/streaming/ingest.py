@@ -405,8 +405,8 @@ def _ingest_refresh_serve_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build the loop once per (session, corpus) — see
     ``streaming_ingest_refresh_serve`` for the contract. Cached because the
     bench's best-of-2 and the oracle run would otherwise re-run two ingest
-    streams and a refresh per invocation (the ``_patched_text_state``
-    rule)."""
+    streams and a refresh per invocation: the one refreshed section whose
+    refresh result a session entry still holds."""
     return session_state.get_or_build(
         "ingest_refresh_state", spark, sf_dir,
         lambda: _build_ingest_refresh_serve(spark, sf_dir))
@@ -442,6 +442,9 @@ def _build_ingest_refresh_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # under fresh monotonic batch ids
     docs.filter(~is_old).write.mode("append").parquet(src_docs)
     ingest_documents(spark, src, dest)
+    # the sink grew in place: the entries materialize_all built from it
+    # describe the pre-growth corpus
+    session_state.clear_keyed(spark, dest)
     # 4. the ingest's own changelog for exactly the new batches —
     # churn detection is O(churn), no corpus-wide diff join
     changelog = ingest_changelog_relation(spark, dest,

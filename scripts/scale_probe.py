@@ -644,10 +644,9 @@ def _side_names(A, side: str) -> list[str]:
 
 
 def _clear_all_artifact_caches(spark):
-    from pyspark_coding_challenge_spark import session_state
-    from pyspark_coding_challenge_spark.llm import artifacts as A
+    from pyspark_coding_challenge_spark import session_state as SS
 
-    session_state.clear(spark, *A.ARTIFACT_SESSION_KINDS)
+    SS.clear(spark, *(k for k, v in SS.KINDS.items() if v.cls == SS.ARTIFACT))
 
 
 def _supplied_relations(spark, new_dir: str):

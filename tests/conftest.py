@@ -49,7 +49,7 @@ SLOW_TESTS = (
     "test_artifacts.py::test_update_all_incremental_one_context",
     "test_centroid_refresh.py::test_assignments_rebuild_under_retrain",
     "test_centroid_refresh.py::test_stored_section_equals_inline_search",
-    "test_centroid_refresh.py::test_stored_state_cached_per_session",
+    "test_centroid_refresh.py::test_ivf_stored_sections_refresh_on_every_call",
     "test_centroid_refresh.py::test_update_all_runs_embeddings_side",
     "test_changelog_refresh.py::test_append_only_ingest_changelog_end_to_end",
     "test_changelog_refresh.py::test_changelog_against_wrong_old_snapshot_is_caught",

@@ -49,7 +49,7 @@ def _rows_digest(df) -> tuple:
 
 
 def _clear(spark) -> None:
-    SS.clear(spark, *A.ARTIFACT_SESSION_KINDS)
+    SS.clear(spark, *(k for k, v in SS.KINDS.items() if v.cls == SS.ARTIFACT))
 
 
 @pytest.fixture(scope="module")

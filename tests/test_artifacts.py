@@ -760,37 +760,116 @@ def test_cc_patch_equals_full_in_fresh_session(spark, tmp_path):
                    "old_side": "doc_digests", "labels_equal_full": True}
 
 
-def test_pairs_refresh_clears_only_entries_read_from_its_artifacts(
-        spark, tmp_path):
-    """The pairs updater drops only this session's entries loaded from the
-    artifacts it rewrites: another corpus's persisted pair graph (the one
-    the registered pairs and clusters sections read) survives as the same
-    object, still persisted, while the entry ``load`` installed from the
-    rewritten dir falls."""
+def _kept_entry(spark, kind):
+    """A fresh entry of ``kind`` built from another corpus (``SF_DIR``)."""
+    from pyspark_coding_challenge_spark.llm import dedup as D
+    from pyspark_coding_challenge_spark.llm import similarity as S
+    from pyspark_coding_challenge_spark.llm import text as T
+
+    return {"verified_pairs": D.verified_pairs_for_dir,
+            "token_spine": T.shared_token_spine_for_dir,
+            "ivf_centroids": S.ivf_centroids_for_dir}[kind](spark, SF_DIR)
+
+
+# writer -> (the artifacts it starts from, the artifact ``load`` installs
+# an entry from, the write); the loaded artifact's name is its session kind
+_WRITERS = {
+    "pairs": (A.PAIRS_STATE, A.PAIRS_NAME,
+              lambda spark, old, new, art:
+              A.update_pairs_incremental(spark, old, new, art)),
+    "text": (A.TEXT_STATE, A.SPINE_NAME,
+             lambda spark, old, new, art:
+             A.update_text_incremental(spark, old, new, art)),
+    "embeddings": (A.EMB_STATE, A.CENTROIDS_NAME,
+                   lambda spark, old, new, art:
+                   A.update_centroids_incremental(spark, old, new, art,
+                                                  max_churn_frac=1.0)),
+    "compaction": (A.PAIRS_STATE, A.PAIRS_NAME,
+                   lambda spark, old, new, art:
+                   A.compact_artifacts(spark, art, max_files=0)),
+}
+
+
+@pytest.mark.parametrize("writer", sorted(_WRITERS))
+def test_writer_clears_only_entries_read_from_its_artifacts(
+        spark, tmp_path, writer):
+    """Every writer of artifact bytes drops only this session's entries
+    loaded from the artifacts it rewrites: another corpus's persisted
+    entry of the same kind (the one the registered sections read)
+    survives as the same object, while the entry ``load`` installed from
+    the rewritten dir falls. The shard breaks derive from the spine, so
+    they fall only when a refresh dropped a spine entry."""
     from pyspark import StorageLevel
+    from pyspark.sql import DataFrame
 
     from pyspark_coding_challenge_spark import session_state as SS
-    from pyspark_coding_challenge_spark.llm import dedup as D
+    from pyspark_coding_challenge_spark.llm.similarity import (
+        emb_snapshot_versions,
+    )
 
+    names, name, write = _WRITERS[writer]
     old_dir, new_dir = _write_versions(spark, tmp_path)
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    for snap, d in zip(emb_snapshot_versions(emb), (old_dir, new_dir)):
+        snap.write.mode("overwrite").parquet(f"{d}/embeddings.parquet")
     art = str(tmp_path / "art")
-    digest = A.corpus_digest(spark, old_dir)
-    for name in (A.PAIRS_NAME, A.BANDS_NAME, A.CC_NAME, A.DIGESTS_NAME):
-        A.materialize(spark, old_dir, art, name, digest)
-    D.clear_pair_cache(spark)
-    kept = D.verified_pairs_for_dir(spark, SF_DIR)
+    A.materialize_all(spark, old_dir, art, names)
+    SS.clear(spark, name)
+    kept = _kept_entry(spark, name)
     kept.count()
-    A.load(spark, old_dir, art, A.PAIRS_NAME)
-    assert SS.loaded_from("verified_pairs", spark, old_dir) == \
-        os.path.join(art, A.PAIRS_NAME)
-    loaded = ("verified_pairs", spark.sparkContext.applicationId, old_dir)
+    A.load(spark, old_dir, art, name)
+    assert SS.loaded_from(name, spark, old_dir) == os.path.join(art, name)
+    loaded = (name, spark.sparkContext.applicationId, old_dir)
+    breaks = (("clear-rule probe",), "doc_id", 2)
+    SS.install("breaks", spark, breaks, "breaks")
 
-    summary = A.update_pairs_incremental(spark, old_dir, new_dir, art)
-    assert summary["mode"] == "incremental"
-    assert D.verified_pairs_for_dir(spark, SF_DIR) is kept
-    assert kept.storageLevel != StorageLevel.NONE
+    write(spark, old_dir, new_dir, art)
+    assert _kept_entry(spark, name) is kept
+    if isinstance(kept, DataFrame) and name != A.CENTROIDS_NAME:
+        assert kept.storageLevel != StorageLevel.NONE
     assert loaded not in SS._ENTRIES
-    D.clear_pair_cache(spark)
+    breaks_kept = SS.get_or_build("breaks", spark, breaks, lambda: None)
+    assert (breaks_kept is None) == (writer == "text")
+    SS.clear(spark, name, "breaks")
+
+
+def test_fold_verdict_never_outlives_the_index_it_judged(spark):
+    """A fold verdict is keyed by the stored fold it judged: when the
+    entry it judged falls to a precise clear and an index of another fold
+    is installed for the same corpus, the search quantizer is judged
+    anew instead of pairing with the new index on the old verdict."""
+    from pyspark_coding_challenge_spark import session_state as SS
+    from pyspark_coding_challenge_spark.llm import similarity as S
+
+    sf = "/fold-verdict/corpus"
+    rows = spark.createDataFrame([(0, 1)], "vec_id long, lid int")
+    cent = spark.createDataFrame([(0, [1.0, 0.0]), (1, [0.0, 1.0])],
+                                 "lid int, cvec array<double>")
+    cb = spark.createDataFrame([(0, 0, [1.0])],
+                               "sub int, lid int, cvec array<double>")
+    try:
+        SS.install("ivf_assignments", spark, sf,
+                   (rows, A._content_fold(cent, "lid")),
+                   loaded_from="/fold-verdict/a/ivf_assignments")
+        SS.install("pq_codes", spark, sf,
+                   (rows, A._content_fold(cb, "sub", "lid"), 1),
+                   loaded_from="/fold-verdict/a/pq_codes")
+        assert S.ivf_assignments_for_dir(spark, sf, cent) is rows
+        assert S.pq_codes_with_cohort_for_dir(spark, sf, cb) == (rows, 1)
+        assert sorted(SS.clear_loaded_under(spark, "/fold-verdict/a")) == \
+            ["ivf_assignments", "pq_codes"]
+        SS.install("ivf_assignments", spark, sf, (rows, "fold B"),
+                   loaded_from="/fold-verdict/b/ivf_assignments")
+        SS.install("pq_codes", spark, sf, (rows, "fold B", 1),
+                   loaded_from="/fold-verdict/b/pq_codes")
+        with pytest.warns(UserWarning, match="different quantizer"):
+            assert S.ivf_assignments_for_dir(spark, sf, cent) is None
+        with pytest.warns(UserWarning, match="different codebooks"):
+            assert S.pq_codes_with_cohort_for_dir(spark, sf, cb) == \
+                (None, None)
+    finally:
+        SS.clear_loaded_under(spark, "/fold-verdict")
+        SS.clear(spark, "assign_fold_verdicts", "pq_fold_verdicts")
 
 
 # ---------------------------------------------------------------------------

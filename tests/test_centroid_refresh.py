@@ -499,10 +499,8 @@ def test_text_incr_section_survives_strict_churn_knob(spark, monkeypatch):
     from pyspark_coding_challenge_spark.llm import text as T
 
     monkeypatch.setattr(A, "INCR_MAX_CHURN_FRAC", 0.01)
-    T.clear_text_incr_state(spark)
     df = T.text_incremental_refresh(spark, "/root/testdata/sf0.001")
     assert df.count() > 0
-    T.clear_text_incr_state(spark)
 
 
 def test_vec_digest_null_embedding(spark):
@@ -611,12 +609,13 @@ def test_stored_section_equals_inline_search(spark):
     from pyspark.sql import functions as F
 
     sf = "/root/testdata/sf0.001"
-    S.clear_stored_ivf_state(spark)
     S.clear_centroid_cache(spark)
-    stored = S.embedding_ann_ivf_stored(spark, sf)
+    # one refresh serves both sides: the next would rewrite the slot
+    state = S._stored_ivf_state(spark, sf)
+    stored = S._stored_index_search(state)
     assert stored.columns[-2:] == ["quantizer_mode", "index_mode"]
     core = stored.select("query_id", "neighbor_id", "rank", "sim")
-    e_new, cent, *_ = S._stored_ivf_state(spark, sf)
+    e_new, cent, *_ = state
     inline = S.ivf_search(e_new, cent, assignments=None).select(
         "query_id", "neighbor_id", "rank", "sim")
     assert core.exceptAll(inline).count() == 0
@@ -632,7 +631,6 @@ def test_stored_section_raises_on_degrade(spark, monkeypatch):
     artifact-served path, not value-equality by accident."""
     import pyspark_coding_challenge_spark.llm.artifacts as A_mod
 
-    S.clear_stored_ivf_state(spark)
     real = A_mod.update_centroids_incremental
 
     def degraded(*a, **k):
@@ -643,15 +641,52 @@ def test_stored_section_raises_on_degrade(spark, monkeypatch):
     monkeypatch.setattr(A_mod, "update_centroids_incremental", degraded)
     with pytest.raises(RuntimeError, match="degraded"):
         S._stored_ivf_state(spark, "/root/testdata/sf0.001")
-    S.clear_stored_ivf_state(spark)
 
 
-def test_stored_state_cached_per_session(spark):
-    """One expensive double-snapshot build per (session, corpus): the
-    second call returns the same handles without rebuilding."""
+def _counting(monkeypatch, name):
+    """Patch updater ``name`` to count its calls; returns the count list."""
+    real, calls = getattr(A, name), []
+    monkeypatch.setattr(A, name, lambda *a, **k: calls.append(1) or real(*a, **k))
+    return calls
+
+
+def test_ivf_stored_sections_refresh_on_every_call(spark, monkeypatch):
+    """No session entry holds the refresh's result: every
+    ``embedding_ann_ivf`` call runs the embeddings updater once, shared by
+    both stored sections, and the refresh's precise clears leave the base
+    section's session quantizer for the corpus as it was."""
+    from pyspark_coding_challenge_spark import session_state as SS
+
     sf = "/root/testdata/sf0.001"
-    S.clear_stored_ivf_state(spark)
-    a = S._stored_ivf_state(spark, sf)
-    b = S._stored_ivf_state(spark, sf)
-    assert a is b
-    assert S.clear_stored_ivf_state(spark) == 1
+    calls = _counting(monkeypatch, "update_centroids_incremental")
+    S.embedding_ann_ivf_slug(spark, sf)
+    assert len(calls) == 1
+    cent = SS.get_or_build("ivf_centroids", spark, sf, lambda: None)
+    assert cent is not None
+    out = S.embedding_ann_ivf_slug(spark, sf)
+    assert len(calls) == 2
+    assert SS.get_or_build("ivf_centroids", spark, sf, lambda: None) is cent
+    assert out.filter("section = 'stored_pq'").count() > 0
+
+
+def test_text_incremental_section_refreshes_on_every_call(spark,
+                                                          monkeypatch):
+    """The text twin: every ``text_analysis`` call runs the text updater
+    once, and the sibling sections' spine and signals entries for the
+    corpus survive its precise clears."""
+    from pyspark_coding_challenge_spark import registry
+    from pyspark_coding_challenge_spark import session_state as SS
+
+    sf = "/root/testdata/sf0.001"
+    calls = _counting(monkeypatch, "update_text_incremental")
+    slug = registry.queries()["text_analysis"]
+    slug(spark, sf)
+    assert len(calls) == 1
+    kept = {kind: SS.get_or_build(kind, spark, sf, lambda: None)
+            for kind in ("token_spine", "doc_signals")}
+    assert None not in kept.values()
+    out = slug(spark, sf)
+    assert len(calls) == 2
+    for kind, value in kept.items():
+        assert SS.get_or_build(kind, spark, sf, lambda: None) is value, kind
+    assert out.count() > 0

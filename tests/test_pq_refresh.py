@@ -394,13 +394,14 @@ def test_stored_pq_section_equals_inline_search(spark):
     same derived new snapshot — the Spark-side half of the driver's
     cross-engine hash gate — with the four mode literals pinned."""
     sf = "/root/testdata/sf0.001"
-    S.clear_stored_ivf_state(spark)
     S.clear_centroid_cache(spark)
-    stored = S.embedding_ann_pq_stored(spark, sf)
+    # one refresh serves both sides: the next would rewrite the slot
+    state = S._stored_ivf_state(spark, sf)
+    stored = S._stored_pq_search(state)
     assert stored.columns[-4:] == [
         "quantizer_mode", "index_mode", "pq_codebooks_mode", "pq_codes_mode"]
     core = stored.select("query_id", "neighbor_id", "rank", "sim", "adc")
-    e_new, cent, _, cb, _ = S._stored_ivf_state(spark, sf)
+    e_new, cent, _, cb, _ = state
     inline = S.pq_adc_search(e_new, cent, cb).select(
         "query_id", "neighbor_id", "rank", "sim", "adc")
     assert core.exceptAll(inline).count() == 0
@@ -418,7 +419,6 @@ def test_stored_pq_raises_on_degrade(spark, monkeypatch):
     artifact-served path, not value-equality by accident."""
     import pyspark_coding_challenge_spark.llm.artifacts as A_mod
 
-    S.clear_stored_ivf_state(spark)
     real = A_mod.update_centroids_incremental
 
     def degraded(*a, **k):
@@ -429,7 +429,6 @@ def test_stored_pq_raises_on_degrade(spark, monkeypatch):
     monkeypatch.setattr(A_mod, "update_centroids_incremental", degraded)
     with pytest.raises(RuntimeError, match="degraded"):
         S._stored_ivf_state(spark, "/root/testdata/sf0.001")
-    S.clear_stored_ivf_state(spark)
 
 
 def test_update_all_refreshes_pq_side(spark, tmp_path):

@@ -28,7 +28,9 @@ PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
 # stored state the dedup incremental sections used to cache in memory; the
 # fold verdicts memoize the pairing metadata of the assignments/codes rows;
 # the scratch root, first the text state's build-root cell, belongs to the
-# artifact builds it serves.
+# artifact builds it serves. The audit's text and IVF stored-section rows
+# (``text._TEXT_INCR_STATE_CACHE``, ``similarity._STORED_IVF_CACHE``) are
+# gone: those sections refresh on every call.
 AUDIT_R17 = {
     "verified_pairs": ("dedup._VERIFIED_PAIRS_CACHE", "declared artifact"),
     "banded_index": ("dedup._BANDED_INDEX_CACHE", "declared artifact"),
@@ -37,7 +39,6 @@ AUDIT_R17 = {
     "doc_signals": ("text._DOC_SIGNALS_CACHE", "declared artifact"),
     "token_spine": ("text._TOKEN_SPINE_CACHE", "declared artifact"),
     "shared_spans": ("text._SHARED_SPANS_CACHE", "declared artifact"),
-    "text_incr_state": ("text._TEXT_INCR_STATE_CACHE", "artifact build"),
     "scratch_root": ("text._TEXT_INCR_PARENT", "artifact build"),
     "ivf_centroids": ("similarity._IVF_CENTROID_CACHE", "declared artifacts"),
     "ivf_assignments": ("similarity._IVF_ASSIGN_CACHE", "declared artifacts"),
@@ -45,8 +46,6 @@ AUDIT_R17 = {
     "pq_codes": ("similarity._PQ_CODES_CACHE", "declared artifacts"),
     "assign_fold_verdicts": ("similarity._ASSIGN_FOLD_VERDICTS", "metadata"),
     "pq_fold_verdicts": ("similarity._PQ_FOLD_VERDICTS", "metadata"),
-    "stored_ivf_state": ("similarity._STORED_IVF_CACHE",
-                         "declared stored-artifact section"),
     "ingest_refresh_state": ("ingest._IRS_CACHE", "artifact build"),
     "doc_schema": ("ingest._DOC_SCHEMA_CACHE", "metadata"),
     "event_schema": ("windows._EVENT_SCHEMA_CACHE", "metadata"),
@@ -57,7 +56,6 @@ CLASS_OF = {
     "declared artifact": SS.ARTIFACT,
     "declared artifacts": SS.ARTIFACT,
     "artifact build": SS.STORED,
-    "declared stored-artifact section": SS.STORED,
     "stored state": SS.STORED,
     "statistics": SS.STATISTIC,
     "statistics, perf-only": SS.STATISTIC,
@@ -68,6 +66,14 @@ CLASS_OF = {
 # previous call. Removing it is its own change (it moves the benchmark's
 # corpus_refresh pass_cpu_s).
 QUERY_OUTPUT_KINDS = {"topk"}
+# Post-refresh state is not STORED: a STORED entry holds what a refresh
+# starts from (the landed prior snapshot) or where the engine writes, never
+# what a calling query's own refresh produced. The single named exemption:
+# `ingest_refresh_state` holds the streaming_windowed_aggs section's
+# ingest -> refresh -> serve result, because rebuilding it runs two ingest
+# streams and a refresh per call.
+STORED_KINDS = {"refresh_prior", "scratch_root"}
+POST_REFRESH_KINDS = {"ingest_refresh_state"}
 
 # Module-level containers that are NOT session-state kinds, each with why.
 EXEMPT = {
@@ -145,6 +151,11 @@ def test_kind_classes_match_the_r17_audit():
         assert SS.KINDS[kind].cls == SS.QUERY_OUTPUT
 
 
+def test_post_refresh_state_is_not_stored():
+    stored = {k for k, v in SS.KINDS.items() if v.cls == SS.STORED}
+    assert stored == STORED_KINDS | POST_REFRESH_KINDS
+
+
 def test_every_kind_is_used_by_the_package():
     """No dead declarations: each kind name appears as a string literal in
     some package module besides session_state.py."""
@@ -184,8 +195,8 @@ def test_clear_mid_build_installs_no_pre_clear_entry(kind):
 
 
 def test_clearing_another_kind_mid_build_keeps_the_build(test_kind):
-    """Epochs are per (app, kind): the stored-state builds clear sibling
-    kinds of their own session mid-build and must not discard themselves."""
+    """Epochs are per (app, kind): a clear of another kind mid-build must
+    not discard the build."""
     kind, released = test_kind
     sp = _session("sibling-clear")
     calls = []
@@ -363,7 +374,7 @@ def test_clear_loaded_under_drops_only_entries_read_from_those_paths(
         calls.append(1)
         SS.record_seed(kind, sp, "seeding", "/art/x/bands")
         if len(calls) == 1:
-            assert SS.clear_loaded_under(sp, "/art/x") == 1
+            assert SS.clear_loaded_under(sp, "/art/x") == [kind]
         return len(calls)
 
     assert SS.get_or_build(kind, sp, "seeding", build) == 2
@@ -372,6 +383,17 @@ def test_clear_loaded_under_drops_only_entries_read_from_those_paths(
     for key, value in (("sibling", "kept"), ("built", "built"),
                        ("seeding", 2)):
         assert SS.get_or_build(kind, sp, key, lambda: "rebuilt") == value
+
+
+def test_clear_keyed_drops_every_kind_under_one_key(test_kind):
+    kind, released = test_kind
+    sp, other = _session("clear-keyed"), _session("clear-keyed-other")
+    SS.install(kind, sp, "/corpus", "stale", loaded_from="/art/x")
+    SS.install(kind, sp, "/elsewhere", "kept")
+    SS.install(kind, other, "/corpus", "other session")
+    assert SS.clear_keyed(sp, "/corpus") == 1 and released == ["stale"]
+    assert SS.get_or_build(kind, sp, "/elsewhere", lambda: "x") == "kept"
+    SS.clear(None, kind)
 
 
 def test_undeclared_kind_fails_loudly():
