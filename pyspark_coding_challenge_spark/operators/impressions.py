@@ -15,19 +15,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def explode_impressions(impressions: DataFrame, keep_empty: bool = True) -> DataFrame:
+def explode_impressions(impressions: DataFrame) -> DataFrame:
     """Explode ``impressions array<struct<item_id,is_order>>`` positionally.
 
-    ``keep_empty=True`` preserves ranking rows with NULL/empty arrays
-    (``posexplode_outer``), matching the reference's defensive choice at
-    ``src/pipeline.py:85,89``.
+    ``posexplode_outer`` preserves ranking rows with NULL/empty arrays,
+    matching the reference's defensive choice at ``src/pipeline.py:85,89``.
     """
-    exploder = F.posexplode_outer if keep_empty else F.posexplode
     return impressions.select(
         F.col("dt").cast("string").alias("dt"),
         F.col("ranking_id").cast("string").alias("ranking_id"),
         F.col("customer_id").cast("bigint").alias("customer_id"),
-        exploder("impressions").alias("impression_pos", "imp"),
+        F.posexplode_outer("impressions").alias("impression_pos", "imp"),
     ).select(
         "dt",
         "ranking_id",

@@ -54,7 +54,6 @@ def produce_training_examples(
     add_to_carts: DataFrame,
     orders: DataFrame,
     max_history: int = DEFAULT_MAX_HISTORY,
-    repartition_count: int | None = None,
     persist_actions: bool = False,
     lookback_days: int | None = None,
 ) -> DataFrame:
@@ -62,12 +61,12 @@ def produce_training_examples(
     actions strictly before the impression day (no same-day leakage —
     README.md:31).
 
-    ``repartition_count`` is an optional knob mirroring the reference's
-    hard-coded 200 (``src/pipeline.py:153-156``); default None lets AQE size
-    the shuffles. ``persist_actions`` implements the reference's documented
-    reuse-persistence hint (``README.md:64``, SURVEY §2.9 persist_hint) as
-    an eager ``localCheckpoint``: the normalized action table materializes
-    once and serves every consumer in the returned plan, and the
+    AQE sizes the shuffles: the reference's hard-coded 200-way repartition
+    is not reproduced (``operators/history.py``). ``persist_actions``
+    implements the reference's documented reuse-persistence hint
+    (``README.md:64``, SURVEY §2.9 persist_hint) as an eager
+    ``localCheckpoint``: the normalized action table materializes once and
+    serves every consumer in the returned plan, and the
     ContextCleaner reclaims it when the result is dropped — a bare
     ``persist`` here would leak one cached copy per call (nothing in this
     function can unpersist after the caller's lazy execution).
@@ -81,8 +80,6 @@ def produce_training_examples(
     explicit larger ``lookback_days`` to widen the horizon, or a negative
     one to force the exact unbounded path at its documented cost."""
     actions = normalize_actions(clicks, add_to_carts, orders)
-    if repartition_count:
-        actions = actions.repartition(repartition_count, "customer_id")
     if persist_actions:
         actions = actions.localCheckpoint()
 

@@ -29,7 +29,7 @@ from pyspark_coding_challenge_spark import session_state
 # a set of compiled classes. Spark's default of 100 entries is smaller than
 # one warm pass over the engine's queries, so the LRU evicted each class
 # before its next use and every warm query compiled again. Classes compiled
-# in the cold pass, then in each warm pass (scripts/codegen_probe.py, which
+# in the cold pass, then in each warm pass (scripts/layer_probe.py, which
 # reads CodegenMetrics; 4-vCPU host), at the default cap -> with this cap
 # and the stage-id-free class names set in get_spark:
 #   - all 50 registered slugs at sf0.01: 3,015 then ~1,870 -> 1,656 then
@@ -52,8 +52,9 @@ CODEGEN_CACHE_MAX_ENTRIES = 4096
 # long[] per task however few rows it holds, and the driver keeps each live
 # broadcast relation as built, whole page included, for as long as a
 # session-cached plan holds it. The benchmark's corpus_refresh after its
-# cold pass, 2 warm passes and the GC loop (scripts/heap_probe.py, seed 1,
-# 4-vCPU host), by page size -> driver block store, retained heap:
+# cold pass, 2 warm passes and the GC loop (the block-store and heap
+# readings of scripts/layer_probe.py, seed 1, 4-vCPU host), by page size
+# -> driver block store, retained heap:
 #   - Spark's 64 MB: 67.0 MB (66.0 MB broadcast relations, one of them
 #     64.1 MB as built against 0.09 MB serialized), 156.9 MB;
 #   - 8 MB: 11.0, 103.8; 4 MB: 7.0, 99.8; 2 MB: 5.0, 96.2; 1 MB: 4.0, 92.8.

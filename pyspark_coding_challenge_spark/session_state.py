@@ -92,7 +92,6 @@ KINDS: dict[str, Kind] = {
     # updater starts from (its dirs; the bytes live in the scratch root)
     "refresh_prior": Kind(STORED),
     # streaming, operators, curation
-    "ingest_refresh_state": Kind(STORED),
     "doc_schema": Kind(METADATA),
     "event_schema": Kind(METADATA),
     "breaks": Kind(STATISTIC),

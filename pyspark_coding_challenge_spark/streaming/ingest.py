@@ -401,17 +401,6 @@ def compact_ingest_sink(spark: SparkSession, dest_dir: str,
 # (r14 judge item #8)
 # ---------------------------------------------------------------------------
 
-def _ingest_refresh_serve_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Build the loop once per (session, corpus) — see
-    ``streaming_ingest_refresh_serve`` for the contract. Cached because the
-    bench's best-of-2 and the oracle run would otherwise re-run two ingest
-    streams and a refresh per invocation: the one refreshed section whose
-    refresh result a session entry still holds."""
-    return session_state.get_or_build(
-        "ingest_refresh_state", spark, sf_dir,
-        lambda: _build_ingest_refresh_serve(spark, sf_dir))
-
-
 def _build_ingest_refresh_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark_coding_challenge_spark.llm import artifacts as A
     from pyspark_coding_challenge_spark.sources.readers import read_table
@@ -421,9 +410,9 @@ def _build_ingest_refresh_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents")
     is_old = F.pmod(F.xxhash64(F.col("doc_id").cast("string")),
                     F.lit(10)) < 6
-    # a slot per CORPUS: the cached served relations read these parquets
-    # lazily, and a second corpus's build (same session, different
-    # sf_dir) must not wipe the files under the first one's cache entry
+    # a slot per CORPUS: the served relation reads these parquets lazily,
+    # and a second corpus's call (same session, different sf_dir) must not
+    # wipe the files under the first one's result
     root = scratch_dir(f"ingest_refresh_serve:{sf_dir}")
     dest, src = os.path.join(root, "dest"), os.path.join(root, "src")
     src_docs = os.path.join(src, DOCS_LEAF)
@@ -498,8 +487,9 @@ def streaming_ingest_refresh_serve(spark: SparkSession,
     ingest + changelog + patch == a from-scratch build; the ``*_mode``
     literals pin that the changelog was ACCEPTED and every artifact
     PATCHED (the builder raises on any degrade, so the gate cannot be
-    satisfied by a fallback path)."""
-    return _ingest_refresh_serve_state(spark, sf_dir)
+    satisfied by a fallback path). Every call runs the whole loop: no
+    session entry holds its refresh's result."""
+    return _build_ingest_refresh_serve(spark, sf_dir)
 
 
 def _ingest_refresh_serve_oracle() -> str:

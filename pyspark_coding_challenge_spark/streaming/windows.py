@@ -35,7 +35,7 @@ manager. The engine's checkpoints are local directories it creates itself,
 so they rename through Hadoop ``FileSystem`` (one ``rename(2)``) instead of
 ``FileContext``, whose link stats fork a ``readlink`` per file on a Hadoop
 without its native library; the ``chmod`` fork per created file remains
-(``scripts/spawn_probe.py`` counts both).
+(``scripts/layer_probe.py`` counts both).
 """
 
 from __future__ import annotations

@@ -92,6 +92,7 @@ SLOW_TESTS = (
     "test_registry_oracles.py::test_slug_matches_oracle[dedup_clusters]",
     "test_registry_oracles.py::test_slug_matches_oracle[embedding_ann_ivf]",
     "test_span_patch.py::test_second_refresh_chains_on_patched_state",
+    "test_streaming_ingest.py::test_ingest_refresh_serve_refreshes_on_every_call",
     "test_streaming_ingest.py::test_ingested_digests_feed_the_supplied_refresh",
     "test_supplied_digests.py::test_missing_columns_rejected",
     "test_supplied_digests.py::test_supplied_digests_skip_the_hash_scan",

@@ -216,3 +216,56 @@ def test_build_artifacts_rejects_unknown_names_before_spark(monkeypatch,
     err = capsys.readouterr().err
     assert "no_such_artifact" in err
     assert str(list(A.ARTIFACTS)) in err
+
+
+def _layer_probe():
+    spec = importlib.util.spec_from_file_location(
+        "layer_probe", os.path.join(REPO, "scripts", "layer_probe.py"))
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_layer_probe_census_of_a_fixed_plan():
+    """``scripts/layer_probe.py``'s plan census counts each ``COUNTED``
+    node kind in a physical plan string and leaves zero counts out."""
+    plan = """AdaptiveSparkPlan isFinalPlan=false
++- Project [k#1, n#2]
+   +- BroadcastHashJoin [k#1], [k#3], Inner, BuildRight, false
+      :- HashAggregate(keys=[k#1], functions=[count(1)])
+      :  +- Exchange hashpartitioning(k#1, 4), ENSURE_REQUIREMENTS, [plan_id=7]
+      :     +- HashAggregate(keys=[k#1], functions=[partial_count(1)])
+      :        +- Window [row_number() windowspecdefinition(k#1)]
+      :           +- FileScan parquet [k#1] Batched: true, Location: InMemoryFileIndex
+      +- BroadcastExchange HashedRelationBroadcastMode(List(input[0, bigint, false]))
+         +- InMemoryTableScan [k#3]
+               +- Scan ExistingRDD[k#3]
+"""
+    assert _layer_probe().census(plan) == {
+        "parquet_scans": 1, "rdd_scans": 1, "shuffle_exchanges": 1, "broadcast_exchanges": 1,
+        "broadcast_hash_joins": 1, "hash_aggregates": 2, "windows": 1,
+        "in_memory_scans": 1}
+
+
+def test_layer_probe_registry_needs_sf_dir_before_any_session(monkeypatch,
+                                                              capsys):
+    """``--workload registry`` without ``--sf-dir`` exits 2 through argparse
+    before the probe writes its shims or starts Spark."""
+    from pyspark_coding_challenge_spark import session
+
+    def no_spark(*a, **k):
+        raise AssertionError("get_spark called")
+
+    monkeypatch.setattr(session, "get_spark", no_spark)
+    monkeypatch.setattr(sys, "path", list(sys.path))
+    monkeypatch.setattr(sys, "argv", ["layer_probe.py", "--workload", "registry"])
+    probe, path, loaded = _layer_probe(), os.environ.get("PATH"), set(sys.modules)
+    try:
+        with pytest.raises(SystemExit) as exc:
+            probe.main()
+    finally:
+        for name in set(sys.modules) - loaded:
+            del sys.modules[name]
+    assert exc.value.code == 2
+    assert "--sf-dir" in capsys.readouterr().err
+    assert os.environ.get("PATH") == path

@@ -28,9 +28,9 @@ PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
 # stored state the dedup incremental sections used to cache in memory; the
 # fold verdicts memoize the pairing metadata of the assignments/codes rows;
 # the scratch root, first the text state's build-root cell, belongs to the
-# artifact builds it serves. The audit's text and IVF stored-section rows
-# (``text._TEXT_INCR_STATE_CACHE``, ``similarity._STORED_IVF_CACHE``) are
-# gone: those sections refresh on every call.
+# artifact builds it serves. The audit's text, IVF and ingest stored-section
+# rows (``text._TEXT_INCR_STATE_CACHE``, ``similarity._STORED_IVF_CACHE``,
+# ``ingest._IRS_CACHE``) are gone: those sections refresh on every call.
 AUDIT_R17 = {
     "verified_pairs": ("dedup._VERIFIED_PAIRS_CACHE", "declared artifact"),
     "banded_index": ("dedup._BANDED_INDEX_CACHE", "declared artifact"),
@@ -46,7 +46,6 @@ AUDIT_R17 = {
     "pq_codes": ("similarity._PQ_CODES_CACHE", "declared artifacts"),
     "assign_fold_verdicts": ("similarity._ASSIGN_FOLD_VERDICTS", "metadata"),
     "pq_fold_verdicts": ("similarity._PQ_FOLD_VERDICTS", "metadata"),
-    "ingest_refresh_state": ("ingest._IRS_CACHE", "artifact build"),
     "doc_schema": ("ingest._DOC_SCHEMA_CACHE", "metadata"),
     "event_schema": ("windows._EVENT_SCHEMA_CACHE", "metadata"),
     "breaks": ("prefix._BREAKS_CACHE", "statistics, perf-only"),
@@ -68,12 +67,8 @@ CLASS_OF = {
 QUERY_OUTPUT_KINDS = {"topk"}
 # Post-refresh state is not STORED: a STORED entry holds what a refresh
 # starts from (the landed prior snapshot) or where the engine writes, never
-# what a calling query's own refresh produced. The single named exemption:
-# `ingest_refresh_state` holds the streaming_windowed_aggs section's
-# ingest -> refresh -> serve result, because rebuilding it runs two ingest
-# streams and a refresh per call.
+# what a calling query's own refresh produced.
 STORED_KINDS = {"refresh_prior", "scratch_root"}
-POST_REFRESH_KINDS = {"ingest_refresh_state"}
 
 # Module-level containers that are NOT session-state kinds, each with why.
 EXEMPT = {
@@ -153,7 +148,7 @@ def test_kind_classes_match_the_r17_audit():
 
 def test_post_refresh_state_is_not_stored():
     stored = {k for k, v in SS.KINDS.items() if v.cls == SS.STORED}
-    assert stored == STORED_KINDS | POST_REFRESH_KINDS
+    assert stored == STORED_KINDS
 
 
 def test_every_kind_is_used_by_the_package():

@@ -392,7 +392,7 @@ def test_warm_stream_forks_no_readlink(tmp_path):
     from tests.test_session import REPO, SF_DIR
 
     spec = importlib.util.spec_from_file_location(
-        "spawn_probe", os.path.join(REPO, "scripts", "spawn_probe.py"))
+        "layer_probe", os.path.join(REPO, "scripts", "layer_probe.py"))
     probe = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(probe)
     log = str(tmp_path / "spawns.log")

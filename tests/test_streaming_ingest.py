@@ -25,6 +25,7 @@ from pyspark_coding_challenge_spark.llm import artifacts as A
 from pyspark_coding_challenge_spark.llm import dedup as D
 from pyspark_coding_challenge_spark.streaming import ingest as I
 
+from tests.test_artifacts import SF_DIR
 from tests.test_supplied_digests import _corpora, _stored_state, _write_docs
 
 
@@ -262,3 +263,17 @@ def test_marker_collision_caught_at_equal_row_counts(spark, tmp_path):
     docs = spark.read.parquet(os.path.join(dest, I.DOCS_LEAF))
     assert docs.count() == 6
     assert all("same count" in r.text for r in docs.collect())
+
+
+def test_ingest_refresh_serve_refreshes_on_every_call(spark, monkeypatch):
+    """No session entry holds the ``ingest_refresh_serve`` section's
+    result: each call runs the whole ingest -> refresh -> serve loop, so
+    the text updater runs once per call, and two calls serve equal rows."""
+    real, calls = A.update_text_incremental, []
+    monkeypatch.setattr(A, "update_text_incremental",
+                        lambda *a, **k: calls.append(1) or real(*a, **k))
+    first = I.streaming_ingest_refresh_serve(spark, SF_DIR).collect()
+    assert len(calls) == 1
+    second = I.streaming_ingest_refresh_serve(spark, SF_DIR).collect()
+    assert len(calls) == 2
+    assert first and sorted(first) == sorted(second)
