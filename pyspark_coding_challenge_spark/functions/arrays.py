@@ -31,15 +31,17 @@ def sorted_parallel_arrays(
     """From an array of structs whose FIRST field is the sort rank, produce
     one array per requested field, in rank order.
 
-    ``array_sort`` compares structs field-by-ordinal, so the rank must be the
+    ``sort_array`` compares structs field-by-ordinal, so the rank must be the
     first struct field — same trick as the reference
-    (``pyspark-coding-challenge/src/pipeline.py:175-186``).
+    (``pyspark-coding-challenge/src/pipeline.py:175-186``). For an array of
+    non-null structs it orders exactly as ``array_sort`` does, through a
+    generated comparator rather than an interpreted lambda one.
 
     ``presorted=True`` skips the sort for inputs that are already in rank
-    order by construction (the rolling-history paths slice an array_sort'd
-    array — re-sorting K=1000 structs per output row would be a pure-waste
+    order by construction (the per-row history window collects them in
+    order — re-sorting K=1000 structs per output row would be a pure-waste
     O(K log K) pass Catalyst does not eliminate)."""
-    ordered = structs_col if presorted else F.array_sort(structs_col)
+    ordered = structs_col if presorted else F.sort_array(structs_col)
 
     def _getter(name):
         # Unary lambda required: pyspark dispatches on lambda arity and would

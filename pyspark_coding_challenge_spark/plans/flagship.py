@@ -17,10 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pyspark_coding_challenge_spark.operators.history import (
-    attach_history,
-    rolling_last_k_history,
-)
+from pyspark_coding_challenge_spark.operators.history import history_per_row
 from pyspark_coding_challenge_spark.sources.readers import read_table
 
 EVENT_TYPE_CODES = {"click": 1, "error": 2, "purchase": 3, "signup": 4, "view": 5}
@@ -63,34 +60,17 @@ def user_history_features(
         F.to_date("ts").alias("d"),
     )
 
-    # No .distinct() here: rolling_last_k_history re-derives the date and
-    # applies its own distinct on the day-granular keys — a caller-side
-    # distinct would add a second back-to-back exchange+aggregate over the
-    # same (user, day) set that Catalyst cannot collapse through the cast.
-    cutoffs = ev.select(
-        "user_id", F.col("d").cast("timestamp").alias("cutoff_ts")
-    )
-
-    # Rolling per-day pre-aggregation (each action shuffled once) — the
-    # cutoffs are day-granular midnights, exactly the rolling contract.
-    hist = rolling_last_k_history(
+    # Each event is its own cutoff row in the history window: no per-day
+    # aggregate and no join back.
+    out = history_per_row(
         acts,
-        cutoffs,
+        ev,
         k=k,
         entity_col="user_id",
         time_col="action_time",
-        cutoff_col="cutoff_ts",
+        cutoff_col="d",
         payload_cols=("item_id", "action_type"),
         out_cols=("actions", "action_types"),
-    ).withColumn("d", F.to_date("cutoff_ts")).drop("cutoff_ts")
-
-    out = attach_history(
-        ev,
-        hist,
-        k=k,
-        join_cols=("user_id", "d"),
-        out_cols=("actions", "action_types"),
-        out_types=("array<bigint>", "array<int>"),
     )
     return out.select(
         F.col("event_id").cast("bigint"),

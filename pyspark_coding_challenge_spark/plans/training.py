@@ -7,20 +7,22 @@ Reference parity: ``pyspark-coding-challenge/src/pipeline.py:118-220``
 §4.4 defect fixes:
 
 1. pad/truncate uses the real ``concat`` builtin (ref writes ``array_concat``);
-2. the no-leakage predicate is part of the join condition, preserving true
-   left-join semantics (zero-history impressions emit all-zero arrays);
+2. the no-leakage cut is part of the history window, not a filter after
+   it, preserving true left-join semantics (zero-history impressions emit
+   all-zero arrays);
 3. deterministic tie-breaks on equal timestamps;
 4. no fragile string surrogate key — the window/group key is the natural
-   composite key, and at scale the history is computed per (customer, dt)
-   rather than per impression row;
+   composite key, and each ranking takes its history from one window over
+   the actions and the ranking rows, with no join;
 5. ``dt`` handled via ``to_date``/timestamp cast, not string concat.
 
 One DELIBERATE divergence from the documented contract at the defaults:
 ``max_history=1000`` auto-selects a 365-day history horizon (see the
-``lookback_days`` parameter doc — the exact unbounded last-K frame is
-O(K^2) per active day at that K). Callers needing the reference's
-unbounded last-K exactly pass ``lookback_days=-1`` and accept the cost;
-below ``ROLLING_AUTO_LOOKBACK_MIN_K`` the contract holds verbatim.
+``lookback_days`` parameter doc). It is a modelling choice with no cost
+reason behind it: the history window copies at most K actions per row
+either way. Callers needing the reference's unbounded last-K exactly pass
+``lookback_days=-1``; below ``ROLLING_AUTO_LOOKBACK_MIN_K`` the contract
+holds verbatim.
 
 Output schema (= ``schemas.TRAINING_EXAMPLE_DDL``)::
 
@@ -39,10 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pyspark_coding_challenge_spark.operators.actions import normalize_actions
-from pyspark_coding_challenge_spark.operators.history import (
-    attach_history,
-    rolling_last_k_history,
-)
+from pyspark_coding_challenge_spark.operators.history import history_per_row
 from pyspark_coding_challenge_spark.operators.impressions import explode_impressions
 
 DEFAULT_MAX_HISTORY = 1000
@@ -74,64 +73,42 @@ def produce_training_examples(
     ``lookback_days`` bounds how far history may reach (it CHANGES semantics:
     actions older than the bound are excluded even when the last
     ``max_history`` would include them). At the default max_history=1000 an
-    unset lookback auto-selects the bounded 365-day path inside
-    ``rolling_last_k_history`` (the unbounded frame is O(K^2) per active
-    day; see ROLLING_AUTO_LOOKBACK_MIN_K in operators/history.py) — pass an
-    explicit larger ``lookback_days`` to widen the horizon, or a negative
-    one to force the exact unbounded path at its documented cost."""
+    unset lookback selects a 365-day horizon (ROLLING_AUTO_LOOKBACK_MIN_K
+    in operators/history.py) — pass an explicit larger ``lookback_days`` to
+    widen it, or a negative one for the exact unbounded last K."""
     actions = normalize_actions(clicks, add_to_carts, orders)
     if persist_actions:
         actions = actions.localCheckpoint()
+    return examples_from_actions(impressions, actions, max_history, lookback_days)
 
-    ex = explode_impressions(impressions)
 
-    # Join history back on the PARSED date, not the original dt string: a
-    # non-canonical but parseable dt like '2025-8-14' would otherwise pass
-    # the cutoff computation yet miss the string equi-join and silently
-    # produce all-pad arrays (VERDICT r1 "What's wrong" #2).
-    ex = ex.withColumn("_dt_date", F.to_date("dt"))
-
-    # History once per (customer, day) — the cutoff is day-granular, so all
-    # impression items of a customer-day share one history array. Derived
-    # from the PRE-explode impressions: one row per ranking instead of one
-    # per item feeds the distinct, and the explode subtree isn't recomputed
-    # in the history branch of the final plan. (A ranking whose impression
-    # array is empty still contributes a cutoff; its history row is dropped
-    # by the left join in attach_history — harmless.)
-    # No .distinct() here (r10 review finding; flagship.py documents the
-    # same rule): rolling_last_k_history re-derives to_date(cutoff) and
-    # applies its own distinct on (entity, day) — a caller-side distinct
-    # on the timestamp adds a second back-to-back exchange+aggregate over
-    # the same key set that Catalyst cannot collapse through the cast.
-    cutoffs = impressions.select(
-        F.col("customer_id").cast("bigint").alias("customer_id"),
-        F.to_date("dt").cast("timestamp").alias("cutoff_ts"),
-    ).filter(F.col("customer_id").isNotNull())
-    # Day-granular cutoffs -> rolling per-day pre-aggregation is lossless
-    # and shuffles each action once (vs O(actions x days) join expansion).
-    hist = (
-        rolling_last_k_history(
-            actions,
-            cutoffs,
-            k=max_history,
-            entity_col="customer_id",
-            time_col="action_time",
-            cutoff_col="cutoff_ts",
-            payload_cols=("item_id", "action_type"),
-            out_cols=("actions", "action_types"),
-            lookback_days=lookback_days,
-        )
-        .withColumn("_dt_date", F.to_date("cutoff_ts"))
-        .drop("cutoff_ts")
-    )
-    result = attach_history(
-        ex,
-        hist,
+def examples_from_actions(
+    impressions: DataFrame,
+    actions: DataFrame,
+    max_history: int = DEFAULT_MAX_HISTORY,
+    lookback_days: int | None = None,
+) -> DataFrame:
+    """``produce_training_examples`` over one action relation already in
+    ``normalize_actions``' schema, for callers that derive it themselves."""
+    # Each ranking row is its own cutoff, and its items share its customer
+    # and day, so the history window runs on the rankings and the explode
+    # copies the arrays onto the items: one cutoff row per ranking, not
+    # one per item (a quarter as many on the test data). The window reads
+    # the PARSED date, so a non-canonical but parseable dt like
+    # '2025-8-14' still gets its history (VERDICT r1 "What's wrong" #2).
+    rankings = impressions.withColumn("customer_id", F.col("customer_id").cast("bigint"))
+    with_history = history_per_row(
+        actions,
+        rankings,
         k=max_history,
-        join_cols=("customer_id", "_dt_date"),
+        entity_col="customer_id",
+        time_col="action_time",
+        cutoff_col="dt",
+        payload_cols=("item_id", "action_type"),
         out_cols=("actions", "action_types"),
-        out_types=("array<bigint>", "array<int>"),
+        lookback_days=lookback_days,
     )
+    result = explode_impressions(with_history, carry=("actions", "action_types"))
     return result.select(
         F.col("dt").cast("string"),
         F.col("ranking_id").cast("string"),

@@ -24,7 +24,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pyspark_coding_challenge_spark.plans.training import produce_training_examples
+from pyspark_coding_challenge_spark.operators.actions import (
+    ACTION_TYPE_ADD_TO_CART,
+    ACTION_TYPE_CLICK,
+    ACTION_TYPE_ORDER,
+)
+from pyspark_coding_challenge_spark.plans.training import examples_from_actions
 from pyspark_coding_challenge_spark.sources.readers import read_table
 
 K = 5
@@ -45,27 +50,23 @@ def _base(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def training_examples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The base join feeds the impressions, the three action streams and,
-    # inside produce_training_examples, the history cutoffs. It is NOT
-    # persisted (r17): the audited session cache of the persisted join
+    # The base join feeds the impressions and one tagged projection that
+    # is all three action streams at once, so the executed plan (sf0.01)
+    # scans lineitem twice and broadcast-joins each scan to orders. It is
+    # NOT persisted (r17): the audited session cache of the persisted join
     # served warm runs from storage built outside the timed region (the
     # bench's untimed warm-up), and the un-persisted plan measured faster
     # anyway (best-of-3 warm: 3.24 s vs 3.85 s persisted, 3.42 s per-call
-    # localCheckpoint). Nothing of the join itself is shared: each
-    # consumer prunes its own columns and pushes its own filter, so the
-    # executed plan (sf0.01) scans lineitem five times and broadcast-joins
-    # each scan to orders. Only the orders broadcast of the cart and order
-    # branches, which read the same orders columns, is a ReusedExchange
-    # (three orders scans); no shuffle exchange is reused. The reference's
-    # reuse-persistence hint (README.md:64) is exercised by
-    # produce_training_examples' persist_actions parameter and the
-    # persist_hint slug; it is not load-bearing here.
+    # localCheckpoint). The reference's reuse-persistence hint
+    # (README.md:64) is exercised by produce_training_examples'
+    # persist_actions parameter and the persist_hint slug; it is not
+    # load-bearing here.
     base = _base(spark, sf_dir)
 
     imps = (
         base.groupBy("o_orderkey", "o_custkey", "o_orderdate")
         .agg(
-            F.array_sort(
+            F.sort_array(
                 F.collect_list(
                     F.struct(
                         F.col("l_linenumber").alias("ln"),
@@ -88,28 +89,28 @@ def training_examples(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    clicks = base.select(
-        F.date_format("l_shipdate", "yyyy-MM-dd").alias("dt"),
-        F.col("o_custkey").alias("customer_id"),
-        F.col("l_partkey").alias("item_id"),
-        F.col("l_shipdate").alias("click_time"),
-    )
-    carts = base.filter(F.col("l_returnflag") == "R").select(
-        F.date_format("l_shipdate", "yyyy-MM-dd").alias("dt"),
-        F.col("o_custkey").alias("customer_id"),
-        F.col("l_partkey").alias("config_id"),
-        F.col("l_linenumber").alias("simple_id"),
-        F.col("l_shipdate").alias("occurred_at"),
-    )
-    order_acts = base.filter(F.col("l_returnflag") == "A").select(
-        F.date_format("l_shipdate", "yyyy-MM-dd").alias("order_date"),
-        F.col("o_custkey").alias("customer_id"),
-        F.col("l_partkey").alias("config_id"),
-        F.col("l_linenumber").alias("simple_id"),
-        F.col("l_shipdate").alias("occurred_at"),
+    # Every lineitem is a click (1); 'R' lines are also carts (2) and 'A'
+    # lines orders (3). The projection has normalize_actions' schema.
+    action_type = F.explode(F.filter(
+        F.array(
+            F.lit(ACTION_TYPE_CLICK),
+            F.when(F.col("l_returnflag") == "R", ACTION_TYPE_ADD_TO_CART),
+            F.when(F.col("l_returnflag") == "A", ACTION_TYPE_ORDER),
+        ),
+        lambda t: t.isNotNull(),
+    ))
+    actions = base.select(
+        F.col("o_custkey").cast("bigint").alias("customer_id"),
+        F.col("l_partkey").cast("bigint").alias("item_id"),
+        F.col("l_shipdate").cast("timestamp").alias("action_time"),
+        action_type.alias("action_type"),
+    ).filter(
+        F.col("customer_id").isNotNull()
+        & F.col("item_id").isNotNull()
+        & F.col("action_time").isNotNull()
     )
 
-    out = produce_training_examples(imps, clicks, carts, order_acts, max_history=K)
+    out = examples_from_actions(imps, actions, max_history=K)
     return out.select(
         "dt",
         "ranking_id",

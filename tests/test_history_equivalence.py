@@ -10,6 +10,8 @@ from datetime import datetime
 from pyspark.sql import functions as F
 
 from pyspark_coding_challenge_spark.operators.history import (
+    attach_history,
+    history_per_row,
     last_k_history,
     rolling_last_k_history,
 )
@@ -194,3 +196,54 @@ def test_null_action_time_dropped_like_join_form(spark):
     joined = last_k_history(acts, cuts, **kw).collect()
     assert 999 not in joined[0].actions
     assert joined[0].actions[:2] == [101, 100]
+
+
+def _per_row_case(seed: int):
+    """Random actions and output rows for a handful of customers: exact
+    timestamp ties with different payloads, actions at exactly midnight,
+    several actions per day, NULL entities, NULL times and NULL payloads
+    among the actions, and rows with a NULL entity, a NULL cutoff date or no prior
+    action (customers 7-8 never act)."""
+    import random
+    from datetime import date, timedelta
+
+    rng = random.Random(seed)
+    base = datetime(2025, 3, 1)
+    actions = []
+    for _ in range(120):
+        cust = rng.choice([1, 2, 3, 4, 5, 6, None])
+        when = base + timedelta(days=rng.randint(0, 9),
+                                seconds=rng.choice([0, 0, 3600, 3600, 43200, 86399]))
+        if rng.random() < 0.03:
+            when = None
+        actions.append((cust, when, rng.choice([1, 2, 3, 4, None]), rng.randint(1, 3)))
+    rows = []
+    for rid in range(150):
+        cust = rng.choice([1, 2, 3, 4, 5, 6, 7, 8, None])
+        day = date(2025, 3, 1) + timedelta(days=rng.randint(0, 11))
+        rows.append((rid, cust, None if rng.random() < 0.05 else day))
+    return actions, rows
+
+
+def test_per_row_history_equals_join_reference(spark):
+    """history_per_row equals attach_history(rows, last_k_history(...)) on
+    every row, K in {1, 3, 7}. The kernel relies on collect_list keeping
+    the window frame's order; this pins that order."""
+    actions, rows = _per_row_case(2026)
+    adf = spark.createDataFrame(actions, ACTIONS_DDL)
+    rdf = spark.createDataFrame(rows, "rid INT, customer_id BIGINT, d DATE")
+    cutoffs = rdf.select("customer_id", F.col("d").cast("timestamp").alias("cutoff_ts"))
+
+    def by_rid(df):
+        return {r.rid: (r.customer_id, r.d, tuple(r.actions), tuple(r.action_types))
+                for r in df.collect()}
+
+    for k in (1, 3, 7):
+        hist = (last_k_history(adf, cutoffs, k=k)
+                .withColumn("d", F.to_date("cutoff_ts")).drop("cutoff_ts"))
+        want = by_rid(attach_history(rdf, hist, k=k, join_cols=("customer_id", "d")))
+        got = by_rid(history_per_row(adf, rdf, k=k, cutoff_col="d"))
+        assert got == want, f"k={k}"
+        assert len(got) == len(rows)
+        # the case exercises more than padding: some row has a full history
+        assert any(0 not in v[2] for v in got.values()), f"k={k}"

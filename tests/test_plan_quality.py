@@ -136,11 +136,27 @@ def test_range_band_join_broadcasts_band_dim(spark):
     assert "CartesianProduct" not in plan
 
 
+# slug -> (shuffle exchanges, lineitem scans): the history is one window
+# over the action rows and the output rows, shuffled once by entity;
+# training_examples adds the impression aggregate's exchange and reads
+# lineitem once for the impressions and once for all three action streams.
+HISTORY_PLAN_SHAPE = {"user_history_topk": (1, 0), "training_examples": (2, 2)}
+
+
 @pytest.mark.parametrize("slug", ["user_history_topk", "training_examples"])
 def test_history_pipelines_have_no_hardcoded_repartition(spark, slug):
+    import re
+
     plan = _plan(spark, slug)
     assert "RoundRobinPartitioning(200" not in plan
     assert "hashpartitioning(customer_id#" not in plan.split("Exchange")[0]
+    exchanges, lineitem_scans = HISTORY_PLAN_SHAPE[slug]
+    assert len(re.findall(r"(?<![A-Za-z])Exchange ", plan)) == exchanges, plan
+    assert len(re.findall(r"FileScan parquet [^\n]*/lineitem", plan)) == lineitem_scans, plan
+    # nothing is joined back onto the window's output
+    assert "Join" not in plan.split("Window [")[0], plan
+    if slug == "user_history_topk":
+        assert "Join" not in plan, plan
 
 
 def test_sessionize_single_exchange(spark):
