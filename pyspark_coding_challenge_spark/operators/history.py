@@ -21,9 +21,11 @@ fixes, and restructures it for scale:
   before its window keeps K. ``history_per_row`` instead sorts the action
   rows and the output rows together, per entity, in one window: every
   output row is its own cutoff, counts the actions before it, and collects
-  the K just before that count. Each action is shuffled once, each output
-  row copies at most K structs, and no per-day aggregate, struct-array
-  sort or join back runs.
+  the K just before that count. Each action is shuffled once, and no
+  per-day aggregate, struct-array sort or join back runs. The window
+  evaluates its ``collect_list`` on every spine row, action rows
+  included (their lists are dropped after), so it copies up to
+  (actions + rows) x min(K, prior actions) structs.
 * **No hard-coded repartition.** The reference forces
   ``repartition(200, customer_id)`` (``src/pipeline.py:153-156``); the one
   keyed repartition here has no partition count, so AQE coalesces it and
@@ -43,10 +45,10 @@ from pyspark_coding_challenge_spark.functions.arrays import pad_truncate, sorted
 # Above this K, an unset ``lookback_days`` defaults to
 # ``ROLLING_AUTO_LOOKBACK_DAYS``: large-K models (the training default is
 # K=1000) read at most a year of behavior. This is a semantic choice, not
-# a cost guard: the per-row window copies at most K structs per row with
-# or without a horizon. Every registered slug runs K<=8 and keeps the
-# exact unbounded semantics; a nonpositive ``lookback_days`` removes the
-# horizon at any K.
+# a cost guard: the horizon filters the K actions the window has already
+# collected, so it does not make the window cheaper. Every registered slug
+# runs K<=8 and keeps the exact unbounded semantics; a nonpositive
+# ``lookback_days`` removes the horizon at any K.
 ROLLING_AUTO_LOOKBACK_MIN_K = 64
 ROLLING_AUTO_LOOKBACK_DAYS = 365
 

@@ -15,18 +15,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def explode_impressions(impressions: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
+def explode_impressions(impressions: DataFrame) -> DataFrame:
     """Explode ``impressions array<struct<item_id,is_order>>`` positionally.
 
     ``posexplode_outer`` preserves ranking rows with NULL/empty arrays,
     matching the reference's defensive choice at ``src/pipeline.py:85,89``.
-    The ``carry`` columns of each ranking row are copied onto its items.
     """
     return impressions.select(
         F.col("dt").cast("string").alias("dt"),
         F.col("ranking_id").cast("string").alias("ranking_id"),
         F.col("customer_id").cast("bigint").alias("customer_id"),
-        *carry,
         F.posexplode_outer("impressions").alias("impression_pos", "imp"),
     ).select(
         "dt",
@@ -35,5 +33,4 @@ def explode_impressions(impressions: DataFrame, carry: tuple[str, ...] = ()) -> 
         F.col("impression_pos").cast("int").alias("impression_pos"),
         F.col("imp.item_id").cast("bigint").alias("impression_item_id"),
         F.when(F.col("imp.is_order") == True, 1).otherwise(0).cast("int").alias("label"),  # noqa: E712
-        *carry,
     )

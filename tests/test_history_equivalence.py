@@ -100,11 +100,11 @@ def test_rolling_same_day_leakage_excluded(spark):
 
 def test_equivalence_at_training_default_k1000(spark):
     """r4 verdict #4: nothing above K=5 was ever executed while the training
-    default is max_history=1000. At K>ROLLING_AUTO_LOOKBACK_MIN_K the
-    rolling path auto-selects the bounded 365-day range frame (linear in
-    in-horizon actions, not K^2); on data spanning far less than a year the
-    bound is invisible, so the result must still EXACTLY equal the
-    unbounded join formulation."""
+    default is max_history=1000. At K>ROLLING_AUTO_LOOKBACK_MIN_K an unset
+    lookback selects the 365-day horizon, a day filter on the K actions the
+    window collects; on data spanning far less than a year the filter
+    drops nothing, so the result must still EXACTLY equal the unbounded
+    join formulation."""
     from pyspark_coding_challenge_spark.plans.flagship import encode_event_type
     from pyspark_coding_challenge_spark.sources.readers import read_table
 
