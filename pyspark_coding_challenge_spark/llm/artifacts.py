@@ -37,27 +37,26 @@ must fail loudly. ``seed_from_env`` skips such an artifact with a
 config that may legitimately point at an artifact for another sf_dir,
 but silence would mask a stale index.
 
-The incremental updaters below patch the stored artifacts from a snapshot
-diff when their lineage matches the old snapshot, and fall back to
-``materialize`` otherwise. ``compact_artifacts`` bounds their part-file
-growth.
+``refresh`` brings the stored artifacts a caller names, and what they
+need, forward from a snapshot diff: each artifact's ``patch`` hook runs
+when its lineage matches the old snapshot, and ``materialize`` rebuilds it
+otherwise. ``compact_artifacts`` bounds their part-file growth.
 
 The registered sections served from refreshed artifacts (text, IVF and the
 two dedup incremental sections) share one fixture in two steps, and every
 call runs both. The prior (``_refresh_prior``) is session-cached, one per
 corpus side: the derived old and new snapshot dirs and the old snapshot's
 landed artifacts (``PRIOR_NAMES``), the stored state a deployment already
-holds. ``stored_refresh_state`` then copies the caller's artifacts into
-its scratch slot, runs the updater the caller names on the copy and
-checks its modes (``require_modes``). No session entry holds what a
-refresh produced.
+holds. ``stored_refresh_state`` then copies what the caller reads into its
+scratch slot, refreshes the copy and checks its modes (``require_modes``).
+No session entry holds what a refresh produced.
 
 Session entries live in ``session_state``: ``seed_from_env`` runs inside
 the build of the entry it seeds (it installs nothing itself, only records
 the seed path on the entry being built), and ``load`` seeds through
 ``session_state.install``, which releases the entry it replaces.
 
-One clear rule: a writer of artifact bytes (the updaters,
+One clear rule: a writer of artifact bytes (``refresh``,
 ``compact_artifacts``) drops only the session entries loaded from the
 paths it rewrote (``session_state.clear_loaded_under``), never a whole
 kind. Two derived kinds need no clear of their own: the fold verdicts are
@@ -76,8 +75,8 @@ import shutil
 import threading
 import time
 import warnings
-from dataclasses import dataclass
-from typing import Callable
+from dataclasses import dataclass, field
+from typing import Callable, NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -216,9 +215,9 @@ def _churn_gate(ctx: dict, limit: float | None = None) -> str | None:
 # ---------------------------------------------------------------------------
 # compact_artifacts' contract was "run offline: no concurrent refresh or
 # query should hold these paths open" — enforced by documentation only. A
-# refresh racing a compaction swaps directories under the updater's feet.
+# refresh racing a compaction swaps directories under the refresh's feet.
 # This lease makes the contract mechanical: every mutating maintenance
-# entry point (compaction, the incremental updaters, materialize_all)
+# entry point (compaction, refresh, materialize_all)
 # takes an exclusive lease file under the artifact dir for its duration;
 # a concurrent holder fails LOUDLY (ArtifactLeaseHeld) instead of racing.
 # The file is created O_CREAT|O_EXCL (the atomic-claim primitive the
@@ -231,9 +230,8 @@ def _churn_gate(ctx: dict, limit: float | None = None) -> str | None:
 
 _LEASE_FILE = "_maintenance.lease"
 # abspath(artifact_dir) -> owning thread ident, for same-process
-# reentrancy (update_all_incremental calls the per-side updaters, which
-# individually lease too) and same-process cross-thread exclusion (two
-# session threads racing refresh vs compaction never reach the pid check)
+# reentrancy (a leased entry point may call another) and cross-thread
+# exclusion (threads racing refresh vs compaction never reach the pid check)
 _LEASE_LOCAL: dict[str, int] = {}
 _LEASE_GUARD = threading.Lock()
 
@@ -323,8 +321,7 @@ def _with_lease(fn):
     """Decorate a maintenance entry point (a function taking an
     ``artifact_dir`` parameter) to hold the dir's exclusive lease for its
     duration — see ``artifact_maintenance_lease``. Reentrancy makes the
-    composition safe: ``update_all_incremental`` holds the lease while the
-    per-side updaters it calls re-enter it."""
+    composition safe: a leased entry point may call another."""
     import functools
     import inspect
 
@@ -420,7 +417,7 @@ def corpus_digest(spark: SparkSession, sf_dir: str) -> dict:
     60-bit folds summed over a large corpus could wrap int64) of the
     md5-fold of each (doc_id, text-digest) pair, plus the doc count. Two
     corpora agree iff every doc_id carries the same text bytes, regardless
-    of row order or file layout — the lineage key the incremental updater
+    of row order or file layout — the lineage key ``refresh``
     checks before trusting a stored index (a patched artifact records which
     snapshot it patched FROM; a mismatch forces full rebuild). One skinny
     aggregation scan; the collect is a bounded 1-row scalar (repo
@@ -735,6 +732,12 @@ class ArtifactSpec:
     fallback: str | None = None
     #: load_all: served only when this sibling loaded
     needs: str | None = None
+    #: refresh: the patch hook, (rc) -> {name: _Patched, or the reason
+    #: it cannot patch} for this artifact and the ones it ``lands`` with it
+    patch: Callable | None = None
+    lands: tuple[str, ...] = ()
+    #: refresh: artifacts whose refreshed state the patch reads
+    reads: tuple[str, ...] = ()
 
 
 def snapshot_digest(spark: SparkSession, sf_dir: str, side: str) -> dict:
@@ -842,7 +845,7 @@ def _span_positions(spark: SparkSession, sf_dir: str, path: str,
 
 def _gap_stats(gaps: DataFrame, key: str) -> dict:
     """The training-time mean quantization gap the carry-or-retrain drift
-    gate of ``update_centroids_incremental`` compares churned vectors
+    gate of a quantizer carry (``_carry``) compares churned vectors
     against. One broadcast-argmin corpus scan, paid only when the trained
     state is (re)written; bounded 1-row scalar collect (repo convention)."""
     row = gaps.agg(F.avg("gap").alias("m"), F.count("*").alias("n")).collect()[0]
@@ -916,7 +919,8 @@ ARTIFACTS: dict[str, ArtifactSpec] = {
         _pairs_params, "documents",
         build=lambda spark, sf_dir, path, digest:
             _llm("dedup").verified_pairs_for_dir(spark, sf_dir),
-        spread_key="doc_a"),
+        spread_key="doc_a", patch=lambda rc: _patch_pairs(rc),
+        lands=(BANDS_NAME,)),
     # the (doc_id, band, bucket) banded index a refresh's churn shard
     # band-joins against; the chunk rank (_rn) is derivable and
     # cap-dependent, so it is not stored and a read re-ranks (one shuffle
@@ -937,7 +941,8 @@ ARTIFACTS: dict[str, ArtifactSpec] = {
             _llm("dedup").cc_labels_for_dir(spark, sf_dir)
             .select("node", "label"),
         spread_key="node",
-        fallback="cluster labels will be recomputed from the loaded pair graph"),
+        fallback="cluster labels will be recomputed from the loaded pair graph",
+        patch=lambda rc: _patch_cc(rc), reads=(PAIRS_NAME,)),
     # per-doc (doc_id, digest): the next refresh's snapshot diff reads two
     # thin columns for the old side and verifies lineage by the
     # artifact's own content fold, so the old corpus is never re-read
@@ -945,7 +950,8 @@ ARTIFACTS: dict[str, ArtifactSpec] = {
         _digests_params, "documents",
         build=lambda spark, sf_dir, path, digest:
             doc_digest_relation(read_table(spark, sf_dir, "documents")),
-        reuse_current=True),
+        reuse_current=True,
+        patch=lambda rc: _patch_digests(rc, DIGESTS_NAME)),
     # per-doc span positions (doc_id, i, h), the refresh state behind
     # shared_spans: one thin-int row per token position; a deployment
     # that cannot afford it omits it and span refreshes fully rebuild
@@ -953,7 +959,7 @@ ARTIFACTS: dict[str, ArtifactSpec] = {
         _spanpos_params, "documents",
         build=lambda spark, sf_dir, path, digest:
             _span_positions(spark, sf_dir, path, None),
-        reuse_current=True),
+        reuse_current=True, patch=lambda rc: _patch_span_pos(rc)),
     # shared-span starts, stored with the span hash h (r13): the handle a
     # refresh deletes flipped-sharedness rows by; session reads drop it
     SPANS_NAME: ArtifactSpec(
@@ -961,7 +967,9 @@ ARTIFACTS: dict[str, ArtifactSpec] = {
         build=lambda spark, sf_dir, path, digest:
             _llm("text").shared_spans_relation(
                 _span_positions(spark, sf_dir, path, digest)),
-        spread_key="doc_id", columns=("doc_id", "i")),
+        spread_key="doc_id", columns=("doc_id", "i"),
+        patch=lambda rc: _patch_spans(rc), lands=(SPANSTATS_NAME,),
+        reads=(SPANPOS_NAME,)),
     # per-hash distinct-doc counts (h, n_docs): what makes shared_spans
     # churn-patchable (r12) — counts survive a churn's presence delta
     SPANSTATS_NAME: ArtifactSpec(
@@ -975,21 +983,24 @@ ARTIFACTS: dict[str, ArtifactSpec] = {
         _centroid_params, "embeddings",
         build=lambda spark, sf_dir, path, digest:
             _llm("similarity").ivf_centroids_for_dir(spark, sf_dir),
-        write=_write_centroids, persist=False),
+        write=_write_centroids, persist=False,
+        patch=lambda rc: _carry_centroids(rc)),
     # per-vector digests: the embeddings diff's old side, as doc_digests
     # is the documents'
     VECDIG_NAME: ArtifactSpec(
         _vecdig_params, "embeddings",
         build=lambda spark, sf_dir, path, digest: vec_digest_relation(
             read_table(spark, sf_dir, "embeddings")).localCheckpoint(),
-        write=_write_vec_digests),
+        write=_write_vec_digests,
+        patch=lambda rc: _patch_digests(rc, VECDIG_NAME)),
     # the stored inverted index (vec_id, lid), assigned from the sibling
     # centroid artifact; opt-in, since inline assignment costs what one
     # build does — searches without it assign inline
     ASSIGN_NAME: ArtifactSpec(
         _assign_params, "embeddings", write=_write_assignments,
         spread_key="vec_id", gate=_assignments_gate, optional=True,
-        fallback="IVF searches will assign inline"),
+        fallback="IVF searches will assign inline",
+        patch=lambda rc: _patch_assignments(rc), reads=(CENTROIDS_NAME,)),
     # PQ sub-quantizers (sub, lid, cvec) trained on residuals vs the
     # sibling centroid artifact (r16), plus their mean PQ gap (r14)
     PQCB_NAME: ArtifactSpec(
@@ -999,7 +1010,8 @@ ARTIFACTS: dict[str, ArtifactSpec] = {
                 spark, sf_dir,
                 cent=_sibling(spark, sf_dir, path, CENTROIDS_NAME)),
         write=_write_pq_codebooks, persist=False, gate=_pq_codebooks_gate,
-        optional=True, fallback="PQ searches will train inline"),
+        optional=True, fallback="PQ searches will train inline",
+        patch=lambda rc: _carry_pq_codebooks(rc), reads=(CENTROIDS_NAME,)),
     # the compressed corpus (vec_id, sub, code), ~64x smaller than the
     # vectors, in pbucket hive partitions so a refresh overwrites only the
     # churn's buckets; reads drop pbucket
@@ -1007,21 +1019,24 @@ ARTIFACTS: dict[str, ArtifactSpec] = {
         _pqcodes_params, "embeddings", write=_write_pq_codes,
         spread_key="vec_id", columns=("vec_id", "sub", "code"),
         gate=_pq_codes_gate, optional=True, needs=PQCB_NAME,
-        fallback="PQ searches will encode inline"),
+        fallback="PQ searches will encode inline",
+        patch=lambda rc: _patch_pq_codes(rc), reads=(PQCB_NAME,)),
     # the (doc_id, source, n_tokens) token spine every packing/batching
     # kernel consumes
     SPINE_NAME: ArtifactSpec(
         _spine_params, "documents",
         build=lambda spark, sf_dir, path, digest:
             _llm("text").shared_token_spine_for_dir(spark, sf_dir),
-        spread_key="doc_id"),
+        spread_key="doc_id", patch=lambda rc: _patch_per_doc(
+            rc, SPINE_NAME, _llm("text").token_spine_relation)),
     # the fused per-doc signal relation (token/stopword/marker/2-gram
     # counts), the dominant text-side cold cost
     SIGNALS_NAME: ArtifactSpec(
         _signals_params, "documents",
         build=lambda spark, sf_dir, path, digest:
             _llm("text").shared_doc_signals_for_dir(spark, sf_dir),
-        spread_key="doc_id"),
+        spread_key="doc_id", patch=lambda rc: _patch_per_doc(
+            rc, SIGNALS_NAME, _llm("text").doc_signals_relation)),
 }
 
 
@@ -1190,29 +1205,17 @@ SUPPLIED_SPOT_CHECK_IDS = 16
 def _supplied_digest_gate(supplied: DataFrame, corpus: DataFrame,
                           id_col: str, digest_rel) -> str | None:
     """Why a caller-supplied (id, digest) relation for the NEW snapshot
-    cannot be trusted — or None when it passes. The r13 refresh shape
-    (judge item #2): an ingest pipeline computes per-row digests ONCE at
-    write time and hands them to the refresh, killing the one
-    corpus-proportional term left in the patch wall (hashing the new
-    snapshot). Bounded-trust contract, all checks cheap:
-
-    * the supplied row count must equal the new snapshot's row count
-      (count() over a pruned scan — no digest computation);
-    * deterministic spot check: the ``SUPPLIED_SPOT_CHECK_IDS`` lowest
-      supplied ids are re-hashed from the actual corpus rows (a literal
-      ``IN`` filter pushed into the parquet scan — row-group pruned, so
-      the digest expression runs on the matched handful only) and must
-      match byte-for-byte.
-
-    A relation that passes can still lie about unsampled rows — that
-    residual trust is identical to trusting the stored ``doc_digests``
-    artifact itself (which the same ingest wrote); the spot check exists
-    to catch the honest failure modes (digests of the wrong snapshot,
-    wrong hash function, truncated export) deterministically, and any
-    rejection falls back to scanning with a warning, never a silent
-    wrong patch. ``digest_rel``: fn(corpus_subset) -> (id, digest) truth
-    relation — the SAME expression the artifacts use, so 'matches' means
-    'interchangeable with a scan'."""
+    cannot be trusted — or None when it passes. An ingest pipeline
+    computes per-row digests ONCE at write time, so the refresh need not
+    hash the new snapshot (r13). Bounded trust, all checks cheap: the
+    row counts must match (pruned-scan counts), and the
+    ``_digest_spot_check`` sample must re-hash byte-for-byte. A relation
+    that passes can still lie about unsampled rows — the same trust as
+    in the stored ``doc_digests`` the same ingest wrote; the check
+    catches the honest failures (wrong snapshot, wrong hash, truncated
+    export), and a rejection falls back to the scan with a warning.
+    ``digest_rel``: fn(corpus_subset) -> the (id, digest) truth, the SAME
+    expression the artifacts use."""
     cols = set(supplied.columns)
     if not {id_col, "digest"} <= cols:
         return (f"supplied digest relation must carry ({id_col}, digest); "
@@ -1230,16 +1233,9 @@ def _digest_spot_check(supplied: DataFrame, corpus: DataFrame,
     """The bounded re-hash kernel both gates share: the lowest-N supplied
     (id, digest) rows are re-hashed from the actual corpus rows and must
     match byte-for-byte; a supplied id absent from the corpus fails too.
-
-    The N sample ids are collected (bounded <= SUPPLIED_SPOT_CHECK_IDS
-    scalars — repo convention, disclosed) and pushed as a LITERAL ``IN``
-    filter into the corpus scan: parquet row-group min/max stats prune
-    everything but the groups holding those ids, where the previous
-    broadcast-semi-join form scanned every row group of the corpus just
-    to re-hash 16 rows (r14: at the 100x ctx probe factor the gate's
-    scans cost as much as the whole corpus hash the changelog path
-    exists to avoid — the point-lookup form is what a 100 TB deployment
-    would run)."""
+    The N ids (a bounded collect) go into the corpus scan as a LITERAL
+    ``IN`` filter, so row-group stats prune it to point lookups; a
+    broadcast semi join scanned every row group (r14)."""
     sample = (
         supplied.select(id_col, F.col("digest").alias("_supplied"))
         .orderBy(id_col).limit(SUPPLIED_SPOT_CHECK_IDS)
@@ -1266,36 +1262,25 @@ def _digest_spot_check(supplied: DataFrame, corpus: DataFrame,
 def _changelog_gate(changelog: DataFrame, old_digests: DataFrame,
                     old_n_docs: int, corpus: DataFrame, id_col: str,
                     digest_rel) -> str | None:
-    """Why a caller-supplied churn CHANGELOG for the NEW snapshot cannot
-    be trusted — or None when it passes. The step past supplied digests
-    (r13): a CDC-shaped ingest (op-coded upsert feed, Delta CDF, the
-    foreachBatch ingest in ``streaming/ingest.py`` for the pure-append
-    case) already KNOWS which rows it added/modified/removed — handed to
-    the refresh as (id, change, digest_new), churn detection itself
-    becomes O(churn): no corpus-wide diff join at all, the one
-    corpus-proportional term the supplied-digests path still paid.
-
-    Bounded-trust contract (every check churn-sized or a count):
+    """Why a caller-supplied churn CHANGELOG (id, change, digest_new) for
+    the NEW snapshot cannot be trusted — or None when it passes. A
+    CDC-shaped ingest (Delta CDF, ``streaming/ingest.py``) already KNOWS
+    its churn, so detecting it is O(churn): no corpus-wide diff join.
+    Bounded trust, every check churn-sized or a count:
 
     * columns (id, change, digest_new); change values inside
       {added, removed, modified}; digest_new non-null except on removed;
       ids unique (a doc listed twice would double-patch);
-    * count identity: old_n_docs - removed + added == corpus.count()
-      (one count job — the only corpus-sized touch, and it is
-      metadata-cheap);
+    * count identity: old_n_docs - removed + added == corpus.count();
     * spot check, lowest-N added/modified ids: digest_new must equal a
-      fresh hash of the corpus row (a literal IN filter pushed into the
-      scan, the ``_supplied_digest_gate`` kernel — also catches an
-      'added' id that is not actually present);
+      fresh hash of the corpus row (``_digest_spot_check``);
     * spot check, lowest-N removed ids: ABSENT from the corpus;
     * spot check, lowest-N removed/modified ids: PRESENT in the stored
       old digests (a changelog cut against the wrong OLD snapshot fails
       here deterministically).
 
-    Residual trust matches ``_supplied_digest_gate``: a changelog that
-    OMITS a change it knew about can defeat sampling — the same class as
-    a lying digest export — and the fallback on any rejection is the
-    scan path with a warning, never a silent wrong patch."""
+    Residual trust matches ``_supplied_digest_gate``'s, and so does the
+    fallback: the scan path, with a warning."""
     cols = set(changelog.columns)
     if not {id_col, "change", "digest_new"} <= cols:
         return (f"changelog must carry ({id_col}, change, digest_new); "
@@ -1410,33 +1395,22 @@ def _refresh_ctx(spark: SparkSession, old_sf_dir: str, new_sf_dir: str,
     old-snapshot read), the pinned churn diff, churn counts, the gone-id
     and delta-id relations, and the NEW snapshot's digest + patched
     digest relation (churn-proportional fold arithmetic when the artifact
-    is present). The documents-side context is built ONCE per refresh and
-    passed to both of that side's updaters — building it after one
-    updater has overwritten the digest artifact would read
+    is present). Built ONCE per side and refresh, before any hook
+    overwrites the digests artifact — after it, it would read
     already-patched state.
 
-    ``new_digests``: an optional caller-supplied (id, digest) relation
-    for the NEW snapshot — an ingest pipeline computes these once at
-    write time, and with them the diff becomes pure digest arithmetic:
-    the new snapshot is hashed NOWHERE in the refresh (the last
-    corpus-proportional hash scan, r13 judge item #2). Gated by
-    ``_supplied_digest_gate``; a rejected relation falls back to the scan
-    with a warning, recorded as ``supplied`` in the ctx/summaries.
-
-    ``new_changelog``: an optional caller-supplied churn changelog (id,
-    change, digest_new) — the step past supplied digests: a CDC-shaped
-    ingest already knows its op codes, and with them churn DETECTION is
-    O(churn) too (no corpus-wide diff join — the one corpus-proportional
-    term the supplied path still paid; the r13 ctx micro-arm measured
-    that join at 0.9->2.5 s across 1x-30x). Requires a valid stored
-    digests artifact (the old side of the fold arithmetic); gated by
-    ``_changelog_gate``; any rejection falls back to ``new_digests`` (if
-    given) and then to the scan, with a warning. Takes precedence over
-    ``new_digests`` when both pass their gates.
+    ``new_digests``: caller-supplied (id, digest) rows of the NEW
+    snapshot, which then is hashed NOWHERE (``_supplied_digest_gate``).
+    ``new_changelog``: a caller-supplied churn changelog, which makes
+    churn DETECTION O(churn) too (the r13 ctx micro-arm measured the
+    diff join it saves at 0.9->2.5 s across 1x-30x); it needs a valid
+    stored digests artifact to fold against (``_changelog_gate``) and
+    wins when both pass. A rejection falls back to ``new_digests``, then
+    to the scan, with a warning; ``supplied`` records the verdicts.
 
     With no old state at all (``_old_digest_state`` bootstrap) the
-    context holds only the new snapshot's digest; ``_bootstrap`` names
-    why, and every updater rebuilds in full."""
+    context holds only the new snapshot's digest, and every artifact on
+    the side rebuilds in full."""
     s = _SIDES[side]
     idc = s.id_col
     old_digest, old_digests, dig_note = _old_digest_state(
@@ -1536,25 +1510,6 @@ def _refresh_ctx(spark: SparkSession, old_sf_dir: str, new_sf_dir: str,
     return ctx
 
 
-def _bootstrap(ctx: dict) -> str | None:
-    """Why a refresh has nothing to patch from (no stored digests and no
-    old table to rescan) — or None when it has."""
-    if ctx["old_digest"] is None:
-        return f"bootstrap ({ctx['dig_note']})"
-    return None
-
-
-def _digests_lineage(ctx: dict) -> dict:
-    """Lineage of a side's refreshed digests artifact: patched from the
-    old snapshot when the stored rows were folded forward, else a rescan
-    of the new one."""
-    if ctx["old_digests"] is not None:
-        return {"snapshot": ctx["new_digest"],
-                "patched_from": ctx["old_digest"]}
-    return {"snapshot": ctx["new_digest"], "patched_from": None,
-            "via": "corpus_scan"}
-
-
 @contextlib.contextmanager
 def _timed(walls: dict, key: str):
     """Record the wall of the block as ``walls[key]`` (seconds, 3 dp) — the
@@ -1578,40 +1533,98 @@ def _land(df: DataFrame | None, sf_dir: str, artifact_dir: str, name: str,
 
 
 def _rebuild(spark: SparkSession, sf_dir: str, artifact_dir: str,
-             digest: dict, *names: str, walls: dict | None = None) -> dict:
-    """Full rebuild of ``names`` from ``sf_dir``, in order; returns name ->
-    path. Every stale meta sidecar is deleted FIRST: if
-    SPARK_GRAFT_ARTIFACT_DIR points at this artifact_dir and a stale meta
-    passes the sf_dir+params check (an in-place snapshot refresh, or a
-    prior carry that re-pointed it), a builder inside materialize would
-    env-seed the stale bytes — the pair build seeds the bands, too — and
-    materialize would no-op on its _seeded_from guard, so the "rebuild"
-    would silently keep stale state (r8 review finding). No meta => no
-    env seed; a crash leaves loudly-invalid artifacts, never silently
-    stale ones."""
+             digest: dict, *names: str) -> None:
+    """Full rebuild of ``names`` from ``sf_dir``, in order. Every stale
+    meta sidecar is deleted FIRST: if SPARK_GRAFT_ARTIFACT_DIR points at
+    this artifact_dir and a stale meta passes the sf_dir+params check (an
+    in-place snapshot refresh, or a prior carry that re-pointed it), a
+    builder inside materialize would env-seed the stale bytes — the pair
+    build seeds the bands, too — and materialize would no-op on its
+    _seeded_from guard, so the "rebuild" would silently keep stale state
+    (r8 review finding). No meta => no env seed; a crash leaves
+    loudly-invalid artifacts, never silently stale ones."""
     _drop_stale_meta(*(os.path.join(artifact_dir, n) for n in names))
-    out = {}
     for name in names:
-        with _timed(walls if walls is not None else {}, name):
-            out[name] = materialize(spark, sf_dir, artifact_dir, name, digest)
-    return out
+        materialize(spark, sf_dir, artifact_dir, name, digest)
 
 
-def _patch_rows(spark: SparkSession, sf_dir: str, artifact_dir: str,
-                name: str, ctx: dict, churn_rows: DataFrame,
-                lineage: dict) -> DataFrame:
-    """Patch the per-row artifact ``name``: delete the refresh's gone
-    rows, append ``churn_rows``, pin (the rows read the path about to be
-    overwritten), overwrite, re-point the meta. Returns the pinned
-    patched relation."""
-    patched = (
-        spark.read.parquet(os.path.join(artifact_dir, name))
-        .join(ctx["gone"], on=_SIDES[ctx["side"]].id_col, how="left_anti")
-        .unionByName(churn_rows)
-        .localCheckpoint()
-    )
-    _land(patched, sf_dir, artifact_dir, name, lineage)
-    return patched
+class _Patched(NamedTuple):
+    """What a patch hook lands for one artifact: the relation to write
+    (None: the bytes are in place — a carry, or a write the hook made),
+    its mode, its lineage (None: rebuild it instead), and why it is not
+    plainly patched."""
+    rel: DataFrame | None
+    mode: str
+    lineage: dict | None
+    note: str | None = None
+
+
+@dataclass
+class _Refresh:
+    """What one ``refresh`` shares with its patch hooks: the snapshot and
+    artifact dirs, the closure it walks (``order``), each side's
+    ``_refresh_ctx``, the modes landed so far, and relations a hook pins
+    for a later one (``stash``: pinned before their paths are rewritten)."""
+    spark: SparkSession
+    old_sf_dir: str
+    new_sf_dir: str
+    artifact_dir: str
+    order: tuple
+    max_churn_frac: float | None
+    cc_min_edges: int | None
+    ctx: dict = field(default_factory=dict)
+    modes: dict = field(default_factory=dict)
+    stash: dict = field(default_factory=dict)
+
+    def path(self, name: str) -> str:
+        return os.path.join(self.artifact_dir, name)
+
+    def stored(self, name: str) -> DataFrame:
+        return self.spark.read.parquet(self.path(name))
+
+    def side(self, name: str) -> dict:
+        return self.ctx[ARTIFACTS[name].side]
+
+    def lineage(self, name: str, **extra) -> dict:
+        """A refreshed artifact's lineage: the new snapshot, patched from
+        the old one unless ``extra`` says otherwise."""
+        ctx = self.side(name)
+        return {"snapshot": ctx["new_digest"],
+                "patched_from": ctx["old_digest"], **extra}
+
+    def bootstrap(self, name: str) -> str | None:
+        """Why ``name``'s side has nothing to patch from (no stored digests
+        and no old table to rescan) — or None when it has."""
+        ctx = self.side(name)
+        if ctx["old_digest"] is None:
+            return f"bootstrap ({ctx['dig_note']})"
+        return None
+
+    def churn(self, name: str, limit: float) -> str | None:
+        """``_churn_gate`` on ``name``'s side at ``max_churn_frac``, or else
+        ``limit``."""
+        return _churn_gate(self.side(name), limit if self.max_churn_frac
+                           is None else self.max_churn_frac)
+
+    def refusal(self, *names: str, limit: float | None = None) -> str | None:
+        """The first gate refusing to patch ``names``: bootstrap, a stored
+        lineage that is not the old snapshot's, or — when the hook has a
+        churn ``limit`` — churn past it."""
+        why = self.bootstrap(names[0]) or next(filter(None, (
+            _lineage_gate(self.artifact_dir, n, self.old_sf_dir,
+                          self.side(n)["old_digest"]) for n in names)), None)
+        if why is None and limit is not None:
+            why = self.churn(names[0], limit)
+        return why
+
+    def churn_rows(self, name: str) -> DataFrame:
+        """The new snapshot's added and modified rows on ``name``'s side:
+        documents, or (vec_id, emb) vectors spread for the vector kernels."""
+        side = ARTIFACTS[name].side
+        rows = (self.ctx[side]["new_docs"] if side == "documents"
+                else _embedding_vectors(self.spark, self.new_sf_dir))
+        return rows.join(self.ctx[side]["delta_ids"],
+                         on=_SIDES[side].id_col, how="left_semi")
 
 
 def _unpaired(lin: dict, paired: dict) -> str | None:
@@ -1621,68 +1634,304 @@ def _unpaired(lin: dict, paired: dict) -> str | None:
                  if lin.get(field) != value), None)
 
 
-def _carry_or_retrain(spark: SparkSession, ctx: dict, old_sf_dir: str,
-                      new_sf_dir: str, artifact_dir: str, name: str,
-                      limit: float, summary: dict, *, prefix: str,
-                      stats_key: str, gap: Callable, what: str,
-                      reason: str | None = None,
-                      paired: dict | None = None) -> str:
+def _patch_rows(rc: _Refresh, name: str, churn_rows: DataFrame) -> DataFrame:
+    """The per-row artifact ``name`` patched: its stored rows minus the
+    refresh's gone rows, plus ``churn_rows``, pinned (the rows read the
+    path about to be overwritten)."""
+    return (
+        rc.stored(name)
+        .join(rc.side(name)["gone"], on=_SIDES[ARTIFACTS[name].side].id_col,
+              how="left_anti")
+        .unionByName(churn_rows)
+        .localCheckpoint()
+    )
+
+
+def _patch_per_doc(rc: _Refresh, name: str, rows: Callable) -> dict:
+    """A strictly per-doc relation (``doc_signals``, ``token_spine``):
+    gone docs' rows deleted, ``rows`` of the churn docs appended — no
+    tokenization of the unchanged corpus."""
+    why = rc.refusal(name, limit=INCR_MAX_CHURN_FRAC)
+    if why is not None:
+        return {name: why}
+    return {name: _Patched(_patch_rows(rc, name, rows(rc.churn_rows(name))),
+                           "patched", rc.lineage(name))}
+
+
+def _patch_digests(rc: _Refresh, name: str) -> dict:
+    """A side's per-row digests, the next refresh's old side: the
+    ``_refresh_ctx`` relation, folded forward from the stored rows, or
+    hashed from the new snapshot when there were none valid to fold. The
+    documents side's digests answer to the churn gate of its patches."""
+    ctx = rc.side(name)
+    why = rc.bootstrap(name)
+    if why is None and name == DIGESTS_NAME:
+        why = rc.churn(name, INCR_MAX_CHURN_FRAC)
+    if why is not None:
+        return {name: why}
+    if ctx["old_digests"] is None:
+        return {name: _Patched(ctx["new_digests_rel"], "full_rebuild",
+                               rc.lineage(name, patched_from=None,
+                                          via="corpus_scan"),
+                               ctx["dig_note"])}
+    return {name: _Patched(ctx["new_digests_rel"], "patched", rc.lineage(name))}
+
+
+def _patch_pairs(rc: _Refresh) -> dict:
+    """The pair graph and the banded index, patched together
+    (``dedup.incremental_dedup_update``): shingle and minhash only the
+    churn, band-join it against the STORED banded index, verify only fresh
+    candidate pairs, splice. Wall cost ∝ churn (measured:
+    ``SCALE_PROBE_INCR_r10.json``)."""
+    D = _llm("dedup")
+    why = rc.refusal(PAIRS_NAME, BANDS_NAME, limit=INCR_MAX_CHURN_FRAC)
+    if why is not None:
+        return dict.fromkeys((PAIRS_NAME, BANDS_NAME), why)
+    ctx, old_pairs = rc.ctx["documents"], rc.stored(PAIRS_NAME)
+    bands, pairs, fresh = D.incremental_dedup_update(
+        ctx["new_docs"], ctx["diff"].select("doc_id", "change"), old_pairs,
+        rc.stored(BANDS_NAME))
+    # the patched frames READ the very paths being overwritten: pin them,
+    # and the old graph's edges the label patch reads after they land
+    bands, pairs = bands.localCheckpoint(), pairs.localCheckpoint()
+    rc.stash[PAIRS_NAME] = (pairs, fresh, D._threshold_edges(old_pairs)
+                            .localCheckpoint() if CC_NAME in rc.order else None)
+    return {PAIRS_NAME: _Patched(pairs, "patched", rc.lineage(PAIRS_NAME)),
+            BANDS_NAME: _Patched(bands, "patched", rc.lineage(BANDS_NAME))}
+
+
+def _patch_cc(rc: _Refresh) -> dict:
+    """CC labels of the refreshed pair graph: patched from the churn's own
+    edge diff (``dedup.incremental_cc_update`` with known added/removed
+    edges — no full-graph anti-joins, r9 judge item #1), or relabeled from
+    scratch (``rederived``) below the measured stored-edge crossover
+    (``cc_min_edges``, default ``dedup.CC_INCR_MIN_EDGES``;
+    ``SCALE_PROBE_CC_r8.json``, ``SCALE_PROBE_CC_r10.json``) or when the
+    stored labels cannot be patched. A rebuilt pair graph rebuilds them."""
+    D = _llm("dedup")
+    why = rc.refusal(CC_NAME)
+    if rc.modes[PAIRS_NAME] != "patched":
+        return {CC_NAME: why or f"{PAIRS_NAME} was rebuilt"}
+    pairs, fresh, old_edges = rc.stash[PAIRS_NAME]
+    edges = D._threshold_edges(pairs)
+    if why is None and old_edges.count() >= (
+            D.CC_INCR_MIN_EDGES if rc.cc_min_edges is None else rc.cc_min_edges):
+        gone = rc.ctx["documents"]["gone"]
+        removed = old_edges.join(
+            gone.withColumnRenamed("doc_id", "doc_a"), on="doc_a",
+            how="left_semi").unionByName(old_edges.join(
+                gone.withColumnRenamed("doc_id", "doc_b"), on="doc_b",
+                how="left_semi")).distinct()
+        # fresh is pinned inside the pair patch: thresholding it is cheap
+        labels = D.incremental_cc_update(
+            rc.stored(CC_NAME).localCheckpoint(), edges,
+            known_added=D._threshold_edges(fresh), known_removed=removed)
+        mode, lineage = "patched", rc.lineage(CC_NAME)
+    else:
+        # the stored labels were not an input: lineage must not claim a
+        # patch (r9 advisor), but shows the content descends from one
+        labels = D.connected_components(edges)
+        mode = "rederived" if why is None else "full_rebuild"
+        lineage = rc.lineage(CC_NAME, patched_from=None,
+                             via="relabel_of_patched_pair_graph")
+    return {CC_NAME: _Patched(labels.localCheckpoint().select("node", "label"),
+                              mode, lineage, why)}
+
+
+def _patch_span_pos(rc: _Refresh) -> dict:
+    """Span positions, per doc: the tokenize+gram+hash runs over the churn
+    only. Pins what the sharedness patch reads after this lands: the
+    churn's positions and the gone docs' (h, doc) pairs of the old index."""
+    why = rc.refusal(SPANPOS_NAME, limit=INCR_MAX_CHURN_FRAC)
+    if why is not None:
+        return {SPANPOS_NAME: why}
+    churn_pos = _llm("text").span_pos_relation(
+        rc.churn_rows(SPANPOS_NAME)).localCheckpoint()
+    gone_pairs = (
+        rc.stored(SPANPOS_NAME)
+        .join(rc.ctx["documents"]["gone"], on="doc_id", how="left_semi")
+        .select("h", "doc_id").distinct().localCheckpoint()
+    )
+    pos = _patch_rows(rc, SPANPOS_NAME, churn_pos)
+    rc.stash[SPANPOS_NAME] = (pos, churn_pos, gone_pairs)
+    return {SPANPOS_NAME: _Patched(pos, "patched", rc.lineage(SPANPOS_NAME))}
+
+
+def _patch_spans(rc: _Refresh) -> dict:
+    """``span_stats`` and ``shared_spans``, patched CHURN-SIZED (r12 judge
+    item #3): the churn's (h, doc) presence delta updates the per-hash doc
+    counts, and only the hashes that FLIP shared status drive row deletes
+    and inserts on the stored spans — zero corpus-proportional shuffles
+    (residual broadcast scans: BASELINE.md). When the stored pair cannot
+    be patched, both re-derive from the refreshed position index."""
+    T = _llm("text")
+    if rc.modes[SPANPOS_NAME] != "patched":
+        pos, mode, why = rc.stored(SPANPOS_NAME), "full_rebuild", \
+            f"{SPANPOS_NAME} was rebuilt"
+        via = "corpus_rebuild"
+    else:
+        pos, churn_pos, gone_pairs = rc.stash[SPANPOS_NAME]
+        why = rc.refusal(SPANS_NAME, SPANSTATS_NAME)
+        mode, via = "rederived", "rederived_from_patched_span_pos"
+    if why is not None:
+        lineage = rc.lineage(SPANS_NAME, patched_from=None, via=via)
+        stats = T.span_doc_stats(pos).localCheckpoint()
+        return {SPANSTATS_NAME: _Patched(stats, mode, lineage, why),
+                SPANS_NAME: _Patched(T.shared_spans_relation(pos, stats=stats),
+                                     mode, lineage, why)}
+    # ALL churn-touched hashes ride ``trans`` (net-zero ones too: a
+    # modified doc keeping a hash must re-enter the spans patch), so every
+    # relation here is churn-sized and broadcastable; a brand-new hash has
+    # no stats row (n_old = 0)
+    old_stats = rc.stored(SPANSTATS_NAME)
+    delta = (
+        gone_pairs.withColumn("d", F.lit(-1))
+        .unionByName(churn_pos.select("h", "doc_id").distinct()
+                     .withColumn("d", F.lit(1)))
+        .groupBy("h").agg(F.sum("d").cast("bigint").alias("dn"))
+        .localCheckpoint()
+    )
+    matched = (
+        old_stats.join(F.broadcast(delta), on="h")
+        .select("h", F.col("n_docs").alias("n_old"),
+                (F.col("n_docs") + F.col("dn")).alias("n_new"))
+    )
+    trans = matched.unionByName(
+        delta.join(matched.select("h"), on="h", how="left_anti")
+        .select("h", F.lit(0).cast("bigint").alias("n_old"),
+                F.col("dn").alias("n_new"))
+    ).localCheckpoint()
+    newly_shared = trans.filter(
+        (F.col("n_old") < 2) & (F.col("n_new") >= 2)).select("h")
+    newly_unshared = trans.filter(
+        (F.col("n_old") >= 2) & (F.col("n_new") < 2)).select("h")
+    stats = (
+        old_stats.join(F.broadcast(trans.select("h")), on="h", how="left_anti")
+        .unionByName(trans.filter(F.col("n_new") > 0)
+                     .select("h", F.col("n_new").alias("n_docs")))
+        .localCheckpoint()
+    )
+    # delete gone docs' rows and flipped-unshared rows; add the churn docs'
+    # shared rows and the UNCHANGED docs' rows of newly shared hashes, a
+    # scan skipped when nothing became newly shared
+    spans = (
+        rc.stored(SPANS_NAME)
+        .join(rc.ctx["documents"]["gone"], on="doc_id", how="left_anti")
+        .join(F.broadcast(newly_unshared), on="h", how="left_anti")
+        .select("doc_id", "i", "h")
+        .unionByName(churn_pos.join(
+            F.broadcast(trans.filter(F.col("n_new") >= 2).select("h")),
+            on="h", how="left_semi").select("doc_id", "i", "h"))
+    )
+    if not newly_shared.isEmpty():  # bounded existence check
+        spans = spans.unionByName(
+            pos.join(F.broadcast(newly_shared), on="h", how="left_semi")
+            .join(rc.ctx["documents"]["delta_ids"], on="doc_id",
+                  how="left_anti")
+            .select("doc_id", "i", "h"))
+    return {SPANSTATS_NAME: _Patched(stats, "patched",
+                                     rc.lineage(SPANSTATS_NAME)),
+            SPANS_NAME: _Patched(spans.localCheckpoint(), "patched",
+                                 rc.lineage(SPANS_NAME))}
+
+
+def _carry(rc: _Refresh, name: str, stats_key: str, what: str,
+           gap: Callable, paired: dict | None = None) -> dict:
     """Carry the stored trained model ``name`` (bytes verbatim, meta
-    re-pointed at the new snapshot with ``carried_from``) or retrain it,
-    and return 'carried' or 'retrained'. It retrains on the first gate
-    that fails: its lineage gate; ``reason`` (the caller's own verdict);
-    the ``paired`` lineage fields (see ``_unpaired``); a stored
-    ``stats.<stats_key>`` training baseline; the churn gate at ``limit``;
-    and the drift gate — the churn cohort's mean ``gap`` (a kernel over
-    the stored model, run on the added/modified vectors only, so the
-    check is churn-sized) must not exceed ``CENTROID_QE_DRIFT_RATIO`` x
-    the training-time mean + ``CENTROID_QE_DRIFT_MARGIN``. The baseline
-    is the ORIGINAL training distribution and a carry keeps it, so
-    repeated small drifts accumulate against a fixed reference instead of
-    boiling the frog. Records ``<prefix>churn_qe``/``<prefix>trained_qe``
-    when the drift gate measured, and ``<prefix>reason`` for a retrain or
-    a vacuous drift check."""
-    path = os.path.join(artifact_dir, name)
+    re-pointed at the new snapshot with ``carried_from``), or refuse, which
+    retrains it: recall depends on how well the model covers the vector
+    DISTRIBUTION, which bounded churn barely shifts. The gates: bootstrap,
+    lineage, churn past ``CENTROID_MAX_CHURN_FRAC``, the ``paired`` lineage
+    fields, a stored ``stats.<stats_key>`` training baseline, and drift —
+    the churn cohort's mean ``gap`` must not exceed
+    ``CENTROID_QE_DRIFT_RATIO`` x that baseline +
+    ``CENTROID_QE_DRIFT_MARGIN``. A carry keeps the ORIGINAL baseline, so
+    repeated small drifts accumulate against a fixed reference."""
     paired = paired or {}
-    reason = _lineage_gate(artifact_dir, name, old_sf_dir,
-                           ctx["old_digest"]) or reason
-    stats = None
-    if reason is None:
-        lin = _lineage(path)
+    why = rc.refusal(name, limit=CENTROID_MAX_CHURN_FRAC)
+    stats = note = None
+    if why is None:
+        lin = _lineage(rc.path(name))
         stats = lin.get("stats")
-        reason = _unpaired(lin, paired)
-        if reason is None and (not stats or stats_key not in stats):
-            reason = (f"stored {name} meta records no training stats — no "
-                      "drift baseline to carry against")
-    reason = reason or _churn_gate(ctx, limit)
-    if reason is None:
+        why = _unpaired(lin, paired)
+        if why is None and (not stats or stats_key not in stats):
+            why = (f"stored {name} meta records no training stats — no "
+                   "drift baseline to carry against")
+    if why is None:
         # bounded 1-row scalar collect (repo convention); churn-sized input
-        row = gap(spark.read.parquet(path)).agg(
-            F.avg("gap").alias("m")).collect()[0]
-        if row["m"] is None:
-            summary[prefix + "reason"] = ("no added/modified vectors — drift "
-                                          "check vacuous")
-        else:
-            churn_qe, trained_qe = float(row["m"]), float(stats[stats_key])
-            summary[prefix + "churn_qe"] = round(churn_qe, 6)
-            summary[prefix + "trained_qe"] = trained_qe
-            if churn_qe > (CENTROID_QE_DRIFT_RATIO * trained_qe
-                           + CENTROID_QE_DRIFT_MARGIN):
-                reason = (
-                    f"churned vectors' mean {what} {churn_qe:.4f} exceeds "
-                    f"{CENTROID_QE_DRIFT_RATIO} x training-time "
-                    f"{trained_qe:.4f} + {CENTROID_QE_DRIFT_MARGIN} — the "
-                    f"stored {name} does not cover the new vector mass")
-    if reason is None:
-        _land(None, new_sf_dir, artifact_dir, name,
-              {"snapshot": ctx["new_digest"],
-               "carried_from": ctx["old_digest"],
-               **{field: value for field, (value, _) in paired.items()},
-               "stats": stats})
-        return "carried"
-    summary[prefix + "reason"] = reason
-    _rebuild(spark, new_sf_dir, artifact_dir, ctx["new_digest"], name)
-    return "retrained"
+        churn_qe = gap(rc.stored(name)).agg(F.avg("gap").alias("m")) \
+            .collect()[0]["m"]
+        trained_qe = float(stats[stats_key])
+        if churn_qe is None:
+            note = "no added/modified vectors — drift check vacuous"
+        elif churn_qe > (CENTROID_QE_DRIFT_RATIO * trained_qe
+                         + CENTROID_QE_DRIFT_MARGIN):
+            why = (f"churned vectors' mean {what} {churn_qe:.4f} exceeds "
+                   f"{CENTROID_QE_DRIFT_RATIO} x training-time "
+                   f"{trained_qe:.4f} + {CENTROID_QE_DRIFT_MARGIN} — the "
+                   f"stored {name} does not cover the new vector mass")
+    if why is not None:
+        return {name: why}
+    ctx = rc.side(name)
+    return {name: _Patched(None, "carried", {
+        "snapshot": ctx["new_digest"], "carried_from": ctx["old_digest"],
+        **{field: value for field, (value, _) in paired.items()},
+        "stats": stats}, note)}
+
+
+def _centroids_fold(rc: _Refresh) -> str:
+    """The content fold of the refreshed ``ivf_centroids`` bytes, which
+    the assignments and PQ state must be paired with."""
+    if "centroids_fold" not in rc.stash:
+        rc.stash["centroids_fold"] = _content_fold(
+            rc.stored(CENTROIDS_NAME), "lid")
+    return rc.stash["centroids_fold"]
+
+
+def _carry_centroids(rc: _Refresh) -> dict:
+    S = _llm("similarity")
+    return _carry(rc, CENTROIDS_NAME, "mean_qe", "quantization gap",
+                  lambda cent: S.quantization_gap(
+                      rc.churn_rows(CENTROIDS_NAME), cent))
+
+
+def _carry_pq_codebooks(rc: _Refresh) -> dict:
+    """PQ sub-quantizers carry or retrain like the coarse quantizer, with
+    PQ's own drift statistic. They fit RESIDUALS against the coarse
+    quantizer (r16), so a coarse retrain changes their basis and retrains
+    them; the carried basis must be the carried coarse quantizer."""
+    S = _llm("similarity")
+    if rc.modes[CENTROIDS_NAME] != "carried":
+        return {PQCB_NAME: "coarse quantizer retrained — the residual basis "
+                           "changed under the sub-quantizers"}
+    cent = rc.stored(CENTROIDS_NAME)
+    return _carry(
+        rc, PQCB_NAME, "mean_pq_qe", "PQ quantization gap",
+        lambda cb: S.pq_quantization_gap(rc.churn_rows(PQCB_NAME), cb, cent),
+        paired={"centroids_fold": (
+            _centroids_fold(rc), "stored codebooks were trained on residuals "
+            "vs a different coarse quantizer than the carried one")})
+
+
+def _patch_assignments(rc: _Refresh) -> dict:
+    """The stored inverted index under a carried quantizer: gone rows
+    deleted, only the churn assigned — identical to a full reassignment,
+    since assignment is deterministic per vector. A retrain reassigns
+    every vector."""
+    if rc.modes[CENTROIDS_NAME] != "carried":
+        return {ASSIGN_NAME: "quantizer retrained — every vector reassigns"}
+    fold = _centroids_fold(rc)
+    why = rc.refusal(ASSIGN_NAME) or _unpaired(
+        _lineage(rc.path(ASSIGN_NAME)), {"centroids_fold": (
+            fold, "stored assignments were made under a different quantizer "
+            "than the carried one")})
+    if why is not None:
+        return {ASSIGN_NAME: why}
+    rows = _llm("similarity").assign_nearest_list(
+        rc.churn_rows(ASSIGN_NAME), rc.stored(CENTROIDS_NAME))
+    return {ASSIGN_NAME: _Patched(
+        _patch_rows(rc, ASSIGN_NAME, rows), "patched",
+        rc.lineage(ASSIGN_NAME, centroids_fold=fold))}
 
 
 def _scattered_churn(path: str, touched: list[int]) -> str | None:
@@ -1706,761 +1955,205 @@ def _scattered_churn(path: str, touched: list[int]) -> str | None:
     return None
 
 
-def _patch_pq_codes(spark: SparkSession, path: str, ctx: dict,
-                    touched: list[int], churn_codes: DataFrame) -> int:
-    """The partition-pruned pq_codes patch: only the ``touched`` pbuckets
-    are read (a pruned scan) and re-written (dynamic partition overwrite)
-    — the unpartitioned delete+append rewrite was corpus-sized I/O no
-    matter how small the churn. Returns the churn rows' tie-cohort max."""
-    if not touched:
-        return 0
-    patched = (
-        spark.read.parquet(path)
-        .filter(F.col("pbucket").isin(touched))
-        .select("vec_id", "sub", "code")
-        .join(ctx["gone"], on="vec_id", how="left_anti")
-        .unionByName(churn_codes)
-        .withColumn("pbucket", _pq_bucket(F.col("vec_id")))
-        # reads partitions being overwritten — pin first
-        .localCheckpoint()
-    )
-    # one churn-bucket-sized aggregation of the PINNED patch (no re-encode)
-    churn_cohort = _llm("similarity").pq_code_cohort_max(
-        patched.select("vec_id", "sub", "code")
-        .join(ctx["delta_ids"], on="vec_id", how="left_semi"))
-    patched.write.mode("overwrite") \
-        .option("partitionOverwriteMode", "dynamic") \
-        .partitionBy("pbucket").parquet(path)
-    # a bucket whose every row was deleted writes nothing back — dynamic
-    # overwrite never touches it — so its stale directory is dropped by
-    # hand (bounded loop over the touched set)
-    present = {r["pbucket"]
-               for r in patched.select("pbucket").distinct().collect()}
-    for b in set(touched) - present:
-        shutil.rmtree(os.path.join(path, f"pbucket={b}"), ignore_errors=True)
-    return churn_cohort
-
-
-@_with_lease
-def update_pairs_incremental(spark: SparkSession, old_sf_dir: str,
-                             new_sf_dir: str, artifact_dir: str,
-                             _ctx: dict | None = None,
-                             new_digests: DataFrame | None = None,
-                             cc_min_edges: int | None = None,
-                             max_churn_frac: float | None = None) -> dict:
-    """Refresh the pair-graph, banded-index, CC-label and per-doc-digest
-    artifacts from a corpus SNAPSHOT DIFF instead of a full-corpus rebuild
-    — the 100 TB deployment shape: diff the snapshots (one doc_id-keyed
-    full-outer join whose OLD side is the stored ``doc_digests`` artifact
-    — two thin columns, no old-corpus re-hash, r9 judge item #2), shingle/
-    minhash only the churn, band-join it against the STORED banded index,
-    verify only fresh candidate pairs, splice
-    (``dedup.incremental_dedup_update``), then patch the stored CC labels
-    from the churn's own edge diff (``dedup.incremental_cc_update`` with
-    known added/removed edges — no full-graph anti-joins, r9 judge item
-    #1) and patch the digest artifact itself by fold arithmetic. The only
-    corpus-proportional text scan left is hashing the NEW snapshot once —
-    and even that disappears when the caller supplies ingest-computed
-    ``new_digests`` (r13 judge item #2; spot-check gated, scan fallback).
-    Wall cost of everything else ∝ churn (measured:
-    ``SCALE_PROBE_INCR_r10.json``).
-
-    CC strategy auto-select (r8 judge item #6): label-patching beats a
-    from-scratch relabel only past the measured ~80k-stored-edge crossover
-    (``SCALE_PROBE_CC_r8.json``; at 800k stored edges the known-edge-diff
-    patch this updater runs measures 0.395x of a full relabel —
-    ``SCALE_PROBE_CC_r10.json``); the updater counts the stored graph's
-    thresholded edges (one thin-artifact aggregate) and falls back to full
-    CC below ``cc_min_edges`` (default ``dedup.CC_INCR_MIN_EDGES``, read at
-    call time) — recorded as ``cc_mode``. ``max_churn_frac`` overrides
-    the churn-size gate (``INCR_MAX_CHURN_FRAC``, see ``_churn_gate``) for
-    this call only, as in ``update_text_incremental``.
-
-    Lineage gate (judge r8 #6): the stored artifacts must record — in their
-    meta sidecar's ``lineage.snapshot`` — the digest of EXACTLY the corpus
-    at ``old_sf_dir``; any mismatch (stale artifact, tampered meta,
-    pre-lineage artifact, params drift), or no old state at all (no valid
-    ``doc_digests`` and no old documents table: ``reason`` starts with
-    ``bootstrap``), forces a warned FULL REBUILD from ``new_sf_dir``
-    rather than silently patching the wrong index. A missing/stale CC or
-    digest artifact alone degrades only ITS piece to a full rebuild
-    (recorded in the summary), not the whole refresh. The patched
-    artifacts record ``lineage = {snapshot: digest(new), patched_from:
-    digest(old)}``, so a chain of refreshes is auditable.
-
-    Returns a summary dict: ``mode`` ('incremental' | 'full_rebuild'),
-    churn counts, ``cc_mode`` ('incremental' | 'full' | 'full_rebuild'),
-    ``old_side`` ('doc_digests' | 'corpus_scan'), and the artifact paths."""
-    D = _llm("dedup")
-    ctx = _ctx if _ctx is not None else _refresh_ctx(
-        spark, old_sf_dir, new_sf_dir, artifact_dir, new_digests=new_digests
-    )
-    old_digest, old_digests = ctx["old_digest"], ctx["old_digests"]
-    paths = [os.path.join(artifact_dir, name) for name in PAIRS_STATE]
-    reason = (
-        _bootstrap(ctx)
-        or _lineage_gate(artifact_dir, PAIRS_NAME, old_sf_dir, old_digest)
-        or _lineage_gate(artifact_dir, BANDS_NAME, old_sf_dir, old_digest)
-        or _churn_gate(ctx, limit=max_churn_frac)
-    )
-    if reason is not None:
-        warnings.warn(
-            f"cannot patch incrementally ({reason}); full rebuild from "
-            f"{new_sf_dir}"
-        )
-        # this session may hold entries reading (or seeded from) the very
-        # paths the rebuild overwrites — for old_sf_dir as much as
-        # new_sf_dir; drop them BEFORE rebuilding or later consumers read
-        # deleted/rewritten files (r8 review finding)
-        session_state.clear_loaded_under(spark, *paths)
-        return {"mode": "full_rebuild", "reason": reason,
-                **_rebuild(spark, new_sf_dir, artifact_dir, ctx["new_digest"],
-                           *PAIRS_STATE)}
-
-    # a missing/stale CC artifact degrades the label patch (only) to a
-    # full relabel of the patched graph — never the whole refresh
-    cc_reason = _lineage_gate(artifact_dir, CC_NAME, old_sf_dir, old_digest)
-    pairs_path = os.path.join(artifact_dir, PAIRS_NAME)
-    gone = ctx["gone"]
-    walls: dict[str, float] = {}
-    with _timed(walls, "pairs_bands_patch"):
-        old_pairs = spark.read.parquet(pairs_path)
-        old_bands = spark.read.parquet(os.path.join(artifact_dir, BANDS_NAME))
-        new_bands, new_pairs, fresh_pairs = D.incremental_dedup_update(
-            ctx["new_docs"], ctx["diff"].select("doc_id", "change"),
-            old_pairs, old_bands)
-        # the patched frames READ the very paths being overwritten: pin
-        # the bytes before mode("overwrite") deletes them (same trap class
-        # as the _seeded_from guard in materialize)
-        new_bands = new_bands.localCheckpoint()
-        new_pairs = new_pairs.localCheckpoint()
-
-    # ---- CC labels: patch from the churn's own edge diff, or relabel ----
-    with _timed(walls, "cc_patch"):
-        new_edges = D._threshold_edges(new_pairs)
-        if cc_reason is not None:
-            cc_mode = "full_rebuild"
-            labels = D.connected_components(new_edges)
-        else:
-            # pin every old-side read BEFORE the overwrites delete the bytes
-            old_edges = D._threshold_edges(old_pairs).localCheckpoint()
-            if old_edges.count() < (D.CC_INCR_MIN_EDGES if cc_min_edges
-                                    is None else cc_min_edges):
-                # below the measured crossover a from-scratch relabel is
-                # cheaper than the patch machinery (r8 judge item #6)
-                cc_mode = "full"
-                labels = D.connected_components(new_edges)
-            else:
-                cc_mode = "incremental"
-                old_cc = spark.read.parquet(
-                    os.path.join(artifact_dir, CC_NAME)).localCheckpoint()
-                removed = (
-                    old_edges.join(gone.withColumnRenamed("doc_id", "doc_a"),
-                                   on="doc_a", how="left_semi")
-                    .unionByName(
-                        old_edges.join(
-                            gone.withColumnRenamed("doc_id", "doc_b"),
-                            on="doc_b", how="left_semi"))
-                    .distinct()
-                )
-                # fresh_pairs is pinned inside the patch, so thresholding
-                # it here is a cheap filter over the checkpoint
-                labels = D.incremental_cc_update(
-                    old_cc, new_edges,
-                    known_added=D._threshold_edges(fresh_pairs),
-                    known_removed=removed,
-                )
-        labels = labels.localCheckpoint()
-
-    lineage = {"snapshot": ctx["new_digest"], "patched_from": old_digest}
-    # patched_from is PER-ARTIFACT: it records that THIS artifact's own
-    # old bytes were consumed (r9 advisor finding). Only
-    # cc_mode='incremental' consumed the stored labels; a relabel of the
-    # patched graph records patched_from: None plus a 'via' note so the
-    # audit chain still shows the content descends from the patch chain
-    cc_lineage = lineage if cc_mode == "incremental" else {
-        "snapshot": ctx["new_digest"], "patched_from": None,
-        "via": "relabel_of_patched_pair_graph"}
-    for name, rel, lin in (
-            (PAIRS_NAME, new_pairs, lineage), (BANDS_NAME, new_bands, lineage),
-            (CC_NAME, labels.select("node", "label"), cc_lineage),
-            (DIGESTS_NAME, ctx["new_digests_rel"], _digests_lineage(ctx))):
-        with _timed(walls, name + "_write"):
-            _land(rel, new_sf_dir, artifact_dir, name, lin)
-    # any session entry seeded from these paths now reads rewritten bytes;
-    # entries built elsewhere (another corpus's pair graph) stay
-    session_state.clear_loaded_under(spark, *paths)
-    summary = {"mode": "incremental", "churn": ctx["churn"],
-               "cc_mode": cc_mode,
-               "old_side": "doc_digests" if old_digests is not None
-               else "corpus_scan", "walls": walls,
-               **dict(zip(PAIRS_STATE, paths))}
-    if cc_reason is not None:
-        summary["cc_reason"] = cc_reason
-    if ctx["dig_note"] is not None:
-        summary["digests_note"] = ctx["dig_note"]
-    if ctx.get("supplied") is not None:
-        summary["new_digests"] = ctx["supplied"]
-    return summary
-
-
-@_with_lease
-def update_text_incremental(spark: SparkSession, old_sf_dir: str,
-                            new_sf_dir: str, artifact_dir: str,
-                            _ctx: dict | None = None,
-                            max_churn_frac: float | None = None,
-                            new_digests: DataFrame | None = None) -> dict:
-    """Refresh the TEXT-SIDE artifacts from the snapshot diff (r8 judge
-    item #3). ``doc_signals`` and ``token_spine`` are strictly per-doc
-    relations: the patch deletes gone docs' rows and appends freshly-
-    computed churn rows — no tokenization of the unchanged corpus.
-    ``shared_spans`` is NOT per-doc (sharedness is a cross-doc property: a
-    churned doc can make an unchanged doc's span shared, or unshared), so
-    the patch goes through two sidecars: the per-doc ``span_pos_index``
-    (positions delete/append — the tokenize+gram+hash, the compute-
-    dominant cost, runs over churn only) and — since r13 (r12 judge item
-    #3) — the ``span_stats`` per-hash distinct-doc counts, which make
-    sharedness itself churn-patchable: the churn's (h, doc) presence
-    delta updates the counts, the hashes that FLIP shared status (a
-    churn-sized set) drive targeted row deletes/inserts on the stored
-    ``shared_spans``, and zero corpus-proportional shuffles remain. The
-    honest residuals, disclosed in BASELINE.md: rewriting the two thin
-    artifacts streams their untouched rows through broadcast-anti scans,
-    and newly-shared hashes pull matching positions from the index via
-    one broadcast-semi scan (skipped when no hash flipped to shared).
-
-    Per-artifact degradation: each piece whose stored lineage does not
-    match the old snapshot is rebuilt in full from ``new_sf_dir`` with a
-    warning (recorded in the summary), without failing the others. A
-    missing ``span_pos_index`` (e.g. pre-r9 artifact dirs) rebuilds both
-    it and ``shared_spans``. With no old state at all (no valid
-    ``doc_digests`` and no old documents table) every piece rebuilds, and
-    ``reason`` starts with ``bootstrap``. All patched metas record
-    ``lineage = {snapshot: digest(new), patched_from: digest(old)}``.
-
-    ``max_churn_frac`` overrides the default churn-size gate
-    (``INCR_MAX_CHURN_FRAC``, see ``_churn_gate``) for this call only —
-    for callers whose churn is fixed by construction and that must
-    prove the patch path ran (the registered incremental_refresh section
-    and the ingest loop derive ~40% churn)."""
-    T = _llm("text")
-    ctx = _ctx if _ctx is not None else _refresh_ctx(
-        spark, old_sf_dir, new_sf_dir, artifact_dir, new_digests=new_digests
-    )
-    old_digest, new_docs = ctx["old_digest"], ctx["new_docs"]
-    gone = ctx["gone"]
-    lineage = {"snapshot": ctx["new_digest"], "patched_from": old_digest}
-    # rebuilt-from-scratch artifacts record patched_from: None — the old
-    # bytes were NOT an input, and claiming a patch occurred makes the
-    # audit chain lie (r9 advisor finding)
-    rebuilt_lineage = {"snapshot": ctx["new_digest"], "patched_from": None}
-    churn_reason = _bootstrap(ctx) or _churn_gate(ctx, limit=max_churn_frac)
-    churn_docs = None if churn_reason else new_docs.join(
-        ctx["delta_ids"], on="doc_id", how="left_semi")
-    walls: dict[str, float] = {}
-    # mirror the dedup updater's reporting (r10 review finding): a
-    # churn-gated refresh rebuilds EVERY text artifact, so the summary
-    # says so instead of claiming an incremental mode it didn't run
-    summary: dict = {"mode": ("full_rebuild" if churn_reason is not None
-                              else "incremental"),
-                     "churn": ctx["churn"], "walls": walls}
-    if churn_reason is not None:
-        summary["reason"] = churn_reason
-    if ctx.get("supplied") is not None:
-        summary["new_digests"] = ctx["supplied"]
-
-    def gate(name):
-        return churn_reason or _lineage_gate(artifact_dir, name, old_sf_dir,
-                                             old_digest)
-
-    for name, build_rel in ((SIGNALS_NAME, T.doc_signals_relation),
-                            (SPINE_NAME, T.token_spine_relation)):
-        with _timed(walls, name):
-            why = gate(name)
-            if why is None:
-                _patch_rows(spark, new_sf_dir, artifact_dir, name, ctx,
-                            build_rel(churn_docs), lineage)
-                summary[name] = "patched"
-            else:
-                warnings.warn(f"{name}: cannot patch ({why}); full rebuild")
-                _land(build_rel(new_docs), new_sf_dir, artifact_dir, name,
-                      rebuilt_lineage)
-                summary[name] = "full_rebuild"
-
-    # spans: per-doc POSITIONS patched; sharedness patched CHURN-SIZED
-    # from the churn's own (h, doc) presence delta against the stored
-    # span_stats counts (r12 judge item #3 — this replaced the
-    # corpus-proportional re-derivation, whose groupBy-h shuffle over
-    # every position was ~equal to a full rebuild at every probe factor)
-    pos_why = gate(SPANPOS_NAME)
-    spans_why = (
-        pos_why
-        or _lineage_gate(artifact_dir, SPANS_NAME, old_sf_dir, old_digest)
-        or _lineage_gate(artifact_dir, SPANSTATS_NAME, old_sf_dir, old_digest)
-    )
-    with _timed(walls, SPANPOS_NAME):
-        if pos_why is None:
-            # churn-sized; consumed by the pos patch AND the sharedness patch
-            churn_pos = T.span_pos_relation(churn_docs).localCheckpoint()
-            # gone docs' (h, doc) presence — read from the OLD index (a
-            # broadcast semi scan, churn-sized output) and pinned BEFORE
-            # the pos overwrite deletes the bytes
-            gone_pairs = (
-                spark.read.parquet(os.path.join(artifact_dir, SPANPOS_NAME))
-                .join(gone, on="doc_id", how="left_semi")
-                .select("h", "doc_id").distinct().localCheckpoint()
-            )
-            new_pos = _patch_rows(spark, new_sf_dir, artifact_dir,
-                                  SPANPOS_NAME, ctx, churn_pos, lineage)
-            summary[SPANPOS_NAME] = "patched"
-        else:
-            warnings.warn(f"{SPANPOS_NAME}: cannot patch ({pos_why}); "
-                          "full rebuild (and shared_spans with it)")
-            new_pos = T.span_pos_relation(new_docs).localCheckpoint()
-            _land(new_pos, new_sf_dir, artifact_dir, SPANPOS_NAME,
-                  rebuilt_lineage)
-            summary[SPANPOS_NAME] = "full_rebuild"
-    if spans_why is None:
-        # ---- churn-sized sharedness patch ----
-        # stats side: per-hash distinct-doc-count delta from the churn's
-        # own presence pairs. ALL churn-touched hashes ride ``trans``
-        # (including net-zero ones — a modified doc that keeps a hash
-        # must still re-enter the spans patch below), so every relation
-        # here is churn-sized and broadcastable.
-        with _timed(walls, SPANSTATS_NAME):
-            old_stats = spark.read.parquet(
-                os.path.join(artifact_dir, SPANSTATS_NAME))
-            add_pairs = churn_pos.select("h", "doc_id").distinct()
-            delta = (
-                gone_pairs.withColumn("d", F.lit(-1))
-                .unionByName(add_pairs.withColumn("d", F.lit(1)))
-                .groupBy("h").agg(F.sum("d").cast("bigint").alias("dn"))
-                .localCheckpoint()
-            )
-            # old counts for touched hashes: a broadcast-inner scan of the
-            # thin stats artifact — shuffle-free; brand-new hashes have no
-            # stats row (n_old = 0)
-            matched = (
-                old_stats.join(F.broadcast(delta), on="h")
-                .select("h", F.col("n_docs").alias("n_old"),
-                        (F.col("n_docs") + F.col("dn")).alias("n_new"))
-            )
-            fresh_h = (
-                delta.join(matched.select("h"), on="h", how="left_anti")
-                .select("h", F.lit(0).cast("bigint").alias("n_old"),
-                        F.col("dn").alias("n_new"))
-            )
-            trans = matched.unionByName(fresh_h).localCheckpoint()
-            newly_shared = trans.filter(
-                (F.col("n_old") < 2) & (F.col("n_new") >= 2)).select("h")
-            newly_unshared = trans.filter(
-                (F.col("n_old") >= 2) & (F.col("n_new") < 2)).select("h")
-            # stats patch: untouched rows stream through one
-            # broadcast-anti scan (shuffle-free, the honest thin-artifact
-            # residual); touched rows are replaced churn-sized. Pinned
-            # before its overwrite.
-            new_stats = (
-                old_stats.join(F.broadcast(trans.select("h")), on="h",
-                               how="left_anti")
-                .unionByName(trans.filter(F.col("n_new") > 0)
-                             .select("h", F.col("n_new").alias("n_docs")))
-                .localCheckpoint()
-            )
-            _land(new_stats, new_sf_dir, artifact_dir, SPANSTATS_NAME, lineage)
-            summary[SPANSTATS_NAME] = "patched"
-        # spans patch: delete gone docs' rows and flipped-unshared rows
-        # (both broadcast-anti — shuffle-free); add the churn docs' shared
-        # rows (their hashes are all in ``trans``, so the shared test is a
-        # churn-sized broadcast) and the UNCHANGED docs' rows of newly
-        # shared hashes — a broadcast-semi scan of the patched position
-        # index, skipped entirely when nothing became newly shared
-        # (bounded existence check). Zero corpus-proportional shuffles.
-        with _timed(walls, SPANS_NAME):
-            kept = (
-                spark.read.parquet(os.path.join(artifact_dir, SPANS_NAME))
-                .join(gone, on="doc_id", how="left_anti")
-                .join(F.broadcast(newly_unshared), on="h", how="left_anti")
-            )
-            add_churn = churn_pos.join(
-                F.broadcast(trans.filter(F.col("n_new") >= 2).select("h")),
-                on="h", how="left_semi").select("doc_id", "i", "h")
-            new_spans = kept.select("doc_id", "i", "h").unionByName(add_churn)
-            if not newly_shared.isEmpty():  # bounded existence check
-                new_spans = new_spans.unionByName(
-                    new_pos.join(F.broadcast(newly_shared), on="h",
-                                 how="left_semi")
-                    .join(ctx["delta_ids"], on="doc_id", how="left_anti")
-                    .select("doc_id", "i", "h"))
-            # reads the path being overwritten — pin first
-            _land(new_spans.localCheckpoint(), new_sf_dir, artifact_dir,
-                  SPANS_NAME, lineage)
-            summary[SPANS_NAME] = "patched"
-    else:
-        # derive both from the (patched or rebuilt) position index: stats
-        # via one distinct+count shuffle, sharedness from the stats — the
-        # pre-r13 fallback for pre-r13 artifact dirs and churn-gated
-        # rebuilds. new_pos is checkpointed, so deriving after the pos
-        # overwrite reads the checkpoint, not the rewritten path.
-        pos_patched = summary[SPANPOS_NAME] == "patched"
-        if pos_patched:
-            warnings.warn(f"{SPANS_NAME}/{SPANSTATS_NAME}: cannot patch "
-                          f"({spans_why}); re-deriving from the patched "
-                          "position index")
-        derived_lineage = {
-            "snapshot": ctx["new_digest"], "patched_from": None,
-            "via": ("rederived_from_patched_span_pos" if pos_patched
-                    else "corpus_rebuild")}
-        derived_mode = "rederived" if pos_patched else "full_rebuild"
-        with _timed(walls, SPANSTATS_NAME):
-            stats_rel = T.span_doc_stats(new_pos).localCheckpoint()
-            _land(stats_rel, new_sf_dir, artifact_dir, SPANSTATS_NAME,
-                  derived_lineage)
-        with _timed(walls, SPANS_NAME):
-            _land(T.shared_spans_relation(new_pos, stats=stats_rel),
-                  new_sf_dir, artifact_dir, SPANS_NAME, derived_lineage)
-        summary[SPANSTATS_NAME] = summary[SPANS_NAME] = derived_mode
-
-    # session entries seeded from these paths now read rewritten bytes;
-    # entries built elsewhere stay. The quantile shard breaks derive FROM
-    # the spine: when a spine entry fell, post-refresh pack/batch plans
-    # would shard new doc_ids against pre-churn quantiles — values stay
-    # correct (breaks are monotone) but added ids pile into the top
-    # shard, re-creating the skew the quantile pass exists to prevent
-    # (r10 review finding)
-    dropped = session_state.clear_loaded_under(spark, *(
-        os.path.join(artifact_dir, name) for name in
-        (SIGNALS_NAME, SPINE_NAME, SPANPOS_NAME, SPANSTATS_NAME, SPANS_NAME)))
-    if "token_spine" in dropped:
-        session_state.clear(spark, "breaks")
-    return summary
-
-
-@_with_lease
-def update_centroids_incremental(spark: SparkSession, old_sf_dir: str,
-                                 new_sf_dir: str, artifact_dir: str,
-                                 max_churn_frac: float | None = None,
-                                 new_vec_digests: DataFrame | None = None,
-                                 new_vec_changelog: DataFrame | None = None) -> dict:
-    """Refresh the EMBEDDINGS-side artifacts (``ivf_centroids`` +
-    ``vec_digests``) from the embeddings snapshot diff — the shared
-    ``_refresh_ctx`` on the embeddings side, with the same supplied
-    digests and changelog contract as the documents side. The quantizer
-    is a trained model, not a per-row relation, so there is no row patch;
-    the refresh decision is CARRY vs RETRAIN (``_carry_or_retrain``):
-
-    * **carry** — the stored quantizer's bytes are kept verbatim and only
-      its meta is re-pointed at the new snapshot (lineage records
-      ``carried_from``). Sound because IVF recall depends on how well the
-      centroids cover the vector DISTRIBUTION, and bounded churn bounds
-      distribution shift: removals only empty lists (never probed — a
-      waste, not an error) and covered additions land in existing lists.
-      Cost: one skinny digest diff + one churn-sized drift check — at
-      100 TB this replaces 2-corpus-scans-per-Lloyd-iteration retraining
-      with work proportional to the churn.
-    * **retrain** — full ``materialize`` of the quantizer on the new corpus,
-      forced by any gate: (1) lineage (stored quantizer not trained on
-      exactly the old snapshot — params drift, pre-r12 meta, tampering);
-      (2) churn fraction > ``CENTROID_MAX_CHURN_FRAC`` of the old vector
-      count; (3) drift — the churn cohort's mean quantization gap
-      (``similarity.quantization_gap``) exceeds ``ratio * training-time
-      mean + margin`` against the stored ``stats.mean_qe`` baseline.
-
-    ``vec_digests`` itself patches by delete+append with fold-arithmetic
-    lineage (the ``doc_digests`` pattern) whenever the stored artifact is
-    valid, regardless of which way the quantizer decision went. A stored
-    ``ivf_assignments`` inverted index (opt-in) patches churn-sized under
-    a carry — delete gone rows, assign only the churn against the carried
-    quantizer (identical to full reassignment: assignment is
-    deterministic per vector) — and rebuilds under a retrain.
-
-    Stored PQ state (opt-in, r14) refreshes by the same split:
-    ``pq_codebooks`` is a trained model — carry-or-retrain under its own
-    lineage gate, the shared churn-fraction gate, and a PQ drift gate
-    (churn cohort's mean ``similarity.pq_quantization_gap`` vs the
-    training-time ``stats.mean_pq_qe``, same ratio/margin). r16: the
-    sub-quantizers fit RESIDUALS against the coarse quantizer, so a
-    coarse retrain changes every residual's basis and forces a PQ retrain
-    (and a codes rebuild); a PQ retrain alone leaves the coarse artifact
-    alone. ``pq_codes`` is a per-row relation — under a codebook carry
-    only the pbuckets the churn touches are read and re-written (delete
-    gone + encode only the churn; encoding is deterministic per vector),
-    falling back to a full rebuild under a retrain or scattered churn.
-    Summary keys: ``pq_codebooks`` ('carried' | 'retrained' | 'absent'),
-    ``pq_codes`` ('patched' | 'full_rebuild' | 'absent'),
-    ``pq_churn_qe`` / ``pq_trained_qe`` / ``pq_reason`` when those gates
-    ran.
-
-    Returns a summary: ``mode`` ('carried' | 'retrained'), ``churn``
-    counts, ``reason`` (why retrained — ``bootstrap (...)`` when there is
-    no old state to refresh from — or why the drift check was skipped),
-    ``churn_qe``/``trained_qe`` when the drift gate ran, per-artifact
-    ``walls``, ``vec_digests`` ('patched' | 'full_rebuild'), and
-    ``ivf_assignments`` ('patched' | 'full_rebuild' | 'absent').
-
-    ``max_churn_frac`` overrides ``CENTROID_MAX_CHURN_FRAC`` for this
-    call only: the registered ``stored_index`` section derives ~40%
-    churn by construction, above the 0.25 default, and must prove the
-    carry path ran. The lineage and drift gates are NOT overridable: a
-    wrong-snapshot or drifted quantizer always retrains."""
+def _patch_pq_codes(rc: _Refresh) -> dict:
+    """The compressed corpus under carried codebooks, partition-pruned:
+    only the ``pbucket``s the churn touches are read (a pruned scan) and
+    re-written (dynamic partition overwrite) — gone rows deleted, only the
+    churn encoded, deterministic per vector. A codebook retrain re-encodes
+    every vector, and scattered churn rebuilds (``_scattered_churn``)."""
     S = _llm("similarity")
-    walls: dict[str, float] = {}
-    summary: dict = {"walls": walls}
-    with _timed(walls, "diff"):
-        ctx = _refresh_ctx(spark, old_sf_dir, new_sf_dir, artifact_dir,
-                           new_vec_digests, new_vec_changelog, "embeddings")
-    old_digest, new_digest = ctx["old_digest"], ctx["new_digest"]
-    if ctx["dig_note"] is not None:
-        summary["vec_digests_note"] = ctx["dig_note"]
-    if ctx["supplied"] is not None:
-        summary["new_vec_digests"] = ctx["supplied"]
-    # a session entry seeded from these paths no longer reflects what the
-    # artifacts are about to say — drop it before any rewrite, so the
-    # rebuilds' seeded-path guard cannot skip them; the next consumer
-    # re-seeds from the artifact
-    session_state.clear_loaded_under(spark, *(
-        os.path.join(artifact_dir, name) for name in EMB_STATE))
-    if old_digest is None:
-        # full build on the new snapshot; present optional state trained,
-        # assigned or encoded under the pre-bootstrap corpus must not
-        # survive it
-        names = [CENTROIDS_NAME, VECDIG_NAME]
-        for name, spec in ARTIFACTS.items():
-            if spec.side == "embeddings" and spec.optional:
-                if _has_meta(artifact_dir, name) and \
-                        spec.needs in (None, *names):
-                    names.append(name)
-                    summary[name] = "full_rebuild"
-                else:
-                    summary[name] = "absent"
-        _rebuild(spark, new_sf_dir, artifact_dir, new_digest, *names,
-                 walls=walls)
-        summary.update({"mode": "retrained", "reason": _bootstrap(ctx),
-                        VECDIG_NAME: "full_rebuild"})
-        return summary
+    if rc.modes[PQCB_NAME] != "carried":
+        return {PQCODES_NAME: "codebooks retrained — every vector re-encodes"}
+    path, ctx = rc.path(PQCODES_NAME), rc.side(PQCODES_NAME)
+    cb, cent = rc.stored(PQCB_NAME), rc.stored(CENTROIDS_NAME)
+    why = rc.refusal(PQCODES_NAME)
+    if why is None:
+        cb_fold = _content_fold(cb, "sub", "lid")
+        lin = _lineage(path)
+        stored_cohort = (lin.get("stats") or {}).get("max_code_cohort")
+        why = _unpaired(lin, {
+            "codebooks_fold": (cb_fold, "stored codes were encoded under "
+                               "different codebooks than the carried ones"),
+            # r16: residual codes are basis-bound to the coarse quantizer
+            "centroids_fold": (_centroids_fold(rc), "stored codes encode "
+                               "residuals against a different coarse "
+                               "quantizer than the carried one")})
+        if why is None and stored_cohort is None:
+            # a rebuild recomputes the tie-cohort bound exactly
+            why = ("stored codes meta records no max_code_cohort — the "
+                   "tie-cohort bound cannot be maintained under a patch")
+    if why is None:
+        # bounded collect (<= churn rows, usually a handful of buckets)
+        touched = sorted(
+            r["b"] for r in ctx["gone"].unionByName(ctx["delta_ids"])
+            .select(_pq_bucket(F.col("vec_id")).alias("b")).distinct().collect())
+        why = _scattered_churn(path, touched)
+    if why is not None:
+        return {PQCODES_NAME: why}
+    churn_cohort = 0
+    if touched:
+        patched = (
+            rc.spark.read.parquet(path).filter(F.col("pbucket").isin(touched))
+            .select("vec_id", "sub", "code")
+            .join(ctx["gone"], on="vec_id", how="left_anti")
+            .unionByName(S.pq_encode(rc.churn_rows(PQCODES_NAME), cb, cent))
+            .withColumn("pbucket", _pq_bucket(F.col("vec_id")))
+            .localCheckpoint()  # reads partitions being overwritten
+        )
+        churn_cohort = S.pq_code_cohort_max(
+            patched.select("vec_id", "sub", "code")
+            .join(ctx["delta_ids"], on="vec_id", how="left_semi"))
+        patched.write.mode("overwrite") \
+            .option("partitionOverwriteMode", "dynamic") \
+            .partitionBy("pbucket").parquet(path)
+        # dynamic overwrite never touches a bucket whose every row was
+        # deleted: drop its stale directory by hand
+        present = {r["pbucket"]
+                   for r in patched.select("pbucket").distinct().collect()}
+        for b in set(touched) - present:
+            shutil.rmtree(os.path.join(path, f"pbucket={b}"),
+                          ignore_errors=True)
+    # maintained tie-cohort bound: a signature's post-patch population is
+    # at most the stored max plus the churn's max — a SAFE upper bound in
+    # O(churn) work, so auto-refine can only over-size its shortlist
+    return {PQCODES_NAME: _Patched(None, "patched", rc.lineage(
+        PQCODES_NAME, codebooks_fold=cb_fold,
+        centroids_fold=_centroids_fold(rc),
+        stats={"max_code_cohort": int(stored_cohort) + int(churn_cohort)}))}
 
-    summary["churn"] = ctx["churn"]
-    # the churn cohort: every drift check, assignment and encode runs on it
-    fresh = _embedding_vectors(spark, new_sf_dir).join(
-        ctx["delta_ids"], on="vec_id", how="left_semi")
-    limit = (CENTROID_MAX_CHURN_FRAC if max_churn_frac is None
-             else max_churn_frac)
-    with _timed(walls, CENTROIDS_NAME):
-        summary["mode"] = _carry_or_retrain(
-            spark, ctx, old_sf_dir, new_sf_dir, artifact_dir, CENTROIDS_NAME,
-            limit, summary, prefix="", stats_key="mean_qe",
-            what="quantization gap",
-            gap=lambda cent: S.quantization_gap(fresh, cent))
-    carried = summary["mode"] == "carried"
-    with _timed(walls, VECDIG_NAME):
-        _land(ctx["new_digests_rel"], new_sf_dir, artifact_dir, VECDIG_NAME,
-              _digests_lineage(ctx))
-    summary[VECDIG_NAME] = ("patched" if ctx["old_digests"] is not None
-                            else "full_rebuild")
 
-    has = {name: _has_meta(artifact_dir, name)
-           for name in (ASSIGN_NAME, PQCB_NAME, PQCODES_NAME)}
-    cent = spark.read.parquet(os.path.join(artifact_dir, CENTROIDS_NAME))
-    cent_fold = (_content_fold(cent, "lid")  # post-decision bytes
-                 if has[ASSIGN_NAME] or has[PQCB_NAME] else None)
+#: the patch hook each artifact is refreshed by
+_HOOK_OF = {n: name for name, spec in ARTIFACTS.items() if spec.patch
+            for n in (name, *spec.lands)}
+_DIGESTS = {s.digests for s in _SIDES.values()}
 
-    # --- stored inverted index (opt-in): patch under a carry ---------------
-    if has[ASSIGN_NAME]:
-        with _timed(walls, ASSIGN_NAME):
-            if carried:
-                why = _lineage_gate(artifact_dir, ASSIGN_NAME, old_sf_dir,
-                                    old_digest) or _unpaired(
-                    _lineage(os.path.join(artifact_dir, ASSIGN_NAME)),
-                    {"centroids_fold": (
-                        cent_fold, "stored assignments were made under a "
-                        "different quantizer than the carried one")})
-            else:
-                why = "quantizer retrained — every vector reassigns"
-            if why is None:
-                _patch_rows(spark, new_sf_dir, artifact_dir, ASSIGN_NAME, ctx,
-                            S.assign_nearest_list(fresh, cent),
-                            {"snapshot": new_digest,
-                             "centroids_fold": cent_fold,
-                             "patched_from": old_digest})
-                summary[ASSIGN_NAME] = "patched"
-            else:
-                if carried:
-                    # a retrain REASSIGNING everything is by design, not a
-                    # degradation — only a carried-mode patch failure warns
-                    warnings.warn(f"{ASSIGN_NAME}: cannot patch ({why}); "
-                                  "full rebuild")
-                _rebuild(spark, new_sf_dir, artifact_dir, new_digest,
-                         ASSIGN_NAME)
-                summary[ASSIGN_NAME] = "full_rebuild"
-    else:
-        summary[ASSIGN_NAME] = "absent"
 
-    # --- PQ codebooks (opt-in): the quantizer's carry-or-retrain with
-    # PQ's own drift statistic, coupled to the coarse decision ------------
-    if not has[PQCB_NAME]:
-        summary[PQCB_NAME] = summary[PQCODES_NAME] = "absent"
-        return summary
-    with _timed(walls, PQCB_NAME):
-        summary[PQCB_NAME] = _carry_or_retrain(
-            spark, ctx, old_sf_dir, new_sf_dir, artifact_dir, PQCB_NAME,
-            limit, summary, prefix="pq_", stats_key="mean_pq_qe",
-            what="PQ quantization gap",
-            gap=lambda cb: S.pq_quantization_gap(fresh, cb, cent),
-            reason=None if carried else (
-                "coarse quantizer retrained — the residual basis changed "
-                "under the sub-quantizers"),
-            # the carried residual basis must be the carried coarse
-            # quantizer; a carry records it again
-            paired={"centroids_fold": (
-                cent_fold, "stored codebooks were trained on residuals vs a "
-                "different coarse quantizer than the carried one")})
-
-    # --- pq_codes: bucket patch under a carry, rebuild under a retrain ---
-    if not has[PQCODES_NAME]:
-        summary[PQCODES_NAME] = "absent"
-        return summary
-    codes_path = os.path.join(artifact_dir, PQCODES_NAME)
-    with _timed(walls, PQCODES_NAME):
-        cb = spark.read.parquet(os.path.join(artifact_dir, PQCB_NAME))
-        if summary[PQCB_NAME] == "retrained":
-            why = "codebooks retrained — every vector re-encodes"
-        else:
-            why = _lineage_gate(artifact_dir, PQCODES_NAME, old_sf_dir,
-                                old_digest)
-        if why is None:
-            cb_fold = _content_fold(cb, "sub", "lid")
-            lin = _lineage(codes_path)
-            stored_cohort = (lin.get("stats") or {}).get("max_code_cohort")
-            why = _unpaired(lin, {
-                "codebooks_fold": (cb_fold, "stored codes were encoded "
-                                   "under different codebooks than the "
-                                   "carried ones"),
-                # r16: residual codes are basis-bound to the coarse
-                # quantizer too
-                "centroids_fold": (cent_fold, "stored codes encode residuals "
-                                   "against a different coarse quantizer "
-                                   "than the carried one")})
-            if why is None and stored_cohort is None:
-                # params-gated r16 artifacts always carry it; a hand-edited
-                # meta without it cannot maintain the bound — a rebuild
-                # recomputes it exactly
-                why = ("stored codes meta records no max_code_cohort — the "
-                       "tie-cohort bound cannot be maintained under a patch")
-        if why is None:
-            # the buckets the churn touches — bounded collect (<= churn
-            # rows, usually a handful of distinct buckets)
-            touched = sorted(
-                r["b"] for r in
-                ctx["gone"].unionByName(ctx["delta_ids"])
-                .select(_pq_bucket(F.col("vec_id")).alias("b"))
-                .distinct().collect()
-            )
-            why = _scattered_churn(codes_path, touched)
-        if why is None:
-            churn_cohort = _patch_pq_codes(spark, codes_path, ctx, touched,
-                                           S.pq_encode(fresh, cb, cent))
-            # maintained tie-cohort bound: any signature's post-patch
-            # population is (surviving rows of that signature, <= stored
-            # max) + (churn rows of it, <= churn max) — so stored + churn
-            # is a SAFE upper bound in O(churn) work; deletions only
-            # shrink cohorts, and a rebuild recomputes the exact value.
-            # Auto-refine reading the bound can only over-size the
-            # shortlist, never under-cover a cohort.
-            bound = int(stored_cohort) + int(churn_cohort)
-            _land(None, new_sf_dir, artifact_dir, PQCODES_NAME,
-                  {"snapshot": new_digest, "codebooks_fold": cb_fold,
-                   "centroids_fold": cent_fold, "patched_from": old_digest,
-                   "stats": {"max_code_cohort": bound}})
-            summary[PQCODES_NAME] = "patched"
-            summary["pq_max_code_cohort"] = bound
-        else:
-            if summary[PQCB_NAME] != "retrained":
-                # only a carried-mode patch failure is a degradation
-                warnings.warn(f"{PQCODES_NAME}: cannot patch ({why}); "
-                              "full rebuild")
-            _rebuild(spark, new_sf_dir, artifact_dir, new_digest,
-                     PQCODES_NAME)
-            summary[PQCODES_NAME] = "full_rebuild"
-            summary["pq_codes_reason"] = why
-    return summary
+def refresh_closure(names=None) -> tuple[str, ...]:
+    """The artifacts ``refresh(names=...)`` refreshes, in walk order:
+    ``names`` (default: all), the artifacts their hooks land with them or
+    read, and each side's digests artifact, last."""
+    want: set = set()
+    todo = list(ARTIFACTS if names is None else names)
+    while todo:
+        hook = _HOOK_OF[todo.pop()]
+        if hook not in want:
+            spec = ARTIFACTS[hook]
+            want.update((hook, *spec.lands))
+            todo.extend((*spec.reads, _SIDES[spec.side].digests))
+    order = list(ARTIFACTS)
+    return tuple(sorted(want, key=lambda n: (n in _DIGESTS, order.index(n))))
 
 
 @_with_lease
-def update_all_incremental(spark: SparkSession, old_sf_dir: str,
-                           new_sf_dir: str, artifact_dir: str,
-                           new_digests: DataFrame | None = None,
-                           new_vec_digests: DataFrame | None = None,
-                           new_changelog: DataFrame | None = None,
-                           new_vec_changelog: DataFrame | None = None) -> dict:
-    """One-call incremental refresh of EVERY refreshable artifact — the
-    ``build_artifacts.py --incremental`` entry point. Builds the shared
-    diff/digest context ONCE (it must be captured before either updater
-    overwrites the ``doc_digests`` artifact), then patches the text-side
-    artifacts, the dedup-side chain (pairs, bands, CC labels, digests),
-    and — when the new snapshot carries an ``embeddings`` table — the
-    embeddings side (``update_centroids_incremental``: quantizer
-    carry-or-retrain + ``vec_digests`` patch). A snapshot without
-    embeddings records the side as skipped rather than failing the text/
-    dedup refresh (the scale-probe corpora and any text-only deployment
-    are documents-only).
+def refresh(spark: SparkSession, old_sf_dir: str, new_sf_dir: str,
+            artifact_dir: str, names=None, *,
+            max_churn_frac: float | None = None,
+            cc_min_edges: int | None = None,
+            new_digests: DataFrame | None = None,
+            new_changelog: DataFrame | None = None,
+            new_vec_digests: DataFrame | None = None,
+            new_vec_changelog: DataFrame | None = None) -> dict:
+    """Refresh the stored artifacts ``names`` (default: all) and what they
+    need (``refresh_closure``) from the snapshot at ``old_sf_dir`` to the
+    one at ``new_sf_dir``, patching from the snapshot diff instead of
+    rebuilding. A query pays only for what it reads: the EDBT 2020
+    incremental top-k framework's rule (PAPERS.md).
 
-    ``new_digests`` / ``new_vec_digests``: optional ingest-provided
-    per-row digest relations for the NEW snapshot (r13 judge item #2) —
-    with both, the refresh hashes no corpus anywhere; each is spot-check
-    gated and falls back to the scan with a warning (recorded in the
-    summaries as ``new_digests`` / ``new_vec_digests``).
+    One ``_refresh_ctx`` per corpus side (the diff, its churn counts and
+    the new snapshot's digests, hashed nowhere when the caller supplies
+    ingest-computed ``new_digests``/``new_changelog`` or their ``vec``
+    twins, each gated and falling back to the scan with a warning). A
+    side whose table the new snapshot lacks is ``absent``, as is an opt-in
+    artifact never landed, or one whose ``needs`` sibling is absent.
 
-    ``new_changelog`` / ``new_vec_changelog``: optional CDC-shaped churn
-    changelogs ((id, change, digest_new)) for the documents and
-    embeddings sides — with them, churn detection itself is O(churn)
-    (no corpus-wide diff join on either side); each gated by
-    ``_changelog_gate``, falling back to the supplied digests then the
-    scan."""
-    ctx = _refresh_ctx(spark, old_sf_dir, new_sf_dir, artifact_dir,
-                       new_digests=new_digests,
-                       new_changelog=new_changelog)
-    text = update_text_incremental(spark, old_sf_dir, new_sf_dir,
-                                   artifact_dir, _ctx=ctx)
-    dedup = update_pairs_incremental(spark, old_sf_dir, new_sf_dir,
-                                     artifact_dir, _ctx=ctx)
-    if os.path.exists(os.path.join(new_sf_dir, "embeddings.parquet")):
-        emb = update_centroids_incremental(spark, old_sf_dir, new_sf_dir,
-                                           artifact_dir,
-                                           new_vec_digests=new_vec_digests,
-                                           new_vec_changelog=new_vec_changelog)
-    else:
-        emb = {"mode": "skipped",
-               "reason": "no embeddings table in the new snapshot"}
-    return {"dedup": dedup, "text": text, "embeddings": emb}
+    Each artifact then runs its ``ArtifactSpec.patch`` hook, in table
+    order, landed through ``_land``. When a gate refuses — bootstrap (no
+    stored digests and no old table), a stored lineage that is not exactly
+    the old snapshot's (stale, tampered, pre-lineage, params drift), churn
+    past the hook's limit (``INCR_MAX_CHURN_FRAC``, ``max_churn_frac``
+    for this call), or the hook's own — ``_rebuild`` builds it from the
+    new snapshot instead, with a warning unless an input it reads was
+    rebuilt or retrained. Patched artifacts record ``lineage = {snapshot:
+    digest(new), patched_from: digest(old)}``, so a chain of refreshes is
+    auditable; ``patched_from`` is None when the artifact's own bytes were
+    not an input. ``cc_min_edges`` overrides the CC crossover.
 
-
-#: the documents-side stored state the refreshed text sections serve
-#: from, and the patch path each of its per-doc relations must take
-TEXT_STATE = (DIGESTS_NAME, SPANPOS_NAME, SPANS_NAME, SPANSTATS_NAME,
-              SPINE_NAME, SIGNALS_NAME)
-TEXT_PATCHED = dict.fromkeys(TEXT_STATE[1:], "patched")
-#: the dedup-side stored state ``update_pairs_incremental`` rewrites, and
-#: the paths the refreshed dedup sections require it to take
-PAIRS_STATE = (PAIRS_NAME, BANDS_NAME, CC_NAME, DIGESTS_NAME)
-PAIRS_PATCHED = {"mode": "incremental", "cc_mode": "incremental",
-                 "old_side": "doc_digests"}
-#: the embeddings-side stored state ``update_centroids_incremental``
-#: rewrites, which the refreshed IVF sections serve from
-EMB_STATE = (CENTROIDS_NAME, VECDIG_NAME, ASSIGN_NAME, PQCB_NAME,
-             PQCODES_NAME)
-#: per corpus side, every artifact its refreshed sections copy from the
-#: one prior that side lands per session
-PRIOR_NAMES = {"documents": tuple(dict.fromkeys(TEXT_STATE + PAIRS_STATE)),
-               "embeddings": EMB_STATE}
+    Returns ``{name: mode}`` — ``patched``, ``carried``, ``retrained``,
+    ``rederived`` (re-derived from refreshed inputs), ``full_rebuild`` or
+    ``absent`` — plus ``reasons`` (name -> why it was not plainly
+    patched), ``churn`` and ``supplied`` (per side) and ``walls``."""
+    rc = _Refresh(spark, old_sf_dir, new_sf_dir, artifact_dir,
+                  refresh_closure(names), max_churn_frac, cc_min_edges)
+    summary: dict = {"reasons": {}, "churn": {}, "supplied": {}, "walls": {}}
+    reasons, walls = summary["reasons"], summary["walls"]
+    supplied = {"documents": (new_digests, new_changelog),
+                "embeddings": (new_vec_digests, new_vec_changelog)}
+    for side in dict.fromkeys(ARTIFACTS[n].side for n in rc.order):
+        if os.path.exists(os.path.join(new_sf_dir,
+                                       f"{_SIDES[side].table}.parquet")):
+            with _timed(walls, side):
+                ctx = rc.ctx[side] = _refresh_ctx(
+                    spark, old_sf_dir, new_sf_dir, artifact_dir,
+                    *supplied[side], side)
+            summary["churn"][side] = ctx["churn"]
+            if ctx["supplied"] is not None:
+                summary["supplied"][side] = ctx["supplied"]
+    # entries read from these paths are about to outlive their bytes, and
+    # one seeded from a path would turn its rebuild into a no-op; entries
+    # built elsewhere stay. The quantile shard breaks derive from the
+    # spine: stale ones would pile added ids into the top shard (r10)
+    if "token_spine" in session_state.clear_loaded_under(
+            spark, *map(rc.path, rc.order)):
+        session_state.clear(spark, "breaks")
+    for name in rc.order:
+        spec = ARTIFACTS[name]
+        if spec.patch is None:
+            continue
+        if spec.side not in rc.ctx or rc.modes.get(spec.needs) == "absent" \
+                or spec.optional and not _has_meta(artifact_dir, name):
+            rc.modes.update(dict.fromkeys((name, *spec.lands), "absent"))
+            continue
+        with _timed(walls, name):
+            # a refusal (its reason) rebuilds; a trained model's retrains
+            out = {n: o if isinstance(o, _Patched) else _Patched(
+                None, "retrained" if n in _FOLD_KEYS else "full_rebuild",
+                None, o) for n, o in spec.patch(rc).items()}
+            refused = [n for n, o in out.items() if o.lineage is None]
+            if refused:
+                _rebuild(spark, new_sf_dir, artifact_dir,
+                         rc.side(name)["new_digest"], *refused)
+            for n, o in out.items():
+                if o.lineage is not None:
+                    _land(o.rel, new_sf_dir, artifact_dir, n, o.lineage)
+        forced = any(rc.modes[r] in ("full_rebuild", "retrained")
+                     for r in spec.reads)
+        for n, o in out.items():
+            rc.modes[n] = o.mode
+            if o.note is not None:
+                reasons[n] = o.note
+                # a retrain, and a rebuild forced by an input's, are
+                # decisions, not degradations
+                if o.mode in ("full_rebuild", "rederived") and not forced:
+                    warnings.warn(f"{n}: cannot patch ({o.note}); " + (
+                        "full rebuild" if o.mode == "full_rebuild"
+                        else "re-derived from refreshed state"))
+    return {**rc.modes, **summary}
 
 
 def require_modes(summary: dict, required: dict) -> None:
-    """Raise unless the refresh ``summary`` holds every ``required`` mode.
-    A section served from refreshed artifacts must prove the refresh took
-    its incremental path: a silent rebuild produces equal rows, so the
-    oracle hash gate alone cannot tell them apart."""
+    """Raise unless the refresh ``summary`` holds every ``required``
+    ``{name: mode}``. A section served from refreshed artifacts must prove
+    the refresh took its incremental path: a silent rebuild produces equal
+    rows, so the oracle hash gate alone cannot tell them apart."""
     if any(summary.get(k) != v for k, v in required.items()):
         raise RuntimeError(
             f"refresh degraded (required {required}): {summary}")
+
+
+#: per corpus side, every artifact its refreshed sections copy from the
+#: one prior that side lands per session
+PRIOR_NAMES = {side: tuple(n for n, s in ARTIFACTS.items() if s.side == side)
+               for side in _SIDES}
 
 
 def _refresh_prior(spark: SparkSession, sf_dir: str, side: str,
@@ -2486,23 +2179,24 @@ def _refresh_prior(spark: SparkSession, sf_dir: str, side: str,
 
 
 def stored_refresh_state(spark: SparkSession, sf_dir: str, side: str,
-                         old: DataFrame, new: DataFrame, names: tuple,
-                         update: Callable[..., dict], required: dict,
-                         section: str) -> str:
+                         old: DataFrame, new: DataFrame, required: dict,
+                         section: str, **refresh_kw) -> str:
     """The artifact dir ``section`` serves from, refreshed by this call:
-    the ``names`` artifacts of the session's prior for ``side``
-    (``_refresh_prior``: the derived ``old`` and ``new`` snapshots and the
-    old snapshot's artifacts) are copied into the section's scratch slot,
-    ``update`` (an updater, with whatever gate its caller pins) refreshes
-    the copy to the new snapshot, and ``require_modes`` checks it took the
-    ``required`` paths. The slot is wiped by the next call for the same
-    section, so a result read from it stays valid until then."""
+    the closure of the ``required`` names in the session's prior for
+    ``side`` (``_refresh_prior``: the derived ``old`` and ``new``
+    snapshots and the old snapshot's artifacts) is copied into the
+    section's scratch slot, ``refresh`` (with whatever gates the caller
+    pins in ``refresh_kw``) brings the copy to the new snapshot, and
+    ``require_modes`` checks it took the ``required`` paths. The slot is
+    wiped by the next call for the same section, so a result read from it
+    stays valid until then."""
     old_dir, new_dir, prior = _refresh_prior(spark, sf_dir, side, old, new)
     art = scratch_dir(f"{spark.sparkContext.applicationId}:{sf_dir}"
                       f"#{section}")
-    for name in names:
+    for name in refresh_closure(required):
         shutil.copytree(os.path.join(prior, name), os.path.join(art, name))
-    require_modes(update(spark, old_dir, new_dir, art), required)
+    require_modes(refresh(spark, old_dir, new_dir, art, tuple(required),
+                          **refresh_kw), required)
     return art
 
 

@@ -753,7 +753,7 @@ def incremental_dedup_update(
     # per corpus doc) per refresh, which was the probe's dominant linear
     # term. With them, the stored relations are scanned (parallel, no
     # exchange) and only churn-sized data moves. Contract note: the
-    # incremental path assumes churn << corpus; the artifacts updater
+    # incremental path assumes churn << corpus; ``artifacts.refresh``
     # ENFORCES that with a churn-size gate (artifacts._churn_gate, r10) —
     # a refresh whose churn exceeds INCR_MAX_CHURN_FRAC (0.5) of the old
     # corpus full-rebuilds instead of patching, unless its caller pins a
@@ -916,29 +916,25 @@ def _threshold_edges(pairs: DataFrame) -> DataFrame:
 def _refreshed_artifact(spark: SparkSession, sf_dir: str, section: str,
                         name: str) -> DataFrame:
     """Artifact ``name`` as the incremental ``section`` serves it,
-    refreshed on this call by the production updater
-    (``artifacts.update_pairs_incremental``): the derived OLD snapshot's
-    pair graph, banded index, CC labels and doc digests are the stored
-    state (landed once per session), and each call patches a copy of
-    them to the derived NEW snapshot in the section's own slot. The
-    refresh must take its incremental path on every piece, so both of its
-    size gates are pinned open: the derived churn is fixed by
-    construction (~40% of the old snapshot, all of it on a corpus of a
-    few docs), and at test scale factors the stored graph sits below the
-    CC crossover, where a full relabel would prove nothing about
+    refreshed on this call by ``artifacts.refresh``: the derived OLD
+    snapshot's stored state (landed once per session) is copied into the
+    section's own slot — only ``name`` and what its refresh reads, so the
+    pair graph's section pays for no CC labels — and patched to the
+    derived NEW snapshot. Every artifact must take its patch path, so both
+    size gates are pinned open: the derived churn is fixed by construction
+    (~40% of the old snapshot, all of it on a corpus of a few docs), and
+    at test scale factors the stored graph sits below the CC crossover,
+    where a full relabel would prove nothing about
     ``incremental_cc_update``. (The patch's COST story lives in
     ``SCALE_PROBE_INCR_r*.json``; the registered sections prove its
     CORRECTNESS via the hash gate.)"""
-    import functools
-
     from pyspark_coding_challenge_spark.llm import artifacts as A
 
     old, new = snapshot_versions(read_table(spark, sf_dir, "documents"))
     art = A.stored_refresh_state(
-        spark, sf_dir, "documents", old, new, A.PAIRS_STATE,
-        functools.partial(A.update_pairs_incremental, cc_min_edges=0,
-                          max_churn_frac=1.0),
-        A.PAIRS_PATCHED, section)
+        spark, sf_dir, "documents", old, new,
+        dict.fromkeys(A.refresh_closure((name,)), "patched"), section,
+        cc_min_edges=0, max_churn_frac=1.0)
     return spark.read.parquet(os.path.join(art, name))
 
 
@@ -948,7 +944,7 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot's stored artifacts with the diff (``_refreshed_artifact``)
     and threshold the patched pair graph. The DuckDB oracle is a FULL
     recompute of the minhash chain over the NEW corpus, so the driver's
-    hash gate proves incremental == full for the updater a deployment
+    hash gate proves incremental == full for the refresh a deployment
     runs."""
     patched = _refreshed_artifact(spark, sf_dir,
                                   "dedup_minhash_lsh/incremental",
@@ -981,8 +977,8 @@ CC_MAX_ITER = 25
 # 0.999x/0.737x/0.395x of full CC at 8k/80k/800k edges): the
 # label patch's fixed overhead (edge-diff handling + affected-set joins +
 # the union of untouched labels) beats a from-scratch relabel only past
-# ~80k stored edges. The artifact refresh (artifacts.update_pairs_
-# incremental) gates on the STORED graph's edge count against this and
+# ~80k stored edges. The artifact refresh (artifacts.refresh's label
+# patch) gates on the STORED graph's edge count against this and
 # falls back to full CC below it (r8 judge item #6).
 CC_INCR_MIN_EDGES = 80_000
 
@@ -1294,7 +1290,7 @@ def cc_labels_for_dir(spark: SparkSession, sf_dir: str) -> DataFrame:
     session with ``SPARK_GRAFT_ARTIFACT_DIR`` pointing at a provenance-
     valid ``cc_labels`` artifact seeds this cache with ZERO label-
     propagation rounds, and the incremental refresh
-    (``artifacts.update_pairs_incremental``) patches the stored labels
+    (``artifacts.refresh``) patches the stored labels
     from the pair-graph patch's edge diff instead of re-running CC."""
     def _build() -> DataFrame:
         from pyspark_coding_challenge_spark.llm import artifacts

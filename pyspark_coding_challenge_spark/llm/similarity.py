@@ -388,7 +388,7 @@ def quantization_gap(e: DataFrame, cent: DataFrame) -> DataFrame:
     snapshots and corpus sizes. Same broadcast nested-loop + argmax shape
     as ``assign_nearest_list``: no stage holds more than
     (rows x n_lists) skinny rows, partial-aggregated map-side. This is the
-    drift statistic ``artifacts.update_centroids_incremental`` uses: a
+    drift statistic ``artifacts.refresh``'s quantizer carry uses: a
     churn cohort whose mean gap is far above the TRAINING-TIME mean is
     vector mass the stored quantizer does not cover — retrain.
 
@@ -524,7 +524,7 @@ def ivf_assignments_for_dir(spark: SparkSession, sf_dir: str,
     path; NEVER builds on miss — ``ivf_search`` assigns inline at the same
     cost, so the artifact is an opt-in (materialized by a deployment that
     searches the same corpus repeatedly, patched churn-sized by
-    ``artifacts.update_centroids_incremental``). A failed env gate is
+    ``artifacts.refresh``). A failed env gate is
     cached too, so its meta reads, fold collect and warning run once.
 
     ``cent``: the quantizer the CALLER will actually search with. The
@@ -671,10 +671,9 @@ def _stored_ivf_state(spark: SparkSession, sf_dir: str):
     snapshot's embeddings-side artifacts (landed once per session: the
     stored state a deployment would already hold — trained quantizer, PQ
     sub-quantizers, per-vector digests, inverted index and compressed
-    code corpus) into the section's slot, and
-    ``artifacts.update_centroids_incremental`` refreshes them ALL to the
-    NEW snapshot. It RAISES unless the refresh CARRIED both quantizers
-    and PATCHED both row relations — the driver's hash gates must prove
+    code corpus) into the section's slot, and ``artifacts.refresh``
+    refreshes them ALL to the NEW snapshot. It RAISES unless the refresh
+    CARRIED both quantizers and PATCHED both row relations — the driver's hash gates must prove
     the artifact-served path, not a silent retrain/rebuild that happens
     to produce equal rows. The returned centroids/assignments/codebooks/
     codes scan the refreshed artifact parquet ONLY; the corpus side is
@@ -682,20 +681,20 @@ def _stored_ivf_state(spark: SparkSession, sf_dir: str):
     corpus x n_lists assignment pass nor the corpus x m x k encode pass
     appears anywhere in the search plans (plan-gated in
     tests/test_plan_quality.py)."""
-    import functools
     import os as _os
 
     from pyspark_coding_challenge_spark.llm import artifacts as A
 
     old, new = emb_snapshot_versions(read_table(spark, sf_dir, "embeddings"))
     art = A.stored_refresh_state(
-        spark, sf_dir, "embeddings", old, new, A.EMB_STATE,
+        spark, sf_dir, "embeddings", old, new,
+        {A.CENTROIDS_NAME: "carried", A.ASSIGN_NAME: "patched",
+         A.PQCB_NAME: "carried", A.PQCODES_NAME: "patched",
+         A.VECDIG_NAME: "patched"},
+        "embedding_ann_ivf/stored_index",
         # the derived churn is fixed by construction, above the quantizer
         # carry gate: pin the gate open
-        functools.partial(A.update_centroids_incremental, max_churn_frac=1.0),
-        {"mode": "carried", A.ASSIGN_NAME: "patched",
-         A.PQCB_NAME: "carried", A.PQCODES_NAME: "patched"},
-        "embedding_ann_ivf/stored_index")
+        max_churn_frac=1.0)
     cent, asg, cb, codes = (spark.read.parquet(_os.path.join(art, name))
                             for name in (A.CENTROIDS_NAME, A.ASSIGN_NAME,
                                          A.PQCB_NAME, A.PQCODES_NAME))
@@ -931,7 +930,7 @@ def pq_encode(e: DataFrame, codebooks: DataFrame, cent: DataFrame,
     holds more than (corpus x m x k) skinny rows; the shuffle key is
     (vec_id, sub). At scale this relation IS the compressed corpus (the
     stored ``pq_codes`` artifact shape — m small ints per vector, patched
-    churn-sized by ``artifacts.update_centroids_incremental``)."""
+    churn-sized by ``artifacts.refresh``)."""
     res = residual_relation(e, cent, assignments)
     sub = _sub_slice(F.col("emb"))
     c2 = dot(F.col("cvec"), F.col("cvec"))
@@ -1292,7 +1291,7 @@ def pq_codes_with_cohort_for_dir(
     seeding path; NEVER builds on miss (``pq_adc_scores`` encodes inline
     at the same cost; the artifact is an opt-in materialized by a
     deployment that searches repeatedly, patched churn-sized by
-    ``artifacts.update_centroids_incremental``).
+    ``artifacts.refresh``).
 
     ``codebooks``: the sub-quantizers the CALLER will score with — codes
     are only returned when their recorded codebook fold matches that

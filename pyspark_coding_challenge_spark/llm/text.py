@@ -107,7 +107,7 @@ def shared_doc_signals_for_dir(spark: SparkSession, sf_dir: str) -> DataFrame:
 def doc_signals_relation(docs: DataFrame) -> DataFrame:
     """The fused per-doc signal computation over an arbitrary (doc_id,
     lang, source, text) relation — extracted from the session builder so
-    the incremental artifact refresh (``artifacts.update_text_incremental``)
+    the incremental artifact refresh (``artifacts.refresh``)
     can run it over the CHURN docs alone (signals are per-doc, so a churn
     patch is delete-gone + append-these)."""
     langs = list(LANG_MARKERS)
@@ -1138,36 +1138,37 @@ FROM s
 
 def _patched_text_state(spark: SparkSession, sf_dir: str):
     """(signals, spine, shared_spans) READ BACK from artifacts patched on
-    this call by ``artifacts.update_text_incremental`` over the
-    deterministic snapshot pair — the text twin of the dedup incremental
-    sections. ``artifacts.stored_refresh_state`` copies the OLD
-    snapshot's text artifacts (landed once per session: the stored state
-    a deployment would already hold) into this section's slot, and the
-    refresh patches the copy to the NEW snapshot. The returned frames
+    this call by ``artifacts.refresh`` over the deterministic snapshot
+    pair — the text twin of the dedup incremental sections.
+    ``artifacts.stored_refresh_state`` copies the OLD snapshot's text
+    artifacts (landed once per session: the stored state a deployment
+    would already hold) into this section's slot, and the refresh patches
+    the copy to the NEW snapshot, its ``doc_digests`` too, so the next
+    refresh in a chain reads its old side from them. The returned frames
     scan the PATCHED parquet only — no documents table, old or new,
     appears in their plans, which is the 100 TB point: last month's
     corpus is never re-read."""
-    import functools
     import os as _os
 
     from pyspark_coding_challenge_spark.llm import artifacts as A
     from pyspark_coding_challenge_spark.llm.dedup import snapshot_versions
 
     old, new = snapshot_versions(read_table(spark, sf_dir, "documents"))
+    served = (A.SIGNALS_NAME, A.SPINE_NAME, A.SPANS_NAME)
     # the derived churn (~40%) is fixed by construction: pin the gate open
     art = A.stored_refresh_state(
-        spark, sf_dir, "documents", old, new, A.TEXT_STATE,
-        functools.partial(A.update_text_incremental, max_churn_frac=1.0),
-        A.TEXT_PATCHED, "text_analysis/incremental_refresh")
+        spark, sf_dir, "documents", old, new,
+        dict.fromkeys(A.refresh_closure(served), "patched"),
+        "text_analysis/incremental_refresh", max_churn_frac=1.0)
     return tuple(spark.read.parquet(_os.path.join(art, name))
-                 for name in (A.SIGNALS_NAME, A.SPINE_NAME, A.SPANS_NAME))
+                 for name in served)
 
 
 def text_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ``incremental_refresh`` section of ``text_analysis`` (r12,
     judge item #2a — the text twin of ``dedup_minhash_lsh/incremental``):
     per-doc signals over the NEW corpus served ENTIRELY from artifacts
-    patched by ``update_text_incremental`` — chars/n_unique from the
+    patched by ``artifacts.refresh`` — chars/n_unique from the
     patched ``doc_signals``, n_tokens from the patched ``token_spine``,
     shared-span start counts from the ``shared_spans`` artifact patched
     churn-sized via the ``span_stats`` counts (r13). The DuckDB oracle recomputes all four

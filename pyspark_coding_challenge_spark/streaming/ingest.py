@@ -1,6 +1,6 @@
 """Streaming document ingest with WRITE-TIME digests (r13).
 
-``artifacts.update_all_incremental`` accepts caller-supplied (id, digest)
+``artifacts.refresh`` accepts caller-supplied (id, digest)
 relations for the new snapshot so a refresh never hashes the corpus — the
 probe measures that arm, but something has to BE the caller. This module is
 that ingest: a structured-streaming pipeline whose ``foreachBatch`` sink
@@ -262,7 +262,7 @@ def ingest_documents(spark: SparkSession, src_dir: str, dest_dir: str,
 
 def ingest_digests_relation(spark: SparkSession, dest_dir: str) -> DataFrame:
     """The ingested corpus's (doc_id, digest) — what a refresh passes as
-    ``update_all_incremental(..., new_digests=...)``. Distinct over
+    ``refresh(..., new_digests=...)``. Distinct over
     (doc_id, digest): an at-least-once redelivery appends the same rows
     twice, and the supplied-digest gate's row-count parity would reject
     the duplicated relation even though every digest is correct."""
@@ -278,7 +278,7 @@ def ingest_changelog_relation(spark: SparkSession, dest_dir: str,
     """The ingested rows as a CDC changelog — (doc_id, change='added',
     digest_new) for every row batch ``since_batch`` onward. A pure-append
     ingest knows its op code by construction; handed to
-    ``update_all_incremental(new_changelog=...)`` against the
+    ``refresh(new_changelog=...)`` against the
     pre-append snapshot, churn DETECTION becomes O(churn): no corpus-
     wide diff join anywhere in the refresh (the step past supplied
     digests — an upsert/delete-capable CDC source emits its real op
@@ -419,10 +419,11 @@ def _build_ingest_refresh_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs.filter(is_old).write.mode("overwrite").parquet(src_docs)
     # 2. first ingest: the stored state a deployment would already
     # hold — stream the source into the sink, then materialize the
-    # text artifacts ON the ingested corpus
+    # artifacts the section serves ON the ingested corpus
     ingest_documents(spark, src, dest)
     art = os.path.join(dest, "art")
-    A.materialize_all(spark, dest, art, A.TEXT_STATE)
+    served = (A.SIGNALS_NAME, A.SPINE_NAME)
+    A.materialize_all(spark, dest, art, A.refresh_closure(served))
     # bounded 1-row agg: the last committed batch of the first ingest
     b0 = spark.read.parquet(os.path.join(dest, DIGESTS_LEAF)) \
         .agg(F.max("batch_id").alias("m")).collect()[0]["m"]
@@ -443,12 +444,14 @@ def _build_ingest_refresh_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus growth). Churn is ~40% by construction, close to the 0.5
     # default gate, and the loop must prove the patch path ran — pin the
     # gate open.
-    ctx = A._refresh_ctx(spark, dest, dest, art, new_changelog=changelog)
-    summary = A.update_text_incremental(spark, dest, dest, art,
-                                        _ctx=ctx, max_churn_frac=1.0)
+    summary = A.refresh(spark, dest, dest, art, served,
+                        new_changelog=changelog, max_churn_frac=1.0)
     # the oracle hash gate must prove the LOOP ran: changelog
     # accepted by the gate AND every artifact on its patch path
-    A.require_modes(summary, {**A.TEXT_PATCHED, "new_digests": "changelog"})
+    A.require_modes(summary,
+                    dict.fromkeys(A.refresh_closure(served), "patched"))
+    if summary["supplied"].get("documents") != "changelog":
+        raise RuntimeError(f"ingest changelog not accepted: {summary}")
     # 6. serve from the PATCHED artifacts only — no documents table,
     # source or sink, appears in the served plan
     sig = spark.read.parquet(os.path.join(art, A.SIGNALS_NAME))
@@ -480,7 +483,7 @@ def streaming_ingest_refresh_serve(spark: SparkSession,
     the source then grows by the remaining 40% and a SECOND ingest into
     the same sink picks up only the new files (per-sink checkpoint,
     monotonic batch ids); the ingest's own changelog — not a corpus diff
-    — drives ``update_text_incremental`` through the full
+    — drives ``artifacts.refresh`` through the full
     ``_changelog_gate``; the result rows are served from the PATCHED
     artifacts alone. The DuckDB oracle recomputes chars/n_tokens from
     scratch over the full corpus, so the hash gate proves

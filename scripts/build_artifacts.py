@@ -24,11 +24,12 @@ the per-artifact before/after file counts as JSON.
 
 ``--incremental`` refreshes every refreshable artifact from the snapshot
 diff between the two corpus dirs instead of rebuilding it from the whole
-corpus (``artifacts.update_all_incremental``): an artifact patches when
-its lineage digest matches the OLD corpus, else it falls back to a warned
-full rebuild from the NEW corpus. With stored ``doc_digests`` /
+corpus (``artifacts.refresh``): an artifact patches when its lineage
+digest matches the OLD corpus, else it falls back to a warned full
+rebuild from the NEW corpus. With stored ``doc_digests`` /
 ``vec_digests`` artifacts the old corpus dir is never read — only its
-digests are.
+digests are. Prints the refresh summary as JSON: ``{name: mode}`` plus
+``reasons``, ``churn``, ``supplied`` and ``walls``.
 """
 
 from __future__ import annotations
@@ -67,8 +68,7 @@ def main() -> None:
 
         spark = get_spark(app_name="build_artifacts_incremental")
         spark.sparkContext.setLogLevel("ERROR")
-        summary = A.update_all_incremental(spark, old_sf, new_sf, artifact_dir)
-        print(json.dumps(summary))
+        print(json.dumps(A.refresh(spark, old_sf, new_sf, artifact_dir)))
         spark.stop()
         return
 

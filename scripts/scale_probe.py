@@ -712,13 +712,12 @@ def _ctx_micro_arm(spark, old_dir: str, new_dir: str, art: str,
 
 def probe_incr_artifacts(spark, old_dir: str, new_dir: str,
                          force_cc: bool = False) -> dict:
-    """Wall-to-wall ``update_all_incremental`` vs per-artifact full
+    """Wall-to-wall ``artifacts.refresh`` vs per-artifact full
     ``materialize`` on the post-churn corpus (r9 judge #6 -> r10 #1b ->
     r12 #2b: the dedup-chain-only timing left signals/spine/span_pos/spans
     unmeasured). Stored state = the OLD snapshot's eight refreshable
     artifacts, built untimed; the timed patch is one call to
-    ``update_all_incremental`` with the per-artifact walls the updaters
-    now record; the timed full side re-materializes each artifact from the
+    ``refresh`` with the per-artifact walls it records; the timed full side re-materializes each artifact from the
     new corpus into a fresh dir (same dependency order and session-cache
     reuse as ``materialize_all``, so the per-artifact split mirrors what a
     production full rebuild pays)."""
@@ -766,29 +765,13 @@ def probe_incr_artifacts(spark, old_dir: str, new_dir: str,
         spark, old_dir, new_dir, art, dd)
 
     def _collect(summary, out, suffix=""):
-        out[f"patch_walls{suffix}"] = {**summary["text"].get("walls", {}),
-                                       **summary["dedup"].get("walls", {}),
-                                       **summary["embeddings"].get("walls", {})}
-        out[f"modes{suffix}"] = {
-            "dedup": summary["dedup"].get("mode"),
-            "cc": summary["dedup"].get("cc_mode"),
-            A.SIGNALS_NAME: summary["text"].get(A.SIGNALS_NAME),
-            A.SPINE_NAME: summary["text"].get(A.SPINE_NAME),
-            A.SPANPOS_NAME: summary["text"].get(A.SPANPOS_NAME),
-            A.SPANS_NAME: summary["text"].get(A.SPANS_NAME),
-            A.SPANSTATS_NAME: summary["text"].get(A.SPANSTATS_NAME),
-            A.CENTROIDS_NAME: summary["embeddings"].get("mode"),
-            A.VECDIG_NAME: summary["embeddings"].get(A.VECDIG_NAME),
-            A.ASSIGN_NAME: summary["embeddings"].get(A.ASSIGN_NAME),
-            A.PQCB_NAME: summary["embeddings"].get(A.PQCB_NAME),
-            A.PQCODES_NAME: summary["embeddings"].get(A.PQCODES_NAME),
-            "new_digests": summary["dedup"].get("new_digests"),
-            "new_vec_digests": summary["embeddings"].get("new_vec_digests"),
-        }
+        out[f"patch_walls{suffix}"] = summary["walls"]
+        out[f"modes{suffix}"] = {**_summary_modes(A, summary),
+                                 "supplied": summary["supplied"]}
 
     out: dict = {}
     t0 = time.perf_counter()
-    summary = A.update_all_incremental(spark, old_dir, new_dir, art)
+    summary = A.refresh(spark, old_dir, new_dir, art)
     out["patch_total"] = round(time.perf_counter() - t0, 3)
     _collect(summary, out)
     _clear_all_artifact_caches(spark)
@@ -799,16 +782,15 @@ def probe_incr_artifacts(spark, old_dir: str, new_dir: str,
     # refresh runs with zero new-corpus hash scans (the spot-check gate's
     # bounded reads are timed, honestly, inside the wall).
     t0 = time.perf_counter()
-    summary_sup = A.update_all_incremental(spark, old_dir, new_dir, art_sup,
-                                           new_digests=dd,
-                                           new_vec_digests=vd)
+    summary_sup = A.refresh(spark, old_dir, new_dir, art_sup,
+                            new_digests=dd, new_vec_digests=vd)
     out["patch_total_supplied"] = round(time.perf_counter() - t0, 3)
     _collect(summary_sup, out, suffix="_supplied")
     _clear_all_artifact_caches(spark)
 
     # r14 (r13 judge item #4): every r13 factor recorded cc: 'full' — the
     # replicated corpora's pair graphs sit below the measured 80k-edge
-    # crossover, so the INTEGRATED update_all_incremental path through
+    # crossover, so the INTEGRATED refresh path through
     # incremental_cc_update was proven only by unit tests + the dedicated
     # CC probe. This arm forces the incremental branch (the crossover
     # knob -> 0 for this one call) on a third identical copy of the
@@ -824,13 +806,12 @@ def probe_incr_artifacts(spark, old_dir: str, new_dir: str,
         D.CC_INCR_MIN_EDGES = 0
         try:
             t0 = time.perf_counter()
-            summary_cc = A.update_all_incremental(spark, old_dir, new_dir,
-                                                  art_cc)
+            summary_cc = A.refresh(spark, old_dir, new_dir, art_cc)
             cc_out = {"patch_total": round(time.perf_counter() - t0, 3)}
         finally:
             D.CC_INCR_MIN_EDGES = saved
         _collect(summary_cc, cc_out)
-        if cc_out["modes"]["cc"] != "incremental":
+        if cc_out["modes"][A.CC_NAME] != "patched":
             raise RuntimeError(
                 f"forced-cc arm did not take the incremental path: "
                 f"{cc_out['modes']}")
@@ -927,22 +908,8 @@ def probe_ctx_deep(spark, old_dir: str, new_dir: str) -> dict:
 
 
 def _summary_modes(A, summary: dict) -> dict:
-    """The per-artifact refresh decisions out of an update_all_incremental
-    summary — the probe_incr_artifacts _collect shape, reusable."""
-    return {
-        "dedup": summary["dedup"].get("mode"),
-        "cc": summary["dedup"].get("cc_mode"),
-        A.SIGNALS_NAME: summary["text"].get(A.SIGNALS_NAME),
-        A.SPINE_NAME: summary["text"].get(A.SPINE_NAME),
-        A.SPANPOS_NAME: summary["text"].get(A.SPANPOS_NAME),
-        A.SPANS_NAME: summary["text"].get(A.SPANS_NAME),
-        A.SPANSTATS_NAME: summary["text"].get(A.SPANSTATS_NAME),
-        A.CENTROIDS_NAME: summary["embeddings"].get("mode"),
-        A.VECDIG_NAME: summary["embeddings"].get(A.VECDIG_NAME),
-        A.ASSIGN_NAME: summary["embeddings"].get(A.ASSIGN_NAME),
-        A.PQCB_NAME: summary["embeddings"].get(A.PQCB_NAME),
-        A.PQCODES_NAME: summary["embeddings"].get(A.PQCODES_NAME),
-    }
+    """The per-artifact refresh modes out of a ``refresh`` summary."""
+    return {n: summary[n] for n in A.ARTIFACTS if n in summary}
 
 
 def build_chain_step(spark, factor: int, step: int) -> str:
@@ -1042,13 +1009,11 @@ def probe_chain(spark, factor: int, steps: int = 5) -> dict:
     for s in range(1, steps + 1):
         cur = build_chain_step(spark, factor, s)
         t0 = time.perf_counter()
-        summary = A.update_all_incremental(spark, prev, cur, art)
+        summary = A.refresh(spark, prev, cur, art)
         entry = {
             "wall": round(time.perf_counter() - t0, 3),
             "modes": _summary_modes(A, summary),
-            "patch_walls": {**summary["text"].get("walls", {}),
-                            **summary["dedup"].get("walls", {}),
-                            **summary["embeddings"].get("walls", {})},
+            "patch_walls": summary["walls"],
             "files": A.artifact_file_counts(art),
         }
         out["steps"][str(s)] = entry
@@ -1073,15 +1038,15 @@ def probe_chain(spark, factor: int, steps: int = 5) -> dict:
     # ---- one more churn step AFTER compaction: gates stay green ----
     cur = build_chain_step(spark, factor, steps + 1)
     t0 = time.perf_counter()
-    summary = A.update_all_incremental(spark, prev, cur, art)
+    summary = A.refresh(spark, prev, cur, art)
     post = {
         "wall": round(time.perf_counter() - t0, 3),
         "modes": _summary_modes(A, summary),
         "files": A.artifact_file_counts(art),
     }
     out["post_compaction_step"] = post
-    if summary["dedup"]["mode"] != "incremental" or \
-            summary["text"].get(A.SIGNALS_NAME) != "patched":
+    if summary[A.PAIRS_NAME] != "patched" or \
+            summary[A.SIGNALS_NAME] != "patched":
         raise RuntimeError(
             f"post-compaction refresh degraded: {post['modes']}")
     _clear_all_artifact_caches(spark)
@@ -1100,7 +1065,7 @@ def probe_chain_ingest(spark, factor: int, steps: int = 5) -> dict:
       ingest reads ONLY the new files (persisted per-sink checkpoint,
       monotonic batch ids), and the ingest's own changelog
       (``ingest_changelog_relation(since_batch=...)``) drives
-      ``update_text_incremental`` through the full ``_changelog_gate`` —
+      ``artifacts.refresh`` through the full ``_changelog_gate`` —
       the probe RAISES if any step's changelog is rejected or any
       artifact degrades to rebuild (all five steps must ride the
       changelog path);
@@ -1138,8 +1103,6 @@ def probe_chain_ingest(spark, factor: int, steps: int = 5) -> dict:
         A.materialize(spark, dest, art, name, digest)
     _clear_all_artifact_caches(spark)
 
-    text_names = (A.SIGNALS_NAME, A.SPINE_NAME, A.SPANPOS_NAME,
-                  A.SPANS_NAME, A.SPANSTATS_NAME)
     out: dict = {"factor": factor, "steps": {}}
     for s in range(1, steps + 1):
         # bounded 1-row agg: the last batch the sink has committed
@@ -1162,31 +1125,26 @@ def probe_chain_ingest(spark, factor: int, steps: int = 5) -> dict:
         changelog = I.ingest_changelog_relation(spark, dest,
                                                 since_batch=int(b_prev) + 1)
         t0 = time.perf_counter()
-        # the update_all_incremental composition, with the shared ctx held
-        # open so the probe can PIN that the changelog was accepted (the
-        # one-call entry does not surface the ctx note)
-        ctx = A._refresh_ctx(spark, dest, dest, art, new_changelog=changelog)
-        summary = A.update_text_incremental(spark, dest, dest, art,
-                                            _ctx=ctx)
-        dedup_summary = A.update_pairs_incremental(spark, dest, dest, art,
-                                                   _ctx=ctx)
+        summary = A.refresh(spark, dest, dest, art, A.PRIOR_NAMES["documents"],
+                            new_changelog=changelog)
         entry = {
             "ingest_wall": ingest_wall,
             "ingest_batches": stats["batches"],
             "ingest_rows": stats["rows"],
             "refresh_wall": round(time.perf_counter() - t0, 3),
-            "changelog_accepted": ctx.get("supplied") == "changelog",
-            "modes": {**{n: summary.get(n) for n in text_names},
-                      "dedup": dedup_summary.get("mode")},
+            "changelog_accepted":
+                summary["supplied"].get("documents") == "changelog",
+            "modes": _summary_modes(A, summary),
             "sink_files": I.ingest_sink_file_counts(dest),
         }
         out["steps"][str(s)] = entry
         if not entry["changelog_accepted"]:
             raise RuntimeError(
                 f"ingest chain step {s}: changelog rejected "
-                f"({ctx.get('supplied')})")
-        if any(summary.get(n) != "patched" for n in text_names) or \
-                dedup_summary.get("mode") != "incremental":
+                f"({summary['supplied']})")
+        # below the CC crossover the labels are re-derived by design
+        if any(m not in ("patched", "rederived")
+               for m in entry["modes"].values()):
             raise RuntimeError(
                 f"ingest chain step {s} degraded to rebuild: "
                 f"{entry['modes']}")
@@ -1231,7 +1189,7 @@ def build_dup_corpus(spark) -> str:
     construction (r14 judge item #6): every sf0.1 document becomes a
     7-copy near-dup cluster (identical text, distinct doc_ids), so the
     verified pair graph holds ~21 x 5000 thresholded edges and
-    ``update_pairs_incremental`` chooses ``cc: incremental`` on its own
+    ``artifacts.refresh`` patches ``cc_labels`` on its own
     economics — no knob forcing."""
     out = f"{WORK}/dup_corpus"
     if os.path.exists(f"{out}/.complete"):
@@ -1305,16 +1263,15 @@ def probe_cc_unforced(spark) -> dict:
         spark.read.parquet(f"{art}/{A.PAIRS_NAME}")).count()
 
     t0 = time.perf_counter()
-    summary = A.update_all_incremental(spark, old_dir, new_dir, art)
+    summary = A.refresh(spark, old_dir, new_dir, art)
     out = {
         "wall": round(time.perf_counter() - t0, 3),
         "stored_edges": stored_edges,
         "cc_crossover_knob": D.CC_INCR_MIN_EDGES,
         "modes": _summary_modes(A, summary),
-        "patch_walls": {**summary["text"].get("walls", {}),
-                        **summary["dedup"].get("walls", {})},
+        "patch_walls": summary["walls"],
     }
-    if out["modes"]["cc"] != "incremental":
+    if out["modes"][A.CC_NAME] != "patched":
         raise RuntimeError(
             f"un-forced arm did not choose cc incremental on its own "
             f"economics ({stored_edges} stored edges): {out['modes']}")
@@ -1423,7 +1380,7 @@ def probe_cc(spark, k: int) -> dict[str, float]:
         .write.format("noop").mode("overwrite").save()
     timings["incremental_cc"] = round(time.perf_counter() - t0, 3)
     # r9 judge finding #3: the known-edge-diff variant (what
-    # update_pairs_incremental actually calls) measured IDENTICAL to the
+    # the refresh's label patch calls) measured IDENTICAL to the
     # anti-join derivation on the corpus-replica probe, whose pair graphs
     # stay at a few hundred edges — time both here, where the edge
     # relations the anti-joins must shuffle actually grow with the graph
@@ -1632,8 +1589,8 @@ def _probe() -> None:
                     "incremental_cc_antijoin is the pre-r9 variant. "
                     "r12: each factor additionally carries "
                     "'artifact_refresh' — wall-to-wall "
-                    "update_all_incremental (per-artifact patch walls "
-                    "recorded by the updaters) vs per-artifact full "
+                    "artifacts.refresh (per-artifact patch walls "
+                    "recorded by the refresh) vs per-artifact full "
                     "materialize on the post-churn corpus (r10 #1b), "
                     "including the embeddings side: replicated embeddings "
                     "with FIXED 300-vector churn (100 removed, 100 modified "

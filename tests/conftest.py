@@ -46,7 +46,7 @@ SLOW_TESTS = (
     "test_artifacts.py::test_pairs_artifact_survives_fresh_session",
     "test_artifacts.py::test_stale_lineage_rebuild_in_fresh_session",
     "test_artifacts.py::test_text_patched_artifacts_seed_fresh_session_zero_scans",
-    "test_artifacts.py::test_update_all_incremental_one_context",
+    "test_artifacts.py::test_refresh_all_one_context",
     "test_centroid_refresh.py::test_assignments_rebuild_under_retrain",
     "test_centroid_refresh.py::test_stored_section_equals_inline_search",
     "test_centroid_refresh.py::test_ivf_stored_sections_refresh_on_every_call",

@@ -146,3 +146,38 @@ def test_load_all_skips_pq_pair_on_foreign_coarse_quantizer(spark, built,
         assert out[A.CENTROIDS_NAME] is not None
     finally:
         _clear(spark)
+
+
+def test_refresh_closures_and_require_modes():
+    """Each caller refreshes only what it reads: the closure of a request
+    adds the artifacts its hooks land with it or read, and its side's
+    digests artifact, last. Pure table arithmetic — no Spark job."""
+    closure = A.refresh_closure
+    assert closure((A.PAIRS_NAME,)) == (
+        A.PAIRS_NAME, A.BANDS_NAME, A.DIGESTS_NAME)
+    assert closure((A.CC_NAME,)) == (
+        A.PAIRS_NAME, A.BANDS_NAME, A.CC_NAME, A.DIGESTS_NAME)
+    text = set(closure((A.SIGNALS_NAME, A.SPINE_NAME)))
+    assert text == {A.SIGNALS_NAME, A.SPINE_NAME, A.DIGESTS_NAME}
+    assert {A.SPANS_NAME, A.SPANPOS_NAME, A.SPANSTATS_NAME} <= \
+        set(closure((A.SPANS_NAME,)))
+    assert {A.PQCB_NAME, A.CENTROIDS_NAME, A.VECDIG_NAME} <= \
+        set(closure((A.PQCODES_NAME,)))
+    for names in [None, (A.PAIRS_NAME,), (A.CC_NAME,), (A.SPANS_NAME,),
+                  (A.SIGNALS_NAME, A.SPINE_NAME), (A.PQCODES_NAME,),
+                  (A.ASSIGN_NAME,), (A.BANDS_NAME, A.PQCB_NAME)]:
+        got = closure(names)
+        assert len(set(got)) == len(got), got
+        for side, s in A._SIDES.items():
+            on_side = [n for n in got if A.ARTIFACTS[n].side == side]
+            assert not on_side or on_side[-1] == s.digests, (names, got)
+    assert set(closure(None)) == set(A.ARTIFACTS)
+
+    summary = {A.PAIRS_NAME: "patched", A.CC_NAME: "rederived",
+               "reasons": {}, "churn": {}, "supplied": {}, "walls": {}}
+    A.require_modes(summary, {A.PAIRS_NAME: "patched"})
+    A.require_modes(summary, {A.PAIRS_NAME: "patched",
+                              A.CC_NAME: "rederived"})
+    for required in ({A.CC_NAME: "patched"}, {A.DIGESTS_NAME: "patched"}):
+        with pytest.raises(RuntimeError, match="degraded"):
+            A.require_modes(summary, required)

@@ -18,6 +18,8 @@ import pytest
 from pyspark_coding_challenge_spark.llm import artifacts as A
 
 SF_DIR = "/root/testdata/sf0.001"
+#: the text-side artifacts the refreshed text section serves
+TEXT_SERVED = (A.SIGNALS_NAME, A.SPINE_NAME, A.SPANS_NAME)
 
 
 def _clusters_rows(spark, sf_dir):
@@ -432,9 +434,10 @@ def test_incremental_artifact_update_matches_full_build(spark, tmp_path):
     art = str(tmp_path / "art")
     A.materialize(spark, old_dir, art, A.PAIRS_NAME)
     A.materialize(spark, old_dir, art, A.BANDS_NAME)
-    summary = A.update_pairs_incremental(spark, old_dir, new_dir, art)
-    assert summary["mode"] == "incremental"
-    assert set(summary["churn"]) == {"added", "removed", "modified"}
+    summary = A.refresh(spark, old_dir, new_dir, art, (A.CC_NAME,))
+    assert summary[A.PAIRS_NAME] == summary[A.BANDS_NAME] == "patched"
+    assert set(summary["churn"]["documents"]) == {"added", "removed",
+                                                  "modified"}
 
     new_docs = spark.read.parquet(f"{new_dir}/documents.parquet")
     full = D.verify_jaccard(new_docs, D.lsh_candidate_pairs(new_docs))
@@ -480,8 +483,8 @@ def test_incremental_update_stale_lineage_forces_full_rebuild(spark, tmp_path):
     D.clear_pair_cache(spark)
     with W.catch_warnings(record=True) as caught:
         W.simplefilter("always")
-        summary = A.update_pairs_incremental(spark, old_dir, new_dir, art)
-    assert summary["mode"] == "full_rebuild"
+        summary = A.refresh(spark, old_dir, new_dir, art, (A.CC_NAME,))
+    assert summary[A.PAIRS_NAME] == summary[A.BANDS_NAME] == "full_rebuild"
     assert any("full rebuild" in str(w.message) for w in caught)
     new_docs = spark.read.parquet(f"{new_dir}/documents.parquet")
     patched = spark.read.parquet(os.path.join(art, A.PAIRS_NAME))
@@ -508,8 +511,8 @@ def test_pre_lineage_artifact_forces_full_rebuild(spark, tmp_path):
         with open(meta_path, "w") as f:
             json.dump(meta, f)
     D.clear_pair_cache(spark)
-    summary = A.update_pairs_incremental(spark, old_dir, new_dir, art)
-    assert summary["mode"] == "full_rebuild"
+    summary = A.refresh(spark, old_dir, new_dir, art, (A.CC_NAME,))
+    assert summary[A.PAIRS_NAME] == summary[A.BANDS_NAME] == "full_rebuild"
     D.clear_pair_cache(spark)
 
 
@@ -524,8 +527,8 @@ spark = (SparkSession.builder.master("local[4]")
 spark.sparkContext.setLogLevel("ERROR")
 from pyspark_coding_challenge_spark.llm import artifacts as A
 
-summary = A.update_pairs_incremental(spark, old_dir, new_dir, art)
-print("SUMMARY_JSON:" + json.dumps({"mode": summary["mode"]}))
+summary = A.refresh(spark, old_dir, new_dir, art, (A.CC_NAME,))
+print("SUMMARY_JSON:" + json.dumps({"mode": summary[A.PAIRS_NAME]}))
 """
 
 
@@ -583,8 +586,8 @@ def test_full_rebuild_not_defeated_by_env_seeding(spark, tmp_path, monkeypatch):
             json.dump(meta, f)
     D.clear_pair_cache(spark)
     monkeypatch.setenv(A.ENV_ARTIFACT_DIR, art)
-    summary = A.update_pairs_incremental(spark, new_dir, new_dir, art)
-    assert summary["mode"] == "full_rebuild"
+    summary = A.refresh(spark, new_dir, new_dir, art, (A.CC_NAME,))
+    assert summary[A.PAIRS_NAME] == summary[A.BANDS_NAME] == "full_rebuild"
     rebuilt = A._read_meta(os.path.join(art, A.PAIRS_NAME))["lineage"]
     assert rebuilt["snapshot"] == good_lineage["snapshot"], (
         "stale artifact survived the full rebuild"
@@ -652,10 +655,11 @@ def test_incremental_update_patches_cc_labels_and_digests(spark, tmp_path,
 
     shutil.rmtree(old_dir)  # the old snapshot has been retired
     monkeypatch.setattr(D, "CC_INCR_MIN_EDGES", 0)  # force the patch path
-    summary = A.update_pairs_incremental(spark, old_dir, new_dir, art)
-    assert summary["mode"] == "incremental"
-    assert summary["old_side"] == "doc_digests"
-    assert summary["cc_mode"] == "incremental"
+    summary = A.refresh(spark, old_dir, new_dir, art, (A.CC_NAME,))
+    assert summary[A.PAIRS_NAME] == summary[A.BANDS_NAME] == "patched"
+    assert summary[A.DIGESTS_NAME] == "patched"
+    assert A.DIGESTS_NAME not in summary["reasons"]
+    assert summary[A.CC_NAME] == "patched"
 
     new_docs = spark.read.parquet(f"{new_dir}/documents.parquet")
     got_labels = sorted(
@@ -678,7 +682,7 @@ def test_incremental_update_patches_cc_labels_and_digests(spark, tmp_path,
 
 def test_cc_autoselect_full_below_crossover(spark, tmp_path, monkeypatch):
     """Judge r8 #6: below the stored-edge-count crossover the updater picks
-    a from-scratch relabel (cc_mode='full'), above it the patch — both
+    a from-scratch relabel (cc_labels 'rederived'), above it the patch — both
     landing identical labels."""
     from pyspark_coding_challenge_spark.llm import dedup as D
 
@@ -692,9 +696,10 @@ def test_cc_autoselect_full_below_crossover(spark, tmp_path, monkeypatch):
     D.clear_pair_cache(spark)
 
     monkeypatch.setattr(D, "CC_INCR_MIN_EDGES", 10**9)  # tiny test graph
-    summary = A.update_pairs_incremental(spark, old_dir, new_dir, art)
-    assert summary["mode"] == "incremental"
-    assert summary["cc_mode"] == "full"
+    summary = A.refresh(spark, old_dir, new_dir, art, (A.CC_NAME,))
+    assert summary[A.PAIRS_NAME] == "patched"
+    assert summary[A.CC_NAME] == "rederived"
+    assert A.CC_NAME not in summary["reasons"]
     new_docs = spark.read.parquet(f"{new_dir}/documents.parquet")
     got = sorted(
         map(tuple, spark.read.parquet(os.path.join(art, A.CC_NAME)).collect())
@@ -715,8 +720,7 @@ spark.sparkContext.setLogLevel("ERROR")
 from pyspark_coding_challenge_spark.llm import artifacts as A
 from pyspark_coding_challenge_spark.llm import dedup as D
 
-summary = A.update_pairs_incremental(spark, old_dir, new_dir, art,
-                                     cc_min_edges=0)
+summary = A.refresh(spark, old_dir, new_dir, art, (A.CC_NAME,), cc_min_edges=0)
 new_docs = spark.read.parquet(new_dir + "/documents.parquet")
 full = sorted(
     (r.node, r.label)
@@ -726,8 +730,8 @@ full = sorted(
 )
 got = sorted(map(tuple, spark.read.parquet(art + "/" + A.CC_NAME).collect()))
 print("RESULT_JSON:" + json.dumps({
-    "mode": summary["mode"], "cc_mode": summary["cc_mode"],
-    "old_side": summary["old_side"], "labels_equal_full": got == full,
+    "modes": [summary[n] for n in A.refresh_closure((A.CC_NAME,))],
+    "labels_equal_full": got == full,
 }))
 """
 
@@ -756,8 +760,7 @@ def test_cc_patch_equals_full_in_fresh_session(spark, tmp_path):
     assert proc.returncode == 0, proc.stderr[-3000:]
     line = [l for l in proc.stdout.splitlines() if l.startswith("RESULT_JSON:")][0]
     got = json.loads(line[len("RESULT_JSON:"):])
-    assert got == {"mode": "incremental", "cc_mode": "incremental",
-                   "old_side": "doc_digests", "labels_equal_full": True}
+    assert got == {"modes": ["patched"] * 4, "labels_equal_full": True}
 
 
 def _kept_entry(spark, kind):
@@ -774,17 +777,18 @@ def _kept_entry(spark, kind):
 # writer -> (the artifacts it starts from, the artifact ``load`` installs
 # an entry from, the write); the loaded artifact's name is its session kind
 _WRITERS = {
-    "pairs": (A.PAIRS_STATE, A.PAIRS_NAME,
+    "pairs": (A.refresh_closure((A.CC_NAME,)), A.PAIRS_NAME,
               lambda spark, old, new, art:
-              A.update_pairs_incremental(spark, old, new, art)),
-    "text": (A.TEXT_STATE, A.SPINE_NAME,
+              A.refresh(spark, old, new, art, (A.CC_NAME,))),
+                                               "text": (A.refresh_closure(TEXT_SERVED), A.SPINE_NAME,
              lambda spark, old, new, art:
-             A.update_text_incremental(spark, old, new, art)),
-    "embeddings": (A.EMB_STATE, A.CENTROIDS_NAME,
+             A.refresh(spark, old, new, art, TEXT_SERVED)),
+    "embeddings": (A.PRIOR_NAMES["embeddings"], A.CENTROIDS_NAME,
                    lambda spark, old, new, art:
-                   A.update_centroids_incremental(spark, old, new, art,
-                                                  max_churn_frac=1.0)),
-    "compaction": (A.PAIRS_STATE, A.PAIRS_NAME,
+                   A.refresh(spark, old, new, art,
+                             A.PRIOR_NAMES["embeddings"],
+                             max_churn_frac=1.0)),
+    "compaction": (A.refresh_closure((A.CC_NAME,)), A.PAIRS_NAME,
                    lambda spark, old, new, art:
                    A.compact_artifacts(spark, art, max_files=0)),
 }
@@ -908,7 +912,7 @@ def test_text_incremental_patch_matches_full_rebuild(spark, tmp_path):
     old_digest = _materialize_text_side(spark, old_dir, art)
     _clear_text_caches(spark)
 
-    summary = A.update_text_incremental(spark, old_dir, new_dir, art)
+    summary = A.refresh(spark, old_dir, new_dir, art, TEXT_SERVED)
     assert summary[A.SIGNALS_NAME] == "patched"
     assert summary[A.SPINE_NAME] == "patched"
     assert summary[A.SPANPOS_NAME] == "patched"
@@ -950,7 +954,7 @@ def test_text_incremental_missing_pos_index_rebuilds_spans(spark, tmp_path):
     _clear_text_caches(spark)
     with W.catch_warnings(record=True) as caught:
         W.simplefilter("always")
-        summary = A.update_text_incremental(spark, old_dir, new_dir, art)
+        summary = A.refresh(spark, old_dir, new_dir, art, TEXT_SERVED)
     assert summary[A.SIGNALS_NAME] == "patched"
     assert summary[A.SPANPOS_NAME] == "full_rebuild"
     assert summary[A.SPANS_NAME] == "full_rebuild"
@@ -1004,7 +1008,7 @@ def test_text_patched_artifacts_seed_fresh_session_zero_scans(spark, tmp_path):
     art = str(tmp_path / "art")
     _materialize_text_side(spark, old_dir, art)
     _clear_text_caches(spark)
-    A.update_text_incremental(spark, old_dir, new_dir, art)
+    A.refresh(spark, old_dir, new_dir, art, TEXT_SERVED)
     _clear_text_caches(spark)
 
     env = dict(os.environ, PYTHONPATH="/root/repo")
@@ -1020,7 +1024,7 @@ def test_text_patched_artifacts_seed_fresh_session_zero_scans(spark, tmp_path):
     }
 
 
-def test_update_all_incremental_one_context(spark, tmp_path, monkeypatch):
+def test_refresh_all_one_context(spark, tmp_path, monkeypatch):
     """The one-call refresh: text + dedup chains patched from ONE shared
     diff/digest context (the digest artifact is read before either updater
     overwrites it)."""
@@ -1037,15 +1041,15 @@ def test_update_all_incremental_one_context(spark, tmp_path, monkeypatch):
     _clear_text_caches(spark)
 
     monkeypatch.setattr(D, "CC_INCR_MIN_EDGES", 0)
-    got = A.update_all_incremental(spark, old_dir, new_dir, art)
-    assert got["dedup"]["mode"] == "incremental"
-    assert got["dedup"]["old_side"] == "doc_digests"
-    assert got["dedup"]["cc_mode"] == "incremental"
-    assert got["text"][A.SIGNALS_NAME] == "patched"
-    assert got["text"][A.SPANPOS_NAME] == "patched"
+    got = A.refresh(spark, old_dir, new_dir, art)
+    assert got[A.PAIRS_NAME] == "patched"
+    assert got[A.DIGESTS_NAME] == "patched"
+    assert got[A.CC_NAME] == "patched"
+    assert got[A.SIGNALS_NAME] == "patched"
+    assert got[A.SPANPOS_NAME] == "patched"
     # a documents-only snapshot (this one) must record the embeddings side
-    # as skipped, not fail the text/dedup refresh (r12)
-    assert got["embeddings"]["mode"] == "skipped"
+    # as absent, not fail the text/dedup refresh (r12)
+    assert all(got[n] == "absent" for n in A.PRIOR_NAMES["embeddings"])
     D.clear_pair_cache(spark)
     _clear_text_caches(spark)
 
@@ -1067,9 +1071,9 @@ def test_churn_gate_forces_full_rebuild(spark, tmp_path, monkeypatch):
     import warnings as W
     with W.catch_warnings(record=True) as caught:
         W.simplefilter("always")
-        summary = A.update_pairs_incremental(spark, old_dir, new_dir, art)
-    assert summary["mode"] == "full_rebuild"
-    assert "churn" in summary["reason"]
+        summary = A.refresh(spark, old_dir, new_dir, art, (A.CC_NAME,))
+    assert summary[A.PAIRS_NAME] == summary[A.BANDS_NAME] == "full_rebuild"
+    assert "churn" in summary["reasons"][A.PAIRS_NAME]
     assert any("full rebuild" in str(w.message) for w in caught)
     # the rebuilt artifact is still correct for the NEW corpus
     new_docs = spark.read.parquet(f"{new_dir}/documents.parquet")
@@ -1097,7 +1101,7 @@ def test_churn_gate_applies_to_text_side(spark, tmp_path, monkeypatch):
     import warnings as W
     with W.catch_warnings(record=True) as caught:
         W.simplefilter("always")
-        summary = A.update_text_incremental(spark, old_dir, new_dir, art)
+        summary = A.refresh(spark, old_dir, new_dir, art, TEXT_SERVED)
     assert summary[A.SIGNALS_NAME] == "full_rebuild"
     assert summary[A.SPANPOS_NAME] == "full_rebuild"
     assert any("churn" in str(w.message) for w in caught)
@@ -1128,8 +1132,8 @@ def test_cc_full_relabel_records_unpatched_lineage(spark, tmp_path,
     A.materialize(spark, old_dir, art, A.DIGESTS_NAME, digest)
     D.clear_pair_cache(spark)
     monkeypatch.setattr(D, "CC_INCR_MIN_EDGES", 10**9)
-    summary = A.update_pairs_incremental(spark, old_dir, new_dir, art)
-    assert summary["cc_mode"] == "full"
+    summary = A.refresh(spark, old_dir, new_dir, art, (A.CC_NAME,))
+    assert summary[A.CC_NAME] == "rederived"
     cc_meta = A._read_meta(os.path.join(art, A.CC_NAME))
     assert cc_meta["lineage"]["patched_from"] is None
     # the PAIR artifact genuinely was patched — its lineage says so
@@ -1153,9 +1157,8 @@ def test_text_refresh_bootstraps_without_old_state(spark, tmp_path):
     import warnings as W
     with W.catch_warnings(record=True) as caught:
         W.simplefilter("always")
-        summary = A.update_text_incremental(spark, old, SF_DIR, art)
-    assert summary["mode"] == "full_rebuild", summary
-    assert summary["reason"].startswith("bootstrap"), summary
+        summary = A.refresh(spark, old, SF_DIR, art, TEXT_SERVED)
+    assert summary["reasons"][A.SIGNALS_NAME].startswith("bootstrap"), summary
     assert any("bootstrap" in str(w.message) for w in caught)
     digest = A.corpus_digest(spark, SF_DIR)
     for name in (A.SIGNALS_NAME, A.SPINE_NAME, A.SPANPOS_NAME, A.SPANS_NAME,

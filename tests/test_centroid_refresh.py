@@ -25,6 +25,7 @@ from __future__ import annotations
 import json
 import math
 import os
+import re
 
 import pytest
 
@@ -32,6 +33,8 @@ from pyspark_coding_challenge_spark.llm import artifacts as A
 from pyspark_coding_challenge_spark.llm import similarity as S
 
 DIM = 8
+#: every embeddings-side artifact, the closure a full side refresh walks
+EMB = A.PRIOR_NAMES["embeddings"]
 
 
 def _base_vecs() -> dict[int, list[float]]:
@@ -97,13 +100,12 @@ def test_carry_on_small_churn(spark, tmp_path):
     new_vecs[101] = vecs[3]                          # added, in-dist
     new = _write_emb(spark, tmp_path / "new", new_vecs)
 
-    summary = A.update_centroids_incremental(spark, old, new, art)
-    assert summary["mode"] == "carried", summary
-    assert summary["churn"] == {"removed": 1, "modified": 1, "added": 2}
-    assert summary["churn_qe"] <= (
-        A.CENTROID_QE_DRIFT_RATIO * summary["trained_qe"]
-        + A.CENTROID_QE_DRIFT_MARGIN
-    )
+    summary = A.refresh(spark, old, new, art, EMB)
+    assert summary[A.CENTROIDS_NAME] == "carried", summary
+    assert summary["churn"]["embeddings"] == {"removed": 1, "modified": 1,
+                                              "added": 2}
+    # a carry with no note: the drift gate measured the churn and passed
+    assert A.CENTROIDS_NAME not in summary["reasons"], summary
     assert summary[A.VECDIG_NAME] == "patched"
 
     # bytes verbatim; meta re-pointed with an auditable chain
@@ -139,15 +141,15 @@ def test_chained_carry_keeps_original_baseline(spark, tmp_path):
     v1 = dict(vecs)
     v1[200] = vecs[17]
     mid = _write_emb(spark, tmp_path / "mid", v1)
-    s1 = A.update_centroids_incremental(spark, old, mid, art)
-    assert s1["mode"] == "carried"
+    s1 = A.refresh(spark, old, mid, art, EMB)
+    assert s1[A.CENTROIDS_NAME] == "carried"
 
     v2 = dict(v1)
     v2[201] = vecs[29]
     new = _write_emb(spark, tmp_path / "new2", v2)
-    s2 = A.update_centroids_incremental(spark, mid, new, art)
-    assert s2["mode"] == "carried"
-    assert s2["trained_qe"] == trained_stats["mean_qe"]
+    s2 = A.refresh(spark, mid, new, art, EMB)
+    assert s2[A.CENTROIDS_NAME] == "carried"
+    assert A.CENTROIDS_NAME not in s2["reasons"], s2
     meta = _meta(art, A.CENTROIDS_NAME)
     assert meta["lineage"]["stats"] == trained_stats
     assert meta["lineage"]["snapshot"] == A.embeddings_digest(spark, new)
@@ -160,9 +162,9 @@ def test_retrain_on_churn_fraction(spark, tmp_path):
     new_vecs = {i: v for i, v in vecs.items() if i >= 15}  # 37.5% removed
     new = _write_emb(spark, tmp_path / "new", new_vecs)
 
-    summary = A.update_centroids_incremental(spark, old, new, art)
-    assert summary["mode"] == "retrained", summary
-    assert "churn" in summary["reason"]
+    summary = A.refresh(spark, old, new, art, EMB)
+    assert summary[A.CENTROIDS_NAME] == "retrained", summary
+    assert "churn" in summary["reasons"][A.CENTROIDS_NAME]
     meta = _meta(art, A.CENTROIDS_NAME)
     assert meta["sf_dir"] == os.path.abspath(new)
     assert meta["lineage"]["patched_from"] is None
@@ -186,10 +188,11 @@ def test_retrain_on_drift(spark, tmp_path):
     new_vecs[300], new_vecs[301] = e7, e6
     new = _write_emb(spark, tmp_path / "new", new_vecs)
 
-    summary = A.update_centroids_incremental(spark, old, new, art)
-    assert summary["mode"] == "retrained", summary
-    assert "quantization gap" in summary["reason"]
-    assert summary["churn_qe"] > 0.9
+    summary = A.refresh(spark, old, new, art, EMB)
+    assert summary[A.CENTROIDS_NAME] == "retrained", summary
+    why = summary["reasons"][A.CENTROIDS_NAME]
+    assert "quantization gap" in why
+    assert float(re.search(r"quantization gap ([0-9.]+)", why)[1]) > 0.9
     S.clear_centroid_cache(spark)
 
 
@@ -200,10 +203,10 @@ def test_label_only_change_is_no_churn(spark, tmp_path):
     old, art = _build_old(spark, tmp_path, vecs)
     new = _write_emb(spark, tmp_path / "new", vecs,
                      labels={i: 7 for i in vecs})
-    summary = A.update_centroids_incremental(spark, old, new, art)
-    assert summary["mode"] == "carried"
-    assert summary["churn"] == {}
-    assert "vacuous" in summary["reason"]
+    summary = A.refresh(spark, old, new, art, EMB)
+    assert summary[A.CENTROIDS_NAME] == "carried"
+    assert summary["churn"]["embeddings"] == {}
+    assert "vacuous" in summary["reasons"][A.CENTROIDS_NAME]
     S.clear_centroid_cache(spark)
 
 
@@ -220,9 +223,9 @@ def test_pre_lineage_artifact_retrains(spark, tmp_path):
         json.dump(meta, f)
 
     new = _write_emb(spark, tmp_path / "new", vecs)
-    summary = A.update_centroids_incremental(spark, old, new, art)
-    assert summary["mode"] == "retrained"
-    assert "lineage" in summary["reason"]
+    summary = A.refresh(spark, old, new, art, EMB)
+    assert summary[A.CENTROIDS_NAME] == "retrained"
+    assert "lineage" in summary["reasons"][A.CENTROIDS_NAME]
     S.clear_centroid_cache(spark)
 
 
@@ -232,11 +235,9 @@ def test_bootstrap_without_old_state(spark, tmp_path):
     os.makedirs(tmp_path / "old", exist_ok=True)
     new = _write_emb(spark, tmp_path / "new", _base_vecs())
     art = str(tmp_path / "art")
-    summary = A.update_centroids_incremental(
-        spark, str(tmp_path / "old"), new, art
-    )
-    assert summary["mode"] == "retrained"
-    assert summary["reason"].startswith("bootstrap")
+    summary = A.refresh(spark, str(tmp_path / "old"), new, art, EMB)
+    assert summary[A.CENTROIDS_NAME] == "retrained"
+    assert summary["reasons"][A.CENTROIDS_NAME].startswith("bootstrap")
     assert summary[A.VECDIG_NAME] == "full_rebuild"
     assert _meta(art, A.CENTROIDS_NAME)["lineage"]["snapshot"] == \
         A.embeddings_digest(spark, new)
@@ -254,8 +255,8 @@ def test_carried_quantizer_clears_recall_floor(spark, tmp_path):
     new_vecs[100] = vecs[21]
     del new_vecs[38]
     new = _write_emb(spark, tmp_path / "new", new_vecs)
-    summary = A.update_centroids_incremental(spark, old, new, art)
-    assert summary["mode"] == "carried"
+    summary = A.refresh(spark, old, new, art, EMB)
+    assert summary[A.CENTROIDS_NAME] == "carried"
 
     S.clear_centroid_cache(spark)
     cent = A.load(spark, new, art, A.CENTROIDS_NAME)
@@ -320,8 +321,8 @@ def test_assignments_patch_under_carry_equals_full(spark, tmp_path):
     new_vecs[12] = vecs[16]
     new_vecs[600] = vecs[25]
     new = _write_emb(spark, tmp_path / "new", new_vecs)
-    summary = A.update_centroids_incremental(spark, old, new, art)
-    assert summary["mode"] == "carried"
+    summary = A.refresh(spark, old, new, art, EMB)
+    assert summary[A.CENTROIDS_NAME] == "carried"
     assert summary[A.ASSIGN_NAME] == "patched"
     assert summary["walls"][A.ASSIGN_NAME] >= 0
 
@@ -352,8 +353,8 @@ def test_assignments_rebuild_under_retrain(spark, tmp_path):
                   A.embeddings_digest(spark, old))
     new_vecs = {i: v for i, v in vecs.items() if i >= 15}  # churn gate
     new = _write_emb(spark, tmp_path / "new", new_vecs)
-    summary = A.update_centroids_incremental(spark, old, new, art)
-    assert summary["mode"] == "retrained"
+    summary = A.refresh(spark, old, new, art, EMB)
+    assert summary[A.CENTROIDS_NAME] == "retrained"
     assert summary[A.ASSIGN_NAME] == "full_rebuild"
     # pairing invariant: fold recorded == fold of the retrained quantizer
     cent = spark.read.parquet(os.path.join(art, A.CENTROIDS_NAME))
@@ -384,9 +385,9 @@ def test_assignments_refuse_foreign_quantizer(spark, tmp_path):
 
 
 def test_update_all_runs_embeddings_side(spark, tmp_path):
-    """update_all_incremental on a snapshot WITH an embeddings table runs
-    the centroid refresh (carried here) alongside the text/dedup chains
-    and surfaces its summary under 'embeddings'."""
+    """A refresh of every artifact on a snapshot WITH an embeddings table
+    runs the centroid refresh (carried here) alongside the text/dedup
+    chains and surfaces its modes, churn and walls."""
     from pyspark_coding_challenge_spark.llm import dedup as D
     from pyspark_coding_challenge_spark.llm import text as T
 
@@ -412,10 +413,10 @@ def test_update_all_runs_embeddings_side(spark, tmp_path):
     A.materialize(spark, old, art, A.VECDIG_NAME, emb_digest)
     S.clear_centroid_cache(spark)
 
-    got = A.update_all_incremental(spark, old, new, art)
-    assert got["embeddings"]["mode"] == "carried"
-    assert got["embeddings"]["churn"] == {"added": 1}
-    assert got["embeddings"]["walls"][A.CENTROIDS_NAME] >= 0
+    got = A.refresh(spark, old, new, art)
+    assert got[A.CENTROIDS_NAME] == "carried"
+    assert got["churn"]["embeddings"] == {"added": 1}
+    assert got["walls"][A.CENTROIDS_NAME] >= 0
     D.clear_pair_cache(spark)
     T.clear_doc_signals_cache(spark)
     T.clear_token_spine_cache(spark)
@@ -471,8 +472,8 @@ def test_retrain_is_real_under_env_seeding(spark, tmp_path, monkeypatch):
     _write_emb(spark, tmp_path / "corpus", new_vecs)
     monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", art)
 
-    summary = A.update_centroids_incremental(spark, d, d, art)
-    assert summary["mode"] == "retrained", summary
+    summary = A.refresh(spark, d, d, art, EMB)
+    assert summary[A.CENTROIDS_NAME] == "retrained", summary
     after = _centroid_rows(spark, art)
     assert after != before  # the retrain actually happened
     assert _meta(art, A.CENTROIDS_NAME)["lineage"]["snapshot"] == \
@@ -631,20 +632,20 @@ def test_stored_section_raises_on_degrade(spark, monkeypatch):
     artifact-served path, not value-equality by accident."""
     import pyspark_coding_challenge_spark.llm.artifacts as A_mod
 
-    real = A_mod.update_centroids_incremental
+    real = A_mod.refresh
 
     def degraded(*a, **k):
         summary = real(*a, **k)
-        summary["mode"] = "retrained"
+        summary[A_mod.CENTROIDS_NAME] = "retrained"
         return summary
 
-    monkeypatch.setattr(A_mod, "update_centroids_incremental", degraded)
+    monkeypatch.setattr(A_mod, "refresh", degraded)
     with pytest.raises(RuntimeError, match="degraded"):
         S._stored_ivf_state(spark, "/root/testdata/sf0.001")
 
 
 def _counting(monkeypatch, name):
-    """Patch updater ``name`` to count its calls; returns the count list."""
+    """Patch ``artifacts.name`` to count its calls; returns the count list."""
     real, calls = getattr(A, name), []
     monkeypatch.setattr(A, name, lambda *a, **k: calls.append(1) or real(*a, **k))
     return calls
@@ -652,13 +653,13 @@ def _counting(monkeypatch, name):
 
 def test_ivf_stored_sections_refresh_on_every_call(spark, monkeypatch):
     """No session entry holds the refresh's result: every
-    ``embedding_ann_ivf`` call runs the embeddings updater once, shared by
+    ``embedding_ann_ivf`` call runs one embeddings refresh, shared by
     both stored sections, and the refresh's precise clears leave the base
     section's session quantizer for the corpus as it was."""
     from pyspark_coding_challenge_spark import session_state as SS
 
     sf = "/root/testdata/sf0.001"
-    calls = _counting(monkeypatch, "update_centroids_incremental")
+    calls = _counting(monkeypatch, "refresh")
     S.embedding_ann_ivf_slug(spark, sf)
     assert len(calls) == 1
     cent = SS.get_or_build("ivf_centroids", spark, sf, lambda: None)
@@ -671,14 +672,14 @@ def test_ivf_stored_sections_refresh_on_every_call(spark, monkeypatch):
 
 def test_text_incremental_section_refreshes_on_every_call(spark,
                                                           monkeypatch):
-    """The text twin: every ``text_analysis`` call runs the text updater
-    once, and the sibling sections' spine and signals entries for the
+    """The text twin: every ``text_analysis`` call runs one text
+    refresh, and the sibling sections' spine and signals entries for the
     corpus survive its precise clears."""
     from pyspark_coding_challenge_spark import registry
     from pyspark_coding_challenge_spark import session_state as SS
 
     sf = "/root/testdata/sf0.001"
-    calls = _counting(monkeypatch, "update_text_incremental")
+    calls = _counting(monkeypatch, "refresh")
     slug = registry.queries()["text_analysis"]
     slug(spark, sf)
     assert len(calls) == 1

@@ -3,7 +3,7 @@
 The supplied-digests path (tests/test_supplied_digests.py) removed the
 new-corpus hash scan but still paid a corpus-wide diff JOIN to find the
 churn. A CDC-shaped ingest already knows its op codes; handing them to
-``update_all_incremental(new_changelog=...)`` makes churn detection
+``refresh(new_changelog=...)`` makes churn detection
 O(churn). Contracts:
 
 1. a valid changelog produces the same refresh as the scan path with the
@@ -34,7 +34,9 @@ from pyspark_coding_challenge_spark.llm import artifacts as A
 from pyspark_coding_challenge_spark.llm import dedup as D
 from pyspark_coding_challenge_spark.streaming import ingest as I
 
-from tests.test_supplied_digests import _corpora, _stored_state, _write_docs
+from tests.test_supplied_digests import (
+    EMB, _corpora, _stored_state, _write_docs,
+)
 
 CHANGELOG_SCHEMA = "doc_id long, change string, digest_new string"
 
@@ -70,11 +72,9 @@ def test_valid_changelog_patches_without_any_corpus_diff(
     changelog = _true_changelog(spark, old, new)
     true_digest = A.corpus_digest(spark, new)
     _no_corpus_diff(monkeypatch)
-    summary = A.update_all_incremental(spark, old, new, art,
-                                       new_changelog=changelog)
-    assert summary["dedup"]["mode"] == "incremental"
-    assert summary["dedup"]["new_digests"] == "changelog"
-    assert summary["text"]["new_digests"] == "changelog"
+    summary = A.refresh(spark, old, new, art, new_changelog=changelog)
+    assert summary[A.PAIRS_NAME] == "patched"
+    assert summary["supplied"]["documents"] == "changelog"
     patched = spark.read.parquet(os.path.join(art, A.DIGESTS_NAME))
     assert A.digest_of_digests(patched) == true_digest
     meta = A._read_meta(os.path.join(art, A.DIGESTS_NAME))
@@ -109,9 +109,8 @@ def test_lying_changelog_falls_back_to_scan(spark, tmp_path, mangle, needle):
     bad = mangle(_true_changelog(spark, old, new)).localCheckpoint()
     true_digest = A.corpus_digest(spark, new)
     with pytest.warns(UserWarning, match="ignoring supplied changelog"):
-        summary = A.update_all_incremental(spark, old, new, art,
-                                           new_changelog=bad)
-    note = summary["dedup"]["new_digests"]
+        summary = A.refresh(spark, old, new, art, new_changelog=bad)
+    note = summary["supplied"]["documents"]
     assert note.startswith("changelog rejected"), note
     assert needle.split()[0] in note or needle in note, (needle, note)
     # the fallback still patched CORRECTLY
@@ -139,9 +138,8 @@ def test_removed_doc_still_present_is_caught(spark, tmp_path):
         .unionByName(fake).localCheckpoint()
     )
     with pytest.warns(UserWarning, match="still present"):
-        summary = A.update_all_incremental(spark, old, new, art,
-                                           new_changelog=bad)
-    assert "still present" in summary["dedup"]["new_digests"]
+        summary = A.refresh(spark, old, new, art, new_changelog=bad)
+    assert "still present" in summary["supplied"]["documents"]
 
 
 def test_changelog_against_wrong_old_snapshot_is_caught(spark, tmp_path):
@@ -159,9 +157,8 @@ def test_changelog_against_wrong_old_snapshot_is_caught(spark, tmp_path):
         .unionByName(fake).localCheckpoint()
     )
     with pytest.warns(UserWarning, match="different OLD snapshot|still present"):
-        summary = A.update_all_incremental(spark, old, new, art,
-                                           new_changelog=bad)
-    assert summary["dedup"]["new_digests"].startswith("changelog rejected")
+        summary = A.refresh(spark, old, new, art, new_changelog=bad)
+    assert summary["supplied"]["documents"].startswith("changelog rejected")
 
 
 def test_changelog_without_stored_digests_is_rejected(
@@ -171,9 +168,8 @@ def test_changelog_without_stored_digests_is_rejected(
     shutil.rmtree(os.path.join(art, A.DIGESTS_NAME))
     cl = _true_changelog(spark, old, new)
     with pytest.warns(UserWarning, match="no valid stored doc_digests"):
-        summary = A.update_all_incremental(spark, old, new, art,
-                                           new_changelog=cl)
-    assert summary["dedup"]["new_digests"].startswith("changelog rejected")
+        summary = A.refresh(spark, old, new, art, new_changelog=cl)
+    assert summary["supplied"]["documents"].startswith("changelog rejected")
 
 
 def test_append_only_ingest_changelog_end_to_end(spark, tmp_path, monkeypatch):
@@ -193,9 +189,8 @@ def test_append_only_ingest_changelog_end_to_end(spark, tmp_path, monkeypatch):
     changelog = I.ingest_changelog_relation(spark, appended).localCheckpoint()
     assert changelog.count() == 6
     _no_corpus_diff(monkeypatch)
-    summary = A.update_all_incremental(spark, old, appended, art,
-                                       new_changelog=changelog)
-    assert summary["dedup"]["new_digests"] == "changelog"
+    summary = A.refresh(spark, old, appended, art, new_changelog=changelog)
+    assert summary["supplied"]["documents"] == "changelog"
     patched = spark.read.parquet(os.path.join(art, A.DIGESTS_NAME))
     assert A.digest_of_digests(patched) == A.corpus_digest(spark, appended)
 
@@ -273,10 +268,9 @@ def test_vec_changelog_patches_without_corpus_diff(spark, tmp_path, monkeypatch)
                              "despite the supplied changelog")
 
     monkeypatch.setattr(D, "digest_diff", boom)
-    summary = A.update_centroids_incremental(spark, old, new, art,
-                                             new_vec_changelog=cl)
-    assert summary["new_vec_digests"] == "changelog"
-    assert summary["mode"] == "carried", summary
+    summary = A.refresh(spark, old, new, art, EMB, new_vec_changelog=cl)
+    assert summary["supplied"]["embeddings"] == "changelog"
+    assert summary[A.CENTROIDS_NAME] == "carried", summary
     assert summary[A.VECDIG_NAME] == "patched"
     patched = spark.read.parquet(os.path.join(art, A.VECDIG_NAME))
     assert A.digest_of_digests(patched, id_col="vec_id") == \
@@ -291,9 +285,8 @@ def test_lying_vec_changelog_falls_back(spark, tmp_path):
         F.when(F.col("change") == "added", F.lit("f" * 32))
         .otherwise(F.col("digest_new"))).localCheckpoint()
     with pytest.warns(UserWarning, match="ignoring supplied vec changelog"):
-        summary = A.update_centroids_incremental(spark, old, new, art,
-                                                 new_vec_changelog=bad)
-    assert summary["new_vec_digests"].startswith("changelog rejected")
+        summary = A.refresh(spark, old, new, art, EMB, new_vec_changelog=bad)
+    assert summary["supplied"]["embeddings"].startswith("changelog rejected")
     # fallback still patched correctly via the scan path
     patched = spark.read.parquet(os.path.join(art, A.VECDIG_NAME))
     assert A.digest_of_digests(patched, id_col="vec_id") == \
@@ -306,6 +299,5 @@ def test_vec_changelog_rejected_without_stored_digests(spark, tmp_path):
     shutil.rmtree(os.path.join(art, A.VECDIG_NAME))
     cl = _true_vec_changelog(spark, old, new)
     with pytest.warns(UserWarning, match="no valid stored vec_digests"):
-        summary = A.update_centroids_incremental(spark, old, new, art,
-                                                 new_vec_changelog=cl)
-    assert summary["new_vec_digests"].startswith("changelog rejected")
+        summary = A.refresh(spark, old, new, art, EMB, new_vec_changelog=cl)
+    assert summary["supplied"]["embeddings"].startswith("changelog rejected")

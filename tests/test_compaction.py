@@ -11,7 +11,7 @@ meta sidecars, commit markers and the stream checkpoint — so every lineage
 fold and hash gate stays green and the NEXT refresh still patches.
 
 The endurance test runs FIVE consecutive churn steps through
-``update_text_incremental`` on one stored state — every step must stay on
+``artifacts.refresh`` on one stored state — every step must stay on
 the patch path (including the steps after a mid-chain compaction), the
 lineage chain must fold correctly, and the final state must row-equal a
 from-scratch build of the last snapshot.
@@ -47,8 +47,8 @@ def _corpus_rows(version: int) -> list[tuple[int, str]]:
 
 def _build_text_state(spark, sf_dir: str, art: str) -> None:
     """The full doc-side stored state (dedup chain + text chain) — what
-    ``update_all_incremental`` patches; the corpora here carry no
-    embeddings table, so the embeddings side records 'skipped'."""
+    ``refresh`` patches; the corpora here carry no embeddings table, so
+    the embeddings side records 'absent'."""
     digest = A.corpus_digest(spark, sf_dir)
     A.materialize(spark, sf_dir, art, A.PAIRS_NAME, digest)
     A.materialize(spark, sf_dir, art, A.BANDS_NAME, digest)
@@ -90,12 +90,12 @@ def test_chained_refresh_endurance_with_compaction(spark, tmp_path):
     baseline_counts = A.artifact_file_counts(art)
 
     for v in range(1, 6):
-        summary = A.update_all_incremental(spark, dirs[v - 1], dirs[v], art)
-        assert summary["dedup"]["mode"] == "incremental", (v, summary)
-        assert summary["embeddings"]["mode"] == "skipped"
+        summary = A.refresh(spark, dirs[v - 1], dirs[v], art)
+        assert summary[A.PAIRS_NAME] == "patched", (v, summary)
+        assert summary[A.CENTROIDS_NAME] == "absent"
         for name in (A.SIGNALS_NAME, A.SPINE_NAME, A.SPANPOS_NAME,
                      A.SPANS_NAME, A.SPANSTATS_NAME):
-            assert summary["text"][name] == "patched", (v, summary)
+            assert summary[name] == "patched", (v, summary)
         if v == 3:
             # ---- mid-chain maintenance ----
             grown = A.artifact_file_counts(art)
@@ -348,10 +348,10 @@ def test_live_pbuckets_excludes_swap_residue(tmp_path):
 def test_maintenance_lease_blocks_concurrent_holders(spark, tmp_path):
     """r16 (r15 judge item #3): a refresh racing a compaction on the same
     artifact dir must fail LOUDLY, not swap directories under the
-    updater's feet — a second holder (other thread or other process'
+    refresh's feet — a second holder (other thread or other process'
     live lease file) raises ArtifactLeaseHeld and the artifact stays
-    intact; the same thread re-enters freely (update_all_incremental
-    calls the per-side updaters under one lease)."""
+    intact; the same thread re-enters freely (a leased entry point may
+    call another)."""
     import threading
 
     src = _write_docs(spark, tmp_path / "v0", _corpus_rows(0))

@@ -672,17 +672,17 @@ def test_clusters_incremental_section_matches_full_relabeling(spark,
                                      D.dedup_clusters_incremental])
 def test_incremental_section_raises_on_degrade(spark, monkeypatch, section):
     """The incremental sections must serve the pairs refresh's INCREMENTAL
-    path: if the updater reports a full rebuild, the section raises rather
+    path: if the refresh reports a full rebuild, the section raises rather
     than serve rows a rebuild produced — the hash gate must prove the
     patch, not value-equality by accident."""
     from pyspark_coding_challenge_spark.llm import artifacts as A
 
-    real = A.update_pairs_incremental
+    real = A.refresh
 
     def degraded(*a, **k):
-        return {**real(*a, **k), "mode": "full_rebuild"}
+        return {**real(*a, **k), A.PAIRS_NAME: "full_rebuild"}
 
-    monkeypatch.setattr(A, "update_pairs_incremental", degraded)
+    monkeypatch.setattr(A, "refresh", degraded)
     with pytest.raises(RuntimeError, match="degraded"):
         section(spark, "/root/testdata/sf0.001")
 

@@ -38,6 +38,8 @@ from pyspark_coding_challenge_spark.llm import artifacts as A
 from pyspark_coding_challenge_spark.llm import similarity as S
 
 DIM = 8  # 4 subspaces x 2 dims with the default M_SUB
+#: every embeddings-side artifact, the closure a full side refresh walks
+EMB = A.PRIOR_NAMES["embeddings"]
 
 
 def _unit(v):
@@ -112,13 +114,11 @@ def test_pq_carry_on_small_churn(spark, tmp_path):
     new_vecs[101] = vecs[3]                          # added, in-dist
     new = _write_emb(spark, tmp_path / "new", new_vecs)
 
-    summary = A.update_centroids_incremental(spark, old, new, art)
+    summary = A.refresh(spark, old, new, art, EMB)
     assert summary[A.PQCB_NAME] == "carried", summary
     assert summary[A.PQCODES_NAME] == "patched", summary
-    assert summary["pq_churn_qe"] <= (
-        A.CENTROID_QE_DRIFT_RATIO * summary["pq_trained_qe"]
-        + A.CENTROID_QE_DRIFT_MARGIN
-    )
+    # a carry with no note: the PQ drift gate measured the churn, passed
+    assert A.PQCB_NAME not in summary["reasons"], summary
     assert summary["walls"][A.PQCB_NAME] >= 0
     assert summary["walls"][A.PQCODES_NAME] >= 0
 
@@ -184,7 +184,7 @@ def test_pq_codes_patch_touches_only_churn_buckets(spark, tmp_path):
     new_vecs[137 * W + 1] = base[11]            # added, a brand-new bucket
     new = _write_emb(spark, tmp_path / "new", new_vecs)
 
-    summary = A.update_centroids_incremental(spark, old, new, art)
+    summary = A.refresh(spark, old, new, art, EMB)
     assert summary[A.PQCB_NAME] == "carried", summary
     assert summary[A.PQCODES_NAME] == "patched", summary
 
@@ -234,10 +234,10 @@ def test_pq_retrain_on_drift(spark, tmp_path):
     new_vecs[301] = _unit([a - 0.08 * b for a, b in zip(vecs[1], pattern)])
     new = _write_emb(spark, tmp_path / "new", new_vecs)
 
-    summary = A.update_centroids_incremental(spark, old, new, art)
-    assert summary["mode"] == "carried", summary
+    summary = A.refresh(spark, old, new, art, EMB)
+    assert summary[A.CENTROIDS_NAME] == "carried", summary
     assert summary[A.PQCB_NAME] == "retrained", summary
-    assert "PQ quantization gap" in summary["pq_reason"]
+    assert "PQ quantization gap" in summary["reasons"][A.PQCB_NAME]
     assert summary[A.PQCODES_NAME] == "full_rebuild"
     assert _codebook_rows(spark, art) != before  # retrain actually happened
     # pairing invariant: recorded fold == fold of the retrained codebooks
@@ -263,11 +263,11 @@ def test_pq_absent_is_recorded(spark, tmp_path):
     new_vecs = dict(vecs)
     new_vecs[100] = vecs[7]
     new = _write_emb(spark, tmp_path / "new", new_vecs)
-    summary = A.update_centroids_incremental(spark, old, new, art)
-    assert summary["mode"] == "carried"
+    summary = A.refresh(spark, old, new, art, EMB)
+    assert summary[A.CENTROIDS_NAME] == "carried"
     assert summary[A.PQCB_NAME] == "absent"
     assert summary[A.PQCODES_NAME] == "absent"
-    assert "pq_reason" not in summary
+    assert A.PQCB_NAME not in summary["reasons"]
     S.clear_centroid_cache(spark)
 
 
@@ -419,20 +419,20 @@ def test_stored_pq_raises_on_degrade(spark, monkeypatch):
     artifact-served path, not value-equality by accident."""
     import pyspark_coding_challenge_spark.llm.artifacts as A_mod
 
-    real = A_mod.update_centroids_incremental
+    real = A_mod.refresh
 
     def degraded(*a, **k):
         summary = real(*a, **k)
         summary[A_mod.PQCODES_NAME] = "full_rebuild"
         return summary
 
-    monkeypatch.setattr(A_mod, "update_centroids_incremental", degraded)
+    monkeypatch.setattr(A_mod, "refresh", degraded)
     with pytest.raises(RuntimeError, match="degraded"):
         S._stored_ivf_state(spark, "/root/testdata/sf0.001")
 
 
 def test_update_all_refreshes_pq_side(spark, tmp_path):
-    """update_all_incremental surfaces the PQ modes in its embeddings
+    """A refresh of every artifact surfaces the PQ modes in its
     summary when the stored state includes the PQ artifacts — the probe's
     wall-to-wall measurement reads exactly these keys."""
     from pyspark_coding_challenge_spark.llm import dedup as D
@@ -463,13 +463,12 @@ def test_update_all_refreshes_pq_side(spark, tmp_path):
     A.materialize(spark, old, art, A.PQCODES_NAME, emb_digest)
     S.clear_centroid_cache(spark)
 
-    got = A.update_all_incremental(spark, old, new, art)
-    emb = got["embeddings"]
-    assert emb["mode"] == "carried"
-    assert emb[A.ASSIGN_NAME] == "patched"
-    assert emb[A.PQCB_NAME] == "carried"
-    assert emb[A.PQCODES_NAME] == "patched"
-    assert emb["walls"][A.PQCODES_NAME] >= 0
+    got = A.refresh(spark, old, new, art)
+    assert got[A.CENTROIDS_NAME] == "carried"
+    assert got[A.ASSIGN_NAME] == "patched"
+    assert got[A.PQCB_NAME] == "carried"
+    assert got[A.PQCODES_NAME] == "patched"
+    assert got["walls"][A.PQCODES_NAME] >= 0
     D.clear_pair_cache(spark)
     T.clear_doc_signals_cache(spark)
     T.clear_token_spine_cache(spark)
@@ -500,10 +499,10 @@ def test_pq_codes_scattered_churn_falls_back_to_rebuild(spark, tmp_path):
         new_vecs[b * W + 1] = base[(b * 8 + 3) % 40]
     new = _write_emb(spark, tmp_path / "new", new_vecs)
 
-    summary = A.update_centroids_incremental(spark, old, new, art)
+    summary = A.refresh(spark, old, new, art, EMB)
     assert summary[A.PQCB_NAME] == "carried", summary
     assert summary[A.PQCODES_NAME] == "full_rebuild", summary
-    assert "scattered" in summary["pq_codes_reason"], summary
+    assert "scattered" in summary["reasons"][A.PQCODES_NAME], summary
     # the rebuild's rows equal a from-scratch encode; lineage records an
     # honest rebuild (patched_from None), not a fake patch chain
     from pyspark_coding_challenge_spark.sources.readers import read_table
@@ -553,7 +552,7 @@ def test_pq_codes_clustered_churn_still_patches(spark, tmp_path):
     new_vecs[W + 2] = base[23]      # modified, bucket 1
     new = _write_emb(spark, tmp_path / "new", new_vecs)
 
-    summary = A.update_centroids_incremental(spark, old, new, art)
+    summary = A.refresh(spark, old, new, art, EMB)
     assert summary[A.PQCODES_NAME] == "patched", summary
     assert _mtimes() == before, "untouched buckets were rewritten"
     S.clear_centroid_cache(spark)
@@ -638,10 +637,10 @@ def test_coarse_retrain_forces_pq_retrain(spark, tmp_path):
     new_vecs = dict(vecs)
     new_vecs[100] = vecs[7]  # tiny in-distribution churn
     new = _write_emb(spark, tmp_path / "new", new_vecs)
-    summary = A.update_centroids_incremental(spark, old, new, art)
-    assert summary["mode"] == "retrained", summary
+    summary = A.refresh(spark, old, new, art, EMB)
+    assert summary[A.CENTROIDS_NAME] == "retrained", summary
     assert summary[A.PQCB_NAME] == "retrained", summary
-    assert "residual basis" in summary["pq_reason"], summary
+    assert "residual basis" in summary["reasons"][A.PQCB_NAME], summary
     assert summary[A.PQCODES_NAME] == "full_rebuild", summary
     # the rebuilt pair records the NEW coarse basis
     cent = spark.read.parquet(os.path.join(art, A.CENTROIDS_NAME))
@@ -673,7 +672,7 @@ def test_pq_codes_growth_churn_stays_patched(spark, tmp_path):
         new_vecs[b * W + 3] = base[(b * 3) % 40]
     new = _write_emb(spark, tmp_path / "new", new_vecs)
 
-    summary = A.update_centroids_incremental(spark, old, new, art)
+    summary = A.refresh(spark, old, new, art, EMB)
     assert summary[A.PQCB_NAME] == "carried", summary
     assert summary[A.PQCODES_NAME] == "patched", summary
     for b in range(100, 105):
@@ -715,16 +714,18 @@ def test_pq_codes_cohort_bound_maintained_under_patch(spark, tmp_path):
     new_vecs[10] = vecs[14]
     new_vecs[100] = vecs[22]
     new = _write_emb(spark, tmp_path / "new", new_vecs)
-    summary = A.update_centroids_incremental(spark, old, new, art)
+    summary = A.refresh(spark, old, new, art, EMB)
     assert summary[A.PQCODES_NAME] == "patched", summary
     bound = _meta(art, A.PQCODES_NAME)["lineage"]["stats"]["max_code_cohort"]
-    assert bound == summary["pq_max_code_cohort"]
-    exact1 = S.pq_code_cohort_max(
-        spark.read.parquet(os.path.join(art, A.PQCODES_NAME))
-        .select("vec_id", "sub", "code"))
+    codes = spark.read.parquet(os.path.join(art, A.PQCODES_NAME)) \
+        .select("vec_id", "sub", "code")
+    # the maintained bound: stored max + the churn rows' own max
+    assert bound == built + S.pq_code_cohort_max(
+        codes.filter(F.col("vec_id").isin(10, 100)))
+    exact1 = S.pq_code_cohort_max(codes)
     assert bound >= exact1, (bound, exact1)  # safe upper bound
-    assert bound <= built + summary["churn"].get("added", 0) \
-        + summary["churn"].get("modified", 0)
+    churn = summary["churn"]["embeddings"]
+    assert bound <= built + churn.get("added", 0) + churn.get("modified", 0)
     S.clear_centroid_cache(spark)
 
 

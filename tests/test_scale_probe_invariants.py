@@ -9,7 +9,7 @@ replaced by a stub that advances a FAKE clock, both arms of
 ``probe_incr_artifacts`` must account their digest work inside their own
 walls — the full side as the named ``corpus_digest_scan`` /
 ``embeddings_digest_scan`` entries summed into ``full_total``, the patch
-side inside the single wall-to-wall ``update_all_incremental`` timing.
+side inside the single wall-to-wall ``refresh`` timing.
 The second-revision logic (digest computed before the timed loop) fails
 the named-entry assertions; the shipped logic passes. No Spark session,
 no sleeping — pure clock arithmetic."""
@@ -24,7 +24,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 DIGEST_COST = 7.0       # fake seconds per corpus digest scan
 EMB_DIGEST_COST = 3.0   # fake seconds per embeddings digest scan
 MAT_COST = 1.0          # fake seconds per materialize call
-PATCH_COST = 5.0        # fake seconds for the whole update_all_incremental
+PATCH_COST = 5.0        # fake seconds for the whole refresh
 
 
 def _scale_probe():
@@ -59,29 +59,19 @@ def test_both_arms_time_their_digest_scans(tmp_path, monkeypatch):
 
     calls = []
 
-    def fake_update_all(spark, old, new, art, **kw):
+    def fake_refresh(spark, old, new, art, names=None, **kw):
         # the patch arm's digest work (refresh ctx + per-artifact walls)
         # happens INSIDE this call — the probe times it wall-to-wall
         calls.append(sorted(k for k, v in kw.items() if v is not None))
         clock[0] += PATCH_COST
-        sup = "supplied" if kw.get("new_digests") is not None else None
-        return {
-            "text": {"walls": {"doc_signals": 1.0},
-                     A.SIGNALS_NAME: "patched", A.SPINE_NAME: "patched",
-                     A.SPANPOS_NAME: "patched", A.SPANS_NAME: "patched",
-                     A.SPANSTATS_NAME: "patched"},
-            "dedup": {"walls": {"pairs_bands_patch": 2.0},
-                      "mode": "incremental", "cc_mode": "incremental",
-                      "new_digests": sup},
-            "embeddings": {"walls": {"diff": 1.0}, "mode": "carried",
-                           A.VECDIG_NAME: "patched",
-                           A.ASSIGN_NAME: "patched",
-                           A.PQCB_NAME: "carried",
-                           A.PQCODES_NAME: "patched",
-                           "new_vec_digests": sup},
-        }
+        sup = ({"documents": "supplied", "embeddings": "supplied"}
+               if kw.get("new_digests") is not None else {})
+        return {**dict.fromkeys(A.ARTIFACTS, "patched"),
+                A.CENTROIDS_NAME: "carried", A.PQCB_NAME: "carried",
+                "reasons": {}, "churn": {}, "supplied": sup,
+                "walls": {"documents": 1.0, A.PAIRS_NAME: 2.0}}
 
-    monkeypatch.setattr(A, "update_all_incremental", fake_update_all)
+    monkeypatch.setattr(A, "refresh", fake_refresh)
     # the supplied relations are ingest's write-time cost — the stub
     # advances the clock OUTSIDE any timer; if the probe ever timed it,
     # patch_total_supplied would read 2.0s too high and fail below
@@ -106,11 +96,11 @@ def test_both_arms_time_their_digest_scans(tmp_path, monkeypatch):
     assert out["full_total"] == DIGEST_COST + EMB_DIGEST_COST + 14 * MAT_COST
 
     # --- patch arm: the wall-to-wall timing covers the whole refresh,
-    # digest work included (it runs inside update_all_incremental)
+    # digest work included (it runs inside refresh)
     assert out["patch_total"] == PATCH_COST
-    # and the per-artifact patch walls surface the updaters' own timings
-    assert out["patch_walls"]["pairs_bands_patch"] == 2.0
-    assert out["patch_walls"]["diff"] == 1.0
+    # and the per-artifact patch walls surface the refresh's own timings
+    assert out["patch_walls"][A.PAIRS_NAME] == 2.0
+    assert out["patch_walls"]["documents"] == 1.0
 
     # --- supplied arm (r13): one run per arm, the supplied one carrying
     # both digest relations; its wall covers ONLY the refresh — the
@@ -118,8 +108,8 @@ def test_both_arms_time_their_digest_scans(tmp_path, monkeypatch):
     # outside, by design and by this assertion
     assert calls == [[], ["new_digests", "new_vec_digests"]]
     assert out["patch_total_supplied"] == PATCH_COST
-    assert out["modes_supplied"]["new_digests"] == "supplied"
-    assert out["modes_supplied"]["new_vec_digests"] == "supplied"
+    assert out["modes_supplied"]["supplied"] == {
+        "documents": "supplied", "embeddings": "supplied"}
     # r14: the PQ modes surface alongside the other per-artifact modes
     assert out["modes"][A.PQCB_NAME] == "carried"
     assert out["modes"][A.PQCODES_NAME] == "patched"

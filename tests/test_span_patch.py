@@ -28,6 +28,8 @@ from pyspark_coding_challenge_spark.llm import artifacts as A
 from pyspark_coding_challenge_spark.llm import text as T
 
 K = T.SPAN_K
+#: the text-side artifacts the refreshed text section serves
+TEXT = (A.SIGNALS_NAME, A.SPINE_NAME, A.SPANS_NAME)
 
 
 def _span(tag: str) -> str:
@@ -89,7 +91,7 @@ def _rows(df, cols=("doc_id", "i")):
 
 def test_spans_patch_equals_full_recompute(spark, tmp_path):
     old, new, art = _build(spark, tmp_path)
-    summary = A.update_text_incremental(spark, old, new, art)
+    summary = A.refresh(spark, old, new, art, TEXT)
     assert summary[A.SPANPOS_NAME] == "patched"
     assert summary[A.SPANS_NAME] == "patched"
     assert summary[A.SPANSTATS_NAME] == "patched"
@@ -132,7 +134,7 @@ def test_spans_patch_skips_pos_scan_when_nothing_flips_shared(spark, tmp_path):
     A.materialize(spark, old, art, A.SPANSTATS_NAME, dig)
     A.materialize(spark, old, art, A.SIGNALS_NAME, dig)
     A.materialize(spark, old, art, A.SPINE_NAME, dig)
-    summary = A.update_text_incremental(spark, old, new, art)
+    summary = A.refresh(spark, old, new, art, TEXT)
     assert summary[A.SPANS_NAME] == "patched"
     new_docs = spark.read.parquet(os.path.join(new, "documents.parquet"))
     truth = T.shared_spans_relation(T.span_pos_relation(new_docs))
@@ -149,7 +151,7 @@ def test_pre_r13_artifacts_fall_back_to_rederive(spark, tmp_path):
     import shutil
 
     shutil.rmtree(os.path.join(art, A.SPANSTATS_NAME))
-    summary = A.update_text_incremental(spark, old, new, art)
+    summary = A.refresh(spark, old, new, art, TEXT)
     assert summary[A.SPANPOS_NAME] == "patched"
     assert summary[A.SPANS_NAME] == "rederived"
     assert summary[A.SPANSTATS_NAME] == "rederived"
@@ -163,7 +165,7 @@ def test_pre_r13_artifacts_fall_back_to_rederive(spark, tmp_path):
     new2_rows = dict(_new_rows())
     new2_rows[101] = _span("q")
     new2 = _write(spark, tmp_path / "new2", sorted(new2_rows.items()))
-    summary2 = A.update_text_incremental(spark, old2, new2, art2)
+    summary2 = A.refresh(spark, old2, new2, art2, TEXT)
     assert summary2[A.SPANS_NAME] == "patched"
     assert summary2[A.SPANSTATS_NAME] == "patched"
 
@@ -173,13 +175,17 @@ def test_second_refresh_chains_on_patched_state(spark, tmp_path):
     chain two refreshes and compare against a from-scratch recompute of
     the final corpus (count drift would compound here)."""
     old, new, art = _build(spark, tmp_path)
-    A.update_text_incremental(spark, old, new, art)
+    A.refresh(spark, old, new, art, TEXT)
     rows2 = dict(_new_rows())
     del rows2[100]            # doc 3's span unshares AGAIN
     rows2[200] = SHARED_AB    # a third holder of the 1-2 span
     new2 = _write(spark, tmp_path / "new2", sorted(rows2.items()))
-    summary = A.update_text_incremental(spark, new, new2, art)
+    summary = A.refresh(spark, new, new2, art, TEXT)
     assert summary[A.SPANS_NAME] == "patched"
+    # the first refresh landed doc_digests too: the second read its old
+    # side from them, not from a rescan of the old corpus
+    assert summary[A.DIGESTS_NAME] == "patched"
+    assert A.DIGESTS_NAME not in summary["reasons"], summary["reasons"]
     new_docs = spark.read.parquet(os.path.join(new2, "documents.parquet"))
     truth_pos = T.span_pos_relation(new_docs)
     got = spark.read.parquet(os.path.join(art, A.SPANS_NAME))

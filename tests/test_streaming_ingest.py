@@ -1,6 +1,6 @@
 """The streaming ingest with write-time digests (streaming/ingest.py, r13).
 
-``update_all_incremental`` accepts ingest-provided digest relations
+``artifacts.refresh`` accepts ingest-provided digest relations
 (tests/test_supplied_digests.py); this suite proves an actual ingest exists
 that produces them: a structured-streaming foreachBatch sink appending the
 document rows AND their (doc_id, digest, batch_id) rows in one pass.
@@ -9,7 +9,7 @@ document rows AND their (doc_id, digest, batch_id) rows in one pass.
    the digest equals the batch-side ``doc_digest_relation`` definition;
 2. multi-batch ingest (maxFilesPerTrigger=1) still covers every doc once;
 3. END-TO-END: the digests an ingest wrote feed
-   ``update_all_incremental(new_digests=...)`` and the refresh records the
+   ``refresh(new_digests=...)`` and the refresh records the
    supplied path, never hashing the new corpus (monkeypatched to raise);
 4. ``ingest_digests_relation`` dedupes an at-least-once redelivery so the
    refresh gate's row-count parity still holds.
@@ -82,10 +82,8 @@ def test_ingested_digests_feed_the_supplied_refresh(spark, tmp_path, monkeypatch
 
     monkeypatch.setattr(D, "snapshot_diff_from_digests", boom)
     monkeypatch.setattr(D, "snapshot_diff", boom)
-    summary = A.update_all_incremental(spark, old, new, art,
-                                       new_digests=supplied)
-    assert summary["dedup"]["new_digests"] == "supplied"
-    assert summary["text"]["new_digests"] == "supplied"
+    summary = A.refresh(spark, old, new, art, new_digests=supplied)
+    assert summary["supplied"]["documents"] == "supplied"
     # the patched digest artifact folds to the ingested corpus's digest
     patched = spark.read.parquet(os.path.join(art, A.DIGESTS_NAME))
     assert A.digest_of_digests(patched) == A.corpus_digest(spark, new)
@@ -268,9 +266,9 @@ def test_marker_collision_caught_at_equal_row_counts(spark, tmp_path):
 def test_ingest_refresh_serve_refreshes_on_every_call(spark, monkeypatch):
     """No session entry holds the ``ingest_refresh_serve`` section's
     result: each call runs the whole ingest -> refresh -> serve loop, so
-    the text updater runs once per call, and two calls serve equal rows."""
-    real, calls = A.update_text_incremental, []
-    monkeypatch.setattr(A, "update_text_incremental",
+    one refresh runs per call, and two calls serve equal rows."""
+    real, calls = A.refresh, []
+    monkeypatch.setattr(A, "refresh",
                         lambda *a, **k: calls.append(1) or real(*a, **k))
     first = I.streaming_ingest_refresh_serve(spark, SF_DIR).collect()
     assert len(calls) == 1

@@ -27,6 +27,9 @@ from pyspark_coding_challenge_spark.llm import dedup as D
 
 from pyspark.sql import functions as F
 
+#: every embeddings-side artifact, the closure a full side refresh walks
+EMB = A.PRIOR_NAMES["embeddings"]
+
 
 def _write_docs(spark, path, rows):
     df = spark.createDataFrame(
@@ -86,11 +89,9 @@ def test_supplied_digests_skip_the_hash_scan(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(D, "snapshot_diff_from_digests", boom)
     monkeypatch.setattr(D, "snapshot_diff", boom)
-    summary = A.update_all_incremental(spark, old, new, art,
-                                       new_digests=supplied)
-    assert summary["dedup"]["mode"] == "incremental"
-    assert summary["dedup"]["new_digests"] == "supplied"
-    assert summary["text"]["new_digests"] == "supplied"
+    summary = A.refresh(spark, old, new, art, new_digests=supplied)
+    assert summary[A.PAIRS_NAME] == "patched"
+    assert summary["supplied"]["documents"] == "supplied"
     patched = spark.read.parquet(os.path.join(art, A.DIGESTS_NAME))
     assert A.digest_of_digests(patched) == true_digest
     meta = A._read_meta(os.path.join(art, A.DIGESTS_NAME))
@@ -110,10 +111,9 @@ def test_wrong_supplied_digest_forces_the_scan_path(spark, tmp_path):
         .otherwise(F.col("digest")),
     )
     with pytest.warns(UserWarning, match="does not match a fresh hash"):
-        summary = A.update_all_incremental(spark, old, new, art,
-                                           new_digests=lying)
-    assert summary["dedup"]["new_digests"].startswith("rejected")
-    assert summary["dedup"]["mode"] == "incremental"  # fallback still patches
+        summary = A.refresh(spark, old, new, art, new_digests=lying)
+    assert summary["supplied"]["documents"].startswith("rejected")
+    assert summary[A.PAIRS_NAME] == "patched"  # fallback still patches
     patched = spark.read.parquet(os.path.join(art, A.DIGESTS_NAME))
     assert A.digest_of_digests(patched) == A.corpus_digest(spark, new)
 
@@ -123,10 +123,10 @@ def test_wrong_count_rejected_before_any_work(spark, tmp_path):
     art = _stored_state(spark, old, tmp_path)
     truncated = _true_new_digests(spark, new).limit(5)
     with pytest.warns(UserWarning, match="different snapshot"):
-        summary = A.update_pairs_incremental(spark, old, new, art,
-                                             new_digests=truncated)
-    assert summary["new_digests"].startswith("rejected")
-    assert summary["mode"] == "incremental"
+        summary = A.refresh(spark, old, new, art, (A.CC_NAME,),
+                            new_digests=truncated)
+    assert summary["supplied"]["documents"].startswith("rejected")
+    assert summary[A.PAIRS_NAME] == "patched"
 
 
 def test_missing_columns_rejected(spark, tmp_path):
@@ -134,9 +134,9 @@ def test_missing_columns_rejected(spark, tmp_path):
     art = _stored_state(spark, old, tmp_path)
     bad = _true_new_digests(spark, new).withColumnRenamed("digest", "md5")
     with pytest.warns(UserWarning, match="must carry"):
-        summary = A.update_pairs_incremental(spark, old, new, art,
-                                             new_digests=bad)
-    assert summary["new_digests"].startswith("rejected")
+        summary = A.refresh(spark, old, new, art, (A.CC_NAME,),
+                            new_digests=bad)
+    assert summary["supplied"]["documents"].startswith("rejected")
 
 
 def test_supplied_vec_digests_on_the_embeddings_side(spark, tmp_path):
@@ -171,9 +171,8 @@ def test_supplied_vec_digests_on_the_embeddings_side(spark, tmp_path):
     supplied = A.vec_digest_relation(
         spark.read.parquet(os.path.join(new, "embeddings.parquet"))
     ).localCheckpoint()
-    summary = A.update_centroids_incremental(spark, old, new, art,
-                                             new_vec_digests=supplied)
-    assert summary["new_vec_digests"] == "supplied"
+    summary = A.refresh(spark, old, new, art, EMB, new_vec_digests=supplied)
+    assert summary["supplied"]["embeddings"] == "supplied"
     assert summary[A.VECDIG_NAME] == "patched"
     patched = spark.read.parquet(os.path.join(art, A.VECDIG_NAME))
     assert A.digest_of_digests(patched, id_col="vec_id") == \
@@ -187,9 +186,8 @@ def test_supplied_vec_digests_on_the_embeddings_side(spark, tmp_path):
         .otherwise(F.col("digest")),
     )
     with pytest.warns(UserWarning, match="does not match a fresh hash"):
-        summary2 = A.update_centroids_incremental(spark, old, new, art,
-                                                  new_vec_digests=lying)
-    assert summary2["new_vec_digests"].startswith("rejected")
+        summary2 = A.refresh(spark, old, new, art, EMB, new_vec_digests=lying)
+    assert summary2["supplied"]["embeddings"].startswith("rejected")
     assert A.digest_of_digests(
         spark.read.parquet(os.path.join(art, A.VECDIG_NAME)),
         id_col="vec_id") == A.embeddings_digest(spark, new)
