@@ -1674,7 +1674,8 @@ def _patch_digests(rc: _Refresh, name: str) -> dict:
                                rc.lineage(name, patched_from=None,
                                           via="corpus_scan"),
                                ctx["dig_note"])}
-    return {name: _Patched(ctx["new_digests_rel"], "patched", rc.lineage(name))}
+    return {name: _Patched(ctx["new_digests_rel"], "patched",
+                           rc.lineage(name))}
 
 
 def _patch_pairs(rc: _Refresh) -> dict:
@@ -1694,8 +1695,9 @@ def _patch_pairs(rc: _Refresh) -> dict:
     # the patched frames READ the very paths being overwritten: pin them,
     # and the old graph's edges the label patch reads after they land
     bands, pairs = bands.localCheckpoint(), pairs.localCheckpoint()
-    rc.stash[PAIRS_NAME] = (pairs, fresh, D._threshold_edges(old_pairs)
-                            .localCheckpoint() if CC_NAME in rc.order else None)
+    old_edges = (D._threshold_edges(old_pairs).localCheckpoint()
+                 if CC_NAME in rc.order else None)
+    rc.stash[PAIRS_NAME] = (pairs, fresh, old_edges)
     return {PAIRS_NAME: _Patched(pairs, "patched", rc.lineage(PAIRS_NAME)),
             BANDS_NAME: _Patched(bands, "patched", rc.lineage(BANDS_NAME))}
 
@@ -1714,8 +1716,9 @@ def _patch_cc(rc: _Refresh) -> dict:
         return {CC_NAME: why or f"{PAIRS_NAME} was rebuilt"}
     pairs, fresh, old_edges = rc.stash[PAIRS_NAME]
     edges = D._threshold_edges(pairs)
-    if why is None and old_edges.count() >= (
-            D.CC_INCR_MIN_EDGES if rc.cc_min_edges is None else rc.cc_min_edges):
+    min_edges = (D.CC_INCR_MIN_EDGES if rc.cc_min_edges is None
+                 else rc.cc_min_edges)
+    if why is None and old_edges.count() >= min_edges:
         gone = rc.ctx["documents"]["gone"]
         removed = old_edges.join(
             gone.withColumnRenamed("doc_id", "doc_a"), on="doc_a",
@@ -1963,7 +1966,8 @@ def _patch_pq_codes(rc: _Refresh) -> dict:
     every vector, and scattered churn rebuilds (``_scattered_churn``)."""
     S = _llm("similarity")
     if rc.modes[PQCB_NAME] != "carried":
-        return {PQCODES_NAME: "codebooks retrained — every vector re-encodes"}
+        return {PQCODES_NAME:
+                "codebooks retrained — every vector re-encodes"}
     path, ctx = rc.path(PQCODES_NAME), rc.side(PQCODES_NAME)
     cb, cent = rc.stored(PQCB_NAME), rc.stored(CENTROIDS_NAME)
     why = rc.refusal(PQCODES_NAME)
@@ -1986,7 +1990,8 @@ def _patch_pq_codes(rc: _Refresh) -> dict:
         # bounded collect (<= churn rows, usually a handful of buckets)
         touched = sorted(
             r["b"] for r in ctx["gone"].unionByName(ctx["delta_ids"])
-            .select(_pq_bucket(F.col("vec_id")).alias("b")).distinct().collect())
+            .select(_pq_bucket(F.col("vec_id")).alias("b"))
+            .distinct().collect())
         why = _scattered_churn(path, touched)
     if why is not None:
         return {PQCODES_NAME: why}

@@ -673,10 +673,11 @@ def _stored_ivf_state(spark: SparkSession, sf_dir: str):
     sub-quantizers, per-vector digests, inverted index and compressed
     code corpus) into the section's slot, and ``artifacts.refresh``
     refreshes them ALL to the NEW snapshot. It RAISES unless the refresh
-    CARRIED both quantizers and PATCHED both row relations — the driver's hash gates must prove
-    the artifact-served path, not a silent retrain/rebuild that happens
-    to produce equal rows. The returned centroids/assignments/codebooks/
-    codes scan the refreshed artifact parquet ONLY; the corpus side is
+    CARRIED both quantizers and PATCHED both row relations — the driver's
+    hash gates must prove the artifact-served path, not a silent
+    retrain/rebuild that happens to produce equal rows. The returned
+    centroids/assignments/codebooks/codes scan the refreshed artifact
+    parquet ONLY; the corpus side is
     the derived new snapshot over the original table — neither the
     corpus x n_lists assignment pass nor the corpus x m x k encode pass
     appears anywhere in the search plans (plan-gated in

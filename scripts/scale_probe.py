@@ -717,9 +717,10 @@ def probe_incr_artifacts(spark, old_dir: str, new_dir: str,
     r12 #2b: the dedup-chain-only timing left signals/spine/span_pos/spans
     unmeasured). Stored state = the OLD snapshot's eight refreshable
     artifacts, built untimed; the timed patch is one call to
-    ``refresh`` with the per-artifact walls it records; the timed full side re-materializes each artifact from the
-    new corpus into a fresh dir (same dependency order and session-cache
-    reuse as ``materialize_all``, so the per-artifact split mirrors what a
+    ``refresh`` with the per-artifact walls it records; the timed full
+    side re-materializes each artifact from the new corpus into a fresh
+    dir (same dependency order and session-cache reuse as
+    ``materialize_all``, so the per-artifact split mirrors what a
     production full rebuild pays)."""
     from pyspark_coding_challenge_spark.llm import artifacts as A
 

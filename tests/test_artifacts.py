@@ -780,7 +780,7 @@ _WRITERS = {
     "pairs": (A.refresh_closure((A.CC_NAME,)), A.PAIRS_NAME,
               lambda spark, old, new, art:
               A.refresh(spark, old, new, art, (A.CC_NAME,))),
-                                               "text": (A.refresh_closure(TEXT_SERVED), A.SPINE_NAME,
+    "text": (A.refresh_closure(TEXT_SERVED), A.SPINE_NAME,
              lambda spark, old, new, art:
              A.refresh(spark, old, new, art, TEXT_SERVED)),
     "embeddings": (A.PRIOR_NAMES["embeddings"], A.CENTROIDS_NAME,
